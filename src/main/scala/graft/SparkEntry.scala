@@ -1667,19 +1667,16 @@ object SparkEntry {
     // (id, old_rep, new_rep): the rows whose stored rep diverged from the
     // full-recluster ground truth (bridge merges, lower-id adoptions).
     // The oracle mirrors all three closures in SQL. Signatures are
-    // per-doc, so the ground-truth pass union-reuses the two band-edge
-    // frames the lifecycle already computed (old corpus + batch) instead
-    // of paying a third shingle+MinHash scan over the full corpus —
-    // MinHash.reconcileFromEdges; identical output by construction.
+    // per-doc, so ONE signature pass over the whole corpus serves all
+    // three phases: old corpus and batch are `doc_id % 5` filters of the
+    // same persisted band-edge frame, and the ground-truth re-cluster
+    // (MinHash.reconcileFromEdges) runs on the frame itself.
     "q_dedup_reconcile" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val oldDocs = docs.filter(col("doc_id") % 5 =!= 0)
-      val newDocs = docs.filter(col("doc_id") % 5 === 0)
-      val oldEdges = MinHash.bandEdges(oldDocs, "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val newEdges = MinHash.bandEdges(newDocs, "doc_id", "text")
+      val edges = MinHash.bandEdges(Tables.documents(s, dir), "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
+        val oldEdges = edges.filter(col("id") % 5 =!= 0)
+        val newEdges = edges.filter(col("id") % 5 === 0)
         val (oldLabels, _) = graft.operators.ConnectedComponents
           .labelPropagateWithRounds(oldEdges, "id", Seq("band", "bh"))
         val index = oldEdges.join(oldLabels, Seq("id"))
@@ -1687,16 +1684,12 @@ object SparkEntry {
         val (newLabels, _) =
           MinHash.nearDupGroupsIncrementalFromEdges(index, newEdges)
         val stored = oldLabels.unionByName(newLabels)
-        val (_, _, repairs) = MinHash.reconcileFromEdges(
-          oldEdges.unionByName(newEdges), stored)
+        val (_, _, repairs) = MinHash.reconcileFromEdges(edges, stored)
         // the repair delta is tiny (only rows whose rep moved); cut its
-        // lineage so BOTH persisted edge frames can be released here
-        // rather than leaking into the rest of the bench pass
+        // lineage so the persisted edge frame can be released here rather
+        // than leaking into the rest of the bench pass
         org.apache.spark.sql.graft.bridge.cutLineage(repairs).orderBy("id")
-      } finally {
-        oldEdges.unpersist(blocking = false)
-        newEdges.unpersist(blocking = false)
-      }
+      } finally edges.unpersist(blocking = false)
     }),
 
     // deterministic 1/10 hash sample — pure filter, no shuffle, same row

@@ -35,7 +35,7 @@ import TypeChecks.{isFloatArray, isLongArray, isDoubleArray}
   * `HyperplaneBuckets` codegens the same way: its plane matrix is a
   * static cache in `VectorKernels` keyed by (nbits, tables, dim), so the
   * generated code is one static call too (no per-instance state, no
-  * CodegenFallback).
+  * CodegenFallback). `MinHashBands` follows the same idiom.
   */
 case class PolyBase(child: Expression)
     extends UnaryExpression {
@@ -185,6 +185,29 @@ case class HyperplaneBuckets(child: Expression, nbits: Int, tables: Int)
   override protected def withNewChildInternal(c: Expression): HyperplaneBuckets =
     copy(child = c)
   override def prettyName: String = "hyperplane_buckets"
+}
+
+/** MinHash LSH band hashes of a shingle array (see [[MinHashKernel.bands]]):
+  * array of `bands` longs, one static codegen'd call per document — the
+  * k seed minima and both band folds in one JVM loop instead of a shingle
+  * explode, a k-way `min` shuffle aggregate and interpreted array folds.
+  */
+case class MinHashBands(child: Expression, k: Int, bands: Int)
+    extends UnaryExpression {
+  require(bands >= 1 && k % bands == 0, "k must be divisible by bands")
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<string> input")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullSafeEval(v: Any): Any =
+    MinHashKernel.bands(v.asInstanceOf[ArrayData], k, bands)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      v => s"graft.functions.MinHashKernel.bands($v, $k, $bands)")
+  override protected def withNewChildInternal(c: Expression): MinHashBands =
+    copy(child = c)
+  override def prettyName: String = "minhash_bands"
 }
 
 /** Oracle-reproducible SimHash fingerprint (see [[SimHashKernel.simhash]]):
@@ -357,6 +380,8 @@ object exprs {
     co(HyperplaneBuckets(ex(v), nbits, tables))
   def wordShingles(c: Column, n: Int, unicode: Boolean = false): Column =
     co(WordShingles(ex(c), n, unicode))
+  def minhashBands(shingles: Column, k: Int, bands: Int): Column =
+    co(MinHashBands(ex(shingles), k, bands))
   def simhashPoly(c: Column, bits: Int): Column = co(SimHashPoly(ex(c), bits))
   def zValue(x: Column, y: Column, bits: Int): Column =
     co(ZValue(ex(x), ex(y), bits))

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -64,6 +65,76 @@ object PolyHash {
       i += Character.charCount(cp)
     }
     acc
+  }
+}
+
+object MinHashKernel {
+
+  /** All LSH band hashes of one document's shingle array in one pass.
+    *
+    * Seed minima: shingle g hashes under seed s as the polynomial fold
+    * fold(s+1, cp => (acc*131 + cp) mod P) over its code points, which
+    * factorizes as ((s+1)·131^len(g) + base(g)) mod P — so each shingle's
+    * code points are walked once and the k seed hashes are k modular
+    * additions of 131^len(g) from base(g) + 131^len(g). Slot s of the
+    * signature is the minimum over the shingles.
+    *
+    * Band folds: slots j·rows .. j·rows+rows-1 fold twice from 17, with
+    * (acc*131 + v mod P) mod P and (acc*137 + v mod P2) mod P2, combined as
+    * h1·P2 + h2 (a ~59-bit key, below 10^18). Values are bit-identical to
+    * the naive per-seed fold and band fold the DuckDB oracles run.
+    *
+    * NULL elements are skipped; an array with no non-NULL shingle yields an
+    * empty array (the document has no signature, so it bands into nothing).
+    */
+  def bands(shingles: ArrayData, k: Int, bands: Int): ArrayData = {
+    val P = PolyHash.P
+    val mins = Array.fill(k)(Long.MaxValue)
+    var seen = false
+    val n = shingles.numElements()
+    var i = 0
+    while (i < n) {
+      if (!shingles.isNullAt(i)) {
+        seen = true
+        val str = shingles.getUTF8String(i).toString
+        var base = 0L
+        var pow = 1L
+        var c = 0
+        while (c < str.length) {
+          val cp = str.codePointAt(c)
+          base = (base * PolyHash.M + cp) % P
+          pow = (pow * PolyHash.M) % P
+          c += Character.charCount(cp)
+        }
+        // h = ((s+1)·pow + base) mod P, stepped by +pow per seed
+        var h = base
+        var s = 0
+        while (s < k) {
+          h += pow
+          if (h >= P) h -= P
+          if (h < mins(s)) mins(s) = h
+          s += 1
+        }
+      }
+      i += 1
+    }
+    val rows = k / bands
+    val out = new Array[Long](if (seen) bands else 0)
+    var j = 0
+    while (j < out.length) {
+      var h1 = 17L
+      var h2 = 17L
+      var r = j * rows
+      while (r < (j + 1) * rows) {
+        val v = mins(r)
+        h1 = (h1 * PolyHash.M + v % P) % P
+        h2 = (h2 * PolyHash.M2 + v % PolyHash.P2) % PolyHash.P2
+        r += 1
+      }
+      out(j) = h1 * PolyHash.P2 + h2
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * table back onto the pair frame.
   *
   * @param baskets (basketCol, itemCol) rows; duplicates of an item
-  *                within a basket collapse
+  *                within a basket collapse, rows with a NULL basket id
+  *                are dropped
   * @return (item_a, item_b, n_pair, lift_e6), item_a < item_b, pair
   *         support ≥ minSupport
   */
@@ -37,8 +38,12 @@ object Itemsets {
     // and singles/nBaskets derive from it narrowly (explode + tiny
     // partial-agg; basket count = one row per set). The persisted frame
     // shrinks from one row per (basket, item) to one row per basket.
+    // A NULL basket id names no basket: without the filter groupBy(bk)
+    // would keep a NULL group, counted in the basket total (which must be
+    // COUNT(DISTINCT bk)) and in the supports.
     val b = baskets
       .select(col(basketCol).as("bk"), col(itemCol).as("it"))
+      .filter(col("bk").isNotNull)
       .groupBy("bk")
       .agg(array_sort(collect_set(col("it"))).as("its"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

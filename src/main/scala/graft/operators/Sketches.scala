@@ -92,7 +92,7 @@ object Sketches {
   /** HLL register table over an item stream: `m` rows `(bucket, reg)`.
     *
     * Hash: the repo's 59-bit pair `h = base(s)·PolyMod2 + base2(s)` packs
-    * two poly folds ([[graft.text.MinHash.bandHashes]]'s construction),
+    * two poly folds ([[graft.text.MinHash.bandRows]]' construction),
     * then — crucially — h's DECIMAL-DIGIT string is re-folded to produce
     * the bucket (`base(digits) mod m`) and the rank source
     * (`v = base2(digits)`). The re-fold is the avalanche step: poly folds

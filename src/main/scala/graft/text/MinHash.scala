@@ -14,8 +14,10 @@ import TextFunctions._
   * Jaccard verification — is reproducible in DuckDB SQL and therefore
   * oracle-checked, which engine-specific murmur/xxhash would not be.
   *
-  * Scale shape: signatures are one narrow projection over documents (no
-  * shuffle); candidate generation is explode(bands) + self-equi-join on
+  * Scale shape: band hashes are one narrow projection over documents (no
+  * shuffle) — the [[graft.functions.MinHashBands]] kernel computes the
+  * signature and folds its bands in one call per document, see
+  * [[bandRows]]; candidate generation is explode(bands) + self-equi-join on
   * (band index, band hash) — a hash-partitioned shuffle join whose build
   * side is tiny relative to the corpus because only colliding buckets
   * produce rows. Exact-Jaccard verification touches candidate pairs only.
@@ -25,66 +27,6 @@ import TextFunctions._
   */
 object MinHash {
 
-  /** MinHash signatures as a DataFrame (id, sig: array<long>), computed in
-    * the shape Spark executes fastest:
-    *
-    *   - explode shingles to rows — the per-character polynomial fold (the
-    *     only interpreted higher-order expression) runs exactly ONCE per
-    *     (doc, shingle), via the factorization
-    *       polyHash(s, seed) = ((seed+1) · 131^len(s) + polyBase(s)) mod P;
-    *   - the k per-seed minima are then k plain `min` aggregates in one
-    *     whole-stage-codegen hash aggregation (map-side partials), not
-    *     nested array lambdas (which would re-evaluate the fold k times:
-    *     higher-order functions don't share subexpressions).
-    *
-    * Values are bit-identical to the naive per-seed fold, keeping the
-    * DuckDB oracle (which uses the naive form) valid. Docs with no
-    * shingles produce no row, which downstream treats as "no signature" —
-    * the same exclusion the NULL-folding naive form produced.
-    */
-  def signatureDf(docs: DataFrame, idCol: String, shinglesCol: String, k: Int): DataFrame = {
-    val exploded = docs
-      .select(col(idCol).as("id"), explode(col(shinglesCol)).as("__sh"))
-      .withColumn("__b", graft.functions.exprs.polyBase(col("__sh")))
-      .withColumn("__m", graft.functions.exprs.polyPow(col("__sh")))
-    val mins = (0 until k).map(s =>
-      min((lit(s + 1L) * col("__m") + col("__b")) % lit(PolyMod)).as(s"__s$s"))
-    exploded
-      .groupBy(col("id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("id"), array((0 until k).map(s => col(s"__s$s")): _*).as("sig"))
-  }
-
-  /** Band hashes: fold each of `bands` signature slices of length `rows`
-    * with TWO independent polynomial combiners (seed 17; bases 131/137,
-    * mods 1e9+7/998244353), combined as `h1·998244353 + h2` — a ~59-bit
-    * bucket key (max < 10^18, BIGINT-safe in DuckDB). Bucket equality is
-    * taken as truth by the groups/incremental dedup operators (no
-    * pair-level verification), so a single 30-bit hash would glue
-    * unrelated docs once the corpus carries ≳10^5 distinct band values —
-    * measured on a 100k random corpus: 50k spurious collision buckets
-    * formed one giant flood-limited component. The pair keeps spurious
-    * fusions negligible past 10^9 distinct band values per band index.
-    */
-  def bandHashes(sig: Column, bands: Int, rows: Int): Column = {
-    def fold(mul: Long, mod: Long) = transform(
-      sequence(lit(0), lit(bands - 1)),
-      j =>
-        aggregate(
-          slice(sig, j * lit(rows) + lit(1), lit(rows)),
-          lit(17L),
-          (acc, v) => (acc * lit(mul) + pmod(v, lit(mod))) % lit(mod)
-        )
-    )
-    zip_with(fold(PolyMul, PolyMod), fold(PolyMul2, PolyMod2),
-      (h1, h2) => h1 * lit(PolyMod2) + h2)
-  }
-
-  /** Near-duplicate pairs: LSH candidates verified with exact Jaccard over
-    * the shingle sets.
-    *
-    * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold
-    */
   /** LSH candidate pairs WITHOUT verification — the blocking stage shared
     * by [[nearDupPairs]] (exact-Jaccard verify) and
     * [[FuzzyDedup.editDistancePairs]] (edit-distance verify). Returns
@@ -98,12 +40,9 @@ object MinHash {
       k: Int = 16,
       bands: Int = 8
   ): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
     val sh = docs.select(
       col(idCol).as("id"), wordShingles(col(textCol), shingleN).as("sh"))
-    val banded = signatureDf(sh, "id", "sh", k)
-      .select(col("id"),
-        posexplode(bandHashes(col("sig"), bands, k / bands)).as(Seq("band", "bh")))
+    val banded = bandRows(sh, k, bands)
     banded
       .join(banded.select(col("band"), col("bh"), col("id").as("id_b")),
         Seq("band", "bh"))
@@ -112,6 +51,11 @@ object MinHash {
       .dropDuplicates("id_a", "id_b")
   }
 
+  /** Near-duplicate pairs: LSH candidates verified with exact Jaccard over
+    * the shingle sets.
+    *
+    * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold
+    */
   def nearDupPairs(
       docs: DataFrame,
       idCol: String,
@@ -122,10 +66,8 @@ object MinHash {
       threshold: Double = 0.8,
       tokenMode: String = "ws"
   ): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
     require(tokenMode == "ws" || tokenMode == "unicode",
       s"unknown tokenMode '$tokenMode'")
-    val rows = k / bands
     // consumed by three plan branches (banding + two verify joins):
     // persist so tokenize/shingle runs once, not three times
     val sh = docs.select(
@@ -136,11 +78,7 @@ object MinHash {
     // candidate generation on narrow (band, hash, id) rows only — the
     // shingle arrays are re-attached after pair dedup so they never ride
     // through the self-join/shuffle
-    val banded = signatureDf(sh, "id", "sh", k)
-      .select(
-        col("id"),
-        posexplode(bandHashes(col("sig"), bands, rows)).as(Seq("band", "bh"))
-      )
+    val banded = bandRows(sh, k, bands)
     val cand = banded
       .join(banded.select(col("band"), col("bh"), col("id").as("id_b")),
         Seq("band", "bh"))
@@ -184,12 +122,9 @@ object MinHash {
       maxBroadcastBytes: Long = -1L
   ): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
-    val rows = k / bands
     def shingled(df: DataFrame) = df.select(
       col(idCol).as("id"), wordShingles(col(textCol), shingleN).as("sh"))
-    def banded(sh: DataFrame) = signatureDf(sh, "id", "sh", k)
-      .select(col("id"),
-        posexplode(bandHashes(col("sig"), bands, rows)).as(Seq("band", "bh")))
+    def banded(sh: DataFrame) = bandRows(sh, k, bands)
     val shL = shingled(left)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val shR = shingled(right)
@@ -425,18 +360,34 @@ object MinHash {
   }
 
   /** (id, band, bh) banding rows from an already-shingled `(id, sh)`
-    * frame — THE one place the signature → band-hash pipeline lives. Every
-    * family member (bandEdges, the streaming decontamination sinks) bands
+    * frame — THE one place banding happens. Every family member (the pair
+    * operators, bandEdges, the streaming decontamination sinks) bands
     * through here, so the bucket scheme cannot silently drift between
     * batch and streaming forms.
+    *
+    * One narrow projection, no shuffle: the
+    * [[graft.functions.MinHashBands]] kernel takes each row's k seed
+    * minima in one loop over its shingles (polyHash(g, s) =
+    * ((s+1)·131^len(g) + polyBase(g)) mod P, one code-point walk per
+    * shingle), then folds each of `bands` slices of k/bands slots with
+    * TWO independent polynomial combiners (seed 17; bases 131/137, mods
+    * 1e9+7/998244353), combined as `h1·998244353 + h2` — a ~59-bit
+    * bucket key (max < 10^18, BIGINT-safe in DuckDB). Bucket equality is
+    * taken as truth by the groups/incremental dedup operators (no
+    * pair-level verification), so a single 30-bit hash would glue
+    * unrelated docs once the corpus carries ≳10^5 distinct band values —
+    * measured on a 100k random corpus: 50k spurious collision buckets
+    * formed one giant flood-limited component. The pair keeps spurious
+    * fusions negligible past 10^9 distinct band values per band index.
+    *
+    * Values are bit-identical to the DuckDB oracles' naive per-seed fold.
+    * Each row is signed on its own (rows sharing an id are not merged),
+    * and a row with no shingles (empty or NULL array) bands into no rows.
     */
-  private[graft] def bandRows(sh: DataFrame, k: Int, bands: Int): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    signatureDf(sh, "id", "sh", k)
-      .select(col("id"),
-        posexplode(bandHashes(col("sig"), bands, k / bands))
-          .as(Seq("band", "bh")))
-  }
+  private[graft] def bandRows(sh: DataFrame, k: Int, bands: Int): DataFrame =
+    sh.select(col("id"),
+      posexplode(graft.functions.exprs.minhashBands(col("sh"), k, bands))
+        .as(Seq("band", "bh")))
 
   /** Label a NEW batch of docs against an already-deduplicated corpus
     * WITHOUT re-clustering it — the daily-append posture at 100 TB, where

@@ -85,9 +85,11 @@ class OhlcPropertySpec extends SparkSpec {
       (3L, "z1 z2 z3 z4 z5 z6 z7 z8")).toDF("doc_id", "text")
     val sh = docs.select(col("doc_id").as("id"),
       graft.text.TextFunctions.wordShingles(col("text"), 3).as("sh"))
-    val sig = graft.text.MinHash.signatureDf(sh, "id", "sh", 16).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(sig(1L) === sig(2L))
-    assert(sig(1L) !== sig(3L))
+    val bands = graft.text.MinHash.bandRows(sh, 16, 8).collect()
+      .groupBy(_.getLong(0))
+      .map { case (id, rs) => id -> rs.map(r => r.getInt(1) -> r.getLong(2)).sorted.toSeq }
+    assert(bands(1L).size === 8)
+    assert(bands(1L) === bands(2L))
+    assert(bands(1L).toSet.intersect(bands(3L).toSet).isEmpty)
   }
 }

@@ -64,4 +64,17 @@ class StatsSpec extends SparkSpec {
     // (20,30) co-occur whenever 30 appears: lift 1·3e6/(2·1) = 1.5e6
     assert(all.contains((20L, 30L, 1L, 1500000L)), all.toString)
   }
+
+  test("pair lift: rows with a NULL basket id belong to no basket") {
+    val rows = Seq[(Option[Long], Long)]((Some(1L), 10L), (Some(1L), 20L),
+      (Some(2L), 10L), (Some(2L), 20L), (Some(3L), 10L))
+    val withNull = rows ++ Seq((None, 10L), (None, 20L))
+    def lift(r: Seq[(Option[Long], Long)]) =
+      Itemsets.pairLift(r.toDF("bk", "it"), "bk", "it", minSupport = 1)
+        .as[(Long, Long, Long, Long)].collect().toSeq
+    // 3 baskets (COUNT(DISTINCT bk) ignores NULL): (10,20) in 2 of them,
+    // lift = 2·3·1e6 / (3·2) = 1e6
+    assert(lift(rows) == Seq((10L, 20L, 2L, 1000000L)))
+    assert(lift(withNull) == lift(rows))
+  }
 }

@@ -2,7 +2,7 @@ package graft.api
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.TickIngest
@@ -311,17 +311,14 @@ final class Processor(spark: SparkSession, warehouse: String) {
       PrunedScan.sessionInstant(spark, start.getOrElse("1900-01-01")),
       PrunedScan.sessionInstant(spark,
         end.map(_ + " 23:59:59").getOrElse("9999-01-01")))
+    def read(files: Seq[org.apache.hadoop.fs.Path]) = PrunedScan.readTable(spark,
+      s"$warehouse/ohlc_1m", OhlcGenerator.TableSchema, files)
+      .filter(col("instrument") === p)
     var df = prunedFiles match {
-      case Some(paths) if paths.nonEmpty =>
-        spark.read.option("basePath", s"$warehouse/ohlc_1m")
-          .parquet(paths.map(_.toString): _*)
-          .filter(col("instrument") === p)
-      case Some(Nil) => // provably empty: keep the exact plan, zero rows
-        spark.read.parquet(s"$warehouse/ohlc_1m")
-          .filter(col("instrument") === p).filter(lit(false))
-      case _ =>
-        spark.read.parquet(s"$warehouse/ohlc_1m")
-          .filter(col("instrument") === p)
+      case Some(paths) if paths.nonEmpty => read(paths)
+      // provably empty: keep the exact plan, zero rows
+      case Some(Nil) => read(Nil).filter(lit(false))
+      case _ => read(Nil)
     }
     start.foreach(s => df = df.filter(col("timestamp") >= lit(s).cast("timestamp") &&
       col("yyyymm") >= date_format(lit(s).cast("timestamp"), "yyyyMM")))
@@ -365,19 +362,16 @@ final class Processor(spark: SparkSession, warehouse: String) {
       .groupBy(col("instrument"),
         Ohlc.bucketStart(col("timestamp"), minutes).as("timestamp"))
       .agg(aggs.head, aggs.tail: _*)
-    agged
-      .withColumn("range_per_spread",
-        when(col("raw_spread_avg") > 0,
-          (col("high") - col("low")) / col("raw_spread_avg")))
-      .withColumn("range_per_tick",
-        when(col("tick_count_raw_spread") > 0,
-          (col("high") - col("low")) / col("tick_count_raw_spread")))
-      .withColumn("body_per_spread",
-        when(col("raw_spread_avg") > 0,
-          abs(col("close") - col("open")) / col("raw_spread_avg")))
-      .withColumn("body_per_tick",
-        when(col("tick_count_raw_spread") > 0,
-          abs(col("close") - col("open")) / col("tick_count_raw_spread")))
+    // one select, not four chained withColumn calls: each withColumn
+    // re-analyses the whole 27-column plan
+    val range = col("high") - col("low")
+    val body = abs(col("close") - col("open"))
+    def per(x: Column, by: String): Column = when(col(by) > 0, x / col(by))
+    agged.select(col("*"),
+      per(range, "raw_spread_avg").as("range_per_spread"),
+      per(range, "tick_count_raw_spread").as("range_per_tick"),
+      per(body, "raw_spread_avg").as("body_per_spread"),
+      per(body, "tick_count_raw_spread").as("body_per_tick"))
   }
 
   /** Coverage statistics (`get_coverage`, `clickhouse_query_engine.py:
@@ -407,8 +401,8 @@ final class Processor(spark: SparkSession, warehouse: String) {
       ("standard_ticks",
         () => TickIngest.readTicks(spark, warehouse, "standard", Some(p))),
       ("ohlc_1m",
-        () => spark.read.parquet(s"$warehouse/ohlc_1m")
-          .filter(col("instrument") === p)))
+        () => PrunedScan.readTable(spark, s"$warehouse/ohlc_1m",
+          OhlcGenerator.TableSchema).filter(col("instrument") === p)))
       .filter { case (t, _) => tableExists(t) }
     val meta: Map[String, (Long, Option[Timestamp], Option[Timestamp])] =
       readers.flatMap { case (t, _) =>
@@ -444,7 +438,8 @@ final class Processor(spark: SparkSession, warehouse: String) {
     else instrumentsMeta("raw_spread_ticks").getOrElse {
       // unproven layout: the distinct scan stays the truth
       Processor.listingDataScans.incrementAndGet()
-      spark.read.parquet(s"$warehouse/raw_spread_ticks")
+      graft.storage.PrunedScan.readTable(spark, s"$warehouse/raw_spread_ticks",
+          TickIngest.TableSchema)
         .select("instrument").distinct().orderBy("instrument")
         .collect().map(_.getString(0)).toSeq
     }
@@ -633,9 +628,11 @@ final class Processor(spark: SparkSession, warehouse: String) {
       end.fold(s1)(e =>
         s1.filter(col("timestamp") <= lit(e + " 23:59:59.999999").cast("timestamp")))
     }
-    def plain() = exact(spark.read.parquet(root)
-      .filter(col("instrument") === p)
-      .select(OhlcGenerator.Columns.map(col): _*))
+    def read(files: Seq[Path]) = exact(
+      PrunedScan.readTable(spark, root, OhlcGenerator.TableSchema, files)
+        .filter(col("instrument") === p)
+        .select(OhlcGenerator.Columns.map(col): _*))
+    def plain() = read(Nil)
     if (lo.isEmpty && hi.isEmpty) plain()
     else PrunedScan.monthPartitionedFiles(
       spark.sessionState.newHadoopConf(), new Path(root), "timestamp",
@@ -645,11 +642,7 @@ final class Processor(spark: SparkSession, warehouse: String) {
       PrunedScan.sessionInstant(spark, hi.getOrElse("9999-01-01"))) match {
       case None => plain()
       case Some(Nil) => plain().filter(lit(false)) // schema-exact empty
-      case Some(paths) =>
-        exact(spark.read.option("basePath", root)
-          .parquet(paths.map(_.toString): _*)
-          .filter(col("instrument") === p)
-          .select(OhlcGenerator.Columns.map(col): _*))
+      case Some(paths) => read(paths)
     }
   }
 

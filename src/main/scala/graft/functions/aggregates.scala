@@ -16,10 +16,11 @@ import org.apache.spark.sql.types._
   *
   * Why it matters at scale: the composed form shuffles 6 accumulator
   * columns (two of them (value, ord) pairs) per group; the fused buffer
-  * shuffles once with no duplicated `ord` slots, and being a
-  * DeclarativeAggregate it stays inside whole-stage codegen (all update /
-  * merge steps are Catalyst expressions, no ImperativeAggregate virtual
-  * calls per row).
+  * shuffles once with no duplicated `ord` slots, and all update / merge
+  * steps are Catalyst expressions (no ImperativeAggregate virtual calls
+  * per row). It does not stay inside whole-stage codegen: with a struct
+  * `ord` (the `Ohlc.bars` convention) the buffer holds structs, and Spark
+  * plans it as a non-codegen SortAggregate after a full sort of its input.
   *
   * Semantics match the reference bar build (argMin/argMax on the tick
   * timestamp, `docs/DATABASE_SCHEMA.md` OHLC definition) for a UNIQUE

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.storage.PrunedScan
+
 /** Tick ingestion (reference `downloader.py` + `tick_loader.py` +
   * `clickhouse_manager.insert_ticks`, SURVEY.md §2.1 S1/S2/S4).
   *
@@ -24,6 +26,21 @@ object TickIngest {
     StructField("Timestamp", TimestampType, nullable = false),
     StructField("Bid", DoubleType, nullable = false),
     StructField("Ask", DoubleType, nullable = false)))
+
+  /** Schema of the tick tables [[writeTicks]] writes (`raw_spread_ticks`,
+    * `standard_ticks`): the data columns, then the partition columns —
+    * declared once, as the reference declares its tables at bootstrap
+    * (`clickhouse_manager.py:110-224`). Reads pass it to `spark.read`
+    * ([[graft.storage.PrunedScan.readTable]]) instead of re-inferring it
+    * from a footer. `yyyymm` is INT, the type partition inference gives
+    * the written label.
+    */
+  val TableSchema: StructType = StructType(Seq(
+    StructField("timestamp", TimestampType),
+    StructField("bid", DoubleType),
+    StructField("ask", DoubleType),
+    StructField("instrument", StringType),
+    StructField("yyyymm", IntegerType)))
 
   /** Read tick CSVs (columns Timestamp,Bid,Ask, header row, µs timestamps
     * treated as UTC) into the normalized (timestamp, bid, ask) frame.
@@ -257,13 +274,15 @@ object TickIngest {
     val keyed = ticks
       .withColumn("instrument", lit(instrument.toUpperCase(java.util.Locale.ROOT)))
       .withColumn("yyyymm", date_format(col("timestamp"), "yyyyMM"))
-    // dedup as a hash AGGREGATION, not a row_number window: max_by over
-    // the (bid, ask) struct keeps the same winner as the old
-    // `row_number over (order by bid desc, ask desc) = 1`, but partially
-    // aggregates map-side and never sorts the full tick stream — the
+    // dedup as an AGGREGATION, not a row_number window: max_by over the
+    // (bid, ask) struct keeps the same winner as the old
+    // `row_number over (order by bid desc, ask desc) = 1` — the
     // operators.Dedup.replacingDedupAgg posture applied to the ingest hot
     // path (the 100×-data probe measured window-form dedup at ~8× the
-    // aggregation form's wall)
+    // aggregation form's wall). Its buffer holds structs, which Spark does
+    // not hash-aggregate: the executed plan is a non-codegen SortAggregate,
+    // partial after a sort of each input partition and final after a sort
+    // of the shuffled rows, so the full tick stream IS sorted (twice)
     val allCols = Seq("instrument", "timestamp", "bid", "ask", "yyyymm")
     val deduped = keyed
       .groupBy(col("instrument"), col("timestamp"))
@@ -347,7 +366,7 @@ object TickIngest {
       start: Option[String] = None,
       end: Option[String] = None
   ): DataFrame = {
-    var df = spark.read.parquet(s"$warehouse/${variant}_ticks")
+    var df = PrunedScan.readTable(spark, s"$warehouse/${variant}_ticks", TableSchema)
     instrument.foreach(i => df = df.filter(col("instrument") === i.toUpperCase(java.util.Locale.ROOT)))
     start.foreach { s =>
       df = df.filter(col("timestamp") >= lit(s).cast("timestamp") &&
@@ -386,7 +405,6 @@ object TickIngest {
       overlapPairs: Seq[(String, String)] = Nil
   ): DataFrame = {
     import org.apache.hadoop.fs.Path
-    import graft.storage.PrunedScan
     val root = s"$warehouse/${variant}_ticks"
     def exactExtra(df: DataFrame): DataFrame = {
       val banded = extraBounds.foldLeft(df) {
@@ -417,8 +435,7 @@ object TickIngest {
       case None => fallback()
       case Some(Nil) => fallback().filter(lit(false)) // schema-exact empty
       case Some(paths) =>
-        var df = spark.read.option("basePath", root)
-          .parquet(paths.map(_.toString): _*)
+        var df = PrunedScan.readTable(spark, root, TableSchema, paths)
         instrument.foreach(i => df = df.filter(col("instrument") === i.toUpperCase(java.util.Locale.ROOT)))
         start.foreach(s => df = df.filter(col("timestamp") >= lit(s).cast("timestamp")))
         end.foreach(e => df = df.filter(col("timestamp") <= lit(e).cast("timestamp")))

@@ -13,10 +13,13 @@ import graft.operators.AsofJoin
   * results are bit-deterministic — required for hash-matched oracles
   * (SURVEY.md §5 caveats).
   *
-  * Scale: one hash-aggregation shuffle on (group keys, bucket). Partial
-  * map-side aggregation applies since every agg is algebraic; no windows.
-  * Resampling N-minute buckets from 1m bars is the same shape, reading ~60×
-  * fewer rows than re-aggregating ticks.
+  * Scale: one aggregation on (group keys, bucket), partial before its
+  * shuffle and final after it; no windows. It is not a hash aggregation:
+  * `min_by`/`max_by` (and [[graft.functions.OhlcAgg]]) buffer the ordering
+  * key, and a buffer holding a struct or string makes Spark plan a
+  * non-codegen SortAggregate after a full sort of its input. Resampling
+  * N-minute buckets from 1m bars is the same shape, reading ~60× fewer
+  * rows than re-aggregating ticks.
   */
 object Ohlc {
 

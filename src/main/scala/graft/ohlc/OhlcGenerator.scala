@@ -2,6 +2,7 @@ package graft.ohlc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.calendar.TradingCalendar
 import graft.ingest.TickIngest
@@ -29,6 +30,25 @@ object OhlcGenerator {
       "ny_hour", "london_hour", "ny_session", "london_session",
       "is_us_holiday", "is_uk_holiday", "is_major_holiday") ++
       graft.calendar.ExchangeRegistry.all.map(e => s"is_${e.key}_session")
+
+  /** Schema of the `ohlc_1m` table [[regenerate]] writes: the data columns
+    * of [[Columns]] in order, then the partition columns — declared once,
+    * as the reference declares the table at bootstrap
+    * (`clickhouse_manager.py:196-224`). Reads pass it to `spark.read`
+    * ([[graft.storage.PrunedScan.readTable]]) instead of re-inferring it
+    * from a footer. `yyyymm` is INT, the type partition inference gives
+    * the written label.
+    */
+  val TableSchema: StructType = StructType(
+    Columns.filter(_ != "instrument").map { c =>
+      StructField(c, c match {
+        case "timestamp" => TimestampType
+        case "open" | "high" | "low" | "close" |
+             "raw_spread_avg" | "standard_spread_avg" => DoubleType
+        case "ny_session" | "london_session" => StringType
+        case _ => IntegerType // tick counts, hours, 0/1 calendar flags
+      })
+    } ++ Seq(StructField("instrument", StringType), StructField("yyyymm", IntegerType)))
 
   /** Timezone/session projection columns added at generation time
     * (`clickhouse_ohlc_generator.py:164-180`).
@@ -324,7 +344,7 @@ object OhlcGenerator {
         catch { case scala.util.control.NonFatal(_) => () }
       }
     }
-    spark.read.parquet(s"$warehouse/ohlc_1m")
+    graft.storage.PrunedScan.readTable(spark, s"$warehouse/ohlc_1m", TableSchema)
       .filter(col("instrument") === instrument.toUpperCase(java.util.Locale.ROOT))
       .count()
   }

@@ -3,6 +3,7 @@ package graft.storage
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Zone-map file skipping over [[Manifest]] sidecars.
   *
@@ -511,6 +512,23 @@ object PrunedScan {
         }
       })
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Read an engine-written warehouse table through its declared `schema`
+    * (`TickIngest.TableSchema`, `OhlcGenerator.TableSchema`): nothing is
+    * inferred, so planning the read opens no footer and launches no Spark
+    * job. With `files` (e.g. a [[monthPartitionedFiles]] result) only
+    * those are read, `basePath` keeping the partition columns; empty
+    * `files` reads the whole table under `root`.
+    */
+  def readTable(
+      spark: SparkSession,
+      root: String,
+      schema: StructType,
+      files: Seq[HPath] = Nil): DataFrame = {
+    val reader = spark.read.schema(schema)
+    if (files.isEmpty) reader.parquet(root)
+    else reader.option("basePath", root).parquet(files.map(_.toString): _*)
+  }
 
   /** Layout proof, instrument level (r16, shared by coverage / gap / list
     * fast paths): Some(instrument= dirs) when EVERY child of `root` is an

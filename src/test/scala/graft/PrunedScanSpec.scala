@@ -448,13 +448,12 @@ class PrunedScanSpec extends SparkSpec {
     // yyyymm=202400 month under an otherwise-proven table must not throw
     mk("t3w/raw_spread_ticks/instrument=EURUSD/yyyymm=202400")
     val p = new graft.api.Processor(spark, s"$root/t3w")
-    // falls back to the scan; empty dir → unable to infer schema is the
-    // scan path's own contract, so just assert NO DateTimeParseException
-    intercept[Exception] { p.missingMonths("EURUSD") } match {
-      case _: java.time.format.DateTimeParseException =>
-        fail("metadata path threw instead of falling back")
-      case _ => () // the scan path's own (schema) error is fine here
-    }
+    // falls back to the scan instead of parsing the label; the scan reads
+    // the data-less table through the declared tick schema (nothing to
+    // infer), finds no stored month and so reports no gap
+    val scans = graft.api.Processor.listingDataScans.get
+    assert(p.missingMonths("EURUSD") === Nil)
+    assert(graft.api.Processor.listingDataScans.get === scans + 1)
   }
 
   test("property: random data, random splits, random bounds — pruned scan ≡ full filter, skips are proofs") {

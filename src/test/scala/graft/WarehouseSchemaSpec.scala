@@ -1,0 +1,102 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.types._
+
+import graft.api.Processor
+import graft.ingest.TickIngest
+import graft.ohlc.OhlcGenerator
+
+/** The warehouse tables are read through the schemas their writers
+  * declare: the declared schema is exactly what Spark infers from the
+  * written files, and planning a tick or OHLC read therefore launches no
+  * Spark job (no footer is opened to re-infer it).
+  */
+class WarehouseSchemaSpec extends SparkSpec {
+
+  private val rawCsv =
+    """Timestamp,Bid,Ask
+      |2024-01-10 14:30:01.100000,1.10010,1.10010
+      |2024-01-10 14:30:02.200000,1.10030,1.10031
+      |2024-01-10 14:31:10.000000,1.10050,1.10052
+      |2024-02-05 09:00:00.000000,1.08000,1.08000
+      |2024-02-05 09:00:30.000000,1.08010,1.08012
+      |""".stripMargin
+
+  private val stdCsv =
+    """Timestamp,Bid,Ask
+      |2024-01-10 14:29:59.000000,1.09995,1.10015
+      |2024-02-05 08:59:00.000000,1.07990,1.08012
+      |""".stripMargin
+
+  /** A fresh warehouse per call, so no listing or plan is cached. */
+  private def freshWarehouse(): (Processor, String) = {
+    val dir = Files.createTempDirectory("graft_wh_schema")
+    val raw = dir.resolve("raw.csv"); Files.writeString(raw, rawCsv)
+    val std = dir.resolve("std.csv"); Files.writeString(std, stdCsv)
+    val wh = dir.resolve("warehouse").toString
+    val p = new Processor(spark, wh)
+    assert(p.updateData("EURUSD", raw.toString, std.toString).isRight)
+    (p, wh)
+  }
+
+  /** Spark jobs started while `body` runs (the bus is drained on both
+    * sides, so earlier jobs are not counted and none of the body's is
+    * missed). */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; TestListenerBus.drain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  private def typed(s: StructType): Seq[(String, DataType)] =
+    s.fields.toSeq.map(f => f.name -> f.dataType)
+
+  test("planning a tick or OHLC read launches zero Spark jobs") {
+    val (p, wh) = freshWarehouse()
+    val plans: Seq[(String, () => Any)] = Seq(
+      "queryTicks" -> (() => p.queryTicks("EURUSD")),
+      "queryTicks ranged" -> (() =>
+        p.queryTicks("EURUSD", start = Some("2024-01-10"), end = Some("2024-01-31"))),
+      "queryTicks bidRange" -> (() =>
+        p.queryTicks("EURUSD", bidRange = Some((1.1, 1.2)))),
+      "queryTicks zeroSpread" -> (() => p.queryTicks("EURUSD", zeroSpread = true)),
+      "queryOhlc 1m" -> (() => p.queryOhlc("EURUSD", "1m")),
+      "queryOhlc 1m ranged" -> (() =>
+        p.queryOhlc("EURUSD", "1m", start = Some("2024-02-01"), end = Some("2024-02-29"))),
+      "queryOhlc 15m" -> (() => p.queryOhlc("EURUSD", "15m")),
+      "ohlcFrom ranged" -> (() => p.ohlcFrom("EURUSD", Some("2024-01-01"), None)(None)),
+      "readTicks" -> (() => TickIngest.readTicks(spark, wh, "raw_spread", Some("EURUSD"))))
+    val counts = plans.map { case (name, plan) => name -> jobsDuring(plan()) }
+    assert(counts.forall(_._2 == 0), counts.mkString(", "))
+    // the planned reads still answer: nothing was deferred into the plan
+    assert(p.queryTicks("EURUSD").count() === 5)
+    assert(p.queryOhlc("EURUSD", "1m").count() === 3)
+  }
+
+  test("declared table schemas are exactly what the writers write") {
+    val (p, wh) = freshWarehouse()
+    // inference from the written files: data columns in file order, then
+    // the partition columns with their inferred types
+    for (t <- Seq("raw_spread_ticks", "standard_ticks"))
+      assert(typed(spark.read.parquet(s"$wh/$t").schema) === typed(TickIngest.TableSchema), t)
+    assert(typed(spark.read.parquet(s"$wh/ohlc_1m").schema) ===
+      typed(OhlcGenerator.TableSchema))
+    // the reference's 27-column bar schema comes back from queryOhlc
+    val bars = p.queryOhlc("EURUSD", "1m").schema
+    assert(bars.fieldNames.toSeq === OhlcGenerator.Columns)
+    assert(bars.length === 27)
+    assert(typed(bars) === OhlcGenerator.Columns.map(c =>
+      c -> OhlcGenerator.TableSchema(c).dataType))
+  }
+}

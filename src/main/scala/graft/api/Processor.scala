@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Bound
 import graft.ingest.TickIngest
 import graft.model._
 import graft.ohlc.{Ohlc, OhlcGenerator}
@@ -274,8 +275,8 @@ final class Processor(spark: SparkSession, warehouse: String) {
     // prunes on bid/ask range OVERLAP: a file whose ask range sits
     // wholly above its bid range provably holds no zero-spread row.
     val bands =
-      bidRange.toSeq.map { case (lo, hi) => ("bid", lo: Any, hi: Any) } ++
-      askRange.toSeq.map { case (lo, hi) => ("ask", lo: Any, hi: Any) }
+      bidRange.toSeq.map { case (lo, hi) => ("bid", lo, hi) } ++
+      askRange.toSeq.map { case (lo, hi) => ("ask", lo, hi) }
     val pairs = if (zeroSpread) Seq(("bid", "ask")) else Nil
     val df = TickIngest.readTicksPruned(spark, warehouse, variant, Some(p),
       start.map(_ + " 00:00:00"), end.map(_ + " 23:59:59.999999"), bands,
@@ -320,10 +321,10 @@ final class Processor(spark: SparkSession, warehouse: String) {
       case Some(Nil) => read(Nil).filter(lit(false))
       case _ => read(Nil)
     }
-    start.foreach(s => df = df.filter(col("timestamp") >= lit(s).cast("timestamp") &&
+    start.foreach(s => df = df.filter(col("timestamp") >= Bound.timestamp(s) &&
       col("yyyymm") >= date_format(lit(s).cast("timestamp"), "yyyyMM")))
     end.foreach(e => df = df.filter(
-      col("timestamp") <= lit(e + " 23:59:59").cast("timestamp") &&
+      col("timestamp") <= Bound.timestamp(e + " 23:59:59") &&
         col("yyyymm") <= date_format(lit(e).cast("timestamp"), "yyyyMM")))
     // partition columns come back at the end of the schema; restore the
     // reference's 27-column order (clickhouse_manager.py:196-224)
@@ -337,6 +338,13 @@ final class Processor(spark: SparkSession, warehouse: String) {
   /** Resample stored 1m bars to an N-minute timeframe with the reference's
     * aggregate choices + 4 derived ratio metrics
     * (`clickhouse_query_engine.py:218-271`).
+    *
+    * A bucket's session labels are those of its first bar. They are taken
+    * as that bar's hour and mapped to the label by the generator's own
+    * function: a stored label is a function of the stored hour of the same
+    * row, so this is exact, and every aggregate buffer then has a fixed
+    * width, which lets Spark plan a whole-stage-codegen hash aggregate
+    * (a string `min_by` buffer forces a sort-based one).
     */
   private def resampleOhlc(bars1m: DataFrame, minutes: Int): DataFrame = {
     val ord = col("timestamp")
@@ -351,8 +359,8 @@ final class Processor(spark: SparkSession, warehouse: String) {
       sum(col("tick_count_standard")).cast("int").as("tick_count_standard"),
       max(col("ny_hour")).as("ny_hour"),
       max(col("london_hour")).as("london_hour"),
-      min_by(col("ny_session"), ord).as("ny_session"),
-      min_by(col("london_session"), ord).as("london_session"),
+      OhlcGenerator.nySession(min_by(col("ny_hour"), ord)).as("ny_session"),
+      OhlcGenerator.londonSession(min_by(col("london_hour"), ord)).as("london_session"),
       max(col("is_us_holiday")).as("is_us_holiday"),
       max(col("is_uk_holiday")).as("is_uk_holiday"),
       max(col("is_major_holiday")).as("is_major_holiday")) ++
@@ -624,9 +632,9 @@ final class Processor(spark: SparkSession, warehouse: String) {
       // inclusive cast could land an hour late and lose rows); the date
       // bounds are the caller's inclusive contract
       val s1 = start.fold(df)(s =>
-        df.filter(col("timestamp") >= lit(s + " 00:00:00").cast("timestamp")))
+        df.filter(col("timestamp") >= Bound.timestamp(s + " 00:00:00")))
       end.fold(s1)(e =>
-        s1.filter(col("timestamp") <= lit(e + " 23:59:59.999999").cast("timestamp")))
+        s1.filter(col("timestamp") <= Bound.timestamp(e + " 23:59:59.999999")))
     }
     def read(files: Seq[Path]) = exact(
       PrunedScan.readTable(spark, root, OhlcGenerator.TableSchema, files)

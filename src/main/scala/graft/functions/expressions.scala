@@ -1,12 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 private[functions] object TypeChecks {
@@ -359,6 +361,43 @@ case class AdcDistance(left: Expression, right: Expression, ksub: Int)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcDistance =
     copy(l, r)
   override def prettyName: String = "adc_distance"
+}
+
+/** A [[Literal]] whose generated code reads its value from the compiled
+  * class's reference array instead of inlining it as a Java constant. Two
+  * plans that differ only in such values generate the same source, so
+  * Spark compiles the shape once per JVM (its class cache is keyed on the
+  * source) and later calls run the already JIT-compiled class. It is
+  * still a `Literal`: constant folding keeps it, and a comparison of a
+  * column with it is still pushed to Parquet as a data filter.
+  */
+class BoundLiteral(value: Any, dataType: DataType) extends Literal(value, dataType) {
+  require(value != null, "a bound literal holds a non-NULL value")
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("bound", value, CodeGenerator.boxedType(dataType))
+    val v =
+      if (CodeGenerator.isPrimitiveType(dataType)) s"$ref.${CodeGenerator.javaType(dataType)}Value()"
+      else ref
+    ExprCode(FalseLiteral, JavaCode.expression(v, dataType))
+  }
+}
+
+/** Per-call values of a read (range bounds, price bands, page cursors) as
+  * [[BoundLiteral]] columns. */
+object Bound {
+  private def bound(l: Literal): Column = bridge.column(new BoundLiteral(l.value, l.dataType))
+  def apply(v: Double): Column = bound(Literal(v))
+  def apply(ts: java.sql.Timestamp): Column = bound(Literal(ts))
+
+  /** `lit(s).cast("timestamp")`: the same cast, in the time zone of the
+    * active session (`SQLConf.get`), evaluated once here. A string that does not parse keeps that form, so
+    * it yields NULL or fails when the query runs, as before. */
+  def timestamp(s: String): Column =
+    (try Cast(Literal(s), TimestampType, Some(SQLConf.get.sessionLocalTimeZone)).eval()
+    catch { case scala.util.control.NonFatal(_) => null }) match {
+      case null => lit(s).cast(TimestampType)
+      case us => bound(Literal(us, TimestampType))
+    }
 }
 
 /** Column-facade for the custom expressions. */

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Bound
 import graft.storage.PrunedScan
 
 /** Tick ingestion (reference `downloader.py` + `tick_loader.py` +
@@ -368,12 +369,15 @@ object TickIngest {
   ): DataFrame = {
     var df = PrunedScan.readTable(spark, s"$warehouse/${variant}_ticks", TableSchema)
     instrument.foreach(i => df = df.filter(col("instrument") === i.toUpperCase(java.util.Locale.ROOT)))
+    // the timestamp bounds are bound literals (pushed to Parquet, read by
+    // the generated filter at run time); the yyyymm partition predicates
+    // prune on the driver and never reach generated code
     start.foreach { s =>
-      df = df.filter(col("timestamp") >= lit(s).cast("timestamp") &&
+      df = df.filter(col("timestamp") >= Bound.timestamp(s) &&
         col("yyyymm") >= date_format(lit(s).cast("timestamp"), "yyyyMM"))
     }
     end.foreach { e =>
-      df = df.filter(col("timestamp") <= lit(e).cast("timestamp") &&
+      df = df.filter(col("timestamp") <= Bound.timestamp(e) &&
         col("yyyymm") <= date_format(lit(e).cast("timestamp"), "yyyyMM"))
     }
     df
@@ -401,14 +405,14 @@ object TickIngest {
       instrument: Option[String] = None,
       start: Option[String] = None,
       end: Option[String] = None,
-      extraBounds: Seq[(String, Any, Any)] = Nil,
+      extraBounds: Seq[(String, Double, Double)] = Nil,
       overlapPairs: Seq[(String, String)] = Nil
   ): DataFrame = {
     import org.apache.hadoop.fs.Path
     val root = s"$warehouse/${variant}_ticks"
     def exactExtra(df: DataFrame): DataFrame = {
       val banded = extraBounds.foldLeft(df) {
-        case (d, (c, lo, hi)) => d.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
+        case (d, (c, lo, hi)) => d.filter(col(c) >= Bound(lo) && col(c) <= Bound(hi))
       }
       // the equality the overlap pruning is a necessary condition for
       // (r18: zero-spread `bid = ask`) — always re-applied exactly
@@ -437,8 +441,8 @@ object TickIngest {
       case Some(paths) =>
         var df = PrunedScan.readTable(spark, root, TableSchema, paths)
         instrument.foreach(i => df = df.filter(col("instrument") === i.toUpperCase(java.util.Locale.ROOT)))
-        start.foreach(s => df = df.filter(col("timestamp") >= lit(s).cast("timestamp")))
-        end.foreach(e => df = df.filter(col("timestamp") <= lit(e).cast("timestamp")))
+        start.foreach(s => df = df.filter(col("timestamp") >= Bound.timestamp(s)))
+        end.foreach(e => df = df.filter(col("timestamp") <= Bound.timestamp(e)))
         exactExtra(df)
     }
   }

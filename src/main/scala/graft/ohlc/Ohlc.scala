@@ -18,8 +18,10 @@ import graft.operators.AsofJoin
   * `min_by`/`max_by` (and [[graft.functions.OhlcAgg]]) buffer the ordering
   * key, and a buffer holding a struct or string makes Spark plan a
   * non-codegen SortAggregate after a full sort of its input. Resampling
-  * N-minute buckets from 1m bars is the same shape, reading ~60× fewer
-  * rows than re-aggregating ticks.
+  * N-minute buckets from 1m bars reads ~60× fewer rows than re-aggregating
+  * ticks, and `Processor`'s resample plans a whole-stage-codegen hash
+  * aggregate: it orders by the bar timestamp alone and takes the session
+  * labels through their hours, so every buffer has a fixed width.
   */
 object Ohlc {
 

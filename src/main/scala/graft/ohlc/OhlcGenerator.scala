@@ -1,6 +1,6 @@
 package graft.ohlc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -59,14 +59,22 @@ object OhlcGenerator {
     bars
       .withColumn("ny_hour", nyH.cast("int"))
       .withColumn("london_hour", loH.cast("int"))
-      .withColumn("ny_session",
-        when(nyH >= 9 && nyH <= 16, "NY_Session")
-          .when(nyH >= 17 && nyH <= 20, "NY_After_Hours")
-          .otherwise("NY_Closed"))
-      .withColumn("london_session",
-        when(loH >= 8 && loH <= 16, "London_Session")
-          .otherwise("London_Closed"))
+      .withColumn("ny_session", nySession(nyH))
+      .withColumn("london_session", londonSession(loH))
   }
+
+  /** The `ny_session` label of a New York wall-clock hour. A stored label
+    * is this function of the stored `ny_hour` of the same row. */
+  def nySession(hour: Column): Column =
+    when(hour >= 9 && hour <= 16, "NY_Session")
+      .when(hour >= 17 && hour <= 20, "NY_After_Hours")
+      .otherwise("NY_Closed")
+
+  /** The `london_session` label of a London wall-clock hour (see
+    * [[nySession]]). */
+  def londonSession(hour: Column): Column =
+    when(hour >= 8 && hour <= 16, "London_Session")
+      .otherwise("London_Closed")
 
   /** Build the full 27-column 1m OHLC frame from the two tick variants.
     * `asofMode` threads through to the as-of dispatch ([[Ohlc.ticksToOhlc1m]]):

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
+import graft.functions.Bound
+
 /** Read-side query surface (reference `clickhouse_query_engine.py`,
   * SURVEY.md §2.2/§2.6/§2.7): projected + predicated range scans, ordered
   * limit/offset, keyset (cursor) pagination, batch iteration, coverage
@@ -12,7 +14,10 @@ import java.sql.Timestamp
   * All methods build lazy DataFrame plans; filters and projections sit
   * directly above the scan so Catalyst pushes them into Parquet
   * (PushedFilters + ReadSchema pruning), which is what replaces the
-  * reference's reliance on ClickHouse's primary-key range scans.
+  * reference's reliance on ClickHouse's primary-key range scans. The
+  * pager's cursor is a [[graft.functions.BoundLiteral]]: pushed to Parquet
+  * like any literal, but not inlined into the generated code, so every
+  * page of one shape runs the same compiled class.
   */
 object QueryEngine {
 
@@ -96,7 +101,7 @@ object QueryEngine {
     val df = dfFor(cursor)
     val spark = df.sparkSession
     val filtered = cursor match {
-      case Some(c) => df.filter(col(time) > lit(c))
+      case Some(c) => df.filter(col(time) > Bound(c))
       case None    => df
     }
     val ordered = filtered.orderBy((time +: tiebreak).map(col): _*)
@@ -124,9 +129,9 @@ object QueryEngine {
       CursorPage(frame(head), Some(ts(head.last)), hasMore = true, head.length)
     } else {
       // the tie-group alone fills the page: fetch it whole (lossless)
-      val group = filtered.filter(col(time) === lit(boundary))
+      val group = filtered.filter(col(time) === Bound(boundary))
         .orderBy(tiebreak.map(col): _*).collect().toSeq
-      val more = filtered.filter(col(time) > lit(boundary)).limit(1).count() > 0
+      val more = filtered.filter(col(time) > Bound(boundary)).limit(1).count() > 0
       CursorPage(frame(group), Some(boundary).filter(_ => more), more, group.length)
     }
   }

@@ -118,7 +118,6 @@ object Bench {
     final case class Pass(times: Map[String, Double],
                           calibFirst: Double, calibLast: Double,
                           ioFirst: Double, ioLast: Double) {
-      def bandHits: Seq[String] = BenchSentinel.bandExceeders(times, refTimes)
       def levelShifted: Boolean = refLevels.exists { case (cf, cl, iof, iol) =>
         BenchSentinel.levelShift(calibFirst, calibLast, cf, cl) ||
           BenchSentinel.levelShift(ioFirst, ioLast, iof, iol)

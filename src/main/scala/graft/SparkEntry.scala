@@ -999,8 +999,7 @@ object SparkEntry {
         .orderBy("id")),
 
     // dedup (near): SimHash fingerprints over polynomial token hashes —
-    // reproducible in DuckDB, so oracle hash-checked (the xxhash64 variant
-    // MinHash.simhash64 remains as the engine-native fast path)
+    // reproducible in DuckDB, so oracle hash-checked
     "q_simhash" -> ((s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), MinHash.simhashPoly(col("text"), 30).as("simhash"))

@@ -386,7 +386,7 @@ object TickIngest {
   /** [[readTicks]] with zone-map FILE skipping on top of its partition
     * pruning: month partitions outside the requested range are dropped by
     * NAME on the driver (never listed), and within each surviving month
-    * the `_manifest` sidecar [[graft.storage.PrunedScan.prunedDataFiles]]
+    * the `_manifest` sidecar [[graft.storage.PrunedScan.prunedDataFilesMulti]]
     * selects only the files whose timestamp range can intersect the
     * predicate — the Spark-native equivalent of the reference's sparse
     * primary index ORDER BY (instrument, timestamp)

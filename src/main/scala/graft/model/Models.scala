@@ -21,9 +21,6 @@ object Enums {
   val Variants: Seq[String] = Seq("raw_spread", "standard")
 }
 
-/** One tick row (`clickhouse_manager.py:151-184` tick table schema). */
-final case class Tick(instrument: String, timestamp: Timestamp, bid: Double, ask: Double)
-
 /** Coverage summary (`models.py:226` CoverageInfo). */
 final case class CoverageInfo(
     instrument: String,

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * results; bit-determinism inherited from the composite-key tiebreak,
   * same argument as [[Ohlc.bars]]).
   *
-  * Scale shape of [[applyBatch]]: the batch aggregates alone
+  * Scale shape of [[applyBatchPlan]]: the batch aggregates alone
   * (O(batch) → few bars), touched stored bars are selected by a BROADCAST
   * semi-join on the batch's (keys, bar_ts) set, merged, and unioned with
   * the untouched remainder (broadcast anti-join) — history is scanned but
@@ -73,39 +73,11 @@ object IncrementalOhlc {
         max(col("last_ord")).as("last_ord"))
 
   /** Fold a tick batch into stored state touching only affected bars:
-    * returns the new state. `stored` and the result carry the witness
-    * columns; project them off with [[finalBars]] for readers.
-    *
-    * The batch is aggregated to partial bars ONCE and pinned for the
-    * duration of `run` (the aggregation feeds three plan branches:
-    * touched-key set, merge input, and via both joins the stored scan),
-    * then unpinned — callers that materialized inside `run` leak nothing,
-    * which is what lets a streaming sink call this every trigger
-    * indefinitely.
-    *
-    * @param run materialize the new state (e.g. write it); the pinned
-    *            partial bars are released when it returns
-    */
-  def applyBatch[A](
-      stored: DataFrame,
-      batch: DataFrame,
-      keys: Seq[String],
-      time: String,
-      value: String,
-      tiebreak: String,
-      minutes: Int = 1
-  )(run: DataFrame => A): A = {
-    val newBars = partialBars(batch, keys, time, value, tiebreak, minutes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try run(mergePlan(stored, newBars, keys))
-    finally newBars.unpersist(blocking = false)
-  }
-
-  /** [[applyBatch]] as a lazy plan WITHOUT pinning the batch aggregation —
-    * for one-shot analytical use where the result is materialized exactly
-    * once (the three-branch recompute of the batch aggregation costs less
-    * than managing cache lifetime outside the call). Streaming sinks use
-    * the scoped [[applyBatch]].
+    * returns the new state as a lazy plan. `stored` and the result carry
+    * the witness columns; project them off with [[finalBars]] for readers.
+    * The batch aggregation feeds three plan branches (touched-key set,
+    * merge input, and via both joins the stored scan) and is recomputed
+    * per branch: materialize the result once.
     */
   def applyBatchPlan(
       stored: DataFrame,
@@ -115,12 +87,8 @@ object IncrementalOhlc {
       value: String,
       tiebreak: String,
       minutes: Int = 1
-  ): DataFrame =
-    mergePlan(stored,
-      partialBars(batch, keys, time, value, tiebreak, minutes), keys)
-
-  private def mergePlan(
-      stored: DataFrame, newBars: DataFrame, keys: Seq[String]): DataFrame = {
+  ): DataFrame = {
+    val newBars = partialBars(batch, keys, time, value, tiebreak, minutes)
     val barKeys = (keys :+ "bar_ts").map(col)
     val touchedKeys = newBars.select(barKeys: _*).distinct()
     val touched = stored.join(broadcast(touchedKeys), keys :+ "bar_ts", "left_semi")

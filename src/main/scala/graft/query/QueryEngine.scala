@@ -98,6 +98,7 @@ object QueryEngine {
       cursor: Option[Timestamp],
       pageSize: Int
   ): CursorPage = {
+    requirePageSize(pageSize)
     val df = dfFor(cursor)
     val spark = df.sparkSession
     val filtered = cursor match {
@@ -159,6 +160,7 @@ object QueryEngine {
       pageSize: Int,
       maxBatches: Option[Int] = None
   ): Iterator[DataFrame] = new Iterator[DataFrame] {
+    requirePageSize(pageSize) // at construction, not on the first next()
     private var cursor: Option[Timestamp] = None
     private var more = true
     private var n = 0
@@ -171,6 +173,11 @@ object QueryEngine {
       page.rows
     }
   }
+
+  // a page holds at least one row: 0 would index row -1 of the over-fetch,
+  // and a negative size would return an empty "final" page
+  private def requirePageSize(pageSize: Int): Unit =
+    require(pageSize >= 1, s"pageSize must be >= 1, got $pageSize")
 
   /** Coverage statistics over several tables in one tagged-union pass
     * (`clickhouse_query_engine.py:279-375`, SURVEY.md U1/A4): per-source row

@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * min/max pruning keeps working after compaction.
   *
   * All filesystem access goes through the Hadoop FileSystem API, so the
-  * table can live on any supported store (file://, hdfs://, s3a://) —
-  * the same portability contract as the streaming state versioning.
+  * table can live on any supported store (file://, hdfs://, s3a://).
   *
   * PARTITIONED tables (`col=value` subdirectories) are rejected: reading
   * one through `spark.read.parquet(dir)` turns partition directories into

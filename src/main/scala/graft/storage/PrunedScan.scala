@@ -291,26 +291,6 @@ object PrunedScan {
       } yield (perFile.map(_._1).min, perFile.map(_._2).max)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Surviving data-file paths for [lo, hi] under ONE flat directory, or
-    * None when the zone map cannot be used (missing/stale/garbled sidecar,
-    * key_col mismatch, unparseable stats/bounds) — the caller then reads
-    * every file and relies on its exact filter. This is the per-leaf
-    * primitive; [[readRange]] wraps it for flat tables and partitioned
-    * readers (e.g. the tick warehouse) call it per pruned partition.
-    *
-    * `zone` only matters for zone-less temporal bounds (see [[boundKeys]]);
-    * Instant/Timestamp bounds — everything the internal warehouse callers
-    * pass via [[sessionInstant]] — are exact under any value.
-    */
-  private[graft] def prunedDataFiles(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: HPath,
-      keyCol: String,
-      lo: Any,
-      hi: Any,
-      zone: java.time.ZoneId = java.time.ZoneOffset.UTC): Option[Seq[HPath]] =
-    prunedDataFilesMulti(conf, dir, Seq((keyCol, lo, hi)), zone)
-
   /** Multi-column zone-map pruning (r16): surviving data-file paths for
     * the CONJUNCTION of per-column inclusive ranges, or None when NO
     * column could prove anything. Each column prunes independently against
@@ -324,6 +304,10 @@ object PrunedScan {
     * one odd file aborts that COLUMN's pruning, never a partial answer.
     * The freshness proof (sidecar file-name set == directory contents) is
     * checked once and gates every column.
+    *
+    * `zone` only matters for zone-less temporal bounds (see [[boundKeys]]);
+    * Instant/Timestamp bounds — everything the internal warehouse callers
+    * pass via [[sessionInstant]] — are exact under any value.
     */
   private[graft] def prunedDataFilesMulti(
       conf: org.apache.hadoop.conf.Configuration,
@@ -453,7 +437,7 @@ object PrunedScan {
     * (the tick variants and `ohlc_1m`) for a key range: month partitions
     * outside [loMonth, hiMonth] are dropped BY NAME on the driver (never
     * listed — zero-padded yyyymm orders lexicographically), and each
-    * surviving month is zone-mapped through [[prunedDataFiles]]; a month
+    * surviving month is zone-mapped through [[prunedDataFilesMulti]]; a month
     * without a usable sidecar contributes all its data files. None on any
     * listing error — the caller falls back to the plain partitioned read.
     */

@@ -65,8 +65,7 @@ object StreamingAsof {
 
   /** Buffered (tMicros, v, ord) tuples; lefts await finalization, rights
     * await probes. NOT private: the state-store encoder's janino codegen
-    * needs public accessor resolution (same constraint as
-    * [[StreamingOhlc.SessState]]).
+    * needs public accessor resolution on the state class.
     */
   final case class St(
       lefts: Seq[(Long, Seq[Double], Long)],

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming lift of the batch operators (SURVEY.md §2.9: the
   * reference is batch-only — monthly re-runs stand in for late data — so
@@ -12,8 +11,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale shape: windowed streaming aggregation is a stateful shuffle on
   * (keys, window); the watermark bounds state size, and late rows beyond it
   * are dropped rather than re-run (the reference's re-generation model,
-  * inverted). Sessionization keeps one small state record per active key in
-  * the state store.
+  * inverted).
   */
 object StreamingOhlc {
 
@@ -48,77 +46,6 @@ object StreamingOhlc {
         count(lit(1)).as("tick_count"))
       .withColumn("bar_ts", col("w.start"))
       .drop("w")
-  }
-
-  /** Event for gap-based sessionization. */
-  final case class Point(key: Long, tsMicros: Long, value: Double)
-
-  /** Emitted closed session. */
-  final case class Session(
-      key: Long,
-      startMicros: Long,
-      endMicros: Long,
-      nEvents: Long)
-
-  // NOT private: the streaming state store's encoder codegen (janino)
-  // needs public accessor resolution on the state class — batch-mode
-  // flatMapGroupsWithState never exercised that path, so the restriction
-  // only surfaced once a MemoryStream test carried state across batches
-  final case class SessState(startMicros: Long, lastMicros: Long, n: Long)
-
-  /** Gap-based sessionization with custom state
-    * (`flatMapGroupsWithState`): a key's current session CLOSES — and
-    * emits — when a later event for that key arrives more than
-    * `gapMicros` after the session's last event. No state timeout is
-    * registered (`Point.tsMicros` is a raw long, and event-time timeouts
-    * require a watermarked timestamp column), so a key that simply goes
-    * silent keeps its final session open in the state store until the
-    * stream ends; the batch twin (`q_sessionize`) closes those tails in
-    * reconciliation. The trade is explicit: closure-by-successor keeps
-    * this exactly deterministic, where timeout-based closure would tie
-    * emission to watermark progress.
-    */
-  def sessionize(
-      points: Dataset[Point],
-      gapMicros: Long
-  ): Dataset[Session] = {
-    import points.sparkSession.implicits._
-    points
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: Long, rows: Iterator[Point], state: GroupState[SessState]) => {
-          val sorted = rows.toSeq.sortBy(_.tsMicros)
-          var cur = state.getOption
-          val closed = Seq.newBuilder[Session]
-          sorted.foreach { p =>
-            cur match {
-              // in-session, possibly LATE (cross-batch arrival order is
-              // not event order): the bounds ABSORB the point — min/max,
-              // never assignment, so a late event can neither regress
-              // lastMicros (which would corrupt the gap test for the
-              // next on-time point) nor sit outside [start, end]
-              case Some(s) if p.tsMicros >= s.startMicros - gapMicros &&
-                  p.tsMicros - s.lastMicros <= gapMicros =>
-                cur = Some(SessState(
-                  math.min(s.startMicros, p.tsMicros),
-                  math.max(s.lastMicros, p.tsMicros), s.n + 1))
-              // watermark-expired: predates the OPEN session by more than
-              // a gap, i.e. belongs to an earlier, already-emitted
-              // session this state shape can no longer amend — dropped,
-              // exactly Structured Streaming's late-data contract (the
-              // batch twin q_sessionize reconciles on re-run)
-              case Some(s) if p.tsMicros < s.startMicros - gapMicros =>
-                ()
-              case Some(s) =>
-                closed += Session(key, s.startMicros, s.lastMicros, s.n)
-                cur = Some(SessState(p.tsMicros, p.tsMicros, 1))
-              case None =>
-                cur = Some(SessState(p.tsMicros, p.tsMicros, 1))
-            }
-          }
-          cur.foreach(state.update)
-          closed.result().iterator
-        })
   }
 
   /** Streaming dedup: drop rows whose `keys` already appeared within the

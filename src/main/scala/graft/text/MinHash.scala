@@ -361,9 +361,8 @@ object MinHash {
 
   /** (id, band, bh) banding rows from an already-shingled `(id, sh)`
     * frame — THE one place banding happens. Every family member (the pair
-    * operators, bandEdges, the streaming decontamination sinks) bands
-    * through here, so the bucket scheme cannot silently drift between
-    * batch and streaming forms.
+    * operators, cross-corpus decontamination, bandEdges) bands through
+    * here, so the bucket scheme cannot silently drift between them.
     *
     * One narrow projection, no shuffle: the
     * [[graft.functions.MinHashBands]] kernel takes each row's k seed
@@ -434,53 +433,11 @@ object MinHash {
       bands: Int = 4,
       maxIters: Int = 25
   ): (DataFrame, DataFrame) = {
-    val (labels, updated, edges) = incrementalPlans(
-      bucketIndex, newDocs, idCol, textCol, shingleN, k, bands, maxIters)
-    edges.unpersist(blocking = false)
-    (labels, updated)
-  }
-
-  /** [[nearDupGroupsIncremental]] with the batch's shingle/edge cache held
-    * ALIVE until `run` returns: the labels and the updated index both join
-    * against the batch's band edges, so a caller that materializes them
-    * separately (the streaming sink writes two outputs) would otherwise
-    * re-shingle the whole micro-batch once per write. Use from foreachBatch
-    * sinks; the lazy pair form suits one-shot analytical plans.
-    */
-  def nearDupGroupsIncrementalScoped[A](
-      bucketIndex: DataFrame,
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      k: Int = 16,
-      bands: Int = 4,
-      maxIters: Int = 25
-  )(run: (DataFrame, DataFrame) => A): A = {
-    val (labels, updated, edges) = incrementalPlans(
-      bucketIndex, newDocs, idCol, textCol, shingleN, k, bands, maxIters)
-    try run(labels, updated)
-    finally edges.unpersist(blocking = false)
-  }
-
-  /** Shared incremental-labeling body: returns (labels, updatedIndex, the
-    * PERSISTED batch edge frame) — callers decide the cache lifetime.
-    */
-  private def incrementalPlans(
-      bucketIndex: DataFrame,
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      k: Int,
-      bands: Int,
-      maxIters: Int
-  ): (DataFrame, DataFrame, DataFrame) = {
     val newEdges = bandEdges(newDocs, idCol, textCol, shingleN, k, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (labels, updated) =
-      nearDupGroupsIncrementalFromEdges(bucketIndex, newEdges, maxIters)
-    (labels, updated, newEdges)
+    val out = nearDupGroupsIncrementalFromEdges(bucketIndex, newEdges, maxIters)
+    newEdges.unpersist(blocking = false)
+    out
   }
 
   /** [[nearDupGroupsIncremental]] over the batch's PRECOMPUTED band edges
@@ -565,36 +522,13 @@ object MinHash {
     // cache-independent — but `freshIndex` is LAZY over the edges, and
     // materializing it after return re-pays the shingle+MinHash scan. A
     // caller that consumes the index (e.g. writes it back as the stored
-    // bucket index) should use [[reconcileIncrementalScoped]] instead.
+    // bucket index) should hold the edges itself and use
+    // [[reconcileFromEdges]].
     val edges = bandEdges(docs, idCol, textCol, shingleN, k, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = reconcileFromEdges(edges, staleLabels, maxIters)
     edges.unpersist(blocking = false)
     out
-  }
-
-  /** [[reconcileIncremental]] with the corpus edge cache held ALIVE until
-    * `run` returns — for callers that materialize `freshIndex` (the one
-    * output that is lazy over the edges; see the lifetime caveat above).
-    * Same shape as [[nearDupGroupsIncrementalScoped]].
-    */
-  def reconcileIncrementalScoped[A](
-      docs: DataFrame,
-      staleLabels: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      k: Int = 16,
-      bands: Int = 4,
-      maxIters: Int = 25
-  )(run: (DataFrame, DataFrame, DataFrame) => A): A = {
-    val edges = bandEdges(docs, idCol, textCol, shingleN, k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (labels, freshIndex, repairs) =
-        reconcileFromEdges(edges, staleLabels, maxIters)
-      run(labels, freshIndex, repairs)
-    } finally edges.unpersist(blocking = false)
   }
 
   /** [[reconcileIncremental]] over PRECOMPUTED band edges (id, band, bh).
@@ -698,36 +632,12 @@ object MinHash {
     (labels.filter(col("id") < BucketBase), rounds)
   }
 
-  /** 64-bit SimHash over tokens, xxhash64 bit-votes (rows-only check: no
-    * cross-engine hash parity). Built as one SQL expression so shift
-    * amounts can be lambda variables (the Scala `shiftleft` helper only
-    * accepts Int literals).
-    */
-  def simhash64(textExpr: String): Column = expr(
-    s"""aggregate(
-          sequence(0, 63),
-          0L,
-          (acc, j) -> acc + IF(
-            aggregate(
-              split(trim(lower($textExpr)), '\\\\s+'),
-              0L,
-              (a, t) -> a + IF((xxhash64(t) & shiftleft(1L, j)) != 0, 1L, -1L)
-            ) >= 0,
-            shiftleft(1L, j), 0L)
-        )"""
-  )
-
   /** Oracle-reproducible SimHash: polynomial token hashes (seed 0, same
     * family as [[TextFunctions.polyHash]]) voted bit-by-bit, computed by the
     * codegen'd [[graft.functions.SimHashPoly]] kernel — one JVM pass per
     * document. DuckDB reproduces it with list_transform/list_reduce over the
-    * same token hashes, so the query IS hash-match oracle-checked (unlike
-    * [[simhash64]], whose xxhash64 bit-votes have no cross-engine twin).
+    * same token hashes, so the query IS hash-match oracle-checked.
     */
   def simhashPoly(text: Column, bits: Int = 30): Column =
     graft.functions.exprs.simhashPoly(text, bits)
-
-  /** Hamming distance between two simhash fingerprints. */
-  def hammingDist(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 }

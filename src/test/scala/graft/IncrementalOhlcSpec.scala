@@ -46,16 +46,16 @@ class IncrementalOhlcSpec extends SparkSpec {
     val stored = IncrementalOhlc.partialBars(t.filter(!isBatch),
       Seq("event_type"), "ts", "value", "event_id", 1)
     val full = Ohlc.bars(t, Seq("event_type"), "ts", "value", "event_id", 1)
-    // scoped form: materialize inside `run`, and the pinned batch
-    // aggregation must be released when it returns
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val matched = IncrementalOhlc.applyBatch(stored, t.filter(isBatch),
-      Seq("event_type"), "ts", "value", "event_id", 1) { state =>
-      eq(IncrementalOhlc.finalBars(state), full)
-    }
-    assert(matched)
-    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(cachedBefore),
-      "applyBatch must not leak cached RDDs across calls")
+    val state = IncrementalOhlc.applyBatchPlan(stored, t.filter(isBatch),
+      Seq("event_type"), "ts", "value", "event_id", 1)
+    assert(eq(IncrementalOhlc.finalBars(state), full))
+    // bars the batch does not land in pass through unchanged, witnesses
+    // included: only touched bars are re-aggregated
+    val touched = Ohlc.bars(t.filter(isBatch), Seq("event_type"), "ts", "value",
+      "event_id", 1).select("event_type", "bar_ts")
+    val untouched = stored.join(touched, Seq("event_type", "bar_ts"), "left_anti")
+    assert(untouched.count() > 0)
+    assert(untouched.exceptAll(state).isEmpty)
     // an empty batch is the identity on state (lazy plan form)
     val idState = IncrementalOhlc.applyBatchPlan(stored, t.filter(lit(false)),
       Seq("event_type"), "ts", "value", "event_id", 1)

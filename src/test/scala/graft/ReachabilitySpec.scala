@@ -1,0 +1,129 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards against main code that nothing reaches: every top-level
+  * `object`/`class`/`trait` under `src/main/scala` must be named by
+  * another main file, or by its own file outside its own declaration,
+  * with comments stripped (scaladoc links and specs are not callers).
+  * Roots are not callees: an object that defines `main` (an entry point),
+  * a `SparkSessionExtensions => Unit` class (loaded by name from the
+  * `spark.sql.extensions` config string), and the library entry points in
+  * [[ReachabilitySpec.LibraryRoots]].
+  */
+class ReachabilitySpec extends AnyFunSuite {
+
+  private val mainDir = new File("src/main/scala")
+
+  private def scalaFiles(dir: File): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    }
+
+  /** Source with every comment blanked; string and char literals are kept
+    * (a name inside a config string is a real reference).
+    */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder
+    val n = src.length
+    var i = 0
+    def at(j: Int): Char = if (j < n) src.charAt(j) else '\u0000'
+    while (i < n) {
+      val c = src.charAt(i)
+      if (c == '/' && at(i + 1) == '/') {
+        while (i < n && src.charAt(i) != '\n') i += 1
+      } else if (c == '/' && at(i + 1) == '*') {
+        var depth = 1
+        i += 2
+        while (i < n && depth > 0) {
+          if (src.charAt(i) == '/' && at(i + 1) == '*') { depth += 1; i += 2 }
+          else if (src.charAt(i) == '*' && at(i + 1) == '/') { depth -= 1; i += 2 }
+          else i += 1
+        }
+        out.append(' ')
+      } else if (c == '"' && at(i + 1) == '"' && at(i + 2) == '"') {
+        val end = src.indexOf("\"\"\"", i + 3)
+        val stop = if (end < 0) n else end + 3
+        out.append(src.substring(i, stop))
+        i = stop
+      } else if (c == '"') {
+        var j = i + 1
+        while (j < n && src.charAt(j) != '"' && src.charAt(j) != '\n')
+          j += (if (src.charAt(j) == '\\') 2 else 1)
+        val stop = math.min(j + 1, n)
+        out.append(src.substring(i, stop))
+        i = stop
+      } else if (c == '\'' && at(i + 1) == '\\' && at(i + 3) == '\'') {
+        out.append(src.substring(i, i + 4)); i += 4
+      } else if (c == '\'' && at(i + 2) == '\'') {
+        out.append(src.substring(i, i + 3)); i += 3
+      } else {
+        out.append(c); i += 1
+      }
+    }
+    out.toString
+  }
+
+  private val TopLevel =
+    """(?m)^(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*(?:object|class|trait)\s+(\w+)""".r
+  // a declaration runs to the next line that starts a new top-level statement
+  private val TopLine = """(?m)^[^\s}]""".r
+  private val RootDecl =
+    raw"\bdef\s+main\s*\(|extends\s*\(\s*SparkSessionExtensions\s*=>\s*Unit\s*\)".r
+
+  /** Top-level types nothing else names, as "Name (path)", sorted. */
+  private def unreached(sources: Map[String, String]): Seq[String] = {
+    val stripped = sources.map { case (path, src) => path -> stripComments(src) }
+    stripped.toSeq.flatMap { case (path, src) =>
+      val tops = TopLine.findAllMatchIn(src).map(_.start).toSeq
+      val spans = TopLevel.findAllMatchIn(src).toSeq.map { m =>
+        m.group(1) -> (m.start, tops.find(_ > m.end).getOrElse(src.length))
+      }
+      spans.groupMap(_._1)(_._2).toSeq.filterNot { case (name, own) =>
+        val isRoot = ReachabilitySpec.LibraryRoots(name) ||
+          own.exists { case (a, b) => RootDecl.findFirstIn(src.substring(a, b)).isDefined }
+        // this file minus the type's own declarations, and every other file
+        val rest = own.sortBy(-_._1).foldLeft(src) { case (s, (a, b)) =>
+          s.substring(0, a) + s.substring(b)
+        }
+        val named = raw"\b$name\b".r
+        isRoot || named.findFirstIn(rest).isDefined ||
+          stripped.exists { case (other, text) =>
+            other != path && named.findFirstIn(text).isDefined
+          }
+      }.map { case (name, _) => s"$name ($path)" }
+    }.sorted
+  }
+
+  test("stripComments drops line, block and nested comments but keeps literals") {
+    val src = "a // Foo\nb /* Bar /* Baz */ Qux */ c \"// Keep\" '\"' d"
+    val s = stripComments(src)
+    assert(!s.contains("Foo") && !s.contains("Bar") && !s.contains("Qux"))
+    assert(s.contains("\"// Keep\"") && s.contains("d"))
+  }
+
+  test("every top-level main type is named by another main file, an entry point or a config string") {
+    assert(mainDir.isDirectory, s"run from the project root: ${mainDir.getAbsolutePath}")
+    val sources = scalaFiles(mainDir).map { f =>
+      mainDir.toPath.relativize(f.toPath).toString ->
+        new String(Files.readAllBytes(f.toPath), "UTF-8")
+    }.toMap
+    val orphans = unreached(sources)
+    assert(orphans.isEmpty,
+      s"top-level main types that no other main file names:\n  ${orphans.mkString("\n  ")}")
+  }
+}
+
+object ReachabilitySpec {
+  /** Library entry points that users call directly and no query,
+    * `Processor` method or `main` reaches: the remote-archive fetch that
+    * fills the spool `Processor.updateData` ingests, and small-file
+    * compaction of a table directory.
+    */
+  val LibraryRoots: Set[String] = Set("TickFetcher", "Compactor")
+}

@@ -16,7 +16,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      // AQE off in TESTS ONLY: plan-shape specs (PlanSpec, BucketingSpec)
+      // AQE off in TESTS ONLY: plan-shape specs (PlanSpec, AsofJoinSpec)
       // assert on Exchange/BroadcastHashJoin/WholeStageCodegen nodes, which
       // AQE hides inside leaf QueryStageExec wrappers. Bench/Verify keep
       // AQE on (production posture).

@@ -87,68 +87,6 @@ class StreamingDedupSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("foreachBatch incremental dedup: later batches adopt earlier batches' groups via the persisted index") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("incdedup").toString
-    def doc(seed: Int, extra: String = ""): String =
-      (0 until 60).map(i => s"t${seed}_$i").mkString(" ") + extra
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF.toDF("doc_id", "text").writeStream
-      .foreachBatch(graft.streaming.StreamingDedup.incrementalDedupBatch(
-        s"$base/index", s"$base/labels", "doc_id", "text"))
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    try {
-      // batch 0: family A (1, 2) and a singleton
-      mem.addData((1L, doc(1)), (2L, doc(1, " x")), (10L, doc(77)))
-      q.processAllAvailable()
-      // batch 1: 20 joins family A; 21/22 form a fresh family
-      mem.addData((20L, doc(1, " y")), (21L, doc(500)), (22L, doc(500, " z")))
-      q.processAllAvailable()
-      val labels = spark.read.parquet(s"$base/labels")
-        .select("id", "group_rep").as[(Long, Long)].collect().toMap
-      assert(labels(1L) == 1L && labels(2L) == 1L && labels(10L) == 10L)
-      assert(labels(20L) == 1L, s"cross-batch adoption failed: $labels")
-      assert(labels(21L) == 21L && labels(22L) == 21L, labels.toString)
-      // index advanced once per batch and covers all reps
-      val reps = spark.read.parquet(s"$base/index/v=1")
-        .select("group_rep").distinct().as[Long].collect().toSet
-      assert(reps == Set(1L, 10L, 21L), reps.toString)
-    } finally q.stop()
-  }
-
-  test("foreachBatch auto-compaction bounds index versions while labeling stays correct") {
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("incdedupc").toString
-    def doc(seed: Int, extra: String = ""): String =
-      (0 until 60).map(i => s"t${seed}_$i").mkString(" ") + extra
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF.toDF("doc_id", "text").writeStream
-      .foreachBatch(graft.streaming.StreamingDedup.incrementalDedupBatch(
-        s"$base/index", s"$base/labels", "doc_id", "text",
-        keepVersions = Some(2)))
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    try {
-      mem.addData((1L, doc(1)), (10L, doc(77))); q.processAllAvailable()
-      mem.addData((2L, doc(1, " x")));           q.processAllAvailable()
-      mem.addData((3L, doc(1, " y")));           q.processAllAvailable()
-      mem.addData((4L, doc(500)));               q.processAllAvailable()
-      // cross-batch adoption intact through compacted history (batch 2's
-      // doc 3 adopts batch 0's family via an index version that batch 3's
-      // compaction later prunes)
-      val labels = spark.read.parquet(s"$base/labels")
-        .select("id", "group_rep").as[(Long, Long)].collect().toMap
-      assert(labels == Map(1L -> 1L, 10L -> 10L, 2L -> 1L, 3L -> 1L, 4L -> 4L),
-        labels.toString)
-      // only the newest 2 complete versions survive (v=2 kept for replay,
-      // v=3 newest; 0 and 1 pruned)
-      val versions = new java.io.File(s"$base/index").listFiles()
-        .map(_.getName).filter(_.startsWith("v=")).sorted.toSeq
-      assert(versions == Seq("v=2", "v=3"), versions.toString)
-    } finally q.stop()
-  }
-
   test("reconcileIncremental repairs stale per-doc labels and refreshes the index") {
     import graft.text.MinHash
     def doc(seed: Int, extra: String = ""): String =
@@ -175,28 +113,6 @@ class StreamingDedupSpec extends SparkSpec {
     assert(reps == Set(1L, 10L), reps.toString)
   }
 
-  test("compactIndex prunes old and partial versions, keeps in-flight and replay horizon") {
-    val base = java.nio.file.Files.createTempDirectory("idxcompact").toString
-    val idx = s"$base/index"
-    // complete versions 0, 1, 3 (parquet writes commit _SUCCESS)
-    Seq(0, 1, 3).foreach { v =>
-      Seq((1L, 0, 42L)).toDF("group_rep", "band", "bh")
-        .write.parquet(s"$idx/v=$v")
-    }
-    // v=2: crash leftover (no _SUCCESS); v=4: in-flight newest (no _SUCCESS)
-    Seq(2, 4).foreach { v =>
-      val d = new java.io.File(s"$idx/v=$v")
-      d.mkdirs()
-      java.nio.file.Files.writeString(d.toPath.resolve("part-partial.parquet"), "x")
-    }
-    // latestVersion must skip incomplete 4 and pick 3
-    assert(graft.streaming.StreamingDedup.latestVersion(spark, idx).contains(3L))
-    val deleted = graft.streaming.StreamingDedup.compactIndex(spark, idx, keep = 2)
-    assert(deleted == Seq(0L, 2L), deleted.toString)
-    val left = new java.io.File(idx).listFiles().map(_.getName).toSet
-    assert(left == Set("v=1", "v=3", "v=4"), left.toString)
-  }
-
   test("stream-static join enriches each micro-batch from a broadcast dim") {
     implicit val sqlCtx = spark.sqlContext
     val dim = Seq((1L, "gold"), (2L, "silver")).toDF("id", "tier")
@@ -214,185 +130,5 @@ class StreamingDedupSpec extends SparkSpec {
       assert(rows(2L).contains("silver"))
       assert(rows(9L).isEmpty) // left join keeps unmatched stream rows
     } finally q.stop()
-  }
-
-  test("dedup batch replay after its index version committed is byte-idempotent") {
-    // crash-window replay (v=batchId committed, checkpoint not): the
-    // updater must label against the version its first attempt read —
-    // reading its own output would self-overwrite the directory mid-scan
-    def doc(seed: Int, extra: String = ""): String =
-      (0 until 60).map(i => s"t${seed}_$i").mkString(" ") + extra
-    val base = java.nio.file.Files.createTempDirectory("dedup_replay").toString
-    val update = graft.streaming.StreamingDedup.incrementalDedupBatch(
-      s"$base/index", s"$base/labels", "doc_id", "text")
-    val b0 = Seq((1L, doc(1)), (10L, doc(77))).toDF("doc_id", "text")
-    val b1 = Seq((20L, doc(1, " y")), (21L, doc(500))).toDF("doc_id", "text")
-    update(b0, 0L); update(b1, 1L)
-    def state() = (
-      spark.read.parquet(s"$base/labels").select("id", "group_rep")
-        .as[(Long, Long)].collect().toMap,
-      spark.read.parquet(s"$base/index/v=1").orderBy("group_rep", "band", "bh")
-        .collect().map(_.toString).toSeq)
-    val before = state()
-    update(b1, 1L) // replay
-    assert(state() === before)
-    assert(before._1 === Map(1L -> 1L, 10L -> 10L, 20L -> 1L, 21L -> 21L))
-  }
-
-  test("versioned updaters reject keepVersions < 2 at wiring time") {
-    // replay reads v=batchId-1: keeping one version lets compaction delete
-    // the only state a crash-replayed batch can read — fail before the
-    // stream starts, not after N successful batches
-    intercept[IllegalArgumentException] {
-      graft.streaming.StreamingDedup.incrementalDedupBatch(
-        "/tmp/x", "/tmp/y", "doc_id", "text", keepVersions = Some(1))
-    }
-    intercept[IllegalArgumentException] {
-      graft.streaming.StreamingSketches.cmsUpdateBatch(
-        "/tmp/x", "tok", 4, 64, keepVersions = Some(1))
-    }
-    intercept[IllegalArgumentException] {
-      graft.streaming.StreamingSketches.hllUpdateBatch(
-        "/tmp/x", "tok", 64, keepVersions = Some(1))
-    }
-    intercept[IllegalArgumentException] {
-      graft.streaming.StreamingIncrementalOhlc.updateBatch(
-        "/tmp/x", Seq("k"), "ts", "v", "id", keepVersions = Some(1))
-    }
-  }
-
-  test("property: latestVersion/compactIndex invariants hold over random commit/crash/replay interleavings") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // Model: a batch either commits (v=N with _SUCCESS) or crashes
-    // mid-write (v=N without _SUCCESS) and is then replayed; compaction
-    // with keep>=2 runs at random points. The invariant under test is the
-    // versioned-state contract every foreachBatch updater relies on:
-    //   (a) latestVersion(below=N) = newest COMPLETE version < N — a
-    //       partial v=N never changes what batch N reads (replay reads the
-    //       same input its first attempt used);
-    //   (b) after compaction the replay horizon survives: the newest
-    //       `keep` complete versions and anything newer stay on disk.
-    // Only directory + _SUCCESS structure matters, so the property runs on
-    // the bare filesystem — no Spark jobs.
-    sealed trait Op
-    case class Batch(crashFirst: Boolean) extends Op
-    case class Compact(keep: Int) extends Op
-    val opGen: Gen[Op] = Gen.frequency(
-      4 -> Gen.oneOf(true, false).map(Batch(_)),
-      1 -> Gen.choose(2, 4).map(Compact(_)))
-    val prop = Prop.forAll(Gen.listOfN(12, opGen)) { ops =>
-      val dir = java.nio.file.Files.createTempDirectory("lv_prop").toString
-      def mkVersion(v: Long, complete: Boolean): Unit = {
-        val d = new java.io.File(s"$dir/v=$v"); d.mkdirs()
-        java.nio.file.Files.writeString(d.toPath.resolve("part-0.parquet"), "x")
-        if (complete)
-          java.nio.file.Files.writeString(d.toPath.resolve("_SUCCESS"), "")
-      }
-      def lv(below: Long = Long.MaxValue) =
-        graft.streaming.StreamingDedup.latestVersion(spark, dir, below)
-      var complete = Set.empty[Long] // reference model
-      var nextBatch = 0L
-      var ok = true
-      ops.foreach {
-        case Batch(crashFirst) =>
-          val v = nextBatch
-          val expectedInput = complete.filter(_ < v).maxOption
-          if (crashFirst) {
-            mkVersion(v, complete = false) // crash mid-write
-            // replay must still read the first attempt's input version
-            ok &&= lv(below = v) == expectedInput
-          }
-          ok &&= lv(below = v) == expectedInput
-          mkVersion(v, complete = true) // (re)commit
-          complete += v
-          ok &&= lv() == Some(v)
-          nextBatch = v + 1
-        case Compact(keep) =>
-          graft.streaming.StreamingDedup.compactIndex(spark, dir, keep)
-          if (complete.nonEmpty) {
-            val kept = complete.toSeq.sorted.takeRight(keep).toSet
-            complete = kept
-            // model and disk agree on the surviving complete versions
-            val onDisk = new java.io.File(dir).listFiles()
-              .filter(d => new java.io.File(d, "_SUCCESS").exists())
-              .map(_.getName.stripPrefix("v=").toLong).toSet
-            ok &&= onDisk == kept
-          }
-          ok &&= lv() == complete.maxOption
-      }
-      ok
-    }
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
-    assert(res.passed, res.status.toString)
-  }
-
-  test("reconcile replaces the newest version in place so the NEXT batch sees it") {
-    // the resumed stream's next batch id is latest+1 and reads versions
-    // strictly below itself: a reconciled index appended at latest+1
-    // would be invisible to that batch and then clobbered by it —
-    // reconcile must overwrite the newest complete version instead
-    def doc(seed: Int, extra: String = ""): String =
-      (0 until 60).map(i => s"t${seed}_$i").mkString(" ") + extra
-    val base = java.nio.file.Files.createTempDirectory("reconcile_inplace").toString
-    val update = graft.streaming.StreamingDedup.incrementalDedupBatch(
-      s"$base/index", s"$base/labels", "doc_id", "text")
-    // batch 0 stores the family under rep 2; batch 1 brings lower id 1 —
-    // index merges under 1, but 2's stored label goes stale
-    update(Seq((2L, doc(1, " x")), (10L, doc(77))).toDF("doc_id", "text"), 0L)
-    update(Seq((1L, doc(1))).toDF("doc_id", "text"), 1L)
-    val corpus = Seq((2L, doc(1, " x")), (10L, doc(77)), (1L, doc(1)))
-      .toDF("doc_id", "text")
-    val stale = spark.read.parquet(s"$base/labels").select("id", "group_rep")
-    val repairs = graft.streaming.StreamingDedup.reconcile(
-      corpus, stale, s"$base/index", "doc_id", "text")
-    assert(repairs.select("id", "old_rep", "new_rep")
-      .as[(Long, Long, Long)].collect().toSeq === Seq((2L, 2L, 1L)))
-    // no NEW version appended: v=1 was replaced in place
-    assert(graft.streaming.StreamingDedup.latestVersion(spark, s"$base/index")
-      .contains(1L))
-    // the resumed stream's batch 2 reads the reconciled index (below=2 → v=1)
-    update(Seq((30L, doc(1, " zz"))).toDF("doc_id", "text"), 2L)
-    val labels = spark.read.parquet(s"$base/labels").select("id", "group_rep")
-      .as[(Long, Long)].collect().toMap
-    assert(labels(30L) === 1L, s"batch after reconcile missed the fresh index: $labels")
-    // rename-first swap: neither temp dir survives a successful reconcile,
-    // and a stale _reconcile_old left by a prior crash is cleared by the
-    // NEXT reconcile rather than failing the aside-rename
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/index/_reconcile_tmp")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/index/_reconcile_old")))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/index/_reconcile_old"))
-    val corpus2 = corpus.union(Seq((30L, doc(1, " zz"))).toDF("doc_id", "text"))
-    val stale2 = spark.read.parquet(s"$base/labels").select("id", "group_rep")
-    graft.streaming.StreamingDedup.reconcile(
-      corpus2, stale2, s"$base/index", "doc_id", "text")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/index/_reconcile_old")))
-    // batch 2 wrote v=2; the second reconcile replaced it in place
-    assert(graft.streaming.StreamingDedup.latestVersion(spark, s"$base/index")
-      .contains(2L))
-  }
-
-  test("non-numeric v=* siblings are ignored, not a NumberFormatException crash") {
-    // pre-fix: latestVersion/compactIndex mapped stripPrefix("v=").toLong
-    // over every v=* directory, so external tooling's leftovers
-    // (v=3.compact-old, v=backup) crashed every subsequent batch and read
-    val base = java.nio.file.Files.createTempDirectory("graft_vjunk").toString
-    val idx = s"$base/index"
-    def mk(name: String, success: Boolean): Unit = {
-      val d = new java.io.File(s"$idx/$name"); d.mkdirs()
-      if (success)
-        java.nio.file.Files.write(d.toPath.resolve("_SUCCESS"), Array.empty[Byte])
-    }
-    mk("v=3", success = true)
-    mk("v=3.compact-old", success = true) // non-numeric suffix
-    mk("v=backup", success = true)        // non-numeric entirely
-    mk("v=99999999999999999999", success = true) // > Long.MaxValue digits
-    assert(graft.streaming.StreamingDedup.latestVersion(spark, idx)
-      .contains(3L))
-    // compactIndex walks the same listing and must not throw either
-    assert(graft.streaming.StreamingDedup.compactIndex(spark, idx, keep = 2)
-      === Nil)
   }
 }

@@ -398,7 +398,7 @@ class TextVectorSpec extends SparkSpec {
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappax"),
       (3L, "unrelated completely different text with other words here now")
     ).toDF("doc_id", "text")
-    val sh = docs.select(col("doc_id"), MinHash.simhash64("text").as("h"))
+    val sh = docs.select(col("doc_id"), MinHash.simhashPoly(col("text"), 30).as("h"))
     val hs = sh.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(hs(1L), hs(2L)) < ham(hs(1L), hs(3L)))

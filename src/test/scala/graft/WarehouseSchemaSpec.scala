@@ -14,7 +14,8 @@ import graft.ohlc.OhlcGenerator
 /** The warehouse tables are read through the schemas their writers
   * declare: the declared schema is exactly what Spark infers from the
   * written files, and planning a tick or OHLC read therefore launches no
-  * Spark job (no footer is opened to re-infer it).
+  * Spark job (no footer is opened to re-infer it). A paged read with a
+  * page size below 1 is rejected by name before any job, too.
   */
 class WarehouseSchemaSpec extends SparkSpec {
 
@@ -98,5 +99,23 @@ class WarehouseSchemaSpec extends SparkSpec {
     assert(bars.length === 27)
     assert(typed(bars) === OhlcGenerator.Columns.map(c =>
       c -> OhlcGenerator.TableSchema(c).dataType))
+  }
+
+  test("a page size below 1 is rejected by name before any Spark job runs") {
+    val (p, _) = freshWarehouse()
+    for (size <- Seq(0, -1)) {
+      val calls: Seq[(String, () => Any)] = Seq(
+        "queryTicksPage" -> (() => p.queryTicksPage("EURUSD", pageSize = size)),
+        "queryTicksBatches" -> (() => p.queryTicksBatches("EURUSD", pageSize = size)),
+        "queryOhlcPage" -> (() => p.queryOhlcPage("EURUSD", cursor = None, pageSize = size)),
+        "queryOhlcBatches" -> (() => p.queryOhlcBatches("EURUSD", pageSize = size)))
+      calls.foreach { case (name, call) =>
+        val jobs = jobsDuring {
+          val e = intercept[IllegalArgumentException](call())
+          assert(e.getMessage.contains("pageSize"), s"$name($size): ${e.getMessage}")
+        }
+        assert(jobs === 0, s"$name($size) ran $jobs Spark jobs before it was rejected")
+      }
+    }
   }
 }

@@ -1558,9 +1558,7 @@ object SparkEntry {
 
     // Z-order as the PRODUCTION layout (r17): the same-shaped events slice
     // exported through RangeWriter.writeZOrdered — Morton-clustered files
-    // whose 2-column manifest the WRITER itself ships (with the
-    // zorder_cols/zorder_bits layout witness Compactor re-clusters by) —
-    // then range-scanned on the SECOND dimension alone, the shape a
+    // whose 2-column manifest the WRITER itself ships — then range-scanned on the SECOND dimension alone, the shape a
     // lexicographic (x, y) sort cannot prune at all. Exact filter
     // re-applied over survivors, so the result is byte-identical to the
     // oracle's plain filtered scan.
@@ -2631,8 +2629,8 @@ object SparkEntry {
     }),
 
     // the AUTO-dispatched overlap join: bucket width MEASURED off the
-    // longest interval (two narrow max-agg probes, Probes
-    // .maxIntervalSeconds) instead of hand-picked — width is purely
+    // interval lengths (two narrow max/p99 probes, Probes
+    // .intervalLengthStats) instead of hand-picked — width is purely
     // physical, so this hash-matches the same plain non-equi oracle
     "q_interval_auto" -> ((s, dir) => {
       val e = ev(s, dir)

@@ -23,8 +23,9 @@ import java.io.File
   * Fixtures are keyed on (name, source dir): build into a unique `.build`
   * sibling first, atomically rename into place, then drop a `_STAGED`
   * marker — a crashed/partial build is never mistaken for a finished one
-  * (the ScaleProbe skip-if-exists lesson: key the guard on a marker the
-  * build writes LAST, not on the directory existing).
+  * (key the guard on a marker the build writes LAST, not on the
+  * directory existing: a skip-if-exists guard wedges on a crashed run's
+  * leftover).
   */
 object Stage {
 

@@ -298,39 +298,8 @@ final class Processor(spark: SparkSession, warehouse: String) {
     val p = validatePair(pair)
     val minutes = validateTimeframe(timeframe)
     validateRange(start, end)
-    // zone-map pruned read of the gold table: regenerate refreshes each
-    // rewritten month's _manifest (keyed on timestamp), so a date-ranged
-    // bar query plans only the files whose range can intersect — the same
-    // PrunedScan path as readTicksPruned; any unusable sidecar/listing
-    // falls back to the plain partitioned read below
-    import graft.storage.PrunedScan
-    val prunedFiles = PrunedScan.monthPartitionedFiles(
-      spark.sessionState.newHadoopConf(),
-      new org.apache.hadoop.fs.Path(s"$warehouse/ohlc_1m"), "timestamp",
-      Some(p), start.map(PrunedScan.monthOfLo(spark, _)),
-      end.map(PrunedScan.monthOfHi(spark, _)),
-      PrunedScan.sessionInstant(spark, start.getOrElse("1900-01-01")),
-      PrunedScan.sessionInstant(spark,
-        end.map(_ + " 23:59:59").getOrElse("9999-01-01")))
-    def read(files: Seq[org.apache.hadoop.fs.Path]) = PrunedScan.readTable(spark,
-      s"$warehouse/ohlc_1m", OhlcGenerator.TableSchema, files)
-      .filter(col("instrument") === p)
-    var df = prunedFiles match {
-      case Some(paths) if paths.nonEmpty => read(paths)
-      // provably empty: keep the exact plan, zero rows
-      case Some(Nil) => read(Nil).filter(lit(false))
-      case _ => read(Nil)
-    }
-    start.foreach(s => df = df.filter(col("timestamp") >= Bound.timestamp(s) &&
-      col("yyyymm") >= date_format(lit(s).cast("timestamp"), "yyyyMM")))
-    end.foreach(e => df = df.filter(
-      col("timestamp") <= Bound.timestamp(e + " 23:59:59") &&
-        col("yyyymm") <= date_format(lit(e).cast("timestamp"), "yyyyMM")))
-    // partition columns come back at the end of the schema; restore the
-    // reference's 27-column order (clickhouse_manager.py:196-224)
-    val out =
-      if (minutes == 1) df.select(OhlcGenerator.Columns.map(col): _*)
-      else resampleOhlc(df, minutes)
+    val bars = ohlcFrom(p, start, end)(None)
+    val out = if (minutes == 1) bars else resampleOhlc(bars, minutes)
     val ordered = out.orderBy("timestamp")
     limit.map(ordered.limit).getOrElse(ordered)
   }
@@ -588,34 +557,33 @@ final class Processor(spark: SparkSession, warehouse: String) {
       ticksFrom(p, variant, start, end), "timestamp", Nil, pageSize, maxBatches)
   }
 
-  /** ohlc_1m scan for keyset pagination: with a cursor in hand, month
-    * partitions strictly before the cursor's month are dropped BY NAME on
-    * the driver and each surviving month is zone-mapped through its
-    * `_manifest` sidecar, so a page at the tail of a deep table lists and
-    * plans only the tail months' files — re-scan-per-page is exactly what
-    * the reference's keyset pagination exists to avoid
-    * (`clickhouse_query_engine.py:390-423`), and the ticks path already
-    * prunes this way. Result-identical to the plain partitioned read: the
-    * caller re-applies the strict `timestamp > cursor` filter and any
-    * listing/sidecar problem falls back to the full read (slower, never
-    * wrong). The cursor instant maps to its yyyymm label in the SESSION
-    * zone — the same zone `date_format(..., "yyyyMM")` used at write time;
-    * label order is monotone in event time under a fixed offset, and
-    * zones with transitions get a one-day slack on the cut (see
-    * [[graft.storage.PrunedScan.monthOfLo]]).
-    */
-  private[graft] def readOhlc1mFrom(p: String, after: Option[Timestamp]): DataFrame =
-    ohlcFrom(p, None, None)(after)
-
-  /** Cursor-aware ohlc_1m scan factory with the inclusive date bounds the
-    * ticks path has (r17 verdict item 2 — reference `query_ohlc` is
-    * range-scoped, `clickhouse_query_engine.py:196-201`): exactly
-    * [[ticksFrom]]'s composition — the cursor TIGHTENS (never widens) the
-    * pruned lower bound, the fixed-format wall-clock strings order
-    * lexicographically so `max` is exact, and the strict `> cursor` the
-    * pager re-applies makes the read's inclusive `>=` a superset by
-    * construction. Month cuts carry the transition-zone one-day slack
+  /** The one pruned ohlc_1m range read, shared by [[queryOhlc]], the pager
+    * and the batch iterator: bars of `p` in the inclusive `start`..`end`
+    * date bounds, in the reference's 27-column order
+    * (clickhouse_manager.py:196-224). Regenerate refreshes each rewritten
+    * month's `_manifest` (keyed on timestamp), so month partitions outside
+    * the range are dropped BY NAME on the driver and each surviving month
+    * is zone-mapped through its sidecar — the same
+    * [[graft.storage.PrunedScan]] path as the tick reads.
+    *
+    * With a cursor in hand (keyset pagination), month partitions strictly
+    * before the cursor's month are dropped too, so a page at the tail of a
+    * deep table lists and plans only the tail months' files — re-scan-per-
+    * page is exactly what the reference's keyset pagination exists to
+    * avoid (`clickhouse_query_engine.py:390-423`). Composition as in
+    * [[ticksFrom]]: the cursor TIGHTENS (never widens) the pruned lower
+    * bound, the fixed-format wall-clock strings order lexicographically so
+    * `max` is exact, and the strict `> cursor` the pager re-applies makes
+    * the read's inclusive `>=` a superset by construction. The cursor
+    * instant maps to its yyyymm label in the SESSION zone — the same zone
+    * `date_format(..., "yyyyMM")` used at write time; zones with
+    * transitions get a one-day slack on the cut
     * ([[graft.storage.PrunedScan.monthOfLo]]).
+    *
+    * Result-identical to the plain partitioned read: the caller's date
+    * bounds and their `yyyymm` partition predicates are applied on every
+    * branch, so a listing/sidecar problem falls back to a read that still
+    * prunes months (slower, never wrong).
     */
   private[graft] def ohlcFrom(
       p: String,
@@ -630,16 +598,23 @@ final class Processor(spark: SparkSession, warehouse: String) {
       // the cursor's own bound is NOT applied here (the pager re-applies
       // the strict `>` — under an ambiguous fall-back wall clock the
       // inclusive cast could land an hour late and lose rows); the date
-      // bounds are the caller's inclusive contract
-      val s1 = start.fold(df)(s =>
-        df.filter(col("timestamp") >= Bound.timestamp(s + " 00:00:00")))
-      end.fold(s1)(e =>
-        s1.filter(col("timestamp") <= Bound.timestamp(e + " 23:59:59.999999")))
+      // bounds are the caller's inclusive contract. The timestamp bounds
+      // are bound literals (pushed to Parquet, read by the generated
+      // filter at run time); the yyyymm partition predicates prune on the
+      // driver and never reach generated code
+      val s1 = start.fold(df)(s => df.filter(
+        col("timestamp") >= Bound.timestamp(s + " 00:00:00") &&
+          col("yyyymm") >= date_format(lit(s).cast("timestamp"), "yyyyMM")))
+      end.fold(s1)(e => s1.filter(
+        col("timestamp") <= Bound.timestamp(e + " 23:59:59.999999") &&
+          col("yyyymm") <= date_format(lit(e).cast("timestamp"), "yyyyMM")))
     }
+    // partition columns come back at the end of the schema; restore the
+    // reference's 27-column order
     def read(files: Seq[Path]) = exact(
       PrunedScan.readTable(spark, root, OhlcGenerator.TableSchema, files)
-        .filter(col("instrument") === p)
-        .select(OhlcGenerator.Columns.map(col): _*))
+        .filter(col("instrument") === p))
+      .select(OhlcGenerator.Columns.map(col): _*)
     def plain() = read(Nil)
     if (lo.isEmpty && hi.isEmpty) plain()
     else PrunedScan.monthPartitionedFiles(
@@ -656,7 +631,7 @@ final class Processor(spark: SparkSession, warehouse: String) {
 
   /** Keyset pagination over OHLC (`query_ohlc_paginated`,
     * `clickhouse_query_engine.py:390-472`). Each page re-plans from its
-    * own cursor through [[readOhlc1mFrom]] — already-paged months are
+    * own cursor through [[ohlcFrom]] — already-paged months are
     * never re-listed.
     */
   def queryOhlcPage(

@@ -115,16 +115,6 @@ object TradingCalendar {
     rows.toDF("date", "exchange", "holiday_name")
   }
 
-  /** The `exchange_sessions` lookup table (`clickhouse_manager.py:231-251`). */
-  def exchangeSessionsDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    ExchangeRegistry.all
-      .map(e => (e.key, e.mic, e.name, e.currency, e.timezone, e.country,
-        e.openHour, e.openMinute, e.closeHour, e.closeMinute))
-      .toDF("exchange", "mic", "name", "currency", "timezone", "country",
-        "open_hour", "open_minute", "close_hour", "close_minute")
-  }
-
   /** Enrich minute bars with the 13 flag columns of the reference schema:
     * is_us/uk/major_holiday + one is_{exchange}_session per registry entry
     * (`clickhouse_manager.py:207-223`). `tsCol` must be minute-truncated

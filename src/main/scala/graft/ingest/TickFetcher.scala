@@ -12,10 +12,10 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   *
   * Deliberately DRIVER-side, like the reference: archives land in the
   * spool, and the distributed part of ingestion starts at
-  * [[TickIngest.readZips]], which decompresses on executors. One monthly
-  * archive is tens of MB — the fetch is I/O-bound on the remote end, not a
-  * cluster-scale concern; what must scale (parse, dedup, partitioned
-  * write) already does.
+  * [[TickIngest.readZipsWithBadRecords]], which decompresses on executors.
+  * One monthly archive is tens of MB — the fetch is I/O-bound on the
+  * remote end, not a cluster-scale concern; what must scale (parse,
+  * dedup, partitioned write) already does.
   *
   * The base URL is pluggable so the engine stays runnable offline: tests
   * exercise the full fetch path through `file://` fixture URLs (the sandbox

@@ -44,13 +44,8 @@ object TickIngest {
     StructField("yyyymm", IntegerType)))
 
   /** Read tick CSVs (columns Timestamp,Bid,Ask, header row, µs timestamps
-    * treated as UTC) into the normalized (timestamp, bid, ask) frame.
-    * Damaged rows are skipped — [[readCsvWithBadRecords]] counts them.
-    */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    readCsvWithBadRecords(spark, path).ticks
-
-  /** [[readCsv]] plus malformed-input accounting — the file-source twin of
+    * treated as UTC) into the normalized (timestamp, bid, ask) frame, with
+    * malformed-input accounting — the file-source twin of
     * [[readZipsWithBadRecords]] (same damage classes minus ZIP members;
     * per-file header rows are handled by the csv source itself). Without
     * the guard, a truncated or garbled row PERMISSIVE-parses to nulls and
@@ -171,8 +166,9 @@ object TickIngest {
     * replacement, which then fails the typed parse) each become a row of
     * `badRecords` instead of a job failure.
     *
-    * `ticks` is the same normalized frame as [[readCsv]], restricted to
-    * fully-parsed rows (all three fields non-null). `badRecords` has one
+    * `ticks` is the same normalized frame as [[readCsvWithBadRecords]]
+    * gives, restricted to fully-parsed rows (all three fields non-null).
+    * `badRecords` has one
     * `raw` string column: the offending line verbatim for parser
     * rejections (null when only a field-level null slipped through), or
     * [[CorruptMemberMarker]] once per undecodable ZIP member. Both frames
@@ -241,13 +237,6 @@ object TickIngest {
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
       .csv(dataLines))
   }
-
-  /** Read every `*.csv` entry of every ZIP under `path`, decompressing on
-    * executors. Returns the same normalized frame as [[readCsv]]; damaged
-    * input is skipped — use [[readZipsWithBadRecords]] to count it.
-    */
-  def readZips(spark: SparkSession, path: String): DataFrame =
-    readZipsWithBadRecords(spark, path).ticks
 
   /** Write ticks into the warehouse table for (instrument, variant) with
     * ReplacingMergeTree-equivalent dedup *at write time* on

@@ -113,9 +113,8 @@ object OhlcGenerator {
     *      100 TB-warehouse file counts this replaces O(files) footer
     *      round-trips (each a driver-side open, painful on object stores).
     *      Ingest refreshes the sidecar of every month it touches
-    *      ([[graft.ingest.TickIngest.writeTicks]]) and the compactor
-    *      rebuilds it after rewrites, so on the normal lifecycle this
-    *      tier always answers;
+    *      ([[graft.ingest.TickIngest.writeTicks]]), so on the normal
+    *      lifecycle this tier always answers;
     *   2. otherwise one parquet FOOTER read per file (footer row counts
     *      are exact, written by the committing task).
     *
@@ -203,19 +202,6 @@ object OhlcGenerator {
         .atStartOfDay(java.time.ZoneOffset.UTC)
       java.time.Duration.between(lo, hi).getSeconds
     }
-
-  /** Sum of [[footerMonthCounts]] — the exact stored row count for one
-    * (variant, instrument, months-subset) without touching data pages.
-    */
-  private[graft] def footerTickCount(
-      spark: SparkSession,
-      warehouse: String,
-      variant: String,
-      instrument: String,
-      months: Seq[String]
-  ): Long =
-    footerMonthCounts(spark, warehouse, variant, instrument, months)
-      .map(_._2).sum
 
   /** Regenerate OHLC months into the warehouse. `months` empty = full
     * regeneration; non-empty = only those yyyymm partitions are rebuilt

@@ -233,44 +233,6 @@ object AsofJoin {
     */
   val HotKeyCrossover: Long = 1000000L
 
-  /** Decide which as-of form to run for the given shape: "bucketed" iff the
-    * hottest join key carries more rows than `threshold` (left and right
-    * combined — both sides of the union land in that key's single window
-    * partition and serialize together), else "plain".
-    *
-    * Cost of deciding, two tiers: a QUICK REJECT first — if the two sides
-    * together hold ≤ threshold rows, no key can possibly exceed it. That
-    * total is counted with a per-partition CAP (each partition stops
-    * iterating past threshold+1 rows) over a zero-column projection: one
-    * narrow job, NO shuffle — deliberately not `LIMIT n + count`, whose
-    * physical plan (LocalLimit → single-partition exchange → GlobalLimit)
-    * would move up to splits×threshold rows through one task at cluster
-    * scale. A capped sum understates the true total only when some
-    * partition hit its cap — and then the total already exceeds the
-    * threshold, so the ≤-threshold test stays exact. Only when the probe
-    * saturates does the per-key tier run — a count agg over a seeded
-    * SAMPLE sized to [[Probes.SampleRowsTarget]] rows per threshold-hot
-    * key (exact below that target), so the decision's shuffle stays
-    * negligible next to the join it fronts at any input size; both forms
-    * are exact, so estimation error near the crossover only flips a
-    * choice between two equal-cost plans. Exposed separately from
-    * [[leftAsofAuto]] so the dispatch rule itself is spec-pinnable.
-    */
-  def chooseAsofForm(
-      left: DataFrame,
-      right: DataFrame,
-      on: Seq[String],
-      threshold: Long = HotKeyCrossover
-  ): String = {
-    val keys = left.select(on.map(col): _*)
-      .unionByName(right.select(on.map(col): _*))
-    if (Probes.cappedCount(keys, threshold) <= threshold) return "plain"
-    // sampled once threshold > Probes.SampleRowsTarget: the decision must
-    // cost less than either plan it picks (see hottestKeyCount's doc)
-    if (Probes.hottestKeyCount(keys, on, threshold) > threshold) "bucketed"
-    else "plain"
-  }
-
   /** A dispatch verdict with its physical parameters: which form, and —
     * when bucketed — how wide the (key, time-bucket) buckets are.
     */
@@ -360,16 +322,36 @@ object AsofJoin {
     }
   }
 
-  /** [[chooseAsofForm]] extended with bucket-width sizing: same two-tier
-    * probe discipline (capped no-shuffle quick reject, then ONE sampled
-    * per-key agg — the span AND peak-window stats ride that same pass, so
-    * the probe-job count is unchanged), but a "bucketed" verdict now
-    * carries a width derived from the hottest key's measured
-    * rows-over-time density, corrected down by its PEAK hourly density
-    * ([[bucketWidthFor]] burst overload) — a month-span key whose rows
+  /** Decide which as-of form to run for the given shape: "bucketed" iff the
+    * hottest join key carries more rows than `threshold` (left and right
+    * combined — both sides of the union land in that key's single window
+    * partition and serialize together), else "plain".
+    *
+    * Cost of deciding, two tiers: a QUICK REJECT first — if the two sides
+    * together hold ≤ threshold rows, no key can possibly exceed it. That
+    * total is counted with a per-partition CAP (each partition stops
+    * iterating past threshold+1 rows) over a zero-column projection: one
+    * narrow job, NO shuffle — deliberately not `LIMIT n + count`, whose
+    * physical plan (LocalLimit → single-partition exchange → GlobalLimit)
+    * would move up to splits×threshold rows through one task at cluster
+    * scale. A capped sum understates the true total only when some
+    * partition hit its cap — and then the total already exceeds the
+    * threshold, so the ≤-threshold test stays exact. Only when the probe
+    * saturates does the per-key tier run — ONE count agg over a seeded
+    * SAMPLE sized to [[Probes.SampleRowsTarget]] rows per threshold-hot
+    * key (exact below that target), so the decision's shuffle stays
+    * negligible next to the join it fronts at any input size; both forms
+    * are exact, so estimation error near the crossover only flips a
+    * choice between two equal-cost plans.
+    *
+    * A "bucketed" verdict carries a width derived from the hottest key's
+    * measured rows-over-time density, corrected down by its PEAK hourly
+    * density ([[bucketWidthFor]] burst overload) — the span AND peak-window
+    * stats ride the same sampled pass — so a month-span key whose rows
     * bunch into one hour gets an hour-scale width, not a month-average
-    * one, so the skew the form exists to break can't reappear inside the
-    * burst.
+    * one, and the skew the form exists to break can't reappear inside the
+    * burst. Exposed separately from [[leftAsofAuto]] so the dispatch rule
+    * itself is spec-pinnable.
     */
   def chooseAsofDispatch(
       left: DataFrame,

@@ -229,97 +229,4 @@ object IntervalJoin {
       .map(f => lit(null).cast(f.dataType).as(f.name + suffix))
     matched.unionByName(unmatched.select(col("*") +: nullRight.toSeq: _*))
   }
-
-  /** Length stats for a STORED interval table, metadata-first: from the
-    * table's `_manifest` sidecar ([[graft.storage.Manifest]] written with
-    * `intervalCols`) when one is present AND fresh — the sidecar's
-    * file-name set must equal the directory's actual parquet basenames
-    * (Spark writes fresh task-UUID names on every overwrite, so a name-set
-    * match proves the stats describe exactly the files present; a stale or
-    * statless sidecar → None, never wrong data). Zero Spark jobs, zero
-    * probe jobs: one small sequential sidecar read however large the data.
-    */
-  private[graft] def storedLengthStats(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[(Long, Long)] = {
-    import org.apache.hadoop.fs.Path
-    try {
-      val conf = spark.sessionState.newHadoopConf()
-      val dir = new Path(path)
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) return None
-      val names = fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName).toSet
-      if (names.isEmpty) return None
-      val statsOpt = graft.storage.Manifest.fileIntervalStats(conf, dir)
-        .filter(_.keySet == names) // stale/partial sidecar → probe fallback
-      val rowsOpt = graft.storage.Manifest.fileRowCounts(conf, dir)
-        .filter(_.keySet == names)
-      statsOpt.map { stats =>
-        def ceilSec(us: Long): Long = (us + 999999L) / 1000000L
-        // Global p99 from per-file p99s. A plain max-of-p99s degenerates
-        // to the global MAX when an outlier sits alone in a small file
-        // (its p99 IS the outlier) — re-widening every bucket to the
-        // sentinel length the p99 sizing exists to ignore. Weight each
-        // file's p99 by its ROW COUNT (already in the same sidecar) and
-        // take the value at the 99th row percentile: a 1-row sentinel
-        // file contributes 1 row of weight and is ignored; a file
-        // holding ≥1% of rows still dominates, erring wide. Falls back
-        // to max-of-p99s when row counts are unavailable.
-        val p99 = rowsOpt match {
-          case Some(rows) if rows.values.sum > 0 =>
-            val total = rows.values.sum
-            val byP99 = stats.toSeq
-              .map { case (f, (_, p)) => (p, rows.getOrElse(f, 0L)) }
-              .sortBy(_._1)
-            var acc = 0L
-            byP99.collectFirst {
-              case (p, w) if { acc += w; acc >= total * 99L / 100L } => p
-            }.getOrElse(byP99.last._1)
-          case _ => stats.values.map(_._2).max
-        }
-        (ceilSec(stats.values.map(_._1).max), ceilSec(p99))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** [[overlapJoinAuto]] over two STORED parquet interval tables, with the
-    * bucket width taken from their `_manifest` sidecars when both carry
-    * fresh interval stats ([[storedLengthStats]]) — zero decision scans,
-    * the same metadata-not-probe posture as
-    * [[graft.ohlc.OhlcGenerator.regenerate]]'s as-of dispatch. Falls back
-    * to the probed path for either side lacking a fresh stats-bearing
-    * sidecar: a missing optimization, never a wrong width (width is purely
-    * physical — equivalence at any width is spec-pinned).
-    *
-    * The global p99 is approximated as the ROWS-WEIGHTED 99th percentile
-    * of the per-file p99s (weights from the same sidecar's row counts):
-    * errs wide for files holding real mass, while a lone sentinel-length
-    * interval in a tiny file contributes only its own rows of weight and
-    * cannot re-widen every bucket to the outlier length.
-    */
-  def overlapJoinAutoStored(
-      spark: org.apache.spark.sql.SparkSession,
-      leftPath: String,
-      rightPath: String,
-      on: Seq[String],
-      leftStart: String,
-      leftEnd: String,
-      rightStart: String,
-      rightEnd: String,
-      suffix: String = "_r"
-  ): DataFrame = {
-    val left = spark.read.parquet(leftPath)
-    val right = spark.read.parquet(rightPath)
-    (storedLengthStats(spark, leftPath), storedLengthStats(spark, rightPath)) match {
-      case (Some((maxL, p99L)), Some((maxR, p99R))) =>
-        val width = autoBucketWidth(math.max(maxL, maxR), math.max(p99L, p99R))
-        overlapJoin(left, right, on, leftStart, leftEnd, rightStart, rightEnd,
-          suffix, width)
-      case _ =>
-        overlapJoinAuto(left, right, on, leftStart, leftEnd, rightStart,
-          rightEnd, suffix)
-    }
-  }
 }

@@ -195,48 +195,14 @@ object Probes {
     HotKeyStats(scaled(n), span, scaled(peak), fine)
   }
 
-  /** Back-compat view of [[hottestKeyBurstStats]]: (rows, spanSeconds) of
-    * the hottest key. Same single probe job.
-    */
-  def hottestKeyStats(
-      df: DataFrame,
-      keyCols: Seq[String],
-      timeCol: String,
-      threshold: Long,
-      seed: Long = 42L
-  ): (Long, Long) = {
-    val s = hottestKeyBurstStats(df, keyCols, timeCol, threshold, seed)
-    (s.rows, s.spanSeconds)
-  }
-
-  /** Longest [start, end) interval in `df`, in whole seconds (ceil) — the
-    * bucket-width probe for [[IntervalJoin.overlapJoinAuto]]. One narrow
-    * max-aggregation over a derived column: no shuffle beyond the final
-    * single-row combine, no sampling needed (a max is cheap exactly, and
-    * UNDERestimating the longest interval would raise replication above
-    * the ≤2 bound the width exists to guarantee). Malformed rows
-    * (NULL bounds, end <= start) contribute nothing, mirroring the join's
-    * own up-front drop. Returns 0 when nothing is well-formed.
-    */
-  def maxIntervalSeconds(
-      df: DataFrame,
-      startCol: String,
-      endCol: String
-  ): Long = {
-    probeJobs.incrementAndGet()
-    val len = unix_micros(col(endCol).cast("timestamp")) -
-      unix_micros(col(startCol).cast("timestamp"))
-    val mx = df.filter(col(startCol).isNotNull && col(endCol).isNotNull &&
-        len > 0L)
-      .agg(max(len)).head()
-    if (mx.isNullAt(0)) 0L else (mx.getLong(0) + 999999L) / 1000000L
-  }
-
   /** Interval-length distribution stats for bucket sizing:
     * (maxSeconds, p99Seconds) over the well-formed [start, end) rows of
     * `df`, both ceil'd to whole seconds. ONE narrow aggregation — the
-    * approximate p99 rides the same agg as the max, so this costs exactly
-    * what [[maxIntervalSeconds]] does (one probe job, no extra pass).
+    * approximate p99 rides the same agg as the max (one probe job, no
+    * extra pass). The max is exact: UNDERestimating the longest interval
+    * would raise replication above the ≤2 bound the width exists to
+    * guarantee. Malformed rows (NULL bounds, end <= start) contribute
+    * nothing, mirroring the join's own up-front drop.
     *
     * The p99 exists because sizing off the MAX is outlier-fragile: one
     * open-ended sentinel interval (a year-long row in an hours-long

@@ -62,7 +62,7 @@ object SkewJoin {
     * replication cost a degenerate key can demand).
     *
     * Decision cost, two tiers (same discipline as
-    * [[AsofJoin.chooseAsofForm]]): a QUICK REJECT via [[Probes.cappedCount]]
+    * [[AsofJoin.chooseAsofDispatch]]): a QUICK REJECT via [[Probes.cappedCount]]
     * — if the fact side as a WHOLE holds ≤ threshold rows, no key can
     * exceed it; one narrow no-shuffle job, cost bounded in input size. Only
     * when that probe saturates does the per-key tier run — a count agg

@@ -60,6 +60,16 @@ object QueryEngine {
     * 390-472`). The scan itself never sorts more than pageSize+1 rows
     * globally (Spark's ordered-limit is a per-partition top-k + merge).
     *
+    * The scan comes from a cursor-aware factory: `dfFor(cursor)` is
+    * invoked once per page with the page's effective cursor, so a caller
+    * backed by a month-partitioned, zone-mapped warehouse table can plan
+    * ONLY the files at or after the cursor (see
+    * `Processor.queryOhlcPage`) — a page at the tail of a deep table then
+    * lists O(tail months), not O(all files), per page. The strict
+    * `time > cursor` filter is ALWAYS re-applied here, so the factory
+    * only needs to return a superset of the qualifying rows; `dfFor(None)`
+    * must return the full scan. A fixed frame pages as `_ => df`.
+    *
     * The cursor is a plain timestamp (reference parity, models.py
     * CursorResult) with a strictly-greater next-page filter, so a page may
     * never END in the middle of a timestamp tie-group — rows sharing the
@@ -72,24 +82,6 @@ object QueryEngine {
     * max ties per timestamp). The returned rows are materialized from
     * the SAME collect that computed the cursor, so page content and
     * metadata can never diverge (and the scan runs once, not twice).
-    */
-  def cursorPage(
-      df: DataFrame,
-      time: String,
-      tiebreak: Seq[String],
-      cursor: Option[Timestamp],
-      pageSize: Int
-  ): CursorPage = cursorPageBy(_ => df, time, tiebreak, cursor, pageSize)
-
-  /** [[cursorPage]] with a cursor-aware scan factory: `dfFor(cursor)` is
-    * invoked once per page with the page's effective cursor, so a caller
-    * backed by a month-partitioned, zone-mapped warehouse table can plan
-    * ONLY the files at or after the cursor (see
-    * `Processor.queryOhlcPage`) — a page at the tail of a deep table then
-    * lists O(tail months), not O(all files), per page. The strict
-    * `time > cursor` filter is ALWAYS re-applied here, so the factory
-    * only needs to return a superset of the qualifying rows; `dfFor(None)`
-    * must return the full scan.
     */
   def cursorPageBy(
       dfFor: Option[Timestamp] => DataFrame,
@@ -137,7 +129,7 @@ object QueryEngine {
     }
   }
 
-  /** Batch iterator driving [[cursorPage]] until exhaustion
+  /** Batch iterator driving [[cursorPageBy]] until exhaustion
     * (`clickhouse_query_engine.py:474-534`).
     */
   def batches(

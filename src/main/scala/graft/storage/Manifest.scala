@@ -23,17 +23,14 @@ object Manifest {
 
   /** One row per file of the dataset at `path`:
     * (file, rows, min_key, max_key, key_col), ordered by min_key then file.
-    * `key_col` records WHICH column the min/max describe — self-describing,
-    * and it lets [[Compactor]] rebuild a manifest after a rewrite without
-    * being told the key (the carried stats would be stale for new files).
+    * `key_col` records WHICH column the min/max describe, so the sidecar
+    * is self-describing.
     */
   def build(
       spark: SparkSession,
       path: String,
       keyCol: String,
-      intervalCols: Option[(String, String)] = None,
       extraCols: Seq[String] = Nil,
-      zorder: Option[(String, String, Int)] = None,
       bloomCols: Seq[String] = Nil,
       bloomExpected: Long = 100000L,
       bloomFpp: Double = 0.05): DataFrame = {
@@ -71,19 +68,6 @@ object Manifest {
       extraCols.flatMap { c =>
         Seq(min(col(c)).as(s"min__$c"), max(col(c)).as(s"max__$c"))
       } ++
-      // interval tables additionally carry per-file LENGTH stats (max +
-      // approx p99 of end-start, in µs over well-formed rows) so
-      // [[graft.operators.IntervalJoin.overlapJoinAutoStored]] can size
-      // its bucket width from the sidecar at zero query cost — the same
-      // metadata-not-probe posture as OhlcGenerator.regenerate's as-of
-      // dispatch. Stats ride the SAME single scan as rows/min/max.
-      intervalCols.toSeq.flatMap { case (s, e) =>
-        val len = unix_micros(col(e).cast("timestamp")) -
-          unix_micros(col(s).cast("timestamp"))
-        val wf = when(col(s).isNotNull && col(e).isNotNull && len > 0L, len)
-        Seq(max(wf).as("max_len_us"),
-          percentile_approx(wf, lit(0.99), lit(10000)).as("p99_len_us"))
-      } ++
       // per-file bloom sketches (r18): a base64 membership index over the
       // column's xxhash64 values, same single scan. Point predicates
       // (`col = v`, `IN`) then prune FILES on layouts where min/max
@@ -104,32 +88,10 @@ object Manifest {
     val withCols =
       if (extraCols.isEmpty) withKey
       else withKey.withColumn("cols", lit(extraCols.mkString(",")))
-    // interval_cols witness (r16): records WHICH (start, end) columns the
-    // length stats describe, so a rebuilder (Compactor) can regenerate
-    // them — without it a compaction silently dropped max/p99_len_us and
-    // overlapJoinAutoStored degraded to the probe path forever after
-    val withIv = intervalCols match {
-      case Some((s, e)) => withCols.withColumn("interval_cols", lit(s"$s,$e"))
-      case None => withCols
-    }
-    // z-order layout witness (r17): records that the FILES themselves are
-    // Morton-clustered on (x, y) at `bits` resolution — so a rebuilder
-    // ([[Compactor]]) re-clusters with the same key instead of silently
-    // flattening the layout to round-robin (which would keep the manifest
-    // readable but widen every file's min/max to the full data range,
-    // degrading both columns' pruning to a full scan)
-    val withZ = zorder match {
-      case Some((x, y, bits)) => withIv
-        .withColumn("zorder_cols", lit(s"$x,$y"))
-        .withColumn("zorder_bits", lit(bits))
-      case None => withIv
-    }
-    // bloom witness (r18): WHICH columns carry sketches plus the sizing,
-    // so a rebuilder ([[Compactor]]) regenerates equivalent sketches
-    // instead of silently dropping the point index on compaction
+    // bloom witness (r18): WHICH columns carry sketches plus the sizing
     val withBloom =
-      if (bloomCols.isEmpty) withZ
-      else withZ
+      if (bloomCols.isEmpty) withCols
+      else withCols
         .withColumn("bloom_cols", lit(bloomCols.mkString(",")))
         .withColumn("bloom_expected", lit(bloomExpected))
         .withColumn("bloom_fpp", lit(bloomFpp))
@@ -143,14 +105,11 @@ object Manifest {
       spark: SparkSession,
       path: String,
       keyCol: String,
-      intervalCols: Option[(String, String)] = None,
       extraCols: Seq[String] = Nil,
-      zorder: Option[(String, String, Int)] = None,
       bloomCols: Seq[String] = Nil,
       bloomExpected: Long = 100000L,
       bloomFpp: Double = 0.05): Unit =
-    build(spark, path, keyCol, intervalCols, extraCols, zorder,
-        bloomCols, bloomExpected, bloomFpp)
+    build(spark, path, keyCol, extraCols, bloomCols, bloomExpected, bloomFpp)
       .coalesce(1)
       .write.mode("overwrite")
       // full µs precision with an explicit offset: the default JSON
@@ -383,54 +342,6 @@ object Manifest {
         }
       }
       Some(entries.toMap)
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Driver-side per-file interval-length stats from a manifest sidecar
-    * written with `intervalCols` — basename → (max_len_us, p99_len_us) —
-    * WITHOUT a Spark job, same parse-the-JSON-parts discipline as
-    * [[fileRowCounts]]. `None` when no sidecar exists, it is garbled, or
-    * it was written WITHOUT interval stats (no line carries `max_len_us` —
-    * a plain manifest is not evidence about lengths). A line missing the
-    * stats while others carry them is a file with zero well-formed
-    * intervals (Spark's JSON writer drops null fields) → (0, 0).
-    * Callers MUST freshness-check the returned key set against the
-    * directory's actual parquet basenames, exactly as for
-    * [[fileRowCounts]].
-    */
-  def fileIntervalStats(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: org.apache.hadoop.fs.Path): Option[Map[String, (Long, Long)]] = {
-    import org.apache.hadoop.fs.Path
-    try {
-      val mdir = new Path(dir, "_manifest")
-      val fs = mdir.getFileSystem(conf)
-      if (!fs.exists(mdir)) return None
-      val parts = fs.listStatus(mdir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-          s.getPath.getName.endsWith(".json"))
-      if (parts.isEmpty) return None
-      val filePat = """"file":"([^"]+)"""".r
-      val maxPat = """"max_len_us":(\d+)""".r
-      val p99Pat = """"p99_len_us":(\d+)""".r
-      var sawStats = false
-      val entries = parts.flatMap { p =>
-        val in = fs.open(p.getPath)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-          finally in.close()
-        lines.filter(_.nonEmpty).map { line =>
-          val file = filePat.findFirstMatchIn(line).map(_.group(1)) match {
-            case Some(f) => f.split('/').last
-            case None => return None // garbled line: the sidecar is suspect
-          }
-          val mx = maxPat.findFirstMatchIn(line).flatMap(_.group(1).toLongOption)
-          val p99 = p99Pat.findFirstMatchIn(line).flatMap(_.group(1).toLongOption)
-          if (mx.isDefined) sawStats = true
-          file -> (mx.getOrElse(0L), p99.getOrElse(0L))
-        }
-      }
-      if (sawStats) Some(entries.toMap) else None
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 }

@@ -206,46 +206,6 @@ object PrunedScan {
     else Some(picks.flatten.flatten.sorted)
   }
 
-  /** Global [min, max] of a column in Spark cast-to-long semantics, folded
-    * from a FRESH `_manifest`'s per-file stats — zero data scans (r17
-    * verdict item 4: [[Compactor]] re-clusters a z-ordered table with
-    * [[RangeWriter.zOrderedLayout]] bounds from here instead of paying an
-    * exact min/max pre-aggregation over the whole table). Truncation
-    * (BigDecimal.toLong, toward zero) and epoch-second flooring are both
-    * monotone nondecreasing, so folding the per-file VALUE extremes gives
-    * valid cast-to-long bounds for every row. None when the sidecar is
-    * missing/stale/garbled, any non-all-NULL file has half-present or
-    * unparseable stats, the column is not long-castable (strings), or
-    * every file is all-NULL — the caller then falls back to the exact
-    * aggregation.
-    */
-  private[graft] def longColBounds(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: HPath,
-      column: String): Option[(Long, Long)] =
-    try longColBoundsListed(conf, dir, column, listDataNames(conf, dir))
-    catch { case scala.util.control.NonFatal(_) => None }
-
-  /** [[longColBounds]] for BOTH z-order dimensions with one data-dir
-    * listing (r18 review — [[Compactor]]'s re-cluster path asks for two
-    * columns back-to-back). The `_manifest` sidecar is still parsed per
-    * column: [[Manifest.fileColRanges]]'s validation is column-keyed, and
-    * duplicating it for a once-per-compaction metadata path isn't worth
-    * the second copy of the parser.
-    */
-  private[graft] def longColBounds2(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: HPath,
-      x: String,
-      y: String): Option[(Long, Long, Long, Long)] =
-    try {
-      val names = listDataNames(conf, dir)
-      for {
-        bx <- longColBoundsListed(conf, dir, x, names)
-        by <- longColBoundsListed(conf, dir, y, names)
-      } yield (bx._1, bx._2, by._1, by._2)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   private def listDataNames(
       conf: org.apache.hadoop.conf.Configuration,
       dir: HPath): Set[String] = {
@@ -256,40 +216,6 @@ object PrunedScan {
         !s.getPath.getName.startsWith("."))
       .map(_.getPath.getName).toSet
   }
-
-  private def longColBoundsListed(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: HPath,
-      column: String,
-      dataNames: Set[String]): Option[(Long, Long)] =
-    try {
-      def asLong(k: Key): Option[Long] = k match {
-        case NumKey(v) => Some(v.toLong) // truncation toward zero = cast
-        case TimeKey(us) => Some(Math.floorDiv(us, 1000000L)) // epoch s
-        case StrKey(_) => None
-      }
-      for {
-        ranges <- Manifest.fileColRanges(conf, dir, column)
-        if ranges.keySet == dataNames // stale/partial sidecar
-        perFile <- {
-          val nonNull = ranges.values.toSeq.collect {
-            case (Some(mn), Some(mx)) => (mn, mx)
-          }
-          // half-present stats on any file make the sidecar suspect
-          val suspect = ranges.values.exists(v => v._1.isDefined != v._2.isDefined)
-          if (suspect || nonNull.isEmpty) None
-          else {
-            val parsed = nonNull.map { case (mn, mx) =>
-              for {
-                a <- tokenKey(mn).flatMap(asLong)
-                b <- tokenKey(mx).flatMap(asLong)
-              } yield (a, b)
-            }
-            if (parsed.contains(None)) None else Some(parsed.flatten)
-          }
-        }
-      } yield (perFile.map(_._1).min, perFile.map(_._2).max)
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Multi-column zone-map pruning (r16): surviving data-file paths for
     * the CONJUNCTION of per-column inclusive ranges, or None when NO
@@ -370,16 +296,7 @@ object PrunedScan {
 
   /** Wall-clock yyyymm of a bound literal — the month-partition label the
     * warehouse writers derive via `date_format(..., "yyyyMM")` in the
-    * session zone. Zone-free by construction: the partition label is the
-    * LITERAL's wall-clock month in that same zone, so LocalDate parsing
-    * gives the identical answer for every session zone.
-    */
-  def monthOf(t: String): String = {
-    val d = parseWallClock(t).toLocalDate
-    monthLabel(d.getYear, d.getMonthValue)
-  }
-
-  /** [[monthOf]] widened for use as a by-name month-cut LOWER bound
+    * session zone — for use as a by-name month-cut LOWER bound
     * (r17 advice): the month labels were written from each row's
     * wall-clock in the session zone, and under a BACKWARD offset
     * transition that crosses a month boundary a row with instant above
@@ -389,12 +306,12 @@ object PrunedScan {
     * transition, including 24 h date-line moves like Samoa 2011); the
     * extra month's files are then zone-map-pruned and exact-filtered as
     * usual. Fixed-offset zones (UTC) have wall clocks monotone in event
-    * time — no slack, identical to [[monthOf]].
+    * time — no slack: the literal's own wall-clock month.
     */
   def monthOfLo(spark: SparkSession, t: String): String =
     monthMargined(spark, t, -1)
 
-  /** [[monthOf]] widened as a month-cut UPPER bound — the mirror of
+  /** The month-cut UPPER bound — the mirror of
     * [[monthOfLo]] for FORWARD transitions (an instant below the bound
     * can carry a wall-clock label in the NEXT month).
     */

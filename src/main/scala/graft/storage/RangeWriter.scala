@@ -71,9 +71,6 @@ object RangeWriter {
     // ship the zone-map manifest WITH the data (the q_pruned_scan_2col
     // shape): keyed on x with y as the secondary by default — a caller
     // whose routing key differs from the z dims overrides via manifestKey.
-    // The zorder witness is recorded only when clustering actually
-    // happened, so a Compactor rebuild never "re-clusters" a layout that
-    // was a plain fallback write (empty input / all-NULL dimension).
     val spark = df.sparkSession
     // a zero-row input can leave no data files at all (nothing to build a
     // manifest over, and the build's read would fail on schema inference)
@@ -85,8 +82,7 @@ object RangeWriter {
     }
     if (wrote) {
       val (key, extras) = manifestKey.getOrElse((xCol, Seq(yCol)))
-      Manifest.write(spark, path, key, extraCols = extras,
-        zorder = clustered.map(_ => (xCol, yCol, bits)))
+      Manifest.write(spark, path, key, extraCols = extras)
     }
   }
 
@@ -94,10 +90,9 @@ object RangeWriter {
     * range-partitioned and sorted by the z interleave of the two
     * range-normalized dimensions, or None when EITHER dimension has no
     * non-NULL values (empty input / all-NULL column — nothing to cluster
-    * on). Factored out so [[Compactor]] can re-cluster a z-ordered table
-    * from its manifest witness with the exact same arithmetic.
+    * on).
     */
-  private[storage] def zOrderedLayout(
+  private def zOrderedLayout(
       df: DataFrame,
       xCol: String,
       yCol: String,
@@ -106,9 +101,7 @@ object RangeWriter {
       bounds: Option[(Long, Long, Long, Long)] = None
   ): Option[DataFrame] = {
     // bounds (r17 verdict item 4): a caller who already KNOWS the
-    // dimensions' cast-to-long ranges — a re-clusterer folding them from
-    // the sitting `_manifest` ([[Compactor]] via
-    // [[PrunedScan.longColBounds]]), an exporter with domain knowledge —
+    // dimensions' cast-to-long ranges — an exporter with domain knowledge —
     // skips the exact min/max pre-aggregation, eliminating one full input
     // pass per export. Out-of-range values are safe: cell() clamps BOTH
     // edges, so approximate bounds only blur the edge cells' clustering,

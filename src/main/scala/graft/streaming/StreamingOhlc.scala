@@ -47,64 +47,4 @@ object StreamingOhlc {
       .withColumn("bar_ts", col("w.start"))
       .drop("w")
   }
-
-  /** Streaming dedup: drop rows whose `keys` already appeared within the
-    * watermark horizon — the streaming twin of the batch
-    * `Dedup.replacingDedup` (the reference's ReplacingMergeTree semantics
-    * applied at ingest time instead of merge time). State holds one entry
-    * per distinct key seen inside the watermark and is evicted as event
-    * time advances, so state size is bounded by the dup horizon, not the
-    * stream length.
-    */
-  def dedupWithinWatermark(
-      stream: DataFrame,
-      keys: Seq[String],
-      time: String,
-      watermark: String
-  ): DataFrame =
-    stream
-      .withWatermark(time, watermark)
-      .dropDuplicatesWithinWatermark(keys)
-
-  /** Stream-static enrichment join: each micro-batch hash-joins against the
-    * broadcast dimension snapshot — no streaming state at all (the static
-    * side is re-broadcast per batch, picking up dimension updates). The
-    * streaming form of the calendar/instrument lookup joins (§2.3 J3).
-    */
-  def enrichStatic(
-      stream: DataFrame,
-      dim: DataFrame,
-      on: Seq[String]
-  ): DataFrame =
-    stream.join(broadcast(dim), on, "left")
-
-  /** Stream-stream interval join: pair each left event with right events of
-    * the same key whose time lies in `[leftTime - lookback, leftTime]` —
-    * the streaming form of the batch as-of/minute-bucket joins (§2.3
-    * J1/J2), except ALL matches in the window pair up (streaming cannot
-    * pick "the latest right per left" in append mode: a later-arriving
-    * right row could always beat the current winner, so "latest" is only
-    * decidable at watermark expiry — use mapGroupsWithState for true as-of).
-    *
-    * Both sides carry watermarks and the join condition bounds event-time
-    * distance, so each side buffers only `lookback + watermark` of state —
-    * the state store stays O(rate × horizon) regardless of stream age.
-    */
-  def intervalJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTime: String,
-      rightTime: String,
-      lookback: String = "10 minutes",
-      watermark: String = "2 minutes"
-  ): DataFrame = {
-    val l = left.withWatermark(leftTime, watermark)
-    val r = right.withWatermark(rightTime, watermark)
-    l.join(r,
-      l(key) === r(key) &&
-        r(rightTime) <= l(leftTime) &&
-        r(rightTime) >= l(leftTime) - expr(s"INTERVAL $lookback"))
-      .drop(r(key))
-  }
 }

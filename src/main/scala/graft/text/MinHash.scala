@@ -270,7 +270,7 @@ object MinHash {
 
   /** [[nearDupGroups]] plus the number of propagation rounds it took to
     * reach fixpoint — the scale lever at 100 TB is the ROUND count (each
-    * round is one synchronous Spark job), so ScaleProbe records it.
+    * round is one synchronous Spark job), so it is worth recording.
     */
   def nearDupGroupsWithRounds(
       docs: DataFrame,
@@ -297,7 +297,7 @@ object MinHash {
     * crawl re-fetches) with ids uncorrelated to edit order (hashed doc
     * ids): min-label propagation floods such chains in Θ(diameter)
     * rounds, while star contraction rewires them logarithmically
-    * (measured in ScaleProbe: a 20k-doc random-id chain).
+    * (SCALE.md: measured on a 20k-doc random-id chain).
     *
     * Node encoding: bucket (band, bh) → 2^40 + bh·bands + band, which is
     * injective (band < bands) and keeps every bucket id above every doc

@@ -61,7 +61,7 @@ object bridge {
     // must not hang off a default that a Spark upgrade or a caller's prior
     // persist() could change (localCheckpoint REUSES any pre-set level).
     // Pinning it here makes every cut's materialization disk-backed by
-    // construction; ScaleProbe's overlapleft section measures the spill.
+    // construction (SCALE.md records the measured spill).
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rdd.localCheckpoint()
     // a PartitioningCollection can reference attributes the analyzed output

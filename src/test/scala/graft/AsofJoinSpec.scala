@@ -123,14 +123,15 @@ class AsofJoinSpec extends SparkSpec {
       (if (i % 2 == 0) "A" else "B", randTs(), i)).toDF("k", "t", "id")
     val right = (1 to 300).map(i =>
       (if (i % 3 == 0) "A" else "B", randTs(), i * 1.0)).toDF("k", "t", "v")
-    assert(AsofJoin.chooseAsofForm(left, right, Seq("k")) === "plain")
+    assert(AsofJoin.chooseAsofDispatch(left, right, Seq("k"), "t", "t").form === "plain")
     // skewed shape: one key carries everything — with the threshold scaled
     // down to test size, the dispatcher must flip to bucketed
     val hotL = (1 to 400).map(i => ("HOT", randTs(), i)).toDF("k", "t", "id")
     val hotR = (1 to 300).map(i => ("HOT", randTs(), i * 1.0)).toDF("k", "t", "v")
-    assert(AsofJoin.chooseAsofForm(hotL, hotR, Seq("k"), threshold = 500L)
+    assert(AsofJoin.chooseAsofDispatch(hotL, hotR, Seq("k"), "t", "t", threshold = 500L).form
       === "bucketed")
-    assert(AsofJoin.chooseAsofForm(hotL, hotR, Seq("k")) === "plain") // default 1M
+    assert(AsofJoin.chooseAsofDispatch(hotL, hotR, Seq("k"), "t", "t").form
+      === "plain") // default 1M
     // both dispatch targets produce identical rows on both shapes
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("k", "t", "id", "v_r").orderBy("k", "t", "id")
@@ -153,11 +154,12 @@ class AsofJoinSpec extends SparkSpec {
     }
     // empty right side must not NPE the decision (max(count) over no rows)
     val emptyR = right.filter(col("v") < 0)
-    assert(AsofJoin.chooseAsofForm(left.limit(0), emptyR, Seq("k")) === "plain")
+    assert(AsofJoin.chooseAsofDispatch(left.limit(0), emptyR, Seq("k"), "t", "t")
+      .form === "plain")
     // two-tier boundary: 700 total rows saturate the capped-count quick
     // reject at threshold 600, but the hottest key (~380 rows) is still
     // under it — the per-key agg tier must run and still answer "plain"
-    assert(AsofJoin.chooseAsofForm(left, right, Seq("k"), threshold = 600L)
+    assert(AsofJoin.chooseAsofDispatch(left, right, Seq("k"), "t", "t", threshold = 600L).form
       === "plain")
   }
 
@@ -222,6 +224,11 @@ class AsofJoinSpec extends SparkSpec {
 
   test("hottestKeyStats sampled tier: count within a few percent, span near-true") {
     import graft.operators.Probes
+    def hotStats(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
+        time: String, threshold: Long): (Long, Long) = {
+      val s = Probes.hottestKeyBurstStats(df, keys, time, threshold)
+      (s.rows, s.spanSeconds)
+    }
     // threshold 20000 > SampleRowsTarget(10000) → frac = 0.5 (sampled path);
     // 60k rows on one hot key, 6k on a cold one, spread over a known span
     val n = 60000L
@@ -232,7 +239,7 @@ class AsofJoinSpec extends SparkSpec {
     val cold = spark.range(6000L).selectExpr("'COLD' AS k",
       "timestamp_seconds(1704067200 + id % 86400) AS t")
     val df = hot.unionByName(cold)
-    val (rows, span) = Probes.hottestKeyStats(df, Seq("k"), "t",
+    val (rows, span) = hotStats(df, Seq("k"), "t",
       threshold = 20000L)
     // binomial CLT at ~30k sampled rows: well inside ±5%
     assert(math.abs(rows - n) <= n / 20,
@@ -242,11 +249,11 @@ class AsofJoinSpec extends SparkSpec {
     assert(span <= trueSpan + 1 && span >= (trueSpan * 0.95).toLong,
       s"sampled span $span too far from $trueSpan")
     // exact tier below the sampling threshold: exact count AND exact span
-    val (re, se) = Probes.hottestKeyStats(df, Seq("k"), "t", threshold = 100L)
+    val (re, se) = hotStats(df, Seq("k"), "t", threshold = 100L)
     assert(re === n)
     assert(se === trueSpan)
     // empty input: no NPE, (0, 0)
-    assert(Probes.hottestKeyStats(df.filter("1 = 0"), Seq("k"), "t", 100L)
+    assert(hotStats(df.filter("1 = 0"), Seq("k"), "t", 100L)
       === ((0L, 0L)))
   }
 

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.{Compactor, Manifest, PrunedScan}
+import graft.storage.{Manifest, PrunedScan}
 
 /** Pins for the bloom-sidecar point index (r18): per-file bloom sketches
   * over `xxhash64(col)` ride the manifest's single stats scan and let a
@@ -106,18 +106,5 @@ class BloomSpec extends SparkSpec {
       bloomCols = Seq("uid"), bloomExpected = 100L, bloomFpp = 0.01)
     val got = PrunedScan.readPoint(spark, dir, "uid", Seq(33333L))
     assert(got.count() === 1, "saturation must not lose the row")
-  }
-
-  test("compaction carries the bloom witness: the rebuilt manifest still prunes points") {
-    val dir = writeClustered(10000L, 12)
-    val n = Compactor.compact(spark, dir, targetBytes = 40000L)
-    assert(n > 1, s"want a multi-file compaction, got $n")
-    val m = Manifest.read(spark, dir)
-    assert(m.columns.contains("bloom__uid") &&
-      m.columns.contains("bloom_cols"),
-      "compaction must regenerate the bloom sketches, not drop them")
-    val got = PrunedScan.readPoint(spark, dir, "uid", Seq(13L))
-    assert(got.count() ===
-      spark.read.parquet(dir).filter(col("uid") === 13L).count())
   }
 }

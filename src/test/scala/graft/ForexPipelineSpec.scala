@@ -298,7 +298,7 @@ class ForexPipelineSpec extends SparkSpec {
     // plan a January file on EITHER pagination surface — already-paged
     // months are pruned by name before the scan is even built
     val febCursor = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
-    val ohlcScan = p.readOhlc1mFrom("EURUSD", Some(febCursor))
+    val ohlcScan = p.ohlcFrom("EURUSD", None, None)(Some(febCursor))
     assert(ohlcScan.inputFiles.nonEmpty &&
       ohlcScan.inputFiles.forall(_.contains("yyyymm=202402")),
       s"planned: ${ohlcScan.inputFiles.mkString(", ")}")
@@ -365,11 +365,11 @@ class ForexPipelineSpec extends SparkSpec {
     // union of pages = exactly the table, no row lost or duplicated
     assert(all.sorted == (1L to 13L), s"got $all")
     // and each page is internally ordered with a lossless boundary
-    val p1 = QueryEngine.cursorPage(df, "ts", Seq("id"), None, 4)
+    val p1 = QueryEngine.cursorPageBy(_ => df, "ts", Seq("id"), None, 4)
     assert(p1.pageSize == 7, "whole tie-group page expected") // A-group fetched whole
-    val p2 = QueryEngine.cursorPage(df, "ts", Seq("id"), p1.nextCursor, 4)
+    val p2 = QueryEngine.cursorPageBy(_ => df, "ts", Seq("id"), p1.nextCursor, 4)
     assert(p2.pageSize == 5, "B tie-group fetched whole") // 5 B rows straddle again
-    val p3 = QueryEngine.cursorPage(df, "ts", Seq("id"), p2.nextCursor, 4)
+    val p3 = QueryEngine.cursorPageBy(_ => df, "ts", Seq("id"), p2.nextCursor, 4)
     assert(p3.pageSize == 1 && !p3.hasMore)
   }
 
@@ -423,7 +423,7 @@ class ForexPipelineSpec extends SparkSpec {
     zos.putNextEntry(new ZipEntry("Exness_EURUSD_2024_01.csv"))
     zos.write(rawCsv.getBytes("UTF-8"))
     zos.closeEntry(); zos.close()
-    val df = TickIngest.readZips(spark, zipPath.toString)
+    val df = TickIngest.readZipsWithBadRecords(spark, zipPath.toString).ticks
     assert(df.count() === 9)
     assert(df.columns.toSeq === Seq("timestamp", "bid", "ask"))
   }
@@ -600,7 +600,7 @@ class ForexPipelineSpec extends SparkSpec {
     val again = TickFetcher.fetchZip(base, spool, 2024, 1)
     assert(again === Some(fetched.head))
     // spooled archives flow into the distributed ZIP reader unchanged
-    val df = TickIngest.readZips(spark, fetched.head.toString)
+    val df = TickIngest.readZipsWithBadRecords(spark, fetched.head.toString).ticks
     assert(df.count() === 9)
     assert(df.columns.toSeq === Seq("timestamp", "bid", "ask"))
   }
@@ -640,7 +640,7 @@ class ForexPipelineSpec extends SparkSpec {
       assert(!Files.list(spool).iterator().asScala.exists(_.toString.endsWith(".part")))
       // the spooled bytes are the served archive, ingestable downstream
       assert(Files.readAllBytes(fetched.head).sameElements(zipBytes))
-      val df = TickIngest.readZips(spark, fetched.head.toString)
+      val df = TickIngest.readZipsWithBadRecords(spark, fetched.head.toString).ticks
       assert(df.count() === 9)
     } finally server.stop(0)
   }
@@ -706,20 +706,20 @@ class ForexPipelineSpec extends SparkSpec {
     val rawAll = stored("raw_spread", Nil)
     assert(rawAll > 0L)
     assert(graft.ohlc.OhlcGenerator
-      .footerTickCount(spark, wh, "raw_spread", "EURUSD", Nil) === rawAll)
+      .footerMonthCounts(spark, wh, "raw_spread", "EURUSD", Nil).map(_._2).sum === rawAll)
     val rawFeb = stored("raw_spread", Seq("202402"))
     assert(rawFeb > 0L)
     assert(graft.ohlc.OhlcGenerator
-      .footerTickCount(spark, wh, "raw_spread", "eurusd", Seq("202402")) === rawFeb)
+      .footerMonthCounts(spark, wh, "raw_spread", "eurusd", Seq("202402")).map(_._2).sum === rawFeb)
     val stdJan = stored("standard", Seq("202401"))
     assert(stdJan > 0L)
     assert(graft.ohlc.OhlcGenerator
-      .footerTickCount(spark, wh, "standard", "EURUSD", Seq("202401")) === stdJan)
+      .footerMonthCounts(spark, wh, "standard", "EURUSD", Seq("202401")).map(_._2).sum === stdJan)
     // absent variant/months → 0, no throw
     assert(graft.ohlc.OhlcGenerator
-      .footerTickCount(spark, wh, "raw_spread", "GBPUSD", Nil) === 0L)
+      .footerMonthCounts(spark, wh, "raw_spread", "GBPUSD", Nil).map(_._2).sum === 0L)
     assert(graft.ohlc.OhlcGenerator
-      .footerTickCount(spark, wh, "raw_spread", "EURUSD", Seq("209901")) === 0L)
+      .footerMonthCounts(spark, wh, "raw_spread", "EURUSD", Seq("209901")).map(_._2).sum === 0L)
 
     // a full regeneration batch launches NO decision probe — the verdict
     // is read off footer metadata (Ohlc.ticksToOhlc1m would pay one per
@@ -760,7 +760,7 @@ class ForexPipelineSpec extends SparkSpec {
       finally s.close()
     }
     def count(months: String*): Long = graft.ohlc.OhlcGenerator
-      .footerTickCount(spark, wh, "raw_spread", "EURUSD", months)
+      .footerMonthCounts(spark, wh, "raw_spread", "EURUSD", months).map(_._2).sum
 
     // FRESH sidecar: corrupt every data file after writing the manifest —
     // a footer open would throw, so a correct answer proves the sidecar
@@ -778,7 +778,7 @@ class ForexPipelineSpec extends SparkSpec {
     assert(count("202402") === 5L)
 
     // corrupt file and NO sidecar: the count is unknowable from metadata —
-    // footerTickCount must throw (regenerate catches and probes instead)
+    // the footer count must throw (regenerate catches and probes instead)
     writeRows("202403", 2, files = 1)
     corruptAll("202403")
     intercept[Exception] { count("202403") }
@@ -853,7 +853,7 @@ class ForexPipelineSpec extends SparkSpec {
     Files.createFile(someMonth.resolve("stray-zero-length.parquet"))
     intercept[Exception] {
       graft.ohlc.OhlcGenerator
-        .footerTickCount(spark, copy.toString, "raw_spread", "EURUSD", Nil)
+        .footerMonthCounts(spark, copy.toString, "raw_spread", "EURUSD", Nil).map(_._2).sum
     }
     val before = graft.operators.Probes.probeJobs.get()
     val bars = graft.ohlc.OhlcGenerator.regenerate(spark, copy.toString, "eurusd")

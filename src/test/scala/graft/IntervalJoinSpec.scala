@@ -104,7 +104,7 @@ class IntervalJoinSpec extends SparkSpec {
     val l = intervals(100, 1000L).toDF("k", "s", "e", "lid")
     val r = intervals(80, 100000L).toDF("k", "s", "e", "rid")
     // the probe: exact longest well-formed interval, ceil to whole seconds
-    val lenL = Probes.maxIntervalSeconds(l, "s", "e")
+    val lenL = Probes.intervalLengthStats(l, "s", "e")._1
     val expectL = l.filter(col("s") < col("e"))
       .select(((col("e").cast("long")) - col("s").cast("long")).as("d"))
       .agg(max("d")).head().getLong(0)
@@ -112,11 +112,11 @@ class IntervalJoinSpec extends SparkSpec {
     // sub-second tail rounds UP (an interval must never outgrow its bucket)
     val frac = Seq(("a", new Timestamp(1000L), new Timestamp(3500L), 1L))
       .toDF("k", "s", "e", "lid") // 2.5 s
-    assert(Probes.maxIntervalSeconds(frac, "s", "e") === 3L)
+    assert(Probes.intervalLengthStats(frac, "s", "e")._1 === 3L)
     // malformed-only input probes to 0; auto on empty inputs returns empty
     val broken = Seq(("a", ts(10), ts(10), 1L), ("a", null, ts(5), 2L))
       .toDF("k", "s", "e", "lid")
-    assert(Probes.maxIntervalSeconds(broken, "s", "e") === 0L)
+    assert(Probes.intervalLengthStats(broken, "s", "e")._1 === 0L)
     assert(IntervalJoin.overlapJoinAuto(broken, r, Seq("k"), "s", "e", "s", "e")
       .count() === 0L)
     // auto == explicit at the probed width (and == naive), paying exactly
@@ -240,78 +240,6 @@ class IntervalJoinSpec extends SparkSpec {
     // malformed-only input → (0, 0)
     val broken = Seq(("a", ts(10), ts(10), 1L)).toDF("k", "s", "e", "lid")
     assert(Probes.intervalLengthStats(broken, "s", "e") === ((0L, 0L)))
-  }
-
-  test("stored tables: manifest-carried length stats size the width with ZERO probe jobs") {
-    import graft.operators.Probes
-    import graft.storage.Manifest
-    val dir = java.nio.file.Files.createTempDirectory("graft_interval_stored")
-    val lPath = dir.resolve("left_t").toString
-    val rPath = dir.resolve("right_t").toString
-    val rnd = new scala.util.Random(31)
-    def intervals(n: Int, idBase: Long) = (1 to n).map { i =>
-      val k = s"k${rnd.nextInt(3)}"
-      val s = rnd.nextInt(10000).toLong
-      (k, ts(s), ts(s + 1 + rnd.nextInt(4000).toLong), idBase + i)
-    }
-    val l = intervals(100, 1000L).toDF("k", "s", "e", "lid")
-    val r = intervals(80, 100000L).toDF("k", "s", "e", "rid")
-    l.write.parquet(lPath); r.write.parquet(rPath)
-    // the export ships its manifest WITH interval stats (same single scan)
-    Manifest.write(spark, lPath, "s", intervalCols = Some(("s", "e")))
-    Manifest.write(spark, rPath, "s", intervalCols = Some(("s", "e")))
-
-    val before = Probes.probeJobs.get()
-    val stored = IntervalJoin.overlapJoinAutoStored(spark, lPath, rPath,
-      Seq("k"), "s", "e", "s", "e")
-    assert(canon(stored) === canon(naive(l, r)))
-    assert(Probes.probeJobs.get() === before,
-      "stored path paid a probe despite fresh stats-bearing sidecars")
-
-    // manifest stats agree with the probed stats (ceil'd seconds, p99 ≤ max)
-    val (mx, p99) = IntervalJoin.storedLengthStats(spark, lPath).get
-    assert(mx === Probes.maxIntervalSeconds(l, "s", "e"))
-    assert(p99 >= 1L && p99 <= mx)
-
-    // FRESHNESS: a file appended after the manifest was written makes the
-    // name set diverge — the stored tier refuses and the probe pays
-    intervals(5, 777L).toDF("k", "s", "e", "rid")
-      .write.mode("append").parquet(rPath)
-    assert(IntervalJoin.storedLengthStats(spark, rPath).isEmpty)
-    val before2 = Probes.probeJobs.get()
-    val fallback = IntervalJoin.overlapJoinAutoStored(spark, lPath, rPath,
-      Seq("k"), "s", "e", "s", "e")
-    assert(Probes.probeJobs.get() === before2 + 2, "fallback should probe both sides")
-    assert(fallback.count() >= stored.count())
-
-    // a PLAIN manifest (no interval stats) is not evidence about lengths
-    Manifest.write(spark, lPath, "s")
-    assert(IntervalJoin.storedLengthStats(spark, lPath).isEmpty)
-  }
-
-  test("stored p99 is rows-weighted: a lone sentinel interval in a tiny file can't widen the width") {
-    import graft.storage.Manifest
-    val dir = java.nio.file.Files.createTempDirectory("graft_interval_sentinel")
-    val path = dir.resolve("t").toString
-    // file 1: 2000 rows of ≤ 1h intervals (the real mass)
-    val mass = (1 to 2000).map { i =>
-      ("k", ts(i.toLong * 10), ts(i.toLong * 10 + 60 + i % 3540), 1000L + i)
-    }.toDF("k", "s", "e", "lid")
-    mass.coalesce(1).write.parquet(path)
-    // file 2: ONE year-long open-ended sentinel row
-    Seq(("k", ts(0L), ts(365L * 86400L), 9999L)).toDF("k", "s", "e", "lid")
-      .coalesce(1).write.mode("append").parquet(path)
-    Manifest.write(spark, path, "s", intervalCols = Some(("s", "e")))
-
-    val (mx, p99) = IntervalJoin.storedLengthStats(spark, path).get
-    assert(mx >= 365L * 86400L, "max must still see the sentinel")
-    assert(p99 <= 3600L,
-      s"rows-weighted p99 must ignore the 1-row sentinel file, got $p99 s")
-    // and the width the auto form derives stays hour-scale (modulo the
-    // outlier replication floor max/64), not year-scale
-    val w = IntervalJoin.autoBucketWidth(mx, p99)
-    assert(w < 365L * 86400L / 8L,
-      s"bucket width $w s must not collapse to the sentinel length")
   }
 
   test("overlap join plans as an equi join on (key, bucket) — bucket in the hash keys") {

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.storage.{Compactor, Manifest, PrunedScan, RangeWriter}
+import graft.storage.{Manifest, PrunedScan, RangeWriter}
 
 class PrunedScanSpec extends SparkSpec {
   import spark.implicits._
@@ -348,8 +348,7 @@ class PrunedScanSpec extends SparkSpec {
       (col("id") % 256L).as("x"),
       expr("id DIV 256").as("y")) // DIV: `/` on longs is double division
     // the writer ships its own 2-column manifest (keyed on x, y secondary)
-    // plus the zorder_cols/zorder_bits layout witness — no manual
-    // Manifest.write needed (r17: z-order is a production layout)
+    // — no manual Manifest.write needed (r17: z-order is a production layout)
     RangeWriter.writeZOrdered(df, out, "x", "y", bits = 8, numFiles = 16)
     val total = dataFiles(out).length
     assert(total >= 8)
@@ -366,31 +365,6 @@ class PrunedScanSpec extends SparkSpec {
       Seq(("x", 0L, 31L), ("y", 0L, 31L)))
     assert(box.count() === 32L * 32L)
     assert(box.inputFiles.length < total)
-
-    // Compactor carries the z layout (r17): the rebuilt manifest keeps the
-    // zorder_cols/zorder_bits witness, the rewrite RE-CLUSTERS on it (not
-    // round-robin), and pruning on either axis survives the compaction —
-    // without the witness a compaction would rebuild wide-stats files and
-    // silently degrade both axes to a full scan
-    val mBefore = Manifest.read(spark, out)
-    assert(mBefore.columns.contains("zorder_cols") &&
-      mBefore.select("zorder_cols").head().getString(0) === "x,y")
-    val nOut = Compactor.compact(spark, out, targetBytes = 64L * 1024)
-    val mAfter = Manifest.read(spark, out)
-    assert(mAfter.columns.contains("zorder_cols") &&
-      mAfter.select("zorder_cols").head().getString(0) === "x,y" &&
-      mAfter.select("zorder_bits").head().getLong(0) === 8L,
-      "compaction must carry the z-order witness")
-    val totalAfter = dataFiles(out).length
-    assert(totalAfter === nOut)
-    for (c <- Seq("x", "y")) {
-      val pruned = PrunedScan.readRangeMulti(spark, out, Seq((c, 0L, 31L)))
-      val full = spark.read.parquet(out)
-        .filter(col(c) >= 0L && col(c) <= 31L)
-      assert(pruned.count() === full.count() && pruned.count() > 0)
-      assert(pruned.inputFiles.length < totalAfter,
-        s"$c-range scan read ${pruned.inputFiles.length} of $totalAfter compacted files")
-    }
   }
 
   test("missing instrument dir: proven layout proves empty, foreign layout falls back (r17 review)") {

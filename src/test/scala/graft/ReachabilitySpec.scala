@@ -5,14 +5,19 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards against main code that nothing reaches: every top-level
-  * `object`/`class`/`trait` under `src/main/scala` must be named by
-  * another main file, or by its own file outside its own declaration,
-  * with comments stripped (scaladoc links and specs are not callers).
-  * Roots are not callees: an object that defines `main` (an entry point),
-  * a `SparkSessionExtensions => Unit` class (loaded by name from the
-  * `spark.sql.extensions` config string), and the library entry points in
-  * [[ReachabilitySpec.LibraryRoots]].
+/** Guards against main code that nothing reaches, with comments stripped
+  * (scaladoc links and specs are not callers):
+  *
+  *   - every top-level `object`/`class`/`trait` under `src/main/scala`
+  *     must be named by another main file, or by its own file outside its
+  *     own declaration. Roots are not callees: an object that defines
+  *     `main` (an entry point), a `SparkSessionExtensions => Unit` class
+  *     (loaded by name from the `spark.sql.extensions` config string), and
+  *     the library entry points in [[ReachabilitySpec.LibraryRoots]];
+  *   - every main `def` must be named somewhere in main code besides its
+  *     own definitions. Exempt are overrides, `main`/`apply`/`unapply`,
+  *     the public methods of the [[ReachabilitySpec.PublicApi]] files and
+  *     the methods in [[ReachabilitySpec.MethodRoots]].
   */
 class ReachabilitySpec extends AnyFunSuite {
 
@@ -100,6 +105,33 @@ class ReachabilitySpec extends AnyFunSuite {
     }.sorted
   }
 
+  private val Def =
+    """(?m)^\s*((?:(?:override|private(?:\[\w+\])?|protected(?:\[\w+\])?|final|implicit|lazy|inline)\s+)*)def\s+([A-Za-z_]\w*)""".r
+  private val Ident = """\b[A-Za-z_]\w*""".r
+
+  /** Main defs whose name occurs in main code only at its own definitions
+    * (every `def name` site of it counted), as "File.name (path)", sorted.
+    */
+  private def uncalledDefs(sources: Map[String, String]): Seq[String] = {
+    val stripped = sources.map { case (path, src) => path -> stripComments(src) }
+    val named = stripped.values.flatMap(Ident.findAllIn(_)).groupMapReduce(identity)(_ => 1)(_ + _)
+    val defs = stripped.toSeq.flatMap { case (path, src) =>
+      Def.findAllMatchIn(src).map(m => (path, m.group(1), m.group(2)))
+    }
+    val defined = defs.groupMapReduce(_._3)(_ => 1)(_ + _)
+    defs.collect {
+      case (path, mods, name) if named(name) == defined(name) &&
+          !mods.contains("override") && !Set("main", "apply", "unapply")(name) &&
+          !(ReachabilitySpec.PublicApi(path) && !mods.contains("private") &&
+            !mods.contains("protected")) &&
+          !ReachabilitySpec.MethodRoots.contains(s"${fileType(path)}.$name") =>
+        s"${fileType(path)}.$name ($path)"
+    }.distinct.sorted
+  }
+
+  private def fileType(path: String): String =
+    new File(path).getName.stripSuffix(".scala")
+
   test("stripComments drops line, block and nested comments but keeps literals") {
     val src = "a // Foo\nb /* Bar /* Baz */ Qux */ c \"// Keep\" '\"' d"
     val s = stripComments(src)
@@ -117,13 +149,48 @@ class ReachabilitySpec extends AnyFunSuite {
     assert(orphans.isEmpty,
       s"top-level main types that no other main file names:\n  ${orphans.mkString("\n  ")}")
   }
+
+  test("every main def is named in main code outside its own definition") {
+    assert(mainDir.isDirectory, s"run from the project root: ${mainDir.getAbsolutePath}")
+    val sources = scalaFiles(mainDir).map { f =>
+      mainDir.toPath.relativize(f.toPath).toString ->
+        new String(Files.readAllBytes(f.toPath), "UTF-8")
+    }.toMap
+    // a method root kept for a spec must still be used by that spec
+    ReachabilitySpec.MethodRoots.foreach { case (method, spec) =>
+      val specSrc = new String(Files.readAllBytes(
+        new File(s"src/test/scala/graft/$spec.scala").toPath), "UTF-8")
+      assert(raw"\b${method.split('.').last}\b".r.findFirstIn(specSrc).isDefined,
+        s"$spec no longer uses $method: drop it from MethodRoots")
+    }
+    val uncalled = uncalledDefs(sources)
+    assert(uncalled.isEmpty,
+      s"main methods that no main code calls:\n  ${uncalled.mkString("\n  ")}")
+  }
 }
 
 object ReachabilitySpec {
   /** Library entry points that users call directly and no query,
     * `Processor` method or `main` reaches: the remote-archive fetch that
-    * fills the spool `Processor.updateData` ingests, and small-file
-    * compaction of a table directory.
+    * fills the spool `Processor.updateData` ingests (the reference's
+    * `download_exness_zip`).
     */
-  val LibraryRoots: Set[String] = Set("TickFetcher", "Compactor")
+  val LibraryRoots: Set[String] = Set("TickFetcher")
+
+  /** Files whose public methods are the user-facing API: the reference's
+    * processor surface and the archive fetch.
+    */
+  val PublicApi: Set[String] = Set("graft/api/Processor.scala", "graft/ingest/TickFetcher.scala")
+
+  /** Methods no main code calls that stay on purpose, each with a spec
+    * that uses it: the flagship smoke query, the installer of the engine's
+    * functions and planner rules on an already-built session, and three
+    * reference twins that specs compare production paths against.
+    */
+  val MethodRoots: Map[String, String] = Map(
+    "SparkEntry.entry" -> "ContractSpec",
+    "GraftExtensions.register" -> "ZOrderSpec",
+    "MinHash.reconcileIncremental" -> "StreamingDedupSpec",
+    "CorpusOps.dsirLogWeightsUncut" -> "PlanSpec",
+    "VectorFunctions.assignCells" -> "ReviewFixSpec")
 }

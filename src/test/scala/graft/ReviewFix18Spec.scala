@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.Processor
 import graft.ingest.TickIngest
-import graft.storage.{Compactor, Manifest, PrunedScan, RangeWriter}
+import graft.storage.PrunedScan
 
 /** Regression pins for the round-17 advisor findings. */
 class ReviewFix18Spec extends SparkSpec {
@@ -23,7 +23,7 @@ class ReviewFix18Spec extends SparkSpec {
     // the cursor bound is rendered with an explicit Locale.ROOT formatter;
     // a locale whose DecimalStyle zero digit is not ASCII '0' (ar-SA)
     // must not be able to leak non-ASCII digits into the wall-clock
-    // string PrunedScan.parseWallClock/monthOf consume
+    // string PrunedScan.parseWallClock/monthOfLo consume
     val wh = Files.createTempDirectory("graft_r18_loc").toString
     val ticks = Seq(
       (Timestamp.valueOf("2024-01-10 10:00:00"), 1.1, 1.2),
@@ -41,35 +41,6 @@ class ReviewFix18Spec extends SparkSpec {
       assert(page.rows.head().getAs[Double]("bid") === 1.3)
     } finally
       java.util.Locale.setDefault(java.util.Locale.Category.FORMAT, prev)
-  }
-
-  test("compact() succeeds even when the post-swap manifest rebuild fails") {
-    // a legacy/hand-written sidecar can parse as a Manifest (key_col
-    // present) yet name a `cols` witness column absent from the data —
-    // Manifest.build then throws. That happens AFTER the successful swap,
-    // so it must be best-effort: compact() returns, the carried stale
-    // manifest stays, and the freshness check routes readers around it.
-    val dir = Files.createTempDirectory("graft_r18_cmp").toString + "/t"
-    val df = spark.range(1000).select(
-      col("id").as("k"), (col("id") * 2).as("v"))
-    RangeWriter.writeSorted(df, dir, Seq("k"), numFiles = 4)
-    Manifest.write(spark, dir, "k")
-    // corrupt the witness: claim secondary stats for a nonexistent column
-    val mPath = s"$dir/_manifest"
-    val m = spark.read.json(mPath).withColumn("cols", lit("no_such_col"))
-    val mLines = m.toJSON.collect()
-    val mDir = new java.io.File(mPath)
-    mDir.listFiles().foreach(_.delete())
-    Files.writeString(mDir.toPath.resolve("part-00000.json"),
-      mLines.mkString("\n"))
-    val n = Compactor.compact(spark, dir, targetBytes = 1L << 30)
-    assert(n === 1)
-    // data survived the compaction
-    assert(spark.read.parquet(dir).count() === 1000)
-    // the stale carried manifest is rejected by freshness, so the pruned
-    // read falls back to scanning every file — slower, never wrong
-    val pruned = PrunedScan.readRange(spark, dir, "k", 10L, 20L)
-    assert(pruned.count() === 11)
   }
 
   test("monthOfLo/monthOfHi: exact under fixed offsets, one-day slack under transitions") {

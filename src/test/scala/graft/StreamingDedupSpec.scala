@@ -11,56 +11,6 @@ class StreamingDedupSpec extends SparkSpec {
 
   private def t(s: String) = Timestamp.valueOf(s)
 
-  test("dropDuplicatesWithinWatermark dedups across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Double)]
-    val deduped = StreamingOhlc.dedupWithinWatermark(
-      mem.toDF.toDF("id", "ts", "v"), Seq("id"), "ts", "10 minutes")
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out").start()
-    try {
-      mem.addData((1L, t("2024-01-01 00:00:00"), 1.0),
-                  (2L, t("2024-01-01 00:00:01"), 2.0))
-      q.processAllAvailable()
-      // same ids again in a LATER batch, still within the watermark horizon
-      mem.addData((1L, t("2024-01-01 00:00:05"), 9.0),
-                  (3L, t("2024-01-01 00:00:06"), 3.0))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_out").select("id").as[Long].collect().sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join pairs events within the lookback window") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp, String)]
-    val buys = MemoryStream[(Long, Timestamp, Double)]
-    val joined = StreamingOhlc.intervalJoin(
-      buys.toDF.toDF("uid", "bts", "amount"),
-      clicks.toDF.toDF("uid", "cts", "page"),
-      key = "uid", leftTime = "bts", rightTime = "cts",
-      lookback = "10 minutes", watermark = "1 minute")
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("ij_out").start()
-    try {
-      clicks.addData((1L, t("2024-01-01 00:00:00"), "home"),
-                     (1L, t("2024-01-01 00:04:00"), "product"),
-                     (1L, t("2024-01-01 00:20:00"), "too_late_page"),
-                     (2L, t("2024-01-01 00:01:00"), "other_user"))
-      buys.addData((1L, t("2024-01-01 00:05:00"), 9.99))
-      q.processAllAvailable()
-      // advance both watermarks so the joined rows emit
-      clicks.addData((9L, t("2024-01-01 01:00:00"), "x"))
-      buys.addData((9L, t("2024-01-01 01:00:00"), 0.0))
-      q.processAllAvailable()
-      val pages = spark.table("ij_out")
-        .filter($"amount" === 9.99).select("page").as[String].collect().sorted
-      // both clicks within [t-10m, t] pair up; the later click and the
-      // other user's click do not
-      assert(pages.toSeq == Seq("home", "product"))
-    } finally q.stop()
-  }
-
   test("streaming parquet file sink: checkpointed append lands every closed bar exactly once") {
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("strsink").toString
@@ -111,24 +61,5 @@ class StreamingDedupSpec extends SparkSpec {
       Map(1L -> 1L, 2L -> 1L, 10L -> 10L))
     val reps = freshIdx.select("group_rep").distinct().as[Long].collect().toSet
     assert(reps == Set(1L, 10L), reps.toString)
-  }
-
-  test("stream-static join enriches each micro-batch from a broadcast dim") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("id", "tier")
-    val mem = MemoryStream[(Long, Double)]
-    val enriched = StreamingOhlc.enrichStatic(
-      mem.toDF.toDF("id", "v"), dim, Seq("id"))
-    val q = enriched.writeStream.outputMode("append")
-      .format("memory").queryName("enrich_out").start()
-    try {
-      mem.addData((1L, 10.0), (2L, 20.0), (9L, 90.0))
-      q.processAllAvailable()
-      val rows = spark.table("enrich_out")
-        .select("id", "tier").as[(Long, Option[String])].collect().toMap
-      assert(rows(1L).contains("gold"))
-      assert(rows(2L).contains("silver"))
-      assert(rows(9L).isEmpty) // left join keeps unmatched stream rows
-    } finally q.stop()
   }
 }

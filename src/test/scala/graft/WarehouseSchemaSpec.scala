@@ -5,7 +5,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.api.Processor
 import graft.ingest.TickIngest
@@ -15,7 +17,8 @@ import graft.ohlc.OhlcGenerator
   * declare: the declared schema is exactly what Spark infers from the
   * written files, and planning a tick or OHLC read therefore launches no
   * Spark job (no footer is opened to re-infer it). A paged read with a
-  * page size below 1 is rejected by name before any job, too.
+  * page size below 1 is rejected by name before any job, too. A ranged
+  * OHLC read prunes months even when the layout proof fails.
   */
 class WarehouseSchemaSpec extends SparkSpec {
 
@@ -60,6 +63,25 @@ class WarehouseSchemaSpec extends SparkSpec {
     finally sc.removeSparkListener(listener)
   }
 
+  /** Files each file scan executed while `body` runs actually read. */
+  private def scannedFilesDuring(body: => Any): Seq[Long] = {
+    val sc = spark.sparkContext
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.executedPlan.foreach {
+          case s: FileSourceScanExec => scans.add(s.metrics("numFiles").value)
+          case _ =>
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestListenerBus.drain(sc)
+    spark.listenerManager.register(listener)
+    try { body; TestListenerBus.drain(sc) }
+    finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(scans).asScala.toSeq
+  }
+
   private def typed(s: StructType): Seq[(String, DataType)] =
     s.fields.toSeq.map(f => f.name -> f.dataType)
 
@@ -99,6 +121,33 @@ class WarehouseSchemaSpec extends SparkSpec {
     assert(bars.length === 27)
     assert(typed(bars) === OhlcGenerator.Columns.map(c =>
       c -> OhlcGenerator.TableSchema(c).dataType))
+  }
+
+  test("a ranged OHLC page on an unproven layout still plans only in-range month files") {
+    val (p, wh) = freshWarehouse()
+    def feb(q: Processor) = q.queryOhlcPage("EURUSD", cursor = None, pageSize = 10,
+      start = Some("2024-02-01"), end = Some("2024-02-29"))
+    val proven = feb(p).rows.collect().toSeq
+    assert(proven.nonEmpty)
+    // a foreign layout of the same bars: month partitions only, the
+    // instrument a data column. There is no instrument= dir to prove, so
+    // the read falls back to the plain partitioned scan, and the caller's
+    // month predicates must still keep January's files out of it
+    val foreign = s"$wh/foreign"
+    spark.read.parquet(s"$wh/ohlc_1m").write.partitionBy("yyyymm")
+      .parquet(s"$foreign/ohlc_1m")
+    def parquet(dir: String): Int = {
+      val f = new java.io.File(dir)
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(c => parquet(c.getPath)).sum
+      else if (f.getName.endsWith(".parquet")) 1 else 0
+    }
+    val febFiles = parquet(s"$foreign/ohlc_1m/yyyymm=202402")
+    assert(febFiles > 0 && parquet(s"$foreign/ohlc_1m") > febFiles)
+    var page: graft.query.QueryEngine.CursorPage = null
+    val scans = scannedFilesDuring { page = feb(new Processor(spark, foreign)) }
+    assert(scans.nonEmpty && scans.forall(_ <= febFiles),
+      s"scans read ${scans.mkString(", ")} files; February has $febFiles")
+    assert(page.rows.collect().toSeq === proven)
   }
 
   test("a page size below 1 is rejected by name before any Spark job runs") {

@@ -136,41 +136,6 @@ class ZOrderSpec extends SparkSpec {
     }
   }
 
-  test("longColBounds folds fresh manifest stats into cast-to-long bounds; stale/string -> None") {
-    import graft.storage.{Manifest, PrunedScan, RangeWriter}
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = java.nio.file.Files.createTempDirectory("zorder_lcb").toString + "/t"
-    val df = spark.range(100).select(
-      col("id").as("k"),
-      (col("id").cast("double") / 2 - 10.0).as("v"),
-      timestamp_seconds(lit(1700000000L) + col("id")).as("ts"),
-      concat(lit("s"), col("id")).as("s"))
-    RangeWriter.writeSorted(df, dir, Seq("k"), numFiles = 4)
-    Manifest.write(spark, dir, "k", extraCols = Seq("v", "ts", "s"))
-    assert(PrunedScan.longColBounds(conf, new Path(dir), "k") === Some((0L, 99L)))
-    // doubles truncate toward zero like cast("long"): min -10.0 -> -10,
-    // max 39.5 -> 39
-    assert(PrunedScan.longColBounds(conf, new Path(dir), "v") === Some((-10L, 39L)))
-    // timestamps fold to epoch seconds (cast-to-long semantics)
-    assert(PrunedScan.longColBounds(conf, new Path(dir), "ts")
-      === Some((1700000000L, 1700000099L)))
-    // strings are not long-castable
-    assert(PrunedScan.longColBounds(conf, new Path(dir), "s") === None)
-    // unrecorded column: no evidence
-    assert(PrunedScan.longColBounds(conf, new Path(dir), "nope") === None)
-    // the one-listing two-column form agrees with the pairwise calls
-    assert(PrunedScan.longColBounds2(conf, new Path(dir), "k", "v")
-      === Some((0L, 99L, -10L, 39L)))
-    assert(PrunedScan.longColBounds2(conf, new Path(dir), "k", "s") === None)
-    // staleness: adding a data file the sidecar doesn't know kills reuse
-    val stray = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(stray.toPath,
-      new java.io.File(dir, "part-stray.parquet").toPath)
-    assert(PrunedScan.longColBounds(conf, new Path(dir), "k") === None)
-  }
-
   test("writeZOrdered: all-NULL y dimension falls back to a plain write, no NPE") {
     // pre-fix: the empty/all-null guard checked only b.isNullAt(0) (x min),
     // so a non-empty frame whose yCol was entirely NULL passed the guard

@@ -156,59 +156,22 @@ final class Processor(spark: SparkSession, warehouse: String) {
     } finally rawIn.unpersist()
   }
 
-  /** Month-partition labels of `table` for one instrument, from ONE
-    * driver-side directory listing — ZERO Spark jobs (r16). The partition
-    * directory names ARE ground truth: the writers derive `yyyymm` from
-    * each row's timestamp, so a month's rows live exactly in its
-    * directory. None when the layout is not the proven
-    * instrument=/yyyymm= shape (stray files, foreign partitioning) — the
-    * caller falls back to the data scan; a month directory holding no
-    * data files contributes nothing (it holds no rows either). An
-    * instrument absent from a PROVEN layout is a true empty Seq.
-    */
-  private def storedMonthsMeta(table: String, pair: String): Option[Seq[String]] =
-    try {
-      import graft.storage.PrunedScan
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(s"$warehouse/$table")
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) return Some(Nil)
-      // shared layout proofs (PrunedScan.provenInstrumentDirs/MonthDirs —
-      // one set of rules for coverage, gaps, and listing, so the fast
-      // paths can't drift apart): every root child an UPPERCASE
-      // instrument= dir, every instrument child a valid yyyymm= dir
-      val instDirs = PrunedScan.provenInstrumentDirs(fs, root) match {
-        case Some(dirs) => dirs
-        case None => return None
-      }
-      val mine = instDirs.filter(_.getName == s"instrument=${pair.toUpperCase(java.util.Locale.ROOT)}")
-      val months = mine.flatMap { d =>
-        PrunedScan.provenMonthDirs(fs, d) match {
-          case Some(mdirs) =>
-            // a month dir with no data files holds no rows: not stored
-            // (zero-row part files cannot arise — see hasDataFiles doc)
-            mdirs.filter(PrunedScan.hasDataFiles(fs, _))
-              .map(_.getName.stripPrefix("yyyymm="))
-          case None => return None // stray files/labels: layout unproven
-        }
-      }
-      Some(months.sorted)
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Months with no stored raw_spread ticks, from the earliest stored month
     * to the current month (`clickhouse_gap_detector.py:57-139`).
     *
     * METADATA FAST PATH (r16): on the warehouse's own instrument=/yyyymm=
-    * layout the stored months are the partition directory NAMES — the gap
-    * list is pure driver-side arithmetic over one listing, zero Spark
-    * jobs (the reference answers this from partition metadata the same
-    * way, `clickhouse_gap_detector.py:57-93`). Any other layout falls
-    * back to the month-series EXCEPT distinct-months scan.
+    * layout the stored months are the partition directory NAMES holding
+    * data files ([[storedMonths]]) — the gap list is pure driver-side
+    * arithmetic over one listing, zero Spark jobs (the reference answers
+    * this from partition metadata the same way,
+    * `clickhouse_gap_detector.py:57-93`). Any other layout falls back to
+    * the month-series EXCEPT distinct-months scan.
     */
   def missingMonths(pair: String): Seq[String] = {
     val p = validatePair(pair)
     if (!tableExists("raw_spread_ticks")) return Nil
-    storedMonthsMeta("raw_spread_ticks", p) match {
+    storedMonths("raw_spread_ticks", Some(p))(
+        _.filter(_.files.nonEmpty).map(_.label)) match {
       case Some(Nil) => return Nil // proven layout, no stored months
       case Some(months) =>
         val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMM")
@@ -242,6 +205,22 @@ final class Processor(spark: SparkSession, warehouse: String) {
     gaps.map(d => graft.storage.PrunedScan.pad(d.getYear, 4) + "-" +
       graft.storage.PrunedScan.pad(d.getMonthValue, 2)).toSeq
   }
+
+  /** `f` over the months of `table` (of `pair`, or of every instrument)
+    * from the storage walk ([[graft.storage.PrunedScan.months]]): ZERO
+    * Spark jobs (r16). The partition directory names ARE ground truth —
+    * the writers derive `yyyymm` from each row's timestamp — and a month
+    * directory with no data files holds no rows (zero-row part files
+    * cannot arise: Spark's writer skips empty tasks, and the writers never
+    * write an empty frame). None when the layout is not the proven
+    * instrument=/yyyymm= shape or a listing fails: the caller scans
+    * instead.
+    */
+  private def storedMonths[A](table: String, pair: Option[String])(
+      f: Seq[graft.storage.PrunedScan.Month] => A): Option[A] =
+    try graft.storage.PrunedScan.months(spark.sessionState.newHadoopConf(),
+        new org.apache.hadoop.fs.Path(s"$warehouse/$table"), pair).map(f)
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Hadoop FS existence probe — the warehouse can be file://, hdfs://, or
     * s3a:// (java.io.File would silently report every remote table absent,
@@ -412,7 +391,12 @@ final class Processor(spark: SparkSession, warehouse: String) {
 
   def getInstruments: Seq[String] =
     if (!tableExists("raw_spread_ticks")) Nil
-    else instrumentsMeta("raw_spread_ticks").getOrElse {
+    else storedMonths("raw_spread_ticks", None) { ms =>
+      // an instrument is stored when any of its months holds a data file;
+      // the lazy listing stops at its first such month
+      ms.map(_.instrument).distinct
+        .filter(i => ms.exists(m => m.instrument == i && m.files.nonEmpty))
+    }.getOrElse {
       // unproven layout: the distinct scan stays the truth
       Processor.listingDataScans.incrementAndGet()
       graft.storage.PrunedScan.readTable(spark, s"$warehouse/raw_spread_ticks",
@@ -420,32 +404,6 @@ final class Processor(spark: SparkSession, warehouse: String) {
         .select("instrument").distinct().orderBy("instrument")
         .collect().map(_.getString(0)).toSeq
     }
-
-  /** Instruments with stored data, from ONE driver-side listing — ZERO
-    * Spark jobs (r16): the instrument= partition directory names holding
-    * at least one non-empty month. None when the layout is not the proven
-    * instrument=/yyyymm= shape (the caller scans instead).
-    */
-  private def instrumentsMeta(table: String): Option[Seq[String]] =
-    try {
-      import graft.storage.PrunedScan
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(s"$warehouse/$table")
-      val fs = root.getFileSystem(conf)
-      // ONE root listing; each instrument dir proven + walked once (no
-      // per-instrument re-derivation from the root)
-      val instDirs = PrunedScan.provenInstrumentDirs(fs, root) match {
-        case Some(dirs) => dirs
-        case None => return None
-      }
-      val names = instDirs.filter { d =>
-        PrunedScan.provenMonthDirs(fs, d) match {
-          case Some(mdirs) => mdirs.exists(PrunedScan.hasDataFiles(fs, _))
-          case None => return None // stray files below: layout unproven
-        }
-      }.map(_.getName.stripPrefix("instrument="))
-      Some(names.sorted)
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Earliest/latest dates with actual data, as ISO strings
     * (`get_available_dates`, `processor.py:550-563`): (None, None) when
@@ -557,14 +515,15 @@ final class Processor(spark: SparkSession, warehouse: String) {
       ticksFrom(p, variant, start, end), "timestamp", Nil, pageSize, maxBatches)
   }
 
-  /** The one pruned ohlc_1m range read, shared by [[queryOhlc]], the pager
-    * and the batch iterator: bars of `p` in the inclusive `start`..`end`
-    * date bounds, in the reference's 27-column order
-    * (clickhouse_manager.py:196-224). Regenerate refreshes each rewritten
-    * month's `_manifest` (keyed on timestamp), so month partitions outside
-    * the range are dropped BY NAME on the driver and each surviving month
-    * is zone-mapped through its sidecar — the same
-    * [[graft.storage.PrunedScan]] path as the tick reads.
+  /** The one pruned ohlc_1m read, shared by [[queryOhlc]], the pager and
+    * the batch iterator: bars of `p` in the inclusive `start`..`end` date
+    * bounds, in the reference's 27-column order
+    * (clickhouse_manager.py:196-224). Only `p`'s months are listed, ranged
+    * or not. Regenerate refreshes each rewritten month's `_manifest`
+    * (keyed on timestamp), so month partitions outside the range are
+    * dropped BY NAME on the driver and each surviving month is zone-mapped
+    * through its sidecar — the same [[graft.storage.PrunedScan]] path as
+    * the tick reads.
     *
     * With a cursor in hand (keyset pagination), month partitions strictly
     * before the cursor's month are dropped too, so a page at the tail of a
@@ -616,13 +575,17 @@ final class Processor(spark: SparkSession, warehouse: String) {
         .filter(col("instrument") === p))
       .select(OhlcGenerator.Columns.map(col): _*)
     def plain() = read(Nil)
-    if (lo.isEmpty && hi.isEmpty) plain()
-    else PrunedScan.monthPartitionedFiles(
-      spark.sessionState.newHadoopConf(), new Path(root), "timestamp",
-      Some(p), lo.map(PrunedScan.monthOfLo(spark, _)),
-      hi.map(PrunedScan.monthOfHi(spark, _)),
-      PrunedScan.sessionInstant(spark, lo.getOrElse("1900-01-01")),
-      PrunedScan.sessionInstant(spark, hi.getOrElse("9999-01-01"))) match {
+    // an unranged read lists only this instrument's months and reads no
+    // sidecar: there is no key bound to prune on
+    val bounds =
+      if (lo.isEmpty && hi.isEmpty) Nil
+      else Seq(("timestamp",
+        PrunedScan.sessionInstant(spark, lo.getOrElse("1900-01-01")),
+        PrunedScan.sessionInstant(spark, hi.getOrElse("9999-01-01"))))
+    PrunedScan.monthPartitionedFiles(
+      spark.sessionState.newHadoopConf(), new Path(root), Some(p),
+      lo.map(PrunedScan.monthOfLo(spark, _)),
+      hi.map(PrunedScan.monthOfHi(spark, _)), bounds) match {
       case None => plain()
       case Some(Nil) => plain().filter(lit(false)) // schema-exact empty
       case Some(paths) => read(paths)

@@ -303,34 +303,22 @@ object TickIngest {
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
     // Refresh the _manifest sidecar of each TOUCHED month partition (one
     // small single-column job per month over files just written): the
-    // zero-probe dispatch metadata (OhlcGenerator.footerMonthCounts) then
+    // zero-probe dispatch metadata (OhlcGenerator.tableMonthCounts) then
     // answers from one sidecar read per partition instead of one footer
     // round-trip per data file — the difference that matters once batches
     // accumulate files in a month (especially on object stores, where each
     // footer open is a request). Untouched months keep their sidecars
-    // byte-identical; a crash between the data write and this refresh
-    // leaves a STALE sidecar, which the reader's file-name freshness check
-    // rejects in favor of footers — never wrong, only slower.
-    // Best-effort: the sidecar is an optimization, and the DATA write above
-    // already succeeded — failing the batch over a failed JSON write would
-    // be wrong (the reader's freshness check routes a missing/stale sidecar
-    // to the footer fallback).
+    // byte-identical. bid/ask secondary zone-map stats ride the same
+    // single manifest scan (r17, r16 verdict item 5): zero-spread scans
+    // (bid = ask) and price-band filters are documented workloads
+    // (`docs/CLICKHOUSE_USER_GUIDE.md:450-454`), and under the per-month
+    // timestamp sort prices are locally correlated enough that per-file
+    // bid/ask ranges prune band queries to the files that actually traded
+    // in the band
     try {
-      val touchedMonths = deduped.select("yyyymm").distinct()
-        .collect().map(_.getString(0))
-      touchedMonths.foreach { m =>
-        // bid/ask secondary zone-map stats ride the same single manifest
-        // scan (r17, r16 verdict item 5): zero-spread scans (bid = ask)
-        // and price-band filters are documented workloads
-        // (`docs/CLICKHOUSE_USER_GUIDE.md:450-454`), and under the
-        // per-month timestamp sort prices are locally correlated enough
-        // that per-file bid/ask ranges prune band queries to the files
-        // that actually traded in the band
-        try graft.storage.Manifest.write(spark,
-          s"$warehouse/${variant}_ticks/instrument=${instrument.toUpperCase(java.util.Locale.ROOT)}/yyyymm=$m",
-          "timestamp", extraCols = Seq("bid", "ask"))
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      PrunedScan.writeMonthManifests(spark, s"$warehouse/${variant}_ticks",
+        instrument, deduped.select("yyyymm").distinct().collect().map(_.getString(0)),
+        extraCols = Seq("bid", "ask"))
       // inserted-row count = the batch itself, answered from the cache
       // (the Manifest.write jobs above scan the WRITTEN files — that scan
       // per touched month is the sidecar's cost and is unavoidable; the
@@ -375,7 +363,7 @@ object TickIngest {
   /** [[readTicks]] with zone-map FILE skipping on top of its partition
     * pruning: month partitions outside the requested range are dropped by
     * NAME on the driver (never listed), and within each surviving month
-    * the `_manifest` sidecar [[graft.storage.PrunedScan.prunedDataFilesMulti]]
+    * the `_manifest` sidecar ([[graft.storage.PrunedScan.monthPartitionedFiles]])
     * selects only the files whose timestamp range can intersect the
     * predicate — the Spark-native equivalent of the reference's sparse
     * primary index ORDER BY (instrument, timestamp)
@@ -418,12 +406,13 @@ object TickIngest {
     // secondary stats and are re-applied exactly below, so a sidecar
     // without them is slower, never wrong.
     val files: Option[Seq[Path]] = PrunedScan.monthPartitionedFiles(
-      spark.sessionState.newHadoopConf(), new Path(root), "timestamp",
-      instrument, start.map(PrunedScan.monthOfLo(spark, _)),
+      spark.sessionState.newHadoopConf(), new Path(root), instrument,
+      start.map(PrunedScan.monthOfLo(spark, _)),
       end.map(PrunedScan.monthOfHi(spark, _)),
-      PrunedScan.sessionInstant(spark, start.getOrElse("1900-01-01")),
-      PrunedScan.sessionInstant(spark, end.getOrElse("9999-01-01")),
-      extraBounds, overlapPairs)
+      ("timestamp",
+        PrunedScan.sessionInstant(spark, start.getOrElse("1900-01-01")),
+        PrunedScan.sessionInstant(spark, end.getOrElse("9999-01-01"))) +: extraBounds,
+      overlapPairs)
     files match {
       case None => fallback()
       case Some(Nil) => fallback().filter(lit(false)) // schema-exact empty

@@ -101,49 +101,36 @@ object OhlcGenerator {
     enriched.select(Columns.map(col): _*)
   }
 
-  /** Exact stored row counts per month for one (variant, instrument,
-    * months-subset), from METADATA only — no Spark job, no data pages.
-    * Two tiers per month partition:
-    *
-    *   1. a `_manifest` sidecar ([[graft.storage.Manifest]]) when one is
-    *      present AND its file-name set matches the directory's actual
-    *      parquet basenames (Spark writes fresh task-UUID names on every
-    *      overwrite, so a name-set match proves freshness): ONE small
-    *      sidecar read answers for the whole partition — at
-    *      100 TB-warehouse file counts this replaces O(files) footer
-    *      round-trips (each a driver-side open, painful on object stores).
-    *      Ingest refreshes the sidecar of every month it touches
-    *      ([[graft.ingest.TickIngest.writeTicks]]), so on the normal
-    *      lifecycle this tier always answers;
-    *   2. otherwise one parquet FOOTER read per file (footer row counts
-    *      are exact, written by the committing task).
-    *
-    * Either way the sum equals `readTicks(...).count()` without the scan.
-    * `months` empty = all stored months of the instrument. Throws on an
-    * unreadable footer (corrupt/zero-length file): the count is then
-    * unknowable from metadata, and [[regenerate]] falls back to a probed
-    * "auto" dispatch rather than guessing.
-    */
-  /** Monotone count of parquet FOOTER opens paid by the metadata tiers —
-    * the cost the `_manifest` sidecar tier exists to avoid. Specs pin that
-    * a freshly-written partition's count answers from its sidecar with
-    * ZERO footer opens (ForexPipelineSpec), the way [[Probes.probeJobs]]
-    * pins zero decision scans.
+  /** Monotone count of parquet FOOTER opens paid by [[tableMonthCounts]]
+    * — the cost the `_manifest` sidecar tier exists to avoid. Specs pin
+    * that a freshly-written partition's count answers from its sidecar
+    * with ZERO footer opens (ForexPipelineSpec), the way
+    * [[Probes.probeJobs]] pins zero decision scans.
     */
   private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private[graft] def footerMonthCounts(
-      spark: SparkSession,
-      warehouse: String,
-      variant: String,
-      instrument: String,
-      months: Seq[String]
-  ): Seq[(String, Long)] =
-    tableMonthCounts(spark, warehouse, s"${variant}_ticks", instrument, months)
-
-  /** [[footerMonthCounts]] generalized to any instrument/yyyymm-partitioned
-    * warehouse table (tick variants AND `ohlc_1m` — bar-count accounting
-    * mirrors `clickhouse_ohlc_generator.py:199-210`).
+  /** Exact stored row counts per month of one instrument in an
+    * instrument/yyyymm warehouse table (the tick variants and `ohlc_1m` —
+    * bar-count accounting mirrors `clickhouse_ohlc_generator.py:199-210`),
+    * from METADATA only — no Spark job, no data pages. `months` empty =
+    * all stored months of the instrument. The months come from the
+    * storage walk ([[graft.storage.PrunedScan.months]]), and each answers
+    * from one of two tiers:
+    *
+    *   1. its fresh `_manifest` sidecar ([[graft.storage.Manifest.entries]]):
+    *      ONE small read for the whole partition — at 100 TB-warehouse file
+    *      counts this replaces O(files) footer round-trips (each a
+    *      driver-side open, painful on object stores). Ingest and
+    *      [[regenerate]] refresh the sidecar of every month they write, so
+    *      on the normal lifecycle this tier always answers;
+    *   2. otherwise one parquet FOOTER read per data file (footer row
+    *      counts are exact, written by the committing task).
+    *
+    * Either way the sum equals `readTicks(...).count()` without the scan.
+    * Throws on an unproven layout or an unreadable footer (corrupt or
+    * zero-length file): the count is then unknowable from metadata, and
+    * [[regenerate]] falls back to a probed "auto" dispatch rather than
+    * guessing.
     */
   private[graft] def tableMonthCounts(
       spark: SparkSession,
@@ -152,37 +139,24 @@ object OhlcGenerator {
       instrument: String,
       months: Seq[String]
   ): Seq[(String, Long)] = {
-    import org.apache.hadoop.fs.Path
+    import graft.storage.{Manifest, PrunedScan}
     val conf = spark.sessionState.newHadoopConf()
-    val base =
-      new Path(s"$warehouse/$table/instrument=${instrument.toUpperCase(java.util.Locale.ROOT)}")
-    val fs = base.getFileSystem(conf)
-    if (!fs.exists(base)) return Nil
-    val monthDirs =
-      if (months.isEmpty)
-        fs.listStatus(base).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("yyyymm="))
-          .map(_.getPath)
-      else months.map(m => new Path(base, s"yyyymm=$m")).filter(fs.exists)
-    monthDirs.map { dir =>
-      val month = dir.getName.stripPrefix("yyyymm=")
-      val parquetFiles = fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      val names = parquetFiles.map(_.getPath.getName).toSet
-      val fromManifest = graft.storage.Manifest.fileRowCounts(conf, dir)
-        .filter(_.keySet == names) // stale/partial sidecar → footers
-        .map(_.values.sum)
-      val rows = fromManifest.getOrElse {
-        parquetFiles.iterator.map { s =>
-          footerReads.incrementAndGet()
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(s, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
+    val root = new org.apache.hadoop.fs.Path(s"$warehouse/$table")
+    val fs = root.getFileSystem(conf)
+    PrunedScan.months(conf, root, Some(instrument), m => months.isEmpty || months.contains(m))
+      .getOrElse(throw new IllegalStateException(s"$root: unproven warehouse layout"))
+      .map { m =>
+        val rows = Manifest.entries(fs, m.dir, m.files).map(_.values.map(_.rows).sum)
+          .getOrElse {
+            m.files.iterator.map { s =>
+              footerReads.incrementAndGet()
+              val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf)
+              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+              try r.getRecordCount finally r.close()
+            }.sum
+          }
+        m.label -> rows
       }
-      month -> rows
-    }
   }
 
   /** Seconds spanned by a set of yyyymm month labels: from the first
@@ -242,12 +216,12 @@ object OhlcGenerator {
     // call. The same footers name WHICH months hold rows, so a "bucketed"
     // verdict also gets its width sized from the stored density
     // (AsofJoin.bucketWidthFor) instead of a fixed day. If the metadata
-    // is unreadable (corrupt footer, listing error) the count is
+    // is unreadable (corrupt footer, unproven layout) the count is
     // unknowable without a scan — fall back to mode="auto" and pay the
     // one probe rather than guessing a form.
     val (asofForm, asofWidth) = (try {
-      val raw = footerMonthCounts(spark, warehouse, "raw_spread", instrument, months)
-      val std = footerMonthCounts(spark, warehouse, "standard", instrument, stdMonths)
+      val raw = tableMonthCounts(spark, warehouse, "raw_spread_ticks", instrument, months)
+      val std = tableMonthCounts(spark, warehouse, "standard_ticks", instrument, stdMonths)
       Some((raw, std))
     } catch { case scala.util.control.NonFatal(_) => None }) match {
       case None => ("auto", 86400L)
@@ -285,6 +259,7 @@ object OhlcGenerator {
     // the instrument's whole subtree does that). The session conf is
     // restored afterwards — regenerate must not silently change overwrite
     // semantics for unrelated writes on the shared session.
+    val root = s"$warehouse/ohlc_1m"
     val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode",
       if (months.isEmpty) "static" else "dynamic")
@@ -296,49 +271,30 @@ object OhlcGenerator {
           .mode("overwrite")
           .option("compression", "zstd")
           .partitionBy("yyyymm")
-          .parquet(s"$warehouse/ohlc_1m/instrument=${instrument.toUpperCase(java.util.Locale.ROOT)}")
+          .parquet(graft.storage.PrunedScan.instrumentDir(root, instrument))
       } else {
         scoped.write
           .mode("overwrite")
           .option("compression", "zstd")
           .partitionBy("instrument", "yyyymm")
-          .parquet(s"$warehouse/ohlc_1m")
+          .parquet(root)
       }
     } finally {
       prevMode.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
     }
-    // Refresh the `_manifest` sidecar of every REWRITTEN ohlc month — the
-    // same best-effort pattern as TickIngest.writeTicks: bar-count
-    // accounting over ohlc_1m (mirrors `clickhouse_ohlc_generator.py:
-    // 199-210`) then answers from one sidecar read per partition instead
-    // of a footer round-trip per data file. A month-scoped rebuild touches
-    // exactly `months`; a full rebuild replaced the instrument's whole
-    // subtree, so every month dir present afterwards is fresh. A failed or
-    // skipped refresh (e.g. a requested month that produced no bars and so
-    // has no directory) leaves a missing/stale sidecar, which the reader's
-    // file-name freshness check routes to footers — never wrong, only
-    // slower.
-    {
-      import org.apache.hadoop.fs.Path
-      val ohlcBase = s"$warehouse/ohlc_1m/instrument=${instrument.toUpperCase(java.util.Locale.ROOT)}"
-      val touched: Seq[String] =
-        if (months.nonEmpty) months
-        else try {
-          val conf = spark.sessionState.newHadoopConf()
-          val base = new Path(ohlcBase)
-          val fs = base.getFileSystem(conf)
-          if (!fs.exists(base)) Nil
-          else fs.listStatus(base).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("yyyymm="))
-            .map(_.getPath.getName.stripPrefix("yyyymm="))
-        } catch { case scala.util.control.NonFatal(_) => Nil }
-      touched.foreach { m =>
-        try graft.storage.Manifest.write(spark, s"$ohlcBase/yyyymm=$m", "timestamp")
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
-    graft.storage.PrunedScan.readTable(spark, s"$warehouse/ohlc_1m", TableSchema)
+    // Refresh the `_manifest` sidecar of every REWRITTEN ohlc month, as
+    // TickIngest.writeTicks does for ticks: bar-count accounting over
+    // ohlc_1m (mirrors `clickhouse_ohlc_generator.py:199-210`) then answers
+    // from one sidecar read per partition instead of a footer round-trip
+    // per data file. A month-scoped rebuild touches exactly `months`; a
+    // full rebuild replaced the instrument's whole subtree, so every month
+    // present afterwards is fresh.
+    graft.storage.PrunedScan.writeMonthManifests(spark, root, instrument,
+      if (months.nonEmpty) months
+      else graft.storage.PrunedScan.months(spark.sessionState.newHadoopConf(),
+        new org.apache.hadoop.fs.Path(root), Some(instrument)).getOrElse(Nil).map(_.label))
+    graft.storage.PrunedScan.readTable(spark, root, TableSchema)
       .filter(col("instrument") === instrument.toUpperCase(java.util.Locale.ROOT))
       .count()
   }

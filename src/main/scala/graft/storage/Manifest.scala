@@ -1,5 +1,8 @@
 package graft.storage
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -121,227 +124,74 @@ object Manifest {
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       .json(s"$path/_manifest")
 
-  /** Read a manifest previously written by [[write]]. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(s"$path/_manifest")
+  /** One data file's line of a sidecar: its row count, the recorded
+    * `key_col`, per-column (min, max) RAW JSON tokens for the key column
+    * and every column of the `cols` witness, and the base64 sketch of
+    * every column of the `bloom_cols` witness that carries one. Tokens
+    * stay raw (quoted string or bare scalar): [[PrunedScan]] owns their
+    * interpretation, so a key type it has never seen degrades to "can't
+    * prune" instead of a wrong comparison. A recorded column with no
+    * min/max is entirely NULL in that file (Spark's JSON writer drops null
+    * fields) → (None, None): provably empty for any range predicate.
+    */
+  final case class Entry(
+      rows: Long,
+      keyCol: String,
+      ranges: Map[String, (Option[String], Option[String])],
+      blooms: Map[String, String])
 
-  /** Driver-side per-file row counts from a manifest sidecar, WITHOUT a
-    * Spark job: parses the `_manifest` JSON part files through the Hadoop
-    * FS directly and returns basename → rows. `None` when no sidecar
-    * exists or it is unreadable/garbled — callers fall back to parquet
-    * footers (or a probe job). The manifest is O(files) and written as a
-    * single coalesced part, so this is one small sequential read however
-    * large the data it describes.
+  // one `"name":token` field of a flat JSON line; the token is a quoted
+  // string (escapes allowed) or a bare scalar up to the next field
+  private val Field = """"((?:[^"\\]++|\\.)*+)":("(?:[^"\\]++|\\.)*+"|[^,}]++)""".r
+
+  /** The sidecar of the flat data directory `dir`, parsed on the driver
+    * WITHOUT a Spark job: basename → [[Entry]], each JSON line parsed
+    * once. The sidecar is O(files) and written as one coalesced part, so
+    * this is one small sequential read however large the data it
+    * describes — at 100 TB-warehouse file counts it replaces a footer
+    * round-trip per data file.
     *
-    * Used by metadata-only dispatch ([[graft.ohlc.OhlcGenerator]]): at
-    * 100 TB-warehouse file counts, one sidecar read per partition replaces
-    * one footer round-trip per data file. Callers MUST validate freshness
-    * by comparing the returned key set against the directory's actual
-    * parquet basenames — Spark writes fresh task-UUID file names on every
-    * (over)write, so a name-set match means the manifest describes exactly
-    * the files present.
+    * `files` are the directory's data files, and the sidecar must name
+    * exactly them: Spark writes fresh task-UUID file names on every
+    * (over)write, so a name-set match proves the sidecar describes the
+    * files present. None when the sidecar is missing, garbled (a line
+    * without file, rows or key_col, or more than one key_col) or stale —
+    * callers fall back to parquet footers or to all files.
     */
-  def fileRowCounts(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: org.apache.hadoop.fs.Path): Option[Map[String, Long]] = {
-    import org.apache.hadoop.fs.Path
+  def entries(
+      fs: FileSystem,
+      dir: Path,
+      files: Seq[FileStatus]): Option[Map[String, Entry]] =
     try {
-      val mdir = new Path(dir, "_manifest")
-      val fs = mdir.getFileSystem(conf)
-      if (!fs.exists(mdir)) return None
-      val parts = fs.listStatus(mdir).toSeq
+      val parts = fs.listStatus(new Path(dir, "_manifest")).toSeq
         .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
           s.getPath.getName.endsWith(".json"))
-      if (parts.isEmpty) return None
-      val filePat = """"file":"([^"]+)"""".r
-      val rowsPat = """"rows":(\d+)""".r
-      val entries = parts.flatMap { p =>
+      val lines = parts.flatMap { p =>
         val in = fs.open(p.getPath)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-          finally in.close()
-        lines.filter(_.nonEmpty).map { line =>
-          val file = filePat.findFirstMatchIn(line).map(_.group(1))
-          val rows = rowsPat.findFirstMatchIn(line).flatMap(_.group(1).toLongOption)
-          (file, rows) match {
-            case (Some(f), Some(r)) => f.split('/').last -> r
-            case _ => return None // garbled line: the whole sidecar is suspect
-          }
-        }
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .filter(_.nonEmpty).toVector
+        finally in.close()
       }
-      Some(entries.toMap)
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+      val parsed = lines.map(line =>
+        entry(Field.findAllMatchIn(line).map(m => m.group(1) -> m.group(2)).toMap))
+      val es = parsed.flatten.toMap
+      if (parsed.contains(None) || es.values.map(_.keyCol).toSet.size != 1 ||
+          es.keySet != files.map(_.getPath.getName).toSet) None
+      else Some(es)
+    } catch { case NonFatal(_) => None }
 
-  /** Driver-side per-file key ranges from a manifest sidecar — the zone
-    * map: (recorded key_col, basename → (min_key, max_key) as RAW JSON
-    * tokens), WITHOUT a Spark job, same parse-the-JSON-parts discipline
-    * as [[fileRowCounts]]. Tokens stay raw (quoted string or bare
-    * numeric) — [[PrunedScan]] owns their interpretation, so a key type
-    * this parser has never seen degrades to "can't prune" instead of a
-    * wrong comparison. A line with key_col but NO min/max is a file whose
-    * key column is entirely NULL (Spark's JSON writer drops null fields)
-    * → (None, None): provably empty for any range predicate. `None` when
-    * the sidecar is missing, garbled, or records more than one key_col.
-    * Callers MUST freshness-check the key set against the directory's
-    * actual parquet basenames, exactly as for [[fileRowCounts]].
-    */
-  def fileKeyRanges(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: org.apache.hadoop.fs.Path)
-      : Option[(String, Map[String, (Option[String], Option[String])])] = {
-    import org.apache.hadoop.fs.Path
-    try {
-      val mdir = new Path(dir, "_manifest")
-      val fs = mdir.getFileSystem(conf)
-      if (!fs.exists(mdir)) return None
-      val parts = fs.listStatus(mdir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-          s.getPath.getName.endsWith(".json"))
-      if (parts.isEmpty) return None
-      val filePat = """"file":"([^"]+)"""".r
-      val keyColPat = """"key_col":"([^"]+)"""".r
-      // a JSON value token: a quoted string (escapes allowed) or a bare
-      // scalar (number / true / false) up to the next field or line end
-      val minPat = (""""min_key":("(?:[^"\\]|\\.)*"|[^,}]+)""").r
-      val maxPat = (""""max_key":("(?:[^"\\]|\\.)*"|[^,}]+)""").r
-      var keyCols = Set.empty[String]
-      val entries = parts.flatMap { p =>
-        val in = fs.open(p.getPath)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-          finally in.close()
-        lines.filter(_.nonEmpty).map { line =>
-          val file = filePat.findFirstMatchIn(line).map(_.group(1)) match {
-            case Some(f) => f.split('/').last
-            case None => return None // garbled line: the sidecar is suspect
-          }
-          keyColPat.findFirstMatchIn(line).map(_.group(1)) match {
-            case Some(k) => keyCols += k
-            case None => return None // a manifest always records key_col
-          }
-          val mn = minPat.findFirstMatchIn(line).map(_.group(1))
-          val mx = maxPat.findFirstMatchIn(line).map(_.group(1))
-          file -> (mn, mx)
-        }
-      }
-      if (keyCols.size != 1) return None
-      Some((keyCols.head, entries.toMap))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Driver-side per-file ranges for an ARBITRARY recorded column —
-    * primary (`key_col`/min_key/max_key) or secondary (`cols` membership +
-    * min__<col>/max__<col>, written via `extraCols`) — WITHOUT a Spark
-    * job, same parse-the-JSON-parts discipline as [[fileRowCounts]].
-    * Returns basename → (min, max) raw JSON tokens. A line whose `cols`
-    * witness lists the column but carries no min__/max__ fields is a file
-    * where that column is entirely NULL → (None, None): provably empty
-    * for any range predicate. `None` when the sidecar is missing/garbled
-    * or the column is recorded NOWHERE (neither key_col nor `cols`) — no
-    * stats is no evidence, the caller must full-scan. Callers MUST
-    * freshness-check the key set against the directory's actual parquet
-    * basenames, exactly as for [[fileRowCounts]].
-    */
-  def fileColRanges(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: org.apache.hadoop.fs.Path,
-      column: String)
-      : Option[Map[String, (Option[String], Option[String])]] = {
-    import org.apache.hadoop.fs.Path
-    try {
-      // primary key: the existing parser already enforces single-key_col
-      fileKeyRanges(conf, dir) match {
-        case Some((k, ranges)) if k == column => return Some(ranges)
-        case _ => ()
-      }
-      val mdir = new Path(dir, "_manifest")
-      val fs = mdir.getFileSystem(conf)
-      if (!fs.exists(mdir)) return None
-      val parts = fs.listStatus(mdir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-          s.getPath.getName.endsWith(".json"))
-      if (parts.isEmpty) return None
-      val filePat = """"file":"([^"]+)"""".r
-      val colsPat = """"cols":"([^"]*)"""".r
-      val q = java.util.regex.Pattern.quote(column)
-      val minPat = (""""min__""" + q + """":("(?:[^"\\]|\\.)*"|[^,}]+)""").r
-      val maxPat = (""""max__""" + q + """":("(?:[^"\\]|\\.)*"|[^,}]+)""").r
-      val entries = parts.flatMap { p =>
-        val in = fs.open(p.getPath)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-          finally in.close()
-        lines.filter(_.nonEmpty).map { line =>
-          val file = filePat.findFirstMatchIn(line).map(_.group(1)) match {
-            case Some(f) => f.split('/').last
-            case None => return None // garbled line: the sidecar is suspect
-          }
-          val listed = colsPat.findFirstMatchIn(line).map(_.group(1)) match {
-            case Some(cs) => cs.split(',').contains(column)
-            case None => false // no secondary witness on this line
-          }
-          if (!listed) return None // column not recorded: no evidence
-          val mn = minPat.findFirstMatchIn(line).map(_.group(1))
-          val mx = maxPat.findFirstMatchIn(line).map(_.group(1))
-          file -> (mn, mx)
-        }
-      }
-      Some(entries.toMap)
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Driver-side per-file bloom sketches for `column` from a manifest
-    * sidecar written with `bloomCols` — basename → decoded sketch —
-    * WITHOUT a Spark job, same parse-the-JSON-parts discipline as
-    * [[fileRowCounts]]. `None` when no sidecar exists, it is garbled,
-    * the column is not listed in the `bloom_cols` witness, or any line
-    * lacks its sketch (the aggregator always emits one, so a missing
-    * field means the sidecar was not written by this code — suspect).
-    * Callers MUST freshness-check the returned key set against the
-    * directory's actual parquet basenames, exactly as for
-    * [[fileRowCounts]].
-    */
-  def fileBlooms(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: org.apache.hadoop.fs.Path,
-      column: String)
-      : Option[Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-    import org.apache.hadoop.fs.Path
-    try {
-      val mdir = new Path(dir, "_manifest")
-      val fs = mdir.getFileSystem(conf)
-      if (!fs.exists(mdir)) return None
-      val parts = fs.listStatus(mdir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-          s.getPath.getName.endsWith(".json"))
-      if (parts.isEmpty) return None
-      val filePat = """"file":"([^"]+)"""".r
-      val witnessPat = """"bloom_cols":"([^"]*)"""".r
-      val q = java.util.regex.Pattern.quote(column)
-      val bloomPat = (""""bloom__""" + q + """":"([A-Za-z0-9+/=]+)"""").r
-      val entries = parts.flatMap { p =>
-        val in = fs.open(p.getPath)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-          finally in.close()
-        lines.filter(_.nonEmpty).map { line =>
-          val file = filePat.findFirstMatchIn(line).map(_.group(1)) match {
-            case Some(f) => f.split('/').last
-            case None => return None // garbled line: the sidecar is suspect
-          }
-          val listed = witnessPat.findFirstMatchIn(line).map(_.group(1)) match {
-            case Some(cs) => cs.split(',').contains(column)
-            case None => false // no bloom witness on this line
-          }
-          if (!listed) return None // column not sketched: no evidence
-          bloomPat.findFirstMatchIn(line).map(_.group(1)) match {
-            case Some(b64) => file -> graft.functions.BloomSketch.decode(b64)
-            case None => return None // listed but sketch-less: suspect
-          }
-        }
-      }
-      Some(entries.toMap)
-    } catch { case scala.util.control.NonFatal(_) => None }
+  private def entry(f: Map[String, String]): Option[(String, Entry)] = {
+    def str(k: String): Option[String] = f.get(k)
+      .filter(t => t.length >= 2 && t.startsWith("\""))
+      .map(t => t.substring(1, t.length - 1))
+    def witness(k: String): Seq[String] = str(k).toSeq.flatMap(_.split(','))
+    for {
+      file <- str("file")
+      rows <- f.get("rows").flatMap(_.toLongOption)
+      key <- str("key_col")
+    } yield file.split('/').last -> Entry(rows, key,
+      witness("cols").map(c => c -> ((f.get(s"min__$c"), f.get(s"max__$c")))).toMap +
+        (key -> ((f.get("min_key"), f.get("max_key")))),
+      witness("bloom_cols").flatMap(c => str(s"bloom__$c").map(c -> _)).toMap)
   }
 }

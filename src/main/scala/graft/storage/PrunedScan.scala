@@ -1,6 +1,8 @@
 package graft.storage
 
-import org.apache.hadoop.fs.{Path => HPath}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -206,19 +208,29 @@ object PrunedScan {
     else Some(picks.flatten.flatten.sorted)
   }
 
-  private def listDataNames(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: HPath): Set[String] = {
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .map(_.getPath.getName).toSet
+  /** The data files of a flat directory, by name: parquet files that
+    * Spark's own listing reads, so `_`- and `.`-prefixed files (`_SUCCESS`,
+    * checksums, a hidden copy) are never counted, planned or sidecar-matched.
+    */
+  private[graft] def dataFiles(fs: FileSystem, dir: HPath): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { s =>
+      val n = s.getPath.getName
+      s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+
+  /** basename → (min, max) tokens of `column` when every entry records it
+    * (as its key_col or in its `cols` witness); None otherwise — no stats
+    * is no evidence.
+    */
+  private def rangesOf(
+      es: Map[String, Manifest.Entry],
+      column: String): Option[Map[String, (Option[String], Option[String])]] = {
+    val rs = es.flatMap { case (n, e) => e.ranges.get(column).map(n -> _) }
+    if (rs.size == es.size) Some(rs) else None
   }
 
-  /** Multi-column zone-map pruning (r16): surviving data-file paths for
-    * the CONJUNCTION of per-column inclusive ranges, or None when NO
+  /** Multi-column zone-map pruning (r16): the surviving `files` of `dir`
+    * for the CONJUNCTION of per-column inclusive ranges, or None when NO
     * column could prove anything. Each column prunes independently against
     * its recorded stats (primary key_col min/max or secondary
     * min__/max__ written via `Manifest.write(extraCols)`), and the
@@ -228,53 +240,46 @@ object PrunedScan {
     * (its conjunct is enforced by the re-applied exact filter); the
     * all-or-nothing per-column discipline of [[survivors]] still holds, so
     * one odd file aborts that COLUMN's pruning, never a partial answer.
-    * The freshness proof (sidecar file-name set == directory contents) is
-    * checked once and gates every column.
+    * The sidecar is read once and its freshness proof gates every column.
     *
     * `zone` only matters for zone-less temporal bounds (see [[boundKeys]]);
     * Instant/Timestamp bounds — everything the internal warehouse callers
-    * pass via [[sessionInstant]] — are exact under any value.
+    * pass via [[sessionInstant]] — are exact under any value. Any failure
+    * while pruning (a bound no key axis can hold, such as an infinite or
+    * NaN Double) is None: the caller reads all `files`.
     */
-  private[graft] def prunedDataFilesMulti(
-      conf: org.apache.hadoop.conf.Configuration,
+  private def prunedDataFilesMulti(
+      fs: FileSystem,
       dir: HPath,
+      files: Seq[FileStatus],
       bounds: Seq[(String, Any, Any)],
-      zone: java.time.ZoneId = java.time.ZoneOffset.UTC,
-      overlapPairs: Seq[(String, String)] = Nil): Option[Seq[HPath]] =
-    try {
-      require(bounds.nonEmpty || overlapPairs.nonEmpty,
-        "at least one column range or overlap pair required")
-      val fs = dir.getFileSystem(conf)
-      val dataNames = fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
-          !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map(_.getPath.getName).toSet
-      val perCol: Seq[Option[Set[String]]] = bounds.map { case (c, lo, hi) =>
+      zone: java.time.ZoneId,
+      overlapPairs: Seq[(String, String)]): Option[Seq[HPath]] =
+    try Manifest.entries(fs, dir, files).flatMap { es =>
+      val perCol: Seq[Option[Seq[String]]] = bounds.map { case (c, lo, hi) =>
         for {
           loKs <- boundKeys(lo, zone)
           hiKs <- boundKeys(hi, zone)
-          ranges <- Manifest.fileColRanges(conf, dir, c)
-          if ranges.keySet == dataNames // stale/partial sidecar
+          ranges <- rangesOf(es, c)
           kept <- survivors(ranges, loKs._1, hiKs._2)
-        } yield kept.toSet
+        } yield kept
       }
       // cross-column equality conjuncts (r18: zero-spread `bid = ask`):
       // prune files whose two ranges are provably disjoint
-      val perPair: Seq[Option[Set[String]]] = overlapPairs.map { case (a, b) =>
+      val perPair: Seq[Option[Seq[String]]] = overlapPairs.map { case (a, b) =>
         for {
-          ra <- Manifest.fileColRanges(conf, dir, a)
-          if ra.keySet == dataNames
-          rb <- Manifest.fileColRanges(conf, dir, b)
-          if rb.keySet == dataNames
+          ra <- rangesOf(es, a)
+          rb <- rangesOf(es, b)
           kept <- overlapSurvivors(ra, rb)
-        } yield kept.toSet
+        } yield kept
       }
-      val usable = (perCol ++ perPair).flatten
+      val usable = (perCol ++ perPair).flatten.map(_.toSet)
       if (usable.isEmpty) None // no column could prove anything
-      else Some(usable.reduce(_ intersect _).toSeq.sorted
-        .map(n => new HPath(dir, n)))
-    } catch { case scala.util.control.NonFatal(_) => None }
+      else {
+        val kept = usable.reduce(_ intersect _)
+        Some(files.map(_.getPath).filter(p => kept(p.getName)))
+      }
+    } catch { case NonFatal(_) => None }
 
   private def parseWallClock(t: String): java.time.LocalDateTime =
     if (t.contains(" ") || t.contains("T"))
@@ -350,69 +355,131 @@ object PrunedScan {
     if (s.length >= width) s else "0" * (width - s.length) + s
   }
 
-  /** Data files of an instrument/yyyymm-partitioned warehouse table
-    * (the tick variants and `ohlc_1m`) for a key range: month partitions
+  /** One month partition of an instrument/yyyymm warehouse table: the
+    * instrument and month labels, the directory and its data files. The
+    * files are listed on first use, so a caller that stops at the first
+    * month holding data lists no further month; a failed listing throws
+    * there, and the caller falls back as for an unlistable layout.
+    */
+  final class Month private[storage] (
+      val instrument: String,
+      val label: String,
+      val dir: HPath,
+      fs: FileSystem) {
+    lazy val files: Seq[FileStatus] = dataFiles(fs, dir)
+  }
+
+  /** The one walk of an instrument=/yyyymm= warehouse table (the tick
+    * variants and `ohlc_1m`): the months of `instrument` (of every
+    * instrument when None) whose label passes `keep`, in (instrument,
+    * label) order, each with its data files ([[Month.files]], listed
+    * lazily). Only kept months are listed, so a ranged read lists only the
+    * month directories inside its range. Zero Spark jobs.
+    *
+    * The layout is PROVEN before anything is claimed, under one set of
+    * rules for coverage, gaps, listing, pruned reads and footer counts:
+    * every child of `root` is an instrument= directory whose name is
+    * canonically UPPERCASE (a lowercase `instrument=eurusd` is a foreign
+    * layout whose rows the metadata paths would misreport), and every
+    * child of a walked instrument directory is a yyyymm= directory with a
+    * label the writers produce (six ASCII digits, month 01-12; 202400,
+    * 202413 or unicode digits would throw or misreport). `_`/`.`-prefixed
+    * entries are reader-invisible and ignored. None when the layout is
+    * unproven (stray files, foreign partitioning) or unlistable: callers
+    * fall back to the data scan. A missing `root` is a true empty table
+    * (Some(Nil)), as is an instrument absent from a proven layout; a month
+    * directory holding no data files holds no rows either.
+    */
+  def months(
+      conf: org.apache.hadoop.conf.Configuration,
+      root: HPath,
+      instrument: Option[String],
+      keep: String => Boolean = _ => true): Option[Seq[Month]] =
+    try {
+      val fs = root.getFileSystem(conf)
+      if (!fs.exists(root)) return Some(Nil)
+      def visible(dir: HPath): Seq[FileStatus] = fs.listStatus(dir).toSeq
+        .filterNot(s => s.getPath.getName.startsWith("_") ||
+          s.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.getName)
+      def valid(m: String): Boolean =
+        m.length == 6 && m.forall(c => c >= '0' && c <= '9') &&
+          { val mm = m.substring(4).toInt; mm >= 1 && mm <= 12 }
+      val kids = visible(root)
+      val insts = kids.collect { case s if s.isDirectory &&
+          s.getPath.getName.startsWith("instrument=") =>
+        s.getPath.getName.stripPrefix("instrument=") -> s.getPath
+      }
+      if (insts.isEmpty || insts.size != kids.size ||
+          insts.exists { case (i, _) => i != i.toUpperCase(java.util.Locale.ROOT) })
+        return None
+      val asked = instrument.map(_.toUpperCase(java.util.Locale.ROOT))
+      Some(insts.filter { case (i, _) => asked.forall(_ == i) }.flatMap { case (i, d) =>
+        val mkids = visible(d)
+        val labels = mkids.collect { case s if s.isDirectory &&
+            s.getPath.getName.startsWith("yyyymm=") =>
+          s.getPath.getName.stripPrefix("yyyymm=") -> s.getPath
+        }.filter { case (m, _) => valid(m) }
+        if (labels.size != mkids.size) return None
+        labels.collect { case (m, md) if keep(m) => new Month(i, m, md, fs) }
+      })
+    } catch { case NonFatal(_) => None }
+
+  /** `instrument`'s subtree of the instrument/yyyymm table at `root`: the
+    * canonical UPPERCASE partition directory the writers produce.
+    */
+  def instrumentDir(root: String, instrument: String): String =
+    s"$root/instrument=${instrument.toUpperCase(java.util.Locale.ROOT)}"
+
+  /** Rebuild the timestamp-keyed `_manifest` sidecar of each listed month
+    * of `instrument` in the table at `root` — what every warehouse writer
+    * calls after its data write, with `extraCols` riding the same scan as
+    * secondary zone-map stats. Best-effort: the sidecar is an
+    * optimization and the data write already succeeded, so a failed
+    * refresh is swallowed. A missing or stale sidecar (a crash between the
+    * data write and this call, a listed month that produced no directory)
+    * is rejected by [[Manifest.entries]]' freshness proof in favour of
+    * footers or all files — never wrong, only slower.
+    */
+  def writeMonthManifests(
+      spark: SparkSession,
+      root: String,
+      instrument: String,
+      months: Seq[String],
+      extraCols: Seq[String] = Nil): Unit =
+    months.foreach { m =>
+      try Manifest.write(spark, s"${instrumentDir(root, instrument)}/yyyymm=$m",
+        "timestamp", extraCols = extraCols)
+      catch { case NonFatal(_) => () }
+    }
+
+  /** Data files of a [[months]] walk for a key range: month partitions
     * outside [loMonth, hiMonth] are dropped BY NAME on the driver (never
     * listed — zero-padded yyyymm orders lexicographically), and each
-    * surviving month is zone-mapped through [[prunedDataFilesMulti]]; a month
-    * without a usable sidecar contributes all its data files. None on any
-    * listing error — the caller falls back to the plain partitioned read.
+    * surviving month is zone-mapped through [[prunedDataFilesMulti]] on
+    * the conjunction of `bounds` and `overlapPairs`; a month without a
+    * usable sidecar contributes all its data files, and with no bounds at
+    * all no sidecar is read. None on an unproven or unlistable layout —
+    * the caller falls back to the plain partitioned read.
     */
   def monthPartitionedFiles(
       conf: org.apache.hadoop.conf.Configuration,
       root: HPath,
-      keyCol: String,
       instrument: Option[String],
       loMonth: Option[String],
       hiMonth: Option[String],
-      lo: Any,
-      hi: Any,
-      extraBounds: Seq[(String, Any, Any)] = Nil,
+      bounds: Seq[(String, Any, Any)],
       overlapPairs: Seq[(String, String)] = Nil): Option[Seq[HPath]] =
     try {
       val fs = root.getFileSystem(conf)
-      val instDirs = instrument match {
-        case Some(i) =>
-          val dir = new HPath(root,
-            s"instrument=${i.toUpperCase(java.util.Locale.ROOT)}")
-          if (fs.exists(dir)) Seq(dir)
-          // A MISSING instrument dir proves "no rows" only on the proven
-          // instrument=/yyyymm= layout (r17 review): a foreign layout
-          // (e.g. partitioned by yyyymm only, instrument as a data
-          // column) has no instrument= dirs at all, and treating that as
-          // Some(Nil) would turn the caller's schema-exact-empty branch
-          // into a WRONG answer where the fallback read has rows.
-          else if (provenInstrumentDirs(fs, root).isDefined) Nil
-          else return None // foreign layout: caller falls back to the plain read
-        case None => fs.listStatus(root).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("instrument="))
-          .map(_.getPath)
-      }
-      val monthDirs = instDirs.flatMap { d =>
-        fs.listStatus(d).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("yyyymm="))
-          .map(_.getPath)
-      }.filter { d =>
-        val m = d.getName.stripPrefix("yyyymm=")
-        loMonth.forall(_ <= m) && hiMonth.forall(m <= _)
-      }
-      Some(monthDirs.flatMap { d =>
-        // the primary key bound plus any SECONDARY column bounds (r17:
-        // bid/ask price bands over the tick warehouse) and cross-column
-        // equality overlaps (r18: zero-spread) prune as a conjunction
-        // through the month's sidecar — a sidecar without a given
-        // secondary's stats simply doesn't constrain on it
-        prunedDataFilesMulti(conf, d, (keyCol, lo, hi) +: extraBounds,
-            overlapPairs = overlapPairs)
-          .getOrElse {
-          fs.listStatus(d).toSeq
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
-              !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-            .map(_.getPath)
-        }
+      months(conf, root, instrument,
+          m => loMonth.forall(_ <= m) && hiMonth.forall(m <= _)).map(_.flatMap { m =>
+        val all = m.files.map(_.getPath)
+        if (bounds.isEmpty && overlapPairs.isEmpty) all
+        else prunedDataFilesMulti(fs, m.dir, m.files, bounds,
+          java.time.ZoneOffset.UTC, overlapPairs).getOrElse(all)
       })
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
 
   /** Read an engine-written warehouse table through its declared `schema`
     * (`TickIngest.TableSchema`, `OhlcGenerator.TableSchema`): nothing is
@@ -431,84 +498,15 @@ object PrunedScan {
     else reader.option("basePath", root).parquet(files.map(_.toString): _*)
   }
 
-  /** Layout proof, instrument level (r16, shared by coverage / gap / list
-    * fast paths): Some(instrument= dirs) when EVERY child of `root` is an
-    * instrument= directory whose name is canonically UPPERCASE (what the
-    * writers produce — a lowercase `instrument=eurusd` is a foreign
-    * layout whose rows the metadata paths would misreport, so it fails
-    * the proof instead); None otherwise (stray files, foreign
-    * partitioning). Underscore/dot-prefixed entries are reader-invisible
-    * and ignored, as everywhere.
-    */
-  private[graft] def provenInstrumentDirs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: HPath): Option[Seq[HPath]] = {
-    val kids = fs.listStatus(root).toSeq
-      .filterNot(s => s.getPath.getName.startsWith("_") ||
-        s.getPath.getName.startsWith("."))
-    val inst = kids.filter { s =>
-      val n = s.getPath.getName
-      s.isDirectory && n.startsWith("instrument=") &&
-        n.stripPrefix("instrument=") == n.stripPrefix("instrument=").toUpperCase(java.util.Locale.ROOT)
-    }
-    if (inst.isEmpty || inst.size != kids.size) None else Some(inst.map(_.getPath))
-  }
-
-  /** Layout proof, month level: Some(yyyymm= dirs with VALID labels —
-    * six ASCII digits, month 01-12) when every child of the instrument
-    * dir is such a directory; None on stray files or labels the writers
-    * never produce (202400, 202413, unicode digits — a caller that
-    * parsed those would throw or misreport instead of falling back).
-    * Callers decide what an EMPTY month dir means for them.
-    */
-  private[graft] def provenMonthDirs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      instDir: HPath): Option[Seq[HPath]] = {
-    def validLabel(m: String): Boolean =
-      m.length == 6 && m.forall(c => c >= '0' && c <= '9') &&
-        { val mm = m.substring(4).toInt; mm >= 1 && mm <= 12 }
-    val kids = fs.listStatus(instDir).toSeq
-      .filterNot(s => s.getPath.getName.startsWith("_") ||
-        s.getPath.getName.startsWith("."))
-    val months = kids.filter(s => s.isDirectory &&
-      s.getPath.getName.startsWith("yyyymm=") &&
-      validLabel(s.getPath.getName.stripPrefix("yyyymm=")))
-    if (months.size != kids.size) None else Some(months.map(_.getPath))
-  }
-
-  /** Data-file presence for a month dir (the gap/list fast paths treat a
-    * file-less month as not stored; coverage lets the sidecar speak).
-    *
-    * ACCEPTED EDGE (r16 advice, adjudicated r17): file PRESENCE here is a
-    * proxy for "holds rows". A directory holding ONLY zero-row part files
-    * would make the metadata paths report a month as stored where the
-    * scan path would not — but no such file can exist under this engine's
-    * writers: Spark's FileFormatWriter skips empty tasks (a lone empty
-    * file is written only for a fully-empty dataframe, which the
-    * ingest/OHLC writers guard against), and a `_manifest` sidecar cannot
-    * adjudicate it either — manifests are built FROM a row scan, so a
-    * zero-row file never appears in one, and its presence in the dir
-    * would fail the sidecar freshness proof anyway. Consulting sidecars
-    * here would add a per-month read to a zero-job listing path to decide
-    * a case that cannot arise; documented instead.
-    */
-  private[graft] def hasDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: HPath): Boolean =
-    fs.listStatus(dir).exists(s => s.isFile &&
-      s.getPath.getName.endsWith(".parquet") &&
-      !s.getPath.getName.startsWith("_") &&
-      !s.getPath.getName.startsWith("."))
-
   /** Coverage of a month-partitioned warehouse table — (total rows,
     * min key, max key as epoch µs) — answered ENTIRELY from manifest
     * sidecars on the driver: zero Spark jobs, zero data-file opens, zero
     * parquet footer reads (r16; the analogue of the reference's <5 ms
-    * metadata coverage read, `docs/DATABASE_SCHEMA.md:769`). Every month
-    * directory must carry a FRESH sidecar (file-name set == directory
-    * contents — the usual task-UUID freshness proof) keyed on `keyCol`
-    * with temporally-parseable stats; ANY unusable month returns None and
-    * the caller falls back to the data scan. All-NULL-key files contribute
+    * metadata coverage read, `docs/DATABASE_SCHEMA.md:769`). The layout
+    * must be proven ([[months]]) and every month directory must carry a
+    * FRESH sidecar ([[Manifest.entries]]) keyed on `keyCol` with
+    * temporally-parseable stats; ANY unusable month returns None and the
+    * caller falls back to the data scan. All-NULL-key files contribute
     * their rows but no min/max; a table with dirs but zero rows yields
     * (0, None, None). Precision note: sidecars written by [[Manifest]]
     * carry full-µs timestamps; an externally ms-truncated sidecar would
@@ -522,60 +520,33 @@ object PrunedScan {
       instrument: Option[String]): Option[(Long, Option[Long], Option[Long])] =
     try {
       val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) return None
-      // PROVE the layout before claiming anything: a table written with a
-      // different partitioning (no instrument= level, or loose data files
-      // at the root) must fall back to the scan, NOT be reported as a
-      // proven zero — metadata answers are only as true as the layout
-      // assumption they ride on.
-      val allInstDirs = provenInstrumentDirs(fs, root) match {
-        case Some(dirs) => dirs
-        case None => return None
-      }
-      val instDirs = instrument match {
-        // a VALID layout without this instrument's dir is a true zero
-        case Some(i) =>
-          allInstDirs.filter(_.getName == s"instrument=${i.toUpperCase(java.util.Locale.ROOT)}")
-        case None => allInstDirs
-      }
-      val monthDirs = instDirs.flatMap { d =>
-        provenMonthDirs(fs, d) match {
-          case Some(months) => months
-          case None => return None // stray files/labels: layout unproven
-        }
-      }
-      var rows = 0L
-      var mn = Option.empty[Long]
-      var mx = Option.empty[Long]
-      monthDirs.foreach { d =>
-        val dataNames = fs.listStatus(d).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
-            !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .map(_.getPath.getName).toSet
-        val counts = Manifest.fileRowCounts(conf, d) match {
-          case Some(c) if c.keySet == dataNames => c
-          case _ => return None // missing/stale sidecar: no proof
-        }
-        val ranges = Manifest.fileKeyRanges(conf, d) match {
-          case Some((k, r)) if k == keyCol && r.keySet == dataNames => r
-          case _ => return None
-        }
-        rows += counts.values.sum
-        ranges.values.foreach {
-          case (None, None) => () // all-NULL key file
-          case (Some(mnTok), Some(mxTok)) =>
-            (tokenKey(mnTok), tokenKey(mxTok)) match {
-              case (Some(TimeKey(a)), Some(TimeKey(b))) =>
-                mn = Some(mn.fold(a)(math.min(_, a)))
-                mx = Some(mx.fold(b)(math.max(_, b)))
-              case _ => return None // non-temporal stats: not this key
+      months(conf, root, instrument).flatMap { ms =>
+        var rows = 0L
+        var mn = Option.empty[Long]
+        var mx = Option.empty[Long]
+        ms.foreach { m =>
+          val es = Manifest.entries(fs, m.dir, m.files) match {
+            case Some(es) if es.values.forall(_.keyCol == keyCol) => es
+            case _ => return None // missing/stale/differently-keyed: no proof
+          }
+          es.values.foreach { e =>
+            rows += e.rows
+            e.ranges(keyCol) match {
+              case (None, None) => () // all-NULL key file
+              case (Some(mnTok), Some(mxTok)) =>
+                (tokenKey(mnTok), tokenKey(mxTok)) match {
+                  case (Some(TimeKey(a)), Some(TimeKey(b))) =>
+                    mn = Some(mn.fold(a)(math.min(_, a)))
+                    mx = Some(mx.fold(b)(math.max(_, b)))
+                  case _ => return None // non-temporal stats: not this key
+                }
+              case _ => return None // half-present stats: sidecar suspect
             }
-          case _ => return None // half-present stats: sidecar suspect
+          }
         }
+        Some((rows, mn, mx))
       }
-      Some((rows, mn, mx))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
 
   /** Inclusive range scan over the dataset at `path` (a flat directory of
     * parquet files — partitioned tables prune partitions first and apply
@@ -613,9 +584,12 @@ object PrunedScan {
     }.reduce(_ && _)
     val zone =
       java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-    val picked: Option[Seq[String]] =
-      prunedDataFilesMulti(spark.sessionState.newHadoopConf(),
-        new HPath(path), bounds, zone).map(_.map(_.toString))
+    val dir = new HPath(path)
+    val picked: Option[Seq[String]] = try {
+      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      prunedDataFilesMulti(fs, dir, dataFiles(fs, dir), bounds, zone, Nil)
+        .map(_.map(_.toString))
+    } catch { case NonFatal(_) => None }
     picked match {
       case Some(Nil) =>
         // every file proven out of range: empty result, real schema
@@ -660,16 +634,20 @@ object PrunedScan {
       values: Seq[Any]): Option[Seq[HPath]] =
     try {
       require(values.nonEmpty, "at least one point value required")
-      val dataNames = listDataNames(conf, dir)
+      val fs = dir.getFileSystem(conf)
+      val files = dataFiles(fs, dir)
       val hashes = values.filter(_ != null).map(sparkHash64)
       if (hashes.isEmpty) return Some(Nil) // IN (NULL…) matches nothing
       for {
-        blooms <- Manifest.fileBlooms(conf, dir, column)
-        if blooms.keySet == dataNames // stale/partial sidecar
-      } yield blooms.toSeq
-        .collect { case (n, bf) if hashes.exists(bf.mightContainLong) => n }
-        .sorted.map(n => new HPath(dir, n))
-    } catch { case scala.util.control.NonFatal(_) => None }
+        es <- Manifest.entries(fs, dir, files)
+        // every file must carry a sketch of `column` (listed in its
+        // `bloom_cols` witness): an unsketched file is no evidence
+        if es.values.forall(_.blooms.contains(column))
+      } yield files.map(_.getPath).filter { p =>
+        val bf = graft.functions.BloomSketch.decode(es(p.getName).blooms(column))
+        hashes.exists(bf.mightContainLong)
+      }
+    } catch { case NonFatal(_) => None }
 
   /** Point-lookup scan over a bloom-indexed flat directory: plans only
     * the files whose sketches might contain a requested value, with the

@@ -59,14 +59,13 @@ object RangeWriter {
       yCol: String,
       bits: Int,
       numFiles: Int,
-      manifestKey: Option[(String, Seq[String])] = None,
-      bounds: Option[(Long, Long, Long, Long)] = None
+      manifestKey: Option[(String, Seq[String])] = None
   ): Unit = {
     require(numFiles >= 1)
     require(xCol != yCol,
       "z-order needs two distinct dimensions (and the default manifest " +
         "records y as the key's secondary)")
-    val clustered = zOrderedLayout(df, xCol, yCol, bits, numFiles, bounds)
+    val clustered = zOrderedLayout(df, xCol, yCol, bits, numFiles)
     clustered.getOrElse(df).write.mode("overwrite").parquet(path)
     // ship the zone-map manifest WITH the data (the q_pruned_scan_2col
     // shape): keyed on x with y as the secondary by default — a caller
@@ -76,10 +75,7 @@ object RangeWriter {
     // manifest over, and the build's read would fail on schema inference)
     val out = new org.apache.hadoop.fs.Path(path)
     val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
-    val wrote = fs.exists(out) && fs.listStatus(out).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }
+    val wrote = fs.exists(out) && PrunedScan.dataFiles(fs, out).nonEmpty
     if (wrote) {
       val (key, extras) = manifestKey.getOrElse((xCol, Seq(yCol)))
       Manifest.write(spark, path, key, extraCols = extras)
@@ -97,22 +93,13 @@ object RangeWriter {
       xCol: String,
       yCol: String,
       bits: Int,
-      numFiles: Int,
-      bounds: Option[(Long, Long, Long, Long)] = None
+      numFiles: Int
   ): Option[DataFrame] = {
-    // bounds (r17 verdict item 4): a caller who already KNOWS the
-    // dimensions' cast-to-long ranges — an exporter with domain knowledge —
-    // skips the exact min/max pre-aggregation, eliminating one full input
-    // pass per export. Out-of-range values are safe: cell() clamps BOTH
-    // edges, so approximate bounds only blur the edge cells' clustering,
-    // never the result (the scan re-applies exact filters anyway).
-    val (loX, hiX, loY, hiY) = bounds.getOrElse {
-      val b = df.agg(
-        min(col(xCol).cast("long")), max(col(xCol).cast("long")),
-        min(col(yCol).cast("long")), max(col(yCol).cast("long"))).head()
-      if (b.isNullAt(0) || b.isNullAt(2)) return None
-      (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    }
+    val b = df.agg(
+      min(col(xCol).cast("long")), max(col(xCol).cast("long")),
+      min(col(yCol).cast("long")), max(col(yCol).cast("long"))).head()
+    if (b.isNullAt(0) || b.isNullAt(2)) return None
+    val (loX, hiX, loY, hiY) = (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
     val grid = (1L << bits).toDouble
     def cell(c: String, lo: Long, hi: Long): Column = {
       // span and the per-row delta are computed entirely in DOUBLE:
@@ -121,8 +108,6 @@ object RangeWriter {
       // every row into one clamped cell via math.max(1, negative). Double
       // subtraction of longs cannot overflow; the rounding only blurs cell
       // boundaries, never breaks monotonicity at clustering granularity.
-      // greatest(0, …) clamps values BELOW supplied bounds into the edge
-      // cell (exact-aggregated bounds never go below, supplied ones can).
       val span = math.max(1.0, hi.toDouble - lo.toDouble)
       greatest(lit(0L),
         least(lit((1L << bits) - 1),

@@ -266,29 +266,13 @@ object MinHash {
       bands: Int = 4,
       maxIters: Int = 25
   ): DataFrame =
-    nearDupGroupsWithRounds(docs, idCol, textCol, shingleN, k, bands, maxIters)._1
-
-  /** [[nearDupGroups]] plus the number of propagation rounds it took to
-    * reach fixpoint — the scale lever at 100 TB is the ROUND count (each
-    * round is one synchronous Spark job), so it is worth recording.
-    */
-  def nearDupGroupsWithRounds(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      k: Int = 16,
-      bands: Int = 4,
-      maxIters: Int = 25
-  ): (DataFrame, Int) = {
     // The fixpoint itself (round structure, change detection, pointer
     // jumping, checkpointing) lives in
     // [[graft.operators.ConnectedComponents]], shared with the
     // embedding-space dedup.
     graft.operators.ConnectedComponents.labelPropagateWithRounds(
       bandEdges(docs, idCol, textCol, shingleN, k, bands),
-      "id", Seq("band", "bh"), maxIters)
-  }
+      "id", Seq("band", "bh"), maxIters)._1
 
   /** [[nearDupGroups]] via alternating large-star/small-star contraction
     * ([[graft.operators.ConnectedComponents.starContractWithRounds]]) —

@@ -211,6 +211,21 @@ class ForexPipelineSpec extends SparkSpec {
     assert(rows.map(_.toString).sorted.sameElements(full.map(_.toString).sorted))
   }
 
+  test("a price band with an infinite or NaN bound reads as the unpruned filtered read") {
+    val (p, _) = env
+    // no zone-map key holds these bounds: pruning gives up and the month
+    // reads all its files under the exact filter
+    for ((lo, hi) <- Seq((1.0, Double.PositiveInfinity),
+        (Double.NegativeInfinity, 1.09), (1.0, Double.NaN))) {
+      val band = p.queryTicks("EURUSD", bidRange = Some((lo, hi)))
+        .collect().map(_.toString).sorted
+      val full = p.queryTicks("EURUSD")
+        .filter(col("bid") >= lit(lo) && col("bid") <= lit(hi))
+        .collect().map(_.toString).sorted
+      assert(band.nonEmpty && band.sameElements(full), s"bidRange ($lo, $hi)")
+    }
+  }
+
   test("OHLC pagination date bounds compose with the cursor (r17 verdict item 2)") {
     val (p, _) = env
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -706,20 +721,20 @@ class ForexPipelineSpec extends SparkSpec {
     val rawAll = stored("raw_spread", Nil)
     assert(rawAll > 0L)
     assert(graft.ohlc.OhlcGenerator
-      .footerMonthCounts(spark, wh, "raw_spread", "EURUSD", Nil).map(_._2).sum === rawAll)
+      .tableMonthCounts(spark, wh, "raw_spread_ticks", "EURUSD", Nil).map(_._2).sum === rawAll)
     val rawFeb = stored("raw_spread", Seq("202402"))
     assert(rawFeb > 0L)
     assert(graft.ohlc.OhlcGenerator
-      .footerMonthCounts(spark, wh, "raw_spread", "eurusd", Seq("202402")).map(_._2).sum === rawFeb)
+      .tableMonthCounts(spark, wh, "raw_spread_ticks", "eurusd", Seq("202402")).map(_._2).sum === rawFeb)
     val stdJan = stored("standard", Seq("202401"))
     assert(stdJan > 0L)
     assert(graft.ohlc.OhlcGenerator
-      .footerMonthCounts(spark, wh, "standard", "EURUSD", Seq("202401")).map(_._2).sum === stdJan)
+      .tableMonthCounts(spark, wh, "standard_ticks", "EURUSD", Seq("202401")).map(_._2).sum === stdJan)
     // absent variant/months → 0, no throw
     assert(graft.ohlc.OhlcGenerator
-      .footerMonthCounts(spark, wh, "raw_spread", "GBPUSD", Nil).map(_._2).sum === 0L)
+      .tableMonthCounts(spark, wh, "raw_spread_ticks", "GBPUSD", Nil).map(_._2).sum === 0L)
     assert(graft.ohlc.OhlcGenerator
-      .footerMonthCounts(spark, wh, "raw_spread", "EURUSD", Seq("209901")).map(_._2).sum === 0L)
+      .tableMonthCounts(spark, wh, "raw_spread_ticks", "EURUSD", Seq("209901")).map(_._2).sum === 0L)
 
     // a full regeneration batch launches NO decision probe — the verdict
     // is read off footer metadata (Ohlc.ticksToOhlc1m would pay one per
@@ -760,7 +775,7 @@ class ForexPipelineSpec extends SparkSpec {
       finally s.close()
     }
     def count(months: String*): Long = graft.ohlc.OhlcGenerator
-      .footerMonthCounts(spark, wh, "raw_spread", "EURUSD", months).map(_._2).sum
+      .tableMonthCounts(spark, wh, "raw_spread_ticks", "EURUSD", months).map(_._2).sum
 
     // FRESH sidecar: corrupt every data file after writing the manifest —
     // a footer open would throw, so a correct answer proves the sidecar
@@ -800,16 +815,18 @@ class ForexPipelineSpec extends SparkSpec {
         finally s.close()
       assert(monthDirs.nonEmpty)
       monthDirs.foreach { md =>
-        val counts = graft.storage.Manifest.fileRowCounts(conf,
-          new org.apache.hadoop.fs.Path(md.toString))
-        assert(counts.nonEmpty, s"no _manifest under $md")
+        val dir = new org.apache.hadoop.fs.Path(md.toString)
+        val hfs = dir.getFileSystem(conf)
+        val files = graft.storage.PrunedScan.dataFiles(hfs, dir)
+        // the reader's own freshness proof: the sidecar names exactly
+        // the data files present
+        val counts = graft.storage.Manifest.entries(hfs, dir, files)
+        assert(counts.nonEmpty, s"no fresh _manifest under $md")
         val month = md.getFileName.toString.stripPrefix("yyyymm=")
         val stored = TickIngest
           .readTicks(spark, wh.toString, variant, Some("EURUSD"))
           .filter(col("yyyymm") === month).count()
-        assert(counts.get.values.sum === stored, s"stale sidecar under $md")
-        // and the sidecar names exactly the files present (fresh by the
-        // reader's own criterion)
+        assert(counts.get.values.map(_.rows).sum === stored, s"stale sidecar under $md")
         val fs = Files.list(md)
         val names =
           try fs.iterator().asScala.map(_.getFileName.toString)
@@ -853,7 +870,7 @@ class ForexPipelineSpec extends SparkSpec {
     Files.createFile(someMonth.resolve("stray-zero-length.parquet"))
     intercept[Exception] {
       graft.ohlc.OhlcGenerator
-        .footerMonthCounts(spark, copy.toString, "raw_spread", "EURUSD", Nil).map(_._2).sum
+        .tableMonthCounts(spark, copy.toString, "raw_spread_ticks", "EURUSD", Nil).map(_._2).sum
     }
     val before = graft.operators.Probes.probeJobs.get()
     val bars = graft.ohlc.OhlcGenerator.regenerate(spark, copy.toString, "eurusd")
@@ -894,4 +911,110 @@ class ForexPipelineSpec extends SparkSpec {
     assert(OhlcGenerator.footerReads.get() === before2,
       "full rebuild left a month answering from footers")
   }
+
+  test("an unranged OHLC read lists only the asked instrument's months") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val wh = Files.createTempDirectory("graft_two_inst").resolve("wh").toString
+    def ticks(base: Double) = Seq(
+        ("2024-01-10 14:30:01", base, base + 0.0001),
+        ("2024-02-05 09:00:00", base + 0.001, base + 0.0011))
+      .toDF("ts", "bid", "ask")
+      .select(col("ts").cast("timestamp").as("timestamp"), col("bid"), col("ask"))
+    for ((i, base) <- Seq("EURUSD" -> 1.1, "GBPUSD" -> 1.27)) {
+      TickIngest.writeTicks(ticks(base), wh, i, "raw_spread")
+      TickIngest.writeTicks(ticks(base), wh, i, "standard")
+      graft.ohlc.OhlcGenerator.regenerate(spark, wh, i)
+    }
+    val p = new Processor(spark, wh)
+    // the file index of the executed scan is rooted in EURUSD's months,
+    // not in the table root the other instrument shares
+    val day = p.queryOhlc("EURUSD", "1d")
+    val roots = day.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s.relation.location.rootPaths
+    }.flatten
+    assert(roots.nonEmpty && roots.forall(_.toString.contains("/instrument=EURUSD/")),
+      s"scan roots: ${roots.mkString(", ")}")
+    assert(day.count() === 2L)
+    // and the listed read returns exactly the root read's rows
+    val bars = p.queryOhlc("EURUSD", "1m").collect().map(_.toString).sorted
+    val root = spark.read.parquet(s"$wh/ohlc_1m").filter(col("instrument") === "EURUSD")
+      .select(graft.ohlc.OhlcGenerator.Columns.map(col): _*)
+      .collect().map(_.toString).sorted
+    assert(bars.nonEmpty && bars.sameElements(root))
+  }
+
+  test("footer counts ignore the hidden files Spark ignores") {
+    import spark.implicits._
+    import graft.ohlc.OhlcGenerator
+    val wh = Files.createTempDirectory("graft_hidden").resolve("wh").toString
+    val ticks = Seq(("2024-01-10 14:30:01", 1.1, 1.1001), ("2024-01-11 09:00:00", 1.2, 1.2001))
+      .toDF("ts", "bid", "ask")
+      .select(col("ts").cast("timestamp").as("timestamp"), col("bid"), col("ask"))
+    TickIngest.writeTicks(ticks, wh, "EURUSD", "raw_spread")
+    // a dot-prefixed copy of a data file: Spark's listing skips it, so it
+    // must neither be counted nor make the fresh sidecar look stale
+    val month = java.nio.file.Paths.get(s"$wh/raw_spread_ticks/instrument=EURUSD/yyyymm=202401")
+    val s = Files.list(month)
+    val data =
+      try s.iterator().asScala.find { f =>
+        val n = f.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      }.get
+      finally s.close()
+    Files.copy(data, month.resolve(".x.parquet"))
+    val before = OhlcGenerator.footerReads.get()
+    val counted = OhlcGenerator
+      .tableMonthCounts(spark, wh, "raw_spread_ticks", "EURUSD", Nil).map(_._2).sum
+    assert(counted === TickIngest.readTicks(spark, wh, "raw_spread", Some("EURUSD")).count())
+    assert(OhlcGenerator.footerReads.get() === before,
+      "the hidden copy made the fresh sidecar look stale")
+  }
+
+  test("one sidecar open per month directory per call: coverage, price band, zero spread") {
+    val (p, dir) = env
+    val wh = dir.resolve("warehouse")
+    def monthDirs(table: String): Long = {
+      val s = Files.list(wh.resolve(table).resolve("instrument=EURUSD"))
+      try s.iterator().asScala.count(_.getFileName.toString.startsWith("yyyymm=")).toLong
+      finally s.close()
+    }
+    val tickMonths = monthDirs("raw_spread_ticks")
+    val allMonths = Seq("raw_spread_ticks", "standard_ticks", "ohlc_1m").map(monthDirs).sum
+    assert(tickMonths > 0L)
+    // every file:// access of the calls below goes through a counting
+    // local file system, uncached so the session's conf picks it up
+    spark.conf.set("fs.file.impl", classOf[SidecarOpenCountingFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      def opens(call: => Any): Long = {
+        val before = SidecarOpenCountingFileSystem.opens.get()
+        call
+        SidecarOpenCountingFileSystem.opens.get() - before
+      }
+      val scans = Processor.coverageDataScans.get()
+      assert(opens(p.getCoverage("EURUSD")) === allMonths)
+      assert(Processor.coverageDataScans.get() === scans)
+      assert(opens(p.queryTicks("EURUSD", bidRange = Some((1.0, 1.2)))) === tickMonths)
+      assert(opens(p.queryTicks("EURUSD", zeroSpread = true)) === tickMonths)
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+}
+
+/** The local file system, counting every open of a `_manifest` part file. */
+class SidecarOpenCountingFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(
+      f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getParent != null && f.getParent.getName == "_manifest")
+      SidecarOpenCountingFileSystem.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object SidecarOpenCountingFileSystem {
+  val opens = new java.util.concurrent.atomic.AtomicLong(0L)
 }

@@ -380,7 +380,7 @@ class PrunedScanSpec extends SparkSpec {
     val proven = Files.createTempDirectory("mpf_proven").toString
     rows.coalesce(1).write.parquet(s"$proven/instrument=EURUSD/yyyymm=202401")
     assert(PrunedScan.monthPartitionedFiles(conf, new Path(proven),
-      "timestamp", Some("GBPUSD"), None, None, lo, hi) === Some(Nil))
+      Some("GBPUSD"), None, None, Seq(("timestamp", lo, hi))) === Some(Nil))
 
     // foreign layout (yyyymm only, instrument as a data column): a missing
     // instrument= dir must NOT claim proven-empty — None routes the caller
@@ -388,36 +388,32 @@ class PrunedScanSpec extends SparkSpec {
     val foreign = Files.createTempDirectory("mpf_foreign").toString
     rows.coalesce(1).write.parquet(s"$foreign/yyyymm=202401")
     assert(PrunedScan.monthPartitionedFiles(conf, new Path(foreign),
-      "timestamp", Some("EURUSD"), None, None, lo, hi).isEmpty)
+      Some("EURUSD"), None, None, Seq(("timestamp", lo, hi))).isEmpty)
   }
 
   test("layout proofs: lowercase instrument dirs and impossible month labels fail the proof") {
     import org.apache.hadoop.fs.Path
     val conf = spark.sessionState.newHadoopConf()
     val root = Files.createTempDirectory("proof").toString
-    val fs = new Path(root).getFileSystem(conf)
     def mk(p: String) = new java.io.File(s"$root/$p").mkdirs()
+    def walk(t: String) = PrunedScan.months(conf, new Path(s"$root/$t"), None)
     mk("t1/instrument=EURUSD/yyyymm=202401")
-    assert(PrunedScan.provenInstrumentDirs(fs, new Path(s"$root/t1")).isDefined)
-    assert(PrunedScan.provenMonthDirs(fs,
-      new Path(s"$root/t1/instrument=EURUSD")).map(_.size) === Some(1))
+    assert(walk("t1").map(_.map(m => (m.instrument, m.label, m.files.size))) ===
+      Some(Seq(("EURUSD", "202401", 0))))
     // a lowercase dir is a FOREIGN layout: metadata paths would misreport
     // its rows (the scan path reads the column value as written), so the
     // proof fails and callers fall back to the scan
     mk("t2/instrument=eurusd/yyyymm=202401")
-    assert(PrunedScan.provenInstrumentDirs(fs, new Path(s"$root/t2")).isEmpty)
+    assert(walk("t2").isEmpty)
     // labels the writers never produce (month 00/13, unicode digits)
     // fail the month proof — a caller that parsed them would throw
     // instead of degrading
     mk("t3/instrument=EURUSD/yyyymm=202400")
-    assert(PrunedScan.provenMonthDirs(fs,
-      new Path(s"$root/t3/instrument=EURUSD")).isEmpty)
+    assert(walk("t3").isEmpty)
     mk("t4/instrument=EURUSD/yyyymm=202413")
-    assert(PrunedScan.provenMonthDirs(fs,
-      new Path(s"$root/t4/instrument=EURUSD")).isEmpty)
+    assert(walk("t4").isEmpty)
     mk("t5/instrument=EURUSD/yyyymm=20240١") // unicode digit
-    assert(PrunedScan.provenMonthDirs(fs,
-      new Path(s"$root/t5/instrument=EURUSD")).isEmpty)
+    assert(walk("t5").isEmpty)
     // and the gap fast path survives such a layout by SCANNING: a
     // yyyymm=202400 month under an otherwise-proven table must not throw
     mk("t3w/raw_spread_ticks/instrument=EURUSD/yyyymm=202400")

@@ -129,6 +129,15 @@ class ReachabilitySpec extends AnyFunSuite {
     }.distinct.sorted
   }
 
+  /** Every main source file, keyed by its path under `src/main/scala`. */
+  private def mainSources(): Map[String, String] = {
+    assert(mainDir.isDirectory, s"run from the project root: ${mainDir.getAbsolutePath}")
+    scalaFiles(mainDir).map { f =>
+      mainDir.toPath.relativize(f.toPath).toString ->
+        new String(Files.readAllBytes(f.toPath), "UTF-8")
+    }.toMap
+  }
+
   private def fileType(path: String): String =
     new File(path).getName.stripSuffix(".scala")
 
@@ -140,22 +149,14 @@ class ReachabilitySpec extends AnyFunSuite {
   }
 
   test("every top-level main type is named by another main file, an entry point or a config string") {
-    assert(mainDir.isDirectory, s"run from the project root: ${mainDir.getAbsolutePath}")
-    val sources = scalaFiles(mainDir).map { f =>
-      mainDir.toPath.relativize(f.toPath).toString ->
-        new String(Files.readAllBytes(f.toPath), "UTF-8")
-    }.toMap
+    val sources = mainSources()
     val orphans = unreached(sources)
     assert(orphans.isEmpty,
       s"top-level main types that no other main file names:\n  ${orphans.mkString("\n  ")}")
   }
 
   test("every main def is named in main code outside its own definition") {
-    assert(mainDir.isDirectory, s"run from the project root: ${mainDir.getAbsolutePath}")
-    val sources = scalaFiles(mainDir).map { f =>
-      mainDir.toPath.relativize(f.toPath).toString ->
-        new String(Files.readAllBytes(f.toPath), "UTF-8")
-    }.toMap
+    val sources = mainSources()
     // a method root kept for a spec must still be used by that spec
     ReachabilitySpec.MethodRoots.foreach { case (method, spec) =>
       val specSrc = new String(Files.readAllBytes(
@@ -166,6 +167,20 @@ class ReachabilitySpec extends AnyFunSuite {
     val uncalled = uncalledDefs(sources)
     assert(uncalled.isEmpty,
       s"main methods that no main code calls:\n  ${uncalled.mkString("\n  ")}")
+  }
+
+  test("only graft/storage knows the warehouse layout") {
+    // the partition directory names and the sidecar directory are spelled
+    // out in storage code alone: every other module walks, reads and
+    // writes the warehouse through PrunedScan and Manifest
+    val markers = Seq("_manifest", "yyyymm=", "instrument=")
+    val leaks = mainSources().toSeq.filterNot(_._1.startsWith("graft/storage/"))
+      .flatMap { case (path, src) =>
+        val code = stripComments(src)
+        markers.filter(code.contains).map(m => s"$path: $m")
+      }.sorted
+    assert(leaks.isEmpty,
+      s"warehouse layout spelled out outside graft/storage:\n  ${leaks.mkString("\n  ")}")
   }
 }
 

@@ -95,47 +95,6 @@ class ZOrderSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/empty").count() === 0L)
   }
 
-  test("writeZOrdered with supplied bounds: no pre-agg pass, tight files, out-of-range clamps") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder_bounds").toString
-    val pts = (for (x <- 0 until 64; y <- 0 until 64)
-      yield (x.toLong, y.toLong)).toDF("x", "y")
-    // exact bounds supplied: same tight layout as the aggregated path
-    graft.storage.RangeWriter.writeZOrdered(pts, s"$dir/out", "x", "y",
-      bits = 6, numFiles = 16, bounds = Some((0L, 63L, 0L, 63L)))
-    val spreads = spark.read.parquet(s"$dir/out")
-      .withColumn("f", input_file_name())
-      .groupBy("f")
-      .agg((max("x") - min("x")).as("dx"), (max("y") - min("y")).as("dy"))
-      .as[(String, Long, Long)].collect()
-    assert(spreads.length == 16)
-    spreads.foreach { case (f, dx, dy) =>
-      assert(dx <= 15 && dy <= 15, s"file $f spreads dx=$dx dy=$dy")
-    }
-    // NARROWER-than-data bounds (a sampled/stale estimate): values below
-    // lo clamp into cell 0 via the greatest(0, …) guard. Pre-guard they
-    // produced NEGATIVE cells whose two's-complement low bits interleave
-    // as LARGE cells (x = 15 → cell −1 → masked cell 63), teleporting
-    // below-lo rows to the TOP of the z range — a file then mixes x = 15
-    // with x ≈ 47+ and per-file min/max pruning on x collapses. With the
-    // clamp, every below-lo row sits in cell 0, so any file containing
-    // one lives in the low-z region whose x cells are provably small.
-    graft.storage.RangeWriter.writeZOrdered(pts, s"$dir/narrow", "x", "y",
-      bits = 6, numFiles = 16, bounds = Some((16L, 47L, 16L, 47L)))
-    val back = spark.read.parquet(s"$dir/narrow")
-    assert(back.count() === 64L * 64L)
-    val perFile = back
-      .withColumn("f", input_file_name())
-      .groupBy("f")
-      .agg(min("x").as("mnx"), max("x").as("mxx"))
-      .as[(String, Long, Long)].collect()
-    val withClamped = perFile.filter(_._2 < 16)
-    assert(withClamped.nonEmpty)
-    withClamped.foreach { case (f, _, mxx) =>
-      assert(mxx <= 32,
-        s"file $f holds a below-lo row yet spans to x=$mxx — clamp broken")
-    }
-  }
-
   test("writeZOrdered: all-NULL y dimension falls back to a plain write, no NPE") {
     // pre-fix: the empty/all-null guard checked only b.isNullAt(0) (x min),
     // so a non-empty frame whose yCol was entirely NULL passed the guard

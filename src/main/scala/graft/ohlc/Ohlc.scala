@@ -134,6 +134,11 @@ object Ohlc {
     * (`countIf(s.timestamp IS NOT NULL)` → count of matched rows).
     *
     * Input frames have columns (instrument, timestamp, bid, ask).
+    *
+    * @param asofMode "auto" lets the as-of dispatch decide the form
+    *                 ([[AsofJoin.leftAsofAuto]]); "plain" (the native
+    *                 merge) and "bucketed" (the (key, time-bucket) form
+    *                 with `asofBucketSeconds`-wide buckets) name it
     */
   def ticksToOhlc1m(
       rawSpread: DataFrame,
@@ -141,29 +146,26 @@ object Ohlc {
       asofMode: String = "auto",
       asofBucketSeconds: Long = 86400L
   ): DataFrame = {
-    // AUTO-dispatched as-of (r12): the join key is instrument ALONE, so at
-    // warehouse scale one major pair's full history is a single hot key —
-    // exactly the shape where the key-partitioned forms serialize and the
-    // (key, time-bucket) form wins (measured crossover ~1M rows/key,
-    // SCALE.md r11/r12). Below the crossover the dispatcher keeps the
-    // native single-pass merge; the decision is a capped no-shuffle row
-    // scan of the two key columns and, only past 1M combined rows, a
-    // second sampled per-key count agg (small shuffle) — both constant
-    // next to the join they front (Probes.cappedCount/hottestKeyCount).
-    // Callers that already know the shape (OhlcGenerator.regenerate reads
-    // it off parquet footer metadata) pass asofMode explicitly and skip
-    // the probe scan entirely.
-    val joined = AsofJoin.leftAsofAuto(
+    // The join key is instrument ALONE, so at warehouse scale one major
+    // pair's full history is a single hot key. In "auto" mode the dispatch
+    // keeps the native merge up to ~1M rows on the key and above it runs
+    // the (key, time-bucket) form, with buckets sized to ~1M rows from the
+    // key's span and its busiest hour and minute (AsofJoin.asofVerdict).
+    // Deciding costs a capped no-shuffle row scan and, past the crossover,
+    // one sampled stats pass. A caller that already holds the verdict
+    // (OhlcGenerator.regenerate reads it off stored month counts) names
+    // the form and pays neither.
+    val asof = asofMode match {
+      case "auto" => AsofJoin.leftAsofAuto _
+      case "plain" => AsofJoin.leftAsofNative _
+      case "bucketed" => AsofJoin.leftAsofBucketed(_, _, _, _, _, _, _, asofBucketSeconds)
+      case other =>
+        throw new IllegalArgumentException(s"asofMode must be auto|plain|bucketed, got $other")
+    }
+    val joined = asof(
       rawSpread,
       standard.select("instrument", "timestamp", "bid", "ask"),
-      on = Seq("instrument"),
-      leftTime = "timestamp",
-      rightTime = "timestamp",
-      rightPayload = Seq("bid", "ask"),
-      suffix = "_std",
-      mode = asofMode,
-      bucketSeconds = asofBucketSeconds
-    )
+      Seq("instrument"), "timestamp", "timestamp", Seq("bid", "ask"), "_std")
     val ord = struct(col("timestamp"), col("bid"), col("ask"))
     joined
       .groupBy(col("instrument"), date_trunc("minute", col("timestamp")).as("timestamp"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.calendar.TradingCalendar
 import graft.ingest.TickIngest
+import graft.operators.{AsofJoin, Probes}
 
 /** Full 27-column OHLC generation (reference
   * `clickhouse_ohlc_generator.py:65-215` + the session/holiday enrichment
@@ -76,18 +77,11 @@ object OhlcGenerator {
     when(hour >= 8 && hour <= 16, "London_Session")
       .otherwise("London_Closed")
 
-  /** Build the full 27-column 1m OHLC frame from the two tick variants.
-    * `asofMode` threads through to the as-of dispatch ([[Ohlc.ticksToOhlc1m]]):
-    * "auto" probes the data; callers that already know the shape (e.g.
-    * [[regenerate]], which reads it off parquet footers) pass the form.
+  /** Build the full 27-column 1m OHLC frame from the two tick variants,
+    * with the as-of form decided from the data ([[Ohlc.ticksToOhlc1m]]).
     */
-  def generate(
-      rawSpread: DataFrame,
-      standard: DataFrame,
-      asofMode: String = "auto",
-      asofBucketSeconds: Long = 86400L
-  ): DataFrame =
-    enrichBars(Ohlc.ticksToOhlc1m(rawSpread, standard, asofMode, asofBucketSeconds))
+  def generate(rawSpread: DataFrame, standard: DataFrame): DataFrame =
+    enrichBars(Ohlc.ticksToOhlc1m(rawSpread, standard))
 
   /** The enrichment HALF of [[generate]] — 1m bars (instrument, timestamp,
     * OHLC, spreads, counts) → the full 27-column frame. Split out so the
@@ -161,10 +155,8 @@ object OhlcGenerator {
 
   /** Seconds spanned by a set of yyyymm month labels: from the first
     * day of the earliest month to the first day of the month AFTER the
-    * latest (calendar-exact, so a 31-day month counts its 31 days). Feeds
-    * [[graft.operators.AsofJoin.bucketWidthFor]] with the span the stored
-    * rows actually cover. Empty input → 0 (the width sizer then falls
-    * back to its day default).
+    * latest (calendar-exact, so a 31-day month counts its 31 days). Empty
+    * input → 0.
     */
   private[graft] def monthSpanSeconds(months: Seq[String]): Long =
     if (months.isEmpty) 0L
@@ -176,6 +168,17 @@ object OhlcGenerator {
         .atStartOfDay(java.time.ZoneOffset.UTC)
       java.time.Duration.between(lo, hi).getSeconds
     }
+
+  /** The hottest key's stats from stored per-month row counts, summed per
+    * month across tables: its rows, the span of its months with rows, and
+    * each such month as one peak window (month seconds, month rows) — the
+    * input of [[AsofJoin.storedAsofDispatch]].
+    */
+  private[graft] def monthStats(counts: Seq[(String, Long)]): Probes.HotKeyStats = {
+    val live = counts.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0L).toSeq
+    Probes.HotKeyStats(live.map(_._2).sum, monthSpanSeconds(live.map(_._1)),
+      live.map { case (m, n) => monthSpanSeconds(Seq(m)) -> n })
+  }
 
   /** Regenerate OHLC months into the warehouse. `months` empty = full
     * regeneration; non-empty = only those yyyymm partitions are rebuilt
@@ -206,49 +209,27 @@ object OhlcGenerator {
     }
     val stdMonths =
       if (months.isEmpty) Nil else (months ++ months.map(prevMonth)).distinct
-    // As-of dispatch verdict from CATALOG metadata, not a probe job: both
+    // As-of dispatch verdict from stored metadata, not a probe job: both
     // join sides are filtered to ONE instrument and the join key is
-    // instrument alone, so the hottest key's row count IS the combined
-    // total — and parquet footers (or a Manifest sidecar, when present)
-    // already hold the exact per-partition totals. A regeneration batch
-    // therefore pays zero decision scans (Probes.probeJobs pins this),
-    // where mode="auto" would re-scan the touched months' ticks once per
-    // call. The same footers name WHICH months hold rows, so a "bucketed"
-    // verdict also gets its width sized from the stored density
-    // (AsofJoin.bucketWidthFor) instead of a fixed day. If the metadata
-    // is unreadable (corrupt footer, unproven layout) the count is
-    // unknowable without a scan — fall back to mode="auto" and pay the
-    // one probe rather than guessing a form.
-    val (asofForm, asofWidth) = (try {
-      val raw = tableMonthCounts(spark, warehouse, "raw_spread_ticks", instrument, months)
-      val std = tableMonthCounts(spark, warehouse, "standard_ticks", instrument, stdMonths)
-      Some((raw, std))
+    // instrument alone, so the hottest key's rows ARE the stored totals,
+    // and parquet footers (or a Manifest sidecar) already hold them per
+    // month. A regeneration therefore pays zero decision scans
+    // (Probes.probeJobs pins this), where "auto" would scan the touched
+    // months' ticks once per call. If the metadata is unreadable (corrupt
+    // footer, unproven layout) the count is unknowable without a scan:
+    // "auto" pays the one probe rather than guessing a form.
+    val (asofMode, asofWidth) = (try {
+      Some(monthStats(
+        tableMonthCounts(spark, warehouse, "raw_spread_ticks", instrument, months) ++
+          tableMonthCounts(spark, warehouse, "standard_ticks", instrument, stdMonths)))
     } catch { case scala.util.control.NonFatal(_) => None }) match {
       case None => ("auto", 86400L)
-      case Some((raw, std)) =>
-        val total = (raw ++ std).map(_._2).sum
-        if (total > graft.operators.AsofJoin.HotKeyCrossover) {
-          val byMonth = (raw ++ std).groupMapReduce(_._1)(_._2)(_ + _)
-            .filter(_._2 > 0)
-          val live = byMonth.keys.toSeq
-          // average-density width over the whole stored span, corrected
-          // down by the DENSEST month (the footer metadata's burst
-          // resolution — month-granular where the probe path's is hourly,
-          // but free): a year of sparse history with one packed month
-          // must get a width sized for that month, not the year average.
-          val target = graft.operators.AsofJoin.HotKeyCrossover
-          val avg = graft.operators.AsofJoin
-            .bucketWidthFor(total, monthSpanSeconds(live), target)
-          val peak = byMonth.map { case (m, n) =>
-            graft.operators.AsofJoin
-              .bucketWidthFor(n, monthSpanSeconds(Seq(m)), target)
-          }.min
-          ("bucketed", math.min(avg, peak))
-        } else ("plain", 86400L)
+      case Some(stats) =>
+        AsofJoin.storedAsofDispatch(stats).fold(("plain", 86400L))(("bucketed", _))
     }
-    val out = generate(
+    val out = enrichBars(Ohlc.ticksToOhlc1m(
         monthFiltered("raw_spread", months), monthFiltered("standard", stdMonths),
-        asofMode = asofForm, asofBucketSeconds = asofWidth)
+        asofMode, asofWidth))
       .withColumn("yyyymm", date_format(col("timestamp"), "yyyyMM"))
     // the carry-in widening can produce bars for the lookback months too —
     // they are NOT part of this rebuild; only the requested partitions move

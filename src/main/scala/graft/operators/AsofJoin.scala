@@ -233,99 +233,57 @@ object AsofJoin {
     */
   val HotKeyCrossover: Long = 1000000L
 
-  /** A dispatch verdict with its physical parameters: which form, and —
-    * when bucketed — how wide the (key, time-bucket) buckets are.
-    */
-  final case class AsofDispatch(form: String, bucketSeconds: Long)
-
-  /** Time-bucket width targeting ≈ `targetRowsPerBucket` rows of the
-    * hottest key per (key, bucket): `span × target / rows`, so the hot
-    * key splits into ≈ rows/target buckets regardless of its absolute
-    * density. A fixed width (the pre-r14 86 400 s) re-serializes as soon
-    * as per-day density crosses the threshold — at 10× the crossover
-    * density a day-wide bucket holds 10M rows and the skew the form
-    * exists to break is back inside each bucket.
+  /** The as-of dispatch rule over the hottest key's stats: `None` runs the
+    * native merge ([[leftAsofNative]]), `Some(width)` the (key, time-bucket)
+    * form ([[leftAsofBucketed]]) with `width`-second buckets. Bucketed iff
+    * the key holds more than `threshold` rows, left and right combined:
+    * both sides land in that key's single partition and serialize together.
     *
-    * Width is clamped to [1 s, span]: sub-second widths add nothing (the
-    * buckets are already at the target), and a width beyond the span is
-    * the plain form with extra steps. Degenerate stats (no rows, zero
-    * span — e.g. every row on one timestamp, which NO width can split)
-    * fall back to the day default.
+    * The width aims at ≈ `threshold` rows per (key, bucket), so the hot key
+    * splits into ≈ rows/threshold buckets whatever its density; a fixed
+    * day-wide bucket holds 10M rows at 10× the crossover density and the
+    * skew is back inside each bucket. Each window the stats know gives one
+    * candidate, `seconds × threshold / rows`:
+    *
+    *   - the whole span: the average width, clamped to [1 s, span]; a zero
+    *     span (every row on one timestamp, which no width can split) gives
+    *     the day default;
+    *   - each peak window with rows: the width the target demands inside
+    *     it. A key whose rows bunch into one hour of a month has ~700× its
+    *     average density there, and the average width would put the whole
+    *     burst into one bucket.
+    *
+    * The width is the smallest candidate, at least 1 s:
+    * `max(1, min(avg, ⌊w·threshold/n⌋ for each peak (w, n) with rows))`.
+    * Every form yields the same rows, so a mis-measured stat moves cost,
+    * never rows.
     */
-  def bucketWidthFor(
-      hotKeyRows: Long,
-      spanSeconds: Long,
-      targetRowsPerBucket: Long = HotKeyCrossover): Long = {
-    if (hotKeyRows <= 0L || spanSeconds <= 0L) 86400L
+  private[graft] def asofVerdict(stats: Probes.HotKeyStats, threshold: Long): Option[Long] = {
+    def fit(seconds: Long, rows: Long): Long =
+      (seconds.toDouble * threshold.toDouble / rows.toDouble).toLong
+    if (stats.rows <= threshold) None
     else {
-      val w = spanSeconds.toDouble * targetRowsPerBucket.toDouble / hotKeyRows.toDouble
-      math.min(spanSeconds, math.max(1L, w.toLong))
+      val avg =
+        if (stats.rows <= 0L || stats.spanSeconds <= 0L) 86400L
+        else math.min(stats.spanSeconds, math.max(1L, fit(stats.spanSeconds, stats.rows)))
+      val peaks = stats.peaks.collect { case (w, n) if w > 0L && n > 0L => fit(w, n) }
+      Some(math.max(1L, (avg +: peaks).min))
     }
   }
 
-  /** Burst-resistant [[bucketWidthFor]]: the average-density width is
-    * CORRECTED DOWN by the hot key's measured PEAK window density. A key
-    * whose rows bunch into one hour of a month span has ~700× its
-    * month-average density inside the burst — the average-sized width
-    * then re-serializes exactly where the rows are (the r14 auto-width
-    * failure mode). The peak width `peakWindowSeconds × target / peakRows`
-    * is what the target-rows-per-bucket goal demands AT the burst; taking
-    * the min of the two candidates sizes for the worst window while never
-    * widening past the average-safe bound. Degenerate peak stats (0 — no
-    * timed rows in the probe) keep the average width; everything stays
-    * clamped to [1 s, span] as in the base sizer. Width is purely
-    * physical (all forms row-equivalent), so a mis-measured peak moves
-    * cost, never rows.
+  /** [[asofVerdict]] for rows stored whole in time partitions, from their
+    * row counts alone (`OhlcGenerator.regenerate` reads them off parquet
+    * footers or `_manifest` sidecars, with no probe job). `stats.peaks`
+    * holds one (partition seconds, partition rows) window per partition
+    * with rows. Each partition is sized like a span of its own, its
+    * average width clamped to its length, so the width never exceeds the
+    * shortest partition.
     */
-  def bucketWidthFor(
-      hotKeyRows: Long,
-      spanSeconds: Long,
-      peakWindowRows: Long,
-      peakWindowSeconds: Long,
-      targetRowsPerBucket: Long): Long = {
-    val avg = bucketWidthFor(hotKeyRows, spanSeconds, targetRowsPerBucket)
-    if (peakWindowRows <= 0L || peakWindowSeconds <= 0L) avg
-    else {
-      val wPeak = peakWindowSeconds.toDouble * targetRowsPerBucket.toDouble /
-        peakWindowRows.toDouble
-      math.max(1L, math.min(avg, wPeak.toLong))
-    }
-  }
+  private[graft] def storedAsofDispatch(stats: Probes.HotKeyStats): Option[Long] =
+    asofVerdict(stats, HotKeyCrossover).map(w => (w +: stats.peaks.map(_._1)).min)
 
-  /** [[bucketWidthFor]] with a SECOND, finer peak (r16): the hourly peak
-    * misses a sub-hour micro-burst — an open-auction burst packing its
-    * rows into one minute of an otherwise-quiet hour has ~60× its hourly
-    * density inside the burst, and the hour-peak width re-serializes
-    * there exactly as the r14 average width did inside an hour burst.
-    * The candidate set just grows by one: width = min(avg, hour-peak,
-    * fine-peak), each being what the target-rows-per-bucket goal demands
-    * at its own resolution. A zero fine peak (no timed rows, or sampled
-    * evidence below the probe's significance floor) keeps the coarser
-    * answer; clamping as in the base sizer. Purely physical as ever: a
-    * mis-sized width moves cost, never rows.
-    */
-  def bucketWidthFor(
-      hotKeyRows: Long,
-      spanSeconds: Long,
-      peakWindowRows: Long,
-      peakWindowSeconds: Long,
-      peakFineRows: Long,
-      peakFineSeconds: Long,
-      targetRowsPerBucket: Long): Long = {
-    val base = bucketWidthFor(hotKeyRows, spanSeconds, peakWindowRows,
-      peakWindowSeconds, targetRowsPerBucket)
-    if (peakFineRows <= 0L || peakFineSeconds <= 0L) base
-    else {
-      val wFine = peakFineSeconds.toDouble * targetRowsPerBucket.toDouble /
-        peakFineRows.toDouble
-      math.max(1L, math.min(base, wFine.toLong))
-    }
-  }
-
-  /** Decide which as-of form to run for the given shape: "bucketed" iff the
-    * hottest join key carries more rows than `threshold` (left and right
-    * combined — both sides of the union land in that key's single window
-    * partition and serialize together), else "plain".
+  /** Decide which as-of form to run for the given shape, by
+    * [[asofVerdict]] over the hottest join key's sampled stats.
     *
     * Cost of deciding, two tiers: a QUICK REJECT first — if the two sides
     * together hold ≤ threshold rows, no key can possibly exceed it. That
@@ -337,21 +295,16 @@ object AsofJoin {
     * scale. A capped sum understates the true total only when some
     * partition hit its cap — and then the total already exceeds the
     * threshold, so the ≤-threshold test stays exact. Only when the probe
-    * saturates does the per-key tier run — ONE count agg over a seeded
-    * SAMPLE sized to [[Probes.SampleRowsTarget]] rows per threshold-hot
-    * key (exact below that target), so the decision's shuffle stays
-    * negligible next to the join it fronts at any input size; both forms
-    * are exact, so estimation error near the crossover only flips a
-    * choice between two equal-cost plans.
+    * saturates does the per-key tier run — ONE stats pass
+    * ([[Probes.hottestKeyBurstStats]]: rows, span, and the busiest hour and
+    * minute) over a seeded SAMPLE sized to [[Probes.SampleRowsTarget]] rows
+    * per threshold-hot key (exact below that target), so the decision's
+    * shuffle stays negligible next to the join it fronts at any input
+    * size; every form is exact, so estimation error near the crossover
+    * only flips a choice between two equal-cost plans.
     *
-    * A "bucketed" verdict carries a width derived from the hottest key's
-    * measured rows-over-time density, corrected down by its PEAK hourly
-    * density ([[bucketWidthFor]] burst overload) — the span AND peak-window
-    * stats ride the same sampled pass — so a month-span key whose rows
-    * bunch into one hour gets an hour-scale width, not a month-average
-    * one, and the skew the form exists to break can't reappear inside the
-    * burst. Exposed separately from [[leftAsofAuto]] so the dispatch rule
-    * itself is spec-pinnable.
+    * `threshold` is both the crossover and the rows-per-bucket target;
+    * specs lower it to reach the bucketed verdict at test size.
     */
   def chooseAsofDispatch(
       left: DataFrame,
@@ -359,38 +312,26 @@ object AsofJoin {
       on: Seq[String],
       leftTime: String,
       rightTime: String,
-      threshold: Long = HotKeyCrossover,
-      defaultBucketSeconds: Long = 86400L
-  ): AsofDispatch = {
+      threshold: Long = HotKeyCrossover
+  ): Option[Long] = {
     val keys = left
       .select((on.map(col) :+ col(leftTime).cast("timestamp").as("__t")): _*)
       .unionByName(right
         .select((on.map(col) :+ col(rightTime).cast("timestamp").as("__t")): _*))
-    if (Probes.cappedCount(keys, threshold) <= threshold)
-      return AsofDispatch("plain", defaultBucketSeconds)
-    val stats = Probes.hottestKeyBurstStats(keys, on, "__t", threshold)
-    if (stats.rows > threshold)
-      AsofDispatch("bucketed", bucketWidthFor(stats.rows, stats.spanSeconds,
-        stats.peakWindowRows, Probes.PeakWindowSeconds,
-        stats.peakFineRows, Probes.FineWindowSeconds, threshold))
-    else AsofDispatch("plain", defaultBucketSeconds)
+    if (Probes.cappedCount(keys, threshold) <= threshold) None
+    else asofVerdict(Probes.hottestKeyBurstStats(keys, on, "__t", threshold), threshold)
   }
 
-  /** As-of join that picks the physical form per call: the per-key
-    * single-pass native merge exec ([[leftAsofNative]] — the fastest form
-    * when no key dominates) for ordinary key distributions, the
-    * skew-resistant (key, time-bucket) form ([[leftAsofBucketed]]) when
-    * any single key exceeds [[HotKeyCrossover]] rows (both the native and
-    * the window form partition by key alone, so a hot key's whole history
-    * serializes in one partition). All forms produce identical rows
-    * (equivalence-tested), so the choice is purely physical.
-    *
-    * @param mode override knob: "auto" (default) measures and decides —
-    *             including the bucket width, sized from the hottest key's
-    *             measured density ([[chooseAsofDispatch]]); "plain" /
-    *             "bucketed" force the form without the decision scan (for
-    *             callers that already know their shape), taking
-    *             `bucketSeconds` as given.
+  /** As-of join that picks the physical form per call
+    * ([[chooseAsofDispatch]]): the per-key single-pass native merge exec
+    * ([[leftAsofNative]] — the fastest form when no key dominates) for
+    * ordinary key distributions, the skew-resistant (key, time-bucket) form
+    * ([[leftAsofBucketed]]) with a measured bucket width when one key
+    * exceeds [[HotKeyCrossover]] rows (both the native and the window form
+    * partition by key alone, so a hot key's whole history serializes in
+    * one partition). All forms produce identical rows
+    * (equivalence-tested), so the choice is purely physical. A caller that
+    * already knows its shape calls the form it wants directly.
     */
   def leftAsofAuto(
       left: DataFrame,
@@ -399,24 +340,13 @@ object AsofJoin {
       leftTime: String,
       rightTime: String,
       rightPayload: Seq[String],
-      suffix: String = "",
-      mode: String = "auto",
-      hotKeyThreshold: Long = HotKeyCrossover,
-      bucketSeconds: Long = 86400L
+      suffix: String = ""
   ): DataFrame = {
-    val dispatch = mode match {
-      case "auto" =>
-        chooseAsofDispatch(left, right, on, leftTime, rightTime,
-          hotKeyThreshold, bucketSeconds)
-      case "plain" | "bucketed" => AsofDispatch(mode, bucketSeconds)
-      case other =>
-        throw new IllegalArgumentException(
-          s"mode must be auto|plain|bucketed, got $other")
-    }
-    if (dispatch.form == "bucketed")
-      leftAsofBucketed(left, right, on, leftTime, rightTime, rightPayload,
-        suffix, dispatch.bucketSeconds)
-    else
-      leftAsofNative(left, right, on, leftTime, rightTime, rightPayload, suffix)
+    // a keyless join has no hot key to measure: the native operator
+    // rejects it, naming the keyless form, before any probe runs
+    val width =
+      if (on.isEmpty) None else chooseAsofDispatch(left, right, on, leftTime, rightTime)
+    width.fold(leftAsofNative(left, right, on, leftTime, rightTime, rightPayload, suffix))(
+      leftAsofBucketed(left, right, on, leftTime, rightTime, rightPayload, suffix, _))
   }
 }

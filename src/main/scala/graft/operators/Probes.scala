@@ -106,17 +106,19 @@ object Probes {
     */
   val MinFineSampleRows: Long = 32L
 
-  /** Shape of the hottest join key: total rows, time span, the row count
-    * of its BUSIEST [[PeakWindowSeconds]]-wide window, and (r16) of its
-    * busiest [[FineWindowSeconds]]-wide window (0 when the sampled
-    * evidence is below [[MinFineSampleRows]]). Rows and peaks are scaled
-    * back to full-data estimates when the probe sampled.
+  /** Shape of the hottest join key, the input of the as-of dispatch rule
+    * ([[AsofJoin.asofVerdict]]): total rows, time span, and peak windows,
+    * each (window seconds, rows in the busiest window of that width).
+    * [[hottestKeyBurstStats]] gives the busiest [[PeakWindowSeconds]] and
+    * [[FineWindowSeconds]] windows (the fine one 0 when its sampled
+    * evidence is below [[MinFineSampleRows]]), scaled back to full-data
+    * estimates when the probe sampled; stored per-month counts give one
+    * window per month.
     */
   final case class HotKeyStats(
       rows: Long,
       spanSeconds: Long,
-      peakWindowRows: Long,
-      peakFineRows: Long = 0L)
+      peaks: Seq[(Long, Long)])
 
   /** [[hottestKeyCount]] extended with the hottest key's TIME SPAN and
     * PEAK WINDOW density, from the SAME sampled pass (the span min/max and
@@ -125,7 +127,7 @@ object Probes {
     * (key, hour) only adds a second shuffle stage over the SAMPLE).
     * Returns stats of the key with the most rows; all-zero on empty input.
     *
-    * The span feeds bucket-width sizing ([[AsofJoin.bucketWidthFor]]): a
+    * The span feeds bucket-width sizing ([[AsofJoin.asofVerdict]]): a
     * skew verdict alone says "bucket", but only rows-over-time says how
     * WIDE. The peak feeds the BURST correction: a hot key whose rows bunch
     * into one hour of a month span has a month-average density ~700× below
@@ -177,7 +179,7 @@ object Probes {
       .agg(max_by(struct(col("__n"), col("__lo"), col("__hi"), col("__peak"),
         col("__fpeak")), col("__n")))
       .head()
-    if (hottest.isNullAt(0)) return HotKeyStats(0L, 0L, 0L)
+    if (hottest.isNullAt(0)) return HotKeyStats(0L, 0L, Nil)
     val row = hottest.getStruct(0)
     val n = row.getLong(0)
     val span =
@@ -192,7 +194,8 @@ object Probes {
     def scaled(v: Long): Long = if (frac < 1.0) (v / frac).toLong else v
     val fine =
       if (finePeakSampled >= MinFineSampleRows) scaled(finePeakSampled) else 0L
-    HotKeyStats(scaled(n), span, scaled(peak), fine)
+    HotKeyStats(scaled(n), span,
+      Seq(PeakWindowSeconds -> scaled(peak), FineWindowSeconds -> fine))
   }
 
   /** Interval-length distribution stats for bucket sizing:

@@ -55,11 +55,15 @@ object SkewJoin {
     */
   val HotKeyThreshold: Long = 1000000L
 
+  /** Most salts [[chooseSaltCount]] picks: each salt replicates the dim
+    * side once, so the cap bounds the replication a degenerate key can
+    * demand.
+    */
+  val MaxSalts: Int = 32
+
   /** Decide the salt count for `left`'s key distribution: 1 (no salting)
     * when no key exceeds `threshold` rows, else just enough salts to split
-    * the hottest key into ≤ threshold-row buckets, capped at `maxSalts`
-    * (each salt replicates the dim side once, so the cap bounds the
-    * replication cost a degenerate key can demand).
+    * the hottest key into ≤ threshold-row buckets, capped at [[MaxSalts]].
     *
     * Decision cost, two tiers (same discipline as
     * [[AsofJoin.chooseAsofDispatch]]): a QUICK REJECT via [[Probes.cappedCount]]
@@ -72,16 +76,14 @@ object SkewJoin {
     * size; both branches are exact, so estimation error near the
     * crossover only flips a choice between two equal-cost plans. Exposed
     * separately from [[autoInnerJoin]] so the dispatch rule itself is
-    * spec-pinnable.
+    * spec-pinnable; specs lower `threshold` to reach salting at test size.
     */
   def chooseSaltCount(
       left: DataFrame,
       leftKey: String,
-      threshold: Long = HotKeyThreshold,
-      maxSalts: Int = 32
+      threshold: Long = HotKeyThreshold
   ): Int = {
     require(threshold >= 1, "threshold must be >= 1")
-    require(maxSalts >= 1, "maxSalts must be >= 1")
     // NULL keys never skew an INNER join — Catalyst's IsNotNull inference
     // prunes them before the shuffle — so a null-heavy optional FK must
     // not read as a hot key and buy pointless dim replication. (The as-of
@@ -94,44 +96,30 @@ object SkewJoin {
     // cost less than either plan it picks (see hottestKeyCount's doc)
     val maxPerKey = Probes.hottestKeyCount(keys, Seq(leftKey), threshold)
     if (maxPerKey <= threshold) 1
-    else math.min(maxSalts.toLong, (maxPerKey + threshold - 1) / threshold).toInt
+    else math.min(MaxSalts.toLong, (maxPerKey + threshold - 1) / threshold).toInt
   }
 
   /** Inner equi-join that decides per call whether the fact side needs
-    * salting: the plain join (Catalyst picks broadcast/SMJ/SHJ, AQE splits
-    * sort-merge skew at runtime) when no key is hot, [[saltedInnerJoin]]
-    * with a measured salt count when one is. The salted form exists for the
-    * plans AQE's skew handling does not cover (shuffled-hash joins,
-    * pre-shuffle aggregation pipelines, engines with AQE off), so the
-    * dispatcher makes the hot-key case safe without taxing the common case
-    * with dim-side replication.
+    * salting ([[chooseSaltCount]]): the plain join (Catalyst picks
+    * broadcast/SMJ/SHJ, AQE splits sort-merge skew at runtime) when no key
+    * is hot, [[saltedInnerJoin]] with a measured salt count when one is.
+    * The salted form exists for the plans AQE's skew handling does not
+    * cover (shuffled-hash joins, pre-shuffle aggregation pipelines, engines
+    * with AQE off), so the dispatcher makes the hot-key case safe without
+    * taxing the common case with dim-side replication. A caller that
+    * already knows its salt count calls [[saltedInnerJoin]] directly.
     *
     * Both branches produce identical rows (the salt only routes rows), so
     * the choice is purely physical — driver-gated by q_salted_auto against
     * the unsalted oracle.
-    *
-    * @param mode override knob: "auto" (default) measures and decides;
-    *             a salt count ("1", "8", …) forces the form without the
-    *             decision scan, for callers that already know their shape.
     */
   def autoInnerJoin(
       left: DataFrame,
       right: DataFrame,
       leftKey: String,
-      rightKey: String,
-      mode: String = "auto",
-      threshold: Long = HotKeyThreshold,
-      maxSalts: Int = 32
+      rightKey: String
   ): DataFrame = {
-    val salts = mode match {
-      case "auto" => chooseSaltCount(left, leftKey, threshold, maxSalts)
-      case other =>
-        // strict parse: "0" and out-of-int-range digit strings violate the
-        // positive-salt-count contract just as much as "salted" does
-        scala.util.Try(other.toInt).toOption.filter(_ >= 1).getOrElse(
-          throw new IllegalArgumentException(
-            s"mode must be auto or a positive salt count, got $other"))
-    }
+    val salts = chooseSaltCount(left, leftKey)
     if (salts <= 1) left.join(right, left(leftKey) === right(rightKey))
     else saltedInnerJoin(left, right, leftKey, rightKey, salts)
   }

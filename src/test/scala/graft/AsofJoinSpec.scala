@@ -123,61 +123,81 @@ class AsofJoinSpec extends SparkSpec {
       (if (i % 2 == 0) "A" else "B", randTs(), i)).toDF("k", "t", "id")
     val right = (1 to 300).map(i =>
       (if (i % 3 == 0) "A" else "B", randTs(), i * 1.0)).toDF("k", "t", "v")
-    assert(AsofJoin.chooseAsofDispatch(left, right, Seq("k"), "t", "t").form === "plain")
+    assert(AsofJoin.chooseAsofDispatch(left, right, Seq("k"), "t", "t") === None)
     // skewed shape: one key carries everything — with the threshold scaled
     // down to test size, the dispatcher must flip to bucketed
     val hotL = (1 to 400).map(i => ("HOT", randTs(), i)).toDF("k", "t", "id")
     val hotR = (1 to 300).map(i => ("HOT", randTs(), i * 1.0)).toDF("k", "t", "v")
-    assert(AsofJoin.chooseAsofDispatch(hotL, hotR, Seq("k"), "t", "t", threshold = 500L).form
-      === "bucketed")
-    assert(AsofJoin.chooseAsofDispatch(hotL, hotR, Seq("k"), "t", "t").form
-      === "plain") // default 1M
+    val hot = AsofJoin.chooseAsofDispatch(hotL, hotR, Seq("k"), "t", "t", threshold = 500L)
+    assert(hot.isDefined)
+    assert(AsofJoin.chooseAsofDispatch(hotL, hotR, Seq("k"), "t", "t")
+      === None) // default 1M
     // both dispatch targets produce identical rows on both shapes
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("k", "t", "id", "v_r").orderBy("k", "t", "id")
         .collect().map(_.toString).toSeq
     assert(
-      canon(AsofJoin.leftAsofAuto(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r",
-        hotKeyThreshold = 500L)) ===
+      canon(AsofJoin.leftAsofBucketed(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r",
+        bucketSeconds = hot.get)) ===
       canon(AsofJoin.leftAsof(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r")))
     assert(
       canon(AsofJoin.leftAsofAuto(left, right, Seq("k"), "t", "t", Seq("v"), "_r")) ===
       canon(AsofJoin.leftAsof(left, right, Seq("k"), "t", "t", Seq("v"), "_r")))
-    // override knob bypasses the decision scan
+    // a caller that knows its shape calls the form directly, no decision scan
+    val before = graft.operators.Probes.probeJobs.get()
     assert(
-      canon(AsofJoin.leftAsofAuto(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r",
-        mode = "bucketed")) ===
+      canon(AsofJoin.leftAsofBucketed(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r")) ===
       canon(AsofJoin.leftAsof(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r")))
-    intercept[IllegalArgumentException] {
-      AsofJoin.leftAsofAuto(left, right, Seq("k"), "t", "t", Seq("v"), "_r",
-        mode = "nope")
-    }
+    assert(graft.operators.Probes.probeJobs.get() === before)
     // empty right side must not NPE the decision (max(count) over no rows)
     val emptyR = right.filter(col("v") < 0)
     assert(AsofJoin.chooseAsofDispatch(left.limit(0), emptyR, Seq("k"), "t", "t")
-      .form === "plain")
+      === None)
     // two-tier boundary: 700 total rows saturate the capped-count quick
     // reject at threshold 600, but the hottest key (~380 rows) is still
     // under it — the per-key agg tier must run and still answer "plain"
-    assert(AsofJoin.chooseAsofDispatch(left, right, Seq("k"), "t", "t", threshold = 600L).form
-      === "plain")
+    assert(AsofJoin.chooseAsofDispatch(left, right, Seq("k"), "t", "t", threshold = 600L)
+      === None)
   }
 
+  test("auto as-of rejects an empty key list before any probe") {
+    // the keyless form is legal or not whatever the input size: it used to
+    // pay the capped-count probe and then fail in the native operator below
+    // the crossover, while the bucketed form ran it above
+    val left = Seq(("A", ts("2024-01-01 00:00:05"), 1)).toDF("k", "t", "id")
+    val before = graft.operators.Probes.probeJobs.get()
+    val e = intercept[IllegalArgumentException] {
+      AsofJoin.leftAsofAuto(left, left.withColumn("v", col("id") * 1.0),
+        Seq.empty, "t", "t", Seq("v"), "_r").collect()
+    }
+    assert(e.getMessage.contains("window rewrite"))
+    assert(graft.operators.Probes.probeJobs.get() === before)
+  }
+
+  /** The width the dispatch rule gives a hot key of `rows` over `span`
+    * seconds with the given peak windows, at `target` rows per bucket. */
+  private def width(rows: Long, span: Long, target: Long, peaks: (Long, Long)*): Long =
+    AsofJoin.asofVerdict(graft.operators.Probes.HotKeyStats(rows, span, peaks), target).get
+
   test("auto-sized bucket width: span × target / hotRows, clamped; dispatch carries it") {
-    import AsofJoin.bucketWidthFor
+    import graft.operators.Probes
     // 100M rows over one day targeting 1M/bucket → ~864 s buckets
-    assert(bucketWidthFor(100000000L, 86400L, 1000000L) === 864L)
+    assert(width(100000000L, 86400L, 1000000L) === 864L)
     // density ×10 → width ÷10: rows-per-bucket stays at the target, which
     // is what keeps the hot-key wall flat as density scales (the fixed
     // day-wide bucket would hold 10× the rows and re-serialize)
-    assert(bucketWidthFor(1000000000L, 86400L, 1000000L) === 86L)
+    assert(width(1000000000L, 86400L, 1000000L) === 86L)
     // clamps: never wider than the span, never below 1 s
-    assert(bucketWidthFor(2000000L, 86400L, 1000000L) === 43200L)
-    assert(bucketWidthFor(500000L, 86400L, 1000000L) === 86400L) // w > span
-    assert(bucketWidthFor(10000000L, 5L, 1000000L) === 1L)
-    // degenerate stats (no rows / zero span) fall back to the day default
-    assert(bucketWidthFor(0L, 86400L) === 86400L)
-    assert(bucketWidthFor(5000000L, 0L) === 86400L)
+    assert(width(2000000L, 86400L, 1000000L) === 43200L)
+    assert(width(10000000L, 5L, 1000000L) === 1L)
+    // a stored partition is clamped to its own length: this day's
+    // candidate 86400 × 1M / 500k exceeds the day (w > span)
+    assert(AsofJoin.storedAsofDispatch(Probes.HotKeyStats(1500000L, 864000L,
+      Seq(86400L -> 500000L, 777600L -> 1000000L))) === Some(86400L))
+    // degenerate stats (zero span) fall back to the day default; a key at
+    // or under the threshold (no rows at all included) is not bucketed
+    assert(width(5000000L, 0L, 1000000L) === 86400L)
+    assert(AsofJoin.asofVerdict(Probes.HotKeyStats(0L, 86400L, Nil), 1000000L) === None)
 
     val rnd = new scala.util.Random(11)
     val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
@@ -188,38 +208,116 @@ class AsofJoinSpec extends SparkSpec {
     // width is exactly span × threshold / rows of the combined hot key
     val d = AsofJoin.chooseAsofDispatch(hotL, hotR, Seq("k"), "t", "t",
       threshold = 500L)
-    assert(d.form === "bucketed")
+    assert(d.isDefined)
     val union = hotL.select(col("t")).unionByName(hotR.select(col("t")))
     val mm = union.agg(
       org.apache.spark.sql.functions.min("t"),
       org.apache.spark.sql.functions.max("t")).head()
     val span = (mm.getTimestamp(1).getTime - mm.getTimestamp(0).getTime) / 1000L
-    // r15: the dispatch width is the average-density width CORRECTED DOWN
-    // by the measured peak-hour density (burst resistance) — recompute the
+    // the dispatch width is the average-density width CORRECTED DOWN by
+    // the measured peak-hour density (burst resistance) — recompute the
     // exact peak the probe sees and assert the full formula
     val peak = union
       .groupBy(org.apache.spark.sql.functions.window(col("t"), "1 hour"))
       .count().agg(org.apache.spark.sql.functions.max("count")).head().getLong(0)
-    assert(d.bucketSeconds === bucketWidthFor(700L, span, peak,
-      graft.operators.Probes.PeakWindowSeconds, 500L))
-    assert(d.bucketSeconds > 0L && d.bucketSeconds < 86400L * 10)
-    // even shape: plain verdict keeps the caller's default width
+    assert(d.get === width(700L, span, 500L, Probes.PeakWindowSeconds -> peak))
+    assert(d.get > 0L && d.get < 86400L * 10)
+    // even shape: plain verdict, which carries no width
     val evenL = (1 to 60).map(i => (s"k${i % 6}", randTs(), i)).toDF("k", "t", "id")
     val evenR = (1 to 60).map(i => (s"k${i % 6}", randTs(), i * 1.0)).toDF("k", "t", "v")
     val dp = AsofJoin.chooseAsofDispatch(evenL, evenR, Seq("k"), "t", "t",
-      threshold = 500L, defaultBucketSeconds = 1234L)
-    assert(dp === AsofJoin.AsofDispatch("plain", 1234L))
+      threshold = 500L)
+    assert(dp === None)
     // equivalence holds at arbitrary odd widths — the width is purely
     // physical, so auto picking ANY width can never change rows
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("k", "t", "id", "v_r").orderBy("k", "t", "id")
         .collect().map(_.toString).toSeq
     val expected = canon(AsofJoin.leftAsof(hotL, hotR, Seq("k"), "t", "t", Seq("v"), "_r"))
-    for (w <- Seq(37L, 3600L, d.bucketSeconds))
+    for (w <- Seq(37L, 3600L, d.get))
       assert(canon(AsofJoin.leftAsofBucketed(hotL, hotR, Seq("k"), "t", "t",
         Seq("v"), "_r", bucketSeconds = w)) === expected)
     assert(canon(AsofJoin.leftAsofAuto(hotL, hotR, Seq("k"), "t", "t",
-      Seq("v"), "_r", hotKeyThreshold = 500L)) === expected)
+      Seq("v"), "_r")) === expected)
+  }
+
+  test("one width rule matches the reference probe-tier and footer-tier formulas on random stats") {
+    import graft.operators.Probes
+    // Reference: the three chained probe-tier sizers and the footer tier's
+    // month arithmetic that the one rule replaced, kept verbatim
+    def ref1(hotKeyRows: Long, spanSeconds: Long, targetRowsPerBucket: Long): Long =
+      if (hotKeyRows <= 0L || spanSeconds <= 0L) 86400L
+      else {
+        val w = spanSeconds.toDouble * targetRowsPerBucket.toDouble / hotKeyRows.toDouble
+        math.min(spanSeconds, math.max(1L, w.toLong))
+      }
+    def ref2(hotKeyRows: Long, spanSeconds: Long, peakWindowRows: Long,
+        peakWindowSeconds: Long, targetRowsPerBucket: Long): Long = {
+      val avg = ref1(hotKeyRows, spanSeconds, targetRowsPerBucket)
+      if (peakWindowRows <= 0L || peakWindowSeconds <= 0L) avg
+      else {
+        val wPeak = peakWindowSeconds.toDouble * targetRowsPerBucket.toDouble /
+          peakWindowRows.toDouble
+        math.max(1L, math.min(avg, wPeak.toLong))
+      }
+    }
+    def ref3(hotKeyRows: Long, spanSeconds: Long, peakWindowRows: Long,
+        peakWindowSeconds: Long, peakFineRows: Long, peakFineSeconds: Long,
+        targetRowsPerBucket: Long): Long = {
+      val base = ref2(hotKeyRows, spanSeconds, peakWindowRows,
+        peakWindowSeconds, targetRowsPerBucket)
+      if (peakFineRows <= 0L || peakFineSeconds <= 0L) base
+      else {
+        val wFine = peakFineSeconds.toDouble * targetRowsPerBucket.toDouble /
+          peakFineRows.toDouble
+        math.max(1L, math.min(base, wFine.toLong))
+      }
+    }
+    def refFooter(raw: Seq[(String, Long)], std: Seq[(String, Long)]): Option[Long] = {
+      import graft.ohlc.OhlcGenerator.monthSpanSeconds
+      val total = (raw ++ std).map(_._2).sum
+      if (total > AsofJoin.HotKeyCrossover) {
+        val byMonth = (raw ++ std).groupMapReduce(_._1)(_._2)(_ + _)
+          .filter(_._2 > 0)
+        val live = byMonth.keys.toSeq
+        val target = AsofJoin.HotKeyCrossover
+        val avg = ref1(total, monthSpanSeconds(live), target)
+        val peak = byMonth.map { case (m, n) =>
+          ref1(n, monthSpanSeconds(Seq(m)), target)
+        }.min
+        Some(math.min(avg, peak))
+      } else None
+    }
+
+    val rnd = new scala.util.Random(20240101)
+    // log-uniform over [0, 10^digits), with exact zeros and small values
+    def draw(digits: Int): Long = rnd.nextInt(20) match {
+      case 0 => 0L
+      case 1 => rnd.nextInt(4).toLong
+      case _ => math.pow(10.0, rnd.nextDouble() * digits).toLong
+    }
+    val n = 20000
+    val probeMismatches = (1 to n).count { _ =>
+      val (rows, span, target) = (draw(11), draw(8), 1L + draw(7))
+      val (peak, peakSec, fine, fineSec) = (draw(11), draw(4), draw(10), draw(3))
+      val expected =
+        if (rows > target) Some(ref3(rows, span, peak, peakSec, fine, fineSec, target))
+        else None
+      AsofJoin.asofVerdict(Probes.HotKeyStats(rows, span,
+        Seq(peakSec -> peak, fineSec -> fine)), target) !== expected
+    }
+    val months = for (y <- 2019 to 2026; m <- 1 to 12) yield f"$y%04d$m%02d"
+    def monthCounts(): Seq[(String, Long)] =
+      rnd.shuffle(months).take(1 + rnd.nextInt(24)).map(_ -> draw(8))
+    val footerMismatches = (1 to n).count { _ =>
+      val (raw, std) = (monthCounts(), monthCounts())
+      AsofJoin.storedAsofDispatch(graft.ohlc.OhlcGenerator.monthStats(raw ++ std)) !==
+        refFooter(raw, std)
+    }
+    info(s"probe tier: $n random stats, $probeMismatches mismatches; " +
+      s"footer tier: $n random month sets, $footerMismatches mismatches")
+    assert(probeMismatches === 0)
+    assert(footerMismatches === 0)
   }
 
   test("hottestKeyStats sampled tier: count within a few percent, span near-true") {
@@ -276,18 +374,18 @@ class AsofJoinSpec extends SparkSpec {
     // the busiest hour holds the whole burst (plus the sparse rows that
     // happen to land in it: ids 0 and 1 of the 25920s series fall in hours
     // 0 and 7 — only id 0 shares the burst hour)
-    assert(s.peakWindowRows === 5001L)
+    val peaks = s.peaks.toMap
+    assert(peaks(Probes.PeakWindowSeconds) === 5001L)
     // (r16) the MINUTE peak rides the same pass: seconds 0..1399 carry 2
     // burst rows, 1400+ carry 1, so minutes 0..22 hold 120 each; sparse
     // id 0 (t = burst start) lands in minute 0 → 121
-    assert(s.peakFineRows === 121L)
+    assert(peaks(Probes.FineWindowSeconds) === 121L)
     // empty input: all-zero, no NPE
     assert(Probes.hottestKeyBurstStats(df.filter("1 = 0"), Seq("k"), "t", 100L)
-      === Probes.HotKeyStats(0L, 0L, 0L))
+      === Probes.HotKeyStats(0L, 0L, Nil))
   }
 
   test("sub-hour burst: the minute peak shrinks the width where the hour peak is blind") {
-    import AsofJoin.bucketWidthFor
     import graft.operators.Probes
     val span = 30L * 86400L
     // 1M of a key's 10M rows inside ONE minute of an otherwise-uniform
@@ -296,32 +394,27 @@ class AsofJoinSpec extends SparkSpec {
     // peak sees the real density and demands 60 × 1M / 1M = 60 s
     val hourAvg = 10000000L / (span / 3600L)
     val burstHour = 1000000L + hourAvg
-    val w2 = bucketWidthFor(10000000L, span, burstHour, 3600L, 1000000L)
-    val w3 = bucketWidthFor(10000000L, span, burstHour, 3600L,
-      1000000L, 60L, 1000000L)
+    val w2 = width(10000000L, span, 1000000L, 3600L -> burstHour)
+    val w3 = width(10000000L, span, 1000000L, 3600L -> burstHour, 60L -> 1000000L)
     assert(w3 === math.min(w2, 60L) && w3 < w2,
       s"minute peak must shrink the width: hour-only $w2, with-fine $w3")
     // degenerate fine stats keep the coarser answer
-    assert(bucketWidthFor(10000000L, span, burstHour, 3600L, 0L, 60L, 1000000L)
-      === w2)
-    assert(bucketWidthFor(10000000L, span, burstHour, 3600L, 1000000L, 0L,
-      1000000L) === w2)
+    assert(width(10000000L, span, 1000000L, 3600L -> burstHour, 60L -> 0L) === w2)
+    assert(width(10000000L, span, 1000000L, 3600L -> burstHour, 0L -> 1000000L) === w2)
     // uniform traffic: the fine correction is a no-op (fine width ≥ hour's)
     val finePeakUniform = 10000000L / (span / 60L)
-    assert(bucketWidthFor(10000000L, span, hourAvg, 3600L,
-      finePeakUniform, 60L, 1000000L)
-      === bucketWidthFor(10000000L, span, hourAvg, 3600L, 1000000L))
+    assert(width(10000000L, span, 1000000L, 3600L -> hourAvg, 60L -> finePeakUniform)
+      === width(10000000L, span, 1000000L, 3600L -> hourAvg))
     // probe significance floor: a sampled fine peak below MinFineSampleRows
     // reads 0 from the probe, so sizing provably keeps the coarser answer
     val tiny = spark.range(10L).selectExpr("'HOT' AS k",
       "timestamp_seconds(1704067200 + id) AS t")
     val st = Probes.hottestKeyBurstStats(tiny, Seq("k"), "t", threshold = 5L)
-    assert(st.peakFineRows === 0L,
-      s"sub-floor fine evidence must read 0, got ${st.peakFineRows}")
+    val fine = st.peaks.toMap.apply(Probes.FineWindowSeconds)
+    assert(fine === 0L, s"sub-floor fine evidence must read 0, got $fine")
   }
 
   test("burst-resistant width: a month-span key bunched into one hour gets an hour-scale width") {
-    import AsofJoin.bucketWidthFor
     val span = 30L * 86400L
     // 10M rows over a month, ALL inside one hour: the average width
     // (span × target / rows = 259 200 s ≈ 3 days of calendar time) would
@@ -330,19 +423,18 @@ class AsofJoinSpec extends SparkSpec {
     // peak correction sizes from the burst's own density instead
     // (3600 × 1M / 10M = 360 s → ~10 buckets across the burst) and takes
     // the MIN of the two candidates.
-    val avgOnly = bucketWidthFor(10000000L, span, 1000000L)
-    val burstAware = bucketWidthFor(10000000L, span, 10000000L, 3600L, 1000000L)
+    val avgOnly = width(10000000L, span, 1000000L)
+    val burstAware = width(10000000L, span, 1000000L, 3600L -> 10000000L)
     assert(burstAware <= avgOnly)
     assert(burstAware === math.min(avgOnly, 360L))
     // uniform key (peak ≈ rows/hours): correction is a no-op (peak width ≥ avg)
     val hours = span / 3600L
     val uniformPeak = 10000000L / hours
-    assert(bucketWidthFor(10000000L, span, uniformPeak, 3600L, 1000000L)
-      === avgOnly)
+    assert(width(10000000L, span, 1000000L, 3600L -> uniformPeak) === avgOnly)
     // degenerate peak stats keep the average width; floor at 1 s holds
-    assert(bucketWidthFor(10000000L, span, 0L, 3600L, 1000000L) === avgOnly)
-    assert(bucketWidthFor(10000000L, span, 10000000L, 0L, 1000000L) === avgOnly)
-    assert(bucketWidthFor(10000000L, span, Long.MaxValue / 2, 3600L, 1L) === 1L)
+    assert(width(10000000L, span, 1000000L, 3600L -> 0L) === avgOnly)
+    assert(width(10000000L, span, 1000000L, 0L -> 10000000L) === avgOnly)
+    assert(width(10000000L, span, 1L, 3600L -> Long.MaxValue / 2) === 1L)
   }
 
   test("native as-of rejects an empty key list with a clear message") {

@@ -752,8 +752,12 @@ class ForexPipelineSpec extends SparkSpec {
     val auto = graft.ohlc.OhlcGenerator.generate(raw, std).collect()
     assert(graft.operators.Probes.probeJobs.get() > before,
       "auto-mode generate should have paid a decision probe")
-    val explicit = graft.ohlc.OhlcGenerator.generate(raw, std, "plain").collect()
+    val explicit = graft.ohlc.OhlcGenerator.enrichBars(
+      graft.ohlc.Ohlc.ticksToOhlc1m(raw, std, "plain")).collect()
     assert(explicit.map(_.toString).sorted.sameElements(auto.map(_.toString).sorted))
+    intercept[IllegalArgumentException] {
+      graft.ohlc.Ohlc.ticksToOhlc1m(raw, std, "nope")
+    }
   }
 
   test("footer counts answer from a fresh Manifest sidecar with ZERO data-file opens") {
@@ -877,6 +881,87 @@ class ForexPipelineSpec extends SparkSpec {
     assert(bars > 0L)
     assert(graft.operators.Probes.probeJobs.get() > before,
       "metadata fallback should have paid a probed auto dispatch")
+  }
+
+  test("regenerate at production scale: stored counts give the bucketed verdict, zero probes, same bars") {
+    import spark.implicits._
+    import graft.ohlc.{Ohlc, OhlcGenerator}
+    val wh = Files.createTempDirectory("graft_bucketed_regen").resolve("wh").toString
+    def ticks(base: Double) = Seq(
+        ("2024-01-10 14:30:01", base, base + 0.0001),
+        ("2024-01-10 14:30:40", base + 0.0002, base + 0.0003),
+        ("2024-01-31 23:59:59", base + 0.0004, base + 0.0005),
+        ("2024-02-05 09:00:00", base + 0.001, base + 0.0011))
+      .toDF("ts", "bid", "ask")
+      .select(col("ts").cast("timestamp").as("timestamp"), col("bid"), col("ask"))
+    TickIngest.writeTicks(ticks(1.1), wh, "EURUSD", "raw_spread")
+    TickIngest.writeTicks(ticks(1.09995), wh, "EURUSD", "standard")
+    // rewrite every tick month's sidecar to a production month (BASELINE:
+    // 9.5M ticks per variant); the file names stay, so each sidecar stays
+    // fresh and the stored-count tier answers from it. The checksum of the
+    // edited part goes with the old bytes.
+    val PerMonth = 9500000L
+    val Rows = """"rows":\d+""".r
+    for (table <- Seq("raw_spread_ticks", "standard_ticks"); m <- Seq("202401", "202402")) {
+      val sidecar = java.nio.file.Paths.get(wh, table, "instrument=EURUSD", s"yyyymm=$m", "_manifest")
+      val parts = Files.list(sidecar)
+      try parts.iterator().asScala.foreach { f =>
+        val name = f.getFileName.toString
+        if (name.startsWith(".") && name.endsWith(".crc")) Files.delete(f)
+        else if (name.startsWith("part-") && name.endsWith(".json")) {
+          val lines = Files.readAllLines(f).asScala.filter(_.nonEmpty).toVector
+          val rewritten = lines.zipWithIndex.map { case (l, i) =>
+            val rows = PerMonth / lines.size + (if (i == 0) PerMonth % lines.size else 0L)
+            Rows.replaceAllIn(l, s""""rows":$rows""")
+          }
+          Files.write(f, rewritten.asJava)
+        }
+      } finally parts.close()
+    }
+    val counts = Seq("raw_spread_ticks", "standard_ticks").flatMap(t =>
+      OhlcGenerator.tableMonthCounts(spark, wh, t, "EURUSD", Nil))
+    assert(counts.sortBy(_._1) ===
+      Seq("202401" -> PerMonth, "202401" -> PerMonth, "202402" -> PerMonth, "202402" -> PerMonth))
+    // the one rule over those counts: 38M rows across Jan + Feb 2024
+    // (60 days = 5 184 000 s) give the average candidate
+    // 5184000 × 1M / 38M = 136 421 s; each month of 19M rows is a peak
+    // window, January 2678400 × 1M / 19M = 140 968 s and February
+    // 2505600 × 1M / 19M = 131 873 s, the smallest candidate
+    assert(graft.operators.AsofJoin.storedAsofDispatch(OhlcGenerator.monthStats(counts))
+      === Some(131873L))
+    // the plans regenerate runs carry the bucketed form's bucket column
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.analyzed.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val before = graft.operators.Probes.probeJobs.get()
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    spark.listenerManager.register(listener)
+    val n =
+      try {
+        val bars = OhlcGenerator.regenerate(spark, wh, "EURUSD")
+        org.apache.spark.TestListenerBus.drain(sc)
+        bars
+      } finally spark.listenerManager.unregister(listener)
+    assert(graft.operators.Probes.probeJobs.get() === before,
+      "regenerate launched a probe job despite stored-count dispatch")
+    assert(plans.asScala.exists(_.contains("__b#")), "regenerate ran no bucketed as-of")
+    val stored = graft.storage.PrunedScan
+      .readTable(spark, s"$wh/ohlc_1m", OhlcGenerator.TableSchema)
+      .filter(col("instrument") === "EURUSD")
+      .select(OhlcGenerator.Columns.map(col): _*)
+      .collect().map(_.toString).sorted
+    val expected = OhlcGenerator.enrichBars(Ohlc.ticksToOhlc1m(
+        TickIngest.readTicks(spark, wh, "raw_spread", Some("EURUSD")),
+        TickIngest.readTicks(spark, wh, "standard", Some("EURUSD")), "plain"))
+      .collect().map(_.toString).sorted
+    assert(n === 3L && stored.length === 3)
+    assert(stored.sameElements(expected))
   }
 
   test("regenerate refreshes ohlc_1m _manifest sidecars: bar counts answer with ZERO footer opens") {

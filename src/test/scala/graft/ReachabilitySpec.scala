@@ -138,6 +138,15 @@ class ReachabilitySpec extends AnyFunSuite {
     }.toMap
   }
 
+  /** "path: marker" for each marker that comment-stripped main code
+    * outside the directory `dir` names, sorted.
+    */
+  private def namedOutside(dir: String, markers: Seq[String]): Seq[String] =
+    mainSources().toSeq.filterNot(_._1.startsWith(dir)).flatMap { case (path, src) =>
+      val code = stripComments(src)
+      markers.filter(code.contains).map(m => s"$path: $m")
+    }.sorted
+
   private def fileType(path: String): String =
     new File(path).getName.stripSuffix(".scala")
 
@@ -173,14 +182,17 @@ class ReachabilitySpec extends AnyFunSuite {
     // the partition directory names and the sidecar directory are spelled
     // out in storage code alone: every other module walks, reads and
     // writes the warehouse through PrunedScan and Manifest
-    val markers = Seq("_manifest", "yyyymm=", "instrument=")
-    val leaks = mainSources().toSeq.filterNot(_._1.startsWith("graft/storage/"))
-      .flatMap { case (path, src) =>
-        val code = stripComments(src)
-        markers.filter(code.contains).map(m => s"$path: $m")
-      }.sorted
+    val leaks = namedOutside("graft/storage/", Seq("_manifest", "yyyymm=", "instrument="))
     assert(leaks.isEmpty,
       s"warehouse layout spelled out outside graft/storage:\n  ${leaks.mkString("\n  ")}")
+  }
+
+  test("only graft/operators owns the as-of dispatch rule") {
+    // the crossover and the bucket width are decided in AsofJoin alone:
+    // other modules hand it stats and take its verdict
+    val leaks = namedOutside("graft/operators/", Seq("HotKeyCrossover", "bucketWidthFor"))
+    assert(leaks.isEmpty,
+      s"as-of dispatch rule named outside graft/operators:\n  ${leaks.mkString("\n  ")}")
   }
 }
 

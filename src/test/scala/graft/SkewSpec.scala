@@ -52,8 +52,10 @@ class SkewSpec extends SparkSpec {
     val hot = spark.range(5500)
       .select(when(col("id") < 5000, 7L).otherwise(col("id")).as("k"), col("id"))
     assert(SkewJoin.chooseSaltCount(hot, "k", threshold = 1000L) === 5)
-    // maxSalts bounds the dim-side replication a degenerate key can demand
-    assert(SkewJoin.chooseSaltCount(hot, "k", threshold = 1000L, maxSalts = 3) === 3)
+    // MaxSalts bounds the dim-side replication a degenerate key can demand:
+    // the same 5000-row key at threshold 100 needs ceil(5000/100) = 50 salts
+    assert(SkewJoin.MaxSalts === 32)
+    assert(SkewJoin.chooseSaltCount(hot, "k", threshold = 100L) === 32)
     // empty fact side must not NPE the decision (max(count) over no rows)
     assert(SkewJoin.chooseSaltCount(small.filter(col("id") < 0), "k",
       threshold = 1000L) === 1)
@@ -99,20 +101,7 @@ class SkewSpec extends SparkSpec {
     // and the joined result matches the plain join exactly
     val dim = (0L until 50L).map(k => (k, s"dim_$k")).toDF("dk", "name")
     val plain = facts.join(dim, col("k") === col("dk")).count()
-    assert(SkewJoin.autoInnerJoin(facts, dim, "k", "dk",
-      threshold = 1000L).count() === plain)
-  }
-
-  test("mode=\"0\" and out-of-range digit strings are rejected, not silently plain") {
-    import spark.implicits._
-    val f = spark.range(100).select(col("id").as("k"), col("id").as("payload"))
-    val d = (0L until 10L).map(k => (k, s"d$k")).toDF("dk", "name")
-    intercept[IllegalArgumentException] {
-      SkewJoin.autoInnerJoin(f, d, "k", "dk", mode = "0")
-    }
-    intercept[IllegalArgumentException] {
-      SkewJoin.autoInnerJoin(f, d, "k", "dk", mode = "99999999999")
-    }
+    assert(SkewJoin.autoInnerJoin(facts, dim, "k", "dk").count() === plain)
   }
 
   test("autoInnerJoin equals plain join on both even and hot-key shapes") {
@@ -127,20 +116,25 @@ class SkewSpec extends SparkSpec {
       .map(i => (if (i % 10 != 0) 7L else (i % 100).toLong, i.toLong))
       .toDF("k", "payload")
     val expectHot = agg(hot.join(dim, col("k") === col("dk")))
-    assert(SkewJoin.chooseSaltCount(hot, "k", threshold = 1000L) > 1)
-    assert(agg(SkewJoin.autoInnerJoin(hot, dim, "k", "dk",
-      threshold = 1000L)).sameElements(expectHot))
+    val salts = SkewJoin.chooseSaltCount(hot, "k", threshold = 1000L)
+    assert(salts > 1)
+    assert(agg(SkewJoin.saltedInnerJoin(hot, dim, "k", "dk", salts))
+      .sameElements(expectHot))
+    // at the default threshold the dispatcher keeps both shapes plain
+    assert(agg(SkewJoin.autoInnerJoin(hot, dim, "k", "dk")).sameElements(expectHot))
     // even shape: dispatcher picks the plain branch, result unchanged
     val evenF = spark.range(5000)
       .select((col("id") % 100).as("k"), col("id").as("payload"))
     val expectEven = agg(evenF.join(dim, col("k") === col("dk")))
-    assert(agg(SkewJoin.autoInnerJoin(evenF, dim, "k", "dk",
-      threshold = 1000000L)).sameElements(expectEven))
-    // forced mode skips the decision scan and still matches
-    assert(agg(SkewJoin.autoInnerJoin(hot, dim, "k", "dk", mode = "6"))
+    assert(agg(SkewJoin.autoInnerJoin(evenF, dim, "k", "dk")).sameElements(expectEven))
+    // a caller that knows its salt count skips the decision scan and still
+    // matches; a count below 1 is rejected
+    val before = graft.operators.Probes.probeJobs.get()
+    assert(agg(SkewJoin.saltedInnerJoin(hot, dim, "k", "dk", 6))
       .sameElements(expectHot))
+    assert(graft.operators.Probes.probeJobs.get() === before)
     intercept[IllegalArgumentException] {
-      SkewJoin.autoInnerJoin(hot, dim, "k", "dk", mode = "salted")
+      SkewJoin.saltedInnerJoin(hot, dim, "k", "dk", 0)
     }
   }
 }

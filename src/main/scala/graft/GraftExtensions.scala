@@ -80,8 +80,10 @@ object GraftExtensions {
       expecting("l2_sq", "l2_sq(a, b)", 2)(es => L2Sq(es.head, es(1)))),
     ("ohlc_agg",
       info("ohlc_agg",
-        "ohlc_agg(value, ord) - fused (open, high, low, close, n) aggregate over ord order"),
-      expecting("ohlc_agg", "ohlc_agg(value, ord)", 2)(es => OhlcAgg(es.head, es(1)).toAggregateExpression())),
+        "ohlc_agg(value, ord) - the OHLC bar kernel: (open, high, low, close, n) " +
+          "over ord order, with the open and close witnesses"),
+      expecting("ohlc_agg", "ohlc_agg(value, ord)", 2)(
+        es => graft.ohlc.BarAgg(es.head, es(1)).toAggregateExpression())),
     ("hyperplane_buckets",
       info("hyperplane_buckets",
         "hyperplane_buckets(vec, nbits, tables) - multi-table random-hyperplane LSH bucket ids"),

@@ -273,11 +273,11 @@ object SparkEntry {
         .orderBy("event_type", "bar_ts")
     }),
 
-    // A1 via the fused single-buffer custom DeclarativeAggregate (OhlcAgg):
-    // same bars, one accumulator through the shuffle instead of four
+    // A1 through the fused bar kernel (ohlc.BarAgg, one fixed-width
+    // buffer), which Ohlc.bars runs: the same bars as q_ohlc_1m
     "q_ohlc_fused" -> ((s, dir) =>
       Ohlc
-        .barsFused(ev(s, dir), keys = Seq("event_type"), time = "ts",
+        .bars(ev(s, dir), keys = Seq("event_type"), time = "ts",
           value = "value", tiebreak = "event_id", minutes = 1)
         .orderBy("event_type", "bar_ts")),
 
@@ -3000,8 +3000,8 @@ object SparkEntry {
             FROM o GROUP BY event_type, bar_ts
             ORDER BY event_type, bar_ts""",
 
-      // same bar semantics as q_ohlc_1m — the Spark side differs (fused
-      // OhlcAgg vs composed min_by/max_by), the oracle is shared
+      // same bars as q_ohlc_1m: both run the bar kernel, the oracle is
+      // shared
       "q_ohlc_fused" ->
         s"""WITH pts AS (
               SELECT event_type, time_bucket(INTERVAL 1 MINUTE, $evTs) AS bar_ts,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Bound
 import graft.ingest.TickIngest
 import graft.model._
-import graft.ohlc.{Ohlc, OhlcGenerator}
+import graft.ohlc.{BarAgg, Ohlc, OhlcGenerator}
 import graft.query.QueryEngine
 
 /** Public facade — the Spark-native equivalent of `ExnessDataProcessor`
@@ -287,37 +287,36 @@ final class Processor(spark: SparkSession, warehouse: String) {
     * aggregate choices + 4 derived ratio metrics
     * (`clickhouse_query_engine.py:218-271`).
     *
-    * A bucket's session labels are those of its first bar. They are taken
-    * as that bar's hour and mapped to the label by the generator's own
-    * function: a stored label is a function of the stored hour of the same
-    * row, so this is exact, and every aggregate buffer then has a fixed
-    * width, which lets Spark plan a whole-stage-codegen hash aggregate
-    * (a string `min_by` buffer forces a sort-based one).
+    * The bar kernel ([[graft.ohlc.BarAgg]]) merges the 1m bars, witnessed
+    * by their timestamps. A bucket's session labels are those of its
+    * first bar: the generator's own hour and label functions over the
+    * open witness, which is that bar's timestamp. A stored hour is a
+    * function of the stored timestamp of the same row, so this is exact,
+    * and every aggregate buffer has a fixed width, which lets Spark plan a
+    * whole-stage-codegen hash aggregate.
     */
   private def resampleOhlc(bars1m: DataFrame, minutes: Int): DataFrame = {
-    val ord = col("timestamp")
+    val flags = OhlcGenerator.Columns.filter(_.startsWith("is_"))
     val aggs = Seq(
-      min_by(col("open"), ord).as("open"),
-      max(col("high")).as("high"),
-      min(col("low")).as("low"),
-      max_by(col("close"), ord).as("close"),
+      BarAgg.ofBars(col("timestamp"), col("tick_count_raw_spread")).as("bar"),
       avg(col("raw_spread_avg")).as("raw_spread_avg"),
       avg(col("standard_spread_avg")).as("standard_spread_avg"),
-      sum(col("tick_count_raw_spread")).cast("int").as("tick_count_raw_spread"),
       sum(col("tick_count_standard")).cast("int").as("tick_count_standard"),
       max(col("ny_hour")).as("ny_hour"),
-      max(col("london_hour")).as("london_hour"),
-      OhlcGenerator.nySession(min_by(col("ny_hour"), ord)).as("ny_session"),
-      OhlcGenerator.londonSession(min_by(col("london_hour"), ord)).as("london_session"),
-      max(col("is_us_holiday")).as("is_us_holiday"),
-      max(col("is_uk_holiday")).as("is_uk_holiday"),
-      max(col("is_major_holiday")).as("is_major_holiday")) ++
-      graft.calendar.ExchangeRegistry.all.map(e =>
-        max(col(s"is_${e.key}_session")).as(s"is_${e.key}_session"))
+      max(col("london_hour")).as("london_hour")) ++
+      flags.map(f => max(col(f)).as(f))
+    val firstBar = col("bar.open_w0")
     val agged = bars1m
       .groupBy(col("instrument"),
         Ohlc.bucketStart(col("timestamp"), minutes).as("timestamp"))
       .agg(aggs.head, aggs.tail: _*)
+      .select((Seq(col("instrument"), col("timestamp")) ++ BarAgg.ohlc(col("bar")) ++
+        Seq(col("raw_spread_avg"), col("standard_spread_avg"),
+          col("bar.n").cast("int").as("tick_count_raw_spread"), col("tick_count_standard"),
+          col("ny_hour"), col("london_hour"),
+          OhlcGenerator.nySession(OhlcGenerator.nyHour(firstBar)).as("ny_session"),
+          OhlcGenerator.londonSession(OhlcGenerator.londonHour(firstBar)).as("london_session")) ++
+        flags.map(col)): _*)
     // one select, not four chained withColumn calls: each withColumn
     // re-analyses the whole 27-column plan
     val range = col("high") - col("low")

@@ -12,14 +12,12 @@ import org.apache.spark.sql.functions._
   *
   * OHLC bars are NOT plainly mergeable from their public columns (two
   * partial bars' `open`s can't be combined without knowing which came
-  * first), so the state schema carries the merge witnesses: `first_ord` /
-  * `last_ord`, the (time, tiebreak) structs of the partial bar's earliest
-  * and latest tick. With them every column merges algebraically —
-  * open/close by min_by/max_by over the witness, high/low/count by
-  * max/min/sum — making the merge a partial-aggregation-friendly groupBy
-  * (associative + commutative, so shard/batch merge order can't change
-  * results; bit-determinism inherited from the composite-key tiebreak,
-  * same argument as [[Ohlc.bars]]).
+  * first), so the state schema carries the merge witnesses: `open_w0`,
+  * `open_w1` and `close_w0`, `close_w1`, the (time, tiebreak) slots of the
+  * partial bar's earliest and latest tick. With them a merge is the bar
+  * kernel's ([[BarAgg]]) merge form over the union — associative and
+  * commutative, so shard/batch merge order can't change results;
+  * bit-determinism comes from the composite witness, as in [[Ohlc.bars]].
   *
   * Scale shape of [[applyBatchPlan]]: the batch aggregates alone
   * (O(batch) → few bars), touched stored bars are selected by a BROADCAST
@@ -41,36 +39,28 @@ object IncrementalOhlc {
       value: String,
       tiebreak: String,
       minutes: Int = 1
-  ): DataFrame = {
-    val ord = struct(col(time), col(tiebreak))
-    points
-      .groupBy((keys.map(col) :+ Ohlc.bucketStart(col(time), minutes).as("bar_ts")): _*)
-      .agg(
-        min_by(col(value), ord).as("open"),
-        max(col(value)).as("high"),
-        min(col(value)).as("low"),
-        max_by(col(value), ord).as("close"),
-        count(lit(1)).cast("long").as("tick_count"),
-        min(ord).as("first_ord"),
-        max(ord).as("last_ord"))
-  }
+  ): DataFrame =
+    stateOf(Ohlc.kernelBars(points, keys, time, value, tiebreak, minutes), keys)
 
-  /** Merge two partial-bar frames (same schema) into one: the witness
-    * structs pick which side's open/close survives. Associative and
-    * commutative — `merge(merge(a,b),c) == merge(a, merge(b,c))` for any
-    * split of the underlying ticks (IncrementalOhlcSpec).
+  /** Merge two partial-bar frames (same schema) into one: the witnesses
+    * pick which side's open/close survives. Associative and commutative —
+    * `merge(merge(a,b),c) == merge(a, merge(b,c))` for any split of the
+    * underlying ticks (IncrementalOhlcSpec).
     */
   def mergeBars(a: DataFrame, b: DataFrame, keys: Seq[String]): DataFrame =
-    a.unionByName(b)
+    stateOf(a.unionByName(b)
       .groupBy((keys.map(col) :+ col("bar_ts")): _*)
-      .agg(
-        min_by(col("open"), col("first_ord")).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), col("last_ord")).as("close"),
-        sum(col("tick_count")).as("tick_count"),
-        min(col("first_ord")).as("first_ord"),
-        max(col("last_ord")).as("last_ord"))
+      .agg(BarAgg.bars(col("open"), OpenWitness.map(col), col("high"), col("low"),
+        col("close"), CloseWitness.map(col), col("tick_count")).as("bar")), keys)
+
+  // the (time, tiebreak) witness slots of the state
+  private val OpenWitness = BarAgg.witnessNames("open", 2)
+  private val CloseWitness = BarAgg.witnessNames("close", 2)
+
+  /** The state columns of kernel results `bar` per (keys, bar_ts). */
+  private def stateOf(bars: DataFrame, keys: Seq[String]): DataFrame =
+    bars.select((keys.map(col) :+ col("bar_ts") :+ col("bar.*")): _*)
+      .withColumnRenamed("n", "tick_count")
 
   /** Fold a tick batch into stored state touching only affected bars:
     * returns the new state as a lazy plan. `stored` and the result carry
@@ -98,5 +88,5 @@ object IncrementalOhlc {
 
   /** Reader projection: drop the merge witnesses → [[Ohlc.bars]] schema. */
   def finalBars(state: DataFrame): DataFrame =
-    state.drop("first_ord", "last_ord")
+    state.drop(OpenWitness ++ CloseWitness: _*)
 }

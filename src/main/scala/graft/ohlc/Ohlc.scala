@@ -6,22 +6,21 @@ import graft.operators.AsofJoin
 
 /** OHLC bar construction and resampling (reference
   * `clickhouse_ohlc_generator.py:150-196` and
-  * `clickhouse_query_engine.py:218-271`, SURVEY.md §2.4 A1/A2).
+  * `clickhouse_query_engine.py:218-271`, SURVEY.md §2.4 A1/A2), all
+  * through the one bar kernel [[BarAgg]].
   *
-  * ClickHouse `argMin/argMax(bid, ts)` break ties arbitrarily; here open and
-  * close use `min_by/max_by` with a composite (time, tiebreak) struct key so
-  * results are bit-deterministic — required for hash-matched oracles
-  * (SURVEY.md §5 caveats).
+  * ClickHouse `argMin/argMax(bid, ts)` break ties arbitrarily; here the
+  * open/close witness is the time plus tie-break slots, so results are
+  * bit-deterministic — required for hash-matched oracles (SURVEY.md §5
+  * caveats).
   *
   * Scale: one aggregation on (group keys, bucket), partial before its
-  * shuffle and final after it; no windows. It is not a hash aggregation:
-  * `min_by`/`max_by` (and [[graft.functions.OhlcAgg]]) buffer the ordering
-  * key, and a buffer holding a struct or string makes Spark plan a
-  * non-codegen SortAggregate after a full sort of its input. Resampling
-  * N-minute buckets from 1m bars reads ~60× fewer rows than re-aggregating
-  * ticks, and `Processor`'s resample plans a whole-stage-codegen hash
-  * aggregate: it orders by the bar timestamp alone and takes the session
-  * labels through their hours, so every buffer has a fixed width.
+  * shuffle and final after it; no windows. Every kernel buffer slot is
+  * fixed-width, so the executed plans of [[bars]], [[resample]] and
+  * [[ticksToOhlc1m]] are whole-stage-codegen HashAggregates with no sort
+  * (OhlcBarSpec pins it). Resampling N-minute buckets from 1m bars reads
+  * ~60× fewer rows than re-aggregating ticks: a resample is the kernel's
+  * merge of partial bars, witnessed by the bar timestamp.
   */
 object Ohlc {
 
@@ -50,68 +49,42 @@ object Ohlc {
       value: String,
       tiebreak: String,
       minutes: Int = 1
-  ): DataFrame = {
-    val ord = struct(col(time), col(tiebreak))
-    points
-      .groupBy((keys.map(col) :+ bucketStart(col(time), minutes).as("bar_ts")): _*)
-      .agg(
-        min_by(col(value), ord).as("open"),
-        max(col(value)).as("high"),
-        min(col(value)).as("low"),
-        max_by(col(value), ord).as("close"),
-        count(lit(1)).cast("long").as("tick_count")
-      )
-  }
+  ): DataFrame =
+    kernelBars(points, keys, time, value, tiebreak, minutes)
+      .select(barColumns(keys): _*)
 
-  /** [[bars]] with the fused single-buffer aggregate
-    * [[graft.functions.OhlcAgg]]: one 7-slot accumulator through the
-    * partial-agg shuffle instead of four independent aggregate buffers
-    * (two of which duplicate the (value, ord) pair). Identical output —
-    * equivalence-tested in OhlcAggSpec and oracle-checked as
-    * `q_ohlc_fused`.
-    */
-  def barsFused(
+  /** The [[bars]] columns of kernel results `bar` per (keys, bar_ts). */
+  private def barColumns(keys: Seq[String]): Seq[Column] =
+    (keys.map(col) ++ (col("bar_ts") +: BarAgg.ohlc(col("bar")))) :+ col("bar.n").as("tick_count")
+
+  /** [[bars]] as the kernel's result column `bar`, witnesses included. */
+  private[ohlc] def kernelBars(
       points: DataFrame,
       keys: Seq[String],
       time: String,
       value: String,
       tiebreak: String,
-      minutes: Int = 1
-  ): DataFrame = {
-    val ord = struct(col(time), col(tiebreak))
+      minutes: Int
+  ): DataFrame =
     points
       .groupBy((keys.map(col) :+ bucketStart(col(time), minutes).as("bar_ts")): _*)
-      .agg(graft.functions.OhlcAgg(col(value), ord).as("b"))
-      .select((keys.map(col) :+ col("bar_ts") :+ col("b.open") :+ col("b.high")
-        :+ col("b.low") :+ col("b.close") :+ col("b.n").as("tick_count")): _*)
-  }
+      .agg(BarAgg.ticks(col(value), col(time), col(tiebreak)).as("bar"))
 
   /** Resample 1m bars to an N-minute timeframe: open = earliest open,
-    * close = latest close, extrema of extrema, counts summed
-    * (reference CTE at `clickhouse_query_engine.py:218-252`).
-    * `sumCols` are summed as BIGINT counts — they must be integral
-    * (counts); averaged spread-like columns go through
-    * `Processor.resampleOhlc`'s avg() aggregates, not this list.
+    * close = latest close, extrema of extrema, tick counts summed
+    * (reference CTE at `clickhouse_query_engine.py:218-252`). Bars with a
+    * NULL `time` carry no witness, so they give no open or close.
     */
   def resample(
       bars1m: DataFrame,
       keys: Seq[String],
       time: String,
-      minutes: Int,
-      sumCols: Seq[String] = Seq("tick_count")
-  ): DataFrame = {
-    val ord = col(time)
-    val aggs =
-      Seq(
-        min_by(col("open"), ord).as("open"),
-        max(col("high")).as("high"),
-        min(col("low")).as("low"),
-        max_by(col("close"), ord).as("close")
-      ) ++ sumCols.map(c => sum(col(c)).cast("long").as(c))
+      minutes: Int
+  ): DataFrame =
     bars1m
       .groupBy((keys.map(col) :+ bucketStart(col(time), minutes).as("bar_ts")): _*)
-      .agg(aggs.head, aggs.tail: _*)
-  }
+      .agg(BarAgg.ofBars(col(time), col("tick_count")).as("bar"))
+      .select(barColumns(keys): _*)
 
   /** Derived NULL-safe ratio metrics added by the reference at resample time
     * (`clickhouse_query_engine.py:258-261`, SURVEY.md §2.2 P5).
@@ -166,18 +139,17 @@ object Ohlc {
       rawSpread,
       standard.select("instrument", "timestamp", "bid", "ask"),
       Seq("instrument"), "timestamp", "timestamp", Seq("bid", "ask"), "_std")
-    val ord = struct(col("timestamp"), col("bid"), col("ask"))
     joined
       .groupBy(col("instrument"), date_trunc("minute", col("timestamp")).as("timestamp"))
       .agg(
-        min_by(col("bid"), ord).as("open"),
-        max(col("bid")).as("high"),
-        min(col("bid")).as("low"),
-        max_by(col("bid"), ord).as("close"),
+        BarAgg.ticks(col("bid"), col("timestamp"), col("bid"), col("ask")).as("bar"),
         avg(col("ask") - col("bid")).as("raw_spread_avg"),
         avg(col("ask_std") - col("bid_std")).as("standard_spread_avg"),
         count(col("timestamp")).cast("int").as("tick_count_raw_spread"),
         count(when(col("timestamp_std").isNotNull, lit(1))).cast("int").as("tick_count_standard")
       )
+      .select((Seq(col("instrument"), col("timestamp")) ++ BarAgg.ohlc(col("bar")) ++
+        Seq("raw_spread_avg", "standard_spread_avg", "tick_count_raw_spread",
+          "tick_count_standard").map(col)): _*)
   }
 }

@@ -55,14 +55,20 @@ object OhlcGenerator {
     * (`clickhouse_ohlc_generator.py:164-180`).
     */
   def withSessionColumns(bars: DataFrame): DataFrame = {
-    val nyH = hour(from_utc_timestamp(col("timestamp"), "America/New_York"))
-    val loH = hour(from_utc_timestamp(col("timestamp"), "Europe/London"))
+    val nyH = nyHour(col("timestamp"))
+    val loH = londonHour(col("timestamp"))
     bars
       .withColumn("ny_hour", nyH.cast("int"))
       .withColumn("london_hour", loH.cast("int"))
       .withColumn("ny_session", nySession(nyH))
       .withColumn("london_session", londonSession(loH))
   }
+
+  /** The New York wall-clock hour of a UTC timestamp. */
+  def nyHour(ts: Column): Column = hour(from_utc_timestamp(ts, "America/New_York"))
+
+  /** The London wall-clock hour of a UTC timestamp. */
+  def londonHour(ts: Column): Column = hour(from_utc_timestamp(ts, "Europe/London"))
 
   /** The `ny_session` label of a New York wall-clock hour. A stored label
     * is this function of the stored `ny_hour` of the same row. */
@@ -237,29 +243,30 @@ object OhlcGenerator {
       if (months.isEmpty) out else out.filter(col("yyyymm").isin(months: _*))
     // dynamic overwrite for month-scoped rebuilds; a FULL rebuild must
     // also clear months that no longer have ticks (static overwrite of
-    // the instrument's whole subtree does that). The session conf is
+    // the instrument's whole subtree does that, written via the subtree
+    // path so other instruments are untouched). The session conf is
     // restored afterwards — regenerate must not silently change overwrite
     // semantics for unrelated writes on the shared session.
     val root = s"$warehouse/ohlc_1m"
+    val (frame, parts, path) =
+      if (months.isEmpty)
+        (scoped.drop("instrument"), Seq("yyyymm"),
+          graft.storage.PrunedScan.instrumentDir(root, instrument))
+      else (scoped, Seq("instrument", "yyyymm"), root)
     val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode",
       if (months.isEmpty) "static" else "dynamic")
     try {
-      if (months.isEmpty) {
-        // static mode truncates only the partitions we target: write via
-        // the instrument subtree path so other instruments are untouched
-        scoped.drop("instrument").write
-          .mode("overwrite")
-          .option("compression", "zstd")
-          .partitionBy("yyyymm")
-          .parquet(graft.storage.PrunedScan.instrumentDir(root, instrument))
-      } else {
-        scoped.write
-          .mode("overwrite")
-          .option("compression", "zstd")
-          .partitionBy("instrument", "yyyymm")
-          .parquet(root)
-      }
+      // one timestamp-sorted file per month, as TickIngest.writeTicks
+      // writes the tick tables: the bar aggregation emits no order
+      frame
+        .repartition(parts.map(col): _*)
+        .sortWithinPartitions((parts :+ "timestamp").map(col): _*)
+        .write
+        .mode("overwrite")
+        .option("compression", "zstd")
+        .partitionBy(parts: _*)
+        .parquet(path)
     } finally {
       prevMode.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))

@@ -271,16 +271,15 @@ object AsofJoin {
     }
   }
 
-  /** [[asofVerdict]] for rows stored whole in time partitions, from their
-    * row counts alone (`OhlcGenerator.regenerate` reads them off parquet
+  /** [[asofVerdict]] at [[HotKeyCrossover]] — the rule the probe tier
+    * runs — for rows stored whole in time partitions, from their row
+    * counts alone (`OhlcGenerator.regenerate` reads them off parquet
     * footers or `_manifest` sidecars, with no probe job). `stats.peaks`
     * holds one (partition seconds, partition rows) window per partition
-    * with rows. Each partition is sized like a span of its own, its
-    * average width clamped to its length, so the width never exceeds the
-    * shortest partition.
+    * with rows, sized like any probed peak window.
     */
   private[graft] def storedAsofDispatch(stats: Probes.HotKeyStats): Option[Long] =
-    asofVerdict(stats, HotKeyCrossover).map(w => (w +: stats.peaks.map(_._1)).min)
+    asofVerdict(stats, HotKeyCrossover)
 
   /** Decide which as-of form to run for the given shape, by
     * [[asofVerdict]] over the hottest join key's sampled stats.

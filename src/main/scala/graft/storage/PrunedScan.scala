@@ -378,17 +378,19 @@ object PrunedScan {
     *
     * The layout is PROVEN before anything is claimed, under one set of
     * rules for coverage, gaps, listing, pruned reads and footer counts:
-    * every child of `root` is an instrument= directory whose name is
-    * canonically UPPERCASE (a lowercase `instrument=eurusd` is a foreign
-    * layout whose rows the metadata paths would misreport), and every
-    * child of a walked instrument directory is a yyyymm= directory with a
-    * label the writers produce (six ASCII digits, month 01-12; 202400,
-    * 202413 or unicode digits would throw or misreport). `_`/`.`-prefixed
-    * entries are reader-invisible and ignored. None when the layout is
-    * unproven (stray files, foreign partitioning) or unlistable: callers
-    * fall back to the data scan. A missing `root` is a true empty table
-    * (Some(Nil)), as is an instrument absent from a proven layout; a month
-    * directory holding no data files holds no rows either.
+    * every child of a walked instrument directory is a yyyymm= directory
+    * with a label the writers produce (six ASCII digits, month 01-12;
+    * 202400, 202413 or unicode digits would throw or misreport). An asked
+    * instrument whose directory exists is walked alone, so a stray entry
+    * elsewhere under `root` costs its reads nothing; otherwise every child
+    * of `root` must be an instrument= directory whose name is canonically
+    * UPPERCASE (a lowercase `instrument=eurusd` is a foreign layout whose
+    * rows the metadata paths would misreport). `_`/`.`-prefixed entries
+    * are reader-invisible and ignored. None when the layout is unproven
+    * (stray files, foreign partitioning) or unlistable: callers fall back
+    * to the data scan. A missing `root` is a true empty table (Some(Nil)),
+    * as is an instrument absent from a proven layout; a month directory
+    * holding no data files holds no rows either.
     */
   def months(
       conf: org.apache.hadoop.conf.Configuration,
@@ -405,16 +407,22 @@ object PrunedScan {
       def valid(m: String): Boolean =
         m.length == 6 && m.forall(c => c >= '0' && c <= '9') &&
           { val mm = m.substring(4).toInt; mm >= 1 && mm <= 12 }
-      val kids = visible(root)
-      val insts = kids.collect { case s if s.isDirectory &&
-          s.getPath.getName.startsWith("instrument=") =>
-        s.getPath.getName.stripPrefix("instrument=") -> s.getPath
-      }
-      if (insts.isEmpty || insts.size != kids.size ||
-          insts.exists { case (i, _) => i != i.toUpperCase(java.util.Locale.ROOT) })
-        return None
       val asked = instrument.map(_.toUpperCase(java.util.Locale.ROOT))
-      Some(insts.filter { case (i, _) => asked.forall(_ == i) }.flatMap { case (i, d) =>
+      val insts = asked.map(i => i -> new HPath(root, s"instrument=$i"))
+          .filter(d => fs.exists(d._2)) match {
+        case Some(own) => Seq(own)
+        case None =>
+          val kids = visible(root)
+          val all = kids.collect { case s if s.isDirectory &&
+              s.getPath.getName.startsWith("instrument=") =>
+            s.getPath.getName.stripPrefix("instrument=") -> s.getPath
+          }
+          if (all.isEmpty || all.size != kids.size ||
+              all.exists { case (i, _) => i != i.toUpperCase(java.util.Locale.ROOT) })
+            return None
+          all.filter { case (i, _) => asked.forall(_ == i) }
+      }
+      Some(insts.flatMap { case (i, d) =>
         val mkids = visible(d)
         val labels = mkids.collect { case s if s.isDirectory &&
             s.getPath.getName.startsWith("yyyymm=") =>

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.ohlc.BarAgg
+
 /** Drives the STREAMING operators over a bounded fixture and returns their
   * emitted output as a plain batch DataFrame — the bridge that puts the
   * streaming surface under the same DuckDB correctness oracle as the batch
@@ -373,7 +375,7 @@ object StreamingGate {
     *      timeout flush) — the stream-stream as-of Spark lacks natively;
     *   2. silver→gold: a windowed streaming aggregation builds the
     *      1-minute bars with the batch's exact agg expressions
-    *      (min_by/max_by on the (t, bid, ask) struct, dyadic-exact
+    *      (the bar kernel witnessed by (t, bid, ask), dyadic-exact
     *      spread averages), and `foreachBatch` applies the calendar
     *      enrichment ([[graft.ohlc.OhlcGenerator.enrichBars]]) to each
     *      emitted micro-batch — append mode emits every (key, window)
@@ -462,7 +464,6 @@ object StreamingGate {
 
     val bid = element_at(col("v"), 1)
     val ask = element_at(col("v"), 2)
-    val ordS = struct(col("t"), bid.as("bid"), ask.as("ask"))
     val bars = spark.readStream
       .schema(spark.read.parquet(in).schema)
       .option("maxFilesPerTrigger", "2")
@@ -470,18 +471,16 @@ object StreamingGate {
       .withWatermark("t", watermark)
       .groupBy(col("k"), window(col("t"), "1 minute").as("w"))
       .agg(
-        min_by(bid, ordS).as("open"),
-        max(bid).as("high"),
-        min(bid).as("low"),
-        max_by(bid, ordS).as("close"),
+        BarAgg.ticks(bid, col("t"), bid, ask).as("bar"),
         avg(ask - bid).as("raw_spread_avg"),
         avg(element_at(col("rv"), 2) - element_at(col("rv"), 1))
           .as("standard_spread_avg"),
         count(col("t")).cast("int").as("tick_count_raw_spread"),
         count(when(col("rt").isNotNull, lit(1))).cast("int")
           .as("tick_count_standard"))
-      .withColumn("timestamp", col("w.start"))
-      .drop("w")
+      .select((col("k") +: BarAgg.ohlc(col("bar"))) ++
+        Seq("raw_spread_avg", "standard_spread_avg", "tick_count_raw_spread",
+          "tick_count_standard").map(col) :+ col("w.start").as("timestamp"): _*)
 
     val decode = instruments.foldLeft(lit(null).cast("string")) {
       (acc, n) => when(col("k") === code(n), lit(n)).otherwise(acc)

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ohlc.BarAgg
+
 /** Structured-Streaming lift of the batch operators (SURVEY.md §2.9: the
   * reference is batch-only — monthly re-runs stand in for late data — so
   * streaming is an engine extension, not parity; the 1-minute OHLC
@@ -23,8 +25,7 @@ object StreamingOhlc {
     *                 pass the batch twin's tiebreak (e.g. event_id) to make
     *                 streaming bars reconcile with `Ohlc.bars` exactly.
     *                 Default: the value column itself, so equal-timestamp
-    *                 ties are still DETERMINISTIC (min_by/max_by on the
-    *                 bare timestamp picked an arbitrary winner per run).
+    *                 ties are still DETERMINISTIC.
     */
   def bars1m(
       stream: DataFrame,
@@ -34,17 +35,11 @@ object StreamingOhlc {
       watermark: String = "2 minutes",
       tiebreak: Option[String] = None
   ): DataFrame = {
-    val ord = struct(col(time), col(tiebreak.getOrElse(value)))
     stream
       .withWatermark(time, watermark)
       .groupBy((keys.map(col) :+ window(col(time), "1 minute").as("w")): _*)
-      .agg(
-        min_by(col(value), ord).as("open"),
-        max(col(value)).as("high"),
-        min(col(value)).as("low"),
-        max_by(col(value), ord).as("close"),
-        count(lit(1)).as("tick_count"))
-      .withColumn("bar_ts", col("w.start"))
-      .drop("w")
+      .agg(BarAgg.ticks(col(value), col(time), col(tiebreak.getOrElse(value))).as("bar"))
+      .select((keys.map(col) ++ BarAgg.ohlc(col("bar")) :+ col("bar.n").as("tick_count") :+
+        col("w.start").as("bar_ts")): _*)
   }
 }

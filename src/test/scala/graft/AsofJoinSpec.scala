@@ -190,10 +190,11 @@ class AsofJoinSpec extends SparkSpec {
     // clamps: never wider than the span, never below 1 s
     assert(width(2000000L, 86400L, 1000000L) === 43200L)
     assert(width(10000000L, 5L, 1000000L) === 1L)
-    // a stored partition is clamped to its own length: this day's
-    // candidate 86400 × 1M / 500k exceeds the day (w > span)
+    // a stored partition is a peak window like a probed one, not clamped
+    // to its own length: this day's candidate 86400 × 1M / 500k = 172 800
+    // exceeds the day and stands
     assert(AsofJoin.storedAsofDispatch(Probes.HotKeyStats(1500000L, 864000L,
-      Seq(86400L -> 500000L, 777600L -> 1000000L))) === Some(86400L))
+      Seq(86400L -> 500000L, 777600L -> 1000000L))) === Some(172800L))
     // degenerate stats (zero span) fall back to the day default; a key at
     // or under the threshold (no rows at all included) is not bucketed
     assert(width(5000000L, 0L, 1000000L) === 86400L)
@@ -243,8 +244,9 @@ class AsofJoinSpec extends SparkSpec {
 
   test("one width rule matches the reference probe-tier and footer-tier formulas on random stats") {
     import graft.operators.Probes
-    // Reference: the three chained probe-tier sizers and the footer tier's
-    // month arithmetic that the one rule replaced, kept verbatim
+    // Reference: the three chained probe-tier sizers that the one rule
+    // replaced, kept verbatim; the footer tier must equal the same rule
+    // with each stored month as a peak window
     def ref1(hotKeyRows: Long, spanSeconds: Long, targetRowsPerBucket: Long): Long =
       if (hotKeyRows <= 0L || spanSeconds <= 0L) 86400L
       else {
@@ -273,19 +275,21 @@ class AsofJoinSpec extends SparkSpec {
         math.max(1L, math.min(base, wFine.toLong))
       }
     }
+    // the footer tier runs the probe-tier rule: the average width over the
+    // live months, corrected down by each month as a peak window (ref2's
+    // step, with no clamp to the month)
     def refFooter(raw: Seq[(String, Long)], std: Seq[(String, Long)]): Option[Long] = {
       import graft.ohlc.OhlcGenerator.monthSpanSeconds
       val total = (raw ++ std).map(_._2).sum
       if (total > AsofJoin.HotKeyCrossover) {
         val byMonth = (raw ++ std).groupMapReduce(_._1)(_._2)(_ + _)
           .filter(_._2 > 0)
-        val live = byMonth.keys.toSeq
         val target = AsofJoin.HotKeyCrossover
-        val avg = ref1(total, monthSpanSeconds(live), target)
-        val peak = byMonth.map { case (m, n) =>
-          ref1(n, monthSpanSeconds(Seq(m)), target)
-        }.min
-        Some(math.min(avg, peak))
+        Some(byMonth.foldLeft(ref1(total, monthSpanSeconds(byMonth.keys.toSeq), target)) {
+          case (w, (m, n)) =>
+            val wPeak = monthSpanSeconds(Seq(m)).toDouble * target.toDouble / n.toDouble
+            math.max(1L, math.min(w, wPeak.toLong))
+        })
       } else None
     }
 

@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.OhlcAgg
 import graft.operators.{AsofJoin, Dedup, Sampling, TimeSeries, TopKPerGroup}
-import graft.ohlc.Ohlc
+import graft.ohlc.{BarAgg, Ohlc}
 
 /** Operators must degrade to empty results — not exceptions — on empty
   * inputs (a 100 TB pipeline always has some empty partition, instrument,
@@ -21,9 +20,10 @@ class EmptyInputSpec extends SparkSpec {
     val bars = Ohlc.bars(emptyEvents, Seq("user_id"), "ts", "value", "event_id", 1)
     assert(bars.count() == 0 && bars.columns.contains("open"))
 
-    val fused = emptyEvents.groupBy("user_id")
-      .agg(OhlcAgg(col("value"), struct(col("ts"), col("event_id"))).as("b"))
-    assert(fused.count() == 0)
+    // the bar kernel over no rows at all: one empty bar, n = 0
+    val none = emptyEvents.agg(BarAgg.ticks(col("value"), col("ts"), col("event_id")).as("b"))
+      .select("b.open", "b.n").collect()
+    assert(none.length == 1 && none.head.isNullAt(0) && none.head.getLong(1) == 0L)
 
     assert(Dedup.replacingDedupAgg(emptyEvents, Seq("user_id"), Seq("ts")).count() == 0)
     assert(TopKPerGroup.topK(emptyEvents, Seq("user_id"), "value", "event_id", 3).count() == 0)

@@ -401,10 +401,12 @@ class ForexPipelineSpec extends SparkSpec {
     assert(Processor.listingDataScans.get() === before,
       "gap/instrument listing fell back to a data scan on a proven layout")
     // the metadata path and the scan path must AGREE: degrade the layout
-    // with a stray file at the table root and re-ask
+    // with a month label the writers never produce, in the instrument's
+    // own directory (an asked instrument proves only its own subtree, so
+    // a stray entry at the table root would not), and re-ask
     val stray = new java.io.File(
-      s"${dir.resolve("warehouse")}/raw_spread_ticks/stray.tmp")
-    assert(stray.createNewFile())
+      s"${dir.resolve("warehouse")}/raw_spread_ticks/instrument=EURUSD/yyyymm=202400")
+    assert(stray.mkdir())
     try {
       assert(p.missingMonths("EURUSD") === missing)
       assert(p.getInstruments === Seq("EURUSD"))
@@ -1085,6 +1087,89 @@ class ForexPipelineSpec extends SparkSpec {
     } finally {
       spark.conf.unset("fs.file.impl")
       spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  /** A tick CSV of `n` quotes from `start`, every 37 s, with prices that
+    * wander so bars differ. */
+  private def tickCsv(start: String, n: Int, spread: Double): String = {
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+    val t0 = java.time.LocalDateTime.parse(start)
+    val rows = (0 until n).map { i =>
+      val bid = 1.08 + (i * 7919 % 101) * 0.00001
+      f"${fmt.format(t0.plusSeconds(37L * i))},$bid%.5f,${bid + spread}%.5f"
+    }
+    ("Timestamp,Bid,Ask" +: rows).mkString("", "\n", "\n")
+  }
+
+  /** Ingest `n` quotes per variant from `start` into the warehouse of `p`. */
+  private def ingest(p: Processor, dir: Path, start: String, n: Int): Unit = {
+    val tag = start.filter(_.isDigit)
+    val raw = Files.writeString(dir.resolve(s"raw_$tag.csv"), tickCsv(start, n, 0.00002))
+    val std = Files.writeString(dir.resolve(s"std_$tag.csv"), tickCsv(start, n, 0.00015))
+    assert(p.updateData("EURUSD", raw.toString, std.toString).isRight)
+  }
+
+  /** A fresh warehouse after a 2-month ingest of `n` quotes per variant,
+    * half in January 2024 and half in February. */
+  private def twoMonthWarehouse(name: String, n: Int): (Processor, Path) = {
+    val dir = Files.createTempDirectory(name)
+    val p = new Processor(spark, dir.resolve("wh").toString)
+    ingest(p, dir, java.time.LocalDateTime.of(2024, 2, 1, 0, 0, 1)
+      .minusSeconds(37L * (n / 2)).toString, n)
+    (p, dir)
+  }
+
+  test("each month of both tick tables and ohlc_1m is one timestamp-sorted file, after an ingest and an append") {
+    // ~18 000 bars: at this size a write that keeps the aggregation's
+    // output order put a January bar out of timestamp order
+    val (p, dir) = twoMonthWarehouse("graft_sorted_months", 30000)
+    ingest(p, dir, "2024-03-04T10:00:01", 600)
+    for (table <- Seq("raw_spread_ticks", "standard_ticks", "ohlc_1m")) {
+      val inst = dir.resolve("wh").resolve(table).resolve("instrument=EURUSD")
+      val months = Files.list(inst)
+      val monthDirs = try months.iterator().asScala.toSeq.sortBy(_.toString) finally months.close()
+      assert(monthDirs.map(_.getFileName.toString) ===
+        Seq("yyyymm=202401", "yyyymm=202402", "yyyymm=202403"), table)
+      for (m <- monthDirs) {
+        val ls = Files.list(m)
+        val files = try ls.iterator().asScala.map(_.getFileName.toString).filter(f =>
+          f.endsWith(".parquet") && !f.startsWith(".") && !f.startsWith("_")).toSeq
+          finally ls.close()
+        assert(files.size === 1, s"$m: $files")
+        // file order is row order: a one-file read of a small file is one split
+        val ts = spark.read.parquet(m.resolve(files.head).toString)
+          .select("timestamp").collect().map(_.getTimestamp(0).getTime)
+        assert(ts.length > 1, m.toString)
+        val unordered = ts.sliding(2).count { case Array(a, b) => b < a }
+        assert(unordered === 0, s"$m: $unordered rows out of timestamp order")
+      }
+    }
+  }
+
+  test("a stray file at a table root costs no pruned read, coverage or gap listing") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val (p, dir) = twoMonthWarehouse("graft_stray_root", 1200)
+    def answers() = (
+      p.queryTicks("EURUSD").collect().map(_.toString).toSeq,
+      p.queryOhlc("EURUSD", "1m").collect().map(_.toString).toSeq,
+      p.queryOhlc("EURUSD", "1h").collect().map(_.toString).toSeq,
+      p.getCoverage("EURUSD"),
+      p.missingMonths("EURUSD"))
+    val before = answers()
+    for (table <- Seq("raw_spread_ticks", "ohlc_1m"))
+      Files.writeString(dir.resolve("wh").resolve(table).resolve("notes.txt"), "not a month")
+    val (listings, coverage) = (Processor.listingDataScans.get(), Processor.coverageDataScans.get())
+    assert(answers() === before)
+    assert(Processor.listingDataScans.get() === listings)
+    assert(Processor.coverageDataScans.get() === coverage)
+    // both reads still plan over the instrument's own months
+    for (df <- Seq(p.queryTicks("EURUSD"), p.queryOhlc("EURUSD", "1m"))) {
+      val roots = df.queryExecution.sparkPlan.collect {
+        case s: FileSourceScanExec => s.relation.location.rootPaths
+      }.flatten
+      assert(roots.nonEmpty && roots.forall(_.toString.contains("/instrument=EURUSD/")),
+        s"scan roots: ${roots.mkString(", ")}")
     }
   }
 }

@@ -142,7 +142,13 @@ class ReachabilitySpec extends AnyFunSuite {
     * outside the directory `dir` names, sorted.
     */
   private def namedOutside(dir: String, markers: Seq[String]): Seq[String] =
-    mainSources().toSeq.filterNot(_._1.startsWith(dir)).flatMap { case (path, src) =>
+    namedIn(!_.startsWith(dir), markers)
+
+  /** "path: marker" for each marker that the comment-stripped main files
+    * whose path passes `in` name, sorted.
+    */
+  private def namedIn(in: String => Boolean, markers: Seq[String]): Seq[String] =
+    mainSources().toSeq.filter(s => in(s._1)).flatMap { case (path, src) =>
       val code = stripComments(src)
       markers.filter(code.contains).map(m => s"$path: $m")
     }.sorted
@@ -193,6 +199,17 @@ class ReachabilitySpec extends AnyFunSuite {
     val leaks = namedOutside("graft/operators/", Seq("HotKeyCrossover", "bucketWidthFor"))
     assert(leaks.isEmpty,
       s"as-of dispatch rule named outside graft/operators:\n  ${leaks.mkString("\n  ")}")
+  }
+
+  test("only the bar kernel spells out the OHLC bar rule") {
+    // open/close, high/low and n are built by graft.ohlc.BarAgg alone:
+    // the bar, resample, incremental, streaming and API sites call it
+    val kernel = "graft/ohlc/BarAgg.scala"
+    val leaks = namedIn(p => p != kernel &&
+        Seq("graft/ohlc/", "graft/streaming/", "graft/api/").exists(p.startsWith),
+      Seq("min_by(", "max_by(", "OhlcAgg", "first_ord"))
+    assert(leaks.isEmpty,
+      s"the OHLC bar rule spelled out outside its kernel:\n  ${leaks.mkString("\n  ")}")
   }
 }
 

@@ -241,13 +241,18 @@ object TickIngest {
   /** Write ticks into the warehouse table for (instrument, variant) with
     * ReplacingMergeTree-equivalent dedup *at write time* on
     * (instrument, timestamp) (`clickhouse_manager.py:159-161,271-330`):
-    * constant instrument column, `yyyymm` partition column
-    * (≙ PARTITION BY toYYYYMM, `clickhouse_manager.py:160`), duplicate rows
-    * collapse keeping the max (bid, ask) tuple deterministically.
-    *
-    * Dynamic partition overwrite makes re-ingestion of a month idempotent —
+    * duplicate rows collapse keeping the max (bid, ask) tuple
+    * deterministically, and [[PrunedScan.writeMonths]] replaces exactly the
+    * months of the batch (≙ PARTITION BY toYYYYMM,
+    * `clickhouse_manager.py:160`), so re-ingesting a month is idempotent —
     * the reference's eventual merge-time dedup becomes a strict overwrite
-    * (SURVEY.md §4 "merge-time dedup" row).
+    * (SURVEY.md §4 "merge-time dedup" row). The months' sidecars carry
+    * bid/ask secondary zone-map stats: zero-spread (bid = ask) and
+    * price-band filters are documented workloads
+    * (`docs/CLICKHOUSE_USER_GUIDE.md:450-454`), and under the per-month
+    * timestamp sort prices are locally correlated enough that per-file
+    * bid/ask ranges prune band queries to the files that traded in the band.
+    * Returns the rows of the deduplicated batch.
     */
   def writeTicks(
       ticks: DataFrame,
@@ -255,77 +260,23 @@ object TickIngest {
       instrument: String,
       variant: String
   ): Long = {
-    val spark = ticks.sparkSession
-    // dynamic overwrite scoped to THIS write: leaking it into the shared
-    // session would silently change later overwrite-mode partitioned
-    // writes from truncate-table to touched-partitions-only semantics
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val keyed = ticks
-      .withColumn("instrument", lit(instrument.toUpperCase(java.util.Locale.ROOT)))
-      .withColumn("yyyymm", date_format(col("timestamp"), "yyyyMM"))
-    // dedup as an AGGREGATION, not a row_number window: max_by over the
+    // dedup as an AGGREGATION, not a row_number window: the max of the
     // (bid, ask) struct keeps the same winner as the old
     // `row_number over (order by bid desc, ask desc) = 1` — the
     // operators.Dedup.replacingDedupAgg posture applied to the ingest hot
     // path (the 100×-data probe measured window-form dedup at ~8× the
-    // aggregation form's wall). Its buffer holds structs, which Spark does
-    // not hash-aggregate: the executed plan is a non-codegen SortAggregate,
-    // partial after a sort of each input partition and final after a sort
-    // of the shuffled rows, so the full tick stream IS sorted (twice)
-    val allCols = Seq("instrument", "timestamp", "bid", "ask", "yyyymm")
-    val deduped = keyed
-      .groupBy(col("instrument"), col("timestamp"))
-      .agg(max_by(
-        struct(allCols.map(col): _*),
-        struct(col("bid"), col("ask"))).as("__best"))
-      .select(allCols.map(c => col(s"__best.$c").as(c)): _*)
-    // the deduped batch feeds THREE consumers below — the partitioned
-    // write, the touched-months collect, and the inserted-rows count;
-    // without a persist each re-runs the dedup aggregation over the raw
-    // batch (three full batch scans per ingest). Cache it around all three.
+    // aggregation form's wall). Its buffer holds a struct, which Spark does
+    // not hash-aggregate: the executed plan is a non-codegen SortAggregate
+    val deduped = ticks
+      .groupBy(col("timestamp"))
+      .agg(max(struct(col("bid"), col("ask"))).as("__best"))
+      .select(col("timestamp"), col("__best.bid").as("bid"), col("__best.ask").as("ask"))
+    // the write and the inserted-rows count both consume the batch; the
+    // persist keeps the count from re-running the dedup
     deduped.persist()
-    // cluster writes per partition and sort by timestamp so Parquet
-    // row-group min/max stats give tight range pruning (≙ the reference's
-    // ORDER BY (instrument, timestamp) sparse primary index, SURVEY.md §4)
-    val out = deduped
-      .select("instrument", "timestamp", "bid", "ask", "yyyymm")
-      .repartition(col("instrument"), col("yyyymm"))
-      .sortWithinPartitions("instrument", "yyyymm", "timestamp")
-    try out.write
-      .mode("overwrite")
-      .option("compression", "zstd") // ≙ reference codec choice (ZSTD cols)
-      .partitionBy("instrument", "yyyymm")
-      .parquet(s"$warehouse/${variant}_ticks")
-    catch { case e: Throwable => deduped.unpersist(); throw e }
-    finally prevMode.fold(
-      spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-    // Refresh the _manifest sidecar of each TOUCHED month partition (one
-    // small single-column job per month over files just written): the
-    // zero-probe dispatch metadata (OhlcGenerator.tableMonthCounts) then
-    // answers from one sidecar read per partition instead of one footer
-    // round-trip per data file — the difference that matters once batches
-    // accumulate files in a month (especially on object stores, where each
-    // footer open is a request). Untouched months keep their sidecars
-    // byte-identical. bid/ask secondary zone-map stats ride the same
-    // single manifest scan (r17, r16 verdict item 5): zero-spread scans
-    // (bid = ask) and price-band filters are documented workloads
-    // (`docs/CLICKHOUSE_USER_GUIDE.md:450-454`), and under the per-month
-    // timestamp sort prices are locally correlated enough that per-file
-    // bid/ask ranges prune band queries to the files that actually traded
-    // in the band
     try {
-      PrunedScan.writeMonthManifests(spark, s"$warehouse/${variant}_ticks",
-        instrument, deduped.select("yyyymm").distinct().collect().map(_.getString(0)),
-        extraCols = Seq("bid", "ask"))
-      // inserted-row count = the batch itself, answered from the cache
-      // (the Manifest.write jobs above scan the WRITTEN files — that scan
-      // per touched month is the sidecar's cost and is unavoidable; the
-      // batch-side jobs all reuse the persisted dedup). Reading back the
-      // stored table filtered only on instrument counted EVERY month ever
-      // ingested — a full-instrument scan per monthly batch (and a wrong
-      // "inserted" number once history accumulates).
+      PrunedScan.writeMonths(deduped, s"$warehouse/${variant}_ticks", instrument,
+        wholeInstrument = false, statsCols = Seq("bid", "ask"))
       deduped.count()
     } finally deduped.unpersist()
   }

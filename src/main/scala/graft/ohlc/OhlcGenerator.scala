@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.calendar.TradingCalendar
 import graft.ingest.TickIngest
 import graft.operators.{AsofJoin, Probes}
+import graft.storage.PrunedScan
 
 /** Full 27-column OHLC generation (reference
   * `clickhouse_ohlc_generator.py:65-215` + the session/holiday enrichment
@@ -139,7 +140,7 @@ object OhlcGenerator {
       instrument: String,
       months: Seq[String]
   ): Seq[(String, Long)] = {
-    import graft.storage.{Manifest, PrunedScan}
+    import graft.storage.Manifest
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(s"$warehouse/$table")
     val fs = root.getFileSystem(conf)
@@ -233,57 +234,26 @@ object OhlcGenerator {
       case Some(stats) =>
         AsofJoin.storedAsofDispatch(stats).fold(("plain", 86400L))(("bucketed", _))
     }
-    val out = enrichBars(Ohlc.ticksToOhlc1m(
+    val bars = enrichBars(Ohlc.ticksToOhlc1m(
         monthFiltered("raw_spread", months), monthFiltered("standard", stdMonths),
-        asofMode, asofWidth))
-      .withColumn("yyyymm", date_format(col("timestamp"), "yyyyMM"))
+        asofMode, asofWidth)).drop("instrument")
     // the carry-in widening can produce bars for the lookback months too —
-    // they are NOT part of this rebuild; only the requested partitions move
-    val scoped =
-      if (months.isEmpty) out else out.filter(col("yyyymm").isin(months: _*))
-    // dynamic overwrite for month-scoped rebuilds; a FULL rebuild must
-    // also clear months that no longer have ticks (static overwrite of
-    // the instrument's whole subtree does that, written via the subtree
-    // path so other instruments are untouched). The session conf is
-    // restored afterwards — regenerate must not silently change overwrite
-    // semantics for unrelated writes on the shared session.
+    // they are NOT part of this rebuild; only the requested partitions move.
+    // A FULL rebuild replaces the instrument's whole subtree, so months that
+    // no longer have ticks are cleared too
     val root = s"$warehouse/ohlc_1m"
-    val (frame, parts, path) =
-      if (months.isEmpty)
-        (scoped.drop("instrument"), Seq("yyyymm"),
-          graft.storage.PrunedScan.instrumentDir(root, instrument))
-      else (scoped, Seq("instrument", "yyyymm"), root)
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-      if (months.isEmpty) "static" else "dynamic")
-    try {
-      // one timestamp-sorted file per month, as TickIngest.writeTicks
-      // writes the tick tables: the bar aggregation emits no order
-      frame
-        .repartition(parts.map(col): _*)
-        .sortWithinPartitions((parts :+ "timestamp").map(col): _*)
-        .write
-        .mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy(parts: _*)
-        .parquet(path)
-    } finally {
-      prevMode.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-    }
-    // Refresh the `_manifest` sidecar of every REWRITTEN ohlc month, as
-    // TickIngest.writeTicks does for ticks: bar-count accounting over
-    // ohlc_1m (mirrors `clickhouse_ohlc_generator.py:199-210`) then answers
-    // from one sidecar read per partition instead of a footer round-trip
-    // per data file. A month-scoped rebuild touches exactly `months`; a
-    // full rebuild replaced the instrument's whole subtree, so every month
-    // present afterwards is fresh.
-    graft.storage.PrunedScan.writeMonthManifests(spark, root, instrument,
-      if (months.nonEmpty) months
-      else graft.storage.PrunedScan.months(spark.sessionState.newHadoopConf(),
-        new org.apache.hadoop.fs.Path(root), Some(instrument)).getOrElse(Nil).map(_.label))
-    graft.storage.PrunedScan.readTable(spark, root, TableSchema)
-      .filter(col("instrument") === instrument.toUpperCase(java.util.Locale.ROOT))
-      .count()
+    PrunedScan.writeMonths(
+      if (months.isEmpty) bars
+      else bars.filter(date_format(col("timestamp"), "yyyyMM").isin(months: _*)),
+      root, instrument, wholeInstrument = months.isEmpty, statsCols = Nil)
+    // the bar count (mirrors `clickhouse_ohlc_generator.py:199-210`) from
+    // the sidecars the write just made fresh; the scan only when one of
+    // them could not be written
+    PrunedScan.monthPartitionedCoverage(spark.sessionState.newHadoopConf(),
+        new org.apache.hadoop.fs.Path(root), "timestamp", Some(instrument))
+      .map(_._1)
+      .getOrElse(PrunedScan.readTable(spark, root, TableSchema)
+        .filter(col("instrument") === instrument.toUpperCase(java.util.Locale.ROOT))
+        .count())
   }
 }

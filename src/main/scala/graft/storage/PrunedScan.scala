@@ -439,27 +439,55 @@ object PrunedScan {
   def instrumentDir(root: String, instrument: String): String =
     s"$root/instrument=${instrument.toUpperCase(java.util.Locale.ROOT)}"
 
-  /** Rebuild the timestamp-keyed `_manifest` sidecar of each listed month
-    * of `instrument` in the table at `root` — what every warehouse writer
-    * calls after its data write, with `extraCols` riding the same scan as
-    * secondary zone-map stats. Best-effort: the sidecar is an
-    * optimization and the data write already succeeded, so a failed
-    * refresh is swallowed. A missing or stale sidecar (a crash between the
-    * data write and this call, a listed month that produced no directory)
-    * is rejected by [[Manifest.entries]]' freshness proof in favour of
-    * footers or all files — never wrong, only slower.
+  /** The one writer of an instrument/yyyymm warehouse table (the tick
+    * variants and `ohlc_1m`). `frame` holds one instrument's rows: its data
+    * columns, `timestamp` among them, and no partition column. They land in
+    * `instrument`'s subtree of the table at `root`, partitioned by the
+    * session-zone `yyyymm` of `timestamp`, each month one zstd file sorted
+    * by timestamp (≙ the reference's `PARTITION BY toYYYYMM(timestamp)
+    * ORDER BY (instrument, timestamp)`, `clickhouse_manager.py:145-229`),
+    * so row-group stats and the sidecar's per-file ranges are tight.
+    *
+    * The overwrite scope is this write's own option, never the session
+    * conf, so a concurrent write on the same session keeps its own scope:
+    * `wholeInstrument` replaces the instrument's whole subtree (months the
+    * frame no longer holds are cleared), otherwise only the frame's months
+    * are replaced. Other instruments are never touched.
+    *
+    * Then every month of the instrument whose `_manifest` sidecar
+    * [[Manifest.entries]] rejects is rebuilt, with `statsCols` as
+    * secondary zone-map stats riding the same scan. An overwrite deletes a
+    * replaced month's directory with its sidecar, so these are the months
+    * this write replaced plus any a crash left stale; every other month
+    * keeps its sidecar byte-identical. Best-effort: the data write already
+    * succeeded, so a failed refresh is swallowed and readers fall back to
+    * footers or all files — slower, never wrong.
     */
-  def writeMonthManifests(
-      spark: SparkSession,
+  def writeMonths(
+      frame: DataFrame,
       root: String,
       instrument: String,
-      months: Seq[String],
-      extraCols: Seq[String] = Nil): Unit =
-    months.foreach { m =>
-      try Manifest.write(spark, s"${instrumentDir(root, instrument)}/yyyymm=$m",
-        "timestamp", extraCols = extraCols)
-      catch { case NonFatal(_) => () }
+      wholeInstrument: Boolean,
+      statsCols: Seq[String]): Unit = {
+    val spark = frame.sparkSession
+    frame.withColumn("yyyymm", date_format(col("timestamp"), "yyyyMM"))
+      .repartition(col("yyyymm"))
+      .sortWithinPartitions("yyyymm", "timestamp")
+      .write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", if (wholeInstrument) "static" else "dynamic")
+      .option("compression", "zstd") // ≙ reference codec choice (ZSTD cols)
+      .partitionBy("yyyymm")
+      .parquet(instrumentDir(root, instrument))
+    val conf = spark.sessionState.newHadoopConf()
+    val rootPath = new HPath(root)
+    val fs = rootPath.getFileSystem(conf)
+    months(conf, rootPath, Some(instrument)).getOrElse(Nil).foreach { m =>
+      if (m.files.nonEmpty && Manifest.entries(fs, m.dir, m.files).isEmpty)
+        try Manifest.write(spark, m.dir.toString, "timestamp", extraCols = statsCols)
+        catch { case NonFatal(_) => () }
     }
+  }
 
   /** Data files of a [[months]] walk for a key range: month partitions
     * outside [loMonth, hiMonth] are dropped BY NAME on the driver (never
@@ -493,17 +521,26 @@ object PrunedScan {
     * (`TickIngest.TableSchema`, `OhlcGenerator.TableSchema`): nothing is
     * inferred, so planning the read opens no footer and launches no Spark
     * job. With `files` (e.g. a [[monthPartitionedFiles]] result) only
-    * those are read, `basePath` keeping the partition columns; empty
-    * `files` reads the whole table under `root`.
+    * those are read. Empty `files` reads the whole table: every `yyyymm=`
+    * directory of every `instrument=` directory under `root`, so a stray
+    * entry beside them cannot derail Spark's partition discovery; a table
+    * without such a directory (empty, or a foreign layout) is read from
+    * `root` as Spark finds it. `basePath` keeps the partition columns.
     */
   def readTable(
       spark: SparkSession,
       root: String,
       schema: StructType,
       files: Seq[HPath] = Nil): DataFrame = {
-    val reader = spark.read.schema(schema)
-    if (files.isEmpty) reader.parquet(root)
-    else reader.option("basePath", root).parquet(files.map(_.toString): _*)
+    val paths =
+      if (files.nonEmpty) files
+      else {
+        val glob = new HPath(s"$root/instrument=*/yyyymm=*")
+        val months = Option(glob.getFileSystem(spark.sessionState.newHadoopConf())
+          .globStatus(glob)).toSeq.flatten.filter(_.isDirectory).map(_.getPath)
+        if (months.isEmpty) Seq(new HPath(root)) else months
+      }
+    spark.read.schema(schema).option("basePath", root).parquet(paths.map(_.toString): _*)
   }
 
   /** Coverage of a month-partitioned warehouse table — (total rows,

@@ -1172,6 +1172,72 @@ class ForexPipelineSpec extends SparkSpec {
         s"scan roots: ${roots.mkString(", ")}")
     }
   }
+
+  test("a stray file inside an instrument directory: gaps, coverage and ticks answer as without it") {
+    val (p, dir) = twoMonthWarehouse("graft_stray_instrument", 1200)
+    def answers() = (
+      p.missingMonths("EURUSD"),
+      p.getCoverage("EURUSD"),
+      p.queryTicks("EURUSD").collect().map(_.toString).toSeq)
+    val before = answers()
+    Files.writeString(dir.resolve("wh").resolve("raw_spread_ticks")
+      .resolve("instrument=EURUSD").resolve("stray.tmp"), "not a month")
+    val (listings, coverage) = (Processor.listingDataScans.get(), Processor.coverageDataScans.get())
+    assert(answers() === before)
+    // the unproven layout took the scan fallbacks, and they read the months
+    assert(Processor.listingDataScans.get() > listings)
+    assert(Processor.coverageDataScans.get() > coverage)
+  }
+
+  test("a write refreshes every stale sidecar of the instrument and keeps the others byte-identical") {
+    val (p, dir) = twoMonthWarehouse("graft_sidecar_heal", 1200)
+    val inst = dir.resolve("wh").resolve("raw_spread_ticks").resolve("instrument=EURUSD")
+    def sidecar(month: String): Map[String, Seq[Byte]] = {
+      val d = inst.resolve(s"yyyymm=$month").resolve("_manifest")
+      if (!Files.isDirectory(d)) Map.empty
+      else {
+        val ls = Files.list(d)
+        try ls.iterator().asScala.map(f =>
+          f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap
+        finally ls.close()
+      }
+    }
+    val feb = sidecar("202402")
+    assert(feb.nonEmpty)
+    // a crash between the data write and the sidecar refresh
+    val jan = inst.resolve("yyyymm=202401").resolve("_manifest")
+    val ls = Files.list(jan)
+    try ls.iterator().asScala.foreach(Files.delete) finally ls.close()
+    Files.delete(jan)
+    ingest(p, dir, "2024-03-04T10:00:01", 600)
+    // the March append healed January, and left February alone
+    assert(sidecar("202401").nonEmpty, "January's sidecar stayed missing")
+    assert(sidecar("202402") === feb, "February's sidecar was rewritten")
+    val scans = Processor.coverageDataScans.get()
+    assert(p.getCoverage("EURUSD").rawSpreadTicks === 1800L)
+    assert(Processor.coverageDataScans.get() === scans, "coverage fell back to the data scan")
+  }
+
+  test("one append runs 22 Spark jobs: no touched-month collect per write, no bar-count scan") {
+    val (p, dir) = twoMonthWarehouse("graft_append_jobs", 1200)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      ingest(p, dir, "2024-03-04T10:00:01", 600)
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    // the writes find their months from the listing and regenerate counts
+    // its bars from the fresh sidecars: with a distinct-month collect per
+    // tick write and a bar-count scan the same append ran 25
+    assert(jobs.get === 22)
+  }
 }
 
 /** The local file system, counting every open of a `_manifest` part file. */

@@ -193,6 +193,15 @@ class ReachabilitySpec extends AnyFunSuite {
       s"warehouse layout spelled out outside graft/storage:\n  ${leaks.mkString("\n  ")}")
   }
 
+  test("only graft/storage writes the warehouse layout") {
+    // the overwrite scope, the codec and the sidecar refresh are decided in
+    // PrunedScan.writeMonths alone: ingest and OHLC hand it a frame
+    val leaks = namedOutside("graft/storage/",
+      Seq("partitionOverwriteMode", "\"zstd\"", "writeMonthManifests"))
+    assert(leaks.isEmpty,
+      s"warehouse writes spelled out outside graft/storage:\n  ${leaks.mkString("\n  ")}")
+  }
+
   test("only graft/operators owns the as-of dispatch rule") {
     // the crossover and the bucket width are decided in AsofJoin alone:
     // other modules hand it stats and take its verdict

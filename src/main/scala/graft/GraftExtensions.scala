@@ -21,6 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       e.injectFunction((FunctionIdentifier(name), info, builder))
     }
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.OrderedScanStrategy)
     e.injectOptimizerRule(_ => graft.plans.NsTimestampPushdown)
   }
 }
@@ -99,9 +100,9 @@ object GraftExtensions {
   )
 
   /** Register the functions on an existing session (temp functions), plus
-    * the optimizer rule and the as-of planner strategy via the
-    * experimental hooks (idempotent) — the same surface `withExtensions`
-    * installs at session build.
+    * the optimizer rule and the as-of and ordered-scan planner strategies
+    * via the experimental hooks (idempotent) — the same surface
+    * `withExtensions` installs at session build.
     */
   def register(spark: SparkSession): Unit = {
     all.foreach { case (name, _, builder) =>
@@ -114,5 +115,6 @@ object GraftExtensions {
     if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
+    graft.plans.OrderedScanStrategy.setup(spark)
   }
 }

@@ -22,6 +22,9 @@ import graft.query.QueryEngine
   */
 final class Processor(spark: SparkSession, warehouse: String) {
 
+  // the reads below are served in storage order where the layout proves it
+  graft.plans.OrderedScanStrategy.setup(spark)
+
   // ---- validation (processor.py:221-262, P7) ------------------------------
 
   private val dateRe = "^\\d{4}-\\d{2}-\\d{2}$".r
@@ -233,7 +236,17 @@ final class Processor(spark: SparkSession, warehouse: String) {
 
   // ---- queries (processor.py:456-548) -------------------------------------
 
-  /** Tick range scan (`query_ticks`, `clickhouse_query_engine.py:66-132`). */
+  /** Tick range scan (`query_ticks`, `clickhouse_query_engine.py:66-132`),
+    * in timestamp order.
+    *
+    * The order comes from the storage layout where it is proven: each month
+    * one timestamp-sorted file whose `_manifest` carries the sort-key
+    * witness, the month ranges rising strictly. The read is then one scan
+    * of the month files in month order ([[graft.plans.OrderedScanStrategy]]),
+    * and a `limit` stops reading once it has its rows. On any other layout
+    * the same rows come from Spark's global sort (a range shuffle) and a
+    * `limit` from its top-k.
+    */
   def queryTicks(
       pair: String,
       variant: String = "raw_spread",
@@ -265,7 +278,13 @@ final class Processor(spark: SparkSession, warehouse: String) {
   }
 
   /** OHLC query with on-demand resampling
-    * (`query_ohlc`, `clickhouse_query_engine.py:134-277`).
+    * (`query_ohlc`, `clickhouse_query_engine.py:134-277`), in timestamp
+    * order. As in [[queryTicks]], a proven layout serves the order: 1m
+    * bars are one scan of the month files in month order, and a resample
+    * aggregates inside each month file and sorts each file's bars, with no
+    * exchange, when no bar spans two files (checked on the recorded
+    * ranges, so a 4h bar across a New York month cut is caught). Anything
+    * else falls back to Spark's aggregate exchange and global sort.
     */
   def queryOhlc(
       pair: String,
@@ -569,13 +588,13 @@ final class Processor(spark: SparkSession, warehouse: String) {
     }
     // partition columns come back at the end of the schema; restore the
     // reference's 27-column order
-    def read(files: Seq[Path]) = exact(
+    def read(files: Seq[PrunedScan.MonthFile]) = exact(
       PrunedScan.readTable(spark, root, OhlcGenerator.TableSchema, files)
         .filter(col("instrument") === p))
       .select(OhlcGenerator.Columns.map(col): _*)
     def plain() = read(Nil)
-    // an unranged read lists only this instrument's months and reads no
-    // sidecar: there is no key bound to prune on
+    // an unranged read lists only this instrument's months and prunes no
+    // file: there is no key bound (the sidecars still prove its order)
     val bounds =
       if (lo.isEmpty && hi.isEmpty) Nil
       else Seq(("timestamp",

@@ -356,7 +356,7 @@ object TickIngest {
     // (r17: bid/ask price bands) prune files through the sidecars'
     // secondary stats and are re-applied exactly below, so a sidecar
     // without them is slower, never wrong.
-    val files: Option[Seq[Path]] = PrunedScan.monthPartitionedFiles(
+    val files = PrunedScan.monthPartitionedFiles(
       spark.sessionState.newHadoopConf(), new Path(root), instrument,
       start.map(PrunedScan.monthOfLo(spark, _)),
       end.map(PrunedScan.monthOfHi(spark, _)),

@@ -57,8 +57,12 @@ object QueryEngine {
 
   /** One keyset page: strictly-after-cursor filter, over-fetch by one row to
     * compute has_more, trim driver-side (`clickhouse_query_engine.py:
-    * 390-472`). The scan itself never sorts more than pageSize+1 rows
-    * globally (Spark's ordered-limit is a per-partition top-k + merge).
+    * 390-472`). Over a warehouse read whose layout proves its timestamp
+    * order (see [[graft.plans.OrderedScanStrategy]]) the ordered limit is a
+    * `CollectLimit` over the month files in month order: it reads from the
+    * cursor on and stops once the page is full. Over anything else it is
+    * Spark's ordered limit, a per-partition top-k + merge that never sorts
+    * more than pageSize+1 rows globally.
     *
     * The scan comes from a cursor-aware factory: `dfFor(cursor)` is
     * invoked once per page with the page's effective cursor, so a caller

@@ -28,6 +28,11 @@ object Manifest {
     * (file, rows, min_key, max_key, key_col), ordered by min_key then file.
     * `key_col` records WHICH column the min/max describe, so the sidecar
     * is self-describing.
+    *
+    * `sorted` is the writer's word that each file holds its rows in
+    * `keyCol` order. A file whose key has no NULL then also carries the
+    * sort-key witness `sort_key` = `keyCol`: its rows run from `min_key`
+    * to `max_key`, which is what an ordered read of the file may rely on.
     */
   def build(
       spark: SparkSession,
@@ -36,7 +41,8 @@ object Manifest {
       extraCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       bloomExpected: Long = 100000L,
-      bloomFpp: Double = 0.05): DataFrame = {
+      bloomFpp: Double = 0.05,
+      sorted: Boolean = false): DataFrame = {
     // up-front shape validation (r16 advice): a duplicate extra column
     // would alias two identical min__/max__ fields (write fails late and
     // uglier), a comma corrupts the comma-joined `cols` witness (split
@@ -62,6 +68,9 @@ object Manifest {
       count(lit(1)).as("rows"),
       min(col(keyCol)).as("min_key"),
       max(col(keyCol)).as("max_key")) ++
+      // NULL keys sort first in every file, so a file holding one cannot
+      // follow another in key order: its witness is withheld
+      (if (sorted) Seq(count(col(keyCol)).as("key_rows")) else Nil) ++
       // secondary zone-map columns (r16): per-file min/max for EVERY listed
       // column rides the same single scan, named min__<col>/max__<col>.
       // RangeWriter layouts sorted by (k1, k2) make the secondary stats
@@ -82,8 +91,12 @@ object Manifest {
         graft.functions.BloomSketch.agg(col(c), bloomExpected, bloomFpp)
           .as(s"bloom__$c")
       }
-    val withKey = base.agg(stats.head, stats.tail: _*)
+    val agged = base.agg(stats.head, stats.tail: _*)
       .withColumn("key_col", lit(keyCol))
+    val withKey =
+      if (!sorted) agged
+      else agged.withColumn("sort_key", when(col("key_rows") === col("rows"), lit(keyCol)))
+        .drop("key_rows")
     // `cols` records WHICH secondary columns carry stats (comma-joined,
     // identical on every row): an all-NULL column drops its min__/max__
     // fields from the JSON line, and without this witness "no stats
@@ -111,8 +124,9 @@ object Manifest {
       extraCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       bloomExpected: Long = 100000L,
-      bloomFpp: Double = 0.05): Unit =
-    build(spark, path, keyCol, extraCols, bloomCols, bloomExpected, bloomFpp)
+      bloomFpp: Double = 0.05,
+      sorted: Boolean = false): Unit =
+    build(spark, path, keyCol, extraCols, bloomCols, bloomExpected, bloomFpp, sorted)
       .coalesce(1)
       .write.mode("overwrite")
       // full µs precision with an explicit offset: the default JSON
@@ -133,12 +147,14 @@ object Manifest {
     * prune" instead of a wrong comparison. A recorded column with no
     * min/max is entirely NULL in that file (Spark's JSON writer drops null
     * fields) → (None, None): provably empty for any range predicate.
+    * `sortKey` is the sort-key witness (see [[build]]), None without one.
     */
   final case class Entry(
       rows: Long,
       keyCol: String,
       ranges: Map[String, (Option[String], Option[String])],
-      blooms: Map[String, String])
+      blooms: Map[String, String],
+      sortKey: Option[String])
 
   // one `"name":token` field of a flat JSON line; the token is a quoted
   // string (escapes allowed) or a bare scalar up to the next field
@@ -192,6 +208,7 @@ object Manifest {
     } yield file.split('/').last -> Entry(rows, key,
       witness("cols").map(c => c -> ((f.get(s"min__$c"), f.get(s"max__$c")))).toMap +
         (key -> ((f.get("min_key"), f.get("max_key")))),
-      witness("bloom_cols").flatMap(c => str(s"bloom__$c").map(c -> _)).toMap)
+      witness("bloom_cols").flatMap(c => str(s"bloom__$c").map(c -> _)).toMap,
+      str("sort_key"))
   }
 }

@@ -229,33 +229,33 @@ object PrunedScan {
     if (rs.size == es.size) Some(rs) else None
   }
 
-  /** Multi-column zone-map pruning (r16): the surviving `files` of `dir`
-    * for the CONJUNCTION of per-column inclusive ranges, or None when NO
-    * column could prove anything. Each column prunes independently against
-    * its recorded stats (primary key_col min/max or secondary
-    * min__/max__ written via `Manifest.write(extraCols)`), and the
-    * survivor sets are INTERSECTED — sound because the predicate is a
-    * conjunction: a file provably empty for any one conjunct is empty for
-    * the whole. A column with no/unusable stats simply doesn't constrain
-    * (its conjunct is enforced by the re-applied exact filter); the
-    * all-or-nothing per-column discipline of [[survivors]] still holds, so
-    * one odd file aborts that COLUMN's pruning, never a partial answer.
-    * The sidecar is read once and its freshness proof gates every column.
+  /** Multi-column zone-map pruning (r16): the names of the files of the
+    * sidecar entries `es` that survive the CONJUNCTION of per-column
+    * inclusive ranges, or None when NO column could prove anything. Each
+    * column prunes independently against its recorded stats (primary
+    * key_col min/max or secondary min__/max__ written via
+    * `Manifest.write(extraCols)`), and the survivor sets are INTERSECTED —
+    * sound because the predicate is a conjunction: a file provably empty
+    * for any one conjunct is empty for the whole. A column with
+    * no/unusable stats simply doesn't constrain (its conjunct is enforced
+    * by the re-applied exact filter); the all-or-nothing per-column
+    * discipline of [[survivors]] still holds, so one odd file aborts that
+    * COLUMN's pruning, never a partial answer. The caller reads the
+    * sidecar once ([[Manifest.entries]]), and its freshness proof gates
+    * every column.
     *
     * `zone` only matters for zone-less temporal bounds (see [[boundKeys]]);
     * Instant/Timestamp bounds — everything the internal warehouse callers
     * pass via [[sessionInstant]] — are exact under any value. Any failure
     * while pruning (a bound no key axis can hold, such as an infinite or
-    * NaN Double) is None: the caller reads all `files`.
+    * NaN Double) is None: the caller reads all files.
     */
-  private def prunedDataFilesMulti(
-      fs: FileSystem,
-      dir: HPath,
-      files: Seq[FileStatus],
+  private def prunedNames(
+      es: Map[String, Manifest.Entry],
       bounds: Seq[(String, Any, Any)],
       zone: java.time.ZoneId,
-      overlapPairs: Seq[(String, String)]): Option[Seq[HPath]] =
-    try Manifest.entries(fs, dir, files).flatMap { es =>
+      overlapPairs: Seq[(String, String)]): Option[Set[String]] =
+    try {
       val perCol: Seq[Option[Seq[String]]] = bounds.map { case (c, lo, hi) =>
         for {
           loKs <- boundKeys(lo, zone)
@@ -275,10 +275,7 @@ object PrunedScan {
       }
       val usable = (perCol ++ perPair).flatten.map(_.toSet)
       if (usable.isEmpty) None // no column could prove anything
-      else {
-        val kept = usable.reduce(_ intersect _)
-        Some(files.map(_.getPath).filter(p => kept(p.getName)))
-      }
+      else Some(usable.reduce(_ intersect _))
     } catch { case NonFatal(_) => None }
 
   private def parseWallClock(t: String): java.time.LocalDateTime =
@@ -368,6 +365,20 @@ object PrunedScan {
       fs: FileSystem) {
     lazy val files: Seq[FileStatus] = dataFiles(fs, dir)
   }
+
+  /** A data file of a [[months]] walk, with its month partition. `sorted`
+    * is the file's key range when the file may be read in key order: it
+    * is its month's only data file and the month's fresh `_manifest`
+    * carries the sort-key witness for it ([[Manifest.build]]).
+    */
+  final case class MonthFile(
+      status: FileStatus,
+      instrument: String,
+      month: String,
+      sorted: Option[SortedRange])
+
+  /** A file's rows run in `key` order from `minUs` to `maxUs` (epoch µs). */
+  final case class SortedRange(key: String, minUs: Long, maxUs: Long)
 
   /** The one walk of an instrument=/yyyymm= warehouse table (the tick
     * variants and `ohlc_1m`): the months of `instrument` (of every
@@ -484,7 +495,8 @@ object PrunedScan {
     val fs = rootPath.getFileSystem(conf)
     months(conf, rootPath, Some(instrument)).getOrElse(Nil).foreach { m =>
       if (m.files.nonEmpty && Manifest.entries(fs, m.dir, m.files).isEmpty)
-        try Manifest.write(spark, m.dir.toString, "timestamp", extraCols = statsCols)
+        try Manifest.write(spark, m.dir.toString, "timestamp", extraCols = statsCols,
+          sorted = true)
         catch { case NonFatal(_) => () }
     }
   }
@@ -492,11 +504,12 @@ object PrunedScan {
   /** Data files of a [[months]] walk for a key range: month partitions
     * outside [loMonth, hiMonth] are dropped BY NAME on the driver (never
     * listed — zero-padded yyyymm orders lexicographically), and each
-    * surviving month is zone-mapped through [[prunedDataFilesMulti]] on
-    * the conjunction of `bounds` and `overlapPairs`; a month without a
-    * usable sidecar contributes all its data files, and with no bounds at
-    * all no sidecar is read. None on an unproven or unlistable layout —
-    * the caller falls back to the plain partitioned read.
+    * surviving month's `_manifest` is read once: it zone-maps the month's
+    * files through [[prunedNames]] on the conjunction of `bounds` and
+    * `overlapPairs`, and it proves which files may be read in key order
+    * ([[MonthFile.sorted]]). A month without a usable sidecar contributes
+    * all its data files, unproven. None on an unproven or unlistable
+    * layout — the caller falls back to the plain partitioned read.
     */
   def monthPartitionedFiles(
       conf: org.apache.hadoop.conf.Configuration,
@@ -505,15 +518,23 @@ object PrunedScan {
       loMonth: Option[String],
       hiMonth: Option[String],
       bounds: Seq[(String, Any, Any)],
-      overlapPairs: Seq[(String, String)] = Nil): Option[Seq[HPath]] =
+      overlapPairs: Seq[(String, String)] = Nil): Option[Seq[MonthFile]] =
     try {
       val fs = root.getFileSystem(conf)
       months(conf, root, instrument,
           m => loMonth.forall(_ <= m) && hiMonth.forall(m <= _)).map(_.flatMap { m =>
-        val all = m.files.map(_.getPath)
-        if (bounds.isEmpty && overlapPairs.isEmpty) all
-        else prunedDataFilesMulti(fs, m.dir, m.files, bounds,
-          java.time.ZoneOffset.UTC, overlapPairs).getOrElse(all)
+        val es = Manifest.entries(fs, m.dir, m.files)
+        val kept = es.flatMap(prunedNames(_, bounds, java.time.ZoneOffset.UTC, overlapPairs))
+        m.files.filter(f => kept.forall(_(f.getPath.getName))).map { f =>
+          val sorted = for {
+            e <- es.flatMap(_.get(f.getPath.getName)) if m.files.size == 1
+            key <- e.sortKey if key == e.keyCol
+            (Some(mn), Some(mx)) <- e.ranges.get(key)
+            TimeKey(lo) <- tokenKey(mn)
+            TimeKey(hi) <- tokenKey(mx)
+          } yield SortedRange(key, lo, hi)
+          MonthFile(f, m.instrument, m.label, sorted)
+        }
       })
     } catch { case NonFatal(_) => None }
 
@@ -521,26 +542,41 @@ object PrunedScan {
     * (`TickIngest.TableSchema`, `OhlcGenerator.TableSchema`): nothing is
     * inferred, so planning the read opens no footer and launches no Spark
     * job. With `files` (e.g. a [[monthPartitionedFiles]] result) only
-    * those are read. Empty `files` reads the whole table: every `yyyymm=`
-    * directory of every `instrument=` directory under `root`, so a stray
-    * entry beside them cannot derail Spark's partition discovery; a table
-    * without such a directory (empty, or a foreign layout) is read from
-    * `root` as Spark finds it. `basePath` keeps the partition columns.
+    * those are read; empty `files` reads the whole table, every data file
+    * of a proven layout ([[months]]). Either way the scan is planned over
+    * a [[MonthFileIndex]] of the statuses the walk listed, so no path is
+    * listed again, whatever the file count. A table without a proven
+    * month (empty, or a foreign layout) is read from its `yyyymm=`
+    * directories, or from `root`, as Spark finds it.
     */
   def readTable(
       spark: SparkSession,
       root: String,
       schema: StructType,
-      files: Seq[HPath] = Nil): DataFrame = {
-    val paths =
+      files: Seq[MonthFile] = Nil): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val listed =
       if (files.nonEmpty) files
-      else {
-        val glob = new HPath(s"$root/instrument=*/yyyymm=*")
-        val months = Option(glob.getFileSystem(spark.sessionState.newHadoopConf())
-          .globStatus(glob)).toSeq.flatten.filter(_.isDirectory).map(_.getPath)
-        if (months.isEmpty) Seq(new HPath(root)) else months
+      else months(conf, new HPath(root), None).toSeq.flatten.flatMap { m =>
+        m.files.map(MonthFile(_, m.instrument, m.label, None))
       }
-    spark.read.schema(schema).option("basePath", root).parquet(paths.map(_.toString): _*)
+    if (listed.isEmpty) {
+      val glob = new HPath(s"$root/instrument=*/yyyymm=*")
+      val dirs = Option(glob.getFileSystem(conf).globStatus(glob)).toSeq.flatten
+        .filter(_.isDirectory).map(_.getPath)
+      val paths = if (dirs.isEmpty) Seq(new HPath(root)) else dirs
+      spark.read.schema(schema).option("basePath", root).parquet(paths.map(_.toString): _*)
+    } else {
+      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+      import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      // the columns spark.read gives a declared schema: all nullable, the
+      // partition columns last
+      val (parts, data) = schema.fields.map(_.copy(nullable = true))
+        .partition(f => f.name == "instrument" || f.name == "yyyymm")
+      val relation = HadoopFsRelation(new MonthFileIndex(listed, StructType(parts)),
+        StructType(parts), StructType(data), None, new ParquetFileFormat, Map.empty)(spark)
+      org.apache.spark.sql.graft.bridge.ofRows(spark, LogicalRelation(relation))
+    }
   }
 
   /** Coverage of a month-partitioned warehouse table — (total rows,
@@ -610,7 +646,7 @@ object PrunedScan {
 
   /** Inclusive MULTI-column range scan (r16): the conjunction of per-column
     * [lo, hi] ranges, file-pruned by intersecting each column's zone-map
-    * survivors ([[prunedDataFilesMulti]]) — so a predicate on a SECONDARY
+    * survivors ([[prunedNames]]) — so a predicate on a SECONDARY
     * sort column (recorded via `Manifest.write(extraCols)`) prunes too,
     * alone or stacked with the primary. Columns without usable stats fall
     * back gracefully: their conjunct is only enforced by the re-applied
@@ -632,8 +668,9 @@ object PrunedScan {
     val dir = new HPath(path)
     val picked: Option[Seq[String]] = try {
       val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      prunedDataFilesMulti(fs, dir, dataFiles(fs, dir), bounds, zone, Nil)
-        .map(_.map(_.toString))
+      val files = dataFiles(fs, dir)
+      Manifest.entries(fs, dir, files).flatMap(prunedNames(_, bounds, zone, Nil))
+        .map(kept => files.map(_.getPath).filter(p => kept(p.getName)).map(_.toString))
     } catch { case NonFatal(_) => None }
     picked match {
       case Some(Nil) =>

@@ -78,4 +78,54 @@ object bridge {
         physical.outputOrdering, isStreaming = false)(spark))
     (cut, rdd)
   }
+
+  /** A grouping key with NaN and -0.0 normalised, as Spark's Aggregation
+    * strategy plans it. */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** `scan`, the executed output of one file scan, read in `parts` in
+    * place of Spark's own packing of its files: partition i reads the
+    * splits of `parts(i)`, in order, through the scan's own reader and row
+    * metrics. That holds because every RDD between `scan` and the scan's
+    * `FileScanRDD` is a per-partition map, which hands its parent the very
+    * split it is asked for, and a `FileScanRDD` reads whatever files the
+    * split names. Any other lineage throws instead of reading wrong rows.
+    */
+  def inParts[T: scala.reflect.ClassTag](
+      scan: org.apache.spark.rdd.RDD[T],
+      parts: Seq[org.apache.spark.sql.execution.datasources.FilePartition])
+      : org.apache.spark.rdd.RDD[T] = {
+    @scala.annotation.tailrec
+    def splitPassing(r: org.apache.spark.rdd.RDD[_]): Boolean = r match {
+      case _: org.apache.spark.sql.execution.datasources.FileScanRDD => true
+      case m: org.apache.spark.rdd.MapPartitionsRDD[_, _] => splitPassing(m.prev)
+      case _ => false
+    }
+    if (!splitPassing(scan))
+      throw new IllegalStateException(s"not the output of one file scan: ${scan.toDebugString}")
+    new FilePartsRDD(scan, parts.toArray[org.apache.spark.Partition])
+  }
+}
+
+/** [[bridge.inParts]]: `prev` computed over the file partitions `parts`.
+  * The dependency is declared so that the scheduler walks, and so ships,
+  * `prev`'s lineage; it names no parent partition, since each partition
+  * here names its own files.
+  */
+private final class FilePartsRDD[T: scala.reflect.ClassTag](
+    prev: org.apache.spark.rdd.RDD[T],
+    parts: Array[org.apache.spark.Partition])
+    extends org.apache.spark.rdd.RDD[T](prev.sparkContext,
+      Seq(new org.apache.spark.NarrowDependency(prev) {
+        override def getParents(partitionId: Int): Seq[Int] = Nil
+      })) {
+  override protected def getPartitions: Array[org.apache.spark.Partition] = parts
+  override def compute(
+      split: org.apache.spark.Partition,
+      context: org.apache.spark.TaskContext): Iterator[T] =
+    firstParent[T].iterator(split, context)
+  override protected def getPreferredLocations(split: org.apache.spark.Partition): Seq[String] =
+    split.asInstanceOf[org.apache.spark.sql.execution.datasources.FilePartition]
+      .preferredLocations().toSeq
 }

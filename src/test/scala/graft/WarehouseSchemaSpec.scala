@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -105,6 +106,46 @@ class WarehouseSchemaSpec extends SparkSpec {
     // the planned reads still answer: nothing was deferred into the plan
     assert(p.queryTicks("EURUSD").count() === 5)
     assert(p.queryOhlc("EURUSD", "1m").count() === 3)
+  }
+
+  test("planning a read over 40 month files launches zero Spark jobs and reads the scan's rows") {
+    // more files than Spark lists on the driver (32): a path list handed to
+    // spark.read would be listed again in a Spark job
+    val dir = Files.createTempDirectory("graft_wh_40_months")
+    val months = (0 until 40).map(i => java.time.YearMonth.of(2021, 1).plusMonths(i.toLong))
+    def csv(minute: Int) = ("Timestamp,Bid,Ask" +: months.flatMap { m =>
+      Seq(3, 17).map(d => f"${m.atDay(d)} 10:$minute%02d:07.250000,1.10${d}%02d,1.10${d + 1}%02d")
+    }).mkString("", "\n", "\n")
+    val raw = dir.resolve("raw.csv"); Files.writeString(raw, csv(15))
+    val std = dir.resolve("std.csv"); Files.writeString(std, csv(14))
+    val wh = dir.resolve("warehouse").toString
+    val p = new Processor(spark, wh)
+    assert(p.updateData("EURUSD", raw.toString, std.toString).isRight)
+    def files(t: String): Int = {
+      def walk(f: java.io.File): Int =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
+        else if (f.getName.endsWith(".parquet")) 1 else 0
+      walk(new java.io.File(s"$wh/$t"))
+    }
+    assert(files("raw_spread_ticks") === 40 && files("ohlc_1m") === 40)
+    val plans: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "queryTicks" -> (() => p.queryTicks("EURUSD")),
+      "queryTicks ranged" -> (() =>
+        p.queryTicks("EURUSD", start = Some("2021-01-01"), end = Some("2024-04-30"))),
+      "queryOhlc 1m" -> (() => p.queryOhlc("EURUSD", "1m")),
+      "queryOhlc 1h ranged" -> (() =>
+        p.queryOhlc("EURUSD", "1h", start = Some("2021-02-01"), end = Some("2024-04-30"))))
+    val counts = plans.map { case (name, plan) => name -> jobsDuring(plan()) }
+    assert(counts.forall(_._2 == 0), counts.mkString(", "))
+    val scanned = spark.read.parquet(s"$wh/raw_spread_ticks")
+      .filter(col("instrument") === "EURUSD")
+      .select("timestamp", "bid", "ask").orderBy("timestamp").collect().toSeq
+    assert(scanned.size === 80)
+    assert(p.queryTicks("EURUSD").collect().toSeq === scanned)
+    assert(p.queryOhlc("EURUSD", "1m").collect().toSeq.map(_.getAs[java.sql.Timestamp]("timestamp")) ===
+      scanned.map(_.getAs[java.sql.Timestamp]("timestamp")).map { t =>
+        java.sql.Timestamp.from(t.toInstant.truncatedTo(java.time.temporal.ChronoUnit.MINUTES))
+      })
   }
 
   test("declared table schemas are exactly what the writers write") {

@@ -25,7 +25,7 @@ cd "$(dirname "$0")/.."
 RUNS="${1:-3}"
 ARCHIVE="${2:-}"
 export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 OUT=/tmp/bench_runs
 mkdir -p "$OUT"
 for i in $(seq 1 "$RUNS"); do

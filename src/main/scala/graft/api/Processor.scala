@@ -5,11 +5,11 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Bound
 import graft.ingest.TickIngest
 import graft.model._
 import graft.ohlc.{BarAgg, Ohlc, OhlcGenerator}
 import graft.query.QueryEngine
+import graft.storage.PrunedScan
 
 /** Public facade — the Spark-native equivalent of `ExnessDataProcessor`
   * (`processor.py:61-618`): input validation, ETL orchestration
@@ -126,8 +126,8 @@ final class Processor(spark: SparkSession, warehouse: String) {
         val stdDf = stdIn.ticks
         // months THIS batch touches, computed from the cached parse BEFORE
         // any write: it doubles as the empty-batch guard below
-        val touched = rawDf.select(date_format(col("timestamp"), "yyyyMM").as("m"))
-          .union(stdDf.select(date_format(col("timestamp"), "yyyyMM").as("m")))
+        val touched = rawDf.select(PrunedScan.monthOf(col("timestamp")).as("m"))
+          .union(stdDf.select(PrunedScan.monthOf(col("timestamp")).as("m")))
           .distinct().collect().map(_.getString(0)).toSeq.sorted
         // per-side empty guard: writing an empty frame to a FRESH warehouse
         // creates a _SUCCESS-only table dir that every later read of the
@@ -177,15 +177,12 @@ final class Processor(spark: SparkSession, warehouse: String) {
         _.filter(_.files.nonEmpty).map(_.label)) match {
       case Some(Nil) => return Nil // proven layout, no stored months
       case Some(months) =>
-        val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMM")
-        val start = java.time.YearMonth.parse(months.min, fmt)
         val last = java.time.YearMonth.now(java.time.ZoneOffset.UTC)
         val have = months.toSet
-        return Iterator.iterate(start)(_.plusMonths(1))
+        return Iterator.iterate(PrunedScan.yearMonth(months.min))(_.plusMonths(1))
           .takeWhile(!_.isAfter(last))
-          .filterNot(m => have(m.format(fmt)))
-          .map(m => graft.storage.PrunedScan.pad(m.getYear, 4) + "-" +
-            graft.storage.PrunedScan.pad(m.getMonthValue, 2))
+          .filterNot(m => have(PrunedScan.monthLabel(m.getYear, m.getMonthValue)))
+          .map(m => PrunedScan.pad(m.getYear, 4) + "-" + PrunedScan.pad(m.getMonthValue, 2))
           .toSeq
       case None => () // unproven layout: scan below
     }
@@ -205,12 +202,11 @@ final class Processor(spark: SparkSession, warehouse: String) {
         java.time.LocalDate.now(java.time.ZoneOffset.UTC).withDayOfMonth(1).toString)
       .collect()
       .map(_.getDate(0).toLocalDate)
-    gaps.map(d => graft.storage.PrunedScan.pad(d.getYear, 4) + "-" +
-      graft.storage.PrunedScan.pad(d.getMonthValue, 2)).toSeq
+    gaps.map(d => PrunedScan.pad(d.getYear, 4) + "-" + PrunedScan.pad(d.getMonthValue, 2)).toSeq
   }
 
   /** `f` over the months of `table` (of `pair`, or of every instrument)
-    * from the storage walk ([[graft.storage.PrunedScan.months]]): ZERO
+    * from the storage walk ([[PrunedScan.months]]): ZERO
     * Spark jobs (r16). The partition directory names ARE ground truth —
     * the writers derive `yyyymm` from each row's timestamp — and a month
     * directory with no data files holds no rows (zero-row part files
@@ -220,8 +216,8 @@ final class Processor(spark: SparkSession, warehouse: String) {
     * instead.
     */
   private def storedMonths[A](table: String, pair: Option[String])(
-      f: Seq[graft.storage.PrunedScan.Month] => A): Option[A] =
-    try graft.storage.PrunedScan.months(spark.sessionState.newHadoopConf(),
+      f: Seq[PrunedScan.Month] => A): Option[A] =
+    try PrunedScan.months(spark.sessionState.newHadoopConf(),
         new org.apache.hadoop.fs.Path(s"$warehouse/$table"), pair).map(f)
     catch { case scala.util.control.NonFatal(_) => None }
 
@@ -238,6 +234,14 @@ final class Processor(spark: SparkSession, warehouse: String) {
 
   /** Tick range scan (`query_ticks`, `clickhouse_query_engine.py:66-132`),
     * in timestamp order.
+    *
+    * The rows come from the warehouse's one read
+    * ([[PrunedScan.readMonths]]): months outside the date range are cut by
+    * name, and each month's `_manifest` prunes its files on the range, a
+    * price band (`bidRange`/`askRange`, the bid/ask stats) and `zeroSpread`
+    * (`WHERE bid = ask`: a file whose ask range sits wholly above its bid
+    * range holds no such row), the exact filters re-applied over what is
+    * read (`docs/CLICKHOUSE_USER_GUIDE.md:450-454` workloads).
     *
     * The order comes from the storage layout where it is proven: each month
     * one timestamp-sorted file whose `_manifest` carries the sort-key
@@ -260,26 +264,20 @@ final class Processor(spark: SparkSession, warehouse: String) {
     val p = validatePair(pair)
     require(Enums.Variants.contains(variant), s"Invalid variant: $variant")
     validateRange(start, end)
-    // a price band (docs/CLICKHOUSE_USER_GUIDE.md:450-454 workload) prunes
-    // FILES through the sidecars' bid/ask stats (r17), not just row
-    // groups — the exact filter is re-applied inside the pruned read.
-    // zeroSpread (same guide section's `WHERE bid = ask` workload, r18)
-    // prunes on bid/ask range OVERLAP: a file whose ask range sits
-    // wholly above its bid range provably holds no zero-spread row.
     val bands =
       bidRange.toSeq.map { case (lo, hi) => ("bid", lo, hi) } ++
       askRange.toSeq.map { case (lo, hi) => ("ask", lo, hi) }
-    val pairs = if (zeroSpread) Seq(("bid", "ask")) else Nil
-    val df = TickIngest.readTicksPruned(spark, warehouse, variant, Some(p),
-      start.map(_ + " 00:00:00"), end.map(_ + " 23:59:59.999999"), bands,
-      pairs)
+    val df = TickIngest.readTicks(spark, warehouse, variant, Some(p),
+      start.map(_ + " 00:00:00"), end.map(_ + " 23:59:59.999999"), bands = bands,
+      pairs = if (zeroSpread) Seq(("bid", "ask")) else Nil)
     val ordered = df.select("timestamp", "bid", "ask").orderBy("timestamp")
     limit.map(ordered.limit).getOrElse(ordered)
   }
 
   /** OHLC query with on-demand resampling
     * (`query_ohlc`, `clickhouse_query_engine.py:134-277`), in timestamp
-    * order. As in [[queryTicks]], a proven layout serves the order: 1m
+    * order. The stored 1m bars come from [[ohlcFrom]], the warehouse's one
+    * read as in [[queryTicks]], and a proven layout serves the order: 1m
     * bars are one scan of the month files in month order, and a resample
     * aggregates inside each month file and sorts each file's bars, with no
     * exchange, when no bar spans two files (checked on the recorded
@@ -362,7 +360,6 @@ final class Processor(spark: SparkSession, warehouse: String) {
     // month without a fresh, timestamp-keyed sidecar drops its TABLE to
     // the scan fallback below — per table, so one stale sidecar never
     // forces the whole call onto the data.
-    import graft.storage.PrunedScan
     def usToTs(us: Long): Timestamp = {
       val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
       t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
@@ -375,8 +372,8 @@ final class Processor(spark: SparkSession, warehouse: String) {
       ("standard_ticks",
         () => TickIngest.readTicks(spark, warehouse, "standard", Some(p))),
       ("ohlc_1m",
-        () => PrunedScan.readTable(spark, s"$warehouse/ohlc_1m",
-          OhlcGenerator.TableSchema).filter(col("instrument") === p)))
+        () => PrunedScan.readMonths(spark, s"$warehouse/ohlc_1m", OhlcGenerator.TableSchema,
+          Some(p))))
       .filter { case (t, _) => tableExists(t) }
     val meta: Map[String, (Long, Option[Timestamp], Option[Timestamp])] =
       readers.flatMap { case (t, _) =>
@@ -417,8 +414,7 @@ final class Processor(spark: SparkSession, warehouse: String) {
     }.getOrElse {
       // unproven layout: the distinct scan stays the truth
       Processor.listingDataScans.incrementAndGet()
-      graft.storage.PrunedScan.readTable(spark, s"$warehouse/raw_spread_ticks",
-          TickIngest.TableSchema)
+      TickIngest.readTicks(spark, warehouse, "raw_spread")
         .select("instrument").distinct().orderBy("instrument")
         .collect().map(_.getString(0)).toSeq
     }
@@ -459,6 +455,8 @@ final class Processor(spark: SparkSession, warehouse: String) {
   /** Keyset pagination over TICKS (`query_ticks_paginated`,
     * `clickhouse_query_engine.py:390-472`): timestamp cursor (strictly
     * after), optional inclusive date bounds, reference default page size.
+    * Each page re-plans from its own cursor through [[ticksFrom]], so
+    * already-paged months are never listed again.
     */
   def queryTicksPage(
       pair: String,
@@ -475,31 +473,33 @@ final class Processor(spark: SparkSession, warehouse: String) {
       ticksFrom(p, variant, start, end), "timestamp", Nil, cursor, pageSize)
   }
 
-  /** Cursor-aware ticks scan factory for keyset pagination: the page's
-    * cursor TIGHTENS the pruned read's lower bound (months and files below
-    * the cursor are never listed/planned), formatted losslessly in the
-    * session zone so [[graft.storage.PrunedScan.sessionInstant]] round-trips
-    * it exactly. The read's inclusive `>=` bound is a superset of the
-    * strict `>` the pager re-applies — correct by construction.
+  /** The tick scan factory of the tick pager and batch iterator: `p`'s
+    * ticks in the inclusive `start`..`end` date bounds, from the cursor on
+    * ([[prunedLowerBound]]), through the warehouse's one read.
     */
   private[graft] def ticksFrom(
       p: String,
       variant: String,
       start: Option[String],
       end: Option[String]): Option[Timestamp] => DataFrame = { cursor =>
-    TickIngest.readTicksPruned(spark, warehouse, variant, Some(p),
+    TickIngest.readTicks(spark, warehouse, variant, Some(p),
         prunedLowerBound(start, cursor), end.map(_ + " 23:59:59.999999"))
       .select("timestamp", "bid", "ask")
   }
 
-  /** The pruned read's wall-clock LOWER bound for a paged scan, shared by
-    * the tick and OHLC cursor factories (r18 review — the r17 locale bug
-    * had to be fixed in two copies of this block): the page's cursor
-    * TIGHTENS (never widens) the caller's start date. The cursor instant
-    * is formatted losslessly in the session zone with an explicit
-    * Locale.ROOT formatter (the default FORMAT locale's DecimalStyle can
-    * emit non-ASCII digits [[graft.storage.PrunedScan.parseWallClock]]
-    * cannot parse); fixed-format timestamps order lexicographically, and
+  /** The wall-clock LOWER bound of a paged read, shared by the tick and
+    * OHLC scan factories: the page's cursor TIGHTENS (never widens) the
+    * caller's start date, so months and files before the cursor are never
+    * listed or planned — re-scan-per-page is exactly what the reference's
+    * keyset pagination exists to avoid (`clickhouse_query_engine.py:
+    * 390-423`). The cursor instant is formatted losslessly in the session
+    * zone with an explicit Locale.ROOT formatter (the default FORMAT
+    * locale's DecimalStyle can emit non-ASCII digits the read cannot
+    * parse). The read casts it back in the session zone, which gives the
+    * cursor itself or, for a wall clock a fall-back transition repeats, its
+    * earlier instant, and its month cut keeps the one-day transition slack:
+    * the read's inclusive `>=` is a superset of the strict `> cursor` the
+    * pager re-applies. Fixed-format timestamps order lexicographically, and
     * a fraction suffix on an otherwise-equal prefix only moves the bound
     * later, so `max` is exact.
     */
@@ -533,81 +533,19 @@ final class Processor(spark: SparkSession, warehouse: String) {
       ticksFrom(p, variant, start, end), "timestamp", Nil, pageSize, maxBatches)
   }
 
-  /** The one pruned ohlc_1m read, shared by [[queryOhlc]], the pager and
-    * the batch iterator: bars of `p` in the inclusive `start`..`end` date
-    * bounds, in the reference's 27-column order
-    * (clickhouse_manager.py:196-224). Only `p`'s months are listed, ranged
-    * or not. Regenerate refreshes each rewritten month's `_manifest`
-    * (keyed on timestamp), so month partitions outside the range are
-    * dropped BY NAME on the driver and each surviving month is zone-mapped
-    * through its sidecar — the same [[graft.storage.PrunedScan]] path as
-    * the tick reads.
-    *
-    * With a cursor in hand (keyset pagination), month partitions strictly
-    * before the cursor's month are dropped too, so a page at the tail of a
-    * deep table lists and plans only the tail months' files — re-scan-per-
-    * page is exactly what the reference's keyset pagination exists to
-    * avoid (`clickhouse_query_engine.py:390-423`). Composition as in
-    * [[ticksFrom]]: the cursor TIGHTENS (never widens) the pruned lower
-    * bound, the fixed-format wall-clock strings order lexicographically so
-    * `max` is exact, and the strict `> cursor` the pager re-applies makes
-    * the read's inclusive `>=` a superset by construction. The cursor
-    * instant maps to its yyyymm label in the SESSION zone — the same zone
-    * `date_format(..., "yyyyMM")` used at write time; zones with
-    * transitions get a one-day slack on the cut
-    * ([[graft.storage.PrunedScan.monthOfLo]]).
-    *
-    * Result-identical to the plain partitioned read: the caller's date
-    * bounds and their `yyyymm` partition predicates are applied on every
-    * branch, so a listing/sidecar problem falls back to a read that still
-    * prunes months (slower, never wrong).
+  /** The OHLC scan factory of [[queryOhlc]], the pager and the batch
+    * iterator: `p`'s stored 1m bars in the inclusive `start`..`end` date
+    * bounds, from the cursor on ([[prunedLowerBound]]), through the
+    * warehouse's one read ([[PrunedScan.readMonths]]), in the reference's
+    * 27-column order (`clickhouse_manager.py:196-224`).
     */
   private[graft] def ohlcFrom(
       p: String,
       start: Option[String],
       end: Option[String]): Option[Timestamp] => DataFrame = { cursor =>
-    import graft.storage.PrunedScan
-    import org.apache.hadoop.fs.Path
-    val root = s"$warehouse/ohlc_1m"
-    val lo = prunedLowerBound(start, cursor)
-    val hi = end.map(_ + " 23:59:59.999999")
-    def exact(df: DataFrame): DataFrame = {
-      // the cursor's own bound is NOT applied here (the pager re-applies
-      // the strict `>` — under an ambiguous fall-back wall clock the
-      // inclusive cast could land an hour late and lose rows); the date
-      // bounds are the caller's inclusive contract. The timestamp bounds
-      // are bound literals (pushed to Parquet, read by the generated
-      // filter at run time); the yyyymm partition predicates prune on the
-      // driver and never reach generated code
-      val s1 = start.fold(df)(s => df.filter(
-        col("timestamp") >= Bound.timestamp(s + " 00:00:00") &&
-          col("yyyymm") >= date_format(lit(s).cast("timestamp"), "yyyyMM")))
-      end.fold(s1)(e => s1.filter(
-        col("timestamp") <= Bound.timestamp(e + " 23:59:59.999999") &&
-          col("yyyymm") <= date_format(lit(e).cast("timestamp"), "yyyyMM")))
-    }
-    // partition columns come back at the end of the schema; restore the
-    // reference's 27-column order
-    def read(files: Seq[PrunedScan.MonthFile]) = exact(
-      PrunedScan.readTable(spark, root, OhlcGenerator.TableSchema, files)
-        .filter(col("instrument") === p))
+    PrunedScan.readMonths(spark, s"$warehouse/ohlc_1m", OhlcGenerator.TableSchema, Some(p),
+        prunedLowerBound(start, cursor), end.map(_ + " 23:59:59.999999"))
       .select(OhlcGenerator.Columns.map(col): _*)
-    def plain() = read(Nil)
-    // an unranged read lists only this instrument's months and prunes no
-    // file: there is no key bound (the sidecars still prove its order)
-    val bounds =
-      if (lo.isEmpty && hi.isEmpty) Nil
-      else Seq(("timestamp",
-        PrunedScan.sessionInstant(spark, lo.getOrElse("1900-01-01")),
-        PrunedScan.sessionInstant(spark, hi.getOrElse("9999-01-01"))))
-    PrunedScan.monthPartitionedFiles(
-      spark.sessionState.newHadoopConf(), new Path(root), Some(p),
-      lo.map(PrunedScan.monthOfLo(spark, _)),
-      hi.map(PrunedScan.monthOfHi(spark, _)), bounds) match {
-      case None => plain()
-      case Some(Nil) => plain().filter(lit(false)) // schema-exact empty
-      case Some(paths) => read(paths)
-    }
   }
 
   /** Keyset pagination over OHLC (`query_ohlc_paginated`,

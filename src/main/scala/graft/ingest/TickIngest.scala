@@ -8,7 +8,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.Bound
 import graft.storage.PrunedScan
 
 /** Tick ingestion (reference `downloader.py` + `tick_loader.py` +
@@ -20,6 +19,11 @@ import graft.storage.PrunedScan
   * decompressed *distributedly* via `binaryFiles` + ZipInputStream — one
   * task per archive, no driver-side staging — and CSVs with an explicit
   * schema (nothing inferred, `tick_loader.py:61-63`).
+  *
+  * The tick tables are written and read through `graft.storage`
+  * ([[PrunedScan.writeMonths]], [[PrunedScan.readMonths]]): this object
+  * declares their schema and names the table of a variant ([[readTicks]]),
+  * and owns no layout rule of its own.
   */
 object TickIngest {
 
@@ -31,8 +35,8 @@ object TickIngest {
   /** Schema of the tick tables [[writeTicks]] writes (`raw_spread_ticks`,
     * `standard_ticks`): the data columns, then the partition columns —
     * declared once, as the reference declares its tables at bootstrap
-    * (`clickhouse_manager.py:110-224`). Reads pass it to `spark.read`
-    * ([[graft.storage.PrunedScan.readTable]]) instead of re-inferring it
+    * (`clickhouse_manager.py:110-224`). Reads pass it to
+    * [[graft.storage.PrunedScan.readMonths]] instead of re-inferring it
     * from a footer. `yyyymm` is INT, the type partition inference gives
     * the written label.
     */
@@ -281,11 +285,11 @@ object TickIngest {
     } finally deduped.unpersist()
   }
 
-  /** Read a stored tick table, with `yyyymm` partition-pruning predicates
-    * derived from the requested timestamp range — the engine-side analogue
-    * of the reference's reliance on `PARTITION BY toYYYYMM` pruning
-    * (SURVEY.md §4 row 1: Catalyst cannot infer yyyymm bounds from
-    * timestamp bounds, so the API layer injects them).
+  /** The stored ticks of one variant: the warehouse's one read
+    * ([[PrunedScan.readMonths]]) of its `${variant}_ticks` table, with the
+    * rows of `instrument` in the inclusive wall-clock `start`..`end`
+    * bounds, within `months` (every month when empty), inside the price
+    * `bands` and with equal `pairs` columns.
     */
   def readTicks(
       spark: SparkSession,
@@ -293,86 +297,11 @@ object TickIngest {
       variant: String,
       instrument: Option[String] = None,
       start: Option[String] = None,
-      end: Option[String] = None
-  ): DataFrame = {
-    var df = PrunedScan.readTable(spark, s"$warehouse/${variant}_ticks", TableSchema)
-    instrument.foreach(i => df = df.filter(col("instrument") === i.toUpperCase(java.util.Locale.ROOT)))
-    // the timestamp bounds are bound literals (pushed to Parquet, read by
-    // the generated filter at run time); the yyyymm partition predicates
-    // prune on the driver and never reach generated code
-    start.foreach { s =>
-      df = df.filter(col("timestamp") >= Bound.timestamp(s) &&
-        col("yyyymm") >= date_format(lit(s).cast("timestamp"), "yyyyMM"))
-    }
-    end.foreach { e =>
-      df = df.filter(col("timestamp") <= Bound.timestamp(e) &&
-        col("yyyymm") <= date_format(lit(e).cast("timestamp"), "yyyyMM"))
-    }
-    df
-  }
-
-  /** [[readTicks]] with zone-map FILE skipping on top of its partition
-    * pruning: month partitions outside the requested range are dropped by
-    * NAME on the driver (never listed), and within each surviving month
-    * the `_manifest` sidecar ([[graft.storage.PrunedScan.monthPartitionedFiles]])
-    * selects only the files whose timestamp range can intersect the
-    * predicate — the Spark-native equivalent of the reference's sparse
-    * primary index ORDER BY (instrument, timestamp)
-    * (`docs/DATABASE_SCHEMA.md:759-764`): a narrow range over a deep
-    * month touches O(range) files, not O(files-in-month).
-    *
-    * Result-identical to [[readTicks]] (the same exact filters are
-    * re-applied; ForexPipelineSpec pins equality): a month without a
-    * fresh sidecar reads all its files, and any listing error falls back
-    * to [[readTicks]] wholesale — slower, never wrong.
-    */
-  def readTicksPruned(
-      spark: SparkSession,
-      warehouse: String,
-      variant: String,
-      instrument: Option[String] = None,
-      start: Option[String] = None,
       end: Option[String] = None,
-      extraBounds: Seq[(String, Double, Double)] = Nil,
-      overlapPairs: Seq[(String, String)] = Nil
-  ): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = s"$warehouse/${variant}_ticks"
-    def exactExtra(df: DataFrame): DataFrame = {
-      val banded = extraBounds.foldLeft(df) {
-        case (d, (c, lo, hi)) => d.filter(col(c) >= Bound(lo) && col(c) <= Bound(hi))
-      }
-      // the equality the overlap pruning is a necessary condition for
-      // (r18: zero-spread `bid = ask`) — always re-applied exactly
-      overlapPairs.foldLeft(banded) {
-        case (d, (a, b)) => d.filter(col(a) === col(b))
-      }
-    }
-    def fallback() =
-      exactExtra(readTicks(spark, warehouse, variant, instrument, start, end))
-    // month-name bounds mirror readTicks' injected yyyymm predicates; the
-    // zone-map bounds widen open ends to sentinels outside any tick data
-    // so a one-sided range still prunes on the bounded side. extraBounds
-    // (r17: bid/ask price bands) prune files through the sidecars'
-    // secondary stats and are re-applied exactly below, so a sidecar
-    // without them is slower, never wrong.
-    val files = PrunedScan.monthPartitionedFiles(
-      spark.sessionState.newHadoopConf(), new Path(root), instrument,
-      start.map(PrunedScan.monthOfLo(spark, _)),
-      end.map(PrunedScan.monthOfHi(spark, _)),
-      ("timestamp",
-        PrunedScan.sessionInstant(spark, start.getOrElse("1900-01-01")),
-        PrunedScan.sessionInstant(spark, end.getOrElse("9999-01-01"))) +: extraBounds,
-      overlapPairs)
-    files match {
-      case None => fallback()
-      case Some(Nil) => fallback().filter(lit(false)) // schema-exact empty
-      case Some(paths) =>
-        var df = PrunedScan.readTable(spark, root, TableSchema, paths)
-        instrument.foreach(i => df = df.filter(col("instrument") === i.toUpperCase(java.util.Locale.ROOT)))
-        start.foreach(s => df = df.filter(col("timestamp") >= Bound.timestamp(s)))
-        end.foreach(e => df = df.filter(col("timestamp") <= Bound.timestamp(e)))
-        exactExtra(df)
-    }
-  }
+      months: Seq[String] = Nil,
+      bands: Seq[(String, Double, Double)] = Nil,
+      pairs: Seq[(String, String)] = Nil
+  ): DataFrame =
+    PrunedScan.readMonths(spark, s"$warehouse/${variant}_ticks", TableSchema, instrument,
+      start, end, months, bands, pairs)
 }

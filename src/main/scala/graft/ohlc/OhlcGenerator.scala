@@ -36,8 +36,8 @@ object OhlcGenerator {
   /** Schema of the `ohlc_1m` table [[regenerate]] writes: the data columns
     * of [[Columns]] in order, then the partition columns — declared once,
     * as the reference declares the table at bootstrap
-    * (`clickhouse_manager.py:196-224`). Reads pass it to `spark.read`
-    * ([[graft.storage.PrunedScan.readTable]]) instead of re-inferring it
+    * (`clickhouse_manager.py:196-224`). Reads pass it to
+    * [[graft.storage.PrunedScan.readMonths]] instead of re-inferring it
     * from a footer. `yyyymm` is INT, the type partition inference gives
     * the written label.
     */
@@ -168,8 +168,7 @@ object OhlcGenerator {
   private[graft] def monthSpanSeconds(months: Seq[String]): Long =
     if (months.isEmpty) 0L
     else {
-      val yms = months.map(m =>
-        java.time.YearMonth.parse(m.take(4) + "-" + m.drop(4)))
+      val yms = months.map(PrunedScan.yearMonth)
       val lo = yms.min.atDay(1).atStartOfDay(java.time.ZoneOffset.UTC)
       val hi = yms.max.plusMonths(1).atDay(1)
         .atStartOfDay(java.time.ZoneOffset.UTC)
@@ -206,13 +205,9 @@ object OhlcGenerator {
       instrument: String,
       months: Seq[String] = Nil
   ): Long = {
-    def prevMonth(m: String): String =
-      java.time.YearMonth.parse(m.take(4) + "-" + m.drop(4)).minusMonths(1)
-        .toString.replace("-", "")
-    def monthFiltered(variant: String, keep: Seq[String]): DataFrame = {
-      var df = TickIngest.readTicks(spark, warehouse, variant, Some(instrument))
-      if (keep.nonEmpty) df = df.filter(col("yyyymm").isin(keep: _*))
-      df
+    def prevMonth(m: String): String = {
+      val p = PrunedScan.yearMonth(m).minusMonths(1)
+      PrunedScan.monthLabel(p.getYear, p.getMonthValue)
     }
     val stdMonths =
       if (months.isEmpty) Nil else (months ++ months.map(prevMonth)).distinct
@@ -235,7 +230,8 @@ object OhlcGenerator {
         AsofJoin.storedAsofDispatch(stats).fold(("plain", 86400L))(("bucketed", _))
     }
     val bars = enrichBars(Ohlc.ticksToOhlc1m(
-        monthFiltered("raw_spread", months), monthFiltered("standard", stdMonths),
+        TickIngest.readTicks(spark, warehouse, "raw_spread", Some(instrument), months = months),
+        TickIngest.readTicks(spark, warehouse, "standard", Some(instrument), months = stdMonths),
         asofMode, asofWidth)).drop("instrument")
     // the carry-in widening can produce bars for the lookback months too —
     // they are NOT part of this rebuild; only the requested partitions move.
@@ -244,7 +240,7 @@ object OhlcGenerator {
     val root = s"$warehouse/ohlc_1m"
     PrunedScan.writeMonths(
       if (months.isEmpty) bars
-      else bars.filter(date_format(col("timestamp"), "yyyyMM").isin(months: _*)),
+      else bars.filter(PrunedScan.monthOf(col("timestamp")).isin(months: _*)),
       root, instrument, wholeInstrument = months.isEmpty, statsCols = Nil)
     // the bar count (mirrors `clickhouse_ohlc_generator.py:199-210`) from
     // the sidecars the write just made fresh; the scan only when one of
@@ -252,8 +248,6 @@ object OhlcGenerator {
     PrunedScan.monthPartitionedCoverage(spark.sessionState.newHadoopConf(),
         new org.apache.hadoop.fs.Path(root), "timestamp", Some(instrument))
       .map(_._1)
-      .getOrElse(PrunedScan.readTable(spark, root, TableSchema)
-        .filter(col("instrument") === instrument.toUpperCase(java.util.Locale.ROOT))
-        .count())
+      .getOrElse(PrunedScan.readMonths(spark, root, TableSchema, Some(instrument)).count())
   }
 }

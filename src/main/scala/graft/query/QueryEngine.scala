@@ -67,12 +67,14 @@ object QueryEngine {
     * The scan comes from a cursor-aware factory: `dfFor(cursor)` is
     * invoked once per page with the page's effective cursor, so a caller
     * backed by a month-partitioned, zone-mapped warehouse table can plan
-    * ONLY the files at or after the cursor (see
-    * `Processor.queryOhlcPage`) — a page at the tail of a deep table then
-    * lists O(tail months), not O(all files), per page. The strict
-    * `time > cursor` filter is ALWAYS re-applied here, so the factory
-    * only needs to return a superset of the qualifying rows; `dfFor(None)`
-    * must return the full scan. A fixed frame pages as `_ => df`.
+    * ONLY the files at or after the cursor (`Processor.ticksFrom` and
+    * `Processor.ohlcFrom`, each one call of the warehouse read
+    * `PrunedScan.readMonths` from the cursor on) — a page at the tail of
+    * a deep table then lists O(tail months), not O(all files), per page.
+    * The strict `time > cursor` filter is ALWAYS re-applied here, so the
+    * factory only needs to return a superset of the qualifying rows;
+    * `dfFor(None)` must return the full scan. A fixed frame pages as
+    * `_ => df`.
     *
     * The cursor is a plain timestamp (reference parity, models.py
     * CursorResult) with a strictly-greater next-page filter, so a page may

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.Bound
+
 /** Zone-map file skipping over [[Manifest]] sidecars.
   *
   * Parquet gives row-group pruning for free, but only AFTER a task has
@@ -291,14 +293,14 @@ object PrunedScan {
     * the session zone, and a bound shifted off it by hours would wrongly
     * skip files on any non-UTC session.
     */
-  def sessionInstant(spark: SparkSession, t: String): java.time.Instant =
+  private def sessionInstant(spark: SparkSession, t: String): java.time.Instant =
     parseWallClock(t)
       .atZone(java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone))
       .toInstant
 
   /** Wall-clock yyyymm of a bound literal — the month-partition label the
-    * warehouse writers derive via `date_format(..., "yyyyMM")` in the
-    * session zone — for use as a by-name month-cut LOWER bound
+    * warehouse writers derive via [[monthOf]] in the session zone — for
+    * use as a by-name month-cut LOWER bound
     * (r17 advice): the month labels were written from each row's
     * wall-clock in the session zone, and under a BACKWARD offset
     * transition that crosses a month boundary a row with instant above
@@ -310,14 +312,14 @@ object PrunedScan {
     * usual. Fixed-offset zones (UTC) have wall clocks monotone in event
     * time — no slack: the literal's own wall-clock month.
     */
-  def monthOfLo(spark: SparkSession, t: String): String =
+  private[graft] def monthOfLo(spark: SparkSession, t: String): String =
     monthMargined(spark, t, -1)
 
   /** The month-cut UPPER bound — the mirror of
     * [[monthOfLo]] for FORWARD transitions (an instant below the bound
     * can carry a wall-clock label in the NEXT month).
     */
-  def monthOfHi(spark: SparkSession, t: String): String =
+  private[graft] def monthOfHi(spark: SparkSession, t: String): String =
     monthMargined(spark, t, 1)
 
   private def monthMargined(
@@ -346,6 +348,15 @@ object PrunedScan {
     */
   private[graft] def monthLabel(year: Int, month: Int): String =
     pad(year, 4) + pad(month, 2)
+
+  /** The month label of a timestamp column: the `yyyymm` partition value
+    * the writers give a row, its wall-clock month in the session zone.
+    */
+  private[graft] def monthOf(ts: Column): Column = date_format(ts, "yyyyMM")
+
+  /** The calendar month a month label names (the inverse of [[monthLabel]]). */
+  private[graft] def yearMonth(label: String): java.time.YearMonth =
+    java.time.YearMonth.of(label.take(4).toInt, label.drop(4).toInt)
 
   private[graft] def pad(n: Int, width: Int): String = {
     val s = n.toString
@@ -481,7 +492,7 @@ object PrunedScan {
       wholeInstrument: Boolean,
       statsCols: Seq[String]): Unit = {
     val spark = frame.sparkSession
-    frame.withColumn("yyyymm", date_format(col("timestamp"), "yyyyMM"))
+    frame.withColumn("yyyymm", monthOf(col("timestamp")))
       .repartition(col("yyyymm"))
       .sortWithinPartitions("yyyymm", "timestamp")
       .write
@@ -502,27 +513,24 @@ object PrunedScan {
   }
 
   /** Data files of a [[months]] walk for a key range: month partitions
-    * outside [loMonth, hiMonth] are dropped BY NAME on the driver (never
-    * listed — zero-padded yyyymm orders lexicographically), and each
-    * surviving month's `_manifest` is read once: it zone-maps the month's
-    * files through [[prunedNames]] on the conjunction of `bounds` and
-    * `overlapPairs`, and it proves which files may be read in key order
-    * ([[MonthFile.sorted]]). A month without a usable sidecar contributes
-    * all its data files, unproven. None on an unproven or unlistable
-    * layout — the caller falls back to the plain partitioned read.
+    * whose label fails `keep` are dropped BY NAME on the driver (never
+    * listed), and each surviving month's `_manifest` is read once: it
+    * zone-maps the month's files through [[prunedNames]] on the conjunction
+    * of `bounds` and `overlapPairs`, and it proves which files may be read
+    * in key order ([[MonthFile.sorted]]). A month without a usable sidecar
+    * contributes all its data files, unproven. None on an unproven or
+    * unlistable layout.
     */
-  def monthPartitionedFiles(
+  private[graft] def monthPartitionedFiles(
       conf: org.apache.hadoop.conf.Configuration,
       root: HPath,
       instrument: Option[String],
-      loMonth: Option[String],
-      hiMonth: Option[String],
+      keep: String => Boolean,
       bounds: Seq[(String, Any, Any)],
       overlapPairs: Seq[(String, String)] = Nil): Option[Seq[MonthFile]] =
     try {
       val fs = root.getFileSystem(conf)
-      months(conf, root, instrument,
-          m => loMonth.forall(_ <= m) && hiMonth.forall(m <= _)).map(_.flatMap { m =>
+      months(conf, root, instrument, keep).map(_.flatMap { m =>
         val es = Manifest.entries(fs, m.dir, m.files)
         val kept = es.flatMap(prunedNames(_, bounds, java.time.ZoneOffset.UTC, overlapPairs))
         m.files.filter(f => kept.forall(_(f.getPath.getName))).map { f =>
@@ -538,45 +546,91 @@ object PrunedScan {
       })
     } catch { case NonFatal(_) => None }
 
-  /** Read an engine-written warehouse table through its declared `schema`
-    * (`TickIngest.TableSchema`, `OhlcGenerator.TableSchema`): nothing is
-    * inferred, so planning the read opens no footer and launches no Spark
-    * job. With `files` (e.g. a [[monthPartitionedFiles]] result) only
-    * those are read; empty `files` reads the whole table, every data file
-    * of a proven layout ([[months]]). Either way the scan is planned over
-    * a [[MonthFileIndex]] of the statuses the walk listed, so no path is
-    * listed again, whatever the file count. A table without a proven
-    * month (empty, or a foreign layout) is read from its `yyyymm=`
-    * directories, or from `root`, as Spark finds it.
+  /** The one read of an instrument/yyyymm warehouse table (the tick
+    * variants and `ohlc_1m`): the rows of `instrument` (of every
+    * instrument when None) whose `timestamp` lies in the inclusive bounds
+    * `lo`..`hi`, whose month is one of `months` (any month when empty),
+    * whose `bands` columns lie in their inclusive ranges and whose `pairs`
+    * columns are equal (the zero-spread `bid = ask`). The bounds are
+    * wall-clock literals, "yyyy-MM-dd[ HH:mm:ss[.ffffff]]", read in the
+    * session zone as `lit(t).cast("timestamp")` reads them. The columns
+    * are those of the declared `schema` (`TickIngest.TableSchema`,
+    * `OhlcGenerator.TableSchema`) as `spark.read` gives them: all nullable,
+    * the partition columns last. Nothing is inferred, so planning the read
+    * opens no footer and launches no Spark job. This is the reference's
+    * read rule: ClickHouse prunes the `PARTITION BY toYYYYMM(timestamp)`
+    * parts, then uses the `ORDER BY (instrument, timestamp)` index
+    * (`clickhouse_query_engine.py:66-277`).
+    *
+    * One month cut serves every branch: the labels from [[monthOfLo]] of
+    * `lo` to [[monthOfHi]] of `hi`, within `months`. The walk ([[months]])
+    * lists only `instrument`'s months inside the cut, and then
+    *   - files left after each month's zone map ([[monthPartitionedFiles]]:
+    *     the timestamp range, `bands` and `pairs`) are planned over a
+    *     [[MonthFileIndex]] of the statuses the walk listed, so nothing is
+    *     listed again, whatever the file count;
+    *   - no file left is an empty frame of the declared columns, which
+    *     reads nothing;
+    *   - an unproven layout (stray files, foreign partitioning) is read
+    *     from its `yyyymm=` directories, or from `root`, as Spark finds it,
+    *     and the cut prunes its partitions as a predicate.
+    * The exact filters are applied on every branch, so the stats decide
+    * what is read, never what is returned. The bounds are bound literals
+    * (pushed to Parquet, read by the generated filter at run time, so a
+    * read of one shape compiles once); the month predicates prune on the
+    * driver and never reach generated code.
     */
-  def readTable(
+  def readMonths(
       spark: SparkSession,
       root: String,
       schema: StructType,
-      files: Seq[MonthFile] = Nil): DataFrame = {
+      instrument: Option[String],
+      lo: Option[String] = None,
+      hi: Option[String] = None,
+      months: Seq[String] = Nil,
+      bands: Seq[(String, Double, Double)] = Nil,
+      pairs: Seq[(String, String)] = Nil): DataFrame = {
+    val loMonth = lo.map(monthOfLo(spark, _))
+    val hiMonth = hi.map(monthOfHi(spark, _))
+    def cut(m: String): Boolean = loMonth.forall(_ <= m) && hiMonth.forall(m <= _) &&
+      (months.isEmpty || months.contains(m))
+    // open ends widen to sentinels outside any stored data, so a one-sided
+    // range still prunes on its bounded side; an unranged read prunes no
+    // file by time (the sidecars still prove its order)
+    val range =
+      if (lo.isEmpty && hi.isEmpty) Nil
+      else Seq(("timestamp", sessionInstant(spark, lo.getOrElse("1900-01-01")),
+        sessionInstant(spark, hi.getOrElse("9999-01-01"))))
     val conf = spark.sessionState.newHadoopConf()
-    val listed =
-      if (files.nonEmpty) files
-      else months(conf, new HPath(root), None).toSeq.flatten.flatMap { m =>
-        m.files.map(MonthFile(_, m.instrument, m.label, None))
-      }
-    if (listed.isEmpty) {
-      val glob = new HPath(s"$root/instrument=*/yyyymm=*")
-      val dirs = Option(glob.getFileSystem(conf).globStatus(glob)).toSeq.flatten
-        .filter(_.isDirectory).map(_.getPath)
-      val paths = if (dirs.isEmpty) Seq(new HPath(root)) else dirs
-      spark.read.schema(schema).option("basePath", root).parquet(paths.map(_.toString): _*)
-    } else {
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-      import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-      // the columns spark.read gives a declared schema: all nullable, the
-      // partition columns last
-      val (parts, data) = schema.fields.map(_.copy(nullable = true))
-        .partition(f => f.name == "instrument" || f.name == "yyyymm")
-      val relation = HadoopFsRelation(new MonthFileIndex(listed, StructType(parts)),
-        StructType(parts), StructType(data), None, new ParquetFileFormat, Map.empty)(spark)
-      org.apache.spark.sql.graft.bridge.ofRows(spark, LogicalRelation(relation))
+    val (parts, data) = schema.fields.map(_.copy(nullable = true))
+      .partition(f => f.name == "instrument" || f.name == "yyyymm")
+    val read = monthPartitionedFiles(conf, new HPath(root), instrument, cut,
+        range ++ bands, pairs) match {
+      case Some(Nil) =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row], StructType(data ++ parts))
+      case Some(files) =>
+        import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+        import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+        val relation = HadoopFsRelation(new MonthFileIndex(files, StructType(parts)),
+          StructType(parts), StructType(data), None, new ParquetFileFormat, Map.empty)(spark)
+        org.apache.spark.sql.graft.bridge.ofRows(spark, LogicalRelation(relation))
+      case None =>
+        val glob = new HPath(s"$root/instrument=*/yyyymm=*")
+        val dirs = Option(glob.getFileSystem(conf).globStatus(glob)).toSeq.flatten
+          .filter(_.isDirectory).map(_.getPath)
+        val paths = if (dirs.isEmpty) Seq(new HPath(root)) else dirs
+        spark.read.schema(schema).option("basePath", root).parquet(paths.map(_.toString): _*)
     }
+    val month = col("yyyymm")
+    val exact = instrument.map(i => col("instrument") === i.toUpperCase(java.util.Locale.ROOT)) ++
+      lo.map(t => col("timestamp") >= Bound.timestamp(t)) ++
+      hi.map(t => col("timestamp") <= Bound.timestamp(t)) ++
+      loMonth.map(m => month >= m.toInt) ++
+      hiMonth.map(m => month <= m.toInt) ++
+      Option.when(months.nonEmpty)(month.isin(months.map(_.toInt): _*)) ++
+      bands.map { case (c, l, h) => col(c) >= Bound(l) && col(c) <= Bound(h) } ++
+      pairs.map { case (a, b) => col(a) === col(b) }
+    exact.foldLeft(read)(_.filter(_))
   }
 
   /** Coverage of a month-partitioned warehouse table — (total rows,

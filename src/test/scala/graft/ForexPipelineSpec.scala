@@ -954,7 +954,7 @@ class ForexPipelineSpec extends SparkSpec {
       "regenerate launched a probe job despite stored-count dispatch")
     assert(plans.asScala.exists(_.contains("__b#")), "regenerate ran no bucketed as-of")
     val stored = graft.storage.PrunedScan
-      .readTable(spark, s"$wh/ohlc_1m", OhlcGenerator.TableSchema)
+      .readMonths(spark, s"$wh/ohlc_1m", OhlcGenerator.TableSchema, Some("EURUSD"))
       .filter(col("instrument") === "EURUSD")
       .select(OhlcGenerator.Columns.map(col): _*)
       .collect().map(_.toString).sorted

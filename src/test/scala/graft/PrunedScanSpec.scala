@@ -16,6 +16,16 @@ class PrunedScanSpec extends SparkSpec {
     new java.io.File(out).listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
 
+  /** The reference twin of the warehouse read: every file of EURUSD's raw
+    * ticks through the declared schema, with the exact filters alone. */
+  private def plainTicks(wh: String, start: Option[String], end: Option[String]) = {
+    var df = spark.read.schema(graft.ingest.TickIngest.TableSchema)
+      .parquet(s"$wh/raw_spread_ticks").filter(col("instrument") === "EURUSD")
+    start.foreach(s => df = df.filter(col("timestamp") >= lit(s).cast("timestamp")))
+    end.foreach(e => df = df.filter(col("timestamp") <= lit(e).cast("timestamp")))
+    df
+  }
+
   test("long key: pruned read equals full scan + filter, and actually skips files") {
     val out = Files.createTempDirectory("pruned").toString + "/data"
     RangeWriter.writeSorted(events, out, Seq("event_id"), numFiles = 8)
@@ -120,7 +130,7 @@ class PrunedScanSpec extends SparkSpec {
     assert(pruned.count() == df.filter(col("k").isNotNull).count())
   }
 
-  test("readTicksPruned: month pruning by name + zone-map file skipping, readTicks-identical") {
+  test("readTicks: month pruning by name + zone-map file skipping, identical to the plain read") {
     import graft.ingest.TickIngest
     val wh = Files.createTempDirectory("pruned_wh").toString
     val base = s"$wh/raw_spread_ticks/instrument=EURUSD"
@@ -141,8 +151,8 @@ class PrunedScanSpec extends SparkSpec {
       df.select(col("timestamp"), col("bid"), col("ask"))
         .collect().map(_.toString).sorted.toSeq
     def both(start: Option[String], end: Option[String]) = (
-      TickIngest.readTicksPruned(spark, wh, "raw_spread", Some("EURUSD"), start, end),
-      TickIngest.readTicks(spark, wh, "raw_spread", Some("EURUSD"), start, end))
+      TickIngest.readTicks(spark, wh, "raw_spread", Some("EURUSD"), start, end),
+      plainTicks(wh, start, end))
 
     // full read (no bounds): identical
     val (pAll, fAll) = both(None, None)
@@ -226,10 +236,9 @@ class PrunedScanSpec extends SparkSpec {
         df.select("timestamp", "bid", "ask").collect().map(_.toString).sorted.toSeq
       val start = Some("2024-01-06 09:00:00") // Tokyo wall-clock = 00:00Z
       val end = Some("2024-01-06 20:00:00")
-      val pruned = TickIngest.readTicksPruned(spark, wh, "raw_spread",
+      val pruned = TickIngest.readTicks(spark, wh, "raw_spread",
         Some("EURUSD"), start, end)
-      val plain = TickIngest.readTicks(spark, wh, "raw_spread",
-        Some("EURUSD"), start, end)
+      val plain = plainTicks(wh, start, end)
       assert(rows(pruned) == rows(plain) && rows(pruned).nonEmpty,
         "pruned read must equal the plain read under a non-UTC session zone")
       val janFiles = new java.io.File(s"$base/yyyymm=202401").listFiles()
@@ -380,7 +389,7 @@ class PrunedScanSpec extends SparkSpec {
     val proven = Files.createTempDirectory("mpf_proven").toString
     rows.coalesce(1).write.parquet(s"$proven/instrument=EURUSD/yyyymm=202401")
     assert(PrunedScan.monthPartitionedFiles(conf, new Path(proven),
-      Some("GBPUSD"), None, None, Seq(("timestamp", lo, hi))) === Some(Nil))
+      Some("GBPUSD"), _ => true, Seq(("timestamp", lo, hi))) === Some(Nil))
 
     // foreign layout (yyyymm only, instrument as a data column): a missing
     // instrument= dir must NOT claim proven-empty — None routes the caller
@@ -388,7 +397,7 @@ class PrunedScanSpec extends SparkSpec {
     val foreign = Files.createTempDirectory("mpf_foreign").toString
     rows.coalesce(1).write.parquet(s"$foreign/yyyymm=202401")
     assert(PrunedScan.monthPartitionedFiles(conf, new Path(foreign),
-      Some("EURUSD"), None, None, Seq(("timestamp", lo, hi))).isEmpty)
+      Some("EURUSD"), _ => true, Seq(("timestamp", lo, hi))).isEmpty)
   }
 
   test("layout proofs: lowercase instrument dirs and impossible month labels fail the proof") {

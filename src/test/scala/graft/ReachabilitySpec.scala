@@ -193,6 +193,18 @@ class ReachabilitySpec extends AnyFunSuite {
       s"warehouse layout spelled out outside graft/storage:\n  ${leaks.mkString("\n  ")}")
   }
 
+  test("only graft/storage reads the warehouse layout") {
+    // the month cut, the session-zone key bounds, the file walk and the
+    // month label are decided in PrunedScan alone: the API, ingest, OHLC
+    // and query code hand PrunedScan.readMonths their bounds
+    val leaks = namedIn(p =>
+        Seq("graft/api/", "graft/ingest/", "graft/ohlc/", "graft/query/").exists(p.startsWith),
+      Seq("monthPartitionedFiles", "monthOfLo", "monthOfHi", "sessionInstant", "readTable(",
+        "\"yyyyMM\"", "col(\"yyyymm\")"))
+    assert(leaks.isEmpty,
+      s"warehouse reads spelled out outside graft/storage:\n  ${leaks.mkString("\n  ")}")
+  }
+
   test("only graft/storage writes the warehouse layout") {
     // the overwrite scope, the codec and the sidecar refresh are decided in
     // PrunedScan.writeMonths alone: ingest and OHLC hand it a frame

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.Processor
 import graft.ingest.TickIngest
+import graft.ohlc.OhlcGenerator
 import graft.storage.PrunedScan
 
 /** Regression pins for the round-17 advisor findings. */
@@ -99,6 +100,31 @@ class ReviewFix18Spec extends SparkSpec {
       assert(page.pageSize === 1 && !page.hasMore,
         s"lost the post-fallback October-labeled row: ${page.rows.collect().mkString}")
       assert(page.rows.head().getAs[Double]("bid") === 3.0)
+    }
+  }
+
+  test("fall-back across a month boundary: range reads keep the rows the transition relabels") {
+    // the same St_Johns transition: the 02:32Z and 02:45Z ticks lie after a
+    // 2009-11-01 start, yet carry OCTOBER labels (wall clock Oct 31 23:xx).
+    // Tick and OHLC reads must cut months with the one-day slack, never at
+    // the start's own month, or their bars and ticks are dropped
+    withSessionZone("America/St_Johns") {
+      val wh = Files.createTempDirectory("graft_r18_dst_range").toString
+      val ticks = Seq("2009-10-15T12:00:00Z", "2009-11-01T02:30:30Z", "2009-11-01T02:32:00Z",
+          "2009-11-01T02:45:00Z", "2009-11-02T12:00:00Z").zipWithIndex.map { case (t, i) =>
+        (Timestamp.from(java.time.Instant.parse(t)), 1.0 + i, 1.1 + i)
+      }.toDF("timestamp", "bid", "ask")
+      TickIngest.writeTicks(ticks, wh, "EURUSD", "raw_spread")
+      TickIngest.writeTicks(ticks, wh, "EURUSD", "standard")
+      OhlcGenerator.regenerate(spark, wh, "EURUSD")
+      assert(spark.read.parquet(s"$wh/ohlc_1m").filter(col("yyyymm") === "200910").count() === 3)
+      val p = new Processor(spark, wh)
+      val start = Some("2009-11-01")
+      assert(p.queryTicks("EURUSD", start = start).count() === 4)
+      assert(p.queryOhlc("EURUSD", "1m", start = start).count() === 4)
+      assert(p.queryOhlcPage("EURUSD", None, start = start).pageSize === 4)
+      assert(TickIngest.readTicks(spark, wh, "raw_spread", Some("EURUSD"),
+        Some("2009-11-01 00:00:00"), None).count() === 4)
     }
   }
 }

@@ -164,6 +164,39 @@ class WarehouseSchemaSpec extends SparkSpec {
       c -> OhlcGenerator.TableSchema(c).dataType))
   }
 
+  test("a range before the first stored month reads no file and keeps the declared columns") {
+    val (p, wh) = freshWarehouse()
+    val (s, e) = (Some("2023-01-01"), Some("2023-12-31"))
+    val ticks = p.queryTicks("EURUSD", start = s, end = e)
+    val bars = p.queryOhlc("EURUSD", "1m", start = s, end = e)
+    val read = TickIngest.readTicks(spark, wh, "raw_spread", Some("EURUSD"),
+      s.map(_ + " 00:00:00"), e.map(_ + " 23:59:59.999999"))
+    for ((name, df) <- Seq("queryTicks" -> ticks, "queryOhlc" -> bars, "readTicks" -> read)) {
+      assert(df.collect().isEmpty, name)
+      assert(df.inputFiles.isEmpty, s"$name planned ${df.inputFiles.mkString(", ")}")
+    }
+    assert(typed(ticks.schema) === Seq("timestamp", "bid", "ask").map(c =>
+      c -> TickIngest.TableSchema(c).dataType))
+    assert(bars.schema.fieldNames.toSeq === OhlcGenerator.Columns)
+    assert(typed(bars.schema) === OhlcGenerator.Columns.map(c =>
+      c -> OhlcGenerator.TableSchema(c).dataType))
+    // the read's own columns are the declared table's, as spark.read gives them
+    assert(read.schema === StructType(TickIngest.TableSchema.map(_.copy(nullable = true))))
+  }
+
+  test("a one-instrument read lists only that instrument's files") {
+    val (p, wh) = freshWarehouse()
+    val dir = Files.createTempDirectory("graft_wh_gbpusd")
+    val raw = dir.resolve("raw.csv"); Files.writeString(raw, rawCsv)
+    val std = dir.resolve("std.csv"); Files.writeString(std, stdCsv)
+    assert(p.updateData("GBPUSD", raw.toString, std.toString).isRight)
+    val read = TickIngest.readTicks(spark, wh, "raw_spread", Some("EURUSD"))
+    assert(read.inputFiles.nonEmpty &&
+      read.inputFiles.forall(_.contains("instrument=EURUSD")),
+      s"planned: ${read.inputFiles.mkString(", ")}")
+    assert(read.count() === 5)
+  }
+
   test("a ranged OHLC page on an unproven layout still plans only in-range month files") {
     val (p, wh) = freshWarehouse()
     def feb(q: Processor) = q.queryOhlcPage("EURUSD", cursor = None, pageSize = 10,

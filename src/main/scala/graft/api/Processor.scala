@@ -279,10 +279,11 @@ final class Processor(spark: SparkSession, warehouse: String) {
     * order. The stored 1m bars come from [[ohlcFrom]], the warehouse's one
     * read as in [[queryTicks]], and a proven layout serves the order: 1m
     * bars are one scan of the month files in month order, and a resample
-    * aggregates inside each month file and sorts each file's bars, with no
-    * exchange, when no bar spans two files (checked on the recorded
-    * ranges, so a 4h bar across a New York month cut is caught). Anything
-    * else falls back to Spark's aggregate exchange and global sort.
+    * is one Complete-mode hash aggregate inside each month file that sorts
+    * each file's bars, with no exchange, when no bar spans two files
+    * (checked on the recorded ranges, so a 4h bar across a New York month
+    * cut is caught). Anything else falls back to Spark's aggregate exchange
+    * and global sort.
     */
   def queryOhlc(
       pair: String,
@@ -322,28 +323,29 @@ final class Processor(spark: SparkSession, warehouse: String) {
       max(col("ny_hour")).as("ny_hour"),
       max(col("london_hour")).as("london_hour")) ++
       flags.map(f => max(col(f)).as(f))
-    val firstBar = col("bar.open_w0")
-    val agged = bars1m
+    val bar = col("bar")
+    val firstBar = bar.getField("open_w0")
+    val n = bar.getField("n").cast("int")
+    val range = bar.getField("high") - bar.getField("low")
+    val body = abs(bar.getField("close") - bar.getField("open"))
+    def per(x: Column, by: Column): Column = when(by > 0, x / by)
+    // one aggregate and one select: each further Dataset step re-analyses
+    // the whole plan, so the ratios read the bar struct here
+    bars1m
       .groupBy(col("instrument"),
         Ohlc.bucketStart(col("timestamp"), minutes).as("timestamp"))
       .agg(aggs.head, aggs.tail: _*)
-      .select((Seq(col("instrument"), col("timestamp")) ++ BarAgg.ohlc(col("bar")) ++
+      .select((Seq(col("instrument"), col("timestamp")) ++ BarAgg.ohlc(bar) ++
         Seq(col("raw_spread_avg"), col("standard_spread_avg"),
-          col("bar.n").cast("int").as("tick_count_raw_spread"), col("tick_count_standard"),
+          n.as("tick_count_raw_spread"), col("tick_count_standard"),
           col("ny_hour"), col("london_hour"),
           OhlcGenerator.nySession(OhlcGenerator.nyHour(firstBar)).as("ny_session"),
           OhlcGenerator.londonSession(OhlcGenerator.londonHour(firstBar)).as("london_session")) ++
-        flags.map(col)): _*)
-    // one select, not four chained withColumn calls: each withColumn
-    // re-analyses the whole 27-column plan
-    val range = col("high") - col("low")
-    val body = abs(col("close") - col("open"))
-    def per(x: Column, by: String): Column = when(col(by) > 0, x / col(by))
-    agged.select(col("*"),
-      per(range, "raw_spread_avg").as("range_per_spread"),
-      per(range, "tick_count_raw_spread").as("range_per_tick"),
-      per(body, "raw_spread_avg").as("body_per_spread"),
-      per(body, "tick_count_raw_spread").as("body_per_tick"))
+        flags.map(col) ++
+        Seq(per(range, col("raw_spread_avg")).as("range_per_spread"),
+          per(range, n).as("range_per_tick"),
+          per(body, col("raw_spread_avg")).as("body_per_spread"),
+          per(body, n).as("body_per_tick"))): _*)
   }
 
   /** Coverage statistics (`get_coverage`, `clickhouse_query_engine.py:

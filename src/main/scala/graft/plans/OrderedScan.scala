@@ -6,12 +6,13 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.Complete
 import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution._
-import org.apache.spark.sql.execution.aggregate.{AggUtils, HashAggregateExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD, FileSourceStrategy, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
@@ -34,10 +35,12 @@ import graft.storage.MonthFileIndex
   *     That check runs on the recorded instants, so it holds in any
   *     session time zone: a bar that straddles two files fails it.
   * The plan is then the scan in file order ([[OrderedScanExec]]: one
-  * partition per file), an Aggregate planned inside those partitions, and
-  * a partition-local sort only where the order is not already known. A
+  * partition per file), an Aggregate as one Complete-mode hash aggregate
+  * inside those partitions (no partial/final pair, no exchange), and a
+  * partition-local sort only where the order is not already known. A
   * limit under the answer becomes a `CollectLimit`, which stops reading
-  * once it has its rows. Any other input gets Spark's own plan.
+  * once it has its rows. Any other input, and an aggregate whose buffer
+  * Spark cannot hash, gets Spark's own plan.
   */
 object OrderedScanStrategy extends SparkStrategy {
 
@@ -63,8 +66,6 @@ object OrderedScanStrategy extends SparkStrategy {
         ts <- relation.output.find(_.name == sortKey)
         if monotone(expr, ts) && rising(expr, ts, files, strictly = grouped)
         planned <- physical(child, index, ts.name, files.map(_._1))
-        // an exchange anywhere below would lose the file order
-        if !planned.exists(_.requiredChildDistribution.exists(_ != UnspecifiedDistribution))
       } yield
         if (SortOrder.orderingSatisfies(planned.outputOrdering, Seq(order))) planned
         else SortExec(Seq(order), global = false, planned)
@@ -143,9 +144,10 @@ object OrderedScanStrategy extends SparkStrategy {
     } catch { case NonFatal(_) => false }
 
   /** The physical plan of `plan` over the proven read: its scan in file
-    * order, an Aggregate inside the file partitions, Project/Filter nodes
-    * above it as they are. An aggregate Spark plans other than as a hash
-    * aggregate keeps its exchange, and the caller then declines the plan.
+    * order, an Aggregate as one Complete-mode hash aggregate inside the
+    * file partitions, Project/Filter nodes above it as they are. None for
+    * a distinct aggregate or one whose buffer Spark cannot hash (Spark's
+    * own `Aggregate.supportsHashAggregate` rule).
     */
   private def physical(
       plan: LogicalPlan,
@@ -159,7 +161,8 @@ object OrderedScanStrategy extends SparkStrategy {
       }).filter(_.exists(_.isInstanceOf[OrderedScanExec]))
     case Project(list, c) => physical(c, index, key, files).map(ProjectExec(list, _))
     case Filter(cond, c) => physical(c, index, key, files).map(FilterExec(cond, _))
-    case PhysicalAggregation(grouping, aggs, result, c) if !aggs.exists(_.isDistinct) =>
+    case PhysicalAggregation(grouping, aggs, result, c) if !aggs.exists(_.isDistinct) &&
+        Aggregate.supportsHashAggregate(aggs.flatMap(_.aggregateFunction.aggBufferAttributes), grouping) =>
       // the grouping keys normalised as Spark's Aggregation strategy does
       val keys = grouping.map { e =>
         org.apache.spark.sql.graft.bridge.normalizeFloats(e) match {
@@ -167,12 +170,11 @@ object OrderedScanStrategy extends SparkStrategy {
           case other => Alias(other, e.name)(exprId = e.exprId)
         }
       }
-      // no group spans two files, so the final aggregate needs no exchange
-      physical(c, index, key, files).map(AggUtils.planAggregateWithoutDistinct(keys, aggs, result, _)
-        .head.transform {
-          case h: HashAggregateExec if h.requiredChildDistributionExpressions.nonEmpty =>
-            h.copy(requiredChildDistributionExpressions = None)
-        })
+      // no group spans two files, so each file's groups are whole in its
+      // partition: one Complete-mode aggregate, no partial/final pair
+      val complete = aggs.map(_.copy(mode = Complete))
+      physical(c, index, key, files).map(HashAggregateExec(None, isStreaming = false, None, keys,
+        complete, complete.map(_.resultAttribute), 0, result, _))
     case _ => None
   }
 }

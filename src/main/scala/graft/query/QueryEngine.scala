@@ -106,9 +106,7 @@ object QueryEngine {
     val ordered = filtered.orderBy((time +: tiebreak).map(col): _*)
     val collected = ordered.limit(pageSize + 1).collect()
     def frame(rows: Seq[org.apache.spark.sql.Row]): DataFrame =
-      spark.createDataFrame(
-        new java.util.ArrayList(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        df.schema)
+      org.apache.spark.sql.graft.bridge.localFrame(spark, df.schema, rows)
     def ts(r: org.apache.spark.sql.Row): Timestamp = r.getAs[Timestamp](time)
 
     if (collected.length <= pageSize) {

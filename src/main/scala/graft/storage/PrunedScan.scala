@@ -574,8 +574,10 @@ object PrunedScan {
     *   - an unproven layout (stray files, foreign partitioning) is read
     *     from its `yyyymm=` directories, or from `root`, as Spark finds it,
     *     and the cut prunes its partitions as a predicate.
-    * The exact filters are applied on every branch, so the stats decide
-    * what is read, never what is returned. The bounds are bound literals
+    * The exact filters are applied on every branch as one conjunction in
+    * one `Filter` (chained filters would each re-analyse the growing
+    * plan), so the stats decide what is read, never what is returned.
+    * The bounds are bound literals
     * (pushed to Parquet, read by the generated filter at run time, so a
     * read of one shape compiles once); the month predicates prune on the
     * driver and never reach generated code.
@@ -630,7 +632,7 @@ object PrunedScan {
       Option.when(months.nonEmpty)(month.isin(months.map(_.toInt): _*)) ++
       bands.map { case (c, l, h) => col(c) >= Bound(l) && col(c) <= Bound(h) } ++
       pairs.map { case (a, b) => col(a) === col(b) }
-    exact.foldLeft(read)(_.filter(_))
+    exact.reduceOption(_ && _).fold(read)(read.filter)
   }
 
   /** Coverage of a month-partitioned warehouse table — (total rows,

@@ -23,6 +23,19 @@ object bridge {
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A frame of the driver-side `rows` of `schema`, as `createDataFrame`
+    * builds it (a local relation) but marked analysed: the relation is
+    * resolved as built, and each analyzer rule would otherwise map over
+    * every one of its rows.
+    */
+  def localFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row]): DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.graft.analyzed(
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation.fromExternalRows(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows)))
+
   /** Lineage cut for iterative algorithms: compile `df` to an RDD, mark it
     * for local checkpointing, and rewrap as a fresh [[LogicalRDD]] — like
     * `Dataset.localCheckpoint(eager = false)` but WITHOUT carrying the

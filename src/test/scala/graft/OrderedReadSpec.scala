@@ -9,11 +9,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.TestListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Complete
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.api.Processor
+import graft.ohlc.Ohlc
 import graft.plans.{OrderedScanExec, OrderedScanStrategy}
 import graft.query.QueryEngine
 
@@ -170,6 +175,15 @@ class OrderedReadSpec extends SparkSpec {
     assert(barBatches.nonEmpty)
   }
 
+  test("a page's rows frame runs no analyzer rule over its collected rows") {
+    val (p, _) = fixture
+    for (page <- Seq(p.queryTicksPage("EURUSD", pageSize = 500), p.queryOhlcPage("EURUSD", None, pageSize = 300))) {
+      val rules = page.rows.queryExecution.tracker.rules.keys
+      assert(rules.isEmpty, rules.mkString(", "))
+      assert(page.rows.collect().length === page.pageSize)
+    }
+  }
+
   test("a ranged tick or 1m read is one job and one scan; a resample or a page at most two jobs") {
     val (p, _) = fixture
     val oneJob: Seq[(String, () => Any)] = Seq(
@@ -193,6 +207,70 @@ class OrderedReadSpec extends SparkSpec {
       assert(!shuffled(plans) && ordered(plans), s"$name:\n${plans.mkString("\n")}")
       assert(jobs <= 2, s"$name ran $jobs jobs")
     }
+  }
+
+  test("each warehouse read applies its exact predicates as one Filter over the relation") {
+    val (p, _) = fixture
+    val cursor = Some(stamps(p.queryTicks("EURUSD", start = Some("2024-01-31"), end = Some("2024-01-31"))).head)
+    val reads: Seq[(String, DataFrame)] = Seq(
+      "ticks ranged, bidRange, zeroSpread" -> p.queryTicks("EURUSD", start = Some("2024-01-20"),
+        end = Some("2024-02-20"), bidRange = Some((1.06, 1.08)), zeroSpread = true),
+      "ohlcFrom ranged" -> p.ohlcFrom("EURUSD", Some("2024-01-25"), Some("2024-02-10"))(None),
+      "ohlc 1m ranged" -> p.queryOhlc("EURUSD", "1m", Some("2024-01-25"), Some("2024-02-10")),
+      "tick page factory" -> p.ticksFrom("EURUSD", "raw_spread", Some("2024-01-20"), Some("2024-02-20"))(cursor),
+      "ohlc page factory" -> p.ohlcFrom("EURUSD", None, Some("2024-02-20"))(cursor),
+      "ticks ranged, no month left" -> p.queryTicks("EURUSD", start = Some("2025-01-01"), end = Some("2025-01-31")))
+    for ((name, df) <- reads) {
+      val plan = df.queryExecution.analyzed
+      val filters = plan.collect { case f: Filter => f }
+      assert(filters.size === 1, s"$name:\n$plan")
+      assert(filters.head.child.isInstanceOf[LeafNode], s"$name:\n$plan")
+    }
+  }
+
+  test("an ordered resample is one Complete-mode aggregate over the ordered scan, with Spark's rows") {
+    val (p, _) = fixture
+    for (tf <- Seq("5m", "15m", "1h", "4h", "1d"); range <- Seq(None, Some(("2024-01-10", "2024-02-09")))) {
+      def read(): DataFrame = p.queryOhlc("EURUSD", tf, range.map(_._1), range.map(_._2))
+      val name = s"ohlc $tf ${range.getOrElse("unranged")}"
+      val (got, plans, _) = traced(rows(read()))
+      val plan = plans.find(_.exists(_.isInstanceOf[OrderedScanExec]))
+        .getOrElse(fail(s"$name was not served in storage order:\n${plans.mkString("\n")}"))
+      val aggs = plan.collect { case a: HashAggregateExec => a }
+      assert(aggs.size === 1, s"$name:\n$plan")
+      assert(aggs.head.aggregateExpressions.forall(_.mode == Complete), s"$name:\n$plan")
+      assert(aggs.head.exists(_.isInstanceOf[OrderedScanExec]), s"$name:\n$plan")
+      assert(plan.collect { case e: Exchange => e }.isEmpty, s"$name:\n$plan")
+      assert(got.nonEmpty, name)
+      assert(got === sparkPlanned(rows(read())), name)
+    }
+  }
+
+  test("an aggregate whose buffer Spark cannot hash gets Spark's plan and Spark's rows") {
+    val (p, _) = fixture
+    // a string max has a buffer no hash map can update in place
+    def read(): DataFrame = p.ohlcFrom("EURUSD", None, None)(None)
+      .groupBy(Ohlc.bucketStart(col("timestamp"), 60).as("bucket"))
+      .agg(max("ny_session").as("ny_session"))
+      .orderBy("bucket")
+    val (got, plans, _) = traced(rows(read()))
+    assert(!ordered(plans), plans.mkString("\n"))
+    assert(got.nonEmpty)
+    assert(got === sparkPlanned(rows(read())))
+  }
+
+  test("an ordered resample that falls back to sort-based aggregation returns the same rows") {
+    val (p, _) = fixture
+    def read(): Seq[Row] = rows(p.queryOhlc("EURUSD", "15m"))
+    val want = read()
+    // Spark's test hook: the hash map spills to its sorter every 400 rows
+    val fallback = "spark.sql.TungstenAggregate.testFallbackStartsAt"
+    spark.conf.set(fallback, "400, 400")
+    val (got, plans, _) = try traced(read()) finally spark.conf.unset(fallback)
+    assert(ordered(plans), plans.mkString("\n"))
+    val fellBack = plans.flatMap(_.collect { case a: HashAggregateExec => a.metrics("numTasksFallBacked").value })
+    assert(fellBack.sum > 0, plans.mkString("\n"))
+    assert(got === want)
   }
 
   /** The one data file of `table`'s month directory `month`. */

@@ -76,8 +76,15 @@ class ReadShapeCompileSpec extends SparkSpec {
         () => rows(p.queryOhlc("EURUSD", "1m", Some(s), Some(e))) },
       "queryOhlc 15m ranged" -> ranges.map { case (s, e) =>
         () => rows(p.queryOhlc("EURUSD", "15m", Some(s), Some(e))) },
+      "queryOhlc 1h ranged" -> ranges.map { case (s, e) =>
+        () => rows(p.queryOhlc("EURUSD", "1h", Some(s), Some(e))) },
+      "queryOhlc 1d" -> ranges.map { case (s, _) =>
+        () => rows(p.queryOhlc("EURUSD", "1d", Some(s))) },
       "queryTicksPage" -> tickCursors.map { c =>
         () => page(p.queryTicksPage("EURUSD", cursor = Some(c), pageSize = 50)) },
+      "queryTicksPage ranged" -> tickCursors.zip(ranges).map { case (c, (s, e)) =>
+        () => page(p.queryTicksPage("EURUSD", cursor = Some(c), pageSize = 50,
+          start = Some(s), end = Some(e))) },
       "queryOhlcPage" -> barCursors.map { c =>
         () => page(p.queryOhlcPage("EURUSD", Some(c), pageSize = 40)) })
     val perCall = shapes.map { case (name, calls) => name -> compiledPerCall(calls) }

@@ -4,6 +4,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Optional args: query names to run (default all), checked before
+    // Spark starts
+    val selected = SparkEntry.select(args.toSeq).map { case (n, q) => n -> q.build }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -85,13 +88,10 @@ object Bench {
     } catch {
       case _: Throwable => (Map.empty[String, Double], None, 0)
     }): @unchecked
-    // Optional args: query names to run (default all); SPARK_GRAFT_ITERS
-    // repeats each query and keeps the fastest run (profiling aid — the
-    // driver invokes with no args / no env, preserving the 1-shot contract).
+    // SPARK_GRAFT_ITERS repeats each query and keeps the fastest run
+    // (profiling aid — the driver invokes with no args / no env,
+    // preserving the 1-shot contract).
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "1").toInt
-    val selected =
-      if (args.nonEmpty) SparkEntry.queries.filter(kv => args.contains(kv._1))
-      else SparkEntry.queries
     // Warm up JIT + whole-stage-codegen compilation on the smallest SF so
     // the timed runs measure steady-state compute, not the first-call
     // compilation cost of each query's regex/window/join/decimal code paths.

@@ -1,168 +1,44 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.catalog.Tables
-import graft.operators.{AsofJoin, BloomJoin, Dedup, SkewJoin}
-import graft.ohlc.Ohlc
-import graft.query.QueryEngine
-import graft.text.{MinHash, TextFunctions => TF}
-import graft.vector.VectorFunctions
+import graft.suite._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (the §-ids are cited at each entry), plus the LLM-pipeline
-  * extension operators. Each entry has an equivalent DuckDB oracle in
-  * [[oracleSql]] unless the operator is not SQL-expressible, in which case
-  * the driver records a rows-only check.
-  *
-  * Determinism rules (SURVEY.md §5): every query ends in a total-order
-  * ORDER BY; open/close-style arg-aggregates carry composite tiebreaks;
-  * double sums go through DECIMAL(38,6) intermediates so Spark's unordered
-  * partial aggregation and DuckDB produce bit-identical doubles.
+/** Driver contract: the declared queries — one per implemented operator
+  * from SURVEY.md §2 (the §-ids are cited at each query), plus the
+  * LLM-pipeline extension operators — each with its DuckDB oracle. Every
+  * query is one [[graft.suite.Query]] in a family file under `graft/suite`;
+  * this object folds the families into the driver's maps.
   */
 object SparkEntry {
 
-  // ---- shared helpers -----------------------------------------------------
+  private lazy val catalogue: Seq[Query] = Query.catalogue(
+    TickOhlcQueries.queries, StreamingQueries.queries, RelationalQueries.queries,
+    AnalyticsQueries.queries, TextQueries.queries, DedupQueries.queries,
+    VectorQueries.queries, GraphQueries.queries, StorageSamplingQueries.queries)
 
-  /** Exact, order-independent sum of a double expression: round each value
-    * to DECIMAL(38,6) (same rounding in DuckDB), sum exactly, emit double.
-    * DuckDB equivalent: CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE).
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalogue.map(q => q.name -> q.build).toMap
+
+  /** DuckDB oracle for each query (ANSI-plus-DuckDB SQL over the same parquet
+    * tables).
     */
-  private def dsum(c: Column): Column =
-    sum(c.cast(DecimalType(38, 6))).cast("double")
+  def oracleSql: Map[String, String] =
+    catalogue.map(q => q.name -> q.oracle).toMap
 
-  /** Fixed-point log2(num/den)·1e6 as exact BIGINT — the cross-engine-safe
-    * log used wherever a compared column needs one. Moved to
-    * [[graft.text.CorpusOps.log2e6Sql]] (full construction notes there).
+  /** The declared queries that `names` names, or all of them when `names`
+    * is empty. Throws IllegalArgumentException listing every name that
+    * matches no declared query, so a mistyped name cannot pass as an empty
+    * selection.
     */
-  private def log2e6Sql(num: String, den: String): String =
-    graft.text.CorpusOps.log2e6Sql(num, den)
-
-  private def ev(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.table(s, dir, n)
-
-  /** Shared body of the q_asof_* family (purchases ← latest click
-    * at-or-before), parameterized by the as-of form under test. The body
-    * lives ONCE so a schema tweak changes every gated form together; all
-    * four entries share [[asofEventsOracleSql]].
-    */
-  private def asofEventsQuery(s: SparkSession, dir: String)(
-      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val e = ev(s, dir)
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select("user_id", "ts", "event_id", "value")
-    val clicks = e.filter(col("event_type") === "click")
-      .select("user_id", "ts", "event_id", "value")
-    join(purchases, clicks)
-      .withColumnRenamed("ts_c", "click_ts")
-      .withColumnRenamed("value_c", "click_value")
-      .withColumnRenamed("event_id_c", "click_event_id")
-      .orderBy("user_id", "ts", "event_id")
+  def select(names: Seq[String]): Map[String, Query] = {
+    val byName = catalogue.map(q => q.name -> q).toMap
+    val unknown = names.filterNot(byName.contains).distinct
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"no declared query is named: ${unknown.mkString(", ")}")
+    if (names.isEmpty) byName else byName.filter { case (n, _) => names.contains(n) }
   }
-
-  /** One DuckDB ASOF oracle for the whole q_asof_* family — every
-    * physical form must return byte-identical rows. */
-  private val asofEventsOracleSql: String =
-    """SELECT l.user_id, CAST(l.ts AS TIMESTAMP) AS ts, l.event_id, l.value,
-              CAST(r.ts AS TIMESTAMP) AS click_ts, r.value AS click_value,
-              r.event_id AS click_event_id
-       FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-       ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
-         ON l.user_id = r.user_id
-        AND CAST(l.ts AS TIMESTAMP) >= CAST(r.ts AS TIMESTAMP)
-       ORDER BY l.user_id, ts, l.event_id"""
-
-  /** Forex-shaped tick frames (instrument, timestamp, bid, ask) carved from
-    * `events`: purchase rows play Raw_Spread ticks, click rows Standard
-    * ticks (the q_asof_join pairing), instrument alternates by user parity.
-    * Prices are quantized to 1/64 (floor(value·64)/64 — value·64 is exact
-    * power-of-two scaling, so bid is a dyadic rational) and spreads cycle
-    * exactly 0.25/0.50/0.75 by event_id; every downstream sum/avg over
-    * them is therefore EXACT in IEEE double in any aggregation order —
-    * Spark's unordered partial aggregation and DuckDB's sequential avg
-    * produce bit-identical spread averages, which is what lets the full
-    * 27-column OHLC pipeline be hash-oracled without decimal detours.
-    */
-  private def tickFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val e = ev(s, dir)
-    def ticks(tpe: String) = e.filter(col("event_type") === tpe)
-      .select(
-        when(col("user_id") % 2 === 0, "EURUSD").otherwise("GBPUSD").as("instrument"),
-        col("ts").as("timestamp"),
-        (floor(col("value") * 64) / 64).as("bid"),
-        (floor(col("value") * 64) / 64 + lit(0.25) * (lit(1) + col("event_id") % 3)).as("ask"))
-    (ticks("purchase"), ticks("click"))
-  }
-
-  // ---- staged fixtures ------------------------------------------------
-
-  // Derived-layout fixtures built ONCE per (fixture, sf dir) via
-  // [[Stage.staged]], so the timed query bodies measure the pruned SCAN
-  // and not the fixture write (r17 verdict item 3). [[Bench]] calls
-  // [[stageFixtures]] before its calibration bracket; Verify simply
-  // builds on first use.
-
-  private def stagedZonemap(s: SparkSession, dir: String): String =
-    Stage.staged("zonemap", dir) { t =>
-      val src = ev(s, dir)
-        .filter(col("event_type") === "click")
-        .select("event_id", "ts", "user_id", "value")
-      graft.storage.RangeWriter.writeSorted(src, t, Seq("ts", "event_id"), numFiles = 12)
-      graft.storage.Manifest.write(s, t, "ts")
-    }
-
-  private def stagedZonemap2(s: SparkSession, dir: String): String =
-    Stage.staged("zonemap2", dir) { t =>
-      val src = ev(s, dir)
-        .filter(col("event_type") === "click")
-        .select("event_id", "ts", "user_id", "value")
-      graft.storage.RangeWriter.writeSorted(src, t, Seq("ts", "event_id"), numFiles = 12)
-      graft.storage.Manifest.write(s, t, "ts", extraCols = Seq("event_id"))
-    }
-
-  private def stagedZscan(s: SparkSession, dir: String): String =
-    Stage.staged("zscan", dir) { t =>
-      val src = ev(s, dir)
-        .filter(col("event_type") === "view")
-        .select("event_id", "ts", "user_id", "value")
-      graft.storage.RangeWriter.writeZOrdered(src, t, "user_id", "event_id",
-        bits = 10, numFiles = 12)
-    }
-
-  private def stagedPriceband(s: SparkSession, dir: String): String =
-    Stage.staged("priceband", dir) { tmp =>
-      val (raw, _) = tickFrames(s, dir)
-      graft.ingest.TickIngest.writeTicks(
-        raw.filter(col("instrument") === "EURUSD"), tmp, "EURUSD", "raw_spread")
-    }
-
-  private def stagedZeroSpread(s: SparkSession, dir: String): String =
-    Stage.staged("zerospread", dir) { tmp =>
-      val src = ev(s, dir)
-        .filter(col("event_type") === "purchase" && col("user_id") % 2 === 0)
-        .select(
-          col("ts").as("timestamp"),
-          (floor(col("value") * 64) / 64).as("bid"),
-          (floor(col("value") * 64) / 64
-            + lit(0.25) * (col("event_id") % 3)).as("ask"))
-      graft.ingest.TickIngest.writeTicks(src, tmp, "EURUSD", "raw_spread")
-    }
-
-  private def stagedBloomPoint(s: SparkSession, dir: String): String =
-    Stage.staged("bloompoint", dir) { t =>
-      // HASH-clustered layout (the bucketing shape): every file spans
-      // ~the full user_id range, so min/max zone maps prove nothing for
-      // a point predicate — the manifest's per-file bloom sketches do
-      val src = ev(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select("event_id", "ts", "user_id", "value")
-        .repartition(12, col("user_id"))
-      src.write.mode("overwrite").parquet(t)
-      graft.storage.Manifest.write(s, t, "ts",
-        bloomCols = Seq("user_id"), bloomExpected = 20000L, bloomFpp = 0.02)
-    }
 
   /** Build the staged fixtures for `dir` (idempotent, skip-if-staged).
     * `forQueries` narrows to the fixtures the named queries actually use
@@ -172,6235 +48,11 @@ object SparkEntry {
     */
   def stageFixtures(
       s: SparkSession, dir: String,
-      forQueries: Option[Set[String]] = None): Unit = {
-    def wanted(q: String) = forQueries.forall(_.contains(q))
-    if (wanted("q_pruned_scan")) stagedZonemap(s, dir)
-    if (wanted("q_pruned_scan_2col")) stagedZonemap2(s, dir)
-    if (wanted("q_zorder_scan")) stagedZscan(s, dir)
-    if (wanted("q_priceband")) stagedPriceband(s, dir)
-    if (wanted("q_zero_spread")) stagedZeroSpread(s, dir)
-    if (wanted("q_bloom_prune")) stagedBloomPoint(s, dir)
-    ()
-  }
+      forQueries: Option[Set[String]] = None): Unit =
+    catalogue.filter(q => forQueries.forall(_.contains(q.name)))
+      .flatMap(_.stage).foreach(_(s, dir))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing")(spark, "/root/testdata/sf0.001")
-
-  // ---- queries ------------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++ resampleQueries
-
-  private def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // P1+P2+P3+O1: projected, predicated, inclusive-range ordered scan.
-    // Range bounds go to Tables.events too so the ns-domain equivalents
-    // reach the Parquet scan (PushedFilters) below the ns→µs conversion.
-    "q_ticks_range" -> ((s, dir) =>
-      QueryEngine.rangeScan(
-        Tables.events(s, dir,
-          start = Some("2024-01-05 00:00:00"),
-          end = Some("2024-01-20 23:59:59.999999")),
-        time = "ts",
-        start = Some("2024-01-05 00:00:00"),
-        end = Some("2024-01-20 23:59:59.999999"),
-        eqFilters = Map("event_type" -> "purchase"),
-        projection = Seq("event_id", "ts", "user_id", "value"),
-        tiebreak = Seq("event_id")
-      )),
-
-    // P4+O3: keyset pagination page (strictly-after cursor, over-fetch trim)
-    "q_cursor_page" -> ((s, dir) =>
-      ev(s, dir)
-        .filter(col("ts") > lit("2024-01-15 12:00:00").cast("timestamp"))
-        .select("event_id", "ts", "value")
-        .orderBy(col("ts"), col("event_id"))
-        .limit(100)),
-
-    // O4: batch iterator (QueryEngine.batches) — drives keyset pagination
-    // to exhaustion and proves the pages tile the keyspace: the union of 8
-    // consecutive 500-row pages hash-equals the direct ordered scan's first
-    // 4000 rows. Page boundaries are ts-only cursors (reference parity,
-    // models.py CursorResult); events.ts is unique so the keyset is
-    // lossless. maxBatches bounds driver round-trips so the query's cost
-    // is flat across SF.
-    "q_batch_pages" -> ((s, dir) => {
-      val base = ev(s, dir)
-        .filter(col("ts") > lit("2024-01-10 00:00:00").cast("timestamp"))
-        .select("event_id", "ts", "value")
-      QueryEngine
-        .batches(base, "ts", Seq("event_id"), pageSize = 500, maxBatches = Some(8))
-        .reduce(_.unionByName(_))
-        .orderBy("ts", "event_id")
-    }),
-
-    // O2: ordered LIMIT/OFFSET
-    "q_limit_offset" -> ((s, dir) =>
-      ev(s, dir)
-        .select("event_id", "ts", "value")
-        .orderBy(col("ts"), col("event_id"))
-        .offset(100)
-        .limit(50)),
-
-    // O1/O2: top-k by value
-    "q_topk" -> ((s, dir) =>
-      ev(s, dir)
-        .select("event_id", "user_id", "value")
-        .orderBy(col("value").desc, col("event_id"))
-        .limit(20)),
-
-    // A1 (+W3): 1-minute OHLC bars with deterministic open/close tiebreak
-    "q_ohlc_1m" -> ((s, dir) =>
-      Ohlc
-        .bars(ev(s, dir), keys = Seq("event_type"), time = "ts",
-          value = "value", tiebreak = "event_id", minutes = 1)
-        .orderBy("event_type", "bar_ts")),
-
-    // A1 as an INCREMENTALLY MAINTAINED view: stored partial bars (80% of
-    // ticks) + one batch fold of the rest (ohlc.IncrementalOhlc: witness
-    // structs make open/close mergeable; touched bars via broadcast
-    // semi-join, history never re-aggregated) — must hash-equal the full
-    // recompute, which is exactly what the oracle runs
-    "q_ohlc_incremental" -> ((s, dir) => {
-      val all = ev(s, dir)
-      val isBatch = pmod(col("event_id"), lit(5)) === 0
-      val stored = graft.ohlc.IncrementalOhlc.partialBars(
-        all.filter(!isBatch), Seq("event_type"), "ts", "value", "event_id", 1)
-      val state = graft.ohlc.IncrementalOhlc.applyBatchPlan(
-        stored, all.filter(isBatch), Seq("event_type"), "ts", "value",
-        "event_id", 1)
-      graft.ohlc.IncrementalOhlc.finalBars(state)
-        .orderBy("event_type", "bar_ts")
-    }),
-
-    // A1 through the fused bar kernel (ohlc.BarAgg, one fixed-width
-    // buffer), which Ohlc.bars runs: the same bars as q_ohlc_1m
-    "q_ohlc_fused" -> ((s, dir) =>
-      Ohlc
-        .bars(ev(s, dir), keys = Seq("event_type"), time = "ts",
-          value = "value", tiebreak = "event_id", minutes = 1)
-        .orderBy("event_type", "bar_ts")),
-
-    // §2.9 STREAMING, driver-gated: the SAME 1m bars produced by a real
-    // Structured Streaming run (file source → watermark → append-mode
-    // stateful agg → parquet sink, AvailableNow trigger; sentinel rows
-    // flush the trailing windows past the watermark) — shares q_ohlc_1m's
-    // oracle SQL verbatim, so batch and streaming can't drift
-    "q_stream_ohlc_1m" -> ((s, dir) =>
-      graft.streaming.StreamingGate.ohlc1mAvailableNow(
-        s, ev(s, dir), keyCol = "event_type", time = "ts",
-        value = "value", tiebreak = "event_id")),
-
-    // §2.9 + J1: the flagship ASOF LEFT join as a STREAM-STREAM join —
-    // Spark has no native one — via StreamingAsof's tagged-union
-    // flatMapGroupsWithState merge (watermark finalization, event-time
-    // timeout flush). Same purchases←clicks shape as q_asof_*, and the
-    // SAME DuckDB ASOF oracle verbatim: the streaming path must be
-    // row-identical to every batch physical form.
-    "q_stream_asof" -> ((s, dir) => {
-      val e = ev(s, dir)
-      def side(tpe: String) = e.filter(col("event_type") === tpe)
-        .select(col("user_id").as("k"), col("ts").as("t"),
-          col("value").as("v"), col("event_id").as("ord"))
-      graft.streaming.StreamingGate
-        .asofAvailableNow(s, side("purchase"), side("click"))
-        .select(col("k").as("user_id"), col("t").as("ts"),
-          col("ord").as("event_id"), element_at(col("v"), 1).as("value"),
-          col("rt").as("click_ts"), element_at(col("rv"), 1).as("click_value"),
-          col("rord").as("click_event_id"))
-        .orderBy("user_id", "ts", "event_id")
-    }),
-
-    // §2.9 + A1+A2+J1+F1+F2: the CENTERPIECE 27-column enriched-OHLC
-    // pipeline run end-to-end as a streaming medallion chain — tagged tick
-    // streams → stream-stream ASOF (StreamingAsof) → silver → windowed 1m
-    // bars + per-micro-batch calendar enrichment (foreachBatch) → gold.
-    // Shares q_ohlc_enriched's oracle verbatim: the streaming chain must
-    // reproduce all 27 columns hash-identically, flags included.
-    "q_stream_ohlc_enriched" -> ((s, dir) => {
-      val (raw, std) = tickFrames(s, dir)
-      graft.streaming.StreamingGate.ohlcEnrichedAvailableNow(
-        s, raw, std, instruments = Seq("EURUSD", "GBPUSD"))
-    }),
-
-    // A2+P5: resample 1m bars to 15m + NULL-safe derived ratios
-    "q_ohlc_resample_15m" -> ((s, dir) => {
-      val bars1m = Ohlc.bars(ev(s, dir), Seq("event_type"), "ts", "value", "event_id", 1)
-      Ohlc.withDerivedMetrics(
-          Ohlc.resample(bars1m, Seq("event_type"), "bar_ts", 15))
-        .orderBy("event_type", "bar_ts")
-    }),
-
-    // A1+A2+J1+F1+F2 end-to-end: the reference's CENTERPIECE output — the
-    // full 27-column session/holiday-enriched 1m OHLC
-    // (clickhouse_ohlc_generator.py:150-196 tick→bar pipeline, 217-329
-    // enrichment; session_detector.py:74-188), as ONE Spark plan:
-    // ASOF join → minute agg → tz/session labels → calendar flag joins.
-    // Tick frames are carved from `events` (purchase = Raw_Spread ticks,
-    // click = Standard ticks; see tickFrames on why the prices are dyadic).
-    // The oracle replays every stage in DuckDB — the ASOF join, the bar
-    // aggregation, the tz hours/labels, and the interval/holiday joins
-    // against the SAME calendar lookup tables graft.Verify dumps
-    // (q_calendar_intervals / q_calendar_holidays), so all 27 columns
-    // including every is_* flag are hash-checked.
-    "q_ohlc_enriched" -> ((s, dir) => {
-      val (raw, std) = tickFrames(s, dir)
-      graft.ohlc.OhlcGenerator.generate(raw, std)
-        .orderBy("instrument", "timestamp")
-    }),
-
-    // S8 lookup-table sinks, dumped as verify outputs so the
-    // q_ohlc_enriched oracle can join against the exact interval/holiday
-    // frames the enrichment uses (the judge-endorsed fixture path: the
-    // oracle then machine-checks the JOIN+flag logic over them). Range is
-    // a superset of any testdata SF's event span — intervals/holidays on
-    // dates no bar lands on never join, so a superset is harmless.
-    "q_calendar_intervals" -> ((s, dir) =>
-      graft.calendar.TradingCalendar.sessionIntervalsDf(
-          s, graft.calendar.ExchangeRegistry.all,
-          java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2030, 12, 31))
-        .orderBy("exchange", "utc_date", "open_ts")),
-    "q_calendar_holidays" -> ((s, dir) =>
-      graft.calendar.TradingCalendar.holidaysDf(s, 2020 to 2030)
-        .orderBy("exchange", "date", "holiday_name")),
-
-    // J1+W1: as-of backward join (purchases ← latest click at-or-before)
-    // through EVERY physical form plus the dispatcher — one shared body
-    // (asofEventsQuery) parameterized by the join, all four gated against
-    // the single shared DuckDB ASOF oracle:
-    //  - q_asof_join: the native AsOfJoinExec single-pass merge operator;
-    //  - q_asof_auto: leftAsofAuto — the two-tier probe (capped no-shuffle
-    //    count, then a sampled per-key tier) picks native here (even keys,
-    //    far below the ~1M-rows/key crossover) or bucketed on hot-key
-    //    shapes, pinning the dispatcher's CHOSEN plan row-for-row;
-    //  - q_asof_window: the union + ordered-window rewrite, the portable
-    //    form for sessions without the custom strategy registered;
-    //  - q_asof_bucketed: the skew-resistant (key, time-bucket) form the
-    //    flagship relies on at warehouse scale — bucketSeconds=3600 over a
-    //    multi-day span forces real per-bucket carry-in traffic.
-    "q_asof_join" -> ((s, dir) => asofEventsQuery(s, dir)(
-      AsofJoin.leftAsofNative(_, _, on = Seq("user_id"),
-        leftTime = "ts", rightTime = "ts",
-        rightPayload = Seq("value", "event_id"), suffix = "_c"))),
-    "q_asof_auto" -> ((s, dir) => asofEventsQuery(s, dir)(
-      AsofJoin.leftAsofAuto(_, _, on = Seq("user_id"),
-        leftTime = "ts", rightTime = "ts",
-        rightPayload = Seq("value", "event_id"), suffix = "_c"))),
-    "q_asof_window" -> ((s, dir) => asofEventsQuery(s, dir)(
-      AsofJoin.leftAsof(_, _, on = Seq("user_id"),
-        leftTime = "ts", rightTime = "ts",
-        rightPayload = Seq("value", "event_id"), suffix = "_c"))),
-    "q_asof_bucketed" -> ((s, dir) => asofEventsQuery(s, dir)(
-      AsofJoin.leftAsofBucketed(_, _, on = Seq("user_id"),
-        leftTime = "ts", rightTime = "ts",
-        rightPayload = Seq("value", "event_id"), suffix = "_c",
-        bucketSeconds = 3600L))),
-
-    // J2: minute-bucket equi-join (legacy pre-ASOF semantics)
-    "q_minute_join" -> ((s, dir) => {
-      val e = ev(s, dir)
-      def perMinute(tpe: String, n: String, v: String) =
-        e.filter(col("event_type") === tpe)
-          .groupBy(date_trunc("minute", col("ts")).as("minute"))
-          .agg(count(lit(1)).as(n), dsum(col("value")).as(v))
-      perMinute("purchase", "n_purchase", "v_purchase")
-        .join(perMinute("click", "n_click", "v_click"), Seq("minute"), "left")
-        .orderBy("minute")
-    }),
-
-    // A6+W2: ReplacingMergeTree-style dedup (first row per key by order)
-    "q_dedup" -> ((s, dir) =>
-      Dedup
-        .replacingDedupAgg(
-          ev(s, dir).withColumn("minute", date_trunc("minute", col("ts"))),
-          keys = Seq("user_id", "minute"),
-          order = Seq("ts", "event_id"))
-        .select("user_id", "minute", "event_id", "ts", "value")
-        .orderBy("user_id", "minute")),
-
-    // W4: lag window
-    "q_window_lag" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      ev(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .withColumn("prev_value", lag(col("value"), 1).over(w))
-        .withColumn("delta", col("value") - col("prev_value"))
-        .orderBy("user_id", "ts", "event_id")
-    }),
-
-    // W4: rolling 1h time-range frame
-    "q_rolling_1h" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(unix_micros(col("ts")))
-        .rangeBetween(-3600000000L, 0L)
-      ev(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .withColumn("cnt_1h", count(lit(1)).over(w))
-        .withColumn("sum_1h", sum(col("value").cast(DecimalType(38, 6))).over(w).cast("double"))
-        .drop("value")
-        .orderBy("user_id", "ts", "event_id")
-    }),
-
-    // U2+U3: gap detection (generated month series EXCEPT existing months)
-    "q_gap_months" -> ((s, dir) =>
-      QueryEngine.missingMonths(t(s, dir, "orders"), "o_orderdate",
-        "1994-01-01", "2002-12-01")),
-
-    // A4+U1: coverage statistics in one tagged-union pass
-    "q_coverage" -> ((s, dir) =>
-      QueryEngine.coverage(Seq(
-        ("events", ev(s, dir), "ts"),
-        ("orders", t(s, dir, "orders"), "o_orderdate")))),
-
-    // A5: DISTINCT
-    "q_distinct_types" -> ((s, dir) =>
-      ev(s, dir).select("event_type").distinct().orderBy("event_type")),
-
-    // A5/A7: COUNT(DISTINCT ...) (reference nunique-style aggregates)
-    "q_distinct_count" -> ((s, dir) =>
-      ev(s, dir).agg(
-        countDistinct(col("user_id")).as("users"),
-        countDistinct(col("event_type")).as("types"),
-        countDistinct(col("user_id"), col("event_type")).as("user_type_pairs"))),
-
-    // A1-analog headline agg (TPC-H Q1 shape): group-agg with exact sums
-    "q1_pricing" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("2000-01-01").cast("timestamp"))
-      li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("sum_disc_price"),
-          (dsum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // J3: lookup joins (broadcast dims) + agg
-    "q_join_agg" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val n = broadcast(t(s, dir, "nation"))
-      val r = broadcast(t(s, dir, "region"))
-      c.join(n, col("c_nationkey") === col("n_nationkey"))
-        .join(r, col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(count(lit(1)).as("n_cust"), dsum(col("c_acctbal")).as("acctbal"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    // J4-analog: left-semi join (EXISTS)
-    "q_semi_join" -> ((s, dir) => {
-      val bigOrders = t(s, dir, "orders").filter(col("o_totalprice") > 200000)
-      t(s, dir, "customer")
-        .join(bigOrders, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    }),
-
-    // U2-analog: left-anti join (NOT EXISTS)
-    "q_anti_join" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"), "left_anti")
-        .select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")),
-
-    // J5: full-outer validation join with match accounting
-    "q_outer_join" -> ((s, dir) => {
-      val oc = t(s, dir, "orders").groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"))
-      t(s, dir, "customer")
-        .join(oc, col("c_custkey") === col("o_custkey"), "full_outer")
-        .select(
-          coalesce(col("c_custkey"), col("o_custkey")).as("custkey"),
-          col("c_custkey").isNotNull.cast("int").as("has_customer"),
-          coalesce(col("n_orders"), lit(0L)).as("n_orders"))
-        .orderBy("custkey")
-    }),
-
-    // O1 top-k by aggregate (TPC-H Q3 shape), broadcast customer side
-    "q_top_revenue" -> ((s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") > lit("1998-01-01").cast("timestamp"))
-      broadcast(c)
-        .join(o, col("c_custkey") === col("o_custkey"))
-        .join(li, col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-        .select(col("o_orderkey"), col("o_orderdate"), col("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-
-    // §2.8: scalar function battery (date parts/arith/format, CASE, ratios)
-    "q_scalar_funcs" -> ((s, dir) =>
-      t(s, dir, "orders").select(
-        col("o_orderkey"),
-        year(col("o_orderdate")).cast("int").as("y"),
-        month(col("o_orderdate")).cast("int").as("m"),
-        add_months(to_date(col("o_orderdate")), 1).as("next_month"),
-        months_between(trunc(to_date(col("o_orderdate")), "MM"), lit("1995-01-01").cast("date"))
-          .as("months_since"),
-        date_format(col("o_orderdate"), "yyyyMM").as("yyyymm"),
-        upper(col("o_orderpriority")).as("pri_upper"),
-        when(col("o_totalprice") < 50000, "low")
-          .when(col("o_totalprice") < 150000, "mid")
-          .otherwise("high").as("band"),
-        when(col("o_totalprice") > 0, abs(col("o_totalprice")) / lit(1000.0)).as("kprice"))
-        .orderBy("o_orderkey")),
-
-    // A3+P5: conditional aggregation (countIf) + NULL-safe ratio
-    "q_cond_agg" -> ((s, dir) =>
-      ev(s, dir).groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_total"),
-          count(when(col("value") > 100, lit(1))).as("n_hi"))
-        .withColumn("share_hi",
-          when(col("n_total") > 0, col("n_hi").cast("double") / col("n_total")))
-        .orderBy("event_type")),
-
-    // §2.8 timezone + P6 multi-branch conditional (session labels)
-    "q_tz_sessions" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val nyH = hour(from_utc_timestamp(col("ts"), "America/New_York"))
-      val loH = hour(from_utc_timestamp(col("ts"), "Europe/London"))
-      e.select(
-        col("event_id"),
-        nyH.cast("int").as("ny_hour"),
-        loH.cast("int").as("london_hour"),
-        when(nyH >= 9 && nyH <= 16, "NY_Session")
-          .when(nyH >= 17 && nyH <= 20, "NY_After_Hours")
-          .otherwise("NY_Closed").as("ny_session"),
-        when(loH >= 8 && loH <= 16, "London_Session")
-          .otherwise("London_Closed").as("london_session"),
-        dayofweek(col("ts")).isin(1, 7).cast("int").as("is_weekend"))
-        .orderBy("event_id")
-    }),
-
-    // W4-class: gap-based sessionization (batch twin of the streaming
-    // flatMapGroupsWithState operator in graft.streaming)
-    "q_sessionize" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      ev(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("prev", lag(col("ts"), 1).over(w))
-        .withColumn("new_s",
-          when(col("prev").isNull ||
-            (unix_micros(col("ts")) - unix_micros(col("prev"))) > 1800000000L, 1L)
-            .otherwise(0L))
-        .withColumn("session_id",
-          sum(col("new_s")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy("user_id", "session_id")
-        .agg(
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id")
-    }),
-
-    // §2.9/W4: gap sessions via the NATIVE session_window aggregate (the
-    // same operator Structured Streaming uses for session state) — one
-    // hash-agg with merging windows, no lag/prefix-sum window pass. Note
-    // the boundary: session_window breaks at gap >= 30min (half-open
-    // [t, t+gap) windows), where the lag formulation in q_sessionize
-    // breaks only at gap > 30min.
-    "q_session_window" -> ((s, dir) =>
-      ev(s, dir)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .select("user_id", "session_start", "session_end", "n_events")
-        .orderBy("user_id", "session_start")),
-
-    // W4: exact percentiles (research-workload analytics; rounded on both
-    // sides because interpolation association differs across engines)
-    "q_quantiles" -> ((s, dir) =>
-      ev(s, dir).groupBy("event_type")
-        .agg(
-          round(expr("percentile(value, 0.5)"), 6).as("p50"),
-          round(expr("percentile(value, 0.9)"), 6).as("p90"),
-          round(expr("percentile(value, 0.99)"), 6).as("p99"),
-          count(lit(1)).as("n"))
-        .orderBy("event_type")),
-
-    // W4: lag-1 autocorrelation via the explicit co-moment formula over
-    // DECIMAL-exact sums — bit-deterministic, unlike builtin corr() whose
-    // incremental co-moments are accumulation-order-dependent
-    "q_autocorr" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("event_type").orderBy(col("ts"), col("event_id"))
-      val pairs = ev(s, dir)
-        .select(col("event_type"), col("ts"), col("event_id"), col("value").as("x"))
-        .withColumn("y", lag(col("x"), 1).over(w))
-        .filter(col("y").isNotNull)
-      val agged = pairs.groupBy("event_type").agg(
-        count(lit(1)).cast("double").as("n"),
-        dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
-        dsum(col("x") * col("y")).as("sxy"),
-        dsum(col("x") * col("x")).as("sxx"),
-        dsum(col("y") * col("y")).as("syy"))
-      agged.select(
-        col("event_type"), col("n").cast("long").as("n"),
-        ((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (sqrt(col("n") * col("sxx") - col("sx") * col("sx")) *
-            sqrt(col("n") * col("syy") - col("sy") * col("sy")))).as("autocorr"))
-        .orderBy("event_type")
-    }),
-
-    // embedding-cosine near-dup pairs (dedup extension): exact all-pairs
-    // over a bounded id range, threshold filter
-    "q_cosine_pairs" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir).filter(col("vec_id") < 200)
-      val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"))
-      val b = e.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
-      a.join(b, col("id_a") < col("id_b"))
-        .withColumn("sim", VectorFunctions.cosine(col("va"), col("vb")))
-        .filter(col("sim") >= 0.25)
-        .select("id_a", "id_b", "sim")
-        .orderBy("id_a", "id_b")
-    }),
-
-    // ---- LLM-pipeline extension operators (BASELINE.json north star) ----
-
-    // text analysis: token counting + quality scoring
-    "q_text_stats" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      d.select(
-        col("doc_id"),
-        length(col("text")).cast("int").as("n_chars_m"),
-        TF.tokenCount(col("text")).cast("int").as("n_tokens"),
-        TF.alphaCount(col("text")).cast("int").as("n_alpha"),
-        TF.digitCount(col("text")).cast("int").as("n_digit"),
-        TF.punctCount(col("text")).cast("int").as("n_punct"),
-        TF.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")
-    }),
-
-    // text analysis: language-ID heuristic (stopword/CJK n-gram scores)
-    "q_lang_id" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val txt = col("text")
-      d.select(
-        col("doc_id"),
-        TF.langScore(txt, "en").cast("int").as("s_en"),
-        TF.langScore(txt, "de").cast("int").as("s_de"),
-        TF.langScore(txt, "fr").cast("int").as("s_fr"),
-        TF.langScore(txt, "es").cast("int").as("s_es"),
-        TF.langScore(txt, "zh").cast("int").as("s_zh"),
-        TF.langId(txt).as("pred_lang"),
-        col("lang"),
-        (TF.langId(txt) === col("lang")).cast("int").as("correct"))
-        .orderBy("doc_id")
-    }),
-
-    // text analysis: corpus token frequency (explode + agg + top-k)
-    "q_token_freq" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(explode(TF.tokens(col("text"))).as("token"))
-        .groupBy("token")
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token"))
-        .limit(50)),
-
-    // text analysis: Unicode-aware tokenization (letter/digit runs via
-    // \p{L}\p{N} — the class syntax Java regex and RE2 share) next to the
-    // whitespace tokenizer, per doc — the opt-in `tokenMode = "unicode"`
-    // path threaded through bm25/DSIR/near-dup shingling
-    "q_unicode_tokens" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          size(TF.tokens(col("text"))).cast("long").as("n_ws"),
-          size(TF.tokensUnicode(col("text"))).cast("long").as("n_uni"),
-          array_join(slice(TF.tokensUnicode(col("text")), 1, 5), " ")
-            .as("head_uni"))
-        .orderBy("doc_id")),
-
-    // document fingerprinting: rolling polynomial hash
-    "q_doc_fingerprint" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")),
-
-    // dedup (exact): content-digest groups
-    "q_dedup_exact" -> ((s, dir) =>
-      Dedup.exactText(Tables.documents(s, dir), "text", "doc_id")
-        .orderBy("content_hash")),
-
-    // Duplicate-token fraction (Lee et al. 2022's headline dedup metric):
-    // what share of the corpus's tokens live in exact-duplicate documents
-    // — the number that motivates running dedup at all. One groupBy on
-    // the content hash carrying pre-aggregated token counts; exact
-    // integer fraction (e6 fixed point).
-    "q_dup_token_fraction" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(
-        md5(col("text")).as("h"),
-        TF.tokenCount(col("text")).cast("long").as("nt"))
-      d.groupBy("h")
-        .agg(sum(col("nt")).as("g_tokens"), count(lit(1)).as("n"))
-        .agg(
-          sum(col("g_tokens")).as("total_tokens"),
-          sum(when(col("n") > 1, col("g_tokens")).otherwise(0L)).as("dup_tokens"))
-        .select(col("total_tokens"), col("dup_tokens"),
-          expr("dup_tokens * 1000000L div total_tokens").as("dup_frac_e6"))
-    }),
-
-    // dedup (near): MinHash + LSH candidate pairs, exact-Jaccard verified
-    "q_minhash_lsh" -> ((s, dir) =>
-      MinHash.nearDupPairs(Tables.documents(s, dir), "doc_id", "text",
-          shingleN = 3, k = 16, bands = 8, threshold = 0.8)
-        .orderBy("id_a", "id_b")),
-
-    // Cross-corpus decontamination: training docs (doc_id % 3 != 0) that
-    // near-duplicate any "benchmark" doc (doc_id % 3 == 0) — the GPT-3-
-    // style eval-overlap removal at near-dup level. Per contaminated doc:
-    // how many benchmark docs it hits and the strongest overlap.
-    "q_decontaminate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val corpus = docs.filter(col("doc_id") % 3 =!= 0)
-      val bench = docs.filter(col("doc_id") % 3 === 0)
-      MinHash.crossNearDupPairs(corpus, bench, "doc_id", "text",
-          shingleN = 3, k = 16, bands = 8, threshold = 0.8)
-        .groupBy(col("left_id").as("corpus_id"))
-        .agg(count(lit(1)).as("n_bench_matches"),
-          max(col("jaccard")).as("max_jaccard"))
-        .orderBy("corpus_id")
-    }),
-
-    // n-gram Jaccard similarity on a deterministic candidate set
-    "q_ngram_jaccard" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), TF.wordShingles(col("text"), 3).as("sh"))
-      val a = d.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-      val b = d.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-      a.join(b, col("id_b") === col("id_a") + 1)
-        .select(
-          col("id_a"), col("id_b"),
-          (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-            size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
-        .orderBy("id_a")
-    }),
-
-    // similarity search: exact brute-force cosine top-k
-    "q_cosine_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorFunctions
-        .bruteForceTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding", k = 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    // hybrid-retrieval fusion: exact float ranking ⊕ int8-shortlist
-    // ranking combined by reciprocal-rank fusion in exact integers
-    // (VectorFunctions.rrfFuse) — the lexical⊕semantic combiner shape,
-    // here fusing the two retrieval stages the engine already mirrors
-    "q_rrf_fusion" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 20)
-      val bf = VectorFunctions
-        .bruteForceTopK(emb, q, "vec_id", "embedding", k = 20)
-        .select("query_id", "neighbor_id", "rank")
-      val i8 = VectorFunctions
-        .annInt8Rerank(emb, q, "vec_id", "embedding", k = 20, shortlist = 20)
-        .select(col("query_id"), col("neighbor_id"), col("srank").as("rank"))
-      VectorFunctions.rrfFuse(Seq(i8, bf), rrfK = 60, topK = 5)
-        .orderBy("query_id", "frank")
-    }),
-
-    // nearest-centroid classification + confusion matrix: decimal-exact
-    // per-label centroids (the q_centroid construction) broadcast as L
-    // rows, sequential-fold L2 distances, per-vector argmin with
-    // deterministic tie-break — label quality audit of an embedding space
-    "q_nearest_centroid" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val emb = Tables.embeddings(s, dir)
-      val cent = emb
-        .select(col("label").as("clabel"),
-          posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("clabel", "pos")
-        .agg(count(lit(1)).as("n"), dsum(col("v").cast("double")).as("sv"))
-        .select(col("clabel"), col("pos"),
-          (floor(col("sv") / col("n") * lit(1e6)) / 1e6).as("m"))
-        .groupBy("clabel")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("clabel"), expr("transform(pm, e -> e.m)").as("cvec"))
-      emb.crossJoin(broadcast(cent))
-        .withColumn("d", expr(
-          """aggregate(zip_with(embedding, cvec,
-             (a, b) -> (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b)),
-             CAST(0.0 AS DOUBLE), (x, y) -> x + y)"""))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("d"), col("clabel"))))
-        .filter(col("rn") === 1)
-        .groupBy(col("label"), col("clabel").as("assigned"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("label", "assigned")
-    }),
-
-    // vector norms / dims (embedding hygiene scan)
-    "q_embed_norm" -> ((s, dir) =>
-      Tables.embeddings(s, dir)
-        .select(
-          col("vec_id"),
-          size(col("embedding")).cast("int").as("dim"),
-          VectorFunctions.norm2(col("embedding")).as("norm"))
-        .orderBy("vec_id")),
-
-    // similarity search: LSH-bucketed ANN — hash-oracled (the DuckDB mirror
-    // replays the same hyperplane bucket construction); recall vs brute
-    // force is additionally asserted in ScalaTest
-    "q_ann_lsh" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorFunctions
-        .lshTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          k = 5, nbits = 8)
-        .orderBy("query_id", "rank")
-    }),
-
-    // similarity search: IVF-partitioned ANN — hash-oracled (DuckDB mirrors
-    // the deterministic first-nlist centroid stub and the same cosine
-    // folds); recall vs brute force additionally asserted in ScalaTest
-    "q_ann_ivf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorFunctions
-        .ivfTopK(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          k = 5, nlist = 16, nprobe = 4)
-        .orderBy("query_id", "rank")
-    }),
-
-    // similarity search: IVF with REAL k-means-trained centroids — the
-    // whole Lloyd loop (portable-hash seeding, cosine argmax assignment,
-    // decimal-exact centroid means) is mirrored in the DuckDB oracle, so
-    // this is hash-checked end to end, training included
-    "q_ann_ivf_trained" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorFunctions
-        .ivfTopKTrained(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          k = 5, nlist = 8, nprobe = 2, trainIters = 2)
-        .orderBy("query_id", "rank")
-    }),
-
-    // similarity search: two-stage int8 retrieval — integer-exact
-    // quantized shortlist (amax_e6 · Σ qcode·dcode, codes =
-    // floor(x·127/amax + ½)) re-ranked by true float cosine. The whole
-    // shortlist stage is BIGINT arithmetic, so candidates AND final ranks
-    // hash-match DuckDB end to end (see VectorFunctions.annInt8Rerank).
-    "q_ann_int8" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorFunctions
-        .annInt8Rerank(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          k = 5, shortlist = 20)
-        .orderBy("query_id", "rank")
-    }),
-
-    // ANN EVALUATION: recall@5 of the int8-shortlist+rerank path against
-    // exact float top-5 — the harness an ANN deployment runs before
-    // trading accuracy for the 4× bandwidth win. Per-query hit counts are
-    // exact integers (both constituent rankings are deterministic and
-    // independently oracled), so the whole evaluation hash-matches.
-    "q_ann_int8_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 20)
-      val bf = VectorFunctions
-        .bruteForceTopK(emb, q, "vec_id", "embedding", k = 5)
-        .select("query_id", "neighbor_id")
-      val i8 = VectorFunctions
-        .annInt8Rerank(emb, q, "vec_id", "embedding", k = 5, shortlist = 20)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      bf.join(i8, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .orderBy("query_id")
-    }),
-
-    // similarity search: PRODUCT-QUANTIZATION ANN (Jégou et al. 2011) —
-    // per-subspace codebooks trained by the decimal-exact Lloyd loop,
-    // corpus stored as m=4 codebook cells, per-query distance LUTs,
-    // sequential-fold ADC shortlist, true-cosine re-rank. The ENTIRE
-    // pipeline (training, encoding, ADC, re-rank) is mirrored in the
-    // DuckDB oracle, so this hash-checks end to end like q_ann_ivf_trained.
-    "q_ann_pq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      VectorFunctions
-        .pqRerank(emb, emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          k = 5, m = 8, ksub = 16, shortlist = 50, trainIters = 2)
-        .orderBy("query_id", "rank")
-    }),
-
-    // ANN EVALUATION: recall@5 of the PQ-ADC+rerank path against exact
-    // float top-5 (the q_ann_int8_recall harness pointed at the 64×-
-    // compression operating point instead of int8's 4×). Exact-integer
-    // hit counts; hash-matches end to end.
-    "q_ann_pq_recall" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 20)
-      val bf = VectorFunctions
-        .bruteForceTopK(emb, q, "vec_id", "embedding", k = 5)
-        .select("query_id", "neighbor_id")
-      val pq = VectorFunctions
-        .pqRerank(emb, q, "vec_id", "embedding", k = 5, m = 8, ksub = 16,
-          shortlist = 50, trainIters = 2)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      bf.join(pq, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .orderBy("query_id")
-    }),
-
-    // embedding-space near-dup GROUPS: connected components of the
-    // vector↔hyperplane-bucket graph — the semantic twin of q_dedup_groups
-    // (same ConnectedComponents fixpoint, hyperplane buckets instead of
-    // MinHash bands). Oracled against a DuckDB recursive-CTE closure over
-    // the same integer-hash hyperplane construction as q_ann_lsh.
-    "q_semantic_dedup" -> ((s, dir) =>
-      VectorFunctions
-        .semanticDupGroups(Tables.embeddings(s, dir), "vec_id", "embedding")
-        .orderBy("id")),
-
-    // exact substring-overlap dedup (Lee et al. 2022's 50-token criterion):
-    // docs sharing ANY 50-token window group transitively — local and
-    // exact, catches long-quote embedding that whole-doc MinHash misses
-    "q_substring_dedup" -> ((s, dir) =>
-      MinHash.substringDupGroups(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy("id")),
-
-    // Duplicate-SPAN removal (Lee et al. 2022 ExactSubstr): rewrite the
-    // corpus so every 50-token window occurs once — first occurrence wins,
-    // later occurrences are cut and the doc reassembled. The text-rewriting
-    // complement of q_substring_dedup's doc grouping.
-    "q_span_removal" -> ((s, dir) =>
-      text.CorpusOps.removeDupSpans(Tables.documents(s, dir), "doc_id", "text",
-        windowTokens = 50)
-        .orderBy("id")),
-
-    // SemDeDup (Abbas et al. 2023): k-means cluster, exact pairwise cosine
-    // within clusters only, transitive groups above tau, keep the group
-    // member FARTHEST from its centroid. The whole path — k-means training
-    // included — is mirrored in the oracle.
-    "q_semdedup" -> ((s, dir) =>
-      VectorFunctions.semDedup(Tables.embeddings(s, dir), "vec_id", "embedding",
-        k = 8, trainIters = 2, tau = 0.3)
-        .orderBy("id")),
-
-    // MULTI-SIGNAL dedup: one connected-components pass over the UNION of
-    // the text LSH graph and the embedding hyperplane graph — "duplicate
-    // by surface text OR semantic similarity", transitively through mixed
-    // chains. Buckets namespaced by kind; same shared fixpoint
-    "q_dedup_multisignal" -> ((s, dir) =>
-      graft.operators.MultiSignalDedup.groups(
-        Tables.documents(s, dir), "doc_id", "text",
-        Tables.embeddings(s, dir), "vec_id", "embedding")
-        .orderBy("id")),
-
-    // dedup (near): SimHash fingerprints over polynomial token hashes —
-    // reproducible in DuckDB, so oracle hash-checked
-    "q_simhash" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"), MinHash.simhashPoly(col("text"), 30).as("simhash"))
-        .orderBy("doc_id")),
-
-    // ---- round 2: wider relational surface -------------------------------
-
-    // A-class: ROLLUP hierarchy aggregation with grouping indicators
-    "q_rollup" -> ((s, dir) => {
-      val j = t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .select("r_name", "n_name", "c_acctbal")
-      // rollup(col(...)), not rollup("..."): the String overload resolves via
-      // Dataset.col, whose dataset-id tags get duplicated by the rollup's
-      // Expand and trip DetectAmbiguousSelfJoin (a false positive here)
-      j.rollup(col("r_name"), col("n_name"))
-        .agg(
-          grouping(col("r_name")).cast("int").as("g_r"),
-          grouping(col("n_name")).cast("int").as("g_n"),
-          count(lit(1)).as("n_cust"),
-          dsum(col("c_acctbal")).as("acctbal"))
-        .select(
-          coalesce(col("r_name"), lit("ALL")).as("r_name"),
-          coalesce(col("n_name"), lit("ALL")).as("n_name"),
-          col("g_r"), col("g_n"), col("n_cust"), col("acctbal"))
-        .orderBy("r_name", "n_name")
-    }),
-
-    // A-class: PIVOT (explicit value list -> fixed output schema)
-    "q_pivot" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(year(col("o_orderdate")).cast("int").as("y"))
-        .pivot("o_orderpriority",
-          Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))
-        .agg(count(lit(1)))
-        .select(
-          col("y"),
-          coalesce(col("1-URGENT"), lit(0L)).as("p_urgent"),
-          coalesce(col("2-HIGH"), lit(0L)).as("p_high"),
-          coalesce(col("3-MEDIUM"), lit(0L)).as("p_medium"),
-          coalesce(col("4-NOT SPECIFIED"), lit(0L)).as("p_notspec"),
-          coalesce(col("5-LOW"), lit(0L)).as("p_low"))
-        .orderBy("y")),
-
-    // U-class: INTERSECT (distinct set semantics, both engines) — order
-    // statuses 'O' vs 'F' overlap heavily, so the result is non-trivial at
-    // every SF (year∩year was empty at small SF)
-    "q_intersect" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      o.filter(col("o_orderstatus") === "O").select("o_custkey")
-        .intersect(o.filter(col("o_orderstatus") === "F").select("o_custkey"))
-        .orderBy("o_custkey")
-    }),
-
-    // O1-scale: top-k per group with partition-local pre-pruning (bounded
-    // heaps cap the shuffle at k·groups·partitions rows; result == plain
-    // window rank, which is what the oracle computes)
-    "q_group_topk" -> ((s, dir) =>
-      graft.operators.TopKPerGroup
-        .topK(ev(s, dir).select("event_type", "event_id", "value"),
-          keys = Seq("event_type"), ord = "value", tiebreak = "event_id", k = 5)
-        .orderBy("event_type", "rank")),
-
-    // J-class: non-equi range-containment join (overlapping 6h windows,
-    // 4h stride — not bucketable; small side broadcast, fact side streamed)
-    "q_range_join" -> ((s, dir) => {
-      val wnd = s.range(1)
-        .select(explode(expr(
-          "sequence(TIMESTAMP '2024-01-01 00:00:00', " +
-            "TIMESTAMP '2024-01-31 20:00:00', INTERVAL 4 HOURS)")).as("w_start"))
-        .withColumn("w_end", expr("w_start + INTERVAL 6 HOURS"))
-      ev(s, dir)
-        .join(broadcast(wnd), col("ts") >= col("w_start") && col("ts") < col("w_end"))
-        .groupBy("w_start", "w_end")
-        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-        .orderBy("w_start")
-    }),
-
-    // J-class scale operator: bloom-prefiltered semi join (sketch built on
-    // the filtered build side, probe rows dropped before the shuffle; exact
-    // semi join removes false positives -> result == plain semi join)
-    "q_bloom_semi" -> ((s, dir) => {
-      val returned = t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select("l_orderkey")
-      BloomJoin.bloomSemiJoin(
-          t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-          returned, "o_orderkey", "l_orderkey",
-          // sized to the build side at bench SF (~0.25M distinct keys);
-          // at cluster scale callers size to their key cardinality
-          expectedItems = 262144L, numBits = 2097152L)
-        .orderBy("o_orderkey")
-    }),
-
-    // J-class scale operator: salted skew join (deterministic whole-row
-    // salt; result identical to the unsalted join by construction)
-    "q_salted_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice")
-      val o = t(s, dir, "orders").select("o_orderkey", "o_orderpriority")
-      SkewJoin.saltedInnerJoin(li, o, "l_orderkey", "o_orderkey", salts = 4)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_items"), dsum(col("l_extendedprice")).as("sum_price"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // Same join through the r12 AUTO-dispatched form (SkewJoin.autoInnerJoin,
-    // the general-join sibling of AsofJoin.leftAsofAuto): a capped no-shuffle
-    // probe quick-rejects salting here (no hot key at bench SF) and would
-    // size the salt count to the hottest key on pathological shapes.
-    // Driver-gating pins that the dispatcher's chosen plan is row-for-row
-    // the unsalted join, not just spec-equivalent.
-    "q_salted_auto" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice")
-      val o = t(s, dir, "orders").select("o_orderkey", "o_orderpriority")
-      SkewJoin.autoInnerJoin(li, o, "l_orderkey", "o_orderkey")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_items"), dsum(col("l_extendedprice")).as("sum_price"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // W-class: ranking-function battery (rank/dense_rank/percent_rank/
-    // cume_dist/ntile over a unique total order -> deterministic)
-    "q_rank_funcs" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_orderpriority")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .select("o_orderkey", "o_orderpriority", "o_totalprice")
-        .withColumn("rnk", rank().over(w).cast("int"))
-        .withColumn("drnk", dense_rank().over(w).cast("int"))
-        .withColumn("pr", percent_rank().over(w))
-        .withColumn("cd", cume_dist().over(w))
-        .withColumn("tile", ntile(4).over(w).cast("int"))
-        .filter(col("rnk") <= 100)
-        .orderBy("o_orderpriority", "rnk")
-    }),
-
-    // correlated-scalar-subquery shape: rows above their group's average
-    // (decomposed into a per-group aggregate + join, the distributed form)
-    "q_above_avg" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val navg = c.groupBy(col("c_nationkey").as("nk"))
-        .agg((dsum(col("c_acctbal")) / count(lit(1))).as("nat_avg"))
-      c.join(navg, col("c_nationkey") === col("nk"))
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .filter(col("c_acctbal") > col("nat_avg"))
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-          col("n_name"), col("nat_avg"))
-        .orderBy("c_custkey")
-    }),
-
-    // §2.8 array-function battery over ArrayType(Float) (scalar outputs:
-    // element_at / min / max / filter-count / prefix-fold, all cast-exact)
-    "q_array_funcs" -> ((s, dir) =>
-      Tables.embeddings(s, dir)
-        .select(
-          col("vec_id"),
-          element_at(col("embedding"), 1).cast("double").as("first_v"),
-          array_max(col("embedding")).cast("double").as("vmax"),
-          array_min(col("embedding")).cast("double").as("vmin"),
-          size(filter(col("embedding"), x => x > lit(0.0f))).cast("int").as("n_pos"),
-          aggregate(slice(col("embedding"), 1, 8), lit(0.0),
-            (a, x) => a + x.cast("double")).as("head8_sum"))
-        .orderBy("vec_id")),
-
-    // §2.8 string-function battery (substr/pad/regex/concat/translate/
-    // reverse/position/levenshtein)
-    "q_string_funcs" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .select(
-          col("c_custkey"),
-          substring(col("c_name"), 1, 12).as("name12"),
-          upper(col("c_name")).as("name_up"),
-          lpad(col("c_custkey").cast("string"), 10, "0").as("key_pad"),
-          regexp_extract(col("c_name"), "([0-9]+)$", 1).as("name_num"),
-          concat_ws("|", col("c_mktsegment"), col("c_name")).as("seg_name"),
-          translate(col("c_name"), "#", "-").as("name_dash"),
-          reverse(col("c_name")).as("name_rev"),
-          length(col("c_mktsegment")).cast("int").as("seg_len"),
-          instr(col("c_name"), "#").cast("int").as("hash_pos"),
-          levenshtein(col("c_mktsegment"), lit("BUILDING")).cast("int").as("lev_seg"))
-        .orderBy("c_custkey")),
-
-    // sketch: HyperLogLog++ approximate distinct next to the exact count
-    // (engine-specific sketch -> rows-only check; error bound asserted in
-    // ScalaTest)
-    // sketch: HyperLogLog++ distinct next to exact. The estimate itself has
-    // no cross-engine twin, so the COMPARED columns are the exact count
-    // (DuckDB-recomputed) and a deterministic relative-error-bound boolean
-    // — the sketch is still executed and still gated (a broken HLL flips
-    // hll_ok to false and fails the hash), but the hash never depends on
-    // engine-specific sketch internals.
-    "q_hll_distinct" -> ((s, dir) =>
-      ev(s, dir).agg(
-          approx_count_distinct(col("user_id")).as("approx_users"),
-          countDistinct(col("user_id")).as("exact_users"))
-        .select(col("exact_users"),
-          (abs(col("approx_users") - col("exact_users")) <=
-            lit(0.15) * col("exact_users") + 10).as("hll_ok"))),
-
-    // sketch: approximate percentiles (Greenwald-Khanna). Same contract
-    // shape as q_hll_distinct: the estimate feeds an exact rank check
-    // (count of values <= estimate vs the target rank, within the GK
-    // accuracy bound + tie/discretization slack) and only (n, ok-bits)
-    // are compared — n exactly, the bounds as pinned booleans.
-    "q_approx_quantile" -> ((s, dir) => {
-      val e = ev(s, dir).select("event_type", "value")
-      val approx = e.groupBy("event_type").agg(
-        percentile_approx(col("value"), lit(0.5), lit(10000)).as("p50"),
-        percentile_approx(col("value"), lit(0.9), lit(10000)).as("p90"))
-      // two-sided rank check: GK guarantees the estimate's RANK is within
-      // eps*n of the target, but with heavy ties the inclusive count of a
-      // tied value can exceed any one-sided slack. The target rank need
-      // only fall in [count(value < est) - slack, count(value <= est) +
-      // slack] — tie-robust and still fails on a genuinely wrong sketch.
-      e.join(broadcast(approx), "event_type")
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("value") < col("p50"), 1L).otherwise(0L)).as("lo50"),
-          sum(when(col("value") <= col("p50"), 1L).otherwise(0L)).as("hi50"),
-          sum(when(col("value") < col("p90"), 1L).otherwise(0L)).as("lo90"),
-          sum(when(col("value") <= col("p90"), 1L).otherwise(0L)).as("hi90"))
-        .select(col("event_type"), col("n"),
-          (lit(0.5) * col("n") >= col("lo50") - col("n") / lit(1000.0) - 1 &&
-            lit(0.5) * col("n") <= col("hi50") + col("n") / lit(1000.0) + 1).as("p50_ok"),
-          (lit(0.9) * col("n") >= col("lo90") - col("n") / lit(1000.0) - 1 &&
-            lit(0.9) * col("n") <= col("hi90") + col("n") / lit(1000.0) + 1).as("p90_ok"))
-        .orderBy("event_type")
-    }),
-
-    // ---- round 2 batch 2: JSON / semi-structured, more agg & window forms --
-
-    // §2.8 JSON path extraction (props is a JSON string column): typed
-    // extraction feeding exact integer aggregates
-    "q_json_funcs" -> ((s, dir) =>
-      ev(s, dir)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(
-          count(col("k")).as("n_k"),
-          sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"),
-          max(col("k")).as("max_k"))
-        .orderBy("event_type")),
-
-    // A-class: ordered string aggregation (array_sort(collect_list) — the
-    // order-independent distributed form of ORDER BY inside string_agg)
-    "q_string_agg" -> ((s, dir) =>
-      t(s, dir, "nation")
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name")
-        .agg(
-          array_join(array_sort(collect_list(col("n_name"))), ",").as("nations"),
-          count(lit(1)).cast("long").as("n_nations"))
-        .orderBy("r_name")),
-
-    // A-class: GROUPING SETS (each-dimension marginals + grand total in one
-    // pass — Expand-based, one shuffle)
-    "q_grouping_sets" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupingSets(
-          Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority")), Seq()),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .select(
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-          col("n"), col("total"))
-        .orderBy("status", "priority")),
-
-    // time-decayed weighted sum (recency-weighted feature aggregation):
-    // integer-hour decay so pow(0.5, h) is an exact power of two in both
-    // engines; per-term round(…,6) + decimal sum keeps the total exact
-    "q_decay_sum" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val anchor = e.agg(max(col("ts")).as("anchor"))
-      e.crossJoin(broadcast(anchor))
-        // `div`, NOT `/`: long / long is DOUBLE division in Spark, and a
-        // ratio within an ulp of an integer rounds up — disagreeing with
-        // the oracle's exact integer floor (same trap as the ns→µs /1000)
-        .withColumn("h",
-          expr("(unix_micros(anchor) - unix_micros(ts)) div 3600000000"))
-        // floor(x*1e6)/1e6, NOT round(x, 6): halving a 2-decimal value
-        // lands terms exactly on .5-of-the-7th-digit boundaries, where
-        // Spark rounds the shortest decimal repr (2.0353125 -> ...13) but
-        // DuckDB rounds the binary double (2.03531249... -> ...12). The
-        // floor form is pure IEEE arithmetic — identical in both engines.
-        .withColumn("term",
-          floor(col("value") * pow(lit(0.5), col("h")) * 1e6) / 1e6)
-        .groupBy("user_id")
-        .agg(dsum(col("term")).as("decayed_value"), count(lit(1)).as("n_events"))
-        .orderBy("user_id")
-    }),
-
-    // statistical outlier detection: z-score from exact decimal co-moments
-    // (same formula both engines — no engine-native stddev, whose fp
-    // accumulation order differs)
-    "q_zscore" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val stats = e.groupBy(col("event_type").as("et"))
-        .agg(
-          count(lit(1)).as("n"),
-          dsum(col("value")).as("s1"),
-          dsum(col("value") * col("value")).as("s2"))
-        .withColumn("mean", col("s1") / col("n"))
-        .withColumn("sd", sqrt(
-          (col("n") * col("s2") - col("s1") * col("s1")) /
-            (col("n") * (col("n") - lit(1)))))
-      e.join(broadcast(stats), col("event_type") === col("et"))
-        .withColumn("z", round((col("value") - col("mean")) / col("sd"), 6))
-        .filter(abs(col("z")) > 3.0)
-        .select("event_id", "event_type", "value", "z")
-        .orderBy("event_id")
-    }),
-
-    // fixed-width histogram via pure arithmetic bucketing (identical
-    // expression both engines; clamped to [0, 19])
-    "q_histogram" -> ((s, dir) =>
-      ev(s, dir)
-        .withColumn("bucket",
-          least(greatest(floor(col("value") / 5.0), lit(0.0)), lit(19.0)).cast("int"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-        .orderBy("bucket")),
-
-    // deterministic mode (most frequent hour-of-day per event type, count
-    // desc + smallest-hour tiebreak — engine-native mode() has ties)
-    "q_mode" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val cnt = ev(s, dir)
-        .groupBy(col("event_type"), hour(col("ts")).cast("int").as("hod"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("event_type").orderBy(col("n").desc, col("hod"))
-      cnt.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("event_type", "hod", "n")
-        .orderBy("event_type")
-    }),
-
-    // W3 battery: first/last/nth value over the full partition frame
-    "q_first_last" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val wn = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      ev(s, dir)
-        .withColumn("first_v", first(col("value")).over(w))
-        .withColumn("last_v", last(col("value")).over(w))
-        .withColumn("second_v", nth_value(col("value"), 2).over(w))
-        .withColumn("rn", row_number().over(wn))
-        .filter(col("rn") === 1)
-        .select("user_id", "first_v", "last_v", "second_v")
-        .orderBy("user_id")
-    }),
-
-    // exact discrete percentiles via rank arithmetic (PERCENTILE_DISC
-    // semantics, identical rank math both engines)
-    "q_percentile_disc" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("event_type").orderBy(col("value"), col("event_id"))
-      ev(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
-        .groupBy("event_type")
-        .agg(
-          max(when(col("rn") === ceil(col("n") * 0.5).cast("long"), col("value")))
-            .as("p50"),
-          max(when(col("rn") === ceil(col("n") * 0.9).cast("long"), col("value")))
-            .as("p90"),
-          max(col("n")).as("n"))
-        .orderBy("event_type")
-    }),
-
-    // U1b: UNION with distinct semantics (complement to q_intersect)
-    "q_union_distinct" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      o.filter(year(col("o_orderdate")) === 1994).select("o_custkey")
-        .union(o.filter(year(col("o_orderdate")) === 1995).select("o_custkey"))
-        .distinct()
-        .orderBy("o_custkey")
-    }),
-
-    // §2.8 regex set-returning extraction: regexp_extract_all → explode →
-    // frequency (UDTF-shaped lateral view)
-    "q_regex_tokens" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(explode(expr("regexp_extract_all(lower(text), '[a-z]{8,}', 0)")).as("token"))
-        .groupBy("token")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 5)
-        .orderBy(col("n").desc, col("token"))
-        .limit(50)),
-
-    // SQL entry path (§2/S7): the same engine drives spark.sql text —
-    // TPC-H Q3 shape over temp views, exercising parser → Catalyst →
-    // the identical physical operators the DataFrame API plans
-    "q_sql_q3" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("v_customer")
-      t(s, dir, "orders").createOrReplaceTempView("v_orders")
-      t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-      s.sql("""
-        SELECT o_orderkey, o_orderdate, o_orderpriority,
-               CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                 AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-        FROM v_customer
-        JOIN v_orders ON c_custkey = o_custkey
-        JOIN v_lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'AUTOMOBILE'
-        GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, o_orderkey
-        LIMIT 20""")
-    }),
-
-    // §2.8 NULL-semantics battery (coalesce/nullif/nvl2-shape/null-safe
-    // equality) over the asof join's genuinely-NULL click columns
-    "q_null_funcs" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id", "value")
-      val clicks = e.filter(col("event_type") === "click")
-        .select("user_id", "ts", "event_id", "value")
-      AsofJoin
-        .leftAsofNative(purchases, clicks, on = Seq("user_id"),
-          leftTime = "ts", rightTime = "ts",
-          rightPayload = Seq("value"), suffix = "_c")
-        .select(
-          col("event_id"),
-          coalesce(col("value_c"), lit(-1.0)).as("click_or_default"),
-          nullif(col("value_c"), col("value")).as("click_unless_same"),
-          when(col("value_c").isNotNull, lit("seen")).otherwise(lit("cold")).as("flag"),
-          col("value_c").isNull.as("is_cold"),
-          (col("value_c") <=> col("value")).as("nseq"))
-        .orderBy("event_id")
-    }),
-
-    // §2.8 bitwise battery (shift/and/or/xor/not/popcount)
-    "q_bitwise" -> ((s, dir) =>
-      ev(s, dir)
-        .select(
-          col("event_id"),
-          shiftleft(col("event_id"), 3).as("shl"),
-          shiftright(col("event_id"), 2).as("shr"),
-          col("event_id").bitwiseAND(lit(255L)).as("band"),
-          col("event_id").bitwiseOR(lit(4096L)).as("bor"),
-          col("event_id").bitwiseXOR(col("user_id")).as("bxor"),
-          bitwise_not(col("event_id")).as("bnot"),
-          bit_count(col("event_id")).cast("int").as("popcnt"))
-        .orderBy("event_id")),
-
-    // W-class: running cumulative aggregates (decimal-exact running sum)
-    "q_cumsum" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev(s, dir)
-        .withColumn("run_sum",
-          sum(col("value").cast(DecimalType(38, 6))).over(w).cast("double"))
-        .withColumn("run_n", count(lit(1)).over(w))
-        .select("user_id", "ts", "event_id", "value", "run_sum", "run_n")
-        .orderBy("user_id", "ts", "event_id")
-    }),
-
-    // W-class: numeric RANGE frame (value-distance window, not row-count):
-    // frame membership depends only on values, so the result is
-    // deterministic even across duplicate sort keys
-    "q_range_frame" -> ((s, dir) =>
-      ev(s, dir)
-        .withColumn("n_within_5",
-          expr("""count(*) OVER (PARTITION BY event_type ORDER BY value
-                  RANGE BETWEEN 5 PRECEDING AND CURRENT ROW)"""))
-        .withColumn("sum_within_5",
-          expr("""CAST(sum(CAST(value AS DECIMAL(38,6))) OVER (
-                    PARTITION BY event_type ORDER BY value
-                    RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS DOUBLE)"""))
-        .select("event_id", "event_type", "value", "n_within_5", "sum_within_5")
-        .orderBy("event_id")),
-
-    // vector scalar quantization (int8) with reconstruction-error audit —
-    // the storage-side half of ANN at scale (4 bytes -> 1 byte per dim);
-    // integer outputs via the floor(x*1e6) convention keep it hash-exact
-    "q_vec_quant" -> ((s, dir) =>
-      Tables.embeddings(s, dir)
-        .withColumn("amax",
-          greatest(array_max(col("embedding")).cast("double"),
-            -array_min(col("embedding")).cast("double"), lit(1e-12)))
-        .withColumn("sum_abs_err",
-          expr("""aggregate(embedding, CAST(0.0 AS DOUBLE),
-                  (a, x) -> a + abs(CAST(x AS DOUBLE) -
-                    floor(CAST(x AS DOUBLE) * 127.0 / amax + 0.5) * amax / 127.0))"""))
-        .select(
-          col("vec_id"),
-          floor(col("amax") * 1e6).cast("long").as("amax_e6"),
-          floor(col("sum_abs_err") / size(col("embedding")) * 1e9).cast("long")
-            .as("mae_e9"))
-        .orderBy("vec_id")),
-
-    // sequential per-key recursion (EWMA) via the mapPartitions scan,
-    // FULL per-row output. α = 1/2 makes the recursion's two products
-    // exact halvings, so each step is the same three IEEE ops in any
-    // engine (q_ewma_fold pins the identical fold for last-values); the
-    // oracle replays every prefix with a windowed list_reduce, so the
-    // whole scan hash-matches — no rounding, no rows-only fallback.
-    "q_ewma" -> ((s, dir) =>
-      graft.operators.TimeSeries
-        .ewma(ev(s, dir).select("user_id", "ts", "event_id", "value"),
-          key = "user_id", time = "ts", tiebreak = "event_id",
-          value = "value", alpha = 0.5)
-        .orderBy("user_id", "ts", "event_id")),
-
-    // Z-order (Morton) clustering key over (user, minute): sorting writes
-    // by z co-locates rows close in BOTH dimensions, so per-file min/max
-    // stats prune scans on either — the data-layout step before a big
-    // write (storage.RangeWriter sorts by it). Codegen'd ZValue expression;
-    // pure integer bit interleave, mirrored exactly in the oracle
-    "q_zorder" -> ((s, dir) =>
-      ev(s, dir).select(
-        col("event_id"),
-        graft.functions.exprs.zValue(
-          pmod(col("user_id"), lit(1L << 20)),
-          pmod(expr("unix_micros(ts) DIV 60000000"), lit(1L << 20)),
-          bits = 20).as("z"))
-        .orderBy("z", "event_id")),
-
-    // Zone-map pruned range scan (storage.PrunedScan over the Manifest's
-    // per-file min/max): the events slice is range-clustered into 12 files,
-    // a _manifest sidecar records each file's ts range, and the scan is
-    // planned over ONLY the files whose range can intersect the predicate —
-    // at export scale this skips listing/footer work for every file the
-    // zone map proves empty. Exact filter re-applied, so the result is
-    // byte-identical to the plain filtered scan the oracle runs.
-    "q_pruned_scan" -> ((s, dir) => {
-      val tmp = stagedZonemap(s, dir)
-      graft.storage.PrunedScan.readRange(s, tmp, "ts",
-          java.sql.Timestamp.valueOf("2024-01-08 00:00:00"),
-          java.sql.Timestamp.valueOf("2024-01-12 23:59:59.999999"))
-        .orderBy("ts", "event_id")
-    }),
-
-    // Multi-column zone map (r16): the manifest additionally records
-    // per-file min/max of the SECONDARY sort column (event_id under the
-    // (ts, event_id) RangeWriter layout — stats ride the same single
-    // manifest scan), so an id-range scan with NO predicate on the
-    // primary key still plans O(surviving files) instead of full-scanning
-    // — the real user shape a single-column zone map whiffs on. Exact
-    // filter re-applied over survivors, so the result is byte-identical
-    // to the plain filtered scan the oracle runs.
-    "q_pruned_scan_2col" -> ((s, dir) => {
-      val tmp = stagedZonemap2(s, dir)
-      graft.storage.PrunedScan.readRangeMulti(s, tmp,
-          Seq(("event_id", 100L, 400L)))
-        .orderBy("ts", "event_id")
-    }),
-
-    // Z-order as the PRODUCTION layout (r17): the same-shaped events slice
-    // exported through RangeWriter.writeZOrdered — Morton-clustered files
-    // whose 2-column manifest the WRITER itself ships — then range-scanned on the SECOND dimension alone, the shape a
-    // lexicographic (x, y) sort cannot prune at all. Exact filter
-    // re-applied over survivors, so the result is byte-identical to the
-    // oracle's plain filtered scan.
-    "q_zorder_scan" -> ((s, dir) => {
-      val tmp = stagedZscan(s, dir)
-      graft.storage.PrunedScan.readRangeMulti(s, tmp,
-          Seq(("event_id", 1000L, 5000L)))
-        .orderBy("event_id")
-    }),
-
-    // Price-band scan over the REAL warehouse write path (r17): EURUSD
-    // ticks ingested through TickIngest.writeTicks (dedup-on-write, month
-    // partitions, manifests that now carry bid/ask secondary stats), then
-    // queried through Processor.queryTicks(bidRange) — the pruned read
-    // skips files whose per-file bid range can't reach the band, with the
-    // exact filter re-applied. events.ts is unique so dedup-on-write is
-    // the identity here and the oracle is the plain filtered projection.
-    "q_priceband" -> ((s, dir) =>
-      new graft.api.Processor(s, stagedPriceband(s, dir))
-        .queryTicks("EURUSD", bidRange = Some((100.0, 200.0)))),
-
-    // Zero-spread scan (r18, the last documented reference workload:
-    // `WHERE bid = ask`, docs/CLICKHOUSE_USER_GUIDE.md:450-454): same
-    // real ingest path as q_priceband but with a spread that cycles
-    // 0/0.25/0.5 by event_id, queried through queryTicks(zeroSpread) —
-    // files whose bid and ask ranges provably cannot overlap are pruned
-    // off the sidecars' bid/ask stats, with the exact `bid = ask` filter
-    // re-applied over the survivors. ts is unique among these rows, so
-    // dedup-on-write is the identity and the oracle is the plain
-    // filtered projection.
-    "q_zero_spread" -> ((s, dir) =>
-      new graft.api.Processor(s, stagedZeroSpread(s, dir))
-        .queryTicks("EURUSD", zeroSpread = true)),
-
-    // Bloom-sidecar point lookup (r18): the manifest carries per-file
-    // bloom sketches over xxhash64(user_id) built on the SAME single
-    // stats scan as the zone maps; on this hash-clustered layout every
-    // file spans ~the full user_id range (ranges prove nothing) but each
-    // user lives in exactly one file, so the driver plans O(values)
-    // files with zero data-file opens. Exact IN filter re-applied over
-    // survivors — byte-identical to the oracle's plain filtered scan.
-    "q_bloom_prune" -> ((s, dir) => {
-      val t = stagedBloomPoint(s, dir)
-      graft.storage.PrunedScan.readPoint(s, t, "user_id", Seq(3L, 7L, 11L))
-        .select("event_id", "ts", "user_id", "value")
-        .orderBy("event_id")
-    }),
-
-    // near-dup GROUPS via label propagation over LSH buckets — linear in
-    // docs×bands even on a fully-duplicated corpus (no pair enumeration).
-    // Runs to fixpoint, so the output is the exact connected components of
-    // the bucket graph — oracled against a DuckDB recursive-CTE closure
-    "q_dedup_groups" -> ((s, dir) =>
-      MinHash.nearDupGroups(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy("id")),
-
-    // Same groups via large-star/small-star contraction — the
-    // adversarial-topology path (O(log² n) rounds for ANY id placement,
-    // see ConnectedComponents.starContractWithRounds). Shares
-    // q_dedup_groups' oracle: both must equal the recursive-CTE closure.
-    "q_dedup_groups_star" -> ((s, dir) =>
-      MinHash.nearDupGroupsStar(Tables.documents(s, dir), "doc_id", "text")._1
-        .orderBy("id")),
-
-    // INCREMENTAL dedup: docs ending in 0 arrive as a "new batch" against
-    // the already-clustered rest; the batch is labeled via the stored
-    // (rep, band, bh) bucket index without re-clustering the corpus. New
-    // docs adopt reps, merge through the old corpus, or form new groups —
-    // the whole two-phase pipeline is mirrored in the oracle. NOTE: the
-    // measured time is dominated by the SETUP (clustering the 4/5 "old"
-    // corpus from scratch, which a real deployment amortizes across every
-    // batch); the incremental phase itself is O(batch) — the fixpoint runs
-    // only on the index slice whose buckets the batch touches
-    "q_dedup_incremental" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val oldDocs = docs.filter(col("doc_id") % 5 =!= 0)
-      val newDocs = docs.filter(col("doc_id") % 5 === 0)
-      // edges computed ONCE (persisted): feed the clustering and the
-      // index projection from the same pass — the signature scan is the
-      // expensive part of the setup phase
-      val oldEdges = MinHash.bandEdges(oldDocs, "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (oldLabels, _) = graft.operators.ConnectedComponents
-          .labelPropagateWithRounds(oldEdges, "id", Seq("band", "bh"))
-        val index = oldEdges.join(oldLabels, Seq("id"))
-          .select(col("group_rep"), col("band"), col("bh")).distinct()
-        val (labels, _) =
-          MinHash.nearDupGroupsIncremental(index, newDocs, "doc_id", "text")
-        // labels is O(batch) — cut its lineage so the corpus edge cache
-        // (the big block) can be dropped before the frame is consumed,
-        // instead of living in the block manager for the rest of a
-        // 165-query bench pass
-        org.apache.spark.sql.graft.bridge.cutLineage(labels).orderBy("id")
-      } finally oldEdges.unpersist(blocking = false)
-    }),
-
-    // RECONCILIATION of the incremental-dedup lifecycle: replay the
-    // q_dedup_incremental deployment (old corpus clustered, batch labeled
-    // against the stored index), take the ACCUMULATED label store
-    // (old-corpus labels ∪ incremental batch labels — exactly what a
-    // deployment has on disk), and emit the repair delta
-    // (id, old_rep, new_rep): the rows whose stored rep diverged from the
-    // full-recluster ground truth (bridge merges, lower-id adoptions).
-    // The oracle mirrors all three closures in SQL. Signatures are
-    // per-doc, so ONE signature pass over the whole corpus serves all
-    // three phases: old corpus and batch are `doc_id % 5` filters of the
-    // same persisted band-edge frame, and the ground-truth re-cluster
-    // (MinHash.reconcileFromEdges) runs on the frame itself.
-    "q_dedup_reconcile" -> ((s, dir) => {
-      val edges = MinHash.bandEdges(Tables.documents(s, dir), "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val oldEdges = edges.filter(col("id") % 5 =!= 0)
-        val newEdges = edges.filter(col("id") % 5 === 0)
-        val (oldLabels, _) = graft.operators.ConnectedComponents
-          .labelPropagateWithRounds(oldEdges, "id", Seq("band", "bh"))
-        val index = oldEdges.join(oldLabels, Seq("id"))
-          .select(col("group_rep"), col("band"), col("bh")).distinct()
-        val (newLabels, _) =
-          MinHash.nearDupGroupsIncrementalFromEdges(index, newEdges)
-        val stored = oldLabels.unionByName(newLabels)
-        val (_, _, repairs) = MinHash.reconcileFromEdges(edges, stored)
-        // the repair delta is tiny (only rows whose rep moved); cut its
-        // lineage so the persisted edge frame can be released here rather
-        // than leaking into the rest of the bench pass
-        org.apache.spark.sql.graft.bridge.cutLineage(repairs).orderBy("id")
-      } finally edges.unpersist(blocking = false)
-    }),
-
-    // deterministic 1/10 hash sample — pure filter, no shuffle, same row
-    // set at any scale/partitioning (operators.Sampling)
-    "q_sample" -> ((s, dir) =>
-      graft.operators.Sampling
-        .hashSample(Tables.documents(s, dir), "doc_id", num = 1, denom = 10)
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")),
-
-    // deterministic train/val/test split: per-(lang, split) counts
-    "q_split" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("split", graft.operators.Sampling.splitLabel(col("doc_id")))
-        .groupBy("lang", "split")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang", "split")),
-
-    // LEAKAGE-SAFE train/val/test split: the hash keys on the near-dup
-    // GROUP representative, so every member of a duplicate family lands in
-    // the same split — the guard against train/eval contamination via
-    // near-duplicates that a per-doc hash split cannot give. Docs with no
-    // shingles (no group) fall back to their own id (left join +
-    // coalesce). One fixpoint + one broadcastable label join on top of
-    // the shuffle-free hash filter.
-    "q_split_groupaware" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val groups = MinHash.nearDupGroups(docs, "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")
-      docs.join(groups, Seq("doc_id"), "left")
-        .withColumn("group_key", coalesce(col("group_rep"), col("doc_id")))
-        .select(
-          col("doc_id"),
-          col("group_key"),
-          graft.operators.Sampling.splitLabel(col("group_key")).as("split"))
-        .orderBy("doc_id")
-    }),
-
-    // class-balanced downsample: every lang stratum cut to the smallest
-    // stratum's size by hash order
-    "q_stratified" -> ((s, dir) =>
-      graft.operators.Sampling
-        .stratifiedEqualize(Tables.documents(s, dir), "lang", "doc_id")
-        .select(col("doc_id"), col("lang"), col("rk").cast("int").as("rk"))
-        .orderBy("lang", "rk")),
-
-    // domain-mixture sampling: per-source keep rates (the "3× wiki, 0.5×
-    // crawl" weighting step of a training mix) — deterministic hash filter,
-    // no shuffle, refinable per stratum
-    "q_mixture_sample" -> ((s, dir) =>
-      graft.operators.Sampling
-        .mixtureSample(Tables.documents(s, dir), "doc_id", "source",
-          Map("src0" -> 1000, "src1" -> 500, "src2" -> 250), defaultPm = 100)
-        .select("doc_id", "source")
-        .orderBy("doc_id")),
-
-    // deterministic per-epoch global corpus shuffle: range-partitioned sort
-    // on an exact-modular permutation key — the scale-correct "shuffle
-    // before each epoch" (no row_number bottleneck); epoch changes the
-    // permutation reproducibly
-    "q_epoch_shuffle" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          graft.operators.Sampling.epochShuffleKey(col("doc_id"), epoch = 3)
-            .as("skey"))
-        .orderBy("skey", "doc_id")),
-
-    // per-row weighted Bernoulli sample: keep probability n_chars/400
-    // (capped) — quality/length-weighted downsampling as a pure exact-hash
-    // filter, no shuffle (operators.Sampling.weightedSample)
-    "q_weighted_sample" -> ((s, dir) =>
-      graft.operators.Sampling
-        .weightedSample(Tables.documents(s, dir), "doc_id", "n_chars", cap = 400L)
-        .select("doc_id", "n_chars")
-        .orderBy("doc_id")),
-
-    // Count-Min sketch heavy hitters: d×w = 4×512 counter sketch over the
-    // token stream (fixed memory at ANY corpus size; cells partially
-    // aggregate map-side; the sketch broadcasts for estimation) next to
-    // exact counts — CMS guarantees est >= exact, overshoot = collision
-    // mass, both visible in the oracled output
-    "q_cms_heavy" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(explode(TF.tokens(col("text"))).as("token"))
-      val sketch = graft.operators.Sketches.cmsSketch(toks, "token", d = 4, w = 512)
-      val heavy = toks.groupBy("token").agg(count(lit(1)).as("exact_cnt"))
-        .filter(col("exact_cnt") >= 40)
-      graft.operators.Sketches.cmsEstimate(sketch, heavy, "token", d = 4, w = 512)
-        .withColumnRenamed("item", "token")
-        .join(heavy, "token")
-        .select(col("token"), col("exact_cnt"), col("est").as("cms_est"))
-        .orderBy("token")
-    }),
-
-    // deterministic HyperLogLog on the repo's 59-bit hash pair: registers
-    // and the integer-scaled harmonic sum are exact BIGINT (hash-oracled,
-    // unlike the engine-private approx_count_distinct sketch of
-    // q_hll_distinct), and the raw estimate is IEEE-deterministic — the
-    // mergeable distinct-count sketch a 100 TB pipeline ships between
-    // shards (register max is associative)
-    "q_hll_exact" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(explode(TF.tokens(col("text"))).as("token"))
-      val regs = graft.operators.Sketches.hllRegisters(toks, "token", m = 256)
-      val est = graft.operators.Sketches.hllEstimate(regs, m = 256)
-      val exact = toks.agg(countDistinct(col("token")).as("n_exact"))
-      est.crossJoin(broadcast(exact))
-        .select(col("n_exact"), col("n_buckets_used"), col("z_scaled"),
-          col("hll_est"))
-    }),
-
-    // per-group HLL: one 256-register sketch per language — the "distinct
-    // tokens per lang" data-card statistic in |langs|·256 state instead of
-    // a vocab-sized distinct per group, next to the exact counts
-    "q_hll_by_lang" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(col("lang"), explode(TF.tokens(col("text"))).as("token"))
-      val est = graft.operators.Sketches.hllEstimateBy(
-        graft.operators.Sketches.hllRegistersBy(toks, "token", Seq("lang"), m = 256),
-        Seq("lang"), m = 256)
-      val exact = toks.groupBy("lang")
-        .agg(countDistinct(col("token")).as("n_exact"))
-      est.join(exact, "lang")
-        .select(col("lang"), col("n_exact"), col("n_buckets_used"),
-          col("z_scaled"), col("hll_est"))
-        .orderBy("lang")
-    }),
-
-    // distributed linear-probe TRAINING (fasttext-style quality
-    // classifier's linear core): 3 full-batch GD iterations on hashed
-    // token-count features, all e6 fixed-point integers — training
-    // itself is bit-reproducible and oracle-replayed
-    // (operators.LinearProbe)
-    "q_linear_probe" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .withColumn("is_en", col("lang") === "en")
-      graft.operators.LinearProbe
-        .trainScores(docs, "doc_id", "text", "is_en",
-          m = 32, iters = 3, lrDen = 20000L)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy(col("score_e6").desc, col("doc_id"))
-        .limit(100)
-    }),
-
-    // DSIR data selection (Xie et al. 2023): importance weights that tilt
-    // the raw corpus toward a target subset (here: English docs) via
-    // hashed-unigram likelihood ratios — exact fixed-point log2 end to
-    // end, top-100 docs by weight (text.CorpusOps.dsirLogWeights)
-    "q_dsir_weights" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .withColumn("is_target", col("lang") === "en")
-      graft.text.CorpusOps
-        .dsirLogWeights(docs, "doc_id", "text", "is_target", m = 1024)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy(col("w_e6").desc, col("doc_id"))
-        .limit(100)
-    }),
-
-    // weighted PageRank over the nation-level trade graph (cust-nation →
-    // supp-nation, weight = lineitem multiplicity): fixed-iteration
-    // iterative graph compute as join + partial-agg rounds with lineage
-    // cuts — the domain-authority ranking a crawl pipeline scores source
-    // hosts with, in exact e6 integer arithmetic (operators.PageRank)
-    "q_pagerank" -> ((s, dir) => {
-      val edges = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "nation").select(col("n_nationkey").as("cnk"),
-          col("n_name").as("src")), col("c_nationkey") === col("cnk"))
-        .join(t(s, dir, "nation").select(col("n_nationkey").as("snk"),
-          col("n_name").as("dst")), col("s_nationkey") === col("snk"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      graft.operators.PageRank.weightedRanksE6(edges, iters = 5)
-        .orderBy(col("rank_e6").desc, col("node"))
-    }),
-
-    // the full dedup DECISION a trainer runs: near-dup groups (fixpoint
-    // label propagation) joined with the quality score, keeping the
-    // best-quality member per group (ties → min doc_id). min_by over a
-    // (4-score, id) struct = one partially-aggregated shuffle — no window
-    "q_dedup_keep_best" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val groups = MinHash.nearDupGroups(docs, "doc_id", "text")
-      val scored = docs.select(
-        col("doc_id").as("id"),
-        ((size(TF.rawTokens(col("text"))) >= 50 &&
-          size(TF.rawTokens(col("text"))) <= 20000).cast("int") +
-          (TF.alphaCount(col("text")) >= size(TF.rawTokens(col("text"))) * 2 &&
-            TF.alphaCount(col("text")) <= size(TF.rawTokens(col("text"))) * 12)
-            .cast("int") +
-          (TF.punctCount(col("text")) * 10 <= length(col("text"))).cast("int") +
-          (TF.digitCount(col("text")) * 5 <= length(col("text"))).cast("int"))
-          .cast("long").as("score"))
-      groups.join(scored, Seq("id"))
-        .groupBy("group_rep")
-        .agg(
-          count(lit(1)).as("n_members"),
-          max(col("score")).as("best_score"),
-          min_by(col("id"), struct(lit(4L) - col("score"), col("id")))
-            .as("keep_id"))
-        .orderBy("group_rep")
-    }),
-
-    // BPE-ish tokenization (letter runs / digit runs / punctuation runs):
-    // per-doc token + unique-token counts — the regex is RE2-compatible so
-    // both engines tokenize identically
-    "q_bpe_tokens" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          expr("regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\\\s]+', 0)")
-            .as("toks"))
-        .select(col("doc_id"),
-          size(col("toks")).cast("long").as("n_tokens"),
-          size(array_distinct(col("toks"))).cast("long").as("n_unique"))
-        .orderBy("doc_id")),
-
-    // ---- round 3: training-pipeline + relational widening ----------------
-
-    // TF-IDF term weighting: map-side-combinable tf, broadcastable df and
-    // corpus-size sides, top-5 terms per document. idf is the fixed-point
-    // integer log2 ([[log2e6Sql]]) so score = tf · idf_e6 is exact BIGINT
-    // arithmetic — no library-log 1-ulp latitude in the compared column.
-    "q_tfidf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, dir)
-      val toks = docs.select(col("doc_id"), explode(TF.tokens(col("text"))).as("token"))
-      val tf = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-      // idf is a pure function of (n_docs, df): evaluate the 20-step
-      // fixed-point log2 fold ONCE per vocab token on the df frame, not
-      // once per (doc, token) row (r18 — identical integers, ~|tf|/|vocab|
-      // fewer fold evaluations)
-      val idf = dfreq
-        .crossJoin(broadcast(nDocs))
-        .withColumn("idf_e6", expr(log2e6Sql("n_docs", "df")))
-        .select("token", "df", "idf_e6")
-      val scored = tf
-        .join(idf, "token")
-        .withColumn("score_e6", (col("tf") * col("idf_e6")).cast("long"))
-      val w = Window.partitionBy("doc_id").orderBy(col("score_e6").desc, col("token"))
-      scored
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .select(col("doc_id"), col("rnk").cast("int").as("rnk"), col("token"), col("score_e6"))
-        .orderBy("doc_id", "rnk")
-    }),
-
-    // Unigram-LM surprisal scoring: the corpus's own unigram counts act as
-    // the language model; each token costs log2(n_total/count) bits and a
-    // doc's mean surprisal is the model-based quality signal (high = rare
-    // vocabulary / noise, low = common boilerplate) — the classic
-    // perplexity-filter shape with the LM table joined in. Same fixed-point
-    // integer log2 as q_tfidf, so sums/means are exact BIGINT arithmetic.
-    // Scale: the unigram table is vocab-sized (broadcastable when small;
-    // AQE picks the join); the per-doc agg partially combines map-side.
-    "q_unigram_surprisal" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val toks = docs.select(col("doc_id"), explode(TF.tokens(col("text"))).as("token"))
-      val cnts = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
-      val total = toks.agg(count(lit(1)).as("n_total"))
-      // surprisal is a pure function of (n_total, cnt): run the log2 fold
-      // once per vocab entry on the count table, not once per token
-      // OCCURRENCE (r18 — identical integers, corpus-token× fewer folds)
-      val lm = cnts.crossJoin(broadcast(total))
-        .withColumn("s_e6", expr(log2e6Sql("n_total", "cnt")))
-        .select("token", "s_e6")
-      toks.join(lm, "token")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"), sum(col("s_e6")).as("sum_surprisal_e6"))
-        .withColumn("mean_surprisal_e6",
-          expr("sum_surprisal_e6 div n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // BPE tokenizer TRAINING (Sennrich et al. 2016): learn the first 8
-    // merge rules from the corpus's own word-frequency table — pair counts,
-    // lexicographic tie-breaks, and the left-to-right greedy merge pass are
-    // all pinned semantics a SQL engine reproduces exactly (see
-    // [[graft.text.BpeTrainer]]); the DuckDB oracle replays the entire
-    // training loop with per-word recursive-CTE merge walks
-    "q_bpe_train" -> ((s, dir) =>
-      graft.text.BpeTrainer
-        .train(Tables.documents(s, dir), "doc_id", "text", numMerges = 8)
-        .orderBy("merge_rank")),
-
-    // Bigram-LM surprisal with add-one smoothing (one LM order above
-    // q_unigram_surprisal; see [[graft.text.CorpusOps.bigramSurprisal]]) —
-    // every log2 is the exact fixed-point form, so it hash-matches
-    "q_bigram_lm" -> ((s, dir) =>
-      graft.text.CorpusOps
-        .bigramSurprisal(Tables.documents(s, dir), "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")),
-
-    // BM25 ranking for a fixed query-term set in EXACT integer arithmetic
-    // (see [[graft.text.CorpusOps.bm25]] for the k1=6/5, b=3/4 integer
-    // folding and the BIGINT-range analysis)
-    "q_bm25" -> ((s, dir) =>
-      graft.text.CorpusOps
-        .bm25(Tables.documents(s, dir), "doc_id", "text",
-          Seq("spark", "query", "table", "join", "stream"))
-        .withColumnRenamed("id", "doc_id")
-        .orderBy(desc("score_e6"), col("doc_id"))
-        .limit(100)),
-
-    // Corpus-wide boilerplate removal (CCNet/Gopher line-dedup shape at
-    // 3-token-chunk granularity — see [[graft.text.CorpusOps.removeBoilerplate]])
-    "q_boilerplate" -> ((s, dir) =>
-      graft.text.CorpusOps
-        .removeBoilerplate(Tables.documents(s, dir), "doc_id", "text",
-          chunkTokens = 3, maxOccurrences = 2)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")),
-
-    // Repetition quality signals (Gopher-style): duplicate-word and
-    // duplicate-3-gram fractions per document — exact integer counts, one
-    // floored double division
-    "q_rep_ngrams" -> ((s, dir) => {
-      val toks = TF.tokens(col("text"))
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          size(toks).cast("long").as("n_words"),
-          size(array_distinct(toks)).cast("long").as("n_uniq_words"),
-          greatest(size(toks) - lit(2), lit(0)).cast("long").as("n_3grams"),
-          size(TF.wordShingles(col("text"), 3)).cast("long").as("n_uniq_3grams"))
-        .withColumn("dup_word_frac",
-          when(col("n_words") > 0,
-            floor((col("n_words") - col("n_uniq_words")) * lit(1e6) / col("n_words")) / 1e6))
-        .withColumn("dup_3gram_frac",
-          when(col("n_3grams") > 0,
-            floor((col("n_3grams") - col("n_uniq_3grams")) * lit(1e6) / col("n_3grams")) / 1e6))
-        .orderBy("doc_id")
-    }),
-
-    // Multi-format source/sink round-trip (S-class coverage beyond the
-    // reference's CSV+Parquet): the same slice of `orders` is written to
-    // ORC, JSON-lines, and headered CSV, read back through each format
-    // reader with the explicit schema, and aggregated — identical
-    // (n_rows, sum_key, decimal-exact sum_price) per format proves the
-    // round-trip is lossless (Spark serializes doubles as shortest
-    // round-trippable decimal in the text formats). The oracle is the
-    // same aggregate computed once from the parquet source, expected
-    // verbatim for all three formats.
-    "q_format_roundtrip" -> ((s, dir) => {
-      val src = Tables.table(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      // the WRITE is part of what this query measures (the round-trip),
-      // so no memoized staging — but scratch under the swept stage root,
-      // not a stranded fresh /tmp dir per call
-      val tmp = Stage.scratch("fmt")
-      def roundtrip(fmt: String, opts: Map[String, String]): DataFrame = {
-        val p = s"$tmp/$fmt"
-        src.write.mode("overwrite").options(opts).format(fmt).save(p)
-        s.read.options(opts).schema(src.schema).format(fmt).load(p)
-      }
-      Seq(
-        "csv" -> roundtrip("csv", Map("header" -> "true")),
-        "json" -> roundtrip("json", Map.empty),
-        "orc" -> roundtrip("orc", Map.empty))
-        .map { case (name, df) =>
-          df.agg(
-            count(lit(1)).as("n_rows"),
-            sum(col("o_orderkey")).as("sum_key"),
-            dsum(col("o_totalprice")).as("sum_price"))
-            .withColumn("format", lit(name))
-        }
-        .reduce(_.unionByName(_))
-        .select("format", "n_rows", "sum_key", "sum_price")
-        .orderBy("format")
-    }),
-
-    // URL-level dedup with canonicalization (the first dedup stage of a
-    // web corpus pipeline). The corpus has no URL column, so the query
-    // derives messy-but-deterministic URLs from (source, doc_id) —
-    // mirrored verbatim in the oracle — with four casing / default-port /
-    // trailing-slash / tracking-param / fragment variants per path, so
-    // canonicalization produces genuine cross-variant collisions; the real
-    // operator (UrlOps.canonicalize + dedupByUrl) then ranks each
-    // canonical group. ScalaTested on adversarial URLs besides.
-    "q_url_dedup" -> ((s, dir) => {
-      val k = expr("doc_id div 4") % 60
-      val variant = col("doc_id") % 4
-      val url =
-        when(variant === 0, concat(lit("HTTP://WWW."), col("source"),
-          lit(".Example.COM/a/"), k.cast("string"), lit("?b=2&a=1")))
-        .when(variant === 1, concat(lit("http://"), col("source"),
-          lit(".example.com:80/a/"), k.cast("string"), lit("/?a=1&b=2")))
-        .when(variant === 2, concat(lit("http://www."), col("source"),
-          lit(".example.com/a/"), k.cast("string"), lit("?a=1&utm_source=rss&b=2")))
-        .otherwise(concat(lit("http://"), col("source"),
-          lit(".Example.com/a/"), k.cast("string"), lit("?b=2&a=1#frag")))
-      graft.text.UrlOps.dedupByUrl(
-          Tables.documents(s, dir).select(col("doc_id"), col("source"))
-            .withColumn("url", url),
-          "doc_id", "url")
-        .select("doc_id", "url", "canonical_url", "url_rank", "is_kept")
-        .orderBy("doc_id")
-    }),
-
-    // C4 line-level cleaning battery (Raffel et al. 2020 §2.2): per-line
-    // terminal-punctuation / min-5-words / javascript rules + doc-level
-    // lorem-ipsum / curly-brace / min-3-kept-lines rules. The synthetic
-    // corpus is single-line unpunctuated word soup, so the query first
-    // sentence-ifies it DETERMINISTICALLY (mirrored verbatim in the
-    // oracle): two literal word substitutions plant the javascript /
-    // lorem-ipsum / brace triggers, then every 10th token break becomes a
-    // ".\n" line break — after which the REAL C4 rules run and every rule
-    // fires. The operator itself (TextFunctions.c4KeptLines / c4Keep) is
-    // plain newline-line C4, additionally ScalaTested on realistic docs.
-    "q_c4_filter" -> ((s, dir) => {
-      val derived = regexp_replace(
-        replace(replace(col("text"), lit("spark"), lit("javascript")),
-          lit("vector"), lit("lorem ipsum {")),
-        "((\\S+\\s+){9}\\S+)\\s+", "$1.\n")
-      val kept = TF.c4KeptLines(col("c4text"))
-      Tables.documents(s, dir)
-        .withColumn("c4text", derived)
-        .select(
-          col("doc_id"),
-          size(TF.docLines(col("c4text"))).cast("long").as("n_lines"),
-          size(kept).cast("long").as("n_kept_lines"),
-          array_join(kept, "\n").as("clean_text"),
-          (!lower(col("c4text")).contains("lorem ipsum")).cast("int").as("f_lorem"),
-          (!col("c4text").contains("{")).cast("int").as("f_brace"),
-          TF.c4Keep(col("c4text")).as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    // Composite Gopher-style quality filter: every predicate is integer
-    // arithmetic (ratio bounds as cross-multiplications) so keep/reason
-    // flags hash-match exactly
-    "q_quality_filter" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          size(TF.rawTokens(col("text"))).cast("long").as("n_words"),
-          length(col("text")).cast("long").as("n_chars"),
-          TF.alphaCount(col("text")).cast("long").as("n_alpha"),
-          TF.digitCount(col("text")).cast("long").as("n_digit"),
-          TF.punctCount(col("text")).cast("long").as("n_punct"))
-        .select(
-          col("doc_id"), col("n_words"), col("n_chars"),
-          (col("n_words") >= 50 && col("n_words") <= 20000).cast("int").as("f_len"),
-          (col("n_alpha") >= col("n_words") * 2 && col("n_alpha") <= col("n_words") * 12)
-            .cast("int").as("f_wordlen"),
-          (col("n_punct") * 10 <= col("n_chars")).cast("int").as("f_symbol"),
-          (col("n_digit") * 5 <= col("n_chars")).cast("int").as("f_digit"))
-        .withColumn("keep",
-          (col("f_len") + col("f_wordlen") + col("f_symbol") + col("f_digit") === 4)
-            .cast("int"))
-        .orderBy("doc_id")),
-
-    // Character-distribution entropy quality score:
-    // H = log2(n) − Σ c·log2(c) / n over [a-z] counts. Every log2 is the
-    // fixed-point integer form ([[log2e6Sql]]), so the per-letter terms,
-    // their sum, and the final floor are ALL exact BIGINT arithmetic:
-    // entropy_e4 = (n·log2e6(n) − Σ c·log2e6(c)) div (100·n). The only
-    // doubles are the final /1e4 display scaling — nothing for a library
-    // log's last ulp to flip.
-    "q_entropy" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          explode(expr("regexp_extract_all(lower(text), '[a-z]', 0)")).as("ch"))
-        .groupBy("doc_id", "ch").agg(count(lit(1)).as("c"))
-        .groupBy("doc_id")
-        .agg(
-          sum(col("c")).as("n"),
-          count(lit(1)).cast("int").as("n_letters"),
-          sum(col("c") * expr(log2e6Sql("c", "1"))).as("slc_e6"))
-        .select(
-          col("doc_id"), col("n"), col("n_letters"),
-          (expr(s"(n * ${log2e6Sql("n", "1")} - slc_e6) div (100 * n)") / 1e4)
-            .as("entropy"))
-        .orderBy("doc_id")),
-
-    // Weighted mean (VWAP shape): decimal-exact numerator and denominator,
-    // then a single double division — the partial-aggregation order can't
-    // perturb the result
-    "q_weighted_avg" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("disc_rev"),
-          dsum(col("l_quantity")).as("qty"))
-        .withColumn("unit_rev", floor(col("disc_rev") / col("qty") * lit(1e6)) / 1e6)
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    // A-class: CUBE marginals over (order year, priority) with grouping
-    // indicators — completes the rollup/grouping-sets/cube triple
-    "q_cube" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(
-        year(col("o_orderdate")).cast("int").as("y"),
-        col("o_orderpriority").as("pri"),
-        col("o_totalprice"))
-      o.cube(col("y"), col("pri"))
-        .agg(
-          grouping(col("y")).cast("int").as("g_y"),
-          grouping(col("pri")).cast("int").as("g_p"),
-          count(lit(1)).as("n"),
-          dsum(col("o_totalprice")).as("total"))
-        .select(
-          coalesce(col("y"), lit(-1)).as("y"),
-          coalesce(col("pri"), lit("ALL")).as("pri"),
-          col("g_y"), col("g_p"), col("n"), col("total"))
-        .orderBy("y", "pri", "g_y", "g_p")
-    }),
-
-    // J-class: correlated EXISTS / NOT EXISTS subqueries through the SQL
-    // facade — Catalyst decorrelates both into semi/anti joins
-    "q_exists" -> ((s, dir) => {
-      t(s, dir, "customer").createOrReplaceTempView("v_customer")
-      t(s, dir, "orders").createOrReplaceTempView("v_orders")
-      s.sql("""
-        SELECT c_custkey, c_mktsegment
-        FROM v_customer c
-        WHERE EXISTS (SELECT 1 FROM v_orders o
-                      WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
-          AND NOT EXISTS (SELECT 1 FROM v_orders o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderpriority = '1-URGENT')
-        ORDER BY c_custkey""")
-    }),
-
-    // Calendar gap-fill + forward-fill: hourly grid per key, last
-    // observation carried forward via the tagged-union + ignoreNulls-last
-    // window (same machinery as the asof join, inlined)
-    "q_ffill" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = ev(s, dir).filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"),
-          lit(0).as("src"))
-      val grid = ev(s, dir).filter(col("user_id") < 50)
-        .select("user_id").distinct()
-        .select(col("user_id"),
-          explode(expr(
-            "sequence(timestamp'2024-01-05 00:00:00', timestamp'2024-01-12 00:00:00', interval 1 hour)"))
-            .as("ts"),
-          lit(null).cast("long").as("event_id"),
-          lit(null).cast("double").as("value"),
-          lit(1).as("src"))
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("src"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      e.unionByName(grid)
-        .withColumn("ffill", last(col("value"), ignoreNulls = true).over(w))
-        .filter(col("src") === 1)
-        .select("user_id", "ts", "ffill")
-        .orderBy("user_id", "ts")
-    }),
-
-    // §2.8 MapType surface: per-user event_type→count map assembled with
-    // map_from_entries, probed with element_at / map_keys / map_contains_key
-    "q_map_funcs" -> ((s, dir) =>
-      ev(s, dir)
-        .groupBy("user_id", "event_type").agg(count(lit(1)).as("c"))
-        .groupBy("user_id")
-        .agg(map_from_entries(
-          array_sort(collect_list(struct(col("event_type"), col("c"))))).as("m"))
-        .select(
-          col("user_id"),
-          size(map_keys(col("m"))).cast("int").as("n_types"),
-          coalesce(element_at(col("m"), "purchase"), lit(0L)).as("purchases"),
-          coalesce(element_at(col("m"), "error"), lit(0L)).as("errors"),
-          map_contains_key(col("m"), lit("signup")).cast("int").as("has_signup"))
-        .orderBy("user_id")),
-
-    // Per-label embedding centroids: posexplode to (label, pos) cells keeps
-    // the aggregation partially-combinable with no per-vector state — the
-    // centroid step of IVF/k-means at corpus scale
-    "q_centroid" -> ((s, dir) =>
-      Tables.embeddings(s, dir)
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("label", "pos")
-        .agg(count(lit(1)).as("n"), dsum(col("v").cast("double")).as("sv"))
-        .select(
-          col("label"), col("pos").cast("int").as("pos"), col("n"),
-          (floor(col("sv") / col("n") * lit(1e6)) / 1e6).as("mean_v"))
-        .orderBy("label", "pos")),
-
-    // EWMA final state per key, oracled: α=0.5 makes every fold step exact
-    // IEEE halving, and DuckDB list_reduce replays the identical sequential
-    // recursion (seed = first element) — bit-equal with no rounding at all.
-    // Complements the rows-only per-row q_ewma.
-    "q_ewma_fold" -> ((s, dir) =>
-      graft.operators.TimeSeries
-        .ewma(ev(s, dir).select("user_id", "ts", "event_id", "value"),
-          key = "user_id", time = "ts", tiebreak = "event_id",
-          value = "value", alpha = 0.5)
-        .groupBy("user_id")
-        .agg(max_by(col("ewma"), struct(col("ts"), col("event_id"))).as("ewma_last"))
-        .orderBy("user_id")),
-
-    // §2.8 date/interval arithmetic battery (all integer/date outputs)
-    "q_interval_arith" -> ((s, dir) =>
-      t(s, dir, "orders").select(
-          col("o_orderkey"),
-          to_date(col("o_orderdate")).as("d"),
-          date_add(to_date(col("o_orderdate")), 30).as("d_plus30"),
-          add_months(to_date(col("o_orderdate")), 2).as("d_plus2m"),
-          last_day(to_date(col("o_orderdate"))).as("eom"),
-          datediff(lit("1996-01-01").cast("date"), to_date(col("o_orderdate")))
-            .cast("int").as("days_to_96"),
-          quarter(col("o_orderdate")).cast("int").as("qtr"),
-          dayofweek(col("o_orderdate")).cast("int").as("dow"),
-          weekofyear(col("o_orderdate")).cast("int").as("woy"))
-        .orderBy("o_orderkey")),
-
-    // W-class: exact interpolated percentiles (percentile ≙ quantile_cont —
-    // verified bit-equal interpolation; the price median gets a floor guard)
-    "q_percentile_cont" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          expr("percentile(l_quantity, 0.25D)").as("p25"),
-          expr("percentile(l_quantity, 0.5D)").as("p50"),
-          expr("percentile(l_quantity, 0.9D)").as("p90"),
-          expr("floor(percentile(l_extendedprice, 0.5D) * 1e4) / 1e4").as("price_med"))
-        .orderBy("l_returnflag")),
-
-    // Training-sequence packing: concatenate each language's doc stream in
-    // doc_id order and split at a 2048-token context budget — pack id and
-    // in-pack offset fall out of a running cumulative sum (one window
-    // shuffle per key, integer-exact)
-    "q_seq_pack" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("lang").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.documents(s, dir)
-        .select(col("lang"), col("doc_id"),
-          TF.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .withColumn("cum", sum(col("n_tokens")).over(w))
-        .select(col("lang"), col("doc_id"), col("n_tokens"),
-          // `div`, not `/`: long/long `/` is DOUBLE division in Spark SQL
-          expr("(cum - n_tokens) div 2048").as("pack_id"),
-          ((col("cum") - col("n_tokens")) % 2048).as("pack_offset"))
-        .orderBy("lang", "doc_id")
-    }),
-
-    // Document chunking with stride/overlap (sliding context windows):
-    // starts every 256 tokens, 512-token chunks, short tail chunks dropped
-    // unless they are the document's only chunk
-    "q_chunk" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TF.tokenCount(col("text")).cast("long").as("n_tokens"))
-        .select(col("doc_id"), col("n_tokens"),
-          posexplode(expr("sequence(0L, greatest(n_tokens - 1L, 0L), 256L)"))
-            .as(Seq("chunk_idx", "start")))
-        .withColumn("chunk_len", least(lit(512L), col("n_tokens") - col("start")))
-        .filter(col("chunk_len") >= 64 || col("chunk_idx") === 0)
-        .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
-          col("start"), col("chunk_len"))
-        .orderBy("doc_id", "chunk_idx")),
-
-    // PII-shaped redaction: digit runs → <NUM>, email-shaped tokens →
-    // <EMAIL>, with redaction counts and a polynomial fingerprint of the
-    // redacted text proving byte-identical replacement semantics
-    "q_pii_redact" -> ((s, dir) => {
-      val redacted = regexp_replace(
-        regexp_replace(col("text"), lit("[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"), lit("<EMAIL>")),
-        lit("[0-9]+"), lit("<NUM>"))
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          regexp_count(col("text"), lit("[0-9]+")).cast("long").as("n_num_runs"),
-          regexp_count(col("text"), lit("[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"))
-            .cast("long").as("n_emails"),
-          length(redacted).cast("long").as("redacted_len"),
-          TF.fingerprint(redacted).as("redacted_fp"))
-        .orderBy("doc_id")
-    }),
-
-    // Eval-set contamination: which training docs share word-3-gram
-    // shingles with the held-out slice (doc_id % 100 == 0)? The eval
-    // shingle set is distinct-exploded and broadcastable; overlap counts
-    // are exact integers
-    "q_contamination" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), TF.wordShingles(col("text"), 3).as("sh"))
-      val evalSh = d.filter(col("doc_id") % 100 === 0)
-        .select(explode(col("sh")).as("g")).distinct()
-      val train = d.filter(col("doc_id") % 100 =!= 0)
-        .select(col("doc_id"), size(col("sh")).cast("long").as("n_shingles"),
-          explode(col("sh")).as("g"))
-      train.join(broadcast(evalSh), Seq("g"), "left_semi")
-        .groupBy("doc_id", "n_shingles")
-        .agg(count(lit(1)).as("n_shared"))
-        .select(col("doc_id"), col("n_shingles"), col("n_shared"),
-          (col("n_shared") * 10 >= col("n_shingles")).cast("int").as("contaminated"))
-        .orderBy("doc_id")
-    }),
-
-    // Dataset profiling: one stats row per column (nulls / distincts /
-    // min / max) — numeric extremes integer-scaled so their string repr is
-    // engine-independent
-    "q_profile" -> ((s, dir) => {
-      val e = ev(s, dir)
-      def prof(name: String, c: Column, minRepr: Column, maxRepr: Column) =
-        e.agg(
-          count(lit(1)).as("n_rows"),
-          sum(when(c.isNull, 1L).otherwise(0L)).as("n_null"),
-          countDistinct(c).as("n_distinct"),
-          minRepr.cast("string").as("min_repr"),
-          maxRepr.cast("string").as("max_repr"))
-          .select(lit(name).as("col_name"), col("*"))
-      prof("event_id", col("event_id"), min(col("event_id")), max(col("event_id")))
-        .unionByName(prof("user_id", col("user_id"),
-          min(col("user_id")), max(col("user_id"))))
-        .unionByName(prof("event_type", col("event_type"),
-          min(col("event_type")), max(col("event_type"))))
-        .unionByName(prof("value", col("value"),
-          floor(min(col("value")) * 1e6).cast("long"),
-          floor(max(col("value")) * 1e6).cast("long")))
-        .orderBy("col_name")
-    }),
-
-    // Feature scaling: per-event_type min-max normalization to [0,1] —
-    // tiny stats side broadcast back onto the stream, no window over the
-    // full table
-    "q_minmax_scale" -> ((s, dir) => {
-      val e = ev(s, dir).select("event_id", "event_type", "value")
-      val stats = e.groupBy("event_type")
-        .agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
-      e.join(broadcast(stats), "event_type")
-        .select(col("event_id"), col("event_type"),
-          when(col("vmax") =!= col("vmin"),
-            floor((col("value") - col("vmin")) * lit(1e6) / (col("vmax") - col("vmin"))) / 1e6)
-            .otherwise(0.0).as("scaled"))
-        .orderBy("event_id")
-    }),
-
-    // ---- round 6: warehouse-maintenance + graph/search/diversity ---------
-
-    // SCD2 dimension history from the events change-log: per user, runs of
-    // identical event_type collapse into validity intervals (two window
-    // functions over ONE key shuffle — Scd.scd2FromChangeLog)
-    "q_scd2" -> ((s, dir) =>
-      graft.operators.Scd.scd2FromChangeLog(
-        ev(s, dir), keys = Seq("user_id"), ts = "ts",
-        tiebreak = Seq("event_id"), attrs = Seq("event_type"))
-        .orderBy("user_id", "valid_from")),
-
-    // CDC merge: latest-change-wins upsert/delete batch (ts > cutoff,
-    // 'error' plays the delete op) applied to the current-state table
-    // (latest per-user state at the cutoff) — one argmax aggregation per
-    // side + one full-outer join, no window sort (Scd.applyChanges)
-    "q_cdc_merge" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val cutoff = lit("2024-01-15 00:00:00").cast("timestamp")
-      val current = e.filter(col("ts") <= cutoff)
-        .groupBy("user_id")
-        .agg(max_by(struct(col("event_type").as("state"), col("value")),
-          struct(col("ts"), col("event_id"))).as("__w"))
-        .select(col("user_id"), col("__w.state").as("state"),
-          col("__w.value").as("value"))
-      val changes = e.filter(col("ts") > cutoff)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"),
-          col("event_type").as("state"), col("value"))
-      graft.operators.Scd.applyChanges(current, changes,
-        keys = Seq("user_id"), ts = "ts", tiebreak = Seq("event_id"),
-        opCol = "op", payload = Seq("state", "value"))
-        .orderBy("user_id")
-    }),
-
-    // Snapshot diff: customer vs a deterministically mutated successor
-    // (%13 removed, %7 rebalanced, %5 re-segmented, %11 cloned under new
-    // keys) — added/removed/changed classification with per-column change
-    // lists from ONE full-outer join (SnapshotDiff.diff)
-    "q_snapshot_diff" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val after = cust.filter(col("c_custkey") % 13 =!= 0)
-        .withColumn("c_acctbal",
-          when(col("c_custkey") % 7 === 0, col("c_acctbal") + 100.0)
-            .otherwise(col("c_acctbal")))
-        .withColumn("c_mktsegment",
-          when(col("c_custkey") % 5 === 0, lit("MIGRATED"))
-            .otherwise(col("c_mktsegment")))
-        .unionByName(cust.filter(col("c_custkey") % 11 === 0)
-          .withColumn("c_custkey", col("c_custkey") + 1000000L))
-      graft.operators.SnapshotDiff.diff(cust, after, Seq("c_custkey"),
-        Seq("c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-        .orderBy("change", "c_custkey")
-    }),
-
-    // Exact triangle counts on the part co-purchase graph (parts sharing
-    // an order), degree-ordered node-iterator — per-node wedge fanout
-    // bounded O(√m) (Triangles.perNodeCounts); top-100 participants
-    "q_triangles" -> ((s, dir) => {
-      // co-purchase edges WITHOUT a lineitem self-join: one partial-agg
-      // groupBy to the per-order part set, then a narrow in-row pair
-      // explosion — same edge set as join-on-orderkey + u<v (Triangles
-      // dedups), but the fact table shuffles once as (order, parts)
-      // instead of twice through a join
-      val li = t(s, dir, "lineitem")
-      val edges = li.groupBy("l_orderkey")
-        .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
-        .select(explode(expr(
-          """flatten(transform(ps, (x, i) ->
-               transform(slice(ps, i + 2, size(ps)), y ->
-                 named_struct('u', x, 'v', y))))""")).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-      graft.operators.Triangles.perNodeCounts(edges, "u", "v")
-        .orderBy(col("n_tri").desc, col("node")).limit(100)
-    }),
-
-    // Edit-distance fuzzy dup pairs: LSH blocking (the q_minhash_lsh
-    // candidate set) verified by exact Levenshtein with a relative ≤20%
-    // threshold — integer dist + rel_e6 (FuzzyDedup.editDistancePairs)
-    "q_fuzzy_dedup" -> ((s, dir) =>
-      graft.text.FuzzyDedup.editDistancePairs(
-        Tables.documents(s, dir), "doc_id", "text")
-        .orderBy("id_a", "id_b")),
-
-    // Conjunctive keyword search over the inverted index: docs containing
-    // ALL query terms, scored by summed tf (InvertedIndex)
-    "q_inverted_search" -> ((s, dir) => {
-      val p = graft.text.InvertedIndex.postings(
-        Tables.documents(s, dir), "doc_id", "text")
-      graft.text.InvertedIndex.searchAll(p, Seq("spark", "window", "merge"))
-        .orderBy(col("score").desc, col("doc"))
-    }),
-
-    // MMR diversity re-rank over the int8 shortlist: greedy
-    // λ·rel − (1−λ)·maxSim selection in one consistent exact-integer
-    // scale (Mmr.rerank; 8 queries, top-5 from a 25-candidate shortlist)
-    "q_mmr" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      graft.vector.Mmr.rerank(emb, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", k = 5, shortlist = 25, lambdaTenths = 7)
-        .orderBy("query_id", "sel_rank")
-    }),
-
-    // Declarative data-quality audit over lineitem: the row-local battery
-    // folds into ONE scan; uniqueness adds one groupBy, referential
-    // integrity one broadcast anti-join (ConstraintAudit.audit)
-    "q_constraint_audit" -> ((s, dir) => {
-      import graft.operators.ConstraintAudit._
-      audit(t(s, dir, "lineitem"), Seq(
-        NotNull("l_orderkey_not_null", "l_orderkey"),
-        InRange("l_quantity_1_50", "l_quantity", 1, 50),
-        InRange("l_discount_0_01", "l_discount", 0, 0.1),
-        Check("l_ship_after_19920101",
-          col("l_shipdate") >= lit("1992-01-01").cast("timestamp")),
-        Check("l_price_positive", col("l_extendedprice") > 0),
-        Unique("l_order_line_unique", Seq("l_orderkey", "l_linenumber")),
-        ForeignKey("l_orderkey_in_orders", "l_orderkey",
-          t(s, dir, "orders"), "o_orderkey")))
-        .orderBy("constraint")
-    }),
-
-    // Funnel depth view→click→purchase anchored at each user's first view,
-    // chain within a 3-day window — k chained filter→per-user-min
-    // aggregations, no event-log self-join (EventSeq.anchoredFunnel)
-    "q_funnel" -> ((s, dir) =>
-      graft.operators.EventSeq.anchoredFunnel(ev(s, dir), "user_id", "ts",
-        Seq(col("event_type") === "view", col("event_type") === "click",
-          col("event_type") === "purchase"), windowSec = 259200L)
-        .orderBy("uid")),
-
-    // Cohort retention by epoch-week of first activity: (cohort, offset,
-    // distinct active users) — two aggregations + one key join
-    // (EventSeq.cohortRetention)
-    "q_cohort_retention" -> ((s, dir) =>
-      graft.operators.EventSeq.cohortRetention(ev(s, dir), "user_id", "ts",
-        c => floor(floor(c.cast("double")) / lit(604800.0)).cast("long"))
-        .orderBy("cohort", "period_offset")),
-
-    // Ordered-pattern match over per-user event-symbol strings (first
-    // letters are distinct across the 5 event types): did the user ever
-    // view, then later sign up, then later purchase?
-    // (EventSeq.sequenceMatch; deterministic sort_array ordering)
-    "q_seq_match" -> ((s, dir) =>
-      graft.operators.EventSeq.sequenceMatch(ev(s, dir), "user_id", "ts",
-        "event_id", substring(col("event_type"), 1, 1), "v.*s.*p")
-        .orderBy("uid")),
-
-    // First-order Markov transition matrix of event types (per-user lag
-    // window + one pair aggregation; probabilities exact e6 integers)
-    "q_markov" -> ((s, dir) =>
-      graft.operators.EventSeq.transitionMatrix(ev(s, dir), "user_id",
-        "ts", "event_id", "event_type")
-        .orderBy("from_state", "to_state")),
-
-    // Robust outlier fences: per-type median/MAD with |x−med| > 3·MAD
-    // counts — two exact percentile aggs, medians broadcast back
-    // (Stats.madOutliers)
-    "q_mad_outliers" -> ((s, dir) =>
-      graft.operators.Stats.madOutliers(
-        ev(s, dir).select("event_type", "value"), Seq("event_type"), "value")
-        .orderBy("event_type")),
-
-    // Per-type OLS trend of value over time (hours since 2024-01-01,
-    // centi-units) — one pass of exact BIGINT moments, closed-form
-    // slope/intercept via signed truncating division (Stats.groupOls)
-    "q_group_ols" -> ((s, dir) =>
-      graft.operators.Stats.groupOls(ev(s, dir), Seq("event_type"),
-        xCol = expr("(CAST(ts AS LONG) - 1704067200L) div 3600"),
-        yCol = floor(col("value") * 100))
-        .orderBy("event_type")),
-
-    // Market-basket pair lift over order baskets (support ≥ 2, exact e6
-    // lift, top-100) — basket-bounded pair explosion + broadcast singles
-    // (Itemsets.pairLift)
-    "q_itemset_lift" -> ((s, dir) =>
-      graft.operators.Itemsets.pairLift(t(s, dir, "lineitem"),
-        "l_orderkey", "l_partkey", minSupport = 2)
-        .orderBy(col("lift_e6").desc, col("item_a"), col("item_b"))
-        .limit(100)),
-
-    // J-class scale operator: BIG-BIG interval-overlap join — purchase
-    // attribution windows [ts, ts+2h) against click activity windows
-    // [ts, ts+1h) per user. The naive keyed theta join enumerates every
-    // same-key pair with the range predicate as a residual filter
-    // (quadratic per key); IntervalJoin widens the equi key to
-    // (user, 2h bucket) so only bucket-sharing pairs are enumerated —
-    // no broadcast, no nested loop, each qualifying pair emitted exactly
-    // once (attributed to the later start's bucket). The oracle runs the
-    // plain non-equi SQL: identical rows by construction.
-    "q_interval_overlap" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 2 HOURS")).as("e"),
-          col("event_id").as("lid"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 1 HOUR")).as("e"),
-          col("event_id").as("rid"))
-      graft.operators.IntervalJoin
-        .overlapJoin(purchases, clicks, Seq("user_id"), "s", "e", "s", "e",
-          suffix = "_r", bucketSeconds = 7200L)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("lid")).cast("long").as("sum_lid"),
-          sum(col("rid_r")).cast("long").as("sum_rid"))
-        .orderBy("user_id")
-    }),
-
-    // the AUTO-dispatched overlap join: bucket width MEASURED off the
-    // interval lengths (two narrow max/p99 probes, Probes
-    // .intervalLengthStats) instead of hand-picked — width is purely
-    // physical, so this hash-matches the same plain non-equi oracle
-    "q_interval_auto" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 2 HOURS")).as("e"),
-          col("event_id").as("lid"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 1 HOUR")).as("e"),
-          col("event_id").as("rid"))
-      graft.operators.IntervalJoin
-        .overlapJoinAuto(purchases, clicks, Seq("user_id"), "s", "e", "s", "e")
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("lid")).cast("long").as("sum_lid"),
-          sum(col("rid_r")).cast("long").as("sum_rid"))
-        .orderBy("user_id")
-    }),
-
-    // LEFT OUTER overlap join: purchases with no overlapping click survive
-    // NULL-filled (the reference's own join keeps unmatched left rows —
-    // ASOF LEFT, clickhouse_ohlc_generator.py:187-190). Same bucketed
-    // decomposition for the matched pairs; the unmatched remainder is a
-    // narrow signature anti join, no row ids, no broadcast. Oracled
-    // against DuckDB's plain LEFT JOIN with the range predicate in ON.
-    "q_interval_left" -> ((s, dir) => {
-      val e = ev(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 2 HOURS")).as("e"),
-          col("event_id").as("lid"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("s"),
-          (col("ts") + expr("INTERVAL 1 HOUR")).as("e"),
-          col("event_id").as("rid"))
-      graft.operators.IntervalJoin
-        .overlapJoinLeft(purchases, clicks, Seq("user_id"), "s", "e", "s", "e",
-          suffix = "_r", bucketSeconds = 7200L)
-        .groupBy("user_id")
-        .agg(count(col("rid_r")).as("n_matched"),
-          sum(when(col("rid_r").isNull, 1L).otherwise(0L)).as("n_unmatched"),
-          sum(col("lid")).cast("long").as("sum_lid"),
-          coalesce(sum(col("rid_r")), lit(0L)).cast("long").as("sum_rid"))
-        .orderBy("user_id")
-    })
-  )
-
-  /** A2 closure: the API supports 7 resample timeframes
-    * (`api.Processor.resampleOhlc`, reference
-    * `clickhouse_query_engine.py:177-190, 218-271`); 1m is oracled as
-    * q_ohlc_1m and 15m as the hand-written q_ohlc_resample_15m — these
-    * five close the family so every timeframe a reference user can ask
-    * for has its own green CORRECTNESS row. Both sides are generated from
-    * one template per timeframe (only the bucket width varies).
-    */
-  private val resampleTimeframes: Seq[(String, Int)] =
-    Seq("5m" -> 5, "30m" -> 30, "1h" -> 60, "4h" -> 240, "1d" -> 1440)
-
-  private def resampleQueries: Map[String, (SparkSession, String) => DataFrame] =
-    resampleTimeframes.map { case (tag, minutes) =>
-      s"q_ohlc_resample_$tag" -> ((s: SparkSession, dir: String) => {
-        val bars1m = Ohlc.bars(ev(s, dir), Seq("event_type"), "ts", "value", "event_id", 1)
-        Ohlc.withDerivedMetrics(
-            Ohlc.resample(bars1m, Seq("event_type"), "bar_ts", minutes))
-          .orderBy("event_type", "bar_ts")
-      })
-    }.toMap
-
-  // time_bucket's default origin (2000-01-03) sits a whole number of
-  // 4h/1d periods from the epoch Ohlc.bucketStart floors against, so the
-  // two bucketings agree for every timeframe here (and any minute width
-  // dividing a day).
-  private def resampleOracles(evTs: String): Map[String, String] =
-    resampleTimeframes.map { case (tag, minutes) =>
-      s"q_ohlc_resample_$tag" ->
-        s"""WITH pts AS (
-              SELECT event_type, time_bucket(INTERVAL 1 MINUTE, $evTs) AS bar_ts,
-                     $evTs AS ts, event_id, value
-              FROM events),
-            o AS (
-              SELECT *,
-                first_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS open_v,
-                last_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS close_v
-              FROM pts),
-            m1 AS (
-              SELECT event_type, bar_ts, min(open_v) AS open, max(value) AS high,
-                     min(value) AS low, min(close_v) AS close,
-                     CAST(count(*) AS BIGINT) AS tick_count
-              FROM o GROUP BY event_type, bar_ts),
-            mN AS (
-              SELECT event_type, time_bucket(INTERVAL $minutes MINUTE, bar_ts) AS bN,
-                     arg_min(open, bar_ts) AS open, max(high) AS high,
-                     min(low) AS low, arg_max(close, bar_ts) AS close,
-                     CAST(sum(tick_count) AS BIGINT) AS tick_count
-              FROM m1 GROUP BY event_type, bN)
-            SELECT event_type, bN AS bar_ts, open, high, low, close, tick_count,
-                   CASE WHEN tick_count > 0 THEN (high - low) / tick_count END AS range_per_tick,
-                   CASE WHEN tick_count > 0 THEN abs(close - open) / tick_count END AS body_per_tick
-            FROM mN ORDER BY event_type, bar_ts"""
-    }.toMap
-
-  // ---- oracle SQL ---------------------------------------------------------
-
-  /** DuckDB oracle for each query (ANSI-plus-DuckDB SQL over the same parquet
-    * tables). `events.ts` is TIMESTAMP_NS in the raw file; every oracle casts
-    * it to µs TIMESTAMP, matching the engine's normalization (truncation).
-    */
-  // Shared ground truth for q_dedup_groups AND q_dedup_groups_star: the
-  // same polynomial signature/band construction as q_minhash_lsh (k=16 but
-  // 4 bands × 4 rows), then a recursive transitive closure; group_rep =
-  // min reachable doc id. Closure size is Σ|component|² — fine for oracle
-  // scale, which is exactly why the engine side uses label propagation /
-  // star contraction instead.
-  private val dedupGroupsClosureCtes =
-    """WITH RECURSIVE toks AS (
-         SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-         FROM documents),
-       shs AS (
-         SELECT doc_id,
-           CASE WHEN len(t) >= 3
-             THEN list_distinct(list_transform(range(1, len(t) - 1),
-                    i -> array_to_string(t[i:i+2], ' ')))
-             ELSE [] END AS sh
-         FROM toks),
-       sig AS (
-         SELECT doc_id,
-           list_transform(range(0, 16), s ->
-             list_min(list_transform(sh, g ->
-               list_reduce(
-                 list_prepend(CAST(s + 1 AS BIGINT),
-                   list_transform(regexp_extract_all(g, '(?s).'),
-                     c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 131 + b) % 1000000007)))) AS sig
-         FROM shs WHERE len(sh) > 0),
-       bb AS (
-         SELECT doc_id, b.band AS band, b.bh AS bh
-         FROM (SELECT doc_id,
-                 unnest(list_transform(range(0, 4), j -> {'band': j, 'bh':
-                   list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                     (a, v) -> (a * 131 + (v % 1000000007)) % 1000000007)
-                   * 998244353 +
-                   list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                     (a, v) -> (a * 137 + (v % 998244353)) % 998244353)}))
-                 AS b
-               FROM sig)),
-       edges AS (
-         SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-         FROM bb a JOIN bb b ON a.band = b.band AND a.bh = b.bh),
-       reach AS (
-         SELECT src, dst FROM edges
-         UNION
-         SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)"""
-
-  private val dedupGroupsClosureSql = dedupGroupsClosureCtes + """
-       SELECT src AS id, min(dst) AS group_rep
-       FROM reach GROUP BY src ORDER BY id"""
-
-  // Shared CTE chain for the int8 retrieval oracles (q_ann_int8 and its
-  // recall evaluation): per-vector quantization (the q_vec_quant mirror),
-  // exact-BIGINT shortlist key, float-cosine re-rank of the shortlist.
-  private val annInt8Ctes =
-    """WITH base AS (
-         SELECT vec_id, embedding,
-           greatest(CAST(list_max(embedding) AS DOUBLE),
-                    -CAST(list_min(embedding) AS DOUBLE), 1e-12) AS amax
-         FROM embeddings),
-       coded AS (
-         SELECT vec_id, embedding, amax,
-           greatest(CAST(floor(amax * 1e6) AS BIGINT), CAST(1 AS BIGINT)) AS amax_e6,
-           list_transform(embedding,
-             x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / amax + 0.5) AS BIGINT))
-             AS codes
-         FROM base),
-       q AS (SELECT vec_id AS query_id, embedding AS qe, codes AS qc
-             FROM coded WHERE vec_id < 20),
-       s AS (
-         SELECT query_id, c.vec_id AS neighbor_id, qe, c.embedding AS ce,
-           c.amax_e6 * list_reduce(list_prepend(CAST(0 AS BIGINT),
-             list_transform(range(1, len(qc)+1), i -> qc[i] * c.codes[i])),
-             (x, y) -> x + y) AS int8_key
-         FROM q, coded c WHERE c.vec_id != query_id),
-       sl AS (
-         SELECT *, row_number() OVER (
-           PARTITION BY query_id ORDER BY int8_key DESC, neighbor_id) AS srank
-         FROM s),
-       re AS (
-         SELECT query_id, neighbor_id, int8_key, srank,
-           list_reduce(list_prepend(0.0, list_transform(range(1, len(qe)+1),
-             i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))), (x,y) -> x + y)
-           / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(qe)+1),
-                i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))), (x,y) -> x + y))
-            * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(ce)+1),
-                i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))), (x,y) -> x + y))) AS sim
-         FROM sl WHERE srank <= 20),
-       r AS (
-         SELECT *, CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-         FROM re)"""
-
-  // Shared CTE chain for the product-quantization oracles (q_ann_pq and its
-  // recall evaluation): subvector slicing, hash-seeded codebooks, ONE
-  // unrolled Lloyd iteration per subspace (L2² argmin assignment with ties
-  // on cell, decimal-exact per-component means, empty cells keep their
-  // centroid), corpus encoding, per-query distance LUTs, sequential-fold
-  // ADC, float-cosine re-rank — the full VectorFunctions.pqRerank mirror.
-  private val annPqCtes = {
-    def l2(a: String, b: String) =
-      s"""list_reduce(list_prepend(0.0, list_transform(range(1, len($a)+1),
-            i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE))
-               * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), (x,y) -> x + y)"""
-    val (m, ksub, iters) = (8, 16, 2)
-    // one unrolled Lloyd iteration: L2² argmin assignment (ties on cell),
-    // decimal-exact per-component means, empty cells keep their centroid
-    def lloyd(i: Int): String = {
-      val prev = s"cb${i - 1}"
-      s"""pa$i AS (
-         SELECT sub, cell, svec FROM (
-           SELECT v.sub, c.cell, v.svec,
-             row_number() OVER (PARTITION BY v.vec_id, v.sub
-               ORDER BY ${l2("v.svec", "c.cent")} ASC, c.cell) AS rk
-           FROM sv v JOIN $prev c ON c.sub = v.sub)
-         WHERE rk = 1),
-       pm$i AS (
-         SELECT sub, cell, pos,
-           CAST(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE)
-             / count(*) AS m
-         FROM (SELECT sub, cell, generate_subscripts(svec, 1) AS pos,
-                      unnest(svec) AS x FROM pa$i)
-         GROUP BY sub, cell, pos),
-       cb$i AS (
-         SELECT c.sub, c.cell, coalesce(u.newc, c.cent) AS cent
-         FROM $prev c LEFT JOIN (
-           SELECT sub, cell,
-             list_transform(list(m ORDER BY pos), x -> CAST(x AS FLOAT)) AS newc
-           FROM pm$i GROUP BY sub, cell) u
-           ON u.sub = c.sub AND u.cell = c.cell)"""
-    }
-    s"""WITH sv AS (
-         SELECT e.vec_id, s.sub,
-           e.embedding[s.sub*(len(e.embedding)//$m)+1 :
-                       s.sub*(len(e.embedding)//$m)+(len(e.embedding)//$m)] AS svec
-         FROM embeddings e CROSS JOIN (SELECT unnest(range($m)) AS sub) s),
-       pqseeds AS (
-         SELECT vec_id FROM embeddings
-         ORDER BY ((vec_id % 1000000007) * 2654435761) % 1000000007, vec_id
-         LIMIT $ksub),
-       cb0 AS (
-         SELECT v.sub, v.vec_id AS cell, v.svec AS cent
-         FROM sv v JOIN pqseeds d ON d.vec_id = v.vec_id),
-       ${(1 to iters).map(lloyd).mkString(",\n       ")},
-       codes AS (
-         SELECT vec_id, sub, cell FROM (
-           SELECT v.vec_id, v.sub, c.cell,
-             row_number() OVER (PARTITION BY v.vec_id, v.sub
-               ORDER BY ${l2("v.svec", "c.cent")} ASC, c.cell) AS rk
-           FROM sv v JOIN cb$iters c ON c.sub = v.sub)
-         WHERE rk = 1),
-       lut AS (
-         SELECT v.vec_id AS query_id, v.sub, c.cell,
-           ${l2("v.svec", "c.cent")} AS d
-         FROM sv v JOIN cb$iters c ON c.sub = v.sub
-         WHERE v.vec_id < 20),
-       adc AS (
-         SELECT l.query_id, cd.vec_id AS neighbor_id,
-           list_reduce(list_prepend(0.0, list(l.d ORDER BY l.sub)),
-             (x,y) -> x + y) AS adc
-         FROM codes cd JOIN lut l ON l.sub = cd.sub AND l.cell = cd.cell
-         WHERE cd.vec_id <> l.query_id
-         GROUP BY l.query_id, cd.vec_id),
-       psl AS (
-         SELECT *, row_number() OVER (
-           PARTITION BY query_id ORDER BY adc ASC, neighbor_id) AS srank
-         FROM adc),
-       pre AS (
-         SELECT query_id, neighbor_id, adc, srank,
-           list_reduce(list_prepend(0.0, list_transform(range(1, len(qe.embedding)+1),
-             i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-           / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(qe.embedding)+1),
-                i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(qe.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-            * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(ce.embedding)+1),
-                i -> CAST(ce.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))), (x,y) -> x + y)))
-           AS sim
-         FROM psl
-         JOIN embeddings qe ON qe.vec_id = psl.query_id
-         JOIN embeddings ce ON ce.vec_id = psl.neighbor_id
-         WHERE srank <= 50),
-       pr AS (
-         SELECT *, CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-         FROM pre)"""
-  }
-
-  def oracleSql: Map[String, String] = {
-    val evTs = "CAST(ts AS TIMESTAMP)"
-    val base = Map(
-      "q_ticks_range" ->
-        s"""SELECT event_id, $evTs AS ts, user_id, value FROM events
-            WHERE event_type = 'purchase'
-              AND $evTs >= TIMESTAMP '2024-01-05 00:00:00'
-              AND $evTs <= TIMESTAMP '2024-01-20 23:59:59.999999'
-            ORDER BY ts, event_id""",
-
-      "q_cursor_page" ->
-        s"""SELECT event_id, $evTs AS ts, value FROM events
-            WHERE $evTs > TIMESTAMP '2024-01-15 12:00:00'
-            ORDER BY ts, event_id LIMIT 100""",
-
-      // union of 8 keyset pages of 500 == the direct scan's first 4000 rows
-      "q_batch_pages" ->
-        s"""SELECT event_id, $evTs AS ts, value FROM events
-            WHERE $evTs > TIMESTAMP '2024-01-10 00:00:00'
-            ORDER BY ts, event_id LIMIT 4000""",
-
-      "q_limit_offset" ->
-        s"""SELECT event_id, $evTs AS ts, value FROM events
-            ORDER BY ts, event_id LIMIT 50 OFFSET 100""",
-
-      "q_topk" ->
-        """SELECT event_id, user_id, value FROM events
-           ORDER BY value DESC, event_id LIMIT 20""",
-
-      "q_ohlc_1m" ->
-        s"""WITH pts AS (
-              SELECT event_type, time_bucket(INTERVAL 1 MINUTE, $evTs) AS bar_ts,
-                     $evTs AS ts, event_id, value
-              FROM events),
-            o AS (
-              SELECT *,
-                first_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS open_v,
-                last_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS close_v
-              FROM pts)
-            SELECT event_type, bar_ts, min(open_v) AS open, max(value) AS high,
-                   min(value) AS low, min(close_v) AS close,
-                   CAST(count(*) AS BIGINT) AS tick_count
-            FROM o GROUP BY event_type, bar_ts
-            ORDER BY event_type, bar_ts""",
-
-      // the incremental view's ground truth IS the full recompute: same
-      // oracle as q_ohlc_1m over ALL events — the split/merge on the
-      // Spark side must be invisible in the result
-      "q_ohlc_incremental" ->
-        s"""WITH pts AS (
-              SELECT event_type, time_bucket(INTERVAL 1 MINUTE, $evTs) AS bar_ts,
-                     $evTs AS ts, event_id, value
-              FROM events),
-            o AS (
-              SELECT *,
-                first_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS open_v,
-                last_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS close_v
-              FROM pts)
-            SELECT event_type, bar_ts, min(open_v) AS open, max(value) AS high,
-                   min(value) AS low, min(close_v) AS close,
-                   CAST(count(*) AS BIGINT) AS tick_count
-            FROM o GROUP BY event_type, bar_ts
-            ORDER BY event_type, bar_ts""",
-
-      // same bars as q_ohlc_1m: both run the bar kernel, the oracle is
-      // shared
-      "q_ohlc_fused" ->
-        s"""WITH pts AS (
-              SELECT event_type, time_bucket(INTERVAL 1 MINUTE, $evTs) AS bar_ts,
-                     $evTs AS ts, event_id, value
-              FROM events),
-            o AS (
-              SELECT *,
-                first_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS open_v,
-                last_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS close_v
-              FROM pts)
-            SELECT event_type, bar_ts, min(open_v) AS open, max(value) AS high,
-                   min(value) AS low, min(close_v) AS close,
-                   CAST(count(*) AS BIGINT) AS tick_count
-            FROM o GROUP BY event_type, bar_ts
-            ORDER BY event_type, bar_ts""",
-
-      "q_ohlc_resample_15m" ->
-        s"""WITH pts AS (
-              SELECT event_type, time_bucket(INTERVAL 1 MINUTE, $evTs) AS bar_ts,
-                     $evTs AS ts, event_id, value
-              FROM events),
-            o AS (
-              SELECT *,
-                first_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS open_v,
-                last_value(value) OVER (PARTITION BY event_type, bar_ts
-                  ORDER BY ts, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS close_v
-              FROM pts),
-            m1 AS (
-              SELECT event_type, bar_ts, min(open_v) AS open, max(value) AS high,
-                     min(value) AS low, min(close_v) AS close,
-                     CAST(count(*) AS BIGINT) AS tick_count
-              FROM o GROUP BY event_type, bar_ts),
-            m15 AS (
-              SELECT event_type, time_bucket(INTERVAL 15 MINUTE, bar_ts) AS b15,
-                     arg_min(open, bar_ts) AS open, max(high) AS high,
-                     min(low) AS low, arg_max(close, bar_ts) AS close,
-                     CAST(sum(tick_count) AS BIGINT) AS tick_count
-              FROM m1 GROUP BY event_type, b15)
-            SELECT event_type, b15 AS bar_ts, open, high, low, close, tick_count,
-                   CASE WHEN tick_count > 0 THEN (high - low) / tick_count END AS range_per_tick,
-                   CASE WHEN tick_count > 0 THEN abs(close - open) / tick_count END AS body_per_tick
-            FROM m15 ORDER BY event_type, bar_ts""",
-
-      // Full replay of the 27-column enriched OHLC: ASOF join, minute agg,
-      // tz labels, and the interval/holiday flag joins over the calendar
-      // parquet that graft.Verify dumps next to the query outputs
-      // (__VERIFY_OUT__ is substituted with the actual outDir by Verify).
-      "q_ohlc_enriched" -> {
-        val flagCases = graft.calendar.ExchangeRegistry.all.map(e =>
-          s"""max(CASE WHEN iv.exchange = '${e.key}' AND s.timestamp >= iv.open_ts
-                        AND s.timestamp < iv.close_ts THEN 1 ELSE 0 END)
-                AS is_${e.key}_session""").mkString(",\n              ")
-        val flagNames = graft.calendar.ExchangeRegistry.all
-          .map(e => s"f.is_${e.key}_session").mkString(", ")
-        s"""WITH raw AS (
-              SELECT CASE WHEN user_id % 2 = 0 THEN 'EURUSD' ELSE 'GBPUSD' END AS instrument,
-                     $evTs AS ts, floor(value * 64) / 64 AS bid,
-                     floor(value * 64) / 64 + 0.25 * (1 + event_id % 3) AS ask
-              FROM events WHERE event_type = 'purchase'),
-            std AS (
-              SELECT CASE WHEN user_id % 2 = 0 THEN 'EURUSD' ELSE 'GBPUSD' END AS instrument,
-                     $evTs AS ts, floor(value * 64) / 64 AS bid,
-                     floor(value * 64) / 64 + 0.25 * (1 + event_id % 3) AS ask
-              FROM events WHERE event_type = 'click'),
-            j AS (
-              SELECT r.instrument, r.ts, r.bid, r.ask,
-                     s.ts AS ts_std, s.bid AS bid_std, s.ask AS ask_std
-              FROM raw r ASOF LEFT JOIN std s
-                ON r.instrument = s.instrument AND r.ts >= s.ts),
-            bars AS (
-              SELECT instrument, date_trunc('minute', ts) AS timestamp,
-                     arg_min(bid, ts) AS open, max(bid) AS high,
-                     min(bid) AS low, arg_max(bid, ts) AS close,
-                     avg(ask - bid) AS raw_spread_avg,
-                     avg(ask_std - bid_std) AS standard_spread_avg,
-                     CAST(count(*) AS INTEGER) AS tick_count_raw_spread,
-                     CAST(count(ts_std) AS INTEGER) AS tick_count_standard
-              FROM j GROUP BY 1, 2),
-            sess AS (
-              SELECT *,
-                CAST(hour((timestamp AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York') AS INTEGER) AS ny_hour,
-                CAST(hour((timestamp AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/London') AS INTEGER) AS london_hour
-              FROM bars),
-            sess2 AS (
-              SELECT *,
-                CASE WHEN ny_hour BETWEEN 9 AND 16 THEN 'NY_Session'
-                     WHEN ny_hour BETWEEN 17 AND 20 THEN 'NY_After_Hours'
-                     ELSE 'NY_Closed' END AS ny_session,
-                CASE WHEN london_hour BETWEEN 8 AND 16 THEN 'London_Session'
-                     ELSE 'London_Closed' END AS london_session
-              FROM sess),
-            flags AS (
-              SELECT s.instrument, s.timestamp,
-              $flagCases
-              FROM sess2 s LEFT JOIN read_parquet(
-                '__VERIFY_OUT__/q_calendar_intervals/*.parquet') iv
-                ON CAST(s.timestamp AS DATE) = iv.utc_date
-              GROUP BY 1, 2),
-            hol AS (
-              SELECT date,
-                     max(CASE WHEN exchange = 'nyse' THEN 1 ELSE 0 END) AS h_us,
-                     max(CASE WHEN exchange = 'lse' THEN 1 ELSE 0 END) AS h_uk
-              FROM read_parquet('__VERIFY_OUT__/q_calendar_holidays/*.parquet')
-              GROUP BY 1)
-            SELECT s.instrument, s.timestamp, s.open, s.high, s.low, s.close,
-                   s.raw_spread_avg, s.standard_spread_avg,
-                   s.tick_count_raw_spread, s.tick_count_standard,
-                   s.ny_hour, s.london_hour, s.ny_session, s.london_session,
-                   coalesce(h.h_us, 0) AS is_us_holiday,
-                   coalesce(h.h_uk, 0) AS is_uk_holiday,
-                   coalesce(CAST(h.h_us = 1 AND h.h_uk = 1 AS INTEGER), 0) AS is_major_holiday,
-                   $flagNames
-            FROM sess2 s
-            JOIN flags f ON s.instrument = f.instrument AND s.timestamp = f.timestamp
-            LEFT JOIN hol h ON CAST(s.timestamp AS DATE) = h.date
-            ORDER BY s.instrument, s.timestamp"""
-      },
-
-      "q_minute_join" ->
-        s"""WITH p AS (
-              SELECT date_trunc('minute', $evTs) AS minute,
-                     CAST(count(*) AS BIGINT) AS n_purchase,
-                     CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS v_purchase
-              FROM events WHERE event_type = 'purchase' GROUP BY 1),
-            c AS (
-              SELECT date_trunc('minute', $evTs) AS minute,
-                     CAST(count(*) AS BIGINT) AS n_click,
-                     CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS v_click
-              FROM events WHERE event_type = 'click' GROUP BY 1)
-            SELECT p.minute, p.n_purchase, p.v_purchase, c.n_click, c.v_click
-            FROM p LEFT JOIN c ON p.minute = c.minute
-            ORDER BY p.minute""",
-
-      "q_asof_join" -> asofEventsOracleSql,
-      "q_asof_auto" -> asofEventsOracleSql,
-      "q_asof_window" -> asofEventsOracleSql,
-      "q_asof_bucketed" -> asofEventsOracleSql,
-
-      "q_dedup" ->
-        s"""SELECT user_id, minute, event_id, ts, value FROM (
-              SELECT user_id, date_trunc('minute', $evTs) AS minute, event_id,
-                     $evTs AS ts, value,
-                     row_number() OVER (
-                       PARTITION BY user_id, date_trunc('minute', $evTs)
-                       ORDER BY $evTs, event_id) AS rn
-              FROM events) WHERE rn = 1
-            ORDER BY user_id, minute""",
-
-      "q_window_lag" ->
-        s"""SELECT user_id, $evTs AS ts, event_id, value,
-                   lag(value) OVER w AS prev_value,
-                   value - lag(value) OVER w AS delta
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY $evTs, event_id)
-            ORDER BY user_id, ts, event_id""",
-
-      "q_rolling_1h" ->
-        s"""SELECT event_id, user_id, $evTs AS ts,
-                   CAST(count(*) OVER w AS BIGINT) AS cnt_1h,
-                   CAST(sum(CAST(value AS DECIMAL(38,6))) OVER w AS DOUBLE) AS sum_1h
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us($evTs)
-              RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-            ORDER BY user_id, ts, event_id""",
-
-      "q_gap_months" ->
-        """SELECT month FROM (
-             SELECT CAST(unnest(generate_series(DATE '1994-01-01',
-               DATE '2002-12-01', INTERVAL 1 MONTH)) AS DATE) AS month)
-           WHERE month NOT IN (
-             SELECT DISTINCT CAST(date_trunc('month', o_orderdate) AS DATE)
-             FROM orders)
-           ORDER BY month""",
-
-      "q_coverage" ->
-        s"""SELECT * FROM (
-              SELECT 'events' AS source, CAST(count(*) AS BIGINT) AS row_count,
-                     CAST(min(ts) AS TIMESTAMP) AS min_ts,
-                     CAST(max(ts) AS TIMESTAMP) AS max_ts
-              FROM events
-              UNION ALL
-              SELECT 'orders', CAST(count(*) AS BIGINT),
-                     min(o_orderdate), max(o_orderdate)
-              FROM orders)
-            ORDER BY source""",
-
-      "q_distinct_types" ->
-        "SELECT DISTINCT event_type FROM events ORDER BY event_type",
-
-      "q_distinct_count" ->
-        """SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS users,
-                  CAST(count(DISTINCT event_type) AS BIGINT) AS types,
-                  CAST(count(DISTINCT (user_id, event_type)) AS BIGINT) AS user_type_pairs
-           FROM events""",
-
-      "q1_pricing" ->
-        """SELECT l_returnflag, l_linestatus,
-             CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_base_price,
-             CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS sum_disc_price,
-             CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS avg_qty,
-             CAST(count(*) AS BIGINT) AS count_order
-           FROM lineitem
-           WHERE l_shipdate <= TIMESTAMP '2000-01-01 00:00:00'
-           GROUP BY l_returnflag, l_linestatus
-           ORDER BY l_returnflag, l_linestatus""",
-
-      "q_join_agg" ->
-        """SELECT r_name, n_name, CAST(count(*) AS BIGINT) AS n_cust,
-             CAST(sum(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS acctbal
-           FROM customer
-           JOIN nation ON c_nationkey = n_nationkey
-           JOIN region ON n_regionkey = r_regionkey
-           GROUP BY r_name, n_name
-           ORDER BY r_name, n_name""",
-
-      "q_semi_join" ->
-        """SELECT c_custkey, c_name FROM customer
-           WHERE EXISTS (SELECT 1 FROM orders
-             WHERE o_custkey = c_custkey AND o_totalprice > 200000)
-           ORDER BY c_custkey""",
-
-      "q_anti_join" ->
-        """SELECT o_orderkey, o_totalprice FROM orders
-           WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-           ORDER BY o_orderkey""",
-
-      "q_outer_join" ->
-        """WITH oc AS (
-             SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders
-             FROM orders GROUP BY o_custkey)
-           SELECT COALESCE(c_custkey, o_custkey) AS custkey,
-                  CAST(c_custkey IS NOT NULL AS INTEGER) AS has_customer,
-                  COALESCE(n_orders, 0) AS n_orders
-           FROM customer FULL OUTER JOIN oc ON c_custkey = o_custkey
-           ORDER BY custkey""",
-
-      "q_top_revenue" ->
-        """SELECT o_orderkey, o_orderdate,
-             CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-           FROM customer
-           JOIN orders ON c_custkey = o_custkey
-           JOIN lineitem ON o_orderkey = l_orderkey
-           WHERE c_mktsegment = 'BUILDING'
-             AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-             AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-           GROUP BY o_orderkey, o_orderdate
-           ORDER BY revenue DESC, o_orderkey LIMIT 10""",
-
-      "q_scalar_funcs" ->
-        """SELECT o_orderkey,
-             CAST(year(o_orderdate) AS INTEGER) AS y,
-             CAST(month(o_orderdate) AS INTEGER) AS m,
-             CAST(o_orderdate + INTERVAL 1 MONTH AS DATE) AS next_month,
-             CAST(date_diff('month', DATE '1995-01-01',
-               CAST(date_trunc('month', o_orderdate) AS DATE)) AS DOUBLE) AS months_since,
-             strftime(o_orderdate, '%Y%m') AS yyyymm,
-             upper(o_orderpriority) AS pri_upper,
-             CASE WHEN o_totalprice < 50000 THEN 'low'
-                  WHEN o_totalprice < 150000 THEN 'mid'
-                  ELSE 'high' END AS band,
-             CASE WHEN o_totalprice > 0 THEN abs(o_totalprice) / 1000.0 END AS kprice
-           FROM orders ORDER BY o_orderkey""",
-
-      "q_cond_agg" ->
-        """SELECT event_type, CAST(count(*) AS BIGINT) AS n_total,
-             CAST(count(CASE WHEN value > 100 THEN 1 END) AS BIGINT) AS n_hi,
-             CASE WHEN count(*) > 0
-               THEN CAST(count(CASE WHEN value > 100 THEN 1 END) AS DOUBLE) / count(*)
-             END AS share_hi
-           FROM events GROUP BY event_type ORDER BY event_type""",
-
-      "q_tz_sessions" ->
-        s"""SELECT event_id,
-              CAST(hour(($evTs AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York') AS INTEGER) AS ny_hour,
-              CAST(hour(($evTs AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/London') AS INTEGER) AS london_hour,
-              CASE WHEN hour(($evTs AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York') BETWEEN 9 AND 16 THEN 'NY_Session'
-                   WHEN hour(($evTs AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York') BETWEEN 17 AND 20 THEN 'NY_After_Hours'
-                   ELSE 'NY_Closed' END AS ny_session,
-              CASE WHEN hour(($evTs AT TIME ZONE 'UTC') AT TIME ZONE 'Europe/London') BETWEEN 8 AND 16 THEN 'London_Session'
-                   ELSE 'London_Closed' END AS london_session,
-              CAST(dayofweek($evTs) IN (0, 6) AS INTEGER) AS is_weekend
-            FROM events ORDER BY event_id""",
-
-      "q_sessionize" ->
-        s"""WITH e AS (
-              SELECT user_id, $evTs AS ts, event_id FROM events),
-            d AS (
-              SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-                              OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                         THEN 1 ELSE 0 END AS new_s
-              FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            s AS (
-              SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS UNBOUNDED PRECEDING) AS session_id
-              FROM d)
-            SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-                   min(ts) AS session_start, max(ts) AS session_end,
-                   CAST(count(*) AS BIGINT) AS n_events
-            FROM s GROUP BY user_id, session_id
-            ORDER BY user_id, session_id""",
-
-      "q_session_window" ->
-        s"""WITH e AS (
-              SELECT user_id, $evTs AS ts, event_id FROM events),
-            d AS (
-              SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-                              OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-                         THEN 1 ELSE 0 END AS new_s
-              FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-            s AS (
-              SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS UNBOUNDED PRECEDING) AS session_id
-              FROM d)
-            SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-                   CAST(count(*) AS BIGINT) AS n_events
-            FROM s GROUP BY user_id, session_id
-            ORDER BY user_id, session_start""",
-
-      "q_quantiles" ->
-        """SELECT event_type,
-             round(quantile_cont(value, 0.5), 6) AS p50,
-             round(quantile_cont(value, 0.9), 6) AS p90,
-             round(quantile_cont(value, 0.99), 6) AS p99,
-             CAST(count(*) AS BIGINT) AS n
-           FROM events GROUP BY event_type ORDER BY event_type""",
-
-      "q_autocorr" ->
-        s"""WITH pairs AS (
-              SELECT event_type, value AS x,
-                lag(value) OVER (PARTITION BY event_type
-                  ORDER BY $evTs, event_id) AS y
-              FROM events),
-            agged AS (
-              SELECT event_type,
-                CAST(count(*) AS DOUBLE) AS n,
-                CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-                CAST(sum(CAST(y AS DECIMAL(38,6))) AS DOUBLE) AS sy,
-                CAST(sum(CAST(x * y AS DECIMAL(38,6))) AS DOUBLE) AS sxy,
-                CAST(sum(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxx,
-                CAST(sum(CAST(y * y AS DECIMAL(38,6))) AS DOUBLE) AS syy
-              FROM pairs WHERE y IS NOT NULL GROUP BY event_type)
-            SELECT event_type, CAST(n AS BIGINT) AS n,
-              (n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) AS autocorr
-            FROM agged ORDER BY event_type""",
-
-      "q_cosine_pairs" ->
-        """WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
-           p AS (
-             SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               list_reduce(list_prepend(0.0, list_transform(range(1, len(a.embedding)+1),
-                 i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(a.embedding)+1),
-                    i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-                * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(b.embedding)+1),
-                    i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), (x,y) -> x + y))) AS sim
-             FROM e a JOIN e b ON a.vec_id < b.vec_id)
-           SELECT id_a, id_b, sim FROM p WHERE sim >= 0.25
-           ORDER BY id_a, id_b""",
-
-      "q_text_stats" ->
-        """SELECT doc_id,
-             CAST(length(text) AS INTEGER) AS n_chars_m,
-             CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INTEGER) AS n_tokens,
-             CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS INTEGER) AS n_alpha,
-             CAST(len(regexp_extract_all(text, '[0-9]')) AS INTEGER) AS n_digit,
-             CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS INTEGER) AS n_punct,
-             least(CAST(len(regexp_split_to_array(trim(text), '\s+')) AS DOUBLE) / 100.0, 1.0) * 0.5
-               + (CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE) / CAST(length(text) AS DOUBLE)) * 0.3
-               + (1.0 - CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) / CAST(length(text) AS DOUBLE)) * 0.2
-               AS quality
-           FROM documents ORDER BY doc_id""",
-
-      "q_lang_id" ->
-        """WITH s AS (
-             SELECT doc_id, lang,
-               CAST(len(regexp_extract_all(lower(text), '\b(the|and|is|was|that|with)\b')) AS INTEGER) AS s_en,
-               CAST(len(regexp_extract_all(lower(text), '\b(und|ist|nicht|der|das|ein)\b')) AS INTEGER) AS s_de,
-               CAST(len(regexp_extract_all(lower(text), '\b(est|les|dans|que|pour|avec)\b')) AS INTEGER) AS s_fr,
-               CAST(len(regexp_extract_all(lower(text), '\b(es|los|las|para|como|pero)\b')) AS INTEGER) AS s_es,
-               CAST(len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS INTEGER) AS s_zh
-             FROM documents),
-           p AS (
-             SELECT *, CASE WHEN s_zh > 0 THEN 'zh'
-                            WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-                            WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-                            WHEN s_fr >= s_es THEN 'fr'
-                            ELSE 'es' END AS pred_lang
-             FROM s)
-           SELECT doc_id, s_en, s_de, s_fr, s_es, s_zh, pred_lang, lang,
-                  CAST(pred_lang = lang AS INTEGER) AS correct
-           FROM p ORDER BY doc_id""",
-
-      "q_token_freq" ->
-        """SELECT token, CAST(count(*) AS BIGINT) AS cnt
-           FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-                 FROM documents)
-           GROUP BY token ORDER BY cnt DESC, token LIMIT 50""",
-
-      "q_unicode_tokens" ->
-        """SELECT doc_id,
-             CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS BIGINT) AS n_ws,
-             CAST(len(regexp_extract_all(lower(text), '[\p{L}\p{N}]+')) AS BIGINT) AS n_uni,
-             array_to_string(list_slice(regexp_extract_all(lower(text), '[\p{L}\p{N}]+'), 1, 5), ' ') AS head_uni
-           FROM documents ORDER BY doc_id""",
-
-      "q_doc_fingerprint" ->
-        """SELECT doc_id,
-             list_reduce(
-               list_prepend(CAST(1 AS BIGINT),
-                 list_transform(regexp_extract_all(text, '(?s).'),
-                   c -> CAST(unicode(c) AS BIGINT))),
-               (a, b) -> (a * 131 + b) % 1000000007) AS fp
-           FROM documents ORDER BY doc_id""",
-
-      "q_dedup_exact" ->
-        """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
-                  CAST(count(*) AS BIGINT) AS dup_count
-           FROM documents GROUP BY content_hash ORDER BY content_hash""",
-
-      "q_dup_token_fraction" ->
-        """WITH g AS (
-             SELECT md5(text) AS h,
-               CAST(sum(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS g_tokens,
-               count(*) AS n
-             FROM documents GROUP BY h)
-           SELECT CAST(sum(g_tokens) AS BIGINT) AS total_tokens,
-             CAST(sum(CASE WHEN n > 1 THEN g_tokens ELSE 0 END) AS BIGINT) AS dup_tokens,
-             CAST(sum(CASE WHEN n > 1 THEN g_tokens ELSE 0 END) * 1000000
-               // sum(g_tokens) AS BIGINT) AS dup_frac_e6
-           FROM g""",
-
-      "q_minhash_lsh" ->
-        """WITH toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           shs AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 3
-                 THEN list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' ')))
-                 ELSE [] END AS sh
-             FROM toks),
-           sig AS (
-             SELECT doc_id, sh,
-               list_transform(range(0, 16), s ->
-                 list_min(list_transform(sh, g ->
-                   list_reduce(
-                     list_prepend(CAST(s + 1 AS BIGINT),
-                       list_transform(regexp_extract_all(g, '(?s).'),
-                         c -> CAST(unicode(c) AS BIGINT))),
-                     (a, b) -> (a * 131 + b) % 1000000007)))) AS sig
-             FROM shs),
-           banded AS (
-             SELECT doc_id, sh,
-               unnest(list_transform(range(0, 8), j -> {'band': j, 'bh':
-                 list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*2+1:j*2+2]),
-                   (a, v) -> (a * 131 + (v % 1000000007)) % 1000000007)
-                 * 998244353 +
-                 list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*2+1:j*2+2]),
-                   (a, v) -> (a * 137 + (v % 998244353)) % 998244353)})) AS b
-             FROM sig),
-           cand AS (
-             SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-             FROM banded a JOIN banded c
-               ON a.b.band = c.b.band AND a.b.bh = c.b.bh AND a.doc_id < c.doc_id),
-           verified AS (
-             SELECT id_a, id_b,
-               CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                 / len(list_distinct(sa.sh || sb.sh)) AS jaccard
-             FROM cand
-             JOIN shs sa ON sa.doc_id = id_a
-             JOIN shs sb ON sb.doc_id = id_b)
-           SELECT id_a, id_b, jaccard FROM verified
-           WHERE jaccard >= 0.8 ORDER BY id_a, id_b""",
-
-      // Same LSH/verify construction, inter-corpus candidates only
-      // (corpus % 3 != 0 side × benchmark % 3 == 0 side), rolled up per
-      // contaminated training doc.
-      "q_decontaminate" ->
-        """WITH toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           shs AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 3
-                 THEN list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' ')))
-                 ELSE [] END AS sh
-             FROM toks),
-           sig AS (
-             SELECT doc_id, sh,
-               list_transform(range(0, 16), s ->
-                 list_min(list_transform(sh, g ->
-                   list_reduce(
-                     list_prepend(CAST(s + 1 AS BIGINT),
-                       list_transform(regexp_extract_all(g, '(?s).'),
-                         c -> CAST(unicode(c) AS BIGINT))),
-                     (a, b) -> (a * 131 + b) % 1000000007)))) AS sig
-             FROM shs),
-           banded AS (
-             SELECT doc_id, sh,
-               unnest(list_transform(range(0, 8), j -> {'band': j, 'bh':
-                 list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*2+1:j*2+2]),
-                   (a, v) -> (a * 131 + (v % 1000000007)) % 1000000007)
-                 * 998244353 +
-                 list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*2+1:j*2+2]),
-                   (a, v) -> (a * 137 + (v % 998244353)) % 998244353)})) AS b
-             FROM sig),
-           cand AS (
-             SELECT DISTINCT a.doc_id AS cid, c.doc_id AS bid
-             FROM banded a JOIN banded c
-               ON a.b.band = c.b.band AND a.b.bh = c.b.bh
-             WHERE a.doc_id % 3 != 0 AND c.doc_id % 3 = 0),
-           verified AS (
-             SELECT cid, bid,
-               CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                 / len(list_distinct(sa.sh || sb.sh)) AS jaccard
-             FROM cand
-             JOIN shs sa ON sa.doc_id = cid
-             JOIN shs sb ON sb.doc_id = bid)
-           SELECT cid AS corpus_id,
-             CAST(count(*) AS BIGINT) AS n_bench_matches,
-             max(jaccard) AS max_jaccard
-           FROM verified WHERE jaccard >= 0.8
-           GROUP BY cid ORDER BY corpus_id""",
-
-      "q_ngram_jaccard" ->
-        """WITH shs AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 3
-                 THEN list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' ')))
-                 ELSE [] END AS sh
-             FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS t
-                   FROM documents))
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-               / len(list_distinct(a.sh || b.sh)) AS jaccard
-           FROM shs a JOIN shs b ON b.doc_id = a.doc_id + 1
-           ORDER BY id_a""",
-
-      // Two-stage int8 retrieval: quantization (the q_vec_quant mirror),
-      // EXACT-BIGINT shortlist key amax_e6 · Σ qcode·dcode, float-cosine
-      // re-rank (the q_cosine_topk fold) over the shortlist only.
-      "q_ann_int8" -> (annInt8Ctes + """
-           SELECT query_id, neighbor_id, sim, rank, int8_key,
-             CAST(srank AS INTEGER) AS srank
-           FROM r WHERE rank <= 5 ORDER BY query_id, rank"""),
-
-      // Recall@5 of the int8 path vs exact float top-5: both rankings are
-      // the already-mirrored constructions; per-query hits are integers.
-      "q_ann_int8_recall" -> (annInt8Ctes + """,
-           i8 AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 5),
-           bfs AS (
-             SELECT query_id, c.vec_id AS neighbor_id,
-               list_reduce(list_prepend(0.0, list_transform(range(1, len(qe)+1),
-                 i -> CAST(qe[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(qe)+1),
-                    i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))), (x,y) -> x + y))
-                * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(c.embedding)+1),
-                    i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (x,y) -> x + y))) AS sim
-             FROM q, coded c WHERE c.vec_id != query_id),
-           bf AS (
-             SELECT query_id, neighbor_id FROM (
-               SELECT *, row_number() OVER (
-                 PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-               FROM bfs) WHERE rnk <= 5)
-           SELECT bf.query_id AS query_id,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN i8.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_hits
-           FROM bf LEFT JOIN i8
-             ON bf.query_id = i8.query_id AND bf.neighbor_id = i8.neighbor_id
-           GROUP BY bf.query_id ORDER BY query_id"""),
-
-      // Product-quantization ANN, the ENTIRE pipeline mirrored: codebook
-      // training (one Lloyd iteration per subspace, same decimal-exact
-      // discipline as q_ann_ivf_trained), encoding, sequential-fold ADC
-      // shortlist, float-cosine re-rank.
-      "q_ann_pq" -> (annPqCtes + """
-           SELECT query_id, neighbor_id, sim, rank, adc,
-             CAST(srank AS INTEGER) AS srank
-           FROM pr WHERE rank <= 5 ORDER BY query_id, rank"""),
-
-      // Recall@5 of the PQ path vs exact float top-5 (the int8_recall
-      // harness at the 64×-compression operating point).
-      "q_ann_pq_recall" -> (annPqCtes + """,
-           pqr AS (SELECT query_id, neighbor_id FROM pr WHERE rank <= 5),
-           pbfs AS (
-             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               list_reduce(list_prepend(0.0, list_transform(range(1, len(q.embedding)+1),
-                 i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(q.embedding)+1),
-                    i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-                * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(c.embedding)+1),
-                    i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (x,y) -> x + y))) AS sim
-             FROM embeddings q, embeddings c
-             WHERE q.vec_id < 20 AND c.vec_id != q.vec_id),
-           pbf AS (
-             SELECT query_id, neighbor_id FROM (
-               SELECT *, row_number() OVER (
-                 PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-               FROM pbfs) WHERE rnk <= 5)
-           SELECT pbf.query_id AS query_id,
-             CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(CASE WHEN pqr.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_hits
-           FROM pbf LEFT JOIN pqr
-             ON pbf.query_id = pqr.query_id AND pbf.neighbor_id = pqr.neighbor_id
-           GROUP BY pbf.query_id ORDER BY query_id"""),
-
-      "q_cosine_topk" ->
-        """WITH q AS (SELECT vec_id AS query_id, embedding AS qe
-                      FROM embeddings WHERE vec_id < 20),
-           c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
-           s AS (
-             SELECT query_id, neighbor_id,
-               list_reduce(list_prepend(0.0, list_transform(range(1, len(qe)+1),
-                 i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))), (x,y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(qe)+1),
-                    i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))), (x,y) -> x + y))
-                * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(ce)+1),
-                    i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))), (x,y) -> x + y))) AS sim
-             FROM q, c WHERE neighbor_id != query_id),
-           r AS (
-             SELECT *, CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-             FROM s)
-           SELECT query_id, neighbor_id, sim, rank FROM r
-           WHERE rank <= 5 ORDER BY query_id, rank""",
-
-      // RRF mirror: the int8 shortlist CTEs plus a brute-force cosine
-      // ranking, fused with the same integer contributions
-      "q_rrf_fusion" -> (annInt8Ctes + """,
-           i8rank AS (SELECT query_id, neighbor_id,
-                        CAST(srank AS BIGINT) AS rank FROM r),
-           bfs AS (
-             SELECT query_id, c.vec_id AS neighbor_id,
-               list_reduce(list_prepend(0.0, list_transform(range(1, len(qe)+1),
-                 i -> CAST(qe[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(qe)+1),
-                    i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))), (x,y) -> x + y))
-                * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(c.embedding)+1),
-                    i -> CAST(c.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))), (x,y) -> x + y))) AS sim
-             FROM q, coded c WHERE c.vec_id != query_id),
-           bfr AS (
-             SELECT query_id, neighbor_id,
-               CAST(row_number() OVER (
-                 PARTITION BY query_id ORDER BY sim DESC, neighbor_id)
-                 AS BIGINT) AS rank
-             FROM bfs),
-           uni AS (
-             SELECT query_id, neighbor_id, rank FROM i8rank
-             UNION ALL
-             SELECT query_id, neighbor_id, rank FROM bfr WHERE rank <= 20),
-           fused AS (
-             SELECT query_id, neighbor_id,
-               CAST(sum(1000000 // (60 + rank)) AS BIGINT) AS rrf_e6,
-               CAST(count(*) AS INTEGER) AS n_lists
-             FROM uni GROUP BY 1, 2),
-           fr AS (
-             SELECT *, CAST(row_number() OVER (
-               PARTITION BY query_id ORDER BY rrf_e6 DESC, neighbor_id)
-               AS INTEGER) AS frank
-             FROM fused)
-           SELECT query_id, neighbor_id, rrf_e6, n_lists, frank
-           FROM fr WHERE frank <= 5 ORDER BY query_id, frank"""),
-
-      // nearest-centroid mirror: q_centroid's decimal-exact means packed
-      // into per-label arrays, the same sequential-fold squared distance,
-      // argmin by (d, label)
-      "q_nearest_centroid" ->
-        """WITH comp AS (
-             SELECT label AS clabel, generate_subscripts(embedding, 1) AS pos,
-                    unnest(embedding) AS v
-             FROM embeddings),
-           cm AS (
-             SELECT clabel, pos,
-               floor(CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE)
-                     / count(*) * 1e6) / 1e6 AS m
-             FROM comp GROUP BY 1, 2),
-           cv AS (SELECT clabel, list(m ORDER BY pos) AS cvec
-                  FROM cm GROUP BY 1),
-           da AS (
-             SELECT e.vec_id, e.label, c.clabel,
-               list_reduce(list_prepend(0.0,
-                 list_transform(range(1, len(e.embedding) + 1),
-                   i -> (CAST(e.embedding[i] AS DOUBLE) - c.cvec[i])
-                        * (CAST(e.embedding[i] AS DOUBLE) - c.cvec[i]))),
-                 (x, y) -> x + y) AS d
-             FROM embeddings e CROSS JOIN cv c),
-           bst AS (
-             SELECT vec_id, label, clabel,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d, clabel)
-                 AS rn
-             FROM da)
-           SELECT label, clabel AS assigned, CAST(count(*) AS BIGINT) AS n
-           FROM bst WHERE rn = 1 GROUP BY 1, 2 ORDER BY label, assigned""",
-
-      "q_embed_norm" ->
-        """SELECT vec_id, CAST(len(embedding) AS INTEGER) AS dim,
-             sqrt(list_reduce(list_prepend(0.0,
-               list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-               (a, b) -> a + b)) AS norm
-           FROM embeddings ORDER BY vec_id""",
-
-      "q_simhash" ->
-        """WITH t AS (
-             SELECT doc_id,
-               list_transform(regexp_split_to_array(trim(lower(text)), '\s+'),
-                 tok -> list_reduce(
-                   list_prepend(CAST(1 AS BIGINT),
-                     list_transform(regexp_extract_all(tok, '(?s).'),
-                       c -> CAST(unicode(c) AS BIGINT))),
-                   (a, b) -> (a * 131 + b) % 1000000007)) AS hs
-             FROM documents)
-           SELECT doc_id,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(range(0, 30), j ->
-                 CASE WHEN list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(hs, h ->
-                          CASE WHEN (h >> j) & 1 = 1 THEN CAST(1 AS BIGINT)
-                               ELSE CAST(-1 AS BIGINT) END)),
-                        (a, b) -> a + b) >= 0
-                      THEN (CAST(1 AS BIGINT) << j)
-                      ELSE CAST(0 AS BIGINT) END)),
-               (a, b) -> a + b) AS simhash
-           FROM t ORDER BY doc_id""",
-
-      "q_rollup" ->
-        """SELECT COALESCE(r_name, 'ALL') AS r_name,
-                  COALESCE(n_name, 'ALL') AS n_name,
-                  CAST(GROUPING(r_name) AS INTEGER) AS g_r,
-                  CAST(GROUPING(n_name) AS INTEGER) AS g_n,
-                  CAST(count(*) AS BIGINT) AS n_cust,
-                  CAST(sum(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS acctbal
-           FROM customer
-           JOIN nation ON c_nationkey = n_nationkey
-           JOIN region ON n_regionkey = r_regionkey
-           GROUP BY ROLLUP(r_name, n_name)
-           ORDER BY r_name, n_name""",
-
-      "q_pivot" ->
-        """SELECT CAST(year(o_orderdate) AS INTEGER) AS y,
-                  CAST(count(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 END) AS BIGINT) AS p_urgent,
-                  CAST(count(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 END) AS BIGINT) AS p_high,
-                  CAST(count(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 END) AS BIGINT) AS p_medium,
-                  CAST(count(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 END) AS BIGINT) AS p_notspec,
-                  CAST(count(CASE WHEN o_orderpriority = '5-LOW' THEN 1 END) AS BIGINT) AS p_low
-           FROM orders GROUP BY y ORDER BY y""",
-
-      "q_intersect" ->
-        """SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-           INTERSECT
-           SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-           ORDER BY o_custkey""",
-
-      "q_group_topk" ->
-        """SELECT event_type, event_id, value, rank FROM (
-             SELECT event_type, event_id, value,
-               CAST(row_number() OVER (PARTITION BY event_type
-                 ORDER BY value DESC, event_id) AS INTEGER) AS rank
-             FROM events)
-           WHERE rank <= 5
-           ORDER BY event_type, rank""",
-
-      "q_range_join" ->
-        """WITH w AS (
-             SELECT unnest(generate_series(TIMESTAMP '2024-01-01 00:00:00',
-               TIMESTAMP '2024-01-31 20:00:00', INTERVAL 4 HOUR)) AS w_start)
-           SELECT w_start, w_start + INTERVAL 6 HOUR AS w_end,
-                  CAST(count(*) AS BIGINT) AS n_events,
-                  CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-           FROM w JOIN events e
-             ON CAST(e.ts AS TIMESTAMP) >= w_start
-            AND CAST(e.ts AS TIMESTAMP) < w_start + INTERVAL 6 HOUR
-           GROUP BY w_start ORDER BY w_start""",
-
-      "q_bloom_semi" ->
-        """SELECT o_orderkey, o_totalprice FROM orders
-           WHERE EXISTS (SELECT 1 FROM lineitem
-             WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-           ORDER BY o_orderkey""",
-
-      "q_salted_join" ->
-        """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
-                  CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-      "q_salted_auto" ->
-        """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
-                  CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-           GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-      "q_rank_funcs" ->
-        """SELECT * FROM (
-             SELECT o_orderkey, o_orderpriority, o_totalprice,
-               CAST(rank() OVER w AS INTEGER) AS rnk,
-               CAST(dense_rank() OVER w AS INTEGER) AS drnk,
-               percent_rank() OVER w AS pr,
-               cume_dist() OVER w AS cd,
-               CAST(ntile(4) OVER w AS INTEGER) AS tile
-             FROM orders
-             WINDOW w AS (PARTITION BY o_orderpriority
-               ORDER BY o_totalprice DESC, o_orderkey))
-           WHERE rnk <= 100
-           ORDER BY o_orderpriority, rnk""",
-
-      "q_above_avg" ->
-        """WITH navg AS (
-             SELECT c_nationkey AS nk,
-               CAST(sum(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS nat_avg
-             FROM customer GROUP BY c_nationkey)
-           SELECT c_custkey, c_name, c_acctbal, n_name, nat_avg
-           FROM customer
-           JOIN navg ON c_nationkey = nk
-           JOIN nation ON c_nationkey = n_nationkey
-           WHERE c_acctbal > nat_avg
-           ORDER BY c_custkey""",
-
-      "q_array_funcs" ->
-        """SELECT vec_id,
-             CAST(embedding[1] AS DOUBLE) AS first_v,
-             CAST(list_max(embedding) AS DOUBLE) AS vmax,
-             CAST(list_min(embedding) AS DOUBLE) AS vmin,
-             CAST(len(list_filter(embedding, x -> x > 0)) AS INTEGER) AS n_pos,
-             list_reduce(list_prepend(0.0,
-               list_transform(embedding[1:8], x -> CAST(x AS DOUBLE))),
-               (a, b) -> a + b) AS head8_sum
-           FROM embeddings ORDER BY vec_id""",
-
-      "q_string_funcs" ->
-        """SELECT c_custkey,
-             substring(c_name, 1, 12) AS name12,
-             upper(c_name) AS name_up,
-             lpad(CAST(c_custkey AS VARCHAR), 10, '0') AS key_pad,
-             regexp_extract(c_name, '([0-9]+)$', 1) AS name_num,
-             concat_ws('|', c_mktsegment, c_name) AS seg_name,
-             translate(c_name, '#', '-') AS name_dash,
-             reverse(c_name) AS name_rev,
-             CAST(length(c_mktsegment) AS INTEGER) AS seg_len,
-             CAST(strpos(c_name, '#') AS INTEGER) AS hash_pos,
-             CAST(levenshtein(c_mktsegment, 'BUILDING') AS INTEGER) AS lev_seg
-           FROM customer ORDER BY c_custkey""",
-
-      // Calendar fixture dumps: generated from rules (not from tables), so
-      // DuckDB cannot recompute them — instead the oracle reads the dump
-      // back and gates it on a PINNED GOLDEN (row count + md5 of the
-      // canonical row rendering). The goldens come from the CalendarSpec-
-      // verified implementation (DST transitions, lunch splits, holiday
-      // shifts, the Tokyo 2024-11-05 close change) and are SF-independent:
-      // the calendar covers a fixed 2020-2030 range. Any drift in the
-      // generated calendar empties the oracle result and fails rows+hash.
-      "q_calendar_intervals" ->
-        """WITH d AS (SELECT * FROM
-             read_parquet('__VERIFY_OUT__/q_calendar_intervals/*.parquet')),
-           chk AS (SELECT count(*) AS n,
-             md5(string_agg(exchange || '|' || CAST(utc_date AS VARCHAR)
-               || '|' || CAST(open_ts AS VARCHAR)
-               || '|' || CAST(close_ts AS VARCHAR), ';'
-               ORDER BY exchange, utc_date, open_ts, close_ts)) AS h FROM d)
-           SELECT exchange, utc_date, open_ts, close_ts FROM d
-           WHERE (SELECT n FROM chk) = 41421
-             AND (SELECT h FROM chk) = 'f736495a77b62a60ec214f7df00fcdf5'
-           ORDER BY exchange, utc_date, open_ts""",
-
-      "q_calendar_holidays" ->
-        """WITH d AS (SELECT * FROM
-             read_parquet('__VERIFY_OUT__/q_calendar_holidays/*.parquet')),
-           chk AS (SELECT count(*) AS n,
-             md5(string_agg(exchange || '|' || CAST(date AS VARCHAR)
-               || '|' || holiday_name, ';'
-               ORDER BY exchange, date, holiday_name)) AS h FROM d)
-           SELECT date, exchange, holiday_name FROM d
-           WHERE (SELECT n FROM chk) = 194
-             AND (SELECT h FROM chk) = '0c6b618d4a4fcd4be8bcdeb5e464d196'
-           ORDER BY exchange, date, holiday_name""",
-
-      // Sketch contracts: the DuckDB side recomputes the EXACT halves
-      // (count distinct, group counts) and pins the error-bound booleans
-      // true — the Spark side computes the actual sketches and derives the
-      // booleans from measured error, so a broken sketch fails the hash.
-      "q_hll_distinct" ->
-        """SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-             true AS hll_ok
-           FROM events""",
-
-      "q_approx_quantile" ->
-        """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             true AS p50_ok, true AS p90_ok
-           FROM events GROUP BY event_type ORDER BY event_type""",
-
-      "q_json_funcs" ->
-        """SELECT event_type,
-             CAST(count(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS n_k,
-             CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-             CAST(min(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k,
-             CAST(max(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k
-           FROM events GROUP BY event_type ORDER BY event_type""",
-
-      "q_string_agg" ->
-        """SELECT r_name,
-                  string_agg(n_name, ',' ORDER BY n_name) AS nations,
-                  CAST(count(*) AS BIGINT) AS n_nations
-           FROM nation JOIN region ON n_regionkey = r_regionkey
-           GROUP BY r_name ORDER BY r_name""",
-
-      "q_grouping_sets" ->
-        """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-                  COALESCE(o_orderpriority, 'ALL') AS priority,
-                  CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
-           FROM orders
-           GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-           ORDER BY status, priority""",
-
-      "q_decay_sum" ->
-        """WITH a AS (SELECT max(CAST(ts AS TIMESTAMP)) AS anchor FROM events)
-           SELECT user_id,
-             CAST(sum(CAST(floor(value * pow(0.5,
-               (epoch_us(anchor) - epoch_us(CAST(ts AS TIMESTAMP))) // 3600000000
-               ) * 1000000) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS decayed_value,
-             CAST(count(*) AS BIGINT) AS n_events
-           FROM events CROSS JOIN a
-           GROUP BY user_id ORDER BY user_id""",
-
-      "q_zscore" ->
-        """WITH stats AS (
-             SELECT event_type AS et, count(*) AS n,
-               CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS s1,
-               CAST(sum(CAST(value * value AS DECIMAL(38,6))) AS DOUBLE) AS s2
-             FROM events GROUP BY event_type)
-           SELECT event_id, event_type, value,
-             round((value - s1 / n) /
-               sqrt((n * s2 - s1 * s1) / (n * (n - 1))), 6) AS z
-           FROM events JOIN stats ON event_type = et
-           WHERE abs(round((value - s1 / n) /
-               sqrt((n * s2 - s1 * s1) / (n * (n - 1))), 6)) > 3.0
-           ORDER BY event_id""",
-
-      "q_histogram" ->
-        """SELECT CAST(least(greatest(floor(value / 5.0), 0), 19) AS INTEGER) AS bucket,
-                  CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-           FROM events GROUP BY bucket ORDER BY bucket""",
-
-      "q_mode" ->
-        """SELECT event_type, hod, n FROM (
-             SELECT event_type, hod, n,
-               row_number() OVER (PARTITION BY event_type
-                 ORDER BY n DESC, hod) AS rn
-             FROM (
-               SELECT event_type,
-                 CAST(hour(CAST(ts AS TIMESTAMP)) AS INTEGER) AS hod,
-                 CAST(count(*) AS BIGINT) AS n
-               FROM events GROUP BY event_type, hod))
-           WHERE rn = 1 ORDER BY event_type""",
-
-      "q_first_last" ->
-        """SELECT user_id, first_v, last_v, second_v FROM (
-             SELECT user_id,
-               first_value(value) OVER w AS first_v,
-               last_value(value) OVER
-                 (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_v,
-               nth_value(value, 2) OVER
-                 (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_v,
-               row_number() OVER w AS rn
-             FROM events
-             WINDOW w AS (PARTITION BY user_id
-               ORDER BY CAST(ts AS TIMESTAMP), event_id))
-           WHERE rn = 1 ORDER BY user_id""",
-
-      "q_percentile_disc" ->
-        """SELECT event_type,
-             max(CASE WHEN rn = CAST(ceil(n * 0.5) AS BIGINT) THEN value END) AS p50,
-             max(CASE WHEN rn = CAST(ceil(n * 0.9) AS BIGINT) THEN value END) AS p90,
-             CAST(max(n) AS BIGINT) AS n
-           FROM (
-             SELECT event_type, value,
-               row_number() OVER (PARTITION BY event_type
-                 ORDER BY value, event_id) AS rn,
-               count(*) OVER (PARTITION BY event_type) AS n
-             FROM events)
-           GROUP BY event_type ORDER BY event_type""",
-
-      "q_union_distinct" ->
-        """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1994
-           UNION
-           SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-           ORDER BY o_custkey""",
-
-      "q_regex_tokens" ->
-        """SELECT token, n FROM (
-             SELECT token, CAST(count(*) AS BIGINT) AS n FROM (
-               SELECT unnest(regexp_extract_all(lower(text), '[a-z]{8,}')) AS token
-               FROM documents)
-             GROUP BY token)
-           WHERE n >= 5
-           ORDER BY n DESC, token LIMIT 50""",
-
-      "q_sql_q3" ->
-        """SELECT o_orderkey, o_orderdate, o_orderpriority,
-                  CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                    AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-           FROM customer
-           JOIN orders ON c_custkey = o_custkey
-           JOIN lineitem ON l_orderkey = o_orderkey
-           WHERE c_mktsegment = 'AUTOMOBILE'
-           GROUP BY o_orderkey, o_orderdate, o_orderpriority
-           ORDER BY revenue DESC, o_orderkey
-           LIMIT 20""",
-
-      "q_null_funcs" ->
-        """SELECT l.event_id,
-                  coalesce(r.value, -1.0) AS click_or_default,
-                  nullif(r.value, l.value) AS click_unless_same,
-                  CASE WHEN r.value IS NOT NULL THEN 'seen' ELSE 'cold' END AS flag,
-                  r.value IS NULL AS is_cold,
-                  r.value IS NOT DISTINCT FROM l.value AS nseq
-           FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-           ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
-             ON l.user_id = r.user_id
-            AND CAST(l.ts AS TIMESTAMP) >= CAST(r.ts AS TIMESTAMP)
-           ORDER BY l.event_id""",
-
-      "q_bitwise" ->
-        """SELECT event_id,
-             event_id << 3 AS shl,
-             event_id >> 2 AS shr,
-             event_id & 255 AS band,
-             event_id | 4096 AS bor,
-             xor(event_id, user_id) AS bxor,
-             ~event_id AS bnot,
-             CAST(bit_count(event_id) AS INTEGER) AS popcnt
-           FROM events ORDER BY event_id""",
-
-      "q_cumsum" ->
-        """SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value,
-             CAST(sum(CAST(value AS DECIMAL(38,6))) OVER w AS DOUBLE) AS run_sum,
-             CAST(count(*) OVER w AS BIGINT) AS run_n
-           FROM events
-           WINDOW w AS (PARTITION BY user_id
-             ORDER BY CAST(ts AS TIMESTAMP), event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           ORDER BY user_id, ts, event_id""",
-
-      "q_range_frame" ->
-        """SELECT event_id, event_type, value,
-             CAST(count(*) OVER w AS BIGINT) AS n_within_5,
-             CAST(sum(CAST(value AS DECIMAL(38,6))) OVER w AS DOUBLE) AS sum_within_5
-           FROM events
-           WINDOW w AS (PARTITION BY event_type ORDER BY value
-             RANGE BETWEEN 5 PRECEDING AND CURRENT ROW)
-           ORDER BY event_id""",
-
-      "q_vec_quant" ->
-        """SELECT vec_id,
-             CAST(floor(amax * 1e6) AS BIGINT) AS amax_e6,
-             CAST(floor(sum_abs_err / len(embedding) * 1e9) AS BIGINT) AS mae_e9
-           FROM (
-             SELECT vec_id, embedding,
-               greatest(CAST(list_max(embedding) AS DOUBLE),
-                        -CAST(list_min(embedding) AS DOUBLE), 1e-12) AS amax,
-               list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                 list_transform(embedding, x ->
-                   abs(CAST(x AS DOUBLE) -
-                     floor(CAST(x AS DOUBLE) * 127.0 /
-                       greatest(CAST(list_max(embedding) AS DOUBLE),
-                                -CAST(list_min(embedding) AS DOUBLE), 1e-12) + 0.5) *
-                     greatest(CAST(list_max(embedding) AS DOUBLE),
-                              -CAST(list_min(embedding) AS DOUBLE), 1e-12) / 127.0))),
-                 (a, b) -> a + b) AS sum_abs_err
-             FROM embeddings)
-           ORDER BY vec_id""",
-
-      // Incremental dedup, both phases mirrored: cluster the old corpus
-      // (doc_id % 5 <> 0), project its buckets to group reps, then close
-      // over the joint (rep ∪ new-batch) bucket graph. Reps are old doc
-      // ids (never ≡ 0 mod 5), so the output filter cleanly selects the
-      // new batch.
-      "q_dedup_incremental" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           shs AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 3
-                 THEN list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' ')))
-                 ELSE [] END AS sh
-             FROM toks),
-           sig AS (
-             SELECT doc_id,
-               list_transform(range(0, 16), s ->
-                 list_min(list_transform(sh, g ->
-                   list_reduce(
-                     list_prepend(CAST(s + 1 AS BIGINT),
-                       list_transform(regexp_extract_all(g, '(?s).'),
-                         c -> CAST(unicode(c) AS BIGINT))),
-                     (a, b) -> (a * 131 + b) % 1000000007)))) AS sig
-             FROM shs WHERE len(sh) > 0),
-           bb AS (
-             SELECT doc_id, b.band AS band, b.bh AS bh
-             FROM (SELECT doc_id,
-                     unnest(list_transform(range(0, 4), j -> {'band': j, 'bh':
-                       list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                         (a, v) -> (a * 131 + (v % 1000000007)) % 1000000007)
-                       * 998244353 +
-                       list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                         (a, v) -> (a * 137 + (v % 998244353)) % 998244353)}))
-                     AS b
-                   FROM sig)),
-           bb_old AS (SELECT * FROM bb WHERE doc_id % 5 <> 0),
-           bb_new AS (SELECT * FROM bb WHERE doc_id % 5 = 0),
-           edges_old AS (
-             SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-             FROM bb_old a JOIN bb_old b ON a.band = b.band AND a.bh = b.bh),
-           reach_old AS (
-             SELECT src, dst FROM edges_old
-             UNION
-             SELECT r.src, e.dst FROM reach_old r JOIN edges_old e ON r.dst = e.src),
-           labels_old AS (
-             SELECT src AS id, min(dst) AS group_rep FROM reach_old GROUP BY src),
-           joint AS (
-             SELECT DISTINCT l.group_rep AS doc_id, b.band, b.bh
-             FROM bb_old b JOIN labels_old l ON b.doc_id = l.id
-             UNION
-             SELECT doc_id, band, bh FROM bb_new),
-           edges_j AS (
-             SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-             FROM joint a JOIN joint b ON a.band = b.band AND a.bh = b.bh),
-           reach_j AS (
-             SELECT src, dst FROM edges_j
-             UNION
-             SELECT r.src, e.dst FROM reach_j r JOIN edges_j e ON r.dst = e.src)
-           SELECT src AS id, min(dst) AS group_rep
-           FROM reach_j WHERE src % 5 = 0 GROUP BY src ORDER BY id""",
-
-      // Reconcile = stored labels (old-corpus closure ∪ incremental joint
-      // closure for the batch) diffed against the full-corpus closure.
-      // Shares the q_dedup_incremental construction; adds the all-docs
-      // closure and the repair diff.
-      "q_dedup_reconcile" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           shs AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 3
-                 THEN list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' ')))
-                 ELSE [] END AS sh
-             FROM toks),
-           sig AS (
-             SELECT doc_id,
-               list_transform(range(0, 16), s ->
-                 list_min(list_transform(sh, g ->
-                   list_reduce(
-                     list_prepend(CAST(s + 1 AS BIGINT),
-                       list_transform(regexp_extract_all(g, '(?s).'),
-                         c -> CAST(unicode(c) AS BIGINT))),
-                     (a, b) -> (a * 131 + b) % 1000000007)))) AS sig
-             FROM shs WHERE len(sh) > 0),
-           bb AS (
-             SELECT doc_id, b.band AS band, b.bh AS bh
-             FROM (SELECT doc_id,
-                     unnest(list_transform(range(0, 4), j -> {'band': j, 'bh':
-                       list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                         (a, v) -> (a * 131 + (v % 1000000007)) % 1000000007)
-                       * 998244353 +
-                       list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                         (a, v) -> (a * 137 + (v % 998244353)) % 998244353)}))
-                     AS b
-                   FROM sig)),
-           bb_old AS (SELECT * FROM bb WHERE doc_id % 5 <> 0),
-           bb_new AS (SELECT * FROM bb WHERE doc_id % 5 = 0),
-           edges_old AS (
-             SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-             FROM bb_old a JOIN bb_old b ON a.band = b.band AND a.bh = b.bh),
-           reach_old AS (
-             SELECT src, dst FROM edges_old
-             UNION
-             SELECT r.src, e.dst FROM reach_old r JOIN edges_old e ON r.dst = e.src),
-           labels_old AS (
-             SELECT src AS id, min(dst) AS group_rep FROM reach_old GROUP BY src),
-           joint AS (
-             SELECT DISTINCT l.group_rep AS doc_id, b.band, b.bh
-             FROM bb_old b JOIN labels_old l ON b.doc_id = l.id
-             UNION
-             SELECT doc_id, band, bh FROM bb_new),
-           edges_j AS (
-             SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-             FROM joint a JOIN joint b ON a.band = b.band AND a.bh = b.bh),
-           reach_j AS (
-             SELECT src, dst FROM edges_j
-             UNION
-             SELECT r.src, e.dst FROM reach_j r JOIN edges_j e ON r.dst = e.src),
-           labels_new AS (
-             SELECT src AS id, min(dst) AS group_rep
-             FROM reach_j WHERE src % 5 = 0 GROUP BY src),
-           stored AS (
-             SELECT * FROM labels_old UNION ALL SELECT * FROM labels_new),
-           edges_all AS (
-             SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-             FROM bb a JOIN bb b ON a.band = b.band AND a.bh = b.bh),
-           reach_all AS (
-             SELECT src, dst FROM edges_all
-             UNION
-             SELECT r.src, e.dst FROM reach_all r JOIN edges_all e ON r.dst = e.src),
-           labels_all AS (
-             SELECT src AS id, min(dst) AS group_rep FROM reach_all GROUP BY src)
-           SELECT s.id, s.group_rep AS old_rep, f.group_rep AS new_rep
-           FROM stored s JOIN labels_all f ON s.id = f.id
-           WHERE s.group_rep <> f.group_rep
-           ORDER BY s.id""",
-
-      "q_sample" ->
-        """SELECT doc_id, lang, source FROM documents
-           WHERE ((doc_id % 1000000007) * 2654435761) % 1000000007 % 10 < 1
-           ORDER BY doc_id""",
-
-      // Group-aware split: the closure CTEs compute near-dup groups, then
-      // the q_split hash keys on the group rep (own id for groupless docs)
-      "q_split_groupaware" -> (dedupGroupsClosureCtes + """,
-           g AS (SELECT src AS id, min(dst) AS group_rep
-                 FROM reach GROUP BY src)
-           SELECT doc_id, group_key,
-             CASE WHEN h < 800 THEN 'train'
-                  WHEN h < 900 THEN 'val'
-                  ELSE 'test' END AS split
-           FROM (SELECT doc_id, group_key,
-                   ((group_key % 1000000007) * 2654435761) % 1000000007 % 1000 AS h
-                 FROM (SELECT d.doc_id,
-                         coalesce(g.group_rep, d.doc_id) AS group_key
-                       FROM documents d LEFT JOIN g ON d.doc_id = g.id))
-           ORDER BY doc_id"""),
-
-      "q_split" ->
-        """SELECT lang,
-             CASE WHEN h < 800 THEN 'train'
-                  WHEN h < 900 THEN 'val'
-                  ELSE 'test' END AS split,
-             CAST(count(*) AS BIGINT) AS n
-           FROM (SELECT lang,
-                   ((doc_id % 1000000007) * 2654435761) % 1000000007 % 1000 AS h
-                 FROM documents)
-           GROUP BY lang, split ORDER BY lang, split""",
-
-      "q_stratified" ->
-        """WITH ranked AS (
-             SELECT doc_id, lang,
-               row_number() OVER (PARTITION BY lang ORDER BY
-                 ((doc_id % 1000000007) * 2654435761) % 1000000007, doc_id)
-                 AS rk
-             FROM documents),
-           m AS (SELECT min(n) AS minn FROM
-                   (SELECT count(*) AS n FROM documents GROUP BY lang))
-           SELECT doc_id, lang, CAST(rk AS INTEGER) AS rk
-           FROM ranked CROSS JOIN m WHERE rk <= minn
-           ORDER BY lang, rk""",
-
-      "q_zorder" ->
-        """SELECT event_id,
-             CAST(list_sum(list_transform(range(0, 20), b ->
-               (((u >> b) & 1) << (2*b + 1)) + (((m >> b) & 1) << (2*b))))
-               AS BIGINT) AS z
-           FROM (SELECT event_id,
-                   user_id % 1048576 AS u,
-                   (epoch_us(CAST(ts AS TIMESTAMP)) // 60000000) % 1048576 AS m
-                 FROM events)
-           ORDER BY z, event_id""",
-
-      "q_pruned_scan" ->
-        s"""SELECT event_id, $evTs AS ts, user_id, value FROM events
-            WHERE event_type = 'click'
-              AND $evTs >= TIMESTAMP '2024-01-08 00:00:00'
-              AND $evTs <= TIMESTAMP '2024-01-12 23:59:59.999999'
-            ORDER BY ts, event_id""",
-
-      "q_pruned_scan_2col" ->
-        s"""SELECT event_id, $evTs AS ts, user_id, value FROM events
-            WHERE event_type = 'click'
-              AND event_id BETWEEN 100 AND 400
-            ORDER BY ts, event_id""",
-
-      "q_zorder_scan" ->
-        s"""SELECT event_id, $evTs AS ts, user_id, value FROM events
-            WHERE event_type = 'view'
-              AND event_id BETWEEN 1000 AND 5000
-            ORDER BY event_id""",
-
-      // bid = floor(value·64)/64 is an exact dyadic rational and ask adds
-      // an exact quarter multiple, so both survive the parquet round-trip
-      // and the band compare bit-identically; ts is unique among these
-      // rows, so the ingest's dedup-on-write is the identity
-      "q_priceband" ->
-        s"""SELECT $evTs AS timestamp,
-                   floor(value * 64) / 64 AS bid,
-                   floor(value * 64) / 64 + 0.25 * (1 + event_id % 3) AS ask
-            FROM events
-            WHERE event_type = 'purchase' AND user_id % 2 = 0
-              AND floor(value * 64) / 64 BETWEEN 100 AND 200
-            ORDER BY timestamp""",
-
-      // spread cycles 0/0.25/0.5 exactly (dyadic bid + exact quarter
-      // multiples), so `bid = ask` is the event_id % 3 = 0 slice and the
-      // compare is bit-identical through the parquet round-trip
-      "q_zero_spread" ->
-        s"""SELECT $evTs AS timestamp,
-                   floor(value * 64) / 64 AS bid,
-                   floor(value * 64) / 64 + 0.25 * (event_id % 3) AS ask
-            FROM events
-            WHERE event_type = 'purchase' AND user_id % 2 = 0
-              AND event_id % 3 = 0
-            ORDER BY timestamp""",
-
-      "q_bloom_prune" ->
-        s"""SELECT event_id, $evTs AS ts, user_id, value FROM events
-            WHERE event_type = 'purchase' AND user_id IN (3, 7, 11)
-            ORDER BY event_id""",
-
-      "q_mixture_sample" ->
-        """SELECT doc_id, source FROM documents
-           WHERE ((doc_id % 1000000007) * 2654435761) % 1000000007 % 1000 <
-             CASE source WHEN 'src0' THEN 1000 WHEN 'src1' THEN 500
-                         WHEN 'src2' THEN 250 ELSE 100 END
-           ORDER BY doc_id""",
-
-      "q_epoch_shuffle" ->
-        """SELECT doc_id,
-             ((doc_id % 1000000007)
-              * ((2654435761 + 3 * 40503) % 1000000007) + 3) % 1000000007
-               AS skey
-           FROM documents ORDER BY skey, doc_id""",
-
-      "q_weighted_sample" ->
-        """SELECT doc_id, n_chars FROM documents
-           WHERE ((doc_id % 1000000007) * 2654435761) % 1000000007 % 400 <
-             least(greatest(n_chars, 0), 400)
-           ORDER BY doc_id""",
-
-      // CMS mirror: same universal row hashes ((a_j·fp + b_j) mod P mod w)
-      // over the same seed-0 polynomial token fingerprints; sketch cells
-      // as a (j, bucket) group-by, estimate as the min over the 4 rows
-      "q_cms_heavy" ->
-        """WITH toks AS (
-             SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-               AS token
-             FROM documents),
-           tf AS (SELECT token, CAST(count(*) AS BIGINT) AS exact_cnt
-                  FROM toks GROUP BY 1),
-           fp AS (
-             SELECT token, exact_cnt,
-               list_reduce(
-                 list_prepend(CAST(1 AS BIGINT),
-                   list_transform(regexp_extract_all(token, '(?s).'),
-                     c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 131 + b) % 1000000007) AS fp
-             FROM tf),
-           cells AS (
-             SELECT j,
-               ((((2654435761 + 40503 * j) % 1000000007) * fp
-                 + (2246822519 * j) % 1000000007) % 1000000007) % 512
-                 AS bucket,
-               CAST(sum(exact_cnt) AS BIGINT) AS cnt
-             FROM fp CROSS JOIN range(4) r(j) GROUP BY 1, 2),
-           heavy AS (SELECT token, exact_cnt, fp FROM fp
-                     WHERE exact_cnt >= 40)
-           SELECT h.token, h.exact_cnt, CAST(min(c.cnt) AS BIGINT) AS cms_est
-           FROM heavy h CROSS JOIN range(4) r(j)
-           JOIN cells c ON c.j = r.j AND c.bucket =
-             ((((2654435761 + 40503 * r.j) % 1000000007) * h.fp
-               + (2246822519 * r.j) % 1000000007) % 1000000007) % 512
-           GROUP BY 1, 2 ORDER BY token""",
-
-      // HLL mirror: 59-bit pair hash (seedless folds 131/1e9+7 and
-      // 137/998244353) packed then re-folded over its DECIMAL DIGITS (the
-      // nonlinear avalanche step — see Sketches.hllRegisters), rho = exact
-      // trailing-zero rank via log2(v & -v) (power-of-two log2 is
-      // IEEE-exact), register max, integer-scaled harmonic sum,
-      // identically-associated float estimate
-      "q_hll_exact" ->
-        """WITH toks AS (
-             SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-               AS token
-             FROM documents),
-           hs AS (
-             SELECT CAST(
-               (list_reduce(
-                  list_prepend(CAST(0 AS BIGINT),
-                    list_transform(regexp_extract_all(token, '(?s).'),
-                      c -> CAST(unicode(c) AS BIGINT))),
-                  (a, b) -> (a * 131 + b) % 1000000007) * 998244353
-                + list_reduce(
-                    list_prepend(CAST(0 AS BIGINT),
-                      list_transform(regexp_extract_all(token, '(?s).'),
-                        c -> CAST(unicode(c) AS BIGINT))),
-                    (a, b) -> (a * 137 + b) % 998244353)) AS VARCHAR) AS d
-             FROM toks),
-           vr AS (
-             SELECT
-               list_reduce(
-                 list_prepend(CAST(0 AS BIGINT),
-                   list_transform(regexp_extract_all(d, '(?s).'),
-                     c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 131 + b) % 1000000007) % 256 AS bucket,
-               list_reduce(
-                 list_prepend(CAST(0 AS BIGINT),
-                   list_transform(regexp_extract_all(d, '(?s).'),
-                     c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 137 + b) % 998244353) AS v
-             FROM hs),
-           rho AS (
-             SELECT bucket,
-               CASE WHEN v = 0 THEN 53
-                    ELSE CAST(log2(v & -v) AS BIGINT) + 1 END AS rho
-             FROM vr),
-           regs AS (SELECT bucket, max(rho) AS reg FROM rho GROUP BY 1),
-           agg AS (
-             SELECT CAST(count(*) AS BIGINT) AS n_buckets_used,
-               CAST(sum(1::BIGINT << CAST(53 - reg AS INTEGER)) AS BIGINT)
-                 AS zp
-             FROM regs),
-           ex AS (SELECT CAST(count(DISTINCT token) AS BIGINT) AS n_exact
-                  FROM toks)
-           SELECT n_exact, n_buckets_used,
-             zp + (256 - n_buckets_used) * (1::BIGINT << 53) AS z_scaled,
-             ((CAST(0.7213 AS DOUBLE)
-               / (CAST(1.0 AS DOUBLE)
-                  + CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE)))
-              * CAST(65536.0 AS DOUBLE)
-              * CAST(9007199254740992.0 AS DOUBLE))
-             / CAST(zp + (256 - n_buckets_used) * (1::BIGINT << 53)
-                    AS DOUBLE) AS hll_est
-           FROM agg CROSS JOIN ex""",
-
-      // per-lang HLL mirror: q_hll_exact's pipeline with every stage
-      // keyed by lang
-      "q_hll_by_lang" ->
-        """WITH toks AS (
-             SELECT lang,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-                 AS token
-             FROM documents),
-           hs AS (
-             SELECT lang, CAST(
-               (list_reduce(
-                  list_prepend(CAST(0 AS BIGINT),
-                    list_transform(regexp_extract_all(token, '(?s).'),
-                      c -> CAST(unicode(c) AS BIGINT))),
-                  (a, b) -> (a * 131 + b) % 1000000007) * 998244353
-                + list_reduce(
-                    list_prepend(CAST(0 AS BIGINT),
-                      list_transform(regexp_extract_all(token, '(?s).'),
-                        c -> CAST(unicode(c) AS BIGINT))),
-                    (a, b) -> (a * 137 + b) % 998244353)) AS VARCHAR) AS d
-             FROM toks),
-           vr AS (
-             SELECT lang,
-               list_reduce(
-                 list_prepend(CAST(0 AS BIGINT),
-                   list_transform(regexp_extract_all(d, '(?s).'),
-                     c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 131 + b) % 1000000007) % 256 AS bucket,
-               list_reduce(
-                 list_prepend(CAST(0 AS BIGINT),
-                   list_transform(regexp_extract_all(d, '(?s).'),
-                     c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 137 + b) % 998244353) AS v
-             FROM hs),
-           rho AS (
-             SELECT lang, bucket,
-               CASE WHEN v = 0 THEN 53
-                    ELSE CAST(log2(v & -v) AS BIGINT) + 1 END AS rho
-             FROM vr),
-           regs AS (SELECT lang, bucket, max(rho) AS reg
-                    FROM rho GROUP BY 1, 2),
-           agg AS (
-             SELECT lang, CAST(count(*) AS BIGINT) AS n_buckets_used,
-               CAST(sum(1::BIGINT << CAST(53 - reg AS INTEGER)) AS BIGINT)
-                 AS zp
-             FROM regs GROUP BY 1),
-           ex AS (SELECT lang, CAST(count(DISTINCT token) AS BIGINT)
-                    AS n_exact
-                  FROM toks GROUP BY 1)
-           SELECT lang, n_exact, n_buckets_used,
-             zp + (256 - n_buckets_used) * (1::BIGINT << 53) AS z_scaled,
-             ((CAST(0.7213 AS DOUBLE)
-               / (CAST(1.0 AS DOUBLE)
-                  + CAST(1.079 AS DOUBLE) / CAST(256.0 AS DOUBLE)))
-              * CAST(65536.0 AS DOUBLE)
-              * CAST(9007199254740992.0 AS DOUBLE))
-             / CAST(zp + (256 - n_buckets_used) * (1::BIGINT << 53)
-                    AS DOUBLE) AS hll_est
-           FROM agg JOIN ex USING (lang) ORDER BY lang""",
-
-      // linear-probe mirror: the full 3-iteration GD loop unrolled —
-      // per-bucket counts, zero-init weights, pred/grad/update per round
-      // with the same signed truncating division
-      "q_linear_probe" -> {
-        val iter = (wp: String, p: String, g: String, wn: String) =>
-          s"""$p AS (
-             SELECT f.doc_id, CAST(sum(f.x * w.w) AS BIGINT) AS pred
-             FROM feats f JOIN $wp w USING (j) GROUP BY 1),
-           $g AS (
-             SELECT f.j, CAST(sum(f.x * (p.pred - y.y_e6)) AS BIGINT) AS g
-             FROM feats f JOIN $p p USING (doc_id) JOIN y USING (doc_id)
-             GROUP BY 1),
-           $wn AS (
-             SELECT w.j, w.w - COALESCE(g.g, 0) // (20000 * n) AS w
-             FROM $wp w LEFT JOIN $g g USING (j) CROSS JOIN nn)"""
-        """WITH toks AS (
-             SELECT doc_id,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-                 AS token
-             FROM documents),
-           feats AS (
-             SELECT doc_id,
-               list_reduce(
-                 list_prepend(CAST(1 AS BIGINT),
-                   list_transform(regexp_extract_all(token, '(?s).'),
-                     c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 131 + b) % 1000000007) % 32 AS j,
-               CAST(count(*) AS BIGINT) AS x
-             FROM toks GROUP BY 1, 2),
-           y AS (
-             SELECT doc_id,
-               CAST(CASE WHEN lang = 'en' THEN 1000000 ELSE 0 END AS BIGINT)
-                 AS y_e6
-             FROM documents),
-           nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-           w0 AS (SELECT j, CAST(0 AS BIGINT) AS w FROM range(32) t(j)),
-           """ +
-          Seq(("w0", "p1", "g1", "w1"), ("w1", "p2", "g2", "w2"),
-            ("w2", "p3", "g3", "w3"))
-            .map { case (a, b, c, d) => iter(a, b, c, d) }.mkString(",\n") +
-          """
-           SELECT f.doc_id, y.y_e6, CAST(sum(f.x * w.w) AS BIGINT) AS score_e6
-           FROM feats f JOIN w3 w USING (j) JOIN y USING (doc_id)
-           GROUP BY f.doc_id, y.y_e6
-           ORDER BY score_e6 DESC, doc_id LIMIT 100"""
-      },
-
-      // DSIR mirror: hashed-unigram buckets (seed-0 poly fingerprint mod
-      // 1024), add-one-smoothed target/raw ratios cross-multiplied to an
-      // integer rational, the 20-step fixed-point log2 as a recursive CTE
-      // over the distinct (num, den) pairs, sign from the a>=b side
-      "q_dsir_weights" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id, (lang = 'en') AS tgt,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
-                 AS token
-             FROM documents),
-           fb AS (
-             SELECT doc_id, tgt,
-               list_reduce(
-                 list_prepend(CAST(1 AS BIGINT),
-                   list_transform(regexp_extract_all(token, '(?s).'),
-                     c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 131 + b) % 1000000007) % 1024 AS f
-             FROM toks),
-           rawc AS (SELECT f, CAST(count(*) AS BIGINT) AS raw_f
-                    FROM fb GROUP BY 1),
-           tgtc AS (SELECT f, CAST(count(*) AS BIGINT) AS target_f
-                    FROM fb WHERE tgt GROUP BY 1),
-           tot AS (
-             SELECT CAST(sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT)
-                      AS t_target,
-                    CAST(count(*) AS BIGINT) AS t_raw
-             FROM fb),
-           ab AS (
-             SELECT r.f,
-               (COALESCE(g.target_f, 0) + 1) * (t.t_raw + 1024) AS a,
-               (t.t_target + 1024) * (r.raw_f + 1) AS b
-             FROM rawc r LEFT JOIN tgtc g USING (f) CROSS JOIN tot t),
-           gl AS (SELECT f, greatest(a, b) AS gg, least(a, b) AS ll,
-                    (a >= b) AS pos
-                  FROM ab),
-           dv AS (SELECT DISTINCT gg, ll FROM gl),
-           it AS (
-             SELECT gg, ll, 0 AS i,
-               (CAST(gg AS DOUBLE) / CAST(ll AS DOUBLE))
-                 / CAST((1::BIGINT << (length(bin(gg // ll)) - 1)) AS DOUBLE)
-                 AS m,
-               0::BIGINT AS k
-             FROM dv
-             UNION ALL
-             SELECT gg, ll, i + 1,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN m * m / CAST(2 AS DOUBLE) ELSE m * m END,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN k * 2 + 1 ELSE k * 2 END
-             FROM it WHERE i < 20),
-           lg AS (
-             SELECT gg, ll,
-               ((CAST(length(bin(gg // ll)) - 1 AS BIGINT) * 1048576 + k)
-                 * 1000000) // 1048576 AS mag_e6
-             FROM it WHERE i = 20),
-           delta AS (
-             SELECT f, CASE WHEN pos THEN mag_e6 ELSE -mag_e6 END
-               AS delta_e6
-             FROM gl JOIN lg USING (gg, ll)),
-           w AS (
-             SELECT fb.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-               CAST(sum(d.delta_e6) AS BIGINT) AS w_e6
-             FROM fb JOIN delta d USING (f) GROUP BY 1)
-           SELECT doc_id, n_tokens, w_e6 FROM w
-           ORDER BY w_e6 DESC, doc_id LIMIT 100""",
-
-      // PageRank mirror: same trade-graph edges, 5 unrolled iterations of
-      // the integer update rank' = 150000 + 850000·Σ(rank·w // tw) // 1e6
-      // (floor division inside the sum, identical association)
-      "q_pagerank" -> {
-        val iter = (prev: String, cur: String) =>
-          s"""$cur AS (
-             SELECT n.node,
-               150000 + 850000 * COALESCE(s.c, 0) // 1000000 AS rank_e6
-             FROM nodes n LEFT JOIN (
-               SELECT e.dst AS node,
-                 CAST(sum(r.rank_e6 * e.w // e.tw) AS BIGINT) AS c
-               FROM ew e JOIN $prev r ON e.src = r.node GROUP BY 1) s
-             USING (node))"""
-        """WITH edges AS (
-             SELECT cn.n_name AS src, sn.n_name AS dst,
-               CAST(count(*) AS BIGINT) AS w
-             FROM lineitem l
-             JOIN orders o ON l.l_orderkey = o.o_orderkey
-             JOIN customer c ON o.o_custkey = c.c_custkey
-             JOIN supplier s ON l.l_suppkey = s.s_suppkey
-             JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-             JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-             GROUP BY 1, 2),
-           ew AS (
-             SELECT e.src, e.dst, e.w, t.tw
-             FROM edges e JOIN (SELECT src, CAST(sum(w) AS BIGINT) AS tw
-                                FROM edges GROUP BY 1) t USING (src)),
-           nodes AS (SELECT src AS node FROM edges
-                     UNION SELECT dst FROM edges),
-           r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank_e6
-                  FROM nodes),
-           """ +
-          Seq("r0" -> "r1", "r1" -> "r2", "r2" -> "r3", "r3" -> "r4",
-            "r4" -> "r5").map { case (p, c) => iter(p, c) }.mkString(",\n") +
-          """
-           SELECT node, rank_e6 FROM r5 ORDER BY rank_e6 DESC, node"""
-      },
-
-      // q_dedup_groups' recursive closure composed with q_quality_filter's
-      // score: per near-dup group, keep the best-quality member (ties →
-      // min doc_id) — the dedup decision a training pipeline actually makes
-      "q_dedup_keep_best" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           shs AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 3
-                 THEN list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' ')))
-                 ELSE [] END AS sh
-             FROM toks),
-           sig AS (
-             SELECT doc_id,
-               list_transform(range(0, 16), s ->
-                 list_min(list_transform(sh, g ->
-                   list_reduce(
-                     list_prepend(CAST(s + 1 AS BIGINT),
-                       list_transform(regexp_extract_all(g, '(?s).'),
-                         c -> CAST(unicode(c) AS BIGINT))),
-                     (a, b) -> (a * 131 + b) % 1000000007)))) AS sig
-             FROM shs WHERE len(sh) > 0),
-           bb AS (
-             SELECT doc_id, b.band AS band, b.bh AS bh
-             FROM (SELECT doc_id,
-                     unnest(list_transform(range(0, 4), j -> {'band': j, 'bh':
-                       list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                         (a, v) -> (a * 131 + (v % 1000000007)) % 1000000007)
-                       * 998244353 +
-                       list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                         (a, v) -> (a * 137 + (v % 998244353)) % 998244353)}))
-                     AS b
-                   FROM sig)),
-           edges AS (
-             SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-             FROM bb a JOIN bb b ON a.band = b.band AND a.bh = b.bh),
-           reach AS (
-             SELECT src, dst FROM edges
-             UNION
-             SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-           labels AS (
-             SELECT src AS id, min(dst) AS group_rep FROM reach GROUP BY src),
-           q AS (
-             SELECT doc_id AS id,
-               CAST(CAST(n_words >= 50 AND n_words <= 20000 AS INTEGER)
-                  + CAST(n_alpha >= n_words * 2 AND n_alpha <= n_words * 12
-                      AS INTEGER)
-                  + CAST(n_punct * 10 <= n_chars AS INTEGER)
-                  + CAST(n_digit * 5 <= n_chars AS INTEGER) AS BIGINT) AS score
-             FROM (SELECT doc_id,
-                     CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-                       AS n_words,
-                     CAST(length(text) AS BIGINT) AS n_chars,
-                     CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS BIGINT)
-                       AS n_alpha,
-                     CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT)
-                       AS n_digit,
-                     CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS BIGINT)
-                       AS n_punct
-                   FROM documents)),
-           r AS (
-             SELECT l.group_rep, l.id, q.score,
-               row_number() OVER (PARTITION BY l.group_rep
-                                  ORDER BY q.score DESC, l.id) AS rk,
-               count(*) OVER (PARTITION BY l.group_rep) AS n_members,
-               max(q.score) OVER (PARTITION BY l.group_rep) AS best_score
-             FROM labels l JOIN q USING (id))
-           SELECT group_rep, CAST(n_members AS BIGINT) AS n_members,
-             best_score, id AS keep_id
-           FROM r WHERE rk = 1 ORDER BY group_rep""",
-
-      "q_bpe_tokens" ->
-        """SELECT doc_id,
-             CAST(len(toks) AS BIGINT) AS n_tokens,
-             CAST(len(list_distinct(toks)) AS BIGINT) AS n_unique
-           FROM (SELECT doc_id,
-                   regexp_extract_all(lower(text),
-                     '[a-z]+|[0-9]+|[^a-z0-9\s]+') AS toks
-                 FROM documents)
-           ORDER BY doc_id""",
-
-      // ---- round 3 ----
-
-      // idf is the same fixed-point binary log the Spark side computes
-      // (bitlength integer part + 20-step square-and-renormalize mantissa
-      // fold): only IEEE-exact ops, so the BIGINT scores agree bit-for-bit.
-      // The fold is a recursive CTE over the distinct df values, NOT
-      // list_reduce: DuckDB 1.0's list_reduce cross-contaminates struct
-      // accumulators between rows of a vector (batch-dependent results)
-      // Unigram surprisal: the q_tfidf fixed-point log machinery (recursive
-      // fold over DISTINCT count values — see that oracle's comment on
-      // DuckDB list_reduce) applied to n_total/cnt, summed per doc.
-      "q_unigram_surprisal" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-             FROM documents),
-           cnts AS (SELECT token, count(*) AS cnt FROM toks GROUP BY 1),
-           nt AS (SELECT count(*) AS n_total FROM toks),
-           dv AS (SELECT cnt, n_total
-                  FROM (SELECT DISTINCT cnt FROM cnts) CROSS JOIN nt),
-           it AS (
-             SELECT cnt, n_total, 0 AS i,
-               (CAST(n_total AS DOUBLE) / CAST(cnt AS DOUBLE))
-                 / CAST((1::BIGINT << (length(bin(n_total // cnt)) - 1)) AS DOUBLE)
-                 AS m,
-               0::BIGINT AS k
-             FROM dv
-             UNION ALL
-             SELECT cnt, n_total, i + 1,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN m * m / CAST(2 AS DOUBLE) ELSE m * m END,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN k * 2 + 1 ELSE k * 2 END
-             FROM it WHERE i < 20),
-           sv AS (
-             SELECT cnt,
-               ((CAST(length(bin(n_total // cnt)) - 1 AS BIGINT) * 1048576 + k)
-                 * 1000000) // 1048576 AS s_e6
-             FROM it WHERE i = 20),
-           per AS (
-             SELECT doc_id, count(*) AS n_tokens, sum(s_e6) AS sum_surprisal_e6
-             FROM toks JOIN cnts USING (token) JOIN sv USING (cnt)
-             GROUP BY doc_id)
-           SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-             CAST(sum_surprisal_e6 AS BIGINT) AS sum_surprisal_e6,
-             CAST(sum_surprisal_e6 // n_tokens AS BIGINT) AS mean_surprisal_e6
-           FROM per ORDER BY doc_id""",
-
-      // BPE training: 8 unrolled rounds, each = weighted adjacent-pair
-      // counts over the current word table, top-1 with (cnt DESC, a, b)
-      // tie-break, and a per-word recursive-CTE walk applying the merge
-      // left-to-right (a merged symbol cannot immediately re-merge).
-      "q_bpe_train" -> {
-        def round(i: Int): String = {
-          val prev = s"words${i - 1}"
-          s"""pairs$i AS (
-             SELECT syms[pos] AS a, syms[pos + 1] AS b, sum(freq) AS cnt
-             FROM (SELECT freq, syms, unnest(range(1, len(syms))) AS pos
-                   FROM $prev)
-             GROUP BY 1, 2),
-           top$i AS (
-             SELECT a, b, cnt FROM pairs$i
-             ORDER BY cnt DESC, a, b LIMIT 1),
-           walk$i AS (
-             SELECT w, freq, syms, 1 AS i, CAST([] AS VARCHAR[]) AS acc
-             FROM $prev
-             UNION ALL
-             SELECT k.w, k.freq, k.syms,
-               CASE WHEN k.i < len(k.syms) AND k.syms[k.i] = t.a
-                         AND k.syms[k.i + 1] = t.b
-                 THEN k.i + 2 ELSE k.i + 1 END,
-               CASE WHEN k.i < len(k.syms) AND k.syms[k.i] = t.a
-                         AND k.syms[k.i + 1] = t.b
-                 THEN list_append(k.acc, t.a || t.b)
-                 ELSE list_append(k.acc, k.syms[k.i]) END
-             FROM walk$i k, top$i t WHERE k.i <= len(k.syms)),
-           words$i AS MATERIALIZED (
-             SELECT w, freq, acc AS syms FROM walk$i WHERE i = len(syms) + 1)"""
-        }
-        // each words frame is referenced twice by the next round (pair
-        // counts + merge walk); MATERIALIZED stops DuckDB from inlining the
-        // chain, which would re-run every earlier recursive walk per
-        // reference (exponential blowup over 8 rounds)
-        s"""WITH RECURSIVE words0 AS MATERIALIZED (
-             SELECT w, freq, regexp_extract_all(w, '(?s).') AS syms
-             FROM (SELECT w, count(*) AS freq
-                   FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS w
-                         FROM documents)
-                   GROUP BY w)),
-           ${(1 to 8).map(round).mkString(",\n           ")}
-           ${(1 to 8).map(i =>
-              s"""SELECT CAST($i AS INTEGER) AS merge_rank, a AS left_sym,
-                  b AS right_sym, CAST(cnt AS BIGINT) AS pair_count FROM top$i""")
-             .mkString("\n           UNION ALL\n           ")}
-           ORDER BY merge_rank"""
-      },
-
-      // Bigram LM: lead() bigrams per doc, corpus bigram/context counts,
-      // vocab scalar, then the same 20-step fixed-point-log recursive CTE
-      // over the DISTINCT (c1+V, c12+1) pairs.
-      "q_bigram_lm" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token,
-               generate_subscripts(regexp_split_to_array(trim(lower(text)), '\s+'), 1) AS pos
-             FROM documents),
-           bg AS (
-             SELECT doc_id, w1, w2 FROM (
-               SELECT doc_id, token AS w1,
-                 lead(token) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-               FROM toks)
-             WHERE w2 IS NOT NULL),
-           c12 AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2),
-           c1 AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY 1),
-           vv AS (SELECT count(DISTINCT token) AS v FROM toks),
-           dv AS (
-             SELECT DISTINCT c1.c1 + vv.v AS num, c12.c12 + 1 AS den
-             FROM c12 JOIN c1 USING (w1) CROSS JOIN vv),
-           it AS (
-             SELECT num, den, 0 AS i,
-               (CAST(num AS DOUBLE) / CAST(den AS DOUBLE))
-                 / CAST((1::BIGINT << (length(bin(num // den)) - 1)) AS DOUBLE)
-                 AS m,
-               0::BIGINT AS k
-             FROM dv
-             UNION ALL
-             SELECT num, den, i + 1,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN m * m / CAST(2 AS DOUBLE) ELSE m * m END,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN k * 2 + 1 ELSE k * 2 END
-             FROM it WHERE i < 20),
-           sv AS (
-             SELECT num, den,
-               ((CAST(length(bin(num // den)) - 1 AS BIGINT) * 1048576 + k)
-                 * 1000000) // 1048576 AS s_e6
-             FROM it WHERE i = 20),
-           per AS (
-             SELECT bg.doc_id, count(*) AS n_bigrams, sum(s_e6) AS sum_surprisal_e6
-             FROM bg
-             JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN vv
-             JOIN sv ON sv.num = c1.c1 + vv.v AND sv.den = c12.c12 + 1
-             GROUP BY bg.doc_id)
-           SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams,
-             CAST(sum_surprisal_e6 AS BIGINT) AS sum_surprisal_e6,
-             CAST(sum_surprisal_e6 // n_bigrams AS BIGINT) AS mean_surprisal_e6
-           FROM per ORDER BY doc_id""",
-
-      // BM25: same fixed-point-log recursive CTE as q_tfidf for idf over
-      // the (few) distinct df values of the query terms; the rest is pure
-      // BIGINT arithmetic mirroring the integer-folded k1=6/5, b=3/4
-      // formula (see the Spark-side comment for the derivation).
-      "q_bm25" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-             FROM documents),
-           dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-           qt AS (SELECT * FROM toks
-                  WHERE token IN ('spark','query','table','join','stream')),
-           tf AS (SELECT doc_id, token, count(*) AS tf FROM qt GROUP BY 1, 2),
-           dfreq AS (SELECT token, count(*) AS df
-                     FROM (SELECT DISTINCT doc_id, token FROM qt) GROUP BY 1),
-           nd AS (SELECT count(*) AS n_docs FROM documents),
-           tt AS (SELECT count(*) AS t_total FROM toks),
-           dv AS (SELECT df, n_docs
-                  FROM (SELECT DISTINCT df FROM dfreq) CROSS JOIN nd),
-           it AS (
-             SELECT df, n_docs, 0 AS i,
-               (CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE))
-                 / CAST((1::BIGINT << (length(bin(n_docs // df)) - 1)) AS DOUBLE)
-                 AS m,
-               0::BIGINT AS k
-             FROM dv
-             UNION ALL
-             SELECT df, n_docs, i + 1,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN m * m / CAST(2 AS DOUBLE) ELSE m * m END,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN k * 2 + 1 ELSE k * 2 END
-             FROM it WHERE i < 20),
-           iv AS (
-             SELECT df,
-               ((CAST(length(bin(n_docs // df)) - 1 AS BIGINT) * 1048576 + k)
-                 * 1000000) // 1048576 AS idf_e6
-             FROM it WHERE i = 20),
-           scored AS (
-             SELECT tf.doc_id,
-               (idf_e6 * tf * 22 * t_total)
-                 // (10 * tf * t_total + 3 * t_total + 9 * dl * n_docs) AS term_e6
-             FROM tf
-             JOIN dl USING (doc_id)
-             JOIN dfreq USING (token)
-             JOIN iv USING (df)
-             CROSS JOIN nd CROSS JOIN tt)
-           SELECT doc_id, CAST(n_terms AS BIGINT) AS n_terms,
-             CAST(score_e6 AS BIGINT) AS score_e6
-           FROM (SELECT doc_id, count(*) AS n_terms, sum(term_e6) AS score_e6
-                 FROM scored GROUP BY doc_id)
-           ORDER BY score_e6 DESC, doc_id LIMIT 100""",
-
-      // Boilerplate removal: non-overlapping 3-token chunks, corpus-wide
-      // occurrence counts, drop cnt >= 3, reassemble survivors in position
-      // order (string_agg ORDER BY pos == Spark's array_sort on (pos, chunk)
-      // structs since pos is unique per doc).
-      "q_boilerplate" ->
-        """WITH toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           chunks AS (
-             SELECT doc_id, c.pos AS pos, c.chunk AS chunk
-             FROM (SELECT doc_id,
-                     unnest(list_transform(range(0, (len(t) + 2) // 3),
-                       i -> {'pos': i,
-                             'chunk': array_to_string(t[i*3+1:i*3+3], ' ')})) AS c
-                   FROM toks)),
-           freq AS (SELECT chunk, count(*) AS cnt FROM chunks GROUP BY 1)
-           SELECT doc_id,
-             CAST(count(*) AS BIGINT) AS n_chunks,
-             CAST(sum(CASE WHEN cnt >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-             coalesce(string_agg(CASE WHEN cnt < 3 THEN chunk END, ' ' ORDER BY pos), '')
-               AS cleaned_text
-           FROM chunks JOIN freq USING (chunk)
-           GROUP BY doc_id ORDER BY doc_id""",
-
-      "q_tfidf" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS token
-             FROM documents),
-           tf AS (SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-           dfreq0 AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-           nd AS (SELECT count(*) AS n_docs FROM documents),
-           dv AS (SELECT df, n_docs
-                  FROM (SELECT DISTINCT df FROM dfreq0) CROSS JOIN nd),
-           it AS (
-             SELECT df, n_docs, 0 AS i,
-               (CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE))
-                 / CAST((1::BIGINT << (length(bin(n_docs // df)) - 1)) AS DOUBLE)
-                 AS m,
-               0::BIGINT AS k
-             FROM dv
-             UNION ALL
-             SELECT df, n_docs, i + 1,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN m * m / CAST(2 AS DOUBLE) ELSE m * m END,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN k * 2 + 1 ELSE k * 2 END
-             FROM it WHERE i < 20),
-           idf AS (
-             SELECT df,
-               ((CAST(length(bin(n_docs // df)) - 1 AS BIGINT) * 1048576 + k)
-                 * 1000000) // 1048576 AS idf_e6
-             FROM it WHERE i = 20),
-           scored AS (
-             SELECT doc_id, token, CAST(tf * idf_e6 AS BIGINT) AS score_e6
-             FROM tf JOIN dfreq0 USING (token) JOIN idf USING (df)),
-           rk AS (
-             SELECT doc_id, token, score_e6,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY score_e6 DESC, token) AS rnk
-             FROM scored)
-           SELECT doc_id, CAST(rnk AS INTEGER) AS rnk, token, score_e6
-           FROM rk WHERE rnk <= 5 ORDER BY doc_id, rnk""",
-
-      "q_rep_ngrams" ->
-        """WITH s AS (
-             SELECT doc_id,
-               CAST(len(t) AS BIGINT) AS n_words,
-               CAST(len(list_distinct(t)) AS BIGINT) AS n_uniq_words,
-               CAST(greatest(len(t) - 2, 0) AS BIGINT) AS n_3grams,
-               CAST(CASE WHEN len(t) >= 3
-                 THEN len(list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' '))))
-                 ELSE 0 END AS BIGINT) AS n_uniq_3grams
-             FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS t
-                   FROM documents))
-           SELECT doc_id, n_words, n_uniq_words, n_3grams, n_uniq_3grams,
-             CASE WHEN n_words > 0
-               THEN floor((n_words - n_uniq_words) * 1e6 / n_words) / 1e6 END
-               AS dup_word_frac,
-             CASE WHEN n_3grams > 0
-               THEN floor((n_3grams - n_uniq_3grams) * 1e6 / n_3grams) / 1e6 END
-               AS dup_3gram_frac
-           FROM s ORDER BY doc_id""",
-
-      // Format round-trip: the per-format aggregates must all equal the
-      // one parquet-source aggregate — losslessness is the assertion.
-      "q_format_roundtrip" ->
-        """WITH a AS (
-             SELECT count(*) AS n_rows,
-               CAST(sum(o_orderkey) AS BIGINT) AS sum_key,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price
-             FROM orders)
-           SELECT 'csv' AS format, n_rows, sum_key, sum_price FROM a
-           UNION ALL SELECT 'json', n_rows, sum_key, sum_price FROM a
-           UNION ALL SELECT 'orc', n_rows, sum_key, sum_price FROM a
-           ORDER BY format""",
-
-      // URL dedup: same derived URLs, same regex canonicalization chain
-      // (fragment drop, scheme/host lowercase, default-port + www. strip,
-      // trailing-slash strip, tracking-param drop, param sort), same
-      // first-id-wins ranking.
-      "q_url_dedup" ->
-        """WITH u AS (
-             SELECT doc_id,
-               CASE doc_id % 4
-                 WHEN 0 THEN 'HTTP://WWW.' || source || '.Example.COM/a/'
-                   || CAST((doc_id // 4) % 60 AS VARCHAR) || '?b=2&a=1'
-                 WHEN 1 THEN 'http://' || source || '.example.com:80/a/'
-                   || CAST((doc_id // 4) % 60 AS VARCHAR) || '/?a=1&b=2'
-                 WHEN 2 THEN 'http://www.' || source || '.example.com/a/'
-                   || CAST((doc_id // 4) % 60 AS VARCHAR) || '?a=1&utm_source=rss&b=2'
-                 ELSE 'http://' || source || '.Example.com/a/'
-                   || CAST((doc_id // 4) % 60 AS VARCHAR) || '?b=2&a=1#frag'
-               END AS url
-             FROM documents),
-           nf AS (
-             SELECT doc_id, url, regexp_extract(url, '^([^#]*)', 1) AS nofrag
-             FROM u),
-           p AS (
-             SELECT doc_id, url, nofrag,
-               coalesce(array_to_string(list_sort(list_filter(
-                 str_split(regexp_extract(nofrag, '\?(.*)$', 1), '&'),
-                 pp -> pp <> ''
-                   AND NOT regexp_matches(pp, '^(utm_[^=]*|fbclid|gclid|ref)='))),
-                 '&'), '') AS q
-             FROM nf),
-           canon AS (
-             SELECT doc_id, url,
-               lower(regexp_extract(nofrag, '^([^:/?#]+)://', 1)) || '://'
-               || regexp_replace(regexp_replace(
-                    lower(regexp_extract(nofrag, '^[^:/?#]+://([^/?#]*)', 1)),
-                    ':(80|443)$', ''), '^www\.', '')
-               || regexp_replace(
-                    regexp_extract(nofrag, '^[^:/?#]+://[^/?#]*([^?#]*)', 1),
-                    '/+$', '')
-               || CASE WHEN q = '' THEN '' ELSE '?' || q END AS canonical_url
-             FROM p)
-           SELECT doc_id, url, canonical_url,
-             CAST(row_number() OVER (PARTITION BY canonical_url ORDER BY doc_id)
-               AS INTEGER) AS url_rank,
-             CAST(row_number() OVER (PARTITION BY canonical_url ORDER BY doc_id) = 1
-               AS INTEGER) AS is_kept
-           FROM canon ORDER BY doc_id""",
-
-      // C4 cleaning battery: the same deterministic sentence-ification
-      // (literal substitutions + every-10th-token ".\n" break), then the
-      // line rules (terminal punct, >=5 words, no javascript) and doc
-      // rules (>=3 kept lines, no lorem ipsum, no brace).
-      "q_c4_filter" ->
-        """WITH d AS (
-             SELECT doc_id,
-               regexp_replace(
-                 replace(replace(text, 'spark', 'javascript'),
-                         'vector', 'lorem ipsum {'),
-                 '((\S+\s+){9}\S+)\s+', '\1.' || chr(10), 'g') AS c4text
-             FROM documents),
-           k AS (
-             SELECT doc_id, c4text,
-               str_split(c4text, chr(10)) AS lines,
-               list_filter(str_split(c4text, chr(10)), l ->
-                 len(str_split_regex(trim(l), '\s+')) >= 5
-                 AND right(trim(l), 1) IN ('.', '!', '?', '"')
-                 AND NOT contains(lower(l), 'javascript')) AS kept
-             FROM d)
-           SELECT doc_id,
-             CAST(len(lines) AS BIGINT) AS n_lines,
-             CAST(len(kept) AS BIGINT) AS n_kept_lines,
-             coalesce(array_to_string(kept, chr(10)), '') AS clean_text,
-             CAST(NOT contains(lower(c4text), 'lorem ipsum') AS INTEGER) AS f_lorem,
-             CAST(NOT contains(c4text, '{') AS INTEGER) AS f_brace,
-             CAST(len(kept) >= 3 AND NOT contains(lower(c4text), 'lorem ipsum')
-                  AND NOT contains(c4text, '{') AS INTEGER) AS keep
-           FROM k ORDER BY doc_id""",
-
-      "q_quality_filter" ->
-        """WITH b AS (
-             SELECT doc_id,
-               CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_words,
-               CAST(length(text) AS BIGINT) AS n_chars,
-               CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS BIGINT) AS n_alpha,
-               CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digit,
-               CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS BIGINT) AS n_punct
-             FROM documents),
-           f AS (
-             SELECT doc_id, n_words, n_chars,
-               CAST(n_words >= 50 AND n_words <= 20000 AS INTEGER) AS f_len,
-               CAST(n_alpha >= n_words * 2 AND n_alpha <= n_words * 12 AS INTEGER)
-                 AS f_wordlen,
-               CAST(n_punct * 10 <= n_chars AS INTEGER) AS f_symbol,
-               CAST(n_digit * 5 <= n_chars AS INTEGER) AS f_digit
-             FROM b)
-           SELECT doc_id, n_words, n_chars, f_len, f_wordlen, f_symbol, f_digit,
-             CAST(f_len + f_wordlen + f_symbol + f_digit = 4 AS INTEGER) AS keep
-           FROM f ORDER BY doc_id""",
-
-      // both log2s are the Spark side's fixed-point binary log (bitlength +
-      // 20-step mantissa fold), so every compared quantity is exact BIGINT
-      // arithmetic until the final /1e4 display scaling. Recursive-CTE
-      // folds over the distinct c / n values (list_reduce with a struct
-      // accumulator is batch-unsafe in DuckDB 1.0 — see q_tfidf)
-      "q_entropy" ->
-        """WITH RECURSIVE cnt AS (
-             SELECT doc_id, ch, count(*) AS c
-             FROM (SELECT doc_id,
-                     unnest(regexp_extract_all(lower(text), '[a-z]')) AS ch
-                   FROM documents)
-             GROUP BY 1, 2),
-           cit AS (
-             SELECT c, 0 AS i,
-               CAST(c AS DOUBLE)
-                 / CAST((1::BIGINT << (length(bin(c)) - 1)) AS DOUBLE) AS m,
-               0::BIGINT AS k
-             FROM (SELECT DISTINCT c FROM cnt)
-             UNION ALL
-             SELECT c, i + 1,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN m * m / CAST(2 AS DOUBLE) ELSE m * m END,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN k * 2 + 1 ELSE k * 2 END
-             FROM cit WHERE i < 20),
-           lc AS (
-             SELECT c,
-               ((CAST(length(bin(c)) - 1 AS BIGINT) * 1048576 + k) * 1000000)
-                 // 1048576 AS lc_e6
-             FROM cit WHERE i = 20),
-           agg AS (
-             SELECT doc_id,
-               CAST(sum(c) AS BIGINT) AS n,
-               CAST(count(*) AS INTEGER) AS n_letters,
-               CAST(sum(c * lc_e6) AS BIGINT) AS slc_e6
-             FROM cnt JOIN lc USING (c) GROUP BY 1),
-           nit AS (
-             SELECT n, 0 AS i,
-               CAST(n AS DOUBLE)
-                 / CAST((1::BIGINT << (length(bin(n)) - 1)) AS DOUBLE) AS m,
-               0::BIGINT AS k
-             FROM (SELECT DISTINCT n FROM agg)
-             UNION ALL
-             SELECT n, i + 1,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN m * m / CAST(2 AS DOUBLE) ELSE m * m END,
-               CASE WHEN m * m >= CAST(2 AS DOUBLE)
-                 THEN k * 2 + 1 ELSE k * 2 END
-             FROM nit WHERE i < 20),
-           ln AS (
-             SELECT n,
-               ((CAST(length(bin(n)) - 1 AS BIGINT) * 1048576 + k) * 1000000)
-                 // 1048576 AS ln_e6
-             FROM nit WHERE i = 20)
-           SELECT doc_id, n, n_letters,
-             CAST((n * ln_e6 - slc_e6) // (100 * n) AS BIGINT) / 1e4 AS entropy
-           FROM agg JOIN ln USING (n) ORDER BY doc_id""",
-
-      "q_weighted_avg" ->
-        """WITH a AS (
-             SELECT l_returnflag, l_linestatus,
-               CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6)))
-                 AS DOUBLE) AS disc_rev,
-               CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS qty
-             FROM lineitem GROUP BY 1, 2)
-           SELECT l_returnflag, l_linestatus, disc_rev, qty,
-             floor(disc_rev / qty * 1e6) / 1e6 AS unit_rev
-           FROM a ORDER BY l_returnflag, l_linestatus""",
-
-      "q_cube" ->
-        """WITH o AS (
-             SELECT CAST(year(o_orderdate) AS INTEGER) AS y,
-                    o_orderpriority AS pri, o_totalprice
-             FROM orders)
-           SELECT coalesce(y, -1) AS y, coalesce(pri, 'ALL') AS pri,
-             CAST(grouping(y) AS INTEGER) AS g_y,
-             CAST(grouping(pri) AS INTEGER) AS g_p,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
-           FROM o GROUP BY CUBE (y, pri)
-           ORDER BY 1, 2, 3, 4""",
-
-      "q_exists" ->
-        """SELECT c_custkey, c_mktsegment
-           FROM customer c
-           WHERE EXISTS (SELECT 1 FROM orders o
-                         WHERE o.o_custkey = c.c_custkey
-                           AND o.o_totalprice > 300000)
-             AND NOT EXISTS (SELECT 1 FROM orders o
-                             WHERE o.o_custkey = c.c_custkey
-                               AND o.o_orderpriority = '1-URGENT')
-           ORDER BY c_custkey""",
-
-      "q_ffill" ->
-        """WITH e AS (
-             SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value, 0 AS src
-             FROM events WHERE user_id < 50),
-           grid AS (
-             SELECT u.user_id, g.ts,
-               CAST(NULL AS BIGINT) AS event_id,
-               CAST(NULL AS DOUBLE) AS value, 1 AS src
-             FROM (SELECT DISTINCT user_id FROM events WHERE user_id < 50) u
-             CROSS JOIN generate_series(TIMESTAMP '2024-01-05 00:00:00',
-               TIMESTAMP '2024-01-12 00:00:00', INTERVAL 1 HOUR) g(ts)),
-           f AS (
-             SELECT user_id, ts, src,
-               last_value(value IGNORE NULLS) OVER (
-                 PARTITION BY user_id ORDER BY ts, src, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ffill
-             FROM (SELECT * FROM e UNION ALL SELECT * FROM grid))
-           SELECT user_id, ts, ffill FROM f WHERE src = 1
-           ORDER BY user_id, ts""",
-
-      "q_map_funcs" ->
-        """WITH c AS (
-             SELECT user_id, event_type, count(*) AS c
-             FROM events GROUP BY 1, 2)
-           SELECT user_id,
-             CAST(count(*) AS INTEGER) AS n_types,
-             CAST(coalesce(sum(CASE WHEN event_type = 'purchase' THEN c END), 0)
-               AS BIGINT) AS purchases,
-             CAST(coalesce(sum(CASE WHEN event_type = 'error' THEN c END), 0)
-               AS BIGINT) AS errors,
-             CAST(max(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-               AS INTEGER) AS has_signup
-           FROM c GROUP BY user_id ORDER BY user_id""",
-
-      "q_centroid" ->
-        """SELECT label, CAST(pos - 1 AS INTEGER) AS pos,
-             CAST(count(*) AS BIGINT) AS n,
-             floor(CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE)
-                   / count(*) * 1e6) / 1e6 AS mean_v
-           FROM (SELECT label, generate_subscripts(embedding, 1) AS pos,
-                        unnest(embedding) AS v
-                 FROM embeddings)
-           GROUP BY label, pos ORDER BY label, pos""",
-
-      // per-row EWMA: each row's value is the fold over its own ordered
-      // prefix (windowed list; O(prefix) per row is oracle-scale-only —
-      // the engine side is the one-pass mapPartitions scan)
-      "q_ewma" ->
-        s"""SELECT user_id, ts, event_id, value,
-              list_reduce(list(value) OVER (
-                PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                (acc, x) -> x * 0.5 + acc * 0.5) AS ewma
-            FROM (SELECT user_id, $evTs AS ts, event_id, value FROM events)
-            ORDER BY user_id, ts, event_id""",
-
-      "q_ewma_fold" ->
-        """SELECT user_id,
-             list_reduce(list(value ORDER BY ts, event_id),
-                         (acc, x) -> x * 0.5 + acc * 0.5) AS ewma_last
-           FROM (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value
-                 FROM events)
-           GROUP BY user_id ORDER BY user_id""",
-
-      "q_interval_arith" ->
-        """SELECT o_orderkey,
-             CAST(o_orderdate AS DATE) AS d,
-             CAST(o_orderdate AS DATE) + 30 AS d_plus30,
-             CAST(o_orderdate + INTERVAL 2 MONTH AS DATE) AS d_plus2m,
-             last_day(CAST(o_orderdate AS DATE)) AS eom,
-             CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '1996-01-01')
-               AS INTEGER) AS days_to_96,
-             CAST(quarter(o_orderdate) AS INTEGER) AS qtr,
-             CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
-             CAST(weekofyear(o_orderdate) AS INTEGER) AS woy
-           FROM orders ORDER BY o_orderkey""",
-
-      // Exact connected components of the LSH doc↔bucket graph — see
-      // [[dedupGroupsClosureSql]] for the construction.
-      "q_dedup_groups" -> dedupGroupsClosureSql,
-
-      // identical ground truth for the star-contraction path: both
-      // engines' outputs must equal the same transitive closure
-      "q_dedup_groups_star" -> dedupGroupsClosureSql,
-
-      "q_percentile_cont" ->
-        """SELECT l_returnflag,
-             quantile_cont(l_quantity, 0.25) AS p25,
-             quantile_cont(l_quantity, 0.5) AS p50,
-             quantile_cont(l_quantity, 0.9) AS p90,
-             floor(quantile_cont(l_extendedprice, 0.5) * 1e4) / 1e4 AS price_med
-           FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-      "q_seq_pack" ->
-        """WITH b AS (
-             SELECT lang, doc_id,
-               CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-                 AS n_tokens
-             FROM documents),
-           c AS (
-             SELECT lang, doc_id, n_tokens,
-               sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-             FROM b)
-           SELECT lang, doc_id, n_tokens,
-             CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-             CAST((cum - n_tokens) % 2048 AS BIGINT) AS pack_offset
-           FROM c ORDER BY lang, doc_id""",
-
-      "q_chunk" ->
-        """WITH b AS (
-             SELECT doc_id,
-               CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT)
-                 AS n_tokens
-             FROM documents),
-           e AS (
-             SELECT doc_id, n_tokens,
-               unnest(range(0, greatest(n_tokens - 1, 0) + 1, 256)) AS start
-             FROM b)
-           SELECT doc_id, CAST(start // 256 AS BIGINT) AS chunk_idx, start,
-             least(512, n_tokens - start) AS chunk_len
-           FROM e
-           WHERE least(512, n_tokens - start) >= 64 OR start = 0
-           ORDER BY doc_id, chunk_idx""",
-
-      "q_pii_redact" ->
-        """WITH r AS (
-             SELECT doc_id, text,
-               regexp_replace(
-                 regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+',
-                   '<EMAIL>', 'g'),
-                 '[0-9]+', '<NUM>', 'g') AS red
-             FROM documents)
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(text, '[0-9]+')) AS BIGINT) AS n_num_runs,
-             CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+'))
-               AS BIGINT) AS n_emails,
-             CAST(length(red) AS BIGINT) AS redacted_len,
-             list_reduce(
-               list_prepend(CAST(1 AS BIGINT),
-                 list_transform(regexp_extract_all(red, '(?s).'),
-                   c -> CAST(unicode(c) AS BIGINT))),
-               (a, b) -> (a * 131 + b) % 1000000007) AS redacted_fp
-           FROM r ORDER BY doc_id""",
-
-      "q_contamination" ->
-        """WITH shs AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 3
-                 THEN list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' ')))
-                 ELSE [] END AS sh
-             FROM (SELECT doc_id,
-                     regexp_split_to_array(trim(lower(text)), '\s+') AS t
-                   FROM documents)),
-           ev AS (
-             SELECT DISTINCT g
-             FROM (SELECT unnest(sh) AS g FROM shs WHERE doc_id % 100 = 0)),
-           tr AS (
-             SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles,
-               unnest(sh) AS g
-             FROM shs WHERE doc_id % 100 <> 0)
-           SELECT doc_id, n_shingles, CAST(count(*) AS BIGINT) AS n_shared,
-             CAST(count(*) * 10 >= n_shingles AS INTEGER) AS contaminated
-           FROM tr JOIN ev USING (g)
-           GROUP BY doc_id, n_shingles ORDER BY doc_id""",
-
-      // Substring-overlap dedup: 50-token windows from the same
-      // shingle/trim/lower tokenization, identified by the PAIR of
-      // independent poly folds (131 mod 1e9+7, 137 mod 998244353) combined
-      // into one ~59-bit value, transitive closure over shared windows.
-      // Duplicate-span removal, fully mirrored: same 59-bit window hashes
-      // as q_substring_dedup, canonical occurrence = row_number 1 in
-      // (doc, start) order per hash, covered positions unioned, kept
-      // tokens reassembled in position order.
-      "q_span_removal" ->
-        """WITH toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           occ AS (
-             SELECT doc_id, i - 1 AS start,
-               list_reduce(list_prepend(CAST(0 AS BIGINT),
-                 list_transform(regexp_extract_all(g, '(?s).'),
-                   c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 131 + b) % 1000000007) * 998244353 +
-               list_reduce(list_prepend(CAST(0 AS BIGINT),
-                 list_transform(regexp_extract_all(g, '(?s).'),
-                   c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 137 + b) % 998244353) AS wh
-             FROM (SELECT doc_id, i, array_to_string(t[i:i+49], ' ') AS g
-                   FROM (SELECT doc_id, t, unnest(range(1, len(t) - 48)) AS i
-                         FROM toks WHERE len(t) >= 50))),
-           rn AS (
-             SELECT doc_id, start,
-               row_number() OVER (PARTITION BY wh ORDER BY doc_id, start) AS rn
-             FROM occ),
-           covered AS (
-             SELECT DISTINCT doc_id, start + j.j AS pos
-             FROM rn CROSS JOIN (SELECT unnest(range(0, 50)) AS j) j
-             WHERE rn > 1),
-           tokens AS (
-             SELECT doc_id, i - 1 AS pos, t[i] AS tok
-             FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM toks)),
-           kept AS (
-             SELECT tk.doc_id, tk.pos, tk.tok
-             FROM tokens tk LEFT JOIN covered c
-               ON tk.doc_id = c.doc_id AND tk.pos = c.pos
-             WHERE c.doc_id IS NULL),
-           agg AS (
-             SELECT doc_id, count(*) AS n_kept,
-                    string_agg(tok, ' ' ORDER BY pos) AS cleaned
-             FROM kept GROUP BY doc_id)
-           SELECT t.doc_id AS id, CAST(len(t.t) AS BIGINT) AS n_tokens,
-             CAST(len(t.t) - coalesce(a.n_kept, 0) AS BIGINT) AS n_removed,
-             coalesce(a.cleaned, '') AS cleaned_text
-           FROM toks t LEFT JOIN agg a USING (doc_id) ORDER BY id""",
-
-      "q_substring_dedup" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           ws AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 50
-                 THEN list_distinct(list_transform(range(1, len(t) - 48),
-                        i -> array_to_string(t[i:i+49], ' ')))
-                 ELSE [] END AS w
-             FROM toks),
-           wh AS (
-             SELECT doc_id,
-               list_reduce(list_prepend(CAST(0 AS BIGINT),
-                 list_transform(regexp_extract_all(g, '(?s).'),
-                   c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 131 + b) % 1000000007)
-               * 998244353 +
-               list_reduce(list_prepend(CAST(0 AS BIGINT),
-                 list_transform(regexp_extract_all(g, '(?s).'),
-                   c -> CAST(unicode(c) AS BIGINT))),
-                 (a, b) -> (a * 137 + b) % 998244353) AS wh
-             FROM (SELECT doc_id, unnest(w) AS g FROM ws)),
-           edges AS (
-             SELECT DISTINCT a.doc_id AS src, b.doc_id AS dst
-             FROM wh a JOIN wh b ON a.wh = b.wh),
-           reach AS (
-             SELECT src, dst FROM edges
-             UNION
-             SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-           SELECT src AS id, min(dst) AS group_rep
-           FROM reach GROUP BY src ORDER BY id""",
-
-      // Multi-signal dedup: text band buckets (q_dedup_groups mirror) and
-      // hyperplane buckets (q_semantic_dedup mirror) unioned under a kind
-      // namespace, one transitive closure over the combined graph.
-      "q_dedup_multisignal" ->
-        """WITH RECURSIVE toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           shs AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 3
-                 THEN list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' ')))
-                 ELSE [] END AS sh
-             FROM toks),
-           sig AS (
-             SELECT doc_id,
-               list_transform(range(0, 16), s ->
-                 list_min(list_transform(sh, g ->
-                   list_reduce(
-                     list_prepend(CAST(s + 1 AS BIGINT),
-                       list_transform(regexp_extract_all(g, '(?s).'),
-                         c -> CAST(unicode(c) AS BIGINT))),
-                     (a, b) -> (a * 131 + b) % 1000000007)))) AS sig
-             FROM shs WHERE len(sh) > 0),
-           bb AS (
-             SELECT doc_id, b.band AS band, b.bh AS bh
-             FROM (SELECT doc_id,
-                     unnest(list_transform(range(0, 4), j -> {'band': j, 'bh':
-                       list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                         (a, v) -> (a * 131 + (v % 1000000007)) % 1000000007)
-                       * 998244353 +
-                       list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*4+1:j*4+4]),
-                         (a, v) -> (a * 137 + (v % 998244353)) % 998244353)}))
-                     AS b
-                   FROM sig)),
-           buck AS (
-             SELECT vec_id, t.tbl AS tbl,
-               CAST(list_sum(list_transform(range(0, 16), b ->
-                 CASE WHEN list_reduce(list_prepend(0.0,
-                        list_transform(range(1, len(embedding)+1), j ->
-                          CAST(embedding[j] AS DOUBLE) *
-                          (CAST(((1000003*(t.tbl*16+b) + 7919*(j-1) + 12345)
-                                 * 2654435761) % 1000000007 AS DOUBLE)
-                           * 2.0 / 1000000007.0 - 1.0))),
-                      (x, y) -> x + y) >= 0
-                 THEN 1 << (15 - b) ELSE 0 END)) AS BIGINT) AS bucket
-             FROM embeddings, (SELECT unnest(range(0, 2)) AS tbl) t),
-           mem AS (
-             SELECT doc_id AS id, 'b' || CAST(band AS VARCHAR) AS kind,
-               bh AS key
-             FROM bb
-             UNION ALL
-             SELECT vec_id AS id, 'v' || CAST(tbl AS VARCHAR) AS kind,
-               bucket AS key
-             FROM buck),
-           edges AS (
-             SELECT DISTINCT a.id AS src, b.id AS dst
-             FROM mem a JOIN mem b ON a.kind = b.kind AND a.key = b.key),
-           reach AS (
-             SELECT src, dst FROM edges
-             UNION
-             SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-           SELECT src AS id, min(dst) AS group_rep
-           FROM reach GROUP BY src ORDER BY id""",
-
-      // Semantic dedup groups: the q_ann_lsh hyperplane-bucket mirror
-      // (nbits=16, tables=2 matching the semanticDupGroups defaults)
-      // feeding the q_dedup_groups recursive transitive closure — the
-      // fixpoint label propagation's output is exactly the per-component
-      // min over the bucket graph.
-      "q_semantic_dedup" ->
-        """WITH RECURSIVE buck AS (
-             SELECT vec_id, t.tbl AS tbl,
-               CAST(list_sum(list_transform(range(0, 16), b ->
-                 CASE WHEN list_reduce(list_prepend(0.0,
-                        list_transform(range(1, len(embedding)+1), j ->
-                          CAST(embedding[j] AS DOUBLE) *
-                          (CAST(((1000003*(t.tbl*16+b) + 7919*(j-1) + 12345)
-                                 * 2654435761) % 1000000007 AS DOUBLE)
-                           * 2.0 / 1000000007.0 - 1.0))),
-                      (x, y) -> x + y) >= 0
-                 THEN 1 << (15 - b) ELSE 0 END)) AS BIGINT) AS bucket
-             FROM embeddings, (SELECT unnest(range(0, 2)) AS tbl) t),
-           edges AS (
-             SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-             FROM buck a JOIN buck b ON a.tbl = b.tbl AND a.bucket = b.bucket),
-           reach AS (
-             SELECT src, dst FROM edges
-             UNION
-             SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-           SELECT src AS id, min(dst) AS group_rep
-           FROM reach GROUP BY src ORDER BY id""",
-
-      // Full LSH ANN path, exactly mirrored: hyperplane coefficients are a
-      // pure integer-hash formula (see functions.HyperplaneBuckets), dots
-      // and cosines are sequential folds, rank ties break on neighbor id.
-      // nbits=8, tables=8 matches the q_ann_lsh call.
-      "q_ann_lsh" ->
-        """WITH buck AS (
-             SELECT vec_id, t.tbl AS tbl,
-               CAST(list_sum(list_transform(range(0, 8), b ->
-                 CASE WHEN list_reduce(list_prepend(0.0,
-                        list_transform(range(1, len(embedding)+1), j ->
-                          CAST(embedding[j] AS DOUBLE) *
-                          (CAST(((1000003*(t.tbl*8+b) + 7919*(j-1) + 12345)
-                                 * 2654435761) % 1000000007 AS DOUBLE)
-                           * 2.0 / 1000000007.0 - 1.0))),
-                      (x, y) -> x + y) >= 0
-                 THEN 1 << (7 - b) ELSE 0 END)) AS BIGINT) AS bucket
-             FROM embeddings, (SELECT unnest(range(0, 8)) AS tbl) t),
-           cand AS (
-             SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-             FROM buck q JOIN buck c ON q.tbl = c.tbl AND q.bucket = c.bucket
-             WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id),
-           scored AS (
-             SELECT query_id, neighbor_id,
-               list_reduce(list_prepend(0.0, list_transform(range(1, len(qe.embedding)+1),
-                 i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))), (x,y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(qe.embedding)+1),
-                    i -> CAST(qe.embedding[i] AS DOUBLE) * CAST(qe.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-                * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(ce.embedding)+1),
-                    i -> CAST(ce.embedding[i] AS DOUBLE) * CAST(ce.embedding[i] AS DOUBLE))), (x,y) -> x + y)))
-               AS sim
-             FROM cand
-             JOIN embeddings qe ON qe.vec_id = query_id
-             JOIN embeddings ce ON ce.vec_id = neighbor_id),
-           rk AS (
-             SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, neighbor_id) AS rank
-             FROM scored)
-           SELECT query_id, neighbor_id, sim, CAST(rank AS INTEGER) AS rank
-           FROM rk WHERE rank <= 5 ORDER BY query_id, rank""",
-
-      // IVF ANN path, exactly mirrored: centroids are the deterministic
-      // first-nlist stub (nlist=16), assignment/probing by the same
-      // sequential cosine folds, nprobe=4, k=5 — matching the q_ann_ivf
-      // call. Each neighbor lives in exactly one cell, so no pair dedup.
-      "q_ann_ivf" ->
-        """WITH cents AS (
-             SELECT vec_id AS cell, embedding AS cent
-             FROM embeddings ORDER BY vec_id LIMIT 16),
-           cassign AS (
-             SELECT neighbor_id, emb, cell FROM (
-               SELECT e.vec_id AS neighbor_id, e.embedding AS emb, c.cell,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding)+1),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding)+1),
-                        i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-                    * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(c.cent)+1),
-                        i -> CAST(c.cent[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)))
-                   DESC, c.cell) AS rk
-               FROM embeddings e CROSS JOIN cents c)
-             WHERE rk <= 1),
-           qprobe AS (
-             SELECT query_id, qemb, cell FROM (
-               SELECT q.vec_id AS query_id, q.embedding AS qemb, c.cell,
-                 row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                   list_reduce(list_prepend(0.0, list_transform(range(1, len(q.embedding)+1),
-                     i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(q.embedding)+1),
-                        i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))), (x,y) -> x + y))
-                    * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(c.cent)+1),
-                        i -> CAST(c.cent[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)))
-                   DESC, c.cell) AS rk
-               FROM embeddings q CROSS JOIN cents c
-               WHERE q.vec_id < 20)
-             WHERE rk <= 4),
-           scored AS (
-             SELECT query_id, neighbor_id,
-               list_reduce(list_prepend(0.0, list_transform(range(1, len(qemb)+1),
-                 i -> CAST(qemb[i] AS DOUBLE) * CAST(emb[i] AS DOUBLE))), (x,y) -> x + y)
-               / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(qemb)+1),
-                    i -> CAST(qemb[i] AS DOUBLE) * CAST(qemb[i] AS DOUBLE))), (x,y) -> x + y))
-                * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(emb)+1),
-                    i -> CAST(emb[i] AS DOUBLE) * CAST(emb[i] AS DOUBLE))), (x,y) -> x + y)))
-               AS sim
-             FROM cassign JOIN qprobe USING (cell)
-             WHERE neighbor_id <> query_id),
-           rk AS (
-             SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, neighbor_id) AS rank
-             FROM scored)
-           SELECT query_id, neighbor_id, sim, CAST(rank AS INTEGER) AS rank
-           FROM rk WHERE rank <= 5 ORDER BY query_id, rank""",
-
-      // Trained-IVF ANN, the ENTIRE k-means loop mirrored: seeds = first 8
-      // vectors by the portable multiplicative hash, two unrolled Lloyd
-      // iterations (cosine argmax assignment with ties on cell, per-
-      // component decimal-exact means, empty cells keep their centroid),
-      // then the same assign/probe/score plumbing as q_ann_ivf with
-      // nprobe=2, k=5. Norms are factored into `ev`/`cnrm` once — same
-      // IEEE ops as the inline sqrt folds, just not repeated.
-      "q_ann_ivf_trained" ->
-        """WITH ev AS (
-             SELECT vec_id, embedding,
-               sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(embedding)+1),
-                 i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))), (x,y) -> x + y)) AS nrm
-             FROM embeddings),
-           seeds AS (
-             SELECT vec_id AS cell, embedding AS cent, nrm AS cnrm FROM ev
-             ORDER BY ((vec_id % 1000000007) * 2654435761) % 1000000007, vec_id
-             LIMIT 8),
-           a1 AS (
-             SELECT cell, emb FROM (
-               SELECT e.embedding AS emb, c.cell,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding)+1),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (e.nrm * c.cnrm) DESC, c.cell) AS rk
-               FROM ev e CROSS JOIN seeds c)
-             WHERE rk = 1),
-           m1 AS (
-             SELECT cell, pos,
-               CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE)
-                 / count(*) AS m
-             FROM (SELECT cell, generate_subscripts(emb, 1) AS pos,
-                          unnest(emb) AS v FROM a1)
-             GROUP BY cell, pos),
-           c1 AS (
-             SELECT cell, cent,
-               sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(cent)+1),
-                 i -> CAST(cent[i] AS DOUBLE) * CAST(cent[i] AS DOUBLE))), (x,y) -> x + y)) AS cnrm
-             FROM (
-               SELECT s.cell, coalesce(u.newc, s.cent) AS cent
-               FROM seeds s LEFT JOIN (
-                 SELECT cell,
-                   list_transform(list(m ORDER BY pos), x -> CAST(x AS FLOAT)) AS newc
-                 FROM m1 GROUP BY cell) u USING (cell))),
-           a2 AS (
-             SELECT cell, emb FROM (
-               SELECT e.embedding AS emb, c.cell,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding)+1),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (e.nrm * c.cnrm) DESC, c.cell) AS rk
-               FROM ev e CROSS JOIN c1 c)
-             WHERE rk = 1),
-           m2 AS (
-             SELECT cell, pos,
-               CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE)
-                 / count(*) AS m
-             FROM (SELECT cell, generate_subscripts(emb, 1) AS pos,
-                          unnest(emb) AS v FROM a2)
-             GROUP BY cell, pos),
-           c2 AS (
-             SELECT cell, cent,
-               sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(cent)+1),
-                 i -> CAST(cent[i] AS DOUBLE) * CAST(cent[i] AS DOUBLE))), (x,y) -> x + y)) AS cnrm
-             FROM (
-               SELECT s.cell, coalesce(u.newc, s.cent) AS cent
-               FROM c1 s LEFT JOIN (
-                 SELECT cell,
-                   list_transform(list(m ORDER BY pos), x -> CAST(x AS FLOAT)) AS newc
-                 FROM m2 GROUP BY cell) u USING (cell))),
-           cassign AS (
-             SELECT neighbor_id, emb, nrm, cell FROM (
-               SELECT e.vec_id AS neighbor_id, e.embedding AS emb, e.nrm, c.cell,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding)+1),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (e.nrm * c.cnrm) DESC, c.cell) AS rk
-               FROM ev e CROSS JOIN c2 c)
-             WHERE rk = 1),
-           qprobe AS (
-             SELECT query_id, qemb, qnrm, cell FROM (
-               SELECT q.vec_id AS query_id, q.embedding AS qemb, q.nrm AS qnrm, c.cell,
-                 row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                   list_reduce(list_prepend(0.0, list_transform(range(1, len(q.embedding)+1),
-                     i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (q.nrm * c.cnrm) DESC, c.cell) AS rk
-               FROM ev q CROSS JOIN c2 c
-               WHERE q.vec_id < 20)
-             WHERE rk <= 2),
-           scored AS (
-             SELECT query_id, neighbor_id,
-               list_reduce(list_prepend(0.0, list_transform(range(1, len(qemb)+1),
-                 i -> CAST(qemb[i] AS DOUBLE) * CAST(emb[i] AS DOUBLE))), (x,y) -> x + y)
-               / (qnrm * nrm) AS sim
-             FROM cassign JOIN qprobe USING (cell)
-             WHERE neighbor_id <> query_id),
-           rk AS (
-             SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY sim DESC, neighbor_id) AS rank
-             FROM scored)
-           SELECT query_id, neighbor_id, sim, CAST(rank AS INTEGER) AS rank
-           FROM rk WHERE rank <= 5 ORDER BY query_id, rank""",
-
-      // SemDeDup, the ENTIRE path mirrored: the q_ann_ivf_trained k-means
-      // prefix (seeds by the portable hash, two unrolled Lloyd iterations),
-      // assignment keeps the winning cosine as simc, exact pairwise cosine
-      // within cells at tau=0.3, recursive-CTE closure over the symmetric
-      // pair edges, keep = argmin (simc, id) per group.
-      "q_semdedup" ->
-        """WITH RECURSIVE ev AS (
-             SELECT vec_id, embedding,
-               sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(embedding)+1),
-                 i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))), (x,y) -> x + y)) AS nrm
-             FROM embeddings),
-           seeds AS (
-             SELECT vec_id AS cell, embedding AS cent, nrm AS cnrm FROM ev
-             ORDER BY ((vec_id % 1000000007) * 2654435761) % 1000000007, vec_id
-             LIMIT 8),
-           a1 AS (
-             SELECT cell, emb FROM (
-               SELECT e.embedding AS emb, c.cell,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding)+1),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (e.nrm * c.cnrm) DESC, c.cell) AS rk
-               FROM ev e CROSS JOIN seeds c)
-             WHERE rk = 1),
-           m1 AS (
-             SELECT cell, pos,
-               CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE)
-                 / count(*) AS m
-             FROM (SELECT cell, generate_subscripts(emb, 1) AS pos,
-                          unnest(emb) AS v FROM a1)
-             GROUP BY cell, pos),
-           c1 AS (
-             SELECT cell, cent,
-               sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(cent)+1),
-                 i -> CAST(cent[i] AS DOUBLE) * CAST(cent[i] AS DOUBLE))), (x,y) -> x + y)) AS cnrm
-             FROM (
-               SELECT s.cell, coalesce(u.newc, s.cent) AS cent
-               FROM seeds s LEFT JOIN (
-                 SELECT cell,
-                   list_transform(list(m ORDER BY pos), x -> CAST(x AS FLOAT)) AS newc
-                 FROM m1 GROUP BY cell) u USING (cell))),
-           a2 AS (
-             SELECT cell, emb FROM (
-               SELECT e.embedding AS emb, c.cell,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding)+1),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (e.nrm * c.cnrm) DESC, c.cell) AS rk
-               FROM ev e CROSS JOIN c1 c)
-             WHERE rk = 1),
-           m2 AS (
-             SELECT cell, pos,
-               CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE)
-                 / count(*) AS m
-             FROM (SELECT cell, generate_subscripts(emb, 1) AS pos,
-                          unnest(emb) AS v FROM a2)
-             GROUP BY cell, pos),
-           c2 AS (
-             SELECT cell, cent,
-               sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, len(cent)+1),
-                 i -> CAST(cent[i] AS DOUBLE) * CAST(cent[i] AS DOUBLE))), (x,y) -> x + y)) AS cnrm
-             FROM (
-               SELECT s.cell, coalesce(u.newc, s.cent) AS cent
-               FROM c1 s LEFT JOIN (
-                 SELECT cell,
-                   list_transform(list(m ORDER BY pos), x -> CAST(x AS FLOAT)) AS newc
-                 FROM m2 GROUP BY cell) u USING (cell))),
-           cassign AS (
-             SELECT vec_id, emb, nrm, cell, sim AS simc FROM (
-               SELECT e.vec_id, e.embedding AS emb, e.nrm, c.cell,
-                 list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding)+1),
-                   i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                 / (e.nrm * c.cnrm) AS sim,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_reduce(list_prepend(0.0, list_transform(range(1, len(e.embedding)+1),
-                     i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cent[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (e.nrm * c.cnrm) DESC, c.cell) AS rk
-               FROM ev e CROSS JOIN c2 c)
-             WHERE rk = 1),
-           pairs AS (
-             SELECT a.vec_id AS pa, b.vec_id AS pb
-             FROM cassign a JOIN cassign b ON a.cell = b.cell AND a.vec_id < b.vec_id
-             WHERE list_reduce(list_prepend(0.0, list_transform(range(1, len(a.emb)+1),
-                     i -> CAST(a.emb[i] AS DOUBLE) * CAST(b.emb[i] AS DOUBLE))), (x,y) -> x + y)
-                   / (a.nrm * b.nrm) >= 0.3),
-           edges AS (
-             SELECT pa AS src, pb AS dst FROM pairs
-             UNION ALL SELECT pb, pa FROM pairs),
-           reach AS (
-             SELECT src, dst FROM edges
-             UNION
-             SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-           rep AS (
-             SELECT c.vec_id AS id,
-               least(c.vec_id, coalesce(m.mn, c.vec_id)) AS group_rep
-             FROM cassign c LEFT JOIN
-               (SELECT src, min(dst) AS mn FROM reach GROUP BY src) m
-               ON c.vec_id = m.src),
-           keep AS (
-             SELECT group_rep, vec_id AS keep_id FROM (
-               SELECT r.group_rep, c.vec_id,
-                 row_number() OVER (PARTITION BY r.group_rep
-                                    ORDER BY c.simc, c.vec_id) AS rk
-               FROM rep r JOIN cassign c ON r.id = c.vec_id)
-             WHERE rk = 1)
-           SELECT c.vec_id AS id, c.cell, c.simc, r.group_rep,
-             (c.vec_id = k.keep_id) AS kept
-           FROM cassign c
-           JOIN rep r ON c.vec_id = r.id
-           JOIN keep k ON r.group_rep = k.group_rep
-           ORDER BY id""",
-
-      "q_profile" ->
-        """WITH e AS (SELECT event_id, user_id, event_type, value FROM events)
-           SELECT 'event_id' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_null,
-             CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct,
-             CAST(min(event_id) AS VARCHAR) AS min_repr,
-             CAST(max(event_id) AS VARCHAR) AS max_repr
-           FROM e
-           UNION ALL
-           SELECT 'user_id', CAST(count(*) AS BIGINT),
-             CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-             CAST(count(DISTINCT user_id) AS BIGINT),
-             CAST(min(user_id) AS VARCHAR), CAST(max(user_id) AS VARCHAR)
-           FROM e
-           UNION ALL
-           SELECT 'event_type', CAST(count(*) AS BIGINT),
-             CAST(sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-             CAST(count(DISTINCT event_type) AS BIGINT),
-             CAST(min(event_type) AS VARCHAR), CAST(max(event_type) AS VARCHAR)
-           FROM e
-           UNION ALL
-           SELECT 'value', CAST(count(*) AS BIGINT),
-             CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-             CAST(count(DISTINCT value) AS BIGINT),
-             CAST(CAST(floor(min(value) * 1e6) AS BIGINT) AS VARCHAR),
-             CAST(CAST(floor(max(value) * 1e6) AS BIGINT) AS VARCHAR)
-           FROM e
-           ORDER BY col_name""",
-
-      "q_minmax_scale" ->
-        """WITH s AS (
-             SELECT event_type, min(value) AS vmin, max(value) AS vmax
-             FROM events GROUP BY 1)
-           SELECT event_id, e.event_type,
-             CASE WHEN vmax <> vmin
-               THEN floor((value - vmin) * 1e6 / (vmax - vmin)) / 1e6
-               ELSE 0.0 END AS scaled
-           FROM events e JOIN s USING (event_type)
-           ORDER BY event_id""",
-
-      // ---- round 6: warehouse-maintenance + graph/search/diversity -------
-
-      "q_scd2" ->
-        s"""WITH c AS (
-              SELECT user_id, $evTs AS ts, event_id, event_type,
-                lag(event_type) OVER (PARTITION BY user_id
-                  ORDER BY $evTs, event_id) AS prev
-              FROM events),
-            o AS (
-              SELECT user_id, event_type, ts AS valid_from
-              FROM c WHERE prev IS NULL OR prev <> event_type)
-            SELECT user_id, event_type, valid_from,
-              lead(valid_from) OVER (PARTITION BY user_id
-                ORDER BY valid_from) AS valid_to,
-              lead(valid_from) OVER (PARTITION BY user_id
-                ORDER BY valid_from) IS NULL AS is_current
-            FROM o ORDER BY user_id, valid_from""",
-
-      "q_cdc_merge" ->
-        s"""WITH cur AS (
-              SELECT user_id, event_type AS state, value FROM (
-                SELECT user_id, event_type, value,
-                  row_number() OVER (PARTITION BY user_id
-                    ORDER BY $evTs DESC, event_id DESC) AS rn
-                FROM events
-                WHERE $evTs <= TIMESTAMP '2024-01-15 00:00:00')
-              WHERE rn = 1),
-            chg AS (
-              SELECT user_id,
-                CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-                event_type AS state, value FROM (
-                SELECT user_id, event_type, value,
-                  row_number() OVER (PARTITION BY user_id
-                    ORDER BY $evTs DESC, event_id DESC) AS rn
-                FROM events
-                WHERE $evTs > TIMESTAMP '2024-01-15 00:00:00')
-              WHERE rn = 1)
-            SELECT COALESCE(c.user_id, l.user_id) AS user_id,
-              CASE WHEN l.op IS NOT NULL THEN l.state ELSE c.state END AS state,
-              CASE WHEN l.op IS NOT NULL THEN l.value ELSE c.value END AS value
-            FROM cur c FULL JOIN chg l ON c.user_id = l.user_id
-            WHERE COALESCE(l.op, 'U') <> 'D'
-            ORDER BY user_id""",
-
-      "q_snapshot_diff" ->
-        """WITH b AS (
-             SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-             FROM customer),
-           a AS (
-             SELECT c_custkey, c_name, c_nationkey,
-               CASE WHEN c_custkey % 7 = 0 THEN c_acctbal + 100.0
-                    ELSE c_acctbal END AS c_acctbal,
-               CASE WHEN c_custkey % 5 = 0 THEN 'MIGRATED'
-                    ELSE c_mktsegment END AS c_mktsegment
-             FROM customer WHERE c_custkey % 13 <> 0
-             UNION ALL
-             SELECT c_custkey + 1000000, c_name, c_nationkey, c_acctbal,
-               c_mktsegment
-             FROM customer WHERE c_custkey % 11 = 0),
-           j AS (
-             SELECT COALESCE(b.c_custkey, a.c_custkey) AS c_custkey,
-               b.c_custkey IS NOT NULL AS inb, a.c_custkey IS NOT NULL AS ina,
-               b.c_name AS bn, a.c_name AS an,
-               b.c_nationkey AS bk, a.c_nationkey AS ak,
-               b.c_acctbal AS bb, a.c_acctbal AS ab,
-               b.c_mktsegment AS bm, a.c_mktsegment AS am
-             FROM b FULL JOIN a ON b.c_custkey = a.c_custkey),
-           d AS (
-             SELECT c_custkey,
-               CASE WHEN NOT inb THEN 'added'
-                    WHEN NOT ina THEN 'removed'
-                    ELSE 'changed' END AS change,
-               concat_ws(',',
-                 CASE WHEN bn IS DISTINCT FROM an THEN 'c_name' END,
-                 CASE WHEN bk IS DISTINCT FROM ak THEN 'c_nationkey' END,
-                 CASE WHEN bb IS DISTINCT FROM ab THEN 'c_acctbal' END,
-                 CASE WHEN bm IS DISTINCT FROM am THEN 'c_mktsegment' END)
-                 AS cc
-             FROM j)
-           SELECT c_custkey, change,
-             CASE WHEN change = 'changed' THEN cc END AS changed_cols
-           FROM d WHERE change <> 'changed' OR cc <> ''
-           ORDER BY change, c_custkey""",
-
-      "q_triangles" ->
-        """WITH e0 AS (
-             SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-             FROM lineitem a JOIN lineitem b
-               ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-           deg AS (
-             SELECT n, count(*) AS d FROM (
-               SELECT u AS n FROM e0 UNION ALL SELECT v FROM e0)
-             GROUP BY 1),
-           o AS (
-             SELECT CASE WHEN (d1.d, u) < (d2.d, v) THEN u ELSE v END AS src,
-                    CASE WHEN (d1.d, u) < (d2.d, v) THEN v ELSE u END AS dst
-             FROM e0 JOIN deg d1 ON d1.n = e0.u JOIN deg d2 ON d2.n = e0.v),
-           w AS (
-             SELECT o1.src AS c, o1.dst AS x, o2.dst AS y
-             FROM o o1 JOIN o o2 ON o1.src = o2.src AND o1.dst < o2.dst),
-           cl AS (
-             SELECT src AS x, dst AS y FROM o
-             UNION ALL SELECT dst, src FROM o),
-           t AS (SELECT c, x, y FROM w JOIN cl USING (x, y)),
-           n AS (SELECT unnest([c, x, y]) AS node FROM t)
-           SELECT node, CAST(count(*) AS BIGINT) AS n_tri
-           FROM n GROUP BY 1 ORDER BY n_tri DESC, node LIMIT 100""",
-
-      // the q_minhash_lsh candidate CTEs with the verifier swapped from
-      // Jaccard to Levenshtein (relative ≤ 20%, floor-division rel_e6)
-      "q_fuzzy_dedup" ->
-        """WITH toks AS (
-             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-             FROM documents),
-           shs AS (
-             SELECT doc_id,
-               CASE WHEN len(t) >= 3
-                 THEN list_distinct(list_transform(range(1, len(t) - 1),
-                        i -> array_to_string(t[i:i+2], ' ')))
-                 ELSE [] END AS sh
-             FROM toks),
-           sig AS (
-             SELECT doc_id,
-               list_transform(range(0, 16), s ->
-                 list_min(list_transform(sh, g ->
-                   list_reduce(
-                     list_prepend(CAST(s + 1 AS BIGINT),
-                       list_transform(regexp_extract_all(g, '(?s).'),
-                         c -> CAST(unicode(c) AS BIGINT))),
-                     (a, b) -> (a * 131 + b) % 1000000007)))) AS sig
-             FROM shs),
-           banded AS (
-             SELECT doc_id,
-               unnest(list_transform(range(0, 8), j -> {'band': j, 'bh':
-                 list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*2+1:j*2+2]),
-                   (a, v) -> (a * 131 + (v % 1000000007)) % 1000000007)
-                 * 998244353 +
-                 list_reduce(list_prepend(CAST(17 AS BIGINT), sig[j*2+1:j*2+2]),
-                   (a, v) -> (a * 137 + (v % 998244353)) % 998244353)})) AS b
-             FROM sig),
-           cand AS (
-             SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-             FROM banded a JOIN banded c
-               ON a.b.band = c.b.band AND a.b.bh = c.b.bh
-                 AND a.doc_id < c.doc_id),
-           ver AS (
-             SELECT id_a, id_b,
-               CAST(levenshtein(ta.text, tb.text) AS BIGINT) AS dist,
-               CAST(greatest(length(ta.text), length(tb.text)) AS BIGINT)
-                 AS ml
-             FROM cand
-             JOIN documents ta ON ta.doc_id = id_a
-             JOIN documents tb ON tb.doc_id = id_b)
-           SELECT id_a, id_b, dist,
-             CASE WHEN ml = 0 THEN 0 ELSE dist * 1000000 // ml END AS rel_e6
-           FROM ver
-           WHERE (CASE WHEN ml = 0 THEN 0 ELSE dist * 1000000 // ml END)
-             <= 200000
-           ORDER BY id_a, id_b""",
-
-      "q_inverted_search" ->
-        """WITH toks AS (
-             SELECT doc_id AS doc,
-               unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
-             FROM documents),
-           p AS (
-             SELECT term, doc, CAST(count(*) AS BIGINT) AS tf
-             FROM toks WHERE term <> '' GROUP BY 1, 2),
-           m AS (
-             SELECT doc, count(*) AS nt, CAST(sum(tf) AS BIGINT) AS score
-             FROM p WHERE term IN ('spark', 'window', 'merge') GROUP BY 1)
-           SELECT doc, score FROM m WHERE nt = 3 ORDER BY score DESC, doc""",
-
-      // greedy MMR unrolled to 5 selection steps (the q_pagerank unrolling
-      // pattern): candidates are the per-query top-25 by the exact-integer
-      // key e6(q)·e6(d)·Σ(qc·dc); each step excludes selected rows,
-      // penalizes by the max pairwise key to the selected set, and picks
-      // argmax(7·rel − 3·maxSim) with id tiebreak
-      "q_mmr" -> {
-        val dotSql = (a: String, b: String) =>
-          s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-              list_transform(range(1, len($a)+1), i -> $a[i] * $b[i])),
-              (x, y) -> x + y)"""
-        val step = (prev: String, pick: String, next: String, ord: Int) =>
-          s"""p$ord AS (
-               SELECT c.query_id, c.neighbor_id, c.codes, c.e6, c.rel_key,
-                 max(c.e6 * s.e6 * ${dotSql("c.codes", "s.codes")}) AS ms
-               FROM cand c JOIN $prev s ON s.query_id = c.query_id
-               WHERE NOT EXISTS (SELECT 1 FROM $prev x
-                 WHERE x.query_id = c.query_id
-                   AND x.neighbor_id = c.neighbor_id)
-               GROUP BY 1, 2, 3, 4, 5),
-             $pick AS (
-               SELECT query_id, neighbor_id, codes, e6,
-                 $ord AS sel_rank, 7 * rel_key - 3 * ms AS score
-               FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                       ORDER BY 7 * rel_key - 3 * ms DESC, neighbor_id) AS rn
-                     FROM p$ord)
-               WHERE rn = 1),
-             $next AS (SELECT * FROM $prev UNION ALL SELECT * FROM $pick)"""
-        s"""WITH base AS (
-              SELECT vec_id, embedding,
-                greatest(CAST(list_max(embedding) AS DOUBLE),
-                         -CAST(list_min(embedding) AS DOUBLE), 1e-12) AS amax
-              FROM embeddings),
-            coded AS (
-              SELECT vec_id,
-                greatest(CAST(floor(amax * 1e6) AS BIGINT),
-                         CAST(1 AS BIGINT)) AS e6,
-                list_transform(embedding,
-                  x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / amax + 0.5)
-                    AS BIGINT)) AS codes
-              FROM base),
-            q AS (SELECT vec_id AS query_id, e6 AS qe6, codes AS qc
-                  FROM coded WHERE vec_id < 8),
-            rel AS (
-              SELECT query_id, c.vec_id AS neighbor_id,
-                c.e6 * qe6 * ${dotSql("qc", "c.codes")} AS rel_key,
-                c.codes AS codes, c.e6 AS e6
-              FROM q, coded c WHERE c.vec_id <> query_id),
-            cand AS (
-              SELECT query_id, neighbor_id, rel_key, codes, e6 FROM (
-                SELECT *, row_number() OVER (PARTITION BY query_id
-                  ORDER BY rel_key DESC, neighbor_id) AS srank
-                FROM rel)
-              WHERE srank <= 25),
-            s1 AS (
-              SELECT query_id, neighbor_id, codes, e6,
-                1 AS sel_rank, 7 * rel_key AS score
-              FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY 7 * rel_key DESC, neighbor_id) AS rn
-                    FROM cand)
-              WHERE rn = 1),
-            ${step("s1", "n2", "s2", 2)},
-            ${step("s2", "n3", "s3", 3)},
-            ${step("s3", "n4", "s4", 4)},
-            ${step("s4", "n5", "s5", 5)}
-            SELECT query_id, sel_rank, neighbor_id, score
-            FROM s5 ORDER BY query_id, sel_rank"""
-      },
-
-      "q_constraint_audit" ->
-        """SELECT "constraint", n_violations FROM (
-             SELECT 'l_orderkey_not_null' AS "constraint",
-               CAST(coalesce(sum(CASE WHEN l_orderkey IS NULL
-                 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_violations
-             FROM lineitem
-             UNION ALL
-             SELECT 'l_quantity_1_50',
-               CAST(coalesce(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50
-                 THEN 1 ELSE 0 END), 0) AS BIGINT)
-             FROM lineitem
-             UNION ALL
-             SELECT 'l_discount_0_01',
-               CAST(coalesce(sum(CASE WHEN l_discount < 0 OR l_discount > 0.1
-                 THEN 1 ELSE 0 END), 0) AS BIGINT)
-             FROM lineitem
-             UNION ALL
-             SELECT 'l_ship_after_19920101',
-               CAST(coalesce(sum(CASE WHEN NOT coalesce(
-                 CAST(l_shipdate AS TIMESTAMP) >= TIMESTAMP '1992-01-01',
-                 true) THEN 1 ELSE 0 END), 0) AS BIGINT)
-             FROM lineitem
-             UNION ALL
-             SELECT 'l_price_positive',
-               CAST(coalesce(sum(CASE WHEN NOT coalesce(l_extendedprice > 0,
-                 true) THEN 1 ELSE 0 END), 0) AS BIGINT)
-             FROM lineitem
-             UNION ALL
-             SELECT 'l_order_line_unique',
-               CAST(coalesce((SELECT sum(c - 1) FROM (
-                 SELECT count(*) AS c FROM lineitem
-                 GROUP BY l_orderkey, l_linenumber)), 0) AS BIGINT)
-             UNION ALL
-             SELECT 'l_orderkey_in_orders',
-               CAST((SELECT count(*) FROM lineitem l
-                 WHERE l.l_orderkey IS NOT NULL
-                   AND NOT EXISTS (SELECT 1 FROM orders o
-                     WHERE o.o_orderkey = l.l_orderkey)) AS BIGINT))
-           ORDER BY "constraint"""",
-
-      "q_funnel" ->
-        s"""WITH u1 AS (
-              SELECT user_id AS uid, min($evTs) AS t_1
-              FROM events WHERE event_type = 'view' GROUP BY 1),
-            u2 AS (
-              SELECT e.user_id AS uid, min($evTs) AS t_2
-              FROM events e JOIN u1 ON u1.uid = e.user_id
-              WHERE event_type = 'click' AND $evTs > u1.t_1
-                AND $evTs <= u1.t_1 + INTERVAL 259200 SECOND
-              GROUP BY 1),
-            u3 AS (
-              SELECT e.user_id AS uid, min($evTs) AS t_3
-              FROM events e
-              JOIN u1 ON u1.uid = e.user_id
-              JOIN u2 ON u2.uid = e.user_id
-              WHERE event_type = 'purchase' AND $evTs > u2.t_2
-                AND $evTs <= u1.t_1 + INTERVAL 259200 SECOND
-              GROUP BY 1)
-            SELECT u1.uid,
-              CASE WHEN t_3 IS NOT NULL THEN 3
-                   WHEN t_2 IS NOT NULL THEN 2
-                   ELSE 1 END AS level,
-              t_1, t_2, t_3
-            FROM u1
-            LEFT JOIN u2 ON u1.uid = u2.uid
-            LEFT JOIN u3 ON u1.uid = u3.uid
-            ORDER BY u1.uid""",
-
-      "q_cohort_retention" ->
-        s"""WITH wp AS (
-              SELECT user_id AS uid,
-                CAST(floor(floor(epoch($evTs)) / 604800) AS BIGINT) AS p
-              FROM events),
-            f AS (SELECT uid, min(p) AS cohort FROM wp GROUP BY 1),
-            act AS (SELECT DISTINCT uid, p FROM wp)
-            SELECT cohort, p - cohort AS period_offset,
-              CAST(count(DISTINCT a.uid) AS BIGINT) AS n_active
-            FROM act a JOIN f USING (uid)
-            GROUP BY 1, 2 ORDER BY cohort, period_offset""",
-
-      "q_seq_match" ->
-        s"""SELECT user_id AS uid,
-              string_agg(substr(event_type, 1, 1), ''
-                ORDER BY $evTs, event_id) AS seq,
-              regexp_matches(string_agg(substr(event_type, 1, 1), ''
-                ORDER BY $evTs, event_id), 'v.*s.*p') AS matched
-            FROM events GROUP BY 1 ORDER BY uid""",
-
-      "q_markov" ->
-        s"""WITH p AS (
-              SELECT user_id, event_type AS from_state,
-                lead(event_type) OVER (PARTITION BY user_id
-                  ORDER BY $evTs, event_id) AS to_state
-              FROM events),
-            c AS (
-              SELECT from_state, to_state, CAST(count(*) AS BIGINT) AS n
-              FROM p WHERE to_state IS NOT NULL GROUP BY 1, 2),
-            t AS (SELECT from_state, CAST(sum(n) AS BIGINT) AS tt
-                  FROM c GROUP BY 1)
-            SELECT from_state, to_state, n, n * 1000000 // tt AS p_e6
-            FROM c JOIN t USING (from_state)
-            ORDER BY from_state, to_state""",
-
-      "q_mad_outliers" ->
-        """WITH m AS (
-             SELECT event_type, quantile_cont(value, 0.5) AS med
-             FROM events GROUP BY 1),
-           d AS (
-             SELECT e.event_type, med, abs(value - med) AS ad
-             FROM events e JOIN m USING (event_type)),
-           md AS (SELECT event_type, quantile_cont(ad, 0.5) AS mad
-                  FROM d GROUP BY 1)
-           SELECT d.event_type, CAST(count(*) AS BIGINT) AS n_rows,
-             min(med) AS med, min(mad) AS mad,
-             CAST(sum(CASE WHEN ad > 3.0 * mad THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_outliers
-           FROM d JOIN md USING (event_type)
-           GROUP BY 1 ORDER BY 1""",
-
-      "q_group_ols" ->
-        s"""WITH b AS (
-              SELECT event_type,
-                (CAST(floor(epoch($evTs)) AS BIGINT) - 1704067200) // 3600
-                  AS x,
-                CAST(floor(value * 100) AS BIGINT) AS y
-              FROM events),
-            m AS (
-              SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-                CAST(sum(x * y) AS BIGINT) AS sxy,
-                CAST(sum(x * x) AS BIGINT) AS sxx
-              FROM b GROUP BY 1)
-            SELECT event_type, n,
-              CAST(CAST(n * sxy - sx * sy AS HUGEINT) * 1000000
-                // CAST(n * sxx - sx * sx AS HUGEINT) AS BIGINT) AS slope_e6,
-              CAST(CAST(sy * sxx - sx * sxy AS HUGEINT) * 1000000
-                // CAST(n * sxx - sx * sx AS HUGEINT) AS BIGINT)
-                AS intercept_e6
-            FROM m WHERE n * sxx - sx * sx <> 0
-            ORDER BY event_type""",
-
-      "q_itemset_lift" ->
-        """WITH b AS (
-             SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-             FROM lineitem),
-           nb AS (SELECT CAST(count(DISTINCT bk) AS BIGINT) AS nn FROM b),
-           s AS (SELECT it, CAST(count(*) AS BIGINT) AS ns
-                 FROM b GROUP BY 1),
-           p AS (
-             SELECT a.it AS item_a, c.it AS item_b,
-               CAST(count(*) AS BIGINT) AS n_pair
-             FROM b a JOIN b c ON a.bk = c.bk AND a.it < c.it
-             GROUP BY 1, 2 HAVING count(*) >= 2)
-           SELECT item_a, item_b, n_pair,
-             n_pair * (SELECT nn FROM nb) * 1000000 // (sa.ns * sb.ns)
-               AS lift_e6
-           FROM p
-           JOIN s sa ON sa.it = item_a
-           JOIN s sb ON sb.it = item_b
-           ORDER BY lift_e6 DESC, item_a, item_b LIMIT 100""",
-
-      "q_interval_overlap" ->
-        s"""WITH l AS (
-              SELECT user_id, $evTs AS s, $evTs + INTERVAL 2 HOUR AS e,
-                     event_id AS lid
-              FROM events WHERE event_type = 'purchase'),
-            r AS (
-              SELECT user_id, $evTs AS s, $evTs + INTERVAL 1 HOUR AS e,
-                     event_id AS rid
-              FROM events WHERE event_type = 'click')
-            SELECT l.user_id,
-                   CAST(count(*) AS BIGINT) AS n_pairs,
-                   CAST(sum(l.lid) AS BIGINT) AS sum_lid,
-                   CAST(sum(r.rid) AS BIGINT) AS sum_rid
-            FROM l JOIN r
-              ON l.user_id = r.user_id AND l.s < r.e AND r.s < l.e
-            GROUP BY 1 ORDER BY 1""",
-
-      // identical semantics to q_interval_overlap — the auto dispatch only
-      // picks the physical bucket width, never the rows
-      "q_interval_auto" ->
-        s"""WITH l AS (
-              SELECT user_id, $evTs AS s, $evTs + INTERVAL 2 HOUR AS e,
-                     event_id AS lid
-              FROM events WHERE event_type = 'purchase'),
-            r AS (
-              SELECT user_id, $evTs AS s, $evTs + INTERVAL 1 HOUR AS e,
-                     event_id AS rid
-              FROM events WHERE event_type = 'click')
-            SELECT l.user_id,
-                   CAST(count(*) AS BIGINT) AS n_pairs,
-                   CAST(sum(l.lid) AS BIGINT) AS sum_lid,
-                   CAST(sum(r.rid) AS BIGINT) AS sum_rid
-            FROM l JOIN r
-              ON l.user_id = r.user_id AND l.s < r.e AND r.s < l.e
-            GROUP BY 1 ORDER BY 1""",
-
-      // LEFT OUTER overlap: the range predicate lives in ON, so unmatched
-      // purchases survive NULL-filled — count(r.rid) skips them,
-      // n_unmatched counts them, and every purchase-holding user appears
-      "q_interval_left" ->
-        s"""WITH l AS (
-              SELECT user_id, $evTs AS s, $evTs + INTERVAL 2 HOUR AS e,
-                     event_id AS lid
-              FROM events WHERE event_type = 'purchase'),
-            r AS (
-              SELECT user_id, $evTs AS s, $evTs + INTERVAL 1 HOUR AS e,
-                     event_id AS rid
-              FROM events WHERE event_type = 'click')
-            SELECT l.user_id,
-                   CAST(count(r.rid) AS BIGINT) AS n_matched,
-                   CAST(sum(CASE WHEN r.rid IS NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_unmatched,
-                   CAST(sum(l.lid) AS BIGINT) AS sum_lid,
-                   CAST(coalesce(sum(r.rid), 0) AS BIGINT) AS sum_rid
-            FROM l LEFT JOIN r
-              ON l.user_id = r.user_id AND l.s < r.e AND r.s < l.e
-            GROUP BY 1 ORDER BY 1"""
-    ) ++ resampleOracles(evTs)
-    // §2.9: the STREAMING 1m OHLC (watermark/append/AvailableNow run via
-    // StreamingGate) must agree with the batch path bar-for-bar — ONE
-    // shared oracle, verbatim, so the two execution modes can't drift
-    base +
-      ("q_stream_ohlc_1m" -> base("q_ohlc_1m")) +
-      // §2.9 + J1: the stream-stream ASOF join shares the q_asof_* family
-      // oracle verbatim — streaming and every batch form row-identical
-      ("q_stream_asof" -> base("q_asof_join")) +
-      // §2.9: the streaming medallion chain shares the CENTERPIECE
-      // 27-column oracle verbatim — batch and streaming pipelines cannot
-      // drift in any column, session/holiday flags included
-      ("q_stream_ohlc_enriched" -> base("q_ohlc_enriched"))
-  }
 }

@@ -7,11 +7,6 @@ package graft
   */
 class ContractSpec extends SparkSpec {
 
-  test("every oracleSql key has a matching queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(orphans.isEmpty, s"oracle entries without queries: $orphans")
-  }
-
   test("every query executes at sf0.001 (no runtime errors, sane schema)") {
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (name, fn) =>

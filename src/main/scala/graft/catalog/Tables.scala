@@ -20,14 +20,40 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * same µs TimestampType column, so every downstream operator and every
   * DuckDB oracle (`CAST(ts AS TIMESTAMP)`) sees identical values regardless
   * of the file's physical layout.
+  *
+  * A table stored as one file takes its schema from its own Parquet
+  * footer, read in place rather than by a job: planning a read launches
+  * no Spark job.
   */
 object Tables {
 
   val starTables: Seq[String] =
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` of `dir`. A table stored as one Parquet file is read
+    * with the schema of its own footer, read here and converted as
+    * Spark's inference does (`readSchemaFromFooter` under the
+    * session's SQL conf, so `nanosAsLong` and the timestamp settings
+    * hold): planning the read launches no Spark job. A table stored as a
+    * directory is read by `spark.read.parquet`, which infers its schema
+    * in a job.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val conf = spark.sessionState.newHadoopConf()
+    val file = scala.util.Try(path.getFileSystem(conf).getFileStatus(path)).toOption
+      .filter(_.isFile)
+    file.fold(spark.read.parquet(path.toString)) { st =>
+      import org.apache.spark.sql.execution.datasources.parquet._
+      val footer = ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(path.toString)
+    }
+  }
 
   /** `events` with `ts` normalized to a µs TimestampType (UTC session TZ),
     * whatever the file physically stores (ns long / TIMESTAMP_NTZ µs /

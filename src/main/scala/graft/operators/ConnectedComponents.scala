@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** Connected components of a bipartite node↔bucket graph by synchronous
   * min-label propagation to FIXPOINT — the shared core behind
@@ -21,33 +22,50 @@ import org.apache.spark.sql.functions._
   * the jump finds only short chains). Realistic duplicate families are
   * star/clique-shaped (diameter ≤ 3 ⇒ 2–3 rounds); large diameters only
   * arise from spurious bucket collisions, which the 59-bit bucket hashes
-  * upstream make negligible at any corpus size. Driver-side cost is ONE
-  * Spark job per round: the previous label rides through the round's
-  * aggregations as a per-id constant (no separate prev-join), the
-  * round's frame is lineage-cut via [[org.apache.spark.sql.graft.bridge.cutLineage]],
-  * and a single `max(changed)` action materializes the cut RDD and
-  * returns convergence. The cut deliberately does NOT use
-  * `Dataset.localCheckpoint`: that carries the pre-cut plan's size
-  * estimate into the new leaf (`originStats`), and because join
-  * estimates are *products* of their children, the carried estimate
-  * compounds to ~3^round digits of BigInt — by round ~10 Catalyst stats
-  * visits burn minutes of driver CPU per round (observed). A fresh leaf
-  * keeps planning cost constant at any round count. Round 1 folds the
-  * identity labeling into the edge frame itself — no initial distinct()
-  * shuffle and no first-round join.
+  * upstream make negligible at any corpus size.
   *
-  * A no-change round proves the labeling is exactly the per-component
-  * minimum id (labels only ever take in-component id values and never
-  * fall below the component min), which is what lets callers hash-check
-  * the output against a DuckDB recursive-CTE transitive closure.
+  * Each round is cut in two at the bucket window:
+  *   - the bucket stage takes each bucket's minimum label `bmin` and
+  *     `__split` (the bucket's labels disagree) over the same window, and
+  *     is lineage-cut via [[org.apache.spark.sql.graft.bridge.cutLineageTracked]];
+  *     the cut's own materialising job, a per-partition fold
+  *     ([[org.apache.spark.sql.graft.bridge.flagAndCount]]), answers
+  *     "some bucket disagrees";
+  *   - only then does the node stage run: `groupBy(id)` over `bmin`, the
+  *     pointer jump, and a second cut, which the next bucket job
+  *     materialises.
+  * When no bucket disagrees, the current labels are the components:
+  * labels constant on every bucket are constant on every component, and
+  * as labels only ever take in-component id values and never fall below
+  * the component minimum, each label IS the component minimum. So no
+  * confirming round runs, and the round count is the number of node
+  * stages (an input whose identity labelling is already the fixpoint
+  * takes 0). That exactness is what lets callers hash-check the output
+  * against a DuckDB recursive-CTE transitive closure.
+  *
+  * Cost: under adaptive execution every shuffle stage is its own Spark
+  * job, so a round is several jobs, not one. On the sf0.01 and sf0.1
+  * documents (4 cores) the fixpoint takes 1 node stage and 8 jobs,
+  * including the collect of its result (with adaptive execution off, as
+  * in the specs, NearDupGroupsSpec's family corpus takes 4). The cuts
+  * deliberately do NOT use `Dataset.localCheckpoint`: that carries the
+  * pre-cut plan's size estimate into the new leaf (`originStats`), and
+  * because join estimates are *products* of their children, the carried
+  * estimate compounds to ~3^round digits of BigInt — by round ~10
+  * Catalyst stats visits burn minutes of driver CPU per round (observed).
+  * A fresh leaf keeps planning cost constant at any round count. The
+  * first bucket stage folds the identity labelling into the edge frame
+  * itself — no initial distinct() shuffle and no join.
   *
   * @param edges one row per (node, bucket) membership; `idCol` plus
   *              `bucketCols` (a bucket is identified by the tuple).
   *              Persisted internally for the duration of the fixpoint.
   * @return (labels(id, group_rep), rounds); ids absent from `edges` are
-  *         absent from the output. Throws if `maxIters` rounds don't
-  *         reach fixpoint — a silent early exit would not be connected
-  *         components.
+  *         absent from the output. The returned frame reads one stored
+  *         label cut, which stays persisted; every other block the
+  *         fixpoint stored is released. Throws if some bucket still
+  *         disagrees after `maxIters` node stages — a silent early exit
+  *         would not be connected components.
   */
 object ConnectedComponents {
 
@@ -71,14 +89,17 @@ object ConnectedComponents {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val wBucket = org.apache.spark.sql.expressions.Window
       .partitionBy(bucketCols.map(col): _*)
+    // the node cut of the last node stage; null = the identity labelling
     var labels: DataFrame = null
-    // round N's checkpointed blocks are dead once round N+1 materializes
-    // (the new cut truncates lineage); unpersist them or a deep fixpoint
-    // holds every round's label frame in the block manager simultaneously
-    var prevRdd: org.apache.spark.rdd.RDD[_] = null
-    var converged = false
+    var labelsRdd: org.apache.spark.rdd.RDD[_] = null
+    // cuts that the next bucket job makes dead: round r's node cut is
+    // stored while round r+1's bucket job runs, after which nothing reads
+    // round r−1's node cut or round r's bucket cut. Freeing them earlier
+    // would unpersist blocks a pending local checkpoint still needs.
+    var dead = Seq.empty[org.apache.spark.rdd.RDD[_]]
+    var result: DataFrame = null
     var it = 0
-    while (!converged && it < maxIters) {
+    while (result == null) {
       // label joins are left UNHINTED deliberately: label frames are
       // lineage-cut RDD scans with no static statistics, but AQE sees the
       // true exchange sizes at runtime and converts to a broadcast join
@@ -88,39 +109,51 @@ object ConnectedComponents {
       val labeled =
         if (labels == null) edges.withColumn("label", col("id"))
         else edges.join(labels, Seq("id"))
-      // bucket minimum as a window over the bucket key: ONE exchange of
-      // the labeled frame, replacing the groupBy(bucket)+join-back pair
-      // (two exchanges and a join per round) this evolved from — same
-      // rows, same bmin, strictly fewer stages and fewer shuffled bytes
-      val prop = labeled
-        .withColumn("bmin", min(col("label")).over(wBucket))
-        .groupBy("id")
-        .agg(min(col("bmin")).as("plabel"), min(col("label")).as("__prev"))
-      val jumped =
-        if (labels == null)
-          prop.select(col("id"), col("plabel").as("label"), col("__prev"))
-        else prop
-          .join(labels.select(col("id").as("__jid"), col("label").as("__jl")),
-            col("plabel") === col("__jid"), "left")
-          .select(col("id"),
-            least(col("plabel"), coalesce(col("__jl"), col("plabel"))).as("label"),
-            col("__prev"))
-      val (next, nextRdd) = org.apache.spark.sql.graft.bridge.cutLineageTracked(jumped
-        .select(col("id"), col("label"), (col("label") < col("__prev")).as("__changed")))
-      val anyChanged = next.agg(max(col("__changed"))).head()
-      converged = anyChanged.isNullAt(0) || !anyChanged.getBoolean(0)
-      if (prevRdd != null) prevRdd.unpersist(blocking = false)
-      prevRdd = nextRdd
-      labels = next.select("id", "label")
-      it += 1
+      // bucket stage: the bucket minimum as a window over the bucket key
+      // (ONE exchange of the labeled frame), and whether the bucket's
+      // labels disagree, from the same window
+      val (bucket, bucketRdd) = bridge.cutLineageTracked(labeled.select(col("id"),
+        min(col("label")).over(wBucket).as("bmin"),
+        (max(col("label")).over(wBucket) =!= min(col("label")).over(wBucket)).as("__split")))
+      val (split, _) = bridge.flagAndCount(bucketRdd, bucket.schema.fieldIndex("__split"))
+      dead.foreach(_.unpersist(blocking = false))
+      dead = bucketRdd +: Option(labelsRdd).toSeq
+      if (!split) {
+        // every bucket is constant, so labels are constant on every
+        // component; each is an in-component id no lower than the
+        // component minimum, so each IS the component minimum
+        result =
+          if (labels == null) bucket.select(col("id"), col("id").as("group_rep")).distinct()
+          else {
+            bucketRdd.unpersist(blocking = false)
+            labels.select(col("id"), col("label").as("group_rep"))
+          }
+      } else if (it == maxIters) {
+        dead.foreach(_.unpersist(blocking = false))
+        edges.unpersist(blocking = false)
+        throw new IllegalStateException(
+          s"labelPropagate: did not reach fixpoint in $maxIters rounds — " +
+            "output would not be the connected components the oracle checks; " +
+            "raise maxIters")
+      } else {
+        // node stage: each node takes the min over its buckets, then the
+        // pointer jump (label ← min(label, previous label OF the label))
+        val plabel = bucket.groupBy("id").agg(min(col("bmin")).as("plabel"))
+        val jumped =
+          if (labels == null) plabel.select(col("id"), col("plabel").as("label"))
+          else plabel
+            .join(labels.select(col("id").as("__jid"), col("label").as("__jl")),
+              col("plabel") === col("__jid"), "left")
+            .select(col("id"),
+              least(col("plabel"), coalesce(col("__jl"), col("plabel"))).as("label"))
+        val (next, nextRdd) = bridge.cutLineageTracked(jumped)
+        labels = next
+        labelsRdd = nextRdd
+        it += 1
+      }
     }
     edges.unpersist(blocking = false)
-    if (!converged)
-      throw new IllegalStateException(
-        s"labelPropagate: did not reach fixpoint in $maxIters rounds — " +
-          "output would not be the connected components the oracle checks; " +
-          "raise maxIters")
-    (labels.select(col("id"), col("label").as("group_rep")), it)
+    (result, it)
   }
 
   /** Alternating large-star/small-star contraction (Kiveris et al. 2014,
@@ -159,7 +192,6 @@ object ConnectedComponents {
       bCol: String,
       maxIters: Int = 40
   ): (DataFrame, Int) = {
-    val cutTracked = org.apache.spark.sql.graft.bridge.cutLineageTracked _
     def sym(e: DataFrame) =
       e.select(col("a").as("u"), col("b").as("v"))
         .union(e.select(col("b").as("u"), col("a").as("v")))
@@ -184,7 +216,7 @@ object ConnectedComponents {
     // an ADDED edge). LS/SS are deterministic functions of the edge set,
     // so SS(LS(E)) == E is an exact fixpoint test; set equality of two
     // distinct sets is (no additions) && (|next| == |E|), and both facts
-    // come out of the round's single materializing action — no separate
+    // come out of the job that materialises the round's cut — no separate
     // symmetric-difference job (which cost a second full-edge shuffle +
     // driver barrier per round, the propagation path's folded changed-flag
     // pattern applied here).
@@ -204,21 +236,23 @@ object ConnectedComponents {
         .filter(col("__in_next"))
         .select(col("a"), col("b"), col("__added"))
     }
-    val (e0, rdd0) = cutTracked(edgesIn
+    // every cut is (a, b, __added), so one fold reads each round's
+    // verdict; the input's own edges count as not added
+    val (e0, rdd0) = bridge.cutLineageTracked(edgesIn
       .select(greatest(col(aCol), col(bCol)).as("a"),
         least(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct())
-    var e = e0
+      .filter(col("a") =!= col("b")).distinct()
+      .withColumn("__added", lit(false)))
+    val added = e0.schema.fieldIndex("__added")
+    var e = e0.select("a", "b")
     var prevRdd: org.apache.spark.rdd.RDD[_] = rdd0
-    var cntE = e.count()
+    var cntE = bridge.flagAndCount(rdd0, added)._2
     var it = 0
     var converged = false
     while (!converged && it < maxIters) {
-      val (next, nextRdd) = cutTracked(smallStarDiff(largeStar(e), e))
-      // one action: materializes the round AND returns (any added?, |next|)
-      val row = next.agg(max(col("__added")), count(lit(1))).head()
-      val anyAdded = !row.isNullAt(0) && row.getBoolean(0)
-      val cntNext = row.getLong(1)
+      val (next, nextRdd) = bridge.cutLineageTracked(smallStarDiff(largeStar(e), e))
+      // the round's materialising job returns (any added?, |next|)
+      val (anyAdded, cntNext) = bridge.flagAndCount(nextRdd, added)
       converged = !anyAdded && cntNext == cntE
       prevRdd.unpersist(blocking = false)
       prevRdd = nextRdd

@@ -83,11 +83,13 @@ object PageRank {
     }
     val keysLocalSafe =
       javaKeySafe(e.schema(0).dataType) && javaKeySafe(e.schema(1).dataType)
-    val nEdges = e.count()
+    // one bounded collect both decides and fetches: at most
+    // maxLocalEdges + 1 rows are collected, and a full fetch means the
+    // graph is over the cap
     val localRows =
-      if (keysLocalSafe && nEdges <= maxLocalEdges) e.collect()
+      if (keysLocalSafe) e.limit(maxLocalEdges.max(0L).min(Int.MaxValue - 1L).toInt + 1).collect()
       else Array.empty[org.apache.spark.sql.Row]
-    if (keysLocalSafe && nEdges <= maxLocalEdges &&
+    if (keysLocalSafe && localRows.length <= maxLocalEdges &&
         localRows.forall(!_.anyNull)) {
       val rows = localRows
       val tw = new java.util.HashMap[Any, Long]()

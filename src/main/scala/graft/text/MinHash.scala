@@ -227,23 +227,22 @@ object MinHash {
     *
     * Iteration runs to FIXPOINT (capped at `maxIters`, throwing if the cap
     * is hit — a silent early exit would NOT be the connected components the
-    * oracle assumes): when a round changes no label, the labels are exactly
-    * the per-component minimum — i.e. the output is the true connected
-    * components of the doc↔bucket graph, independent of component diameter.
-    * That determinism is what lets the driver gate hash-check this operator
-    * against a DuckDB recursive-CTE transitive closure over the same
-    * polynomial band hashes.
+    * oracle assumes): when no bucket's members disagree on their label, the
+    * labels are exactly the per-component minimum — i.e. the output is the
+    * true connected components of the doc↔bucket graph, independent of
+    * component diameter. That determinism is what lets the driver gate
+    * hash-check this operator against a DuckDB recursive-CTE transitive
+    * closure over the same polynomial band hashes.
     *
-    * Driver-side cost is ONE Spark job per round: the `changed` flag is
-    * computed inside the propagation plan itself (the previous label rides
-    * through the round's aggregations as a per-id constant, so no separate
-    * prev-join), the round's frame is lineage-cut (stats-free — see
-    * [[graft.operators.ConnectedComponents]] on why `localCheckpoint`'s
-    * carried size estimate compounds exponentially in a fixpoint), and a
-    * single `max(changed)` action both materializes the cut RDD and
-    * returns convergence. Round 1 folds the identity labeling into the
-    * edge frame itself — no initial distinct() shuffle and no first-round
-    * join. Each later round also applies a pointer-jumping shortcut
+    * Driver-side cost (see [[graft.operators.ConnectedComponents]]): each
+    * round's bucket stage is lineage-cut and materialised by one fold job
+    * that also answers "some bucket disagrees", so the node stage runs only
+    * while one does and no confirming round runs. Under adaptive execution
+    * each shuffle stage is its own Spark job: on the sf0.01 documents the
+    * fixpoint takes 1 node stage and 8 jobs. The first bucket stage folds
+    * the identity labelling into the edge frame itself — no initial
+    * distinct() shuffle and no join. Each later round also applies a
+    * pointer-jumping shortcut
     * (label ← min(label, previous label OF the label), the hash-to-min /
     * big-star step of Kiveris et al.'s connected-components family),
     * which collapses label chains geometrically.

@@ -92,6 +92,27 @@ object bridge {
     (cut, rdd)
   }
 
+  /** Materialises the RDD of a [[cutLineageTracked]] cut in one job, a
+    * per-partition fold with no Catalyst aggregate, and returns whether
+    * any row's boolean column at `flag` (an ordinal of the cut's output;
+    * NULL counts as false) is true, with the row count. The job computes
+    * every partition, so the cut's blocks are stored and its local
+    * checkpoint runs as the job ends: a fixpoint reads its round verdict
+    * from the job that materialises the round.
+    */
+  def flagAndCount(rdd: org.apache.spark.rdd.RDD[_], flag: Int): (Boolean, Long) = {
+    val rows = rdd.asInstanceOf[org.apache.spark.rdd.RDD[
+      org.apache.spark.sql.catalyst.InternalRow]]
+    val parts = rows.sparkContext.runJob(rows,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        var any = false
+        var n = 0L
+        it.foreach { r => if (!r.isNullAt(flag) && r.getBoolean(flag)) any = true; n += 1 }
+        (any, n)
+      })
+    (parts.exists(_._1), parts.map(_._2).sum)
+  }
+
   /** A grouping key with NaN and -0.0 normalised, as Spark's Aggregation
     * strategy plans it. */
   def normalizeFloats(e: Expression): Expression =

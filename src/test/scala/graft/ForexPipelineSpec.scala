@@ -1220,23 +1220,13 @@ class ForexPipelineSpec extends SparkSpec {
 
   test("one append runs 22 Spark jobs: no touched-month collect per write, no bar-count scan") {
     val (p, dir) = twoMonthWarehouse("graft_append_jobs", 1200)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val jobs = org.apache.spark.TestListenerBus.jobsDuring(spark.sparkContext) {
       ingest(p, dir, "2024-03-04T10:00:01", 600)
-      org.apache.spark.TestListenerBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
+    }
     // the writes find their months from the listing and regenerate counts
     // its bars from the fresh sidecars: with a distinct-month collect per
     // tick write and a bar-count scan the same append ran 25
-    assert(jobs.get === 22)
+    assert(jobs === 22)
   }
 }
 

@@ -55,6 +55,67 @@ class NearDupGroupsSpec extends SparkSpec {
     assert(rounds <= 10, s"took $rounds rounds for a 63-hop chain")
   }
 
+  test("ConnectedComponents: an identity fixpoint takes 0 rounds; empty edges give no rows") {
+    // every bucket has one member, so the identity labelling is already
+    // the fixpoint: the first bucket stage proves it and no node stage runs
+    val (labels, rounds) = graft.operators.ConnectedComponents.labelPropagateWithRounds(
+      Seq((1L, 10), (1L, 11), (2L, 12), (3L, 13)).toDF("id", "bucket"), "id", Seq("bucket"))
+    assert(labels.as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    assert(rounds == 0)
+    val (empty, emptyRounds) = graft.operators.ConnectedComponents.labelPropagateWithRounds(
+      Seq.empty[(Long, Int)].toDF("id", "bucket"), "id", Seq("bucket"))
+    assert(empty.collect().isEmpty && emptyRounds == 0)
+  }
+
+  test("ConnectedComponents: a fixpoint leaves at most its returned cut persisted") {
+    import org.apache.spark.sql.functions._
+    val sc = spark.sparkContext
+    // a 16-hop chain takes several rounds, so superseded cuts must go
+    val edges = (0 until 16).flatMap(i => Seq((i.toLong, i), (i.toLong + 1, i)))
+      .toDF("id", "bucket")
+    val before = sc.getPersistentRDDs.keySet
+    val (labels, rounds) = graft.operators.ConnectedComponents
+      .labelPropagateWithRounds(edges, "id", Seq("bucket"))
+    assert(labels.as[(Long, Long)].collect().forall(_._2 == 0L) && rounds > 1)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.size <= 1, s"propagation left ${left.size} persisted RDDs")
+    val (star, _) = graft.operators.ConnectedComponents.starContractWithRounds(
+      edges.select(col("id").as("a"), (lit(1L << 40) + col("bucket")).as("b")), "a", "b")
+    assert(star.filter(col("id") < (1L << 40)).count() == 17)
+    val leftStar = sc.getPersistentRDDs.keySet -- before -- left
+    assert(leftStar.size <= 1, s"star contraction left ${leftStar.size} persisted RDDs")
+  }
+
+  test("ConnectedComponents: label propagation's Spark jobs on the family corpus") {
+    val docs = (0 until 40).map { i =>
+      (i.toLong, doc(i / 4 * 1000 + 1, s" v$i"))
+    }.toDF("doc_id", "text")
+    val edges = MinHash.bandEdges(docs, "doc_id", "text").cache()
+    edges.count()
+    def fixpoint(): (Int, Int) = {
+      var rounds = -1
+      val jobs = org.apache.spark.TestListenerBus.jobsDuring(spark.sparkContext) {
+        val (labels, r) = graft.operators.ConnectedComponents
+          .labelPropagateWithRounds(edges, "id", Seq("band", "bh"))
+        rounds = r
+        labels.collect()
+      }
+      (rounds, jobs)
+    }
+    // with adaptive execution on, as Bench and Verify run, every shuffle
+    // stage is its own job. The count is taken on a second call: the
+    // first such call in a session has run one job fewer
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val (aqeRounds, aqeJobs) =
+      try { fixpoint(); fixpoint() } finally spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (rounds, jobs) = fixpoint()
+    edges.unpersist()
+    // one node stage: one bucket job per node stage plus the one that
+    // finds no bucket disagreeing, then the collect
+    assert(rounds == 1 && aqeRounds == 1, s"rounds $rounds, $aqeRounds")
+    assert(jobs == 4 && aqeJobs == 8, s"jobs $jobs, with adaptive execution $aqeJobs")
+  }
+
   test("star contraction matches label propagation on family corpora and randomized graphs") {
     import org.apache.spark.sql.functions._
     // family corpus (same construction as the propagation tests)

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -49,20 +47,7 @@ class WarehouseSchemaSpec extends SparkSpec {
     (p, wh)
   }
 
-  /** Spark jobs started while `body` runs (the bus is drained on both
-    * sides, so earlier jobs are not counted and none of the body's is
-    * missed). */
-  private def jobsDuring(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; TestListenerBus.drain(sc); jobs.get }
-    finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Any): Int = TestListenerBus.jobsDuring(spark.sparkContext)(body)
 
   /** Files each file scan executed while `body` runs actually read. */
   private def scannedFilesDuring(body: => Any): Seq[Long] = {
